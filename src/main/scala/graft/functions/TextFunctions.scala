@@ -83,18 +83,6 @@ object TextFunctions {
       .otherwise(totalChars.cast("double") / size(tk).cast("double"))
   }
 
-  /** Composite quality score in [0,1]: weighted blend of alpha ratio,
-    * token-length sanity (penalize <2 or >12 mean chars), and a
-    * length floor. Deterministic arithmetic only. */
-  def qualityScore(text: Column): Column = {
-    val alpha = alphaRatio(text)
-    val mtl = meanTokenLen(text)
-    val lenOk = when(length(text) >= 20, lit(1.0))
-      .otherwise(length(text).cast("double") / 20.0)
-    val tokOk = when(mtl >= 2.0 && mtl <= 12.0, lit(1.0)).otherwise(lit(0.5))
-    alpha * 0.5 + lenOk * 0.3 + tokOk * 0.2
-  }
-
   /** Content fingerprint: md5 of the canonicalized token stream.
     * Stable across runs/engines (md5 is engine-independent, unlike
     * xxhash64 seeds), so it doubles as the exact-dedup key. */
@@ -171,26 +159,6 @@ object TextFunctions {
       "&#39;" -> "'", "&nbsp;" -> " ", "&amp;" -> "&")
       .foldLeft(noTags) { case (c, (ent, ch)) => replace(c, lit(ent), lit(ch)) }
     trim(regexp_replace(decoded, "[ \t\n\r]+", " "))
-  }
-
-  /** Rolling (polynomial) hash over the token stream — a second,
-    * cheaper fingerprint family: h = Σ tok_hash(t_i) * B^i mod M,
-    * computed with a single array `aggregate`. Engine-portable when
-    * `tokHash` is portable (crc32 of the token bytes). M is the
-    * 31-bit Mersenne prime so every intermediate product stays below
-    * 2^63 — ANSI mode would reject a larger modulus's overflow. */
-  def rollingHash(text: Column, base: Long = 1000003L,
-                  mod: Long = (1L << 31) - 1): Column = {
-    val tk = tokens(text)
-    val acc = aggregate(
-      tk,
-      struct(lit(0L).as("h"), lit(1L).as("p")),
-      (st, t) => struct(
-        pmod(st.getField("h") +
-          pmod(pmod(crc32(t.cast("binary")), lit(mod)) * st.getField("p"), lit(mod)),
-          lit(mod)).as("h"),
-        pmod(st.getField("p") * lit(base % mod), lit(mod)).as("p")))
-    acc.getField("h")
   }
 
   /** Intra-document repeated-line removal (the Gopher/RefinedWeb

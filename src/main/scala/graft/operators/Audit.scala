@@ -79,10 +79,11 @@ object Audit {
         pmod(sum(col("digest").cast("decimal(38,0)")),
           lit(Mod).cast("decimal(38,0)")).cast("long").as("digest"))
 
-  private val DigestFamily = "table_digest"
+  private[operators] val digestStore =
+    StoreFamily.flat("table_digest", _ => digestFold)
   private[graft] def digestMeta(cols: Seq[String],
                                 groupName: String): IndexMeta =
-    IndexMeta(DigestFamily, "cols" -> cols.mkString(","),
+    IndexMeta(digestStore.name, "cols" -> cols.mkString(","),
       "groupName" -> groupName)
 
   /** Per-group digest partial in the store's schema: (group, n_rows,
@@ -127,14 +128,6 @@ object Audit {
     IndexMeta.check(spark, path, digestMeta(cols, groupName))
     digestFold(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "digestIndexWrite"))
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def digestIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, DigestFamily)
-    EpochIndex.compact(spark, path, digestFold, keepVersions = keepVersions)
   }
 
   /** Erase rows from a persisted digest ledger — disk-level and

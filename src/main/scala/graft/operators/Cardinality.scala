@@ -204,9 +204,10 @@ object Cardinality {
           "(acc, x) -> zip_with(acc, x, (a, b) -> greatest(a, b)))")
         .as("regs"))
 
-  private val HllFamily = "hll_registers"
+  private[operators] val hllStore = StoreFamily.flat("hll_registers",
+    param => hllFold(1 << param("p").toInt))
   private[graft] def hllMeta(p: Int, keyName: String): IndexMeta =
-    IndexMeta(HllFamily, "p" -> p, "keyName" -> keyName)
+    IndexMeta(hllStore.name, "p" -> p, "keyName" -> keyName)
 
   /** Bootstrap a stored cardinality profile: one (group, regs) row
     * per group, `p` and the counted-key derivation in the manifest
@@ -255,20 +256,6 @@ object Cardinality {
       bootstrapName = "hllIndexWrite"))
   }
 
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def hllIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, HllFamily)
-    val p = IndexMeta.read(spark, path) match {
-      case Some(m) => m.params.get("p").map(_.toInt).getOrElse(
-        sys.error(s"HLL store $path manifest lacks p"))
-      case None => sys.error(s"HLL store $path has no manifest")
-    }
-    EpochIndex.compact(spark, path, hllFold(1 << p),
-      keepVersions = keepVersions)
-  }
-
   // ------------------- persisted KMV store (bottom-k family symmetry)
 
   /** Epoch fold: per group, the k smallest distinct hashes across the
@@ -285,9 +272,10 @@ object Cardinality {
           s"cast(array() as array<bigint>), " +
           s"(acc, x) -> array_union(acc, x))), 1, $k)").as("sketch"))
 
-  private val KmvFamily = "kmv_bottom_k"
+  private[operators] val kmvStore = StoreFamily.flat("kmv_bottom_k",
+    param => kmvFold(param("k").toInt))
   private[graft] def kmvMeta(k: Int, keyName: String): IndexMeta =
-    IndexMeta(KmvFamily, "k" -> k, "keyName" -> keyName)
+    IndexMeta(kmvStore.name, "k" -> k, "keyName" -> keyName)
 
   /** Bootstrap a stored bottom-k profile: one (group, sketch) row per
     * group, `k` and the counted-key derivation in the manifest (a
@@ -342,20 +330,6 @@ object Cardinality {
                        keyName: String): DataFrame = {
     IndexMeta.check(spark, path, kmvMeta(k, keyName))
     EpochIndex.readAsOf(spark, path, version)
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def kmvIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, KmvFamily)
-    val k = IndexMeta.read(spark, path) match {
-      case Some(m) => m.params.get("k").map(_.toInt).getOrElse(
-        sys.error(s"KMV store $path manifest lacks k"))
-      case None => sys.error(s"KMV store $path has no manifest")
-    }
-    EpochIndex.compact(spark, path, kmvFold(k),
-      keepVersions = keepVersions)
   }
 
   /** Report: per-group exact distinct count (the ground truth a

@@ -327,8 +327,16 @@ object Centrality {
     * batch recomputes the identical partial and the epoch-scoped
     * dynamic overwrite rewrites it in place — at-least-once delivery
     * can never double-count a triangle. */
-  private val CensusFamily = "graph_census"
-  private[graft] def censusMeta: IndexMeta = IndexMeta(CensusFamily)
+  private[graft] def censusMeta: IndexMeta = IndexMeta(censusStore.name)
+
+  /** Two substores: `census` partials sum (compacted first, and the
+    * stats compaction reports) and `edges` rows are disjoint across
+    * epochs (identity fold — bounds the file count). */
+  private[operators] val censusStore = StoreFamily("graph_census", Seq(
+    StoreFamily.substore("census", _ => p =>
+      p.agg(coalesce(sum(col("n_edges")), lit(0L)).as("n_edges"),
+        coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles"))),
+    StoreFamily.substore("edges", _ => identity)), reports = "census")
 
   private def censusOf(canonEdges: DataFrame): DataFrame =
     triangleCount(canonEdges.select(col("a").as("src"), col("b").as("dst")))
@@ -415,19 +423,5 @@ object Centrality {
       ()
     }
     edges
-  }
-
-  /** Fold both substores behind their atomic `_CURRENT` flips. */
-  def triangleCensusCompact(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CensusFamily)
-    val stats = EpochIndex.compact(spark, s"$path/census",
-      p => p.agg(coalesce(sum(col("n_edges")), lit(0L)).as("n_edges"),
-        coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles")),
-      keepVersions = keepVersions)
-    EpochIndex.compact(spark, s"$path/edges", identity,
-      keepVersions = keepVersions)
-    stats
   }
 }

@@ -168,9 +168,10 @@ object Curation {
   private def capCountFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("key")).agg(sum(col("n")).as("n"))
 
-  private val CapFamily = "domain_cap_counts"
+  private[operators] val capStore =
+    StoreFamily.flat("domain_cap_counts", _ => capCountFold)
   private[graft] def capIndexMeta(keyName: String): IndexMeta =
-    IndexMeta(CapFamily, "keyName" -> keyName)
+    IndexMeta(capStore.name, "keyName" -> keyName)
 
   /** Bootstrap a stored count index (epoch layout + `_GRAFT_META`).
     * `keyName` names the key derivation (e.g. "psl_registered_domain")
@@ -201,15 +202,6 @@ object Curation {
     IndexMeta.check(spark, path, capIndexMeta(keyName))
     capCountFold(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "capCountIndexWrite"))
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip —
-    * same growth bound as every other index family. */
-  def capCountIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CapFamily)
-    EpochIndex.compact(spark, path, capCountFold, keepVersions = keepVersions)
   }
 
   /** Erase documents from a persisted per-key count index —

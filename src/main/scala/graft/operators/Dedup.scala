@@ -244,7 +244,7 @@ object Dedup {
                           sep: String, minLineLen: Int = 1): LinePartial =
     new LinePartial(
       lineFirstOccIndex(batch, idCol, textCol, sep, minLineLen),
-      LineFamily, sep, minLineLen)
+      lineStore.name, sep, minLineLen)
 
   /** Mint a batch's line-count partial (see [[LinePartial]]). */
   def boilerplateCountsPartial(batch: DataFrame, idCol: String,
@@ -252,7 +252,7 @@ object Dedup {
                                minLineLen: Int = 1): LinePartial =
     new LinePartial(
       boilerplateIndex(batch, idCol, textCol, sep, minLineLen),
-      BoilerFamily, sep, minLineLen)
+      boilerStore.name, sep, minLineLen)
 
   /** Persisted first-occurrence index for [[dedupLinesAcrossCorpus]]
     * — (fp, wid, wpos): the earliest (doc, pos) each distinct line was
@@ -290,7 +290,7 @@ object Dedup {
                             index: DataFrame, sep: String,
                             minLineLen: Int = 1,
                             batchIndex: Option[LinePartial] = None): DataFrame = {
-    batchIndex.foreach(_.requireMatches(LineFamily, sep, minLineLen))
+    batchIndex.foreach(_.requireMatches(lineStore.name, sep, minLineLen))
     val segs = lineSegs(batch, idCol, textCol, sep)
     val batchFirst = batchIndex.map(_.frame)
       .getOrElse(lineFirstOccIndex(batch, idCol, textCol, sep, minLineLen))
@@ -321,7 +321,7 @@ object Dedup {
 
   /** THE first-occurrence fold — min (wid, wpos) per fingerprint over
     * any union of partials. Shared by the epoch-scoped read AND
-    * [[lineFirstOccIndexCompact]] (associative, so a compacted base
+    * compaction (associative, so a compacted base
     * re-entering this fold next to later epochs gives exactly the
     * all-epochs answer — the equivalence q143 oracle-pins). */
   private def firstOccFold(partials: DataFrame): DataFrame =
@@ -329,13 +329,14 @@ object Dedup {
       .agg(min(struct(col("wid"), col("wpos"))).as("w"))
       .select(col("fp"), col("w.wid").as("wid"), col("w.wpos").as("wpos"))
 
-  private val LineFamily = "line_first_occ"
+  private[operators] val lineStore =
+    StoreFamily.flat("line_first_occ", _ => firstOccFold)
   private[graft] def lineIndexMeta(sep: String, minLineLen: Int): IndexMeta =
-    IndexMeta(LineFamily, "sep" -> sep, "minLineLen" -> minLineLen)
+    IndexMeta(lineStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
   /** Read a LOG-STRUCTURED stored first-occurrence index: epoch
-    * partitions (plus the compacted base, if [[lineFirstOccIndexCompact]]
-    * has run) each hold a (fp, wid, wpos) partial; the min (wid, wpos)
+    * partitions (plus the compacted base, if the store has been
+    * compacted) each hold a (fp, wid, wpos) partial; the min (wid, wpos)
     * per fingerprint is the corpus-wide first occurrence (exact under
     * the append-only id-order contract — ids never interleave across
     * epochs). `excludeEpoch` drops one epoch's partial before
@@ -383,18 +384,6 @@ object Dedup {
     EpochIndex.append(partial, path, epoch)
   }
 
-  /** Fold accumulated epochs into a compacted base published with the
-    * atomic `_CURRENT` pointer flip — bounds the probe-side scan of a
-    * store that would otherwise grow one partial per batch forever
-    * (see [[EpochIndex.compact]] for the snapshot/GC contract; q143
-    * oracle-pins probe-after ≡ probe-before). */
-  def lineFirstOccIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                               path: String,
-                               keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, LineFamily)
-    EpochIndex.compact(spark, path, firstOccFold, keepVersions = keepVersions)
-  }
-
   /** ERASURE form for the first-occurrence store — a REBUILD, not a
     * filter (the cc_labels precedent): compaction's min-fold already
     * discarded every LATER occurrence of a line whose first holder is
@@ -433,18 +422,18 @@ object Dedup {
       .agg(sum(col("n_docs")).as("n_docs"))
 
   /** THE line-count fold — counts ADD across partials (disjoint doc
-    * sets). Shared by the epoch-scoped read and
-    * [[boilerplateIndexCompact]]. */
+    * sets). Shared by the epoch-scoped read and compaction. */
   private def countsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
 
-  private val BoilerFamily = "boilerplate_counts"
+  private[operators] val boilerStore =
+    StoreFamily.flat("boilerplate_counts", _ => countsFold)
   private[graft] def boilerplateIndexMeta(sep: String, minLineLen: Int): IndexMeta =
-    IndexMeta(BoilerFamily, "sep" -> sep, "minLineLen" -> minLineLen)
+    IndexMeta(boilerStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
   /** Read a LOG-STRUCTURED stored line-frequency index: epoch
-    * partitions (plus the compacted base, if [[boilerplateIndexCompact]]
-    * has run) each hold a (fp, n_docs) partial
+    * partitions (plus the compacted base, if the store has been
+    * compacted) each hold a (fp, n_docs) partial
     * (`Streaming.boilerplateIngestSink` writes them); summing per
     * fingerprint yields the corpus-wide counts. `excludeEpoch` drops
     * one epoch's partial before aggregating — the replay-idempotency
@@ -486,15 +475,6 @@ object Dedup {
                              minLineLen: Int = 1): Unit = {
     IndexMeta.check(spark, path, boilerplateIndexMeta(sep, minLineLen))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Fold accumulated count epochs into a compacted base (atomic
-    * `_CURRENT` publish — see [[EpochIndex.compact]]). */
-  def boilerplateIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, BoilerFamily)
-    EpochIndex.compact(spark, path, countsFold, keepVersions = keepVersions)
   }
 
   /** Erase documents from a persisted line-frequency index — exact
@@ -539,7 +519,7 @@ object Dedup {
                                    sep: String, minDocs: Int,
                                    minLineLen: Int = 1,
                                    batchCounts: Option[LinePartial] = None): DataFrame = {
-    batchCounts.foreach(_.requireMatches(BoilerFamily, sep, minLineLen))
+    batchCounts.foreach(_.requireMatches(boilerStore.name, sep, minLineLen))
     val segs = lineSegs(batch, idCol, textCol, sep)
     val boiler = batchCounts.map(_.frame)
       .getOrElse(lineCounts(segs, idCol, minLineLen))
@@ -1363,11 +1343,11 @@ object Dedup {
       path, epoch, innerPartCols = Seq("bb"))
   }
 
-  def bandIndexStoreCompact(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            keepVersions: Int = 2): EpochIndex.CompactionStats =
-    EpochIndex.compact(spark, path, identity,
-      innerPartCols = Seq("bb"), keepVersions = keepVersions)
+  /** Every `<kind>_bands` family (minhash/simhash/srp/hamming64)
+    * shares the `bb`-bucketed layout and the identity fold — band rows
+    * are disjoint, so compaction bounds the file count. */
+  private[operators] val bandStore =
+    StoreFamily.flat("*_bands", _ => identity, Seq("bb"))
 
   /** Erase documents from a band-index store — disk-level (the q237
     * discipline extended to the legacy band families): band rows are
@@ -2454,10 +2434,12 @@ object Dedup {
 
   // -------------------------------------------------- certification ledger
 
-  private val CertFamily = "cert_pairs"
+  /** Identity fold: ledger rows are disjoint (see the class doc). */
+  private[operators] val certLedgerStore =
+    StoreFamily.flat("cert_pairs", _ => identity)
   private[graft] def certLedgerMeta(metric: String,
                                     threshold: Double): IndexMeta =
-    IndexMeta(CertFamily, "metric" -> metric,
+    IndexMeta(certLedgerStore.name, "metric" -> metric,
       "threshold" -> f"$threshold%.4f")
 
   /** Bootstrap a certification ledger with the one-time full
@@ -2501,14 +2483,6 @@ object Dedup {
     IndexMeta.check(spark, path, certLedgerMeta(metric, threshold))
     EpochIndex.read(spark, path, bootstrapName = "certLedgerWrite")
       .drop(EpochIndex.EpochCol)
-  }
-
-  /** Identity-fold compaction (disjoint rows — see the class doc). */
-  def certLedgerCompact(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CertFamily)
-    EpochIndex.compact(spark, path, identity, keepVersions = keepVersions)
   }
 
   /** Erase every pair touching `ids` from a certification ledger —
@@ -2631,10 +2605,12 @@ object Dedup {
 
   // ------------------------------------------- persisted repair labels
 
-  private val CcLabelsFamily = "cc_labels"
+  /** Min-fold (the family merge — see [[ccLabelsFold]]). */
+  private[operators] val ccLabelsStore = StoreFamily.flat("cc_labels",
+    _ => p => p.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")))
   private[graft] def ccLabelsMeta(metric: String,
                                   threshold: Double): IndexMeta =
-    IndexMeta(CcLabelsFamily, "metric" -> metric,
+    IndexMeta(ccLabelsStore.name, "metric" -> metric,
       "threshold" -> f"$threshold%.4f")
 
   /** Persisted connected-component labeling over everything the
@@ -2748,22 +2724,11 @@ object Dedup {
     repairSurvivors(ids,
       ccLabelsRead(spark, labelsPath, metric, threshold), idCol)
 
-  /** Min-fold compaction (the family merge — see the class doc). */
-  def ccLabelsCompact(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CcLabelsFamily)
-    EpochIndex.compact(spark, path,
-      p => p.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")),
-      keepVersions = keepVersions)
-  }
-
   // ------------------------------------------- certification index stores
 
-  private val CertTextFamily = "cert_text"
   private[graft] def certTextMeta(threshold: Double, shingleK: Int,
                                   maxBucket: Int, buckets: Int): IndexMeta =
-    IndexMeta(CertTextFamily, "threshold" -> f"$threshold%.4f",
+    IndexMeta(certTextStore.name, "threshold" -> f"$threshold%.4f",
       "shingleK" -> shingleK, "maxBucket" -> maxBucket,
       "buckets" -> buckets)
 
@@ -2786,6 +2751,18 @@ object Dedup {
   private val CertTextPostings = "postings"
   private val CertTextStats = "stats"
   private val CertTextFps = "fps"
+
+  /** Fingerprint and postings rows are disjoint across epochs
+    * (identity fold — one row per document/prefix token, documents
+    * partitioned by arrival batch); the stats partials SUM-fold per
+    * (pb, pt). Compaction reports the fps fold (the
+    * document-count-shaped substore). */
+  private[operators] val certTextStore = StoreFamily("cert_text", Seq(
+    StoreFamily.substore(CertTextStats, _ => p =>
+      p.groupBy(col("pb"), col("pt")).agg(sum(col("cnt")).as("cnt")), Seq("pb")),
+    StoreFamily.substore(CertTextPostings, _ => identity, Seq("pb")),
+    StoreFamily.substore(CertTextFps, _ => identity, Seq("ib"))),
+    reports = CertTextFps)
 
   /** Refuse loudly when a certification root's substores disagree on
     * which epochs they hold — the torn-append shape (a crash between
@@ -3107,35 +3084,25 @@ object Dedup {
     !corpus.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0)
       .limit(1).isEmpty
 
-  /** Compaction: fingerprint and postings rows are disjoint across
-    * epochs (identity fold — one row per document/prefix token,
-    * documents partitioned by arrival batch); the stats partials
-    * SUM-fold per (pb, pt). Returns the fps fold's stats (the
-    * document-count-shaped substore). */
-  def certTextIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CertTextFamily)
-    EpochIndex.compact(spark, s"$path/$CertTextStats",
-      p => p.groupBy(col("pb"), col("pt")).agg(sum(col("cnt")).as("cnt")),
-      innerPartCols = Seq("pb"), keepVersions = keepVersions)
-    EpochIndex.compact(spark, s"$path/$CertTextPostings", identity,
-      innerPartCols = Seq("pb"), keepVersions = keepVersions)
-    EpochIndex.compact(spark, s"$path/$CertTextFps", identity,
-      innerPartCols = Seq("ib"), keepVersions = keepVersions)
-  }
-
-  private val CertVecFamily = "cert_vec"
   /** Substores of a cosine certification root: `bands/` (the banded
     * vector rows, inner-partitioned by the (b0, b1) blocking key) and
     * `stats/` (per-epoch (b0, b1, cnt) cell-count partials, sum-folded
     * — geometry-bounded, so always broadcast-sized). */
   private val CertVecBands = "bands"
   private val CertVecStats = "stats"
+
+  /** Band rows are disjoint across epochs (identity fold — bounds the
+    * per-cell file count); the cell-count partials SUM-fold per
+    * (b0, b1). Compaction reports the band fold. */
+  private[operators] val certVecStore = StoreFamily("cert_vec", Seq(
+    StoreFamily.substore(CertVecStats, _ => p =>
+      p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt"))),
+    StoreFamily.substore(CertVecBands, _ => identity, Seq("b0", "b1"))),
+    reports = CertVecBands)
   private[graft] def certVecMeta(threshold: Double, roundTo: Int,
                                  maxCell: Long,
                                  pivots: Seq[Array[Float]]): IndexMeta =
-    IndexMeta(CertVecFamily, "threshold" -> f"$threshold%.4f",
+    IndexMeta(certVecStore.name, "threshold" -> f"$threshold%.4f",
       "roundTo" -> roundTo, "maxCell" -> maxCell,
       "nPivots" -> pivots.length,
       "pivots" -> pivots.map(_.mkString(",")).mkString(";"))
@@ -3154,9 +3121,9 @@ object Dedup {
       throw new IllegalStateException(
         s"cosine certification store at $path has no _GRAFT_META " +
           "manifest — bootstrap it with certVecIndexWrite"))
-    require(stored.family == CertVecFamily,
+    require(stored.family == certVecStore.name,
       s"index family mismatch at $path: stored '${stored.family}', " +
-        s"probe expects '$CertVecFamily' — wrong index path?")
+        s"probe expects '${certVecStore.name}' — wrong index path?")
     val pivots = stored.params.getOrElse("pivots", sys.error(
       s"manifest at $path records no frozen pivots — not a " +
         "certVecIndexWrite store"))
@@ -3408,20 +3375,6 @@ object Dedup {
     EpochIndex.nonEmpty(spark, s"$path/$CertVecBands",
       innerPartCols = Seq("b0", "b1"))
 
-  /** Compaction: band rows are disjoint across epochs (identity fold
-    * — bounds the per-cell file count); the cell-count partials
-    * SUM-fold per (b0, b1). Returns the band fold's stats. */
-  def certVecIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CertVecFamily)
-    EpochIndex.compact(spark, s"$path/$CertVecStats",
-      p => p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt")),
-      keepVersions = keepVersions)
-    EpochIndex.compact(spark, s"$path/$CertVecBands", identity,
-      innerPartCols = Seq("b0", "b1"), keepVersions = keepVersions)
-  }
-
   /** Exact n-gram (word-shingle) Jaccard for all pairs within a
     * blocking key — the exact verifier for LSH candidates. Pair
     * scoring uses the codegen'd JaccardStr expression (hash-set
@@ -3537,13 +3490,14 @@ object Dedup {
     * an empty or mis-pathed index would report seen_frac = 0 for
     * every doc — the silent "everything is novel" verdict a curation
     * gate must never emit. */
-  private val GramFamily = "gram_freq"
+  private[operators] val gramStore =
+    StoreFamily.flat("gram_freq", _ => gramCountsFold)
   private[graft] def gramFreqIndexMeta(n: Int): IndexMeta =
-    IndexMeta(GramFamily, "n" -> n)
+    IndexMeta(gramStore.name, "n" -> n)
 
   /** THE gram-count fold — counts ADD across disjoint-doc partials
     * (same contract as [[gramFreqIndexMerge]]); shared by the stored
-    * read and [[gramFreqIndexCompact]]. */
+    * read and compaction. */
   private def gramCountsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("gram_fp")).agg(sum(col("n_docs")).as("n_docs"))
 
@@ -3583,15 +3537,6 @@ object Dedup {
                         n: Int): DataFrame = {
     IndexMeta.check(spark, path, gramFreqIndexMeta(n))
     gramFreqIndexRead(spark, path, excludeEpoch)
-  }
-
-  /** Fold accumulated gram-count epochs into a compacted base (atomic
-    * `_CURRENT` publish — see [[EpochIndex.compact]]). */
-  def gramFreqIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, GramFamily)
-    EpochIndex.compact(spark, path, gramCountsFold, keepVersions = keepVersions)
   }
 
   /** Shared count-subtraction erase fold for the additive count

@@ -77,10 +77,11 @@ object HeavyHitters {
   private def cmsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("r"), col("b")).agg(sum(col("c")).as("c"))
 
-  private val CmsFamily = "cms_counts"
+  private[operators] val cmsStore =
+    StoreFamily.flat("cms_counts", _ => cmsFold)
   private[graft] def cmsMeta(depth: Int, width: Int,
                              itemName: String): IndexMeta =
-    IndexMeta(CmsFamily, "depth" -> depth, "width" -> width,
+    IndexMeta(cmsStore.name, "depth" -> depth, "width" -> width,
       "itemName" -> itemName)
 
   /** Bootstrap a stored frequency sketch: d·w count cells in the
@@ -127,14 +128,6 @@ object HeavyHitters {
     IndexMeta.check(spark, path, cmsMeta(depth, width, itemName))
     cmsFold(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "cmsIndexWrite"))
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def cmsIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, CmsFamily)
-    EpochIndex.compact(spark, path, cmsFold, keepVersions = keepVersions)
   }
 
   /** End-to-end heavy-hitter report: exact top-k tokens (count desc,

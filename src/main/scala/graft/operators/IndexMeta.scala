@@ -20,6 +20,13 @@ import org.apache.spark.sql.SparkSession
   * `key=value` per line, sorted — engine-portable and diffable.
   */
 case class IndexMeta(family: String, params: Map[String, String]) {
+  /** A build parameter the store at `root` must record — refuses
+    * loudly, naming the store and the key, when the manifest lacks it
+    * (a compaction fold cannot guess HLL's `p` or bottom-k's `k`). */
+  def param(key: String, root: String): String =
+    params.getOrElse(key, sys.error(
+      s"$family store $root: manifest lacks build parameter '$key'"))
+
   private[operators] def render: String =
     (s"family=${IndexMeta.enc(family)}" +:
       params.toSeq.sortBy(_._1).map { case (k, v) =>
@@ -125,16 +132,15 @@ object IndexMeta {
     }
   }
 
-  /** Family gate for reductive compaction entry points: folding
-    * another family's store with this family's merge silently
-    * corrupts it (e.g. min-of-(wid,wpos) over boilerplate counts).
-    * Metaless stores (written by hand, pre-manifest) pass —
-    * `EpochIndex.compact` itself is family-agnostic by design. */
+  /** Family gate for entry points that take no build parameters to
+    * check (the IVF reads and erasers): reading or rewriting another
+    * family's store as this one silently corrupts it. Metaless stores
+    * (written by hand, pre-manifest) pass. */
   def requireFamily(spark: SparkSession, root: String,
                     family: String): Unit =
     read(spark, root).foreach(m => require(m.family == family,
-      s"refusing to compact $root: its manifest says family " +
-        s"'${m.family}', this fold is for '$family'"))
+      s"refusing $root: its manifest says family " +
+        s"'${m.family}', this entry point is for '$family'"))
 
   /** Refuse loudly unless the stored manifest matches what the caller
     * is about to probe with. A MISSING manifest also refuses: every

@@ -121,9 +121,10 @@ object IntervalExpand {
       partials.select(col(keyCol), col("island_start"), col("island_end")),
       keyCol, col("island_start"), col("island_end"))
 
-  private val IslandsFamily = "interval_islands"
+  private[operators] val islandsStore = StoreFamily.flat("interval_islands",
+    param => islandsFold(param("keyCol")))
   private[graft] def islandsMeta(keyCol: String): IndexMeta =
-    IndexMeta(IslandsFamily, "keyCol" -> keyCol)
+    IndexMeta(islandsStore.name, "keyCol" -> keyCol)
 
   /** Bootstrap a stored coverage summary: the batch's merged islands
     * per key, key column recorded in the manifest. Later batches
@@ -172,19 +173,5 @@ object IntervalExpand {
     IndexMeta.check(spark, path, islandsMeta(keyCol))
     val rebuilt = mergeIntervals(retainedIntervals, keyCol, start, end)
     EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def islandsIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, IslandsFamily)
-    val keyCol = IndexMeta.read(spark, path) match {
-      case Some(m) => m.params.getOrElse("keyCol",
-        sys.error(s"islands store $path manifest lacks keyCol"))
-      case None => sys.error(s"islands store $path has no manifest")
-    }
-    EpochIndex.compact(spark, path, islandsFold(keyCol),
-      keepVersions = keepVersions)
   }
 }

@@ -129,13 +129,13 @@ object LmFilter {
   }
 
   // ------------------------------------------------ persisted LM store
-  private val LmFamily = "lm_bigram"
+  private[operators] val lmStore = StoreFamily.flat("lm_bigram", _ => lmFold)
   private[graft] def lmMeta(ctxBuckets: Int, bigramBuckets: Int): IndexMeta =
-    IndexMeta(LmFamily,
+    IndexMeta(lmStore.name,
       "ctx_buckets" -> ctxBuckets, "bigram_buckets" -> bigramBuckets)
 
   /** THE count fold — per-(kind, bucket) ADD across epochs. Shared by
-    * the epoch-scoped read and [[lmIndexCompact]]. */
+    * the epoch-scoped read and compaction. */
   private def lmFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("_g"), col("_b")).agg(sum(col("c")).as("c"))
 
@@ -167,15 +167,6 @@ object LmFilter {
                     ctxBuckets: Int, bigramBuckets: Int): Unit = {
     IndexMeta.check(spark, path, lmMeta(ctxBuckets, bigramBuckets))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Fold accumulated count epochs into a compacted base (atomic
-    * `_CURRENT` publish — see [[EpochIndex.compact]]). */
-  def lmIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                     path: String,
-                     keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, LmFamily)
-    EpochIndex.compact(spark, path, lmFold, keepVersions = keepVersions)
   }
 
   /** Erase reference documents from a trained LM store — exact count

@@ -5,13 +5,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One maintenance entry point for every persisted index family —
   * the operational closure over the engine's log-structured stores.
-  * Each family ships its own `*IndexCompact`, but a real deployment
-  * runs maintenance from ONE scheduled job over a storage tree it
-  * does not hand-enumerate; this discovers stores by their
-  * `_GRAFT_META` manifests and dispatches each to its family's fold
-  * (the manifest's `family` field is the dispatch key — the same
-  * single-definition contract that makes probes refuse wrong
-  * parameters now routes compaction).
+  * A real deployment runs maintenance from ONE scheduled job over a
+  * storage tree it does not hand-enumerate; this discovers stores by
+  * their `_GRAFT_META` manifests and looks each manifest's `family` up
+  * in [[Families]], the one list of every [[StoreFamily]] (each
+  * declared next to its family's code), for the substores to fold.
   *
   * Failure posture: maintenance keeps going past a failing store
   * (one poisoned root must not starve every other index of
@@ -27,6 +25,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Maintenance {
 
+  /** Every persisted store family — where a family is declared to
+    * maintenance. A writer recording a family missing here fails
+    * [[compactStore]] loudly (and the registry spec). */
+  val Families: Seq[StoreFamily] = Seq(
+    Dedup.lineStore, Dedup.boilerStore, Curation.capStore,
+    SampleSketch.sketchStore, Cardinality.hllStore, Cardinality.kmvStore,
+    Centrality.censusStore, HeavyHitters.cmsStore, Audit.digestStore,
+    IntervalExpand.islandsStore, Splits.dsirStore, Dedup.gramStore,
+    LmFilter.lmStore, Relevance.bm25Store, Similarity.ivfStore,
+    Similarity.ivfPqStore, Dedup.certLedgerStore, Dedup.certTextStore,
+    Dedup.certVecStore, Dedup.ccLabelsStore, Quality.cutsStore,
+    Dedup.bandStore)
+
   /** One store's maintenance outcome. `stats` is None when the store
     * held nothing to compact (fresh manifest, no partials) — counted
     * as skipped, not failed. */
@@ -36,75 +47,31 @@ object Maintenance {
     def failed: Boolean = error.isDefined
   }
 
-  /** Compact ONE store, dispatching on its manifest's family. IVF /
-    * IVF-PQ roots hold their epochs under `assignments`/`codes`
-    * subdirectories — the family compactors know; this dispatcher
-    * only needs the root the manifest sits at. */
-  def compactStore(spark: SparkSession, root: String,
-                   keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    val meta = IndexMeta.read(spark, root).getOrElse(sys.error(
+  private def familyOf(meta: IndexMeta): Option[StoreFamily] =
+    Families.find(_.accepts(meta.family))
+
+  private def compact(spark: SparkSession, root: String,
+                      manifest: Option[IndexMeta],
+                      keepVersions: Int): EpochIndex.CompactionStats = {
+    val meta = manifest.getOrElse(sys.error(
       s"no _GRAFT_META manifest at $root — not a graft index store " +
         "(every index writer records one); refusing to guess a fold"))
-    meta.family match {
-      case "line_first_occ" =>
-        Dedup.lineFirstOccIndexCompact(spark, root, keepVersions)
-      case "boilerplate_counts" =>
-        Dedup.boilerplateIndexCompact(spark, root, keepVersions)
-      case "domain_cap_counts" =>
-        Curation.capCountIndexCompact(spark, root, keepVersions)
-      case "sample_sketch" =>
-        SampleSketch.sampleSketchIndexCompact(spark, root, keepVersions)
-      case "hll_registers" =>
-        Cardinality.hllIndexCompact(spark, root, keepVersions)
-      case "kmv_bottom_k" =>
-        Cardinality.kmvIndexCompact(spark, root, keepVersions)
-      case "graph_census" =>
-        Centrality.triangleCensusCompact(spark, root, keepVersions)
-      case "cms_counts" =>
-        HeavyHitters.cmsIndexCompact(spark, root, keepVersions)
-      case "table_digest" =>
-        Audit.digestIndexCompact(spark, root, keepVersions)
-      case "interval_islands" =>
-        IntervalExpand.islandsIndexCompact(spark, root, keepVersions)
-      case "dsir_buckets" =>
-        Splits.dsirIndexCompact(spark, root, keepVersions)
-      case "gram_freq" =>
-        Dedup.gramFreqIndexCompact(spark, root, keepVersions)
-      case "lm_bigram" =>
-        LmFilter.lmIndexCompact(spark, root, keepVersions)
-      case "bm25_postings" =>
-        Relevance.bm25IndexCompact(spark, root, keepVersions)
-      case "ivf" =>
-        Similarity.ivfIndexCompact(spark, root, keepVersions)
-      case "ivf_pq" =>
-        Similarity.ivfPqIndexCompact(spark, root, keepVersions)
-      case "cert_pairs" =>
-        Dedup.certLedgerCompact(spark, root, keepVersions)
-      case "cert_text" =>
-        Dedup.certTextIndexCompact(spark, root, keepVersions)
-      case "cert_vec" =>
-        Dedup.certVecIndexCompact(spark, root, keepVersions)
-      case "cc_labels" =>
-        Dedup.ccLabelsCompact(spark, root, keepVersions)
-      case "quality_cuts" =>
-        // versioned calibration snapshot, not an epoch-additive store:
-        // each freeze IS a compacted base (publishVersion retention
-        // GCs superseded versions) — the typed skip compactAll counts
-        // as benign
-        throw new NothingToCompact(s"nothing to compact at $root: " +
-          "quality_cuts is a versioned calibration snapshot with no " +
-          "epoch partials; retention is publishVersion's keepVersions " +
-          "at freeze time")
-      case f if f.endsWith("_bands") =>
-        // banding families (minhash/simhash/srp/hamming64) share the
-        // identity fold — disjoint rows, compaction bounds file count
-        Dedup.bandIndexStoreCompact(spark, root, keepVersions)
-      case other => sys.error(
-        s"unknown index family '$other' at $root — a store this engine " +
-          "did not write, or a family added without a Maintenance " +
-          "dispatch arm; add the arm rather than skipping the store")
-    }
+    familyOf(meta).getOrElse(sys.error(
+      s"unknown index family '${meta.family}' at $root — a store this " +
+        "engine did not write, or a family added without a " +
+        "Maintenance.Families entry; declare it rather than skipping " +
+        "the store")).compact(spark, root, meta, keepVersions)
   }
+
+  /** Compact ONE store: the manifest's family picks the substores and
+    * folds (IVF roots hold their epochs under `assignments`/`codes`
+    * — the family declares it; callers pass only the root the
+    * manifest sits at). Multi-substore families return one declared
+    * substore's stats (bm25 `stats`, census `census`, cert_text
+    * `fps`, cert_vec `bands`). */
+  def compactStore(spark: SparkSession, root: String,
+                   keepVersions: Int = 2): EpochIndex.CompactionStats =
+    compact(spark, root, IndexMeta.read(spark, root), keepVersions)
 
   /** One epoch subroot's operational state: what a scheduled job or
     * an operator reads BEFORE deciding to compact — live epoch count
@@ -127,72 +94,75 @@ object Maintenance {
                              states: Seq[EpochStoreState],
                              erasures: Seq[String] = Nil)
 
-  /** Where each family keeps its epoch data relative to the manifest
-    * root — the same knowledge the compaction dispatch encodes. */
-  private def epochSubroots(family: String): Seq[(String, Seq[String])] =
-    family match {
-      case "bm25_postings" => Seq("postings" -> Nil, "stats" -> Nil)
-      case "graph_census" => Seq("edges" -> Nil, "census" -> Nil)
-      case "ivf" => Seq("assignments" -> Seq("cell"))
-      case "ivf_pq" => Seq("assignments" -> Seq("cell"), "codes" -> Seq("cell"))
-      case "cert_text" => Seq("fps" -> Seq("ib"), "postings" -> Seq("pb"),
-        "stats" -> Seq("pb"))
-      case "cert_vec" => Seq("bands" -> Seq("b0", "b1"), "stats" -> Nil)
-      case f if f.endsWith("_bands") => Seq("" -> Seq("bb"))
-      case _ => Seq("" -> Nil)
-    }
-
   /** Read-only sweep: the operational state of every store under
     * `treeRoot` — live/uncommitted epochs and the retained base
-    * versions per subroot. The observability half of [[compactAll]]:
-    * run it first, compact what the numbers say needs it, and surface
-    * torn appends without touching any data. */
+    * versions per declared substore (in compaction order; a family
+    * missing from [[Families]] is described as one root-level
+    * substore). The observability half of [[compactAll]]: run it
+    * first, compact what the numbers say needs it, and surface torn
+    * appends without touching any data. */
   def describeStores(spark: SparkSession, treeRoot: String,
                      maxDepth: Int = 4): Seq[StoreInfo] =
     discoverStores(spark, treeRoot, maxDepth).map { root =>
       val meta = IndexMeta.read(spark, root).getOrElse(
         sys.error(s"manifest vanished under sweep at $root"))
-      val states = epochSubroots(meta.family).flatMap { case (sub, inner) =>
-        val p = if (sub.isEmpty) root else s"$root/$sub"
-        val fs = new Path(p)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+      val substores = familyOf(meta).map(_.substores)
+        .getOrElse(Seq(StoreFamily.Substore("", Nil, None)))
+      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      val states = substores.flatMap { s =>
+        val p = s.path(root)
         if (!fs.exists(new Path(p))) None
         else {
           val (retained, current) = EpochIndex.versions(spark, p)
-          Some(EpochStoreState(sub,
-            EpochIndex.committedEpochNames(spark, p, inner),
-            EpochIndex.uncommittedEpochNames(spark, p, inner),
+          Some(EpochStoreState(s.subdir,
+            EpochIndex.committedEpochNames(spark, p, s.innerPartCols),
+            EpochIndex.uncommittedEpochNames(spark, p, s.innerPartCols),
             retained, current))
         }
       }
-      val erasures = epochSubroots(meta.family).flatMap { case (sub, _) =>
-        val p = if (sub.isEmpty) root else s"$root/$sub"
-        EpochIndex.erasures(spark, p)
-          .map(v => if (sub.isEmpty) v else s"$sub:$v")
+      val erasures = substores.flatMap { s =>
+        EpochIndex.erasures(spark, s.path(root))
+          .map(v => if (s.subdir.isEmpty) v else s"${s.subdir}:$v")
       }
       StoreInfo(root, meta.family, meta.params, states, erasures)
     }
 
-  /** Discover every store under `treeRoot` (a directory whose
-    * descendants hold `_GRAFT_META` manifests, up to `maxDepth`
-    * levels down) and compact each. Descent stops at a manifest: a
+  /** One bounded walk under `treeRoot`: the store roots (directories
+    * holding a `_GRAFT_META` manifest, up to `maxDepth` levels down)
+    * and the directories where the descent ran out with
+    * subdirectories still below. Descent stops at a manifest: a
     * store's INTERNALS (epoch partitions, `_base` versions, IVF
-    * `assignments`/`codes` subdirs) are the family compactor's
-    * business, never independently discovered stores. */
-  def discoverStores(spark: SparkSession, treeRoot: String,
-                     maxDepth: Int = 4): Seq[String] = {
+    * `assignments`/`codes` subdirs) belong to its family, never to
+    * independently discovered stores. */
+  private final case class Discovery(stores: Seq[String],
+                                     unexplored: Seq[String])
+
+  private def discover(spark: SparkSession, treeRoot: String,
+                       maxDepth: Int): Discovery = {
     val p = new Path(treeRoot)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    def walk(dir: Path, depth: Int): Seq[String] =
-      if (fs.exists(new Path(dir, IndexMeta.FileName))) Seq(dir.toString)
-      else if (depth == 0) Nil
-      else fs.listStatus(dir).toSeq.filter(_.isDirectory)
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
-        .flatMap(st => walk(st.getPath, depth - 1))
-    walk(p, maxDepth).sorted
+    def walk(dir: Path, depth: Int): Discovery =
+      if (fs.exists(new Path(dir, IndexMeta.FileName)))
+        Discovery(Seq(dir.toString), Nil)
+      else {
+        val subs = fs.listStatus(dir).toSeq.filter(_.isDirectory)
+          .map(_.getPath).filterNot(s =>
+            s.getName.startsWith("_") || s.getName.startsWith("."))
+        if (depth == 0)
+          Discovery(Nil, if (subs.nonEmpty) Seq(dir.toString) else Nil)
+        else {
+          val below = subs.map(walk(_, depth - 1))
+          Discovery(below.flatMap(_.stores), below.flatMap(_.unexplored))
+        }
+      }
+    val found = if (fs.exists(p)) walk(p, maxDepth) else Discovery(Nil, Nil)
+    Discovery(found.stores.sorted, found.unexplored.sorted)
   }
+
+  /** Every store under `treeRoot` (see [[discover]]). */
+  def discoverStores(spark: SparkSession, treeRoot: String,
+                     maxDepth: Int = 4): Seq[String] =
+    discover(spark, treeRoot, maxDepth).stores
 
   /** Sweep: compact every discovered store; return per-store results
     * and THROW a summary if any failed (after the rest compacted).
@@ -201,9 +171,10 @@ object Maintenance {
                  keepVersions: Int = 2,
                  maxDepth: Int = 4): Seq[StoreResult] = {
     val results = discoverStores(spark, treeRoot, maxDepth).map { root =>
-      val family = IndexMeta.read(spark, root).map(_.family).getOrElse("?")
+      val meta = IndexMeta.read(spark, root)
+      val family = meta.map(_.family).getOrElse("?")
       try StoreResult(root, family,
-        Some(compactStore(spark, root, keepVersions)), None)
+        Some(compact(spark, root, meta, keepVersions)), None)
       catch {
         case _: NothingToCompact =>
           StoreResult(root, family, None, None) // fresh store: skip, not fail
@@ -275,21 +246,8 @@ object Maintenance {
     * completeness certificate over a partially-explored tree would
     * be a lie. */
   def unexploredDirs(spark: SparkSession, treeRoot: String,
-                     maxDepth: Int = 4): Seq[String] = {
-    val p = new Path(treeRoot)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    def walk(dir: Path, depth: Int): Seq[String] =
-      if (fs.exists(new Path(dir, IndexMeta.FileName))) Nil
-      else {
-        val subs = fs.listStatus(dir).toSeq.filter(_.isDirectory)
-          .filterNot(st => st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith("."))
-        if (depth == 0) { if (subs.nonEmpty) Seq(dir.toString) else Nil }
-        else subs.flatMap(st => walk(st.getPath, depth - 1))
-      }
-    walk(p, maxDepth).sorted
-  }
+                     maxDepth: Int = 4): Seq[String] =
+    discover(spark, treeRoot, maxDepth).unexplored
 
   /** Right-to-be-forgotten VERIFICATION sweep — the operational
     * closure after the erasers run: walk EVERY parquet file under
@@ -348,7 +306,8 @@ object Maintenance {
     require(victimIds.nonEmpty, "erasureAudit needs at least one victim id")
     val victimSet = victimIds.toSet
     val conf = spark.sessionState.newHadoopConf()
-    val truncated = unexploredDirs(spark, treeRoot, maxDepth)
+    val discovery = discover(spark, treeRoot, maxDepth)
+    val truncated = discovery.unexplored
     require(truncated.isEmpty,
       s"erasureAudit at $treeRoot: store discovery bottomed out at " +
         s"maxDepth=$maxDepth with unexplored directories below — a store " +
@@ -415,7 +374,7 @@ object Maintenance {
       scala.collection.mutable.LinkedHashSet.empty[UnverifiedIdColumn]
     var filesTotal = 0L
     var filesScanned = 0L
-    discoverStores(spark, treeRoot, maxDepth).foreach { root =>
+    discovery.stores.foreach { root =>
       val rootPath = new Path(root)
       // schema group = path segments below the store root before the
       // first partition (`c=v`) or version (`_base`) component: one

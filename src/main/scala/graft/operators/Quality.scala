@@ -36,6 +36,10 @@ object Quality {
     * ([[qualityCutsWrite]]). */
   val CutsFamily = "quality_cuts"
 
+  /** Each freeze IS a compacted base (publishVersion retention GCs
+    * superseded versions), so the family has nothing to compact. */
+  private[operators] val cutsStore = StoreFamily.snapshot(CutsFamily)
+
   private def validateCuts(cuts: Seq[Double]): Unit = {
     require(cuts.nonEmpty && cuts.forall(p => p > 0.0 && p < 1.0),
       s"cuts must lie strictly inside (0, 1): $cuts")

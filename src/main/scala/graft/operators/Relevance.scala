@@ -262,9 +262,18 @@ object Relevance {
     (postings, stats)
   }
 
-  private val PostingsFamily = "bm25_postings"
   private[graft] def postingsMeta(idCol: String, textCol: String): IndexMeta =
-    IndexMeta(PostingsFamily, "cols" -> s"$idCol,$textCol")
+    IndexMeta(bm25Store.name, "cols" -> s"$idCol,$textCol")
+
+  /** Two substores: `stats` partials sum into one row (compacted
+    * first, and the stats compaction reports); `postings` rows are
+    * disjoint across epochs (append-only doc ids), so their fold is
+    * identity — compaction bounds the FILE count. */
+  private[operators] val bm25Store = StoreFamily("bm25_postings", Seq(
+    StoreFamily.substore("stats", _ => p =>
+      p.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+        coalesce(sum(col("sumdl")), lit(0L)).as("sumdl"))),
+    StoreFamily.substore("postings", _ => identity)), reports = "stats")
 
   /** Bootstrap a stored retrieval index at `path` (`postings/` and
     * `stats/` epoch stores under one `_GRAFT_META` manifest, the IVF
@@ -292,23 +301,6 @@ object Relevance {
     val (postings, stats) = bm25Postings(batch, idCol, textCol)
     EpochIndex.append(postings, s"$path/postings", epoch)
     EpochIndex.append(stats, s"$path/stats", epoch)
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip:
-    * postings rows are disjoint across epochs (append-only doc ids)
-    * so their fold is identity — compaction bounds the FILE count;
-    * statistics partials sum into one row. */
-  def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, PostingsFamily)
-    val stats = EpochIndex.compact(spark, s"$path/stats",
-      p => p.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("sumdl")), lit(0L)).as("sumdl")),
-      keepVersions = keepVersions)
-    EpochIndex.compact(spark, s"$path/postings", identity,
-      keepVersions = keepVersions)
-    stats
   }
 
   /** Erase documents from a stored retrieval index — disk-level, both

@@ -97,16 +97,8 @@ object SampleSketch {
           lit(Cardinality.HashSpace)))
 
   /** Report: per-group sample size, lower-quantiles and row-count
-    * estimate from one bounded-heap pass. */
-  def quantileReport(df: DataFrame, group: Column, id: Column,
-                     value: Column, k: Int,
-                     ps: Seq[Double]): DataFrame = {
-    val sk = sampleSketch(df, group, id, value, k)
-    reportFromSketches(sk, k, ps)
-  }
-
-  /** The same report from ALREADY-BUILT sketches (a stored profile
-    * table or [[sampleSketchIndexRead]] output). */
+    * estimate from already-built sketches ([[sampleSketch]] output, a
+    * stored profile table or [[sampleSketchIndexRead]] output). */
   def reportFromSketches(sketches: DataFrame, k: Int,
                          ps: Seq[Double]): DataFrame = {
     val qCols = ps.map(p => sketchQuantile(col("sketch"), p)
@@ -129,10 +121,11 @@ object SampleSketch {
       .agg(slice(array_sort(array_distinct(flatten(
         collect_list(col("sketch"))))), 1, k).as("sketch"))
 
-  private val Family = "sample_sketch"
+  private[operators] val sketchStore = StoreFamily.flat("sample_sketch",
+    param => sketchFold(param("k").toInt))
   private[graft] def indexMeta(k: Int, keyName: String,
                                valueName: String): IndexMeta =
-    IndexMeta(Family, "k" -> k, "keyName" -> keyName,
+    IndexMeta(sketchStore.name, "k" -> k, "keyName" -> keyName,
       "valueName" -> valueName)
 
   /** Bootstrap a stored profile: one (group, sketch) row per group in
@@ -181,18 +174,5 @@ object SampleSketch {
     IndexMeta.check(spark, path, indexMeta(k, keyName, valueName))
     sketchFold(k)(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "sampleSketchIndexWrite"))
-  }
-
-  /** Fold accumulated epochs behind the atomic `_CURRENT` flip. */
-  def sampleSketchIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                               path: String,
-                               keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, Family)
-    val k = IndexMeta.read(spark, path) match {
-      case Some(m) => m.params.get("k").map(_.toInt).getOrElse(
-        sys.error(s"sample sketch store $path manifest lacks k"))
-      case None => sys.error(s"sample sketch store $path has no manifest")
-    }
-    EpochIndex.compact(spark, path, sketchFold(k), keepVersions = keepVersions)
   }
 }

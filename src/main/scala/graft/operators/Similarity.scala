@@ -683,6 +683,16 @@ object Similarity {
     IvfIndex(centroids, assignCells(corpus, cents, idCol, vecCol))
   }
 
+  /** Assignment rows are disjoint across epochs, so the fold is
+    * identity — compaction bounds the per-cell FILE count (one file
+    * per cell per epoch forever, otherwise) rather than the row
+    * count. The centroids are plain parquet beside the epoch store. */
+  private[operators] val ivfStore = StoreFamily("ivf",
+    Seq(StoreFamily.substore("assignments", _ => identity, Seq("cell"))),
+    reports = "assignments")
+  private def ivfMeta(idCol: String, vecCol: String): IndexMeta =
+    IndexMeta(ivfStore.name, "cols" -> s"$idCol,$vecCol")
+
   /** Write the index: `path/centroids` plain parquet, `path/assignments`
     * partitioned by `(cell, _epoch)` — the cell level turns every
     * probe's cell set into parquet partition pruning (no full-corpus
@@ -690,9 +700,6 @@ object Similarity {
     * ([[ivfAppendWrite]], `Streaming.ivfIngestSink`) an idempotent
     * dynamic-overwrite unit without changing the directory depth the
     * readers expect. The bootstrap corpus lands as `_epoch=base`. */
-  private val IvfFamily = "ivf"
-  private def ivfMeta(idCol: String, vecCol: String): IndexMeta =
-    IndexMeta(IvfFamily, "cols" -> s"$idCol,$vecCol")
 
   def ivfIndexWrite(index: IvfIndex, path: String): Unit = {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
@@ -700,7 +707,7 @@ object Similarity {
       innerPartCols = Seq("cell"))
     val cols = index.assignments.columns.filterNot(_ == "cell")
     IndexMeta.write(index.assignments.sparkSession, path,
-      IndexMeta(IvfFamily, "cols" -> cols.mkString(",")))
+      IndexMeta(ivfStore.name, "cols" -> cols.mkString(",")))
   }
 
   def ivfIndexRead(spark: org.apache.spark.sql.SparkSession,
@@ -711,8 +718,8 @@ object Similarity {
     // partition filters are any predicates referencing only partition
     // columns, casts included. `_epoch` is a writer-side bookkeeping
     // column — readers never see it (the epoch-aware read also folds
-    // in the compacted base, if [[ivfIndexCompact]] has run).
-    IndexMeta.requireFamily(spark, path, IvfFamily)
+    // in the compacted base, if the store has been compacted).
+    IndexMeta.requireFamily(spark, path, ivfStore.name)
     IvfIndex(spark.read.parquet(s"$path/centroids"),
       // observed = false: the probe's whole value is the cell-pruned
       // scan (dynamic partition pruning from the probe join), and a
@@ -724,19 +731,6 @@ object Similarity {
         observed = false)
         .withColumn("cell", col("cell").cast("long"))
         .drop(EpochIndex.EpochCol))
-  }
-
-  /** Rewrite accumulated assignment epochs into a compacted base
-    * behind the atomic `_CURRENT` flip. Assignment rows are disjoint
-    * across epochs, so the fold is identity — compaction bounds the
-    * per-cell FILE count (one file per cell per epoch forever,
-    * otherwise) rather than the row count. */
-  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, IvfFamily)
-    EpochIndex.compact(spark, s"$path/assignments", identity,
-      innerPartCols = Seq("cell"), keepVersions = keepVersions)
   }
 
   /** Erase vectors from a stored IVF index — disk-level (the q237
@@ -752,7 +746,7 @@ object Similarity {
   def ivfIndexErase(spark: org.apache.spark.sql.SparkSession,
                     path: String, ids: DataFrame,
                     idCol: String): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, IvfFamily)
+    IndexMeta.requireFamily(spark, path, ivfStore.name)
     val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
     EpochIndex.eraseRewrite(spark, s"$path/assignments",
       p => p.join(victims.select(col("_vid").as(idCol)), Seq(idCol),
@@ -775,7 +769,7 @@ object Similarity {
     * columns — never the vectors. */
   def ivfCellSkew(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame = {
-    IndexMeta.requireFamily(spark, path, IvfFamily)
+    IndexMeta.requireFamily(spark, path, ivfStore.name)
     Rolling.bucketSkew(ivfIndexRead(spark, path).assignments,
       Nil, col("cell"))
   }
@@ -789,7 +783,7 @@ object Similarity {
     * the recluster with the corpus in hand. */
   def ivfPqCellSkew(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame = {
-    IndexMeta.requireFamily(spark, path, IvfPqFamily)
+    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
     Rolling.bucketSkew(
       ivfPqIndexRead(spark, path).codes
         .filter(col("sub") === 0), Nil, col("cell"))
@@ -834,7 +828,7 @@ object Similarity {
     * erasure contract, exactly what may be reclustered), reassign
     * every stored vector to the new centroids, and publish the
     * reassignment as a new base version under the same
-    * crash-safe compaction discipline as [[ivfIndexCompact]]
+    * crash-safe compaction discipline as [[Maintenance.compactStore]]
     * (`_CURRENT` flip, retained versions, epoch GC).
     *
     * The re-fit is FROM SCRATCH — [[pickCentroids]] seeds over the
@@ -867,7 +861,7 @@ object Similarity {
                    steps: Int = 2, k: Int = 0,
                    keepVersions: Int = 2): EpochIndex.CompactionStats = {
     require(steps >= 1, s"steps must be >= 1: $steps")
-    IndexMeta.requireFamily(spark, path, IvfFamily)
+    IndexMeta.requireFamily(spark, path, ivfStore.name)
     val meta = IndexMeta.read(spark, path).getOrElse(sys.error(
       s"no _GRAFT_META manifest at $path — not an IVF store"))
     val cols = meta.params.getOrElse("cols", sys.error(
@@ -1162,7 +1156,11 @@ object Similarity {
         .join(cells, Seq(idCol)))
   }
 
-  private val IvfPqFamily = "ivf_pq"
+  /** Identity-fold `codes` epochs (the [[ivfStore]] disjoint-rows
+    * rationale); centroids and codebooks are plain parquet. */
+  private[operators] val ivfPqStore = StoreFamily("ivf_pq",
+    Seq(StoreFamily.substore("codes", _ => identity, Seq("cell"))),
+    reports = "codes")
 
   def ivfPqIndexWrite(index: IvfPqIndex, path: String): Unit = {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
@@ -1171,14 +1169,14 @@ object Similarity {
       innerPartCols = Seq("cell"))
     val cols = index.codes.columns.filterNot(_ == "cell")
     IndexMeta.write(index.codes.sparkSession, path,
-      IndexMeta(IvfPqFamily, "cols" -> cols.mkString(",")))
+      IndexMeta(ivfPqStore.name, "cols" -> cols.mkString(",")))
   }
 
   def ivfPqIndexRead(spark: org.apache.spark.sql.SparkSession,
                      path: String): IvfPqIndex = {
     // same partition-column normalization as ivfIndexRead: `cell`
     // re-widens to long, `_epoch` never reaches readers
-    IndexMeta.requireFamily(spark, path, IvfPqFamily)
+    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
     IvfPqIndex(spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebooks"),
       // observed = false for the same cell-pruning reason as
@@ -1190,16 +1188,6 @@ object Similarity {
         .drop(EpochIndex.EpochCol))
   }
 
-  /** Identity-fold compaction of the codes epochs (see
-    * [[ivfIndexCompact]] — same disjoint-rows rationale). */
-  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, IvfPqFamily)
-    EpochIndex.compact(spark, s"$path/codes", identity,
-      innerPartCols = Seq("cell"), keepVersions = keepVersions)
-  }
-
   /** [[ivfIndexErase]]'s PQ twin: code rows are per-vector, so they
     * filter; centroids AND codebooks stay — both are aggregate
     * quantizer geometry (the frozen-pivot rationale), and keeping
@@ -1207,7 +1195,7 @@ object Similarity {
   def ivfPqIndexErase(spark: org.apache.spark.sql.SparkSession,
                       path: String, ids: DataFrame,
                       idCol: String): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, IvfPqFamily)
+    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
     val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
     EpochIndex.eraseRewrite(spark, s"$path/codes",
       p => p.join(victims.select(col("_vid").as(idCol)), Seq(idCol),
@@ -1246,7 +1234,7 @@ object Similarity {
                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     IndexMeta.check(spark, path,
-      IndexMeta(IvfPqFamily, "cols" -> s"$idCol,sub,code"))
+      IndexMeta(ivfPqStore.name, "cols" -> s"$idCol,sub,code"))
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     val index = ivfPqIndexRead(spark, path)
     val kCells = if (nCells > 0) nCells else index.centroids.count().toInt
@@ -1295,7 +1283,7 @@ object Similarity {
                        m: Int, k: Int, nProbe: Int = 4, roundTo: Int = 6,
                        maxCells: Int = 1 << 20): DataFrame = {
     IndexMeta.check(spark, path,
-      IndexMeta(IvfPqFamily, "cols" -> s"$idCol,sub,code"))
+      IndexMeta(ivfPqStore.name, "cols" -> s"$idCol,sub,code"))
     val index = ivfPqIndexRead(spark, path)
     val probes = probeCells(queries,
       index.centroids.select(col("cell"), col(vecCol).as("cent_vec")),

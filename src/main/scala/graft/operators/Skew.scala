@@ -36,11 +36,4 @@ object Skew {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     p.join(b, keys :+ saltCol, joinType).drop(saltCol)
   }
-
-  /** Diagnostic: per-key row counts of the heaviest keys — feed this
-    * to choose saltFactor / AQE thresholds. */
-  def keyHistogram(df: DataFrame, keys: Seq[String], topN: Int = 20): DataFrame =
-    df.groupBy(keys.map(col): _*).count()
-      .orderBy(desc("count"))
-      .limit(topN)
 }

@@ -296,16 +296,17 @@ object Splits {
       index, idCol, buckets, roundTo)
 
   // ------------------------------------------ persisted DSIR store
-  private val DsirFamily = "dsir_buckets"
   private def dsirMeta(buckets: Int): IndexMeta =
-    IndexMeta(DsirFamily, "buckets" -> buckets)
+    IndexMeta(dsirStore.name, "buckets" -> buckets)
 
   /** THE bucket-count fold — per-bucket (cr, ct) ADD across disjoint
-    * batches. Shared by the epoch-scoped read and
-    * [[dsirIndexCompact]]. */
+    * batches. Shared by the epoch-scoped read and compaction. */
   private def dsirFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("_b"))
       .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+
+  private[operators] val dsirStore =
+    StoreFamily.flat("dsir_buckets", _ => dsirFold)
 
   /** Persist a [[dsirIndex]] as an epoch-structured store (the
     * `_epoch=base` layout the other index families share), recording
@@ -319,7 +320,7 @@ object Splits {
   /** Manifest-checked epoch-scoped read: corpus-wide bucket counts =
     * per-epoch partials summed (≤ `buckets` rows whatever the epoch
     * count — this family's probe cost never grows with history, but
-    * its FILE count does, which is what [[dsirIndexCompact]] bounds). */
+    * its FILE count does, which is what compaction bounds). */
   def dsirIndexRead(spark: org.apache.spark.sql.SparkSession, path: String,
                     buckets: Int,
                     excludeEpoch: Option[String] = None): DataFrame = {
@@ -366,15 +367,6 @@ object Splits {
           .otherwise(col("cr")))
         .filter(col("cr") =!= 0L || col("ct") =!= 0L)
         .select(col("_b"), col("cr"), col("ct")))
-  }
-
-  /** Fold accumulated count epochs into a compacted base (atomic
-    * `_CURRENT` publish — see [[EpochIndex.compact]]). */
-  def dsirIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       keepVersions: Int = 2): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, DsirFamily)
-    EpochIndex.compact(spark, path, dsirFold, keepVersions = keepVersions)
   }
 
   private def dsirScore(feats: DataFrame, counts: DataFrame, idCol: String,

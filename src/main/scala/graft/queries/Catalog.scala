@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Audit, BandJoin, Cardinality, Centrality, Chunking, Contamination, Curation, Dedup, Diff, GapFill, HeavyHitters, Incremental, IntervalExpand, Layout, LmFilter, Merge, Multimodal, Packing, Par, Percentiles, Profile, Psl, Quality, Relevance, Rolling, SampleSketch, Scd, Similarity, Skew, Splits, Traversal}
+import graft.operators.{AsOfJoin, Audit, BandJoin, Cardinality, Centrality, Chunking, Contamination, Curation, Dedup, Diff, GapFill, HeavyHitters, Incremental, IntervalExpand, Layout, LmFilter, Maintenance, Merge, Multimodal, Packing, Par, Percentiles, Profile, Psl, Quality, Relevance, Rolling, SampleSketch, Scd, Similarity, Skew, Splits, Traversal}
 import graft.functions.{Bpe, TextFunctions}
 
 /** The operator catalog: one named query per SURVEY.md §2 operator
@@ -4877,7 +4877,7 @@ object Catalog {
     Dedup.lineFirstOccIndexWrite(epoch(0), root, sep)
     Dedup.lineFirstOccIndexAppend(s, root, epoch(1), "day-2", sep)
     Dedup.lineFirstOccIndexAppend(s, root, epoch(2), "day-3", sep)
-    val stats = Dedup.lineFirstOccIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q143: compaction folded nothing at $root — store build failed")
     Dedup.incrementalDedupLines(batch, "doc_id", "text",
@@ -5085,7 +5085,7 @@ object Catalog {
       col("domain"), col("doc_id"))
     Curation.capCountIndexWrite(partial(0), root, keyName)
     Curation.capCountIndexAppend(s, root, partial(1), "day-2", keyName)
-    val stats = Curation.capCountIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q146: compaction folded nothing at $root — store build failed")
     Curation.incrementalCapPerKey(batch, col("domain"), col("doc_id"),
@@ -5242,7 +5242,7 @@ object Catalog {
       "event_type", "value")
     SampleSketch.sampleSketchIndexAppend(s, root, epochSketch(1), "day-2",
       k, "event_type", "value")
-    val stats = SampleSketch.sampleSketchIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q149: compaction folded nothing at $root — store build failed")
     SampleSketch.reportFromSketches(
@@ -5358,7 +5358,7 @@ object Catalog {
     Relevance.bm25IndexAppend(s, root,
       docs.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", "text",
       "day-2")
-    val stats = Relevance.bm25IndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q151: compaction folded nothing at $root — store build failed")
     Relevance.bm25IndexProbe(s, root, "doc_id", "text",
@@ -5865,7 +5865,7 @@ object Catalog {
     Cardinality.hllIndexWrite(epochSketch(0), root, HllP, "user_id")
     Cardinality.hllIndexAppend(s, root, epochSketch(1), "day-2", HllP,
       "user_id")
-    val stats = Cardinality.hllIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q159: compaction folded nothing at $root — store build failed")
     val exact = ev.groupBy(col("event_type").as("group"))
@@ -6033,7 +6033,7 @@ object Catalog {
     HeavyHitters.cmsIndexAppend(s, root,
       HeavyHitters.countMinSketch(toks(1), "token", depth, width),
       "day-2", depth, width, "token")
-    val stats = HeavyHitters.cmsIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q163: compaction folded nothing at $root — store build failed")
     val sketch = HeavyHitters.cmsIndexRead(s, root, depth, width, "token")
@@ -6408,7 +6408,7 @@ object Catalog {
     Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
     Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
       "l_returnflag")
-    val stats = Audit.digestIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q171: compaction folded nothing at $root — ledger build failed")
     Audit.digestIndexRead(s, root, cols, "l_returnflag")
@@ -6457,7 +6457,7 @@ object Catalog {
       col("s"), col("e"))
     IntervalExpand.islandsIndexAppend(s, root, ivs(1), "o_custkey",
       col("s"), col("e"), "day-2")
-    val stats = IntervalExpand.islandsIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q172: compaction folded nothing at $root — store build failed")
     IntervalExpand.islandsIndexRead(s, root, "o_custkey")
@@ -6682,7 +6682,7 @@ object Catalog {
     Cardinality.kmvIndexWrite(epochSketch(0), root, 32, "user_id")
     Cardinality.kmvIndexAppend(s, root, epochSketch(1), "day-2", 32,
       "user_id")
-    val stats = Cardinality.kmvIndexCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q176: compaction folded nothing at $root — store build failed")
     val exact = ev.groupBy(col("event_type").as("group"))
@@ -6814,10 +6814,10 @@ object Catalog {
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), k = 32)
     Cardinality.kmvIndexWrite(epochSketch(0), root, 32, "user_id")
-    Cardinality.kmvIndexCompact(s, root) // snapshot v1: batch 1 only
+    Maintenance.compactStore(s, root) // snapshot v1: batch 1 only
     Cardinality.kmvIndexAppend(s, root, epochSketch(1), "day-2", 32,
       "user_id")
-    Cardinality.kmvIndexCompact(s, root) // v2 live; v1 retained
+    Maintenance.compactStore(s, root) // v2 live; v1 retained
     val (retained, current) = graft.operators.EpochIndex.versions(s, root)
     require(retained.size == 2 && current.contains(retained.last),
       s"q178: expected two retained versions with the newest live, " +
@@ -6935,7 +6935,7 @@ object Catalog {
     Centrality.triangleCensusWrite(parts(0), root)
     Centrality.triangleCensusAppend(s, root, parts(1), "day-2")
     Centrality.triangleCensusAppend(s, root, parts(2), "day-3")
-    val stats = Centrality.triangleCensusCompact(s, root)
+    val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q181: compaction folded nothing at $root — store build failed")
     Centrality.triangleCensusRead(s, root)
@@ -6976,7 +6976,7 @@ object Catalog {
     val tApp2 = timed(Centrality.triangleCensusAppend(s, root, parts(1), "day-2"))
     val tApp3 = timed(Centrality.triangleCensusAppend(s, root, parts(2), "day-3"))
     val tCompact = timed {
-      val st = Centrality.triangleCensusCompact(s, root)
+      val st = Maintenance.compactStore(s, root)
       require(st.folded.nonEmpty,
         s"q181Stages: compaction folded nothing at $root — store build failed")
     }
@@ -8141,7 +8141,7 @@ object Catalog {
     Dedup.gramFreqIndexAppend(s, root,
       Dedup.gramFreqIndex(docs.filter(pmod(col("doc_id"), lit(5)).isin(3, 4)),
         "doc_id", "text", n = 8), epoch = "day2", n = 8)
-    Dedup.gramFreqIndexCompact(s, root)
+    Maintenance.compactStore(s, root)
     Dedup.incrementalDupGramFraction(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2),
       Dedup.gramFreqIndexRead(s, root, None, n = 8),
@@ -8241,7 +8241,7 @@ object Catalog {
       LmFilter.lmIndex(ref.filter(pmod(col("doc_id"), lit(5)).isin(3, 4)),
         "doc_id", "text"), epoch = "day2",
       ctxBuckets = 4096, bigramBuckets = 32768)
-    LmFilter.lmIndexCompact(s, root)
+    Maintenance.compactStore(s, root)
     LmFilter.lmPerplexity(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2), "doc_id", "text",
       LmFilter.lmIndexRead(s, root, ctxBuckets = 4096, bigramBuckets = 32768))
@@ -9214,7 +9214,7 @@ object Catalog {
         s"$root/labels", "cosine", 0.4))
     // compact FIRST: the fold below must compose with a base, not
     // just raw epochs (the crossing a long-running ingest hits daily)
-    graft.operators.Maintenance.compactStore(s, s"$root/labels")
+    Maintenance.compactStore(s, s"$root/labels")
     val cross = Dedup.certVecIndexProbe(s, s"$root/vec", batch,
         "vec_id", "embedding", threshold = 0.4)
       .select(least(col("id_corpus"), col("id_batch")).as("id_a"),

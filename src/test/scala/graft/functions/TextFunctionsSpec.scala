@@ -49,17 +49,6 @@ class TextFunctionsSpec extends SparkSpecBase {
     assert(fps(0) !== fps(2))
   }
 
-  test("rollingHash: order-sensitive, canonicalization-insensitive, deterministic") {
-    val hs = Seq("the quick fox", "The Quick, Fox!", "fox quick the", "the quick cat")
-      .toDF("t").select(TextFunctions.rollingHash($"t")).as[Long].collect()
-    assert(hs(0) === hs(1))   // case/punctuation canonicalized away
-    assert(hs(0) !== hs(2))   // token ORDER matters (unlike fingerprint sets)
-    assert(hs(0) !== hs(3))   // content matters
-    val again = Seq("the quick fox").toDF("t")
-      .select(TextFunctions.rollingHash($"t")).as[Long].head()
-    assert(again === hs(0))
-  }
-
   test("bigrams, dupFraction, topFrequencyFraction: repetition signals") {
     // "a b a b a b" → bigrams: [a b, b a, a b, b a, a b] (5 total,
     // 2 distinct, top "a b" ×3)
@@ -83,15 +72,6 @@ class TextFunctionsSpec extends SparkSpecBase {
     assert(clean(1).getDouble(0) === 0.0)
     assert(clean(1).getDouble(1) === 0.0)           // no bigrams at all
     assert(clean(2).getDouble(1) === 0.0)
-  }
-
-  test("qualityScore stays within [0,1] and favors clean text") {
-    val scores = Seq(
-      "a clean readable sentence with normal words in it",
-      "@@@@ #### $$$$ %%%% ^^^^ &&&&")
-      .toDF("t").select(TextFunctions.qualityScore($"t")).as[Double].collect()
-    assert(scores.forall(s => s >= 0.0 && s <= 1.0))
-    assert(scores(0) > scores(1))
   }
 
   test("dedupLinesInDoc: first occurrence wins, order preserved, null-safe") {

@@ -113,7 +113,7 @@ class CurationSpec extends SparkSpecBase {
     // compaction: probe-after ≡ probe-before; counts survive the fold
     val before = Curation.capCountIndexRead(spark, root, "dom")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val stats = Curation.capCountIndexCompact(spark, root)
+    val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(Curation.capCountIndexRead(spark, root, "dom")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet === before)

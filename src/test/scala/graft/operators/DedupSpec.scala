@@ -843,7 +843,7 @@ class DedupSpec extends SparkSpecBase {
     val aOnly = Dedup.gramFreqIndex(a, "doc_id", "text", n = 2)
       .as[(String, Long)].collect().toMap
     assert(excluded === aOnly)
-    val stats = Dedup.gramFreqIndexCompact(spark, root)
+    val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day2"))
     val stored = Dedup.gramFreqIndexRead(spark, root, None, n = 2)
       .as[(String, Long)].collect().toMap

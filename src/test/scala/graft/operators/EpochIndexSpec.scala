@@ -43,7 +43,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(before === snap(Dedup.lineFirstOccIndex(
       b1.union(b2).union(b3), "doc_id", "text", "\n")))
 
-    val s1 = Dedup.lineFirstOccIndexCompact(spark, path)
+    val s1 = Maintenance.compactStore(spark, path)
     assert(s1.folded.toSet === Set("base", "day-2", "day-3"))
     assert(s1.carried.isEmpty && s1.gcd.isEmpty)
     assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === before)
@@ -60,7 +60,7 @@ class EpochIndexSpec extends SparkSpecBase {
     // second compaction folds only the new epoch; the first
     // generation's folded directories are GC'd now (one generation
     // late — no retained version lists them as live)
-    val s2 = Dedup.lineFirstOccIndexCompact(spark, path)
+    val s2 = Maintenance.compactStore(spark, path)
     assert(s2.folded === Seq("day-4"))
     assert(s2.carried.toSet === Set("base", "day-2", "day-3"))
     assert(s2.gcd.toSet === Set("base", "day-2", "day-3"))
@@ -69,7 +69,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === withDay4)
 
     // compacting with nothing new is a harmless no-op rewrite
-    val s3 = Dedup.lineFirstOccIndexCompact(spark, path)
+    val s3 = Maintenance.compactStore(spark, path)
     assert(s3.folded.isEmpty)
     assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === withDay4)
   }
@@ -116,7 +116,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === before)
     assert(EpochIndex.uncommittedEpochNames(spark, path) === Seq("torn-1"))
     // compaction ignores it — not folded, not GC'd — and reports it
-    val s1 = Dedup.lineFirstOccIndexCompact(spark, path)
+    val s1 = Maintenance.compactStore(spark, path)
     assert(!s1.folded.contains("torn-1") && !s1.gcd.contains("torn-1"))
     assert(s1.uncommitted === Seq("torn-1"))
     assert(new java.io.File(s"$path/_epoch=torn-1").exists())
@@ -131,7 +131,7 @@ class EpochIndexSpec extends SparkSpecBase {
       snap(Dedup.lineFirstOccIndex(
         b1.union(b2).union(b3).union(docs(40L -> "torn line\nshared one")),
         "doc_id", "text", "\n")))
-    val s2 = Dedup.lineFirstOccIndexCompact(spark, path)
+    val s2 = Maintenance.compactStore(spark, path)
     assert(s2.folded === Seq("torn-1") && s2.uncommitted.isEmpty)
   }
 
@@ -140,10 +140,10 @@ class EpochIndexSpec extends SparkSpecBase {
     // v1 folds batch 1 alone; v2 folds everything
     Dedup.lineFirstOccIndexWrite(
       Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), path, sep = "\n")
-    Dedup.lineFirstOccIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     Dedup.lineFirstOccIndexAppend(spark, path,
       Dedup.lineFirstOccIndex(b2, "doc_id", "text", "\n"), "day-2", sep = "\n")
-    Dedup.lineFirstOccIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     val (retained, current) = EpochIndex.versions(spark, path)
     assert(retained.size === 2 && current.contains(retained.last))
     // the old snapshot is exactly the batch-1 index, bit for bit,
@@ -156,7 +156,7 @@ class EpochIndexSpec extends SparkSpecBase {
     // refuse with the retained list, never return empty
     Dedup.lineFirstOccIndexAppend(spark, path,
       Dedup.lineFirstOccIndex(b3, "doc_id", "text", "\n"), "day-3", sep = "\n")
-    Dedup.lineFirstOccIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     val e = intercept[IllegalArgumentException] {
       EpochIndex.readAsOf(spark, path, retained.head)
     }
@@ -171,21 +171,11 @@ class EpochIndexSpec extends SparkSpecBase {
     val without2 = snap(Dedup.lineFirstOccIndexRead(spark, path, Some("day-2")))
     assert(without2 === snap(Dedup.lineFirstOccIndex(
       b1.union(b3), "doc_id", "text", "\n")))
-    Dedup.lineFirstOccIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     val e = intercept[IllegalArgumentException] {
       Dedup.lineFirstOccIndexRead(spark, path, Some("day-2")).collect()
     }
     assert(e.getMessage.contains("already compacted"), e.getMessage)
-  }
-
-  test("family gate: compacting a store with another family's fold refuses") {
-    val path = tmp("graft-ei-family")
-    Dedup.boilerplateIndexWrite(
-      Dedup.boilerplateIndex(b1, "doc_id", "text", "\n"), path, sep = "\n")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.lineFirstOccIndexCompact(spark, path)
-    }
-    assert(e.getMessage.contains("family"), e.getMessage)
   }
 
   test("boilerplate counts: compaction preserves summed frequencies") {
@@ -196,7 +186,7 @@ class EpochIndexSpec extends SparkSpecBase {
       Dedup.boilerplateIndex(b2, "doc_id", "text", "\n"), "day-2", sep = "\n")
     val before = Dedup.boilerplateIndexRead(spark, path)
       .as[(String, Long)].collect().toSet
-    Dedup.boilerplateIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     val after = Dedup.boilerplateIndexRead(spark, path)
       .as[(String, Long)].collect().toSet
     assert(after === before)
@@ -422,7 +412,7 @@ class EpochIndexSpec extends SparkSpecBase {
         .as[(Long, Long, Double)].collect().toSet
     val before = probe()
     assert(before.nonEmpty)
-    val stats = Similarity.ivfIndexCompact(spark, root)
+    val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(probe() === before)
     // probing under the wrong columns refuses via the manifest
@@ -449,7 +439,7 @@ class EpochIndexSpec extends SparkSpecBase {
       Splits.dsirScoreWithIndex(batch, "doc_id", "text", index, 64)
         .as[(Long, Long, Double)].collect().toSet
     assert(score(stored) === score(direct))
-    Splits.dsirIndexCompact(spark, root)
+    Maintenance.compactStore(spark, root)
     assert(score(Splits.dsirIndexRead(spark, root, 64)) === score(direct))
     val e = intercept[IllegalArgumentException] {
       Splits.dsirIndexRead(spark, root, 128)
@@ -473,7 +463,7 @@ class EpochIndexSpec extends SparkSpecBase {
     val before = rows()
     assert(before === (idx1.union(idx2)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet))
-    Dedup.bandIndexStoreCompact(spark, root)
+    Maintenance.compactStore(spark, root)
     assert(rows() === before)
     val e = intercept[IllegalArgumentException] {
       Dedup.bandIndexStoreRead(spark, root,
@@ -567,7 +557,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(st1.head.baseRows === 0L)
     assert(st1.head.rowsAggregated > 0L)
 
-    Dedup.lineFirstOccIndexCompact(spark, path)
+    Maintenance.compactStore(spark, path)
     val post = Dedup.lineFirstOccIndexRead(spark, path)
     post.collect()
     val st2 = EpochIndex.probeStats(post)

@@ -63,7 +63,7 @@ class LmFilterSpec extends SparkSpecBase {
     val aOnly = LmFilter.lmIndex(a, "doc_id", "text")
       .as[(Int, Long, Long)].collect().toSet
     assert(excluded === aOnly)
-    val stats = LmFilter.lmIndexCompact(spark, root)
+    val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day2"))
     val stored = LmFilter.lmIndexRead(spark, root, 4096, 32768)
       .as[(Int, Long, Long)].collect().toSet

@@ -54,8 +54,9 @@ class SampleSketchSpec extends SparkSpecBase {
     // under k: the sketch IS the group, quantiles are exact data values
     val rows = Seq(("g", 1L, 5.0), ("g", 2L, 1.0), ("g", 3L, 9.0),
       ("g", 4L, 3.0), ("g", 5L, 7.0))
-    val rpt = SampleSketch.quantileReport(rows.toDF("g", "id", "v"),
-      col("g"), col("id"), col("v"), k = 16, ps = Seq(0.0, 0.5, 1.0))
+    val rpt = SampleSketch.reportFromSketches(
+      SampleSketch.sampleSketch(rows.toDF("g", "id", "v"),
+        col("g"), col("id"), col("v"), 16), k = 16, ps = Seq(0.0, 0.5, 1.0))
       .collect().head
     assert(rpt.getAs[Long]("n_sample") === 5L)
     assert(rpt.getAs[Double]("p0") === 1.0)   // idx floor(4*0)=0 → 1st
@@ -110,7 +111,7 @@ class SampleSketchSpec extends SparkSpecBase {
       .select(col("group"), col("sketch"))
       .as[(String, Seq[(Long, Long, Double)])].collect().toMap
     assert(stored() === direct)
-    val stats = SampleSketch.sampleSketchIndexCompact(spark, root)
+    val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {

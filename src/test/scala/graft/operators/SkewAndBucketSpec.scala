@@ -26,14 +26,6 @@ class SkewAndBucketSpec extends SparkSpecBase {
     assert(saltedL === plainL)
   }
 
-  test("keyHistogram surfaces the hot keys") {
-    val probe = spark.range(0, 1000)
-      .select((when($"id" % 10 =!= 0, 1L).otherwise($"id")).as("k"))
-    val top = Skew.keyHistogram(probe, Seq("k"), topN = 1).head()
-    assert(top.getLong(0) === 1L)
-    assert(top.getLong(1) === 900L)
-  }
-
   test("bucketed tables join without any exchange") {
     val facts = spark.range(0, 10000).select($"id".as("k"), ($"id" * 2).as("a"))
     val dims = spark.range(0, 1000).select($"id".as("k"), ($"id" * 3).as("b"))

@@ -1240,7 +1240,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming near-dup TEXT ingest (MinHash twin): canonical keep, store-probe rejection, accepted-only, compaction-safe, zero leaked pins") {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, Maintenance}
     graft.GraftSession.sweepPersistedRdds(spark)
     val src = Files.createTempDirectory("graft-ndt-src").toString
     val corpus = Files.createTempDirectory("graft-ndt-c").toString + "/c"
@@ -1288,7 +1288,7 @@ class StreamingSpec extends SparkSpecBase {
       "re-delivered known ids landed duplicate corpus rows")
     // mid-stream compaction folds the accumulated epochs; the next
     // batch's probe reads the compacted base + its own exclusions
-    val stats = Dedup.bandIndexStoreCompact(spark, index)
+    val stats = Maintenance.compactStore(spark, index)
     assert(stats.folded.nonEmpty, "compaction folded nothing")
     deliver("b3", b3); drain()
     assert(corpusIds() === Set(1L, 3L, 12L, 22L), s"got ${corpusIds()}")
