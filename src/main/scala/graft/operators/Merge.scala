@@ -1,9 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Sinks
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import graft.sources.{Fs, Sinks}
 
 /** Keyed upsert ("MERGE") — the reference's universal incremental sink.
   *
@@ -80,15 +89,19 @@ object Merge {
 
   /** Partition-pruned merge + persist: the O(delta) daily merge.
     *
-    * 1. Collect the distinct partition values present in `updates`
-    *    (a handful of dates — driver-side list, not data).
-    * 2. Read ONLY those partitions of the target (directory pruning —
-    *    untouched partitions are never opened).
-    * 3. Merge the slice with the updates, write it to a staging dir
-    *    (never read and overwrite the same path in one job), then
-    *    commit with DYNAMIC partition overwrite — only the touched
-    *    partition directories are replaced; everything else on disk is
-    *    untouched bytes.
+    * 1. Collect the distinct partition values present in `updates` as
+    *    partition-directory names (a handful of dates — driver-side
+    *    list, not data).
+    * 2. List the target's partition directories once (Hadoop FS, no
+    *    Spark job) and read ONLY the touched ones that exist; when none
+    *    exists no target data is read at all. The target schema the
+    *    updates conform to comes from one parquet footer, read on the
+    *    driver.
+    * 3. Merge the slice with the updates and write the result straight
+    *    to `path` with DYNAMIC partition overwrite, in one job: only the
+    *    touched partition directories are replaced; everything else on
+    *    disk is untouched bytes ([[Sinks.overwritePartitions]] says why
+    *    reading and replacing the same partitions in one job is safe).
     *
     * Daily cost is therefore proportional to the updated partitions,
     * not the table: the property that keeps a 100 TB mart's daily run
@@ -99,58 +112,73 @@ object Merge {
     * Precondition (same as any partitioned MERGE): a key's partition
     * value is stable — updates to a key arrive in the partition that
     * already holds it.
+    *
+    * @return the table's schema: its stored columns, then `partitionCol`
+    *         typed as in `updates`, so callers can read it back without
+    *         an inference job; None when `path` holds no table after the
+    *         call (empty updates against a missing target write
+    *         nothing).
     */
-  def mergeWrite(spark: org.apache.spark.sql.SparkSession, path: String,
+  def mergeWrite(spark: SparkSession, path: String,
                  updates: DataFrame, keys: Seq[String], partitionCol: String,
                  clusterCols: Seq[String] = Nil,
-                 versionCol: Option[String] = None): Unit = {
-    val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (touched.isEmpty) return
-    // NULL is a legal partition value (__HIVE_DEFAULT_PARTITION__) but
-    // isin() never matches it — without the explicit isNull branch the
-    // target's null-partition rows would be excluded from the merge
-    // and then dynamic-overwritten away: silent data loss.
-    val nonNull = touched.filter(_ != null)
-    val touchedPred = {
-      val base = if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*) else lit(false)
-      if (touched.contains(null)) base || col(partitionCol).isNull else base
-    }
-    // Existence is probed explicitly (Hadoop FS — works on HDFS/S3 too);
-    // a read failure on an EXISTING table must propagate, or the merge
-    // would silently replace touched partitions with updates-only.
-    val targetSlice =
-      if (graft.sources.Fs.exists(spark, path)) {
-        // Partition-directory names re-infer as the WRONG type for
-        // string values that look numeric ('00123' → int 123, which
-        // would rewrite into a different directory and duplicate every
-        // key). Read them uninferred (strings), then cast to the
-        // updates' declared type — deterministic for dates/ints,
-        // identity for strings.
-        val conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        val saved = spark.conf.get(conf)
-        val raw =
-          try { spark.conf.set(conf, "false"); spark.read.parquet(path) }
-          finally spark.conf.set(conf, saved)
-        raw.withColumn(partitionCol,
-          col(partitionCol).cast(updates.schema(partitionCol).dataType))
-          .filter(touchedPred)
-      } else updates.limit(0)
-    val merged = mergeInto(targetSlice, updates, keys, versionCol)
-    // Unique staging dir (never read-and-overwrite one path in a job):
-    // concurrent merges into the same target must not share a stage,
-    // and the stage is deleted after the commit — a fixed leftover
-    // sibling would double the touched partitions' storage forever.
-    val stage = path + "_merge_stage_" + java.util.UUID.randomUUID().toString
-    try {
-      Sinks.stagePartitioned(merged, stage, partitionCol, clusterCols)
-      spark.read.parquet(stage).write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-    } finally graft.sources.Fs.deleteRecursively(spark, stage)
+                 versionCol: Option[String] = None): Option[StructType] = {
+    // the string cast is the value Spark's writer names a partition
+    // directory after; NULL becomes __HIVE_DEFAULT_PARTITION__ (isin()
+    // never matches NULL, so a value-filtered read would drop the
+    // target's null-partition rows and overwrite them away)
+    val touched = updates.select(col(partitionCol).cast("string")).distinct()
+      .collect().map(r => Fs.partitionDirName(partitionCol, r.getString(0))).toSet
+    val dirs = Fs.partitionDirs(spark, path, partitionCol)
+    // a missing target is probed explicitly (Fs.partitionDirs); a read
+    // failure on an EXISTING table propagates, or the merge would
+    // silently replace touched partitions with updates-only
+    val target = storedSchema(spark, dirs, partitionCol).map(stored =>
+      readPartitions(spark, path, stored, dirs.filter(d => touched(d.getName)),
+        partitionCol, updates.schema(partitionCol).dataType))
+    val merged = mergeInto(target.getOrElse(updates.limit(0)), updates, keys, versionCol)
+    if (touched.nonEmpty)
+      Sinks.overwritePartitions(merged, path, partitionCol, clusterCols)
+    if (touched.isEmpty && target.isEmpty) None
+    else Some(StructType(merged.schema.filterNot(_.name == partitionCol) :+
+      merged.schema(partitionCol)))
   }
+
+  /** The row schema stored in `dirs`' parquet files, taken from one
+    * data file's footer (Spark writes it under
+    * `org.apache.spark.sql.parquet.row.metadata`; a file from another
+    * writer falls back to inferring that one file), with
+    * `partitionCol` appended as a STRING: partition-directory names
+    * re-infer as the WRONG type for string values that look numeric
+    * ('00123' → int 123, which would rewrite into a different
+    * directory and duplicate every key), so they are read uninferred
+    * and cast by [[readPartitions]]. None when no directory holds a
+    * data file. */
+  private def storedSchema(spark: SparkSession, dirs: Seq[Path],
+                           partitionCol: String): Option[StructType] =
+    dirs.iterator.flatMap(d => Fs.dataFiles(spark, d)).nextOption().map(_.getPath).map { file =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)
+        finally reader.close()
+      Option(json).map(j => DataType.fromJson(j).asInstanceOf[StructType])
+        .getOrElse(spark.read.parquet(file.toString).schema)
+        .add(partitionCol, StringType)
+    }
+
+  /** The rows of the partition directories `dirs` of the table at
+    * `path`, read with the known `stored` schema ([[Fs.readParquet]]:
+    * no inference or listing job), the partition column cast to
+    * `partitionType` — deterministic for dates/ints, identity for
+    * strings. No dirs → an empty frame and no read at all. */
+  private def readPartitions(spark: SparkSession, path: String,
+                             stored: StructType, dirs: Seq[Path],
+                             partitionCol: String,
+                             partitionType: DataType): DataFrame =
+    Fs.readParquet(spark, path, dirs, stored)
+      .withColumn(partitionCol, col(partitionCol).cast(partitionType))
 
   /** One [[deleteWrite]] run's outcome: partitions rewritten (still
     * holding survivors), partition directories removed outright
@@ -167,13 +195,14 @@ object Merge {
     *
     * Shape: one columnar probe scan (key + partition columns only —
     * column pruning makes this cheap) finds the affected partitions;
-    * those partitions re-read, anti-join the key set (broadcast — an
-    * erasure batch is small; for bulk deletes run several batches),
-    * and land via the staged dynamic overwrite [[mergeWrite]] uses.
-    * Dynamic overwrite only replaces partitions PRESENT in the
-    * written data, so a partition whose every row died would silently
-    * SURVIVE — exactly the failure an erasure tool cannot have; those
-    * directories are deleted explicitly (Hive-escaped names, NULL →
+    * only those partition directories are re-read, anti-join the key
+    * set (broadcast — an erasure batch is small; for bulk deletes run
+    * several batches), and land in place via the one-job dynamic
+    * overwrite [[mergeWrite]] uses. Dynamic overwrite only replaces
+    * partitions PRESENT in the written data, so a partition whose
+    * every row died would silently SURVIVE — exactly the failure an
+    * erasure tool cannot have; those directories are deleted
+    * explicitly (Hive-escaped names, NULL →
     * `__HIVE_DEFAULT_PARTITION__`), and the stats report them.
     *
     * Idempotent: re-running with the same keys finds no matches and
@@ -183,67 +212,40 @@ object Merge {
     * rewritten partitions' file names changed — [[Layout.zoneMapRead]]
     * refuses on it); rebuild it in one call with
     * [[Layout.zoneMapRebuild]]. */
-  def deleteWrite(spark: org.apache.spark.sql.SparkSession, path: String,
+  def deleteWrite(spark: SparkSession, path: String,
                   deleteKeys: DataFrame, keyCols: Seq[String],
                   partitionCol: String,
                   clusterCols: Seq[String] = Nil): DeleteStats = {
     require(keyCols.nonEmpty, "deleteWrite needs at least one key column")
     val keys = deleteKeys.select(keyCols.map(col): _*).distinct()
-    val conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val saved = spark.conf.get(conf)
-    val target =
-      try { spark.conf.set(conf, "false"); spark.read.parquet(path) }
-      finally spark.conf.set(conf, saved)
-    val touched = target
-      .join(broadcast(keys), keyCols, "left_semi")
-      .select(col(partitionCol)).distinct()
-      .collect().map(r => Option(r.get(0)).map(_.toString).orNull).toSeq
     // partition census from the DIRECTORY LISTING, not a second table
     // scan — the same metadata the emptied-directory deletion below
-    // relies on; the one probe scan above is the only data read
-    val nParts = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).count(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"$partitionCol="))
-        .toLong
-    }
-    if (touched.isEmpty) return DeleteStats(Nil, Nil, nParts)
-    val nonNull = touched.filter(_ != null)
-    val touchedPred = {
-      val base =
-        if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*)
-        else lit(false)
-      if (touched.contains(null)) base || col(partitionCol).isNull else base
-    }
-    val kept = target.filter(touchedPred)
+    // relies on; the one probe scan is the only full data read
+    val dirs = Fs.partitionDirs(spark, path, partitionCol)
+    val stored = storedSchema(spark, dirs, partitionCol).getOrElse(
+      throw new IllegalArgumentException(s"deleteWrite: no table at $path"))
+    val touched = readPartitions(spark, path, stored, dirs, partitionCol, StringType)
+      .join(broadcast(keys), keyCols, "left_semi")
+      .select(col(partitionCol)).distinct()
+      .collect().map(_.getString(0)).toSeq
+    if (touched.isEmpty) return DeleteStats(Nil, Nil, dirs.size.toLong)
+    val touchedDirs = touched.map(Fs.partitionDirName(partitionCol, _)).toSet
+    val kept = readPartitions(spark, path, stored,
+        dirs.filter(d => touchedDirs(d.getName)), partitionCol, StringType)
       .join(broadcast(keys), keyCols, "left_anti")
+    // read before the overwrite replaces the files `kept` lists
     val keptParts = kept.select(col(partitionCol)).distinct()
-      .collect().map(r => Option(r.get(0)).map(_.toString).orNull).toSet
-    if (keptParts.nonEmpty) {
-      val stage = path + "_delete_stage_" + java.util.UUID.randomUUID().toString
-      try {
-        Sinks.stagePartitioned(kept, stage, partitionCol, clusterCols)
-        spark.read.parquet(stage).write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol)
-          .parquet(path)
-      } finally graft.sources.Fs.deleteRecursively(spark, stage)
-    }
+      .collect().map(_.getString(0)).toSet
+    if (keptParts.nonEmpty)
+      Sinks.overwritePartitions(kept, path, partitionCol, clusterCols)
     // partitions whose every row died: dynamic overwrite never saw
     // them — remove their directories explicitly
     val emptied = touched.filterNot(keptParts)
-    val hive = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    emptied.foreach { v =>
-      val dirName =
-        if (v == null) s"$partitionCol=__HIVE_DEFAULT_PARTITION__"
-        else s"$partitionCol=${hive.escapePathName(v)}"
-      graft.sources.Fs.deleteRecursively(spark, s"$path/$dirName")
-    }
+    emptied.foreach(v =>
+      Fs.deleteRecursively(spark, s"$path/${Fs.partitionDirName(partitionCol, v)}"))
     def nsort(xs: Seq[String]) = xs.sortBy(Option(_).getOrElse(""))
     DeleteStats(nsort(touched.filter(keptParts)), nsort(emptied),
-      nParts - touched.size)
+      dirs.size - touched.size)
   }
 }
 
@@ -258,6 +260,27 @@ object Incremental {
   def highWaterMark(df: DataFrame, c: String): Option[Any] = {
     val r = df.agg(max(col(c)).as("hwm")).head()
     if (r.isNullAt(0)) None else Some(r.get(0))
+  }
+
+  /** [[highWaterMark]] of a table's own partition column, read from
+    * its directory listing instead of a scan: the greatest value, typed
+    * as `dataType`, among the `partitionCol=value` directories at
+    * `path` that hold a data file. NULL's directory never is the max;
+    * None for a missing or empty table, as for an empty scan. No Spark
+    * job. */
+  def partitionHighWaterMark(spark: SparkSession, path: String,
+                             partitionCol: String, dataType: DataType): Option[Any] = {
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val prefix = s"$partitionCol="
+    val typed = Fs.partitionDirs(spark, path, partitionCol).flatMap { dir =>
+      val raw = dir.getName.stripPrefix(prefix)
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
+      else Some(Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)),
+        dataType, Some(tz)).eval() -> dir)
+    }
+    typed.sortBy(_._1)(PhysicalDataType.ordering(dataType).reverse)
+      .collectFirst { case (v, dir) if Fs.dataFiles(spark, dir).nonEmpty =>
+        CatalystTypeConverters.convertToScala(v, dataType) }
   }
 
   /** Keep only rows strictly above the target's high-water mark —

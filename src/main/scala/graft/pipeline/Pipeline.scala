@@ -4,8 +4,10 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Incremental, Merge}
+import graft.sources.Fs
 
 /** End-to-end pipeline runner: the Airflow DAG + dbt layer ordering
   * (reference: stripe_update_dag.py:17-42, strict staging → curated →
@@ -37,39 +39,57 @@ class Pipeline(
 
   private def path(name: String) = s"$warehouseDir/$name"
 
-  // only genuine absence reads as empty; IO errors on an existing
-  // table propagate (graft.sources.Fs scaladoc)
-  private def tableOrEmpty(name: String, like: DataFrame): DataFrame =
-    if (graft.sources.Fs.exists(spark, path(name))) spark.read.parquet(path(name))
-    else like.limit(0)
-
-  /** Merge-materialize `updates` into the named table by `keys`,
-    * date-partitioned on `partitionCol` (the reference's partition_by
-    * on every incremental model, §1.4). Merge.mergeWrite prunes the
-    * target read to the touched partitions and dynamic-overwrites only
-    * those directories — daily cost is O(updated partitions), not
-    * O(table). Failures invoke the alerting callback (the reference's
-    * on_failure_callback, stripe_update_dag.py:25-37) then propagate —
-    * the DAG stops at the failed layer like Airflow would. */
-  private def materialize(name: String, updates: DataFrame,
-                          keys: Seq[String], partitionCol: String,
-                          clusterCols: Seq[String] = Nil): DataFrame =
+  /** Merge-materialize the named table by `keys`, date-partitioned on
+    * `partitionCol` (the reference's partition_by on every incremental
+    * model, §1.4), and return it read back with the schema the merge
+    * wrote (no inference or listing job).
+    *
+    * `updates` builds the table's input from its high-water mark on
+    * `hwmCol` (None on a full refresh or an empty table); rows at or
+    * below the mark are then dropped. A mark on the partition column
+    * itself comes from the directory listing, any other from a
+    * `MAX(hwmCol)` scan of that one column.
+    *
+    * Merge.mergeWrite prunes the target read to the touched partitions
+    * and dynamic-overwrites only those directories — daily cost is
+    * O(updated partitions), not O(table). Failures invoke the alerting
+    * callback (the reference's on_failure_callback,
+    * stripe_update_dag.py:25-37) then propagate — the DAG stops at the
+    * failed layer like Airflow would. */
+  private def materialize(name: String, keys: Seq[String], partitionCol: String,
+                          hwmCol: String, clusterCols: Seq[String] = Nil)(
+                          updates: Option[Any] => DataFrame): DataFrame =
     try {
-      Merge.mergeWrite(spark, path(name), updates, keys, partitionCol,
-        clusterCols, versionCol = Some("_loaded_at"))
-      // empty updates against a missing table write nothing — hand the
-      // (empty, schema-correct) frame downstream instead of a dead path
-      if (graft.sources.Fs.exists(spark, path(name))) spark.read.parquet(path(name))
-      else updates.limit(0)
+      val all = updates(None)
+      val hwmField = all.schema(hwmCol)
+      def dirs = Fs.partitionDirs(spark, path(name), partitionCol)
+      val hwm =
+        if (fullRefresh) None
+        else if (hwmCol == partitionCol)
+          Incremental.partitionHighWaterMark(spark, path(name), partitionCol, hwmField.dataType)
+        else {
+          // a missing table has no mark; IO errors on an existing table
+          // propagate (graft.sources.Fs scaladoc)
+          val existing = dirs
+          if (existing.isEmpty) None
+          else Incremental.highWaterMark(
+            Fs.readParquet(spark, path(name), existing, StructType(Seq(hwmField))), hwmCol)
+        }
+      val fresh = hwm.fold(all)(h => updates(hwm).filter(col(hwmCol) > lit(h)))
+      Merge.mergeWrite(spark, path(name), fresh, keys, partitionCol,
+        clusterCols, versionCol = Some("_loaded_at")) match {
+        case Some(written) => Fs.readParquet(spark, path(name), dirs, written)
+        // empty updates against a missing table write nothing — hand the
+        // (empty, schema-correct) frame downstream instead of a dead path
+        case None => fresh.limit(0)
+      }
     } catch { case e: Throwable => onFailure(name, e); throw e }
 
-  private def withHwm(updates: DataFrame, tableName: String,
-                      hwmCol: String): DataFrame =
-    if (fullRefresh) updates
-    else {
-      val target = tableOrEmpty(tableName, updates)
-      Incremental.newerThan(updates, target, hwmCol)
-    }
+  /** Full rebuild of a dimension table, read back with its known schema. */
+  private def rebuild(name: String, df: DataFrame): DataFrame = {
+    df.write.mode("overwrite").parquet(path(name))
+    spark.read.schema(df.schema).parquet(path(name))
+  }
 
   /** Run the full DAG from raw source frames. Returns the mart
     * frames. Dimension tables are full rebuilds (reference:
@@ -78,56 +98,42 @@ class Pipeline(
   def run(rawInvoices: DataFrame,
           rawSubscriptions: DataFrame,
           rawSubscriptionUpdates: DataFrame): Map[String, DataFrame] = {
+    def staged(raw: DataFrame) = Models.staged(raw).withColumn("_loaded_at", loadedAt)
 
     // ---- staging (stg_* : unique key id, HWM on created_at_date)
-    val stgInvoices = materialize("stg_invoices",
-      withHwm(Models.staged(rawInvoices).withColumn("_loaded_at", loadedAt),
-        "stg_invoices", "created_at_date"),
-      Seq("id"), "created_at_date")
-    val stgSubscriptions = materialize("stg_subscriptions",
-      withHwm(Models.staged(rawSubscriptions).withColumn("_loaded_at", loadedAt),
-        "stg_subscriptions", "created_at_date"),
-      Seq("id"), "created_at_date")
-    val stgSubscriptionUpdates = materialize("stg_subscription_updates",
-      withHwm(Models.staged(rawSubscriptionUpdates).withColumn("_loaded_at", loadedAt),
-        "stg_subscription_updates", "created_at_date"),
-      Seq("id"), "created_at_date")
+    val stgInvoices = materialize("stg_invoices", Seq("id"),
+      "created_at_date", "created_at_date")(_ => staged(rawInvoices))
+    val stgSubscriptions = materialize("stg_subscriptions", Seq("id"),
+      "created_at_date", "created_at_date")(_ => staged(rawSubscriptions))
+    val stgSubscriptionUpdates = materialize("stg_subscription_updates", Seq("id"),
+      "created_at_date", "created_at_date")(_ => staged(rawSubscriptionUpdates))
 
     // ---- dims (full rebuild)
-    val exchangeRates = Models.exchangeRates(spark, asOf)
-    exchangeRates.write.mode("overwrite").parquet(path("exchange_rates"))
-    val calendar = Models.calendar(spark, asOf)
-    calendar.write.mode("overwrite").parquet(path("calendar"))
+    val fx = rebuild("exchange_rates", Models.exchangeRates(spark, asOf))
+    val calendar = rebuild("calendar", Models.calendar(spark, asOf))
 
     // ---- curated (HWM on created_at_date / invoice_created_date)
-    val invoices = materialize("invoices",
-      withHwm(Models.invoices(stgInvoices, loadedAt), "invoices", "created_at_date"),
-      Seq("invoice_id"), "created_at_date", Seq("customer_id"))
-    val lineItems = materialize("invoice_line_items",
-      withHwm(Models.invoiceLineItems(stgInvoices, loadedAt),
-        "invoice_line_items", "invoice_created_date"),
-      Seq("line_item_id"), "invoice_created_date",
-      Seq("invoice_id", "subscription_id"))
+    val invoices = materialize("invoices", Seq("invoice_id"),
+      "created_at_date", "created_at_date", Seq("customer_id"))(
+      _ => Models.invoices(stgInvoices, loadedAt))
+    val lineItems = materialize("invoice_line_items", Seq("line_item_id"),
+      "invoice_created_date", "invoice_created_date", Seq("invoice_id", "subscription_id"))(
+      _ => Models.invoiceLineItems(stgInvoices, loadedAt))
 
     // ---- marts (composite keys; HWM on invoice_created_at)
-    val fx = spark.read.parquet(path("exchange_rates"))
-    val deferred = materialize("deferred_revenue",
-      withHwm(Models.deferredRevenue(lineItems, fx, loadedAt),
-        "deferred_revenue", "invoice_created_at"),
-      Seq("line_item_id", "as_of_date"), "as_of_date",
-      Seq("customer_id", "subscription_id"))
-    val recognized = materialize("recognized_revenue",
-      withHwm(Models.recognizedRevenue(lineItems, fx, loadedAt),
-        "recognized_revenue", "invoice_created_at"),
-      Seq("line_item_id", "recognition_date"), "recognition_date",
-      Seq("customer_id", "line_item_id"))
+    val deferred = materialize("deferred_revenue", Seq("line_item_id", "as_of_date"),
+      "as_of_date", "invoice_created_at", Seq("customer_id", "subscription_id"))(
+      hwm => Models.deferredRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))
+    val recognized = materialize("recognized_revenue", Seq("line_item_id", "recognition_date"),
+      "recognition_date", "invoice_created_at", Seq("customer_id", "line_item_id"))(
+      hwm => Models.recognizedRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))
 
     val out = Map(
       "stg_invoices" -> stgInvoices,
       "stg_subscriptions" -> stgSubscriptions,
       "stg_subscription_updates" -> stgSubscriptionUpdates,
       "exchange_rates" -> fx,
-      "calendar" -> spark.read.parquet(path("calendar")),
+      "calendar" -> calendar,
       "invoices" -> invoices,
       "invoice_line_items" -> lineItems,
       "deferred_revenue" -> deferred,
@@ -137,6 +143,19 @@ class Pipeline(
     out.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     out
   }
+}
+
+object Pipeline {
+
+  /** The line items a mart's `invoice_created_at > hwm` filter can keep,
+    * selected by a filter on their partition column so the scan prunes
+    * every older partition instead of re-expanding all line items ever
+    * loaded. invoice_created_date is invoice_created_at's date in the
+    * session zone of the run that staged it; the one day of slack
+    * covers a run in a different zone. */
+  private[pipeline] def martInput(lineItems: DataFrame, hwm: Option[Any]): DataFrame =
+    hwm.fold(lineItems)(h =>
+      lineItems.filter(col("invoice_created_date") >= date_sub(to_date(lit(h)), 1)))
 }
 
 /** The four analyst queries the reference documents against the marts

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions.col
 
 /** Write-side layout helpers: the reference's `partition_by` +
@@ -17,41 +17,53 @@ import org.apache.spark.sql.functions.col
   */
 object Sinks {
 
+  private val MaxRecordsPerFile = 5_000_000L
+
   /** The shared partition+cluster layout step: co-locate each
     * partition value, sort rows by the cluster keys, cap file size.
-    * Both the snapshot write below and Merge.mergeWrite's staging
-    * route through here so the layout policy (including the
+    * The snapshot write and the partition overwrite below (the one
+    * write of Merge.mergeWrite and Merge.deleteWrite) both route
+    * through here so the layout policy (including the
     * maxRecordsPerFile guard against one multi-GB file per hot
     * partition) lives in exactly one place. */
-  private[graft] def clustered(df: DataFrame, partitionCol: String,
-                               clusterCols: Seq[String]): DataFrame =
-    if (clusterCols.nonEmpty)
-      df.repartition(col(partitionCol))
-        .sortWithinPartitions((partitionCol +: clusterCols).map(col): _*)
-    else df
+  private def partitionedWriter(df: DataFrame, partitionCol: String,
+                                clusterCols: Seq[String],
+                                maxRecordsPerFile: Long): DataFrameWriter[Row] = {
+    val laid =
+      if (clusterCols.nonEmpty)
+        df.repartition(col(partitionCol))
+          .sortWithinPartitions((partitionCol +: clusterCols).map(col): _*)
+      else df
+    laid.write
+      .mode("overwrite")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy(partitionCol)
+  }
 
   /** Overwrite `df` at `path` partitioned by `partitionCol`, rows
     * sorted within each file by `clusterCols`. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,
                        clusterCols: Seq[String] = Nil,
-                       maxRecordsPerFile: Long = 5_000_000L): Unit =
-    clustered(df, partitionCol, clusterCols).write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCol)
-      .parquet(path)
+                       maxRecordsPerFile: Long = MaxRecordsPerFile): Unit =
+    partitionedWriter(df, partitionCol, clusterCols, maxRecordsPerFile).parquet(path)
 
-  /** Stage a merge result: same clustering + file-size policy as
-    * writePartitioned, written flat (the dynamic-overwrite commit
-    * re-partitions on the way into the target). */
-  private[graft] def stagePartitioned(df: DataFrame, stagePath: String,
-                                      partitionCol: String,
-                                      clusterCols: Seq[String],
-                                      maxRecordsPerFile: Long = 5_000_000L): Unit =
-    clustered(df, partitionCol, clusterCols).write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(stagePath)
+  /** Replace only the partitions of `path` that `df` holds rows for
+    * (dynamic partition overwrite), same layout as writePartitioned;
+    * every other partition directory keeps its files.
+    *
+    * `df` may read the very partitions it replaces: Spark's commit
+    * protocol writes the job's files under
+    * `path/.spark-staging-<jobId>` and swaps the touched directories
+    * in at job commit, after every task has finished reading. A
+    * failed job aborts and deletes that staging dir, leaving `path`
+    * as it was (MergeSpec "a mergeWrite whose write job fails leaves
+    * the target unchanged"). */
+  private[graft] def overwritePartitions(df: DataFrame, path: String,
+                                         partitionCol: String,
+                                         clusterCols: Seq[String]): Unit =
+    partitionedWriter(df, partitionCol, clusterCols, MaxRecordsPerFile)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
 
   /** NDJSON snapshot sink — the raw-zone overwrite write (reference:
     * extract_stripe_data.py:105-116, full overwrite per run,

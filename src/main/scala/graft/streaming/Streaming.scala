@@ -257,6 +257,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Merge.mergeWrite(spark, targetPath, batch, keys, partitionCol,
           clusterCols, versionCol)
+        ()
       }
       .start()
 

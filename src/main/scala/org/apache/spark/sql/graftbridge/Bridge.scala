@@ -148,4 +148,34 @@ object Bridge {
     column(org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       c.queryExecution.analyzed))
   }
+
+  /** A parquet read over files the caller has already listed: `dirs`
+    * are directories under `basePath`, each with its data files, read
+    * with the known `schema` the way `spark.read.schema(schema)
+    * .option("basePath", basePath).parquet(dirs...)` reads them, but
+    * without Spark listing them again. Spark's own listing runs a Spark
+    * job whenever a read names more directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`. The
+    * listing is handed to the file index as a pre-filled status cache;
+    * a refresh of the index drops it and lists afresh. */
+  def listedParquet(spark: org.apache.spark.sql.SparkSession, basePath: String,
+                    dirs: Seq[(org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus])],
+                    schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val cache = new FileStatusCache {
+      @volatile private var listed = dirs.toMap
+      override def getLeafFiles(path: org.apache.hadoop.fs.Path) = listed.get(path)
+      override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+                                files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = listed = Map.empty
+    }
+    val index = new InMemoryFileIndex(spark, dirs.map(_._1), Map("basePath" -> basePath),
+      Some(schema), cache)
+    val partitionSchema = index.partitionSchema
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.filterNot(f => partitionSchema.exists(_.name == f.name)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructType}
 
 class MergeSpec extends SparkSpecBase {
   import spark.implicits._
@@ -183,8 +184,103 @@ class MergeSpec extends SparkSpecBase {
     val dir = parent + "/t"
     Merge.mergeWrite(spark, dir,
       Seq((1L, "2024-01-01", "a")).toDF("id", "day", "v"), Seq("id"), "day")
-    val leftovers = new java.io.File(parent).listFiles()
-      .map(_.getName).filter(_.contains("_merge_stage"))
-    assert(leftovers.isEmpty, leftovers.mkString(","))
+    // a second merge reads and replaces the partition the first wrote
+    Merge.mergeWrite(spark, dir,
+      Seq((1L, "2024-01-01", "a2"), (2L, "2024-01-02", "b")).toDF("id", "day", "v"),
+      Seq("id"), "day")
+    assert(stagingDirs(parent, dir).isEmpty, stagingDirs(parent, dir).mkString(","))
+    assert(spark.read.parquet(dir).select("id", "v").as[(Long, String)]
+      .collect().toSet === Set((1L, "a2"), (2L, "b")))
+  }
+
+  /** Staging leftovers: Spark's `.spark-staging-*` in the table, a
+    * `_merge_stage_*` sibling next to it. */
+  private def stagingDirs(parent: String, dir: String): Seq[String] =
+    new java.io.File(parent).listFiles().map(_.getName).filter(_.contains("_merge_stage")).toSeq ++
+      new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith(".spark-staging"))
+
+  /** Every partition file of the table: path under `dir` → mtime. */
+  private def tableFiles(dir: String): Map[String, Long] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).toSeq
+      .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => s"${d.getName}/${f.getName}" -> f.lastModified())).toMap
+
+  test("a mergeWrite whose write job fails leaves the target unchanged") {
+    val parent = java.nio.file.Files.createTempDirectory("graft-merge-crash").toString
+    val dir = parent + "/t"
+    Merge.mergeWrite(spark, dir,
+      Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")).toDF("id", "day", "v"),
+      Seq("id"), "day")
+    val before = tableFiles(dir)
+    val rowsBefore = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    // the value column fails only when the write job computes it: the
+    // touched-partition probe selects `day` alone and never runs it
+    val boom = udf((v: String) =>
+      if (v == "boom") throw new IllegalStateException("injected") else v)
+    val updates = Seq((2L, "2024-01-02", "b2"), (3L, "2024-01-03", "boom"))
+      .toDF("id", "day", "v").withColumn("v", boom($"v"))
+    intercept[Exception](Merge.mergeWrite(spark, dir, updates, Seq("id"), "day"))
+    assert(tableFiles(dir) === before)
+    assert(!new java.io.File(s"$dir/day=2024-01-03").exists())
+    assert(stagingDirs(parent, dir).isEmpty, stagingDirs(parent, dir).mkString(","))
+    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq === rowsBefore)
+  }
+
+  private def columns(schema: StructType): Seq[(String, DataType)] =
+    schema.map(f => f.name -> f.dataType)
+
+  test("mergeWrite conforms updates to the stored schema, overlapping or not") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-conform").toString + "/t"
+    Merge.mergeWrite(spark, dir,
+      Seq((1L, "2024-01-01", "a")).toDF("id", "day", "v"), Seq("id"), "day")
+    // overlapping (reads the target slice) and new-partitions-only
+    // (reads no target data: the schema comes from a file footer)
+    for ((day, id) <- Seq("2024-01-01" -> 2L, "2024-01-09" -> 4L)) {
+      val extra = Seq((id, day, "b", 9.0)).toDF("id", "day", "v", "extra")
+      val written = Merge.mergeWrite(spark, dir, extra, Seq("id"), "day")
+      assert(spark.read.parquet(dir).columns.toSeq === Seq("id", "v", "day"), day)
+      assert(written.map(columns) === Some(Seq(
+        "id" -> LongType, "v" -> StringType, "day" -> StringType)), day)
+      val before = tableFiles(dir)
+      intercept[org.apache.spark.sql.AnalysisException](Merge.mergeWrite(spark, dir,
+        Seq((3L, day)).toDF("id", "day"), Seq("id"), "day"))
+      assert(tableFiles(dir) === before, day)
+    }
+    assert(spark.read.parquet(dir).select("id", "day").as[(Long, String)].collect().toSet ===
+      Set((1L, "2024-01-01"), (2L, "2024-01-01"), (4L, "2024-01-09")))
+  }
+
+  test("mergeWrite returns None and writes nothing for empty updates on a missing table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-empty").toString + "/t"
+    val empty = Seq.empty[(Long, String, String)].toDF("id", "day", "v")
+    assert(Merge.mergeWrite(spark, dir, empty, Seq("id"), "day").isEmpty)
+    assert(!new java.io.File(dir).exists())
+    Merge.mergeWrite(spark, dir, Seq((1L, "2024-01-01", "a")).toDF("id", "day", "v"),
+      Seq("id"), "day")
+    assert(Merge.mergeWrite(spark, dir, empty, Seq("id"), "day").map(columns) === Some(Seq(
+      "id" -> LongType, "v" -> StringType, "day" -> StringType)))
+  }
+
+  test("partitionHighWaterMark equals highWaterMark: missing, empty, NULL partition") {
+    val root = java.nio.file.Files.createTempDirectory("graft-hwm").toString
+    def both(dir: String): (Option[Any], Option[Any]) = {
+      val scanned =
+        if (!graft.sources.Fs.exists(spark, dir)) None
+        else Incremental.highWaterMark(spark.read.parquet(dir), "day")
+      (Incremental.partitionHighWaterMark(spark, dir, "day", DateType), scanned)
+    }
+    assert(both(s"$root/missing") === ((None, None)))
+    val t = s"$root/t"
+    Seq((1L, Some("2024-01-02")), (2L, None: Option[String]), (3L, Some("2024-01-10")))
+      .toDF("id", "day").withColumn("day", to_date($"day"))
+      .write.partitionBy("day").parquet(t)
+    // a partition directory without a data file is not a value
+    new java.io.File(s"$t/day=2024-02-01").mkdirs()
+    val (listed, scanned) = both(t)
+    assert(listed === scanned)
+    assert(listed.contains(java.sql.Date.valueOf("2024-01-10")))
+    // only the NULL partition left: no high-water mark on either side
+    Merge.deleteWrite(spark, t, Seq(1L, 3L).toDF("id"), Seq("id"), "day")
+    assert(both(t) === ((None, None)))
   }
 }

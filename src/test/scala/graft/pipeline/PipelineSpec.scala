@@ -249,4 +249,138 @@ class PipelineSpec extends SparkSpecBase {
       assert(after === snap, s"table $t changed across rerun")
     }
   }
+
+  // ---- day over day: two incremental days against one full refresh
+
+  private val day1 = LocalDate.of(2024, 1, 10)
+  private val day2 = LocalDate.of(2024, 1, 12)
+  // epoch seconds for 2024-01-12 / 2024-02-11 00:00 UTC
+  private val jan12 = 1705017600L
+  private val feb11 = 1707609600L
+
+  // day 2's new invoices: a GBP line over a 30-day period and a second
+  // line item of a USD invoice with a null period end
+  private def day2Json: Seq[String] = Seq(
+    s"""{"id":"inv4","customer":"cus4","subscription":"sub4","status":"paid","currency":"GBP","created":$jan12,
+        "amount_due":3000,"amount_paid":3000,"amount_remaining":0,"subtotal":3000,"total":3000,"tax":0,
+        "collection_method":"charge_automatically","period_start":$jan12,"period_end":$feb11,
+        "automatic_tax":{"enabled":false,"status":null},"metadata":{},
+        "lines":{"data":[
+          {"id":"li5","type":"subscription","description":"monthly","amount":3000,"currency":"GBP","quantity":1,
+           "subscription":null,"period":{"start":$jan12,"end":$feb11},"taxes":[],"metadata":{}}
+        ]}}""".linesIterator.map(_.trim).mkString(""),
+    s"""{"id":"inv5","customer":"cus1","subscription":"sub1","status":"paid","currency":"USD","created":$jan12,
+        "amount_due":700,"amount_paid":700,"amount_remaining":0,"subtotal":700,"total":700,"tax":0,
+        "collection_method":"send_invoice","period_start":$jan12,"period_end":null,
+        "automatic_tax":{"enabled":false,"status":null},"metadata":{},
+        "lines":{"data":[
+          {"id":"li6","type":"invoiceitem","description":"extra","amount":700,"currency":"USD","quantity":1,
+           "subscription":null,"period":{"start":$jan12,"end":null},
+           "taxes":[{"amount":70,"tax_behavior":"inclusive"}],"metadata":{}}
+        ]}}""".linesIterator.map(_.trim).mkString(""))
+
+  private def json(schema: org.apache.spark.sql.types.StructType, rows: Seq[String]) =
+    spark.read.schema(schema).json(spark.createDataset(rows))
+  private def raw(day: Int) = day match {
+    case 1 => Seq(rawInvoices,
+      json(Schemas.subscriptionSchema, Seq(
+        s"""{"id":"sub1","customer":"cus1","status":"active","created":$jan10,""" +
+          s""""current_period_start":$jan01,"current_period_end":$jan31}""")),
+      json(Schemas.subscriptionUpdateSchema, Seq(
+        s"""{"id":"evt1","type":"customer.subscription.updated","created":$jan10}""")))
+    case 2 => Seq(json(Schemas.invoiceSchema, day2Json),
+      json(Schemas.subscriptionSchema, Seq(
+        s"""{"id":"sub4","customer":"cus4","status":"active","created":$jan12,""" +
+          s""""current_period_start":$jan12,"current_period_end":$feb11}""")),
+      json(Schemas.subscriptionUpdateSchema, Seq(
+        s"""{"id":"evt2","type":"customer.subscription.updated","created":$jan12}""")))
+  }
+  private def runDay(dir: String, asOf: LocalDate, fullRefresh: Boolean,
+                     inputs: Seq[DataFrame]): Map[String, DataFrame] =
+    new Pipeline(spark, dir, asOf, fullRefresh).run(inputs(0), inputs(1), inputs(2))
+
+  /** Day 1 then day 2 incrementally into one warehouse, and the Spark
+    * jobs the day-2 run started (listener bus drained on both sides). */
+  private lazy val incremental: (String, Map[String, DataFrame], Int) = {
+    val dir = Files.createTempDirectory("graft-wh-days").toString
+    runDay(dir, day1, fullRefresh = false, raw(1))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        val t = runDay(dir, day2, fullRefresh = false, raw(2))
+        org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(sc)
+        t
+      } finally sc.removeSparkListener(listener)
+    (dir, out, jobs.get)
+  }
+
+  private val tableNames = Seq("stg_invoices", "stg_subscriptions", "stg_subscription_updates",
+    "exchange_rates", "calendar", "invoices", "invoice_line_items",
+    "deferred_revenue", "recognized_revenue")
+
+  test("day over day: two incremental days equal one full refresh of both days") {
+    val (dir, days, _) = incremental
+    val fullDir = Files.createTempDirectory("graft-wh-full").toString
+    val full = runDay(fullDir, day2, fullRefresh = true,
+      raw(1).zip(raw(2)).map { case (a, b) => a.unionByName(b) })
+    assert(days.keySet === tableNames.toSet)
+    def rows(df: DataFrame) = df.drop("_loaded_at").collect().map(_.toString).sorted.toSeq
+    for (t <- tableNames) {
+      assert(rows(days(t)) === rows(full(t)), s"table $t")
+      // the returned frame carries the schema inference would give
+      assert(days(t).schema === spark.read.parquet(s"$dir/$t").schema, s"table $t")
+    }
+    assert(days("deferred_revenue").select("line_item_id").distinct()
+      .as[String].collect().toSet === Set("li1", "li2", "li3", "li5", "li6"))
+    // the partition-column high-water marks come from the listing
+    for ((t, c) <- Seq("stg_invoices" -> "created_at_date",
+        "invoice_line_items" -> "invoice_created_date"))
+      assert(graft.operators.Incremental.partitionHighWaterMark(
+        spark, s"$dir/$t", c, org.apache.spark.sql.types.DateType) ===
+        graft.operators.Incremental.highWaterMark(spark.read.parquet(s"$dir/$t"), c))
+  }
+
+  private def ts(day: String) =
+    java.sql.Timestamp.from(java.time.Instant.parse(s"${day}T00:00:00Z"))
+
+  test("marts read only the line-item partitions their high-water mark can keep") {
+    val (dir, _, _) = incremental
+    val li = spark.read.parquet(s"$dir/invoice_line_items")
+    val fx = spark.read.parquet(s"$dir/exchange_rates")
+    // day 1's mark, as the day-2 run saw it
+    val hwm = Some(ts("2024-01-10"))
+    val pruned = Pipeline.martInput(li, hwm)
+    val scans = pruned.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size === 1)
+    assert(scans.head.partitionFilters.exists(
+      _.references.exists(_.name == "invoice_created_date")),
+      scans.head.partitionFilters.mkString(","))
+    // one day of slack below the mark's date: 2024-01-09 on, so both days
+    assert(pruned.select("invoice_created_date").distinct().count() === 2)
+    assert(Pipeline.martInput(li, Some(ts("2024-01-12")))
+      .select("line_item_id").as[String].collect().toSet === Set("li5", "li6"))
+    // and the mart rows past the mark are those of the unpruned input
+    val later = Some(ts("2024-01-11"))
+    def mart(input: DataFrame) = Models.deferredRevenue(input, fx, lit(0L))
+      .filter($"invoice_created_at" > lit(later.get))
+      .collect().map(_.toString).sorted.toSeq
+    assert(mart(Pipeline.martInput(li, later)) === mart(li))
+  }
+
+  test("job budget: the fixture's second-day incremental run") {
+    // a count, not a timing, so host speed cannot hide growth; set
+    // from the 43 jobs this run takes with this suite's session
+    // (local[4], 4 shuffle partitions)
+    val budget = 43
+    val (_, _, jobs) = incremental
+    assert(jobs <= budget, s"day-2 Pipeline.run started $jobs Spark jobs (budget $budget)")
+  }
 }
