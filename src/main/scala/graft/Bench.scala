@@ -246,9 +246,9 @@ object Bench {
       }
       var cands: org.apache.spark.sql.DataFrame = null
       val tLsh = timed {
-        cands = Dedup.minHashLsh(docs, "doc_id", "text",
+        cands = Dedup.lshPairs(docs, "doc_id", "text", Dedup.MinHash(
           numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-          maxBucket = 10000, blockCol = Some("source")).localCheckpoint(true)
+          maxBucket = 10000, blockCol = Some("source"))).localCheckpoint(true)
       }
       var pairs: org.apache.spark.sql.DataFrame = null
       val tVerify = timed {
@@ -341,7 +341,7 @@ object Bench {
     // SF-slope flags — the cost-model tripwire: time growing faster
     // than ~3× linear in the data ratio means a quadratic-ish term
     // (e.g. LSH's Σ|bucket|² when clique sizes grow with the corpus —
-    // see Dedup.minHashLsh's cost model) dominates. Flagged loudly in
+    // see Dedup.lshPairs' cost model) dominates. Flagged loudly in
     // the stats file and on stderr so a breach surfaces as a NAMED
     // query, never as a mystery headline total; not a hard failure
     // because single-sample sf2 slopes carry the host's ±30% noise.

@@ -106,9 +106,9 @@ object CorpusDemo {
     // ---- near dedup: banded LSH candidates → exact Jaccard verify →
     //      connected components; keep each cluster's min id
     val pairs = Dedup.ngramJaccardVerify(exact,
-      Dedup.minHashLsh(exact, "doc_id", "text", numHashes = 64, bands = 32,
-        shingleK = 1, threshold = 0.0, maxBucket = 10000,
-        blockCol = Some("source")),
+      Dedup.lshPairs(exact, "doc_id", "text", Dedup.MinHash(numHashes = 64,
+        bands = 32, shingleK = 1, threshold = 0.0, maxBucket = 10000,
+        blockCol = Some("source"))),
       "doc_id", "text", k = 1, threshold = 0.5)
     val labels = staged("near_dedup_cc")(barrier(Dedup.connectedComponents(pairs)))
     val near = staged("near_dedup_filter")(barrier(exact.join(
@@ -452,10 +452,11 @@ object CorpusDemo {
       b1.select("doc_id", "text").write.parquet(s"$srcDir/b1")
       def drain(): Unit = {
         val schema = spark.read.parquet(s"$srcDir/b1").schema
-        graft.streaming.Streaming.nearDupTextIngestSink(
+        graft.streaming.Streaming.nearDupIngestSink(
           graft.streaming.Streaming.fileStream(spark, schema,
             s"$srcDir/*"),
-          spark, streamCorpus, streamBandsRoot, "doc_id", "text", ckp)
+          spark, streamCorpus, streamBandsRoot, "doc_id", "text", ckp,
+          Dedup.MinHash(threshold = 0.0))
           .awaitTermination()
       }
       drain()
@@ -584,7 +585,7 @@ object CorpusDemo {
         // streamed slice by construction), the stream corpus by the
         // q160 table-level delete — the RTBF audit below covers the
         // band store like every other store in the tree
-        Dedup.minHashBandIndexErase(spark, streamBandsRoot, victims)
+        Dedup.bandIndexErase(spark, streamBandsRoot, victims)
         Merge.deleteWrite(spark, streamCorpus, victims,
           Seq("doc_id"), "_epoch")
         // certify: ONE verification sweep over the whole store tree —

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * bucket, followed by the exact filter. Cost: one hash shuffle per
   * side on the bucket key + 3× left replication — output-proportional
   * like every banding scheme in this engine, and the same pattern as
-  * minHashLsh (candidates by construction ⊇ matches, exact predicate
+  * Dedup.lshPairs (candidates by construction ⊇ matches, exact predicate
   * owns the final cut).
   *
   * Skew note: a value concentration at one bucket behaves like any

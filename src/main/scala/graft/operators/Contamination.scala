@@ -54,7 +54,7 @@ object Contamination {
   /** Distinct benchmark n-grams as md5 FINGERPRINTS — the persisted
     * form of the benchmark side, built ONCE at benchmark-registration
     * time and only probed per training batch (the decontamination twin
-    * of `Dedup.minHashBandIndex` / `boilerplateIndex`). Fingerprints,
+    * of `Dedup.bandIndex` / `boilerplateIndex`). Fingerprints,
     * not strings: the stored table carries fixed-width 32-hex-char
     * keys however long the grams are, and the eval text itself never
     * leaves the build job — a held-out benchmark's CONTENT staying out

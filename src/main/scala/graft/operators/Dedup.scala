@@ -15,7 +15,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    on a 128-bit md5 of the canonical text (TextFunctions
   *    .fingerprint), not the text itself, so shuffle rows carry 16
   *    bytes + id instead of full documents.
-  *  - minHashLsh: signatures are computed scan-side by the native
+  *  - banded LSH ([[lshPairs]], one implementation over the MinHash,
+  *    SimHash, Hamming64 and SRP family values): MinHash signatures
+  *    are computed scan-side by the native
   *    MinHashShingled expression (tokens hashed once, shingle hashes
   *    derived polynomially inside a compiled loop — no UDF, no
   *    interpreted HOF, no shuffle); banding shuffles small fixed-width
@@ -747,26 +749,79 @@ object Dedup {
   def estimatedJaccard(sigA: Column, sigB: Column): Column =
     Sketches.sig_agreement(sigA, sigB)
 
-  /** MinHash + LSH near-duplicate candidate pairs.
+  /** 64-bit SimHash of the token stream: bit j of the result is the
+    * sign of Σ_tokens (±1 by bit j of xxhash64(token)). Codegen'd
+    * SimHash64 expression — no UDF, no shuffle. */
+  def simHash(text: Column): Column =
+    Sketches.simhash64(array_distinct(TextFunctions.tokens(text)))
+
+  // ------------------------------------------------------------ banded LSH
+  /** One banded-LSH signature family: how a frame becomes band keys,
+    * what each bucket member carries, how a candidate pair is
+    * verified, and the store manifest. Every role is ONE
+    * implementation over these values — full-run pairs
+    * ([[lshPairs]]), the index build ([[bandIndex]]) and its store
+    * ([[bandIndexWrite]]/[[bandIndexAppend]]/[[bandIndexRead]]/
+    * [[bandIndexErase]]), the in-memory and store probes
+    * ([[lshProbe]]/[[lshProbeStore]]) and the streaming sink
+    * (`Streaming.nearDupIngestSink`) — so the full run, the index
+    * build and the probe produce byte-identical band keys by
+    * construction (the q93/q97/q98/q124 incremental-equals-full
+    * contracts).
     *
-    * COST MODEL — read before trusting a wall-clock number: the
-    * quadratic step below enumerates pairs inside each band bucket,
-    * so total candidate work is Σ over buckets of |bucket|² (after
-    * the identical-membership collapse and the `maxBucket` skew
-    * guard). That sum is NOT linear in corpus size: buckets are
-    * near-dup cliques, and if clique sizes grow with the corpus —
-    * planted duplicates at a fixed RATE, the common synthetic and
-    * crawl shape — doubling the corpus quadruples Σ|bucket|². The
-    * q93 benchmark measures a ~36× time slope for 10× data at
-    * shingleK=1 for exactly this reason; that is the model working,
-    * not a regression. At 100 TB the knobs, in order: raise
-    * `shingleK` (smaller, more specific buckets), block with
-    * `blockCol`, and keep `maxBucket` tight — a bucket at the cap
-    * contributes maxBucket² no matter how the corpus grows, making
-    * the guard the hard ceiling on per-bucket cost. Bench emits a
-    * per-query SF slope and flags super-linear jumps
-    * (`slope_flags` in bench_stats.json) so a cost-model breach
-    * surfaces as a named flag, not a mystery headline number.
+    * `maxBucket` is the degenerate-content skew guard shared by every
+    * role: a constant signature (empty/boilerplate documents) puts its
+    * whole cohort into one (band, bh) bucket, whose self-pairing would
+    * emit O(m²) rows in a single task. Buckets above it are dropped —
+    * at index-build time too, so every later probe inherits the guard —
+    * and counted ([[guardBuckets]]): pair runs as
+    * `<guard>_dropped_buckets_<n>`, index builds as
+    * `<name>_index_dropped_buckets_<n>`; the store manifest family is
+    * `<name>_bands`. */
+  sealed trait LshFamily extends Product with Serializable {
+    def maxBucket: Int
+    private[operators] def name: String
+    private[operators] def guard: String = name
+    /** The store manifest: family `<name>_bands` plus the band
+      * geometry a probe must share with the index it reads. */
+    private[graft] def meta: IndexMeta
+    private[operators] def blockKey: Seq[String] = Nil
+    private[operators] def bucketKey: Seq[String] = blockKey ++ Seq("band", "bh")
+    /** Columns every bucket member and index row carries for pair
+      * verification. Empty = ids only (MinHash: the shuffle then moves
+      * fixed-width rows, never signature arrays). */
+    private[operators] def payload: Seq[String]
+    /** (id, sig, block…/payload…) — the scan-side signature front,
+      * from the frame's `idCol` and signature input `valueCol`. */
+    private[operators] def sigs(df: DataFrame, idCol: String,
+                                valueCol: String): DataFrame
+    /** (id, block…, band, bh, payload…) band-key rows of `sigs`. */
+    private[operators] def band(sigs: DataFrame): DataFrame
+    /** Whether pairs are scored (and filtered) at all. */
+    private[operators] def scores: Boolean = true
+    private[operators] def scoreName: String
+    /** A pair's score from each side's payload (or `sig`) columns. */
+    private[operators] def score(a: String => Column,
+                                 b: String => Column): Column
+    private[operators] def keep(score: Column): Column
+
+    /** A probe verifies cross pairs against what the band store
+      * carries; a family whose bands carry ids only can therefore
+      * probe candidate-only — refused loudly rather than scoring one
+      * half of the output and not the other. */
+    private[graft] def requireProbeable(): Unit =
+      require(payload.nonEmpty || !scores,
+        s"$this: $name bands carry ids only, so a probe cannot score " +
+          "batch×corpus pairs — probe with threshold = 0.0 and verify " +
+          "the candidates exactly downstream (ngramJaccardVerify)")
+  }
+
+  /** MinHash + LSH over word k-shingles: signatures computed
+    * scan-side by the native MinHashShingled expression (tokens hashed
+    * once, shingle hashes derived polynomially inside a compiled loop);
+    * `bands` band keys of `numHashes / bands` rows each. Hash seeds are
+    * deterministic, so signatures computed in a LATER job line up with
+    * a persisted index — the property incrementality depends on.
     *
     * @param blockCol  optional blocking column: when set, the band key
     *                  includes it, so candidates are same-block BY
@@ -775,633 +830,143 @@ object Dedup {
     *                  after pair generation — is the scale decision:
     *                  it keeps cross-block moderate-similarity pairs
     *                  from ever entering the candidate set.
-    * @param threshold minimum estimated Jaccard. Pass 0.0 to skip
-    *                  signature scoring entirely (est_jaccard comes
-    *                  back null): banding is then the only filter and
-    *                  the caller is expected to verify candidates
-    *                  exactly (ngramJaccardVerify) — two whole join
-    *                  stages cheaper when an exact verifier follows
-    *                  anyway.
-    * @return (id_a, id_b, est_jaccard) with id_a < id_b, distinct,
-    *         filtered to est_jaccard >= threshold (when scoring).
-    */
-  def minHashLsh(df: DataFrame, idCol: String, textCol: String,
-                 numHashes: Int = 64, bands: Int = 16,
-                 shingleK: Int = 3, threshold: Double = 0.5,
-                 maxBucket: Int = 200,
-                 blockCol: Option[String] = None): DataFrame = {
-    val blockKey = blockCol.toSeq
-
-    // Signatures and band keys come from the SAME helpers the
-    // persisted index build and the incremental probe use
-    // ([[minHashSigs]]/[[bandKeysOf]]) — byte-identical band keys
-    // across all three paths is what the q93 incremental-equals-full
-    // contract rests on; sigs are kept separately here because the
-    // threshold > 0 tail re-joins them for scoring.
-    val sigs = minHashSigs(df, idCol, textCol, numHashes, shingleK, blockCol)
-    val banded = bandKeysOf(sigs, numHashes, bands, blockCol)
-
-    // Bucket membership as a sorted id list (one shuffle), with the
-    // skew guard (degenerate mega-buckets) and singleton drop applied
-    // on list size. Then collapse buckets with IDENTICAL membership
-    // before the quadratic step: near-identical documents agree on
-    // most of their bands, so without this each clique's pair set is
-    // regenerated once per agreeing band — measured ~30× redundant
-    // pre-distinct volume on a near-dup-heavy corpus. distinct() on
-    // (block, ids) costs one shuffle of O(#buckets) list rows instead
-    // of O(Σ bucket²) pair rows.
-    val bucketKey = blockKey ++ Seq("band", "bh")
-    val buckets = guardBuckets(
-      banded.groupBy(bucketKey.map(col): _*)
-        .agg(sort_array(collect_list(col("id"))).as("ids")),
-      "ids", maxBucket, "minhash_lsh", dropSingletons = true)
-      .select(blockKey.map(col) :+ col("ids"): _*)
-      .distinct()
-
-    // candidate pair IDs from each distinct bucket (ids sorted ⇒
-    // id_a < id_b by construction), deduped across overlapping
-    // buckets BEFORE scoring — each surviving pair is scored (or
-    // verified) exactly once
-    val pairs = buckets
-      .select(posexplode(col("ids")).as(Seq("i", "id_a")), col("ids"))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("id_b"))
-      .distinct()
-
-    if (threshold <= 0.0)
-      return pairs.select(col("id_a"), col("id_b"),
-        lit(null).cast("double").as("est_jaccard"))
-
-    // fetch both signatures by id (small enough to auto-broadcast at
-    // bench scale; AQE picks a shuffle join when the corpus outgrows
-    // the broadcast threshold) and score once per pair
-    pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        estimatedJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** The persisted corpus-side state for INCREMENTAL MinHash-LSH:
-    * one row per (block?, band, bh, id) bucket membership, with
-    * degenerate mega-buckets (boilerplate content) dropped at BUILD
-    * time so every later probe inherits the skew guard. At 100 TB
-    * this is the band table a daily pipeline writes once per corpus
-    * rebuild and range-reads per batch — the index is O(docs · bands)
-    * fixed-width rows, and probing it never re-tokenizes, re-hashes,
-    * or re-shuffles the corpus itself.
-    *
-    * Hash seeds are deterministic (the MinHashSignature expression is
-    * seed-stable), so signatures computed in a LATER job line up with
-    * the persisted index — the property incrementality depends on. */
-  def minHashBandIndex(df: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int = 64, bands: Int = 16,
-                       shingleK: Int = 3, maxBucket: Int = 200,
-                       blockCol: Option[String] = None): DataFrame = {
-    val banded = bandedKeys(df, idCol, textCol, numHashes, bands, shingleK, blockCol)
-    val blockKey = blockCol.toSeq
-    val bucketKey = blockKey ++ Seq("band", "bh")
-    guardBuckets(
-      banded.groupBy(bucketKey.map(col): _*)
-        .agg(collect_list(col("id")).as("ids")),
-      "ids", maxBucket, "minhash_index", dropSingletons = false)
-      .select((bucketKey.map(col) :+ explode(col("ids")).as("id")): _*)
-  }
-
-  /** Near-dup candidate pairs for a NEW batch against an already-
-    * indexed corpus — the incremental sibling of [[minHashLsh]] (and
-    * the MinHash twin of [[bloomIncrementalExactDedup]]'s shape):
-    * batch-internal pairs come from LSH over the batch alone,
-    * batch-vs-corpus pairs from an equi join of the batch's band keys
-    * against the persisted index. The corpus pays nothing per batch.
-    *
-    * With a shared `maxBucket` comfortably above the largest real
-    * clique, the output equals the full-corpus [[minHashLsh]]
-    * candidate set restricted to pairs touching the batch (q93 pins
-    * this in-engine; DedupSpec proves it on real data) — near the
-    * guard boundary the two can differ, because the full run sees
-    * combined bucket sizes while the incremental run guards each side
-    * separately. That divergence is OBSERVABLE, not just documented:
-    * every guard stage (batch-internal, index build, full run) emits a
-    * dropped-bucket counter into the executed query's observed metrics
-    * — read the total with [[droppedBuckets]]; nonzero on either side
-    * near a tight `maxBucket` means candidates were lost asymmetrically.
-    *
-    * Cost model: the batch-internal half inherits [[minHashLsh]]'s
-    * Σ|bucket|² (over BATCH buckets only — the incremental win); the
-    * cross half is one equi join on band keys whose output is bounded
-    * by batch-bucket × corpus-bucket co-membership, again capped by
-    * `maxBucket` per side. Batch cost therefore scales with the
-    * BATCH's clique structure, not the corpus's — see the
-    * [[minHashLsh]] cost-model paragraph for the knobs.
-    *
-    * @param bandIndex output of [[minHashBandIndex]] built with the
-    *                  SAME numHashes/bands/shingleK/blockCol
-    */
-  def incrementalMinHashLsh(newDocs: DataFrame, idCol: String, textCol: String,
-                            bandIndex: DataFrame,
-                            numHashes: Int = 64, bands: Int = 16,
-                            shingleK: Int = 3, maxBucket: Int = 200,
-                            blockCol: Option[String] = None): DataFrame = {
-    val internal = minHashLsh(newDocs, idCol, textCol, numHashes, bands,
-      shingleK, threshold = 0.0, maxBucket, blockCol)
-      .select(col("id_a"), col("id_b"))
-    val batchBanded = bandedKeys(newDocs, idCol, textCol, numHashes, bands,
-      shingleK, blockCol)
-    internal.unionByName(minHashCross(batchBanded, bandIndex, blockCol))
-      .distinct()
-  }
-
-  /** The batch×corpus half of [[incrementalMinHashLsh]] — one
-    * definition for the in-memory and store-backed probes. */
-  private def minHashCross(batchBanded: DataFrame, bandIndex: DataFrame,
-                           blockCol: Option[String],
-                           keepSelf: Boolean = false): DataFrame =
-    batchBanded
-      .join(bandIndex.withColumnRenamed("id", "corpus_id"),
-        blockCol.toSeq ++ Seq("band", "bh"))
-      .filter(if (keepSelf) lit(true) else col("id") =!= col("corpus_id"))
-      .select(least(col("id"), col("corpus_id")).as("id_a"),
-        greatest(col("id"), col("corpus_id")).as("id_b"))
-      .distinct()
-
-  private[graft] def minHashBandsMeta(numHashes: Int, bands: Int,
-                                      shingleK: Int, maxBucket: Int,
-                                      blockCol: Option[String]): IndexMeta =
-    IndexMeta("minhash_bands", "numHashes" -> numHashes, "bands" -> bands,
-      "shingleK" -> shingleK, "maxBucket" -> maxBucket,
-      "blockCol" -> blockCol.getOrElse("-"))
-
-  /** Persist a [[minHashBandIndex]] to the bucketed band store — the
-    * disk form the daily-batch probe ([[incrementalMinHashLshFromStore]])
-    * reads with a parquet partition filter. */
-  def minHashBandIndexWrite(corpus: DataFrame, idCol: String, textCol: String,
-                            path: String, numHashes: Int = 64,
-                            bands: Int = 16, shingleK: Int = 3,
-                            maxBucket: Int = 200,
-                            blockCol: Option[String] = None,
-                            buckets: Int = 64): Unit =
-    bandIndexStoreWrite(
-      minHashBandIndex(corpus, idCol, textCol, numHashes, bands, shingleK,
-        maxBucket, blockCol),
-      path, minHashBandsMeta(numHashes, bands, shingleK, maxBucket, blockCol),
-      buckets)
-
-  /** [[incrementalMinHashLsh]] against the PERSISTED store: the
-    * batch's band keys are computed once (pinned), their bucket set
-    * becomes the store read's parquet partition filter, and the
-    * manifest check refuses a probe banded differently. Scan cost is
-    * ∝ the batch's bucket set — at 100 TB the corpus index is never
-    * scanned whole per batch. */
-  def incrementalMinHashLshFromStore(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
-      maxBucket: Int = 200, blockCol: Option[String] = None,
-      buckets: Int = 64, excludeEpoch: Option[String] = None): DataFrame =
-    incrementalMinHashLshFromStorePinned(spark, path, newDocs, idCol,
-      textCol, numHashes, bands, shingleK, maxBucket, blockCol, buckets,
-      excludeEpoch)._1
-
-  /** [[incrementalMinHashLshFromStore]] with caller-managed release
-    * of the internal band-key checkpoint — for foreachBatch callers
-    * with no harness sweep (see [[incrementalSimHashFromStore]]'s
-    * pin-lifecycle note). */
-  private[graft] def incrementalMinHashLshFromStorePinned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
-      maxBucket: Int = 200, blockCol: Option[String] = None,
-      buckets: Int = 64, excludeEpoch: Option[String] = None,
-      keepSelf: Boolean = false): (DataFrame, () => Unit) = {
-    val batchBanded = Bridge.freshLeaf(
-      bandedKeys(newDocs, idCol, textCol, numHashes, bands, shingleK,
-        blockCol).localCheckpoint(true))
-    val idx = bandIndexStoreProbeRead(spark, path,
-      minHashBandsMeta(numHashes, bands, shingleK, maxBucket, blockCol),
-      batchBanded, excludeEpoch, buckets)
-    val internal = minHashLsh(newDocs, idCol, textCol, numHashes, bands,
-      shingleK, threshold = 0.0, maxBucket, blockCol)
-      .select(col("id_a"), col("id_b"))
-    (internal.unionByName(minHashCross(batchBanded, idx, blockCol,
-        keepSelf))
-      .distinct(),
-      () => Bridge.unpersistCheckpoint(batchBanded))
-  }
-
-  /** Shared banding front end: (id, [block,] band, bh) keys from the
-    * codegen'd scan-side signatures — used by [[minHashLsh]], the
-    * index build, and the batch probe, so all three produce
-    * byte-identical band keys by construction. */
-  private def bandedKeys(df: DataFrame, idCol: String, textCol: String,
-                         numHashes: Int, bands: Int, shingleK: Int,
-                         blockCol: Option[String]): DataFrame =
-    bandKeysOf(minHashSigs(df, idCol, textCol, numHashes, shingleK, blockCol),
-      numHashes, bands, blockCol)
-
-  /** (id, sig, [block]) MinHash signatures, computed at full width:
-    * the exchange sits BELOW the signature projection ([[Par.widen]],
-    * scale-adaptive — a no-op on a scan with enough splits), so the
-    * expensive sketch runs on every core instead of serially on a
-    * narrow scan, and nothing re-shuffles the computed signatures.
-    * Recompute safety without the old post-projection barrier:
-    * CollapseProject's cheapness guard refuses to collapse this
-    * projection into the banding projection above it (which slices
-    * `sig` once per band) — gated by
-    * [[graft.plans.PlanAuditSpec]]'s "signature fronts: the sketch
-    * expression is never duplicated per band" test, which fails if a
-    * Spark upgrade ever relaxes that guard. */
-  private def minHashSigs(df: DataFrame, idCol: String, textCol: String,
-                          numHashes: Int, shingleK: Int,
-                          blockCol: Option[String]): DataFrame =
-    Par.widen(df, col(idCol)).select(
-      col(idCol).as("id") +: Sketches.minhash_shingled(
-        TextFunctions.tokens(col(textCol)), shingleK, numHashes).as("sig") +:
-        blockCol.toSeq.map(col): _*)
-
-  /** Band keys from materialized signatures. Signatures are dropped
-    * immediately: every shuffle from here to pair generation carries
-    * only (id, [block,] band, bh) — small fixed-width rows, not
-    * 8·numHashes-byte signature arrays. */
-  private def bandKeysOf(sigs: DataFrame, numHashes: Int, bands: Int,
-                         blockCol: Option[String]): DataFrame = {
+    * @param threshold minimum estimated Jaccard. 0.0 skips signature
+    *                  scoring entirely (est_jaccard comes back null):
+    *                  banding is then the only filter and the caller is
+    *                  expected to verify candidates exactly
+    *                  (ngramJaccardVerify) — two whole join stages
+    *                  cheaper when an exact verifier follows anyway,
+    *                  and the only setting a probe accepts. */
+  final case class MinHash(numHashes: Int = 64, bands: Int = 16,
+                           shingleK: Int = 3, threshold: Double = 0.5,
+                           maxBucket: Int = 200,
+                           blockCol: Option[String] = None)
+      extends LshFamily {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val blockKey = blockCol.toSeq
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bh"))
+    private[operators] def name = "minhash"
+    override private[operators] def guard = "minhash_lsh"
+    private[graft] def meta =
+      IndexMeta("minhash_bands", "numHashes" -> numHashes, "bands" -> bands,
+        "shingleK" -> shingleK, "maxBucket" -> maxBucket,
+        "blockCol" -> blockCol.getOrElse("-"))
+    override private[operators] def blockKey: Seq[String] = blockCol.toSeq
+    private[operators] def payload: Seq[String] = Nil
+
+    /** (id, sig, [block]) signatures computed at full width: the
+      * exchange sits BELOW the signature projection ([[Par.widen]],
+      * scale-adaptive — a no-op on a scan with enough splits), so the
+      * expensive sketch runs on every core instead of serially on a
+      * narrow scan, and nothing re-shuffles the computed signatures.
+      * Recompute safety without a post-projection barrier:
+      * CollapseProject's cheapness guard refuses to collapse this
+      * projection into the banding projection above it (which slices
+      * `sig` once per band) — gated by
+      * [[graft.plans.PlanAuditSpec]]'s "signature fronts" test, which
+      * fails if a Spark upgrade ever relaxes that guard. */
+    private[operators] def sigs(df: DataFrame, idCol: String,
+                                textCol: String): DataFrame =
+      Par.widen(df, col(idCol)).select(
+        col(idCol).as("id") +: Sketches.minhash_shingled(
+          TextFunctions.tokens(col(textCol)), shingleK, numHashes).as("sig") +:
+          blockKey.map(col): _*)
+
+    /** Signatures are dropped here: every shuffle from banding to pair
+      * generation carries only (id, [block,] band, bh) — small
+      * fixed-width rows, not 8·numHashes-byte signature arrays; a
+      * threshold > 0 run re-joins them by id for scoring. */
+    private[operators] def band(sigs: DataFrame): DataFrame = {
+      val rowsPerBand = numHashes / bands
+      val bandStructs = (0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bh"))
+      }
+      sigs
+        .select(col("id") +: explode(array(bandStructs: _*)).as("bk") +:
+          blockKey.map(col): _*)
+        .select(col("id") +: col("bk.band") +: col("bk.bh") +:
+          blockKey.map(col): _*)
     }
-    sigs
-      .select(col("id") +: explode(array(bandStructs: _*)).as("bk") +:
-        blockKey.map(col): _*)
-      .select(col("id") +: col("bk.band") +: col("bk.bh") +:
-        blockKey.map(col): _*)
+
+    override private[operators] def scores = threshold > 0.0
+    private[operators] def scoreName = "est_jaccard"
+    private[operators] def score(a: String => Column,
+                                 b: String => Column): Column =
+      estimatedJaccard(a("sig"), b("sig"))
+    private[operators] def keep(score: Column): Column = score >= threshold
   }
 
-  /** 64-bit SimHash of the token stream: bit j of the result is the
-    * sign of Σ_tokens (±1 by bit j of xxhash64(token)). Codegen'd
-    * SimHash64 expression — no UDF, no shuffle. */
-  def simHash(text: Column): Column =
-    Sketches.simhash64(array_distinct(TextFunctions.tokens(text)))
-
-  /** SimHash near-dup pairs via 4×16-bit band blocking (any pair with
-    * Hamming ≤ 3 shares at least one of 4 bands).
-    *
-    * `maxBucket` is the same degenerate-content skew guard as
-    * minHashLsh's: a constant simhash (e.g. 0 for every empty/
-    * boilerplate document) puts its whole cohort into one (band, bh)
-    * key, whose self-join would emit O(m²) rows in a single task. */
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBucket: Int = 5000): DataFrame =
-    hammingPairs64(textSigs(df, idCol, textCol),
-      maxHamming, maxBucket, family = "simhash")
-
-  /** Near-dup pairs over PRE-COMPUTED 64-bit signatures (id, sig) —
-    * the banding/bucketing engine under [[simHashPairs]], exposed so
-    * any 64-bit Hamming signature (SimHash, perceptual image hashes,
-    * SRP) reuses the same single-shuffle plan. With `maxHamming` ≤ 3
-    * the output is EXACTLY every pair at Hamming ≤ maxHamming
-    * (4×16-bit pigeonhole: ≤3 flipped bits leave ≥1 band intact), so
-    * a brute-force oracle can pin it; beyond 3 it is recall-bounded
-    * like any banded LSH.
-    *
-    * `maxBucket` is the same degenerate-content skew guard as
-    * minHashLsh's: a constant signature (e.g. 0 for every empty/
-    * boilerplate document) puts its whole cohort into one (band, bh)
-    * key, whose self-join would emit O(m²) rows in a single task. */
-  def hammingPairs64(sigs: DataFrame, maxHamming: Int = 3,
-                     maxBucket: Int = 5000,
-                     family: String = "hamming64"): DataFrame = {
-    val banded = band64(sigs, carry = Nil)
-    // bucket membership as a sorted (id, sig) list — one shuffle, same
-    // shape as minHashLsh: the skew guard applies on list size,
-    // identical-membership buckets collapse before the quadratic step
-    // (near-identical docs agree on most bands), and pair generation
-    // emits id_a < id_b by construction instead of filtering half of a
-    // self-join's output away
-    val buckets = guardBuckets(
-      banded.groupBy("band", "bh")
-        .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("xs")),
-      "xs", maxBucket, family, dropSingletons = true)
-      .select(col("xs"))
-      .distinct()
-    buckets
-      .select(posexplode(col("xs")).as(Seq("i", "x")), col("xs"))
-      .select(col("x.id").as("id_a"), col("x.sig").as("sig_a"),
-        explode(slice(col("xs"), col("i") + lit(2), size(col("xs")))).as("y"))
-      .select(col("id_a"), col("y.id").as("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("y.sig"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+  /** The 64-bit Hamming families: 4×16-bit banding of a 64-bit `sig`
+    * ([[band64]]), the signature riding along so pairs Hamming-verify
+    * without touching the source rows. With `maxHamming` ≤ 3 the
+    * output is EXACTLY every pair at Hamming ≤ maxHamming (≤ 3 flipped
+    * bits leave ≥ 1 of 4 bands intact), so a brute-force oracle can
+    * pin it; beyond 3 it is recall-bounded like any banded LSH. */
+  sealed abstract class Hamming extends LshFamily {
+    def maxHamming: Int
+    private[graft] def meta = IndexMeta(s"${name}_bands", "maxBucket" -> maxBucket)
+    private[operators] def payload: Seq[String] = Seq("sig")
+    private[operators] def band(sigs: DataFrame): DataFrame =
+      band64(sigs, carry = Nil)
+    private[operators] def scoreName = "hamming"
+    private[operators] def score(a: String => Column,
+                                 b: String => Column): Column =
+      bit_count(a("sig").bitwiseXOR(b("sig")))
+    private[operators] def keep(score: Column): Column = score <= maxHamming
   }
 
-  /** Persisted SimHash band index — the SimHash twin of
-    * [[minHashBandIndex]]: one (band, bh, id, sig) row per document ×
-    * 4 bands, written once at corpus build. The signature rides along
-    * so the probe can Hamming-verify without touching corpus text. */
-  def simHashBandIndex(df: DataFrame, idCol: String, textCol: String,
-                       maxBucket: Int = 5000): DataFrame =
-    hamming64BandIndex(textSigs(df, idCol, textCol), maxBucket,
-      family = "simhash_index")
-
-  /** Probe a new batch against a persisted [[simHashBandIndex]] —
-    * within-batch pairs plus batch×corpus pairs, the corpus never
-    * re-tokenized or re-signatured. Same contract as
-    * [[incrementalMinHashLsh]]: with the skew guard above the largest
-    * real clique, equals the full-corpus [[simHashPairs]] run
-    * restricted to pairs touching the batch (q97 pins it). */
-  def incrementalSimHash(newDocs: DataFrame, idCol: String, textCol: String,
-                         bandIndex: DataFrame, maxHamming: Int = 3,
-                         maxBucket: Int = 5000): DataFrame =
-    incrementalHamming64(textSigs(newDocs, idCol, textCol), bandIndex,
-      maxHamming, maxBucket, family = "simhash")
-
-  /** Persisted band index over PRE-COMPUTED 64-bit signatures — the
-    * signature-level engine under [[simHashBandIndex]], exposed so
-    * every Hamming family (SimHash text, dHash images, SRP
-    * embeddings) gets the same probe-a-stored-index incremental
-    * shape. One (band, bh, id, sig) row per item × 4 bands.
-    * Build-time skew guard: a degenerate constant-signature cohort
-    * (empty/boilerplate content) would otherwise hand every future
-    * batch an O(cohort) join fan-out on its bucket. */
-  def hamming64BandIndex(sigs: DataFrame, maxBucket: Int = 5000,
-                         family: String = "hamming64_index"): DataFrame = {
-    val banded = band64(sigs, carry = Nil)
-    guardBuckets(
-      banded.groupBy("band", "bh")
-        .agg(collect_list(struct(col("id"), col("sig"))).as("xs")),
-      "xs", maxBucket, family, dropSingletons = false)
-      .select(col("band"), col("bh"), explode(col("xs")).as("x"))
-      .select(col("band"), col("bh"), col("x.id").as("id"), col("x.sig").as("sig"))
+  /** SimHash of the text ([[simHash]]) under Hamming banding. The
+    * signature is computed at full width ([[Par.widen]] below the
+    * projection — a scale-adaptive no-op on a wide scan). */
+  final case class SimHash(maxHamming: Int = 3, maxBucket: Int = 5000)
+      extends Hamming {
+    private[operators] def name = "simhash"
+    private[operators] def sigs(df: DataFrame, idCol: String,
+                                textCol: String): DataFrame =
+      Par.widen(df, col(idCol))
+        .select(col(idCol).as("id"), simHash(col(textCol)).as("sig"))
   }
 
-  /** Probe batch signatures against a persisted [[hamming64BandIndex]]
-    * — within-batch pairs plus batch×corpus pairs; corpus items are
-    * touched only through the index's bounded band buckets. With the
-    * skew guard above the largest real clique, equals the full-corpus
-    * [[hammingPairs64]] run restricted to pairs touching the batch
-    * (q97 pins the text family, q124 the image family). */
-  def incrementalHamming64(batchSigs: DataFrame, bandIndex: DataFrame,
-                           maxHamming: Int = 3, maxBucket: Int = 5000,
-                           family: String = "hamming64",
-                           keepSelf: Boolean = false): DataFrame = {
-    val internal = hammingPairs64(batchSigs, maxHamming, maxBucket, family)
-      .select("id_a", "id_b")
-    val cross = band64(batchSigs, carry = Nil)
-      .join(bandIndex
-          .withColumnRenamed("id", "corpus_id")
-          .withColumnRenamed("sig", "corpus_sig"),
-        Seq("band", "bh"))
-      .filter((if (keepSelf) lit(true)
-               else col("id") =!= col("corpus_id")) &&
-        bit_count(col("sig").bitwiseXOR(col("corpus_sig"))) <= maxHamming)
-      .select(least(col("id"), col("corpus_id")).as("id_a"),
-        greatest(col("id"), col("corpus_id")).as("id_b"))
-      .distinct()
-    internal.unionByName(cross).distinct()
+  /** Any PRE-COMPUTED 64-bit Hamming signature (perceptual image
+    * hashes, …) under the same banding; `name` names its guard
+    * counters and store manifest (`<name>_bands`). */
+  final case class Hamming64(name: String = "hamming64",
+                             maxHamming: Int = 3, maxBucket: Int = 5000)
+      extends Hamming {
+    private[operators] def sigs(df: DataFrame, idCol: String,
+                                sigCol: String): DataFrame =
+      df.select(col(idCol).as("id"), col(sigCol).as("sig"))
   }
 
-  private[graft] def hamming64BandsMeta(family: String,
-                                        maxBucket: Int): IndexMeta =
-    IndexMeta(family, "maxBucket" -> maxBucket)
-
-  /** Persist a [[simHashBandIndex]] to the bucketed band store. */
-  def simHashBandIndexWrite(corpus: DataFrame, idCol: String,
-                            textCol: String, path: String,
-                            maxBucket: Int = 5000, buckets: Int = 64): Unit =
-    bandIndexStoreWrite(simHashBandIndex(corpus, idCol, textCol, maxBucket),
-      path, hamming64BandsMeta("simhash_bands", maxBucket), buckets)
-
-  /** [[incrementalSimHash]] against the PERSISTED store: batch
-    * signatures computed once (pinned), the store read pruned to the
-    * batch's band-key buckets by parquet partition filter.
-    *
-    * The internal signature pin outlives the call (it backs the
-    * returned plan); batch/bench callers rely on the harness sweep to
-    * free it. A caller inside a LONG-LIVED loop with no sweep — a
-    * streaming sink's foreachBatch — must use the `Pinned` variant
-    * and release the pin itself, or it leaks one pinned RDD per
-    * batch for the session lifetime. */
-  def incrementalSimHashFromStore(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 5000, buckets: Int = 64,
-      excludeEpoch: Option[String] = None): DataFrame =
-    incrementalSimHashFromStorePinned(spark, path, newDocs, idCol, textCol,
-      maxHamming, maxBucket, buckets, excludeEpoch)._1
-
-  /** [[incrementalSimHashFromStore]] with caller-managed release: the
-    * second element frees the internal batch-signature checkpoint
-    * (call it only after the pairs are consumed or themselves
-    * pinned — the pin backs the returned plan). */
-  private[graft] def incrementalSimHashFromStorePinned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 5000, buckets: Int = 64,
-      excludeEpoch: Option[String] = None,
-      keepSelf: Boolean = false): (DataFrame, () => Unit) =
-    incrementalHamming64FromStorePinned(spark, path,
-      textSigs(newDocs, idCol, textCol), "simhash_bands", maxHamming,
-      maxBucket, buckets, excludeEpoch, family = "simhash",
-      keepSelf = keepSelf)
-
-  /** Store-backed [[incrementalHamming64]] — the signature-level
-    * engine under the SimHash and image-hash probes. Pin lifecycle:
-    * see [[incrementalSimHashFromStore]]. */
-  def incrementalHamming64FromStore(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batchSigs: DataFrame, metaFamily: String, maxHamming: Int = 3,
-      maxBucket: Int = 5000, buckets: Int = 64,
-      excludeEpoch: Option[String] = None,
-      family: String = "hamming64"): DataFrame =
-    incrementalHamming64FromStorePinned(spark, path, batchSigs, metaFamily,
-      maxHamming, maxBucket, buckets, excludeEpoch, family)._1
-
-  private[graft] def incrementalHamming64FromStorePinned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batchSigs: DataFrame, metaFamily: String, maxHamming: Int = 3,
-      maxBucket: Int = 5000, buckets: Int = 64,
-      excludeEpoch: Option[String] = None,
-      family: String = "hamming64",
-      keepSelf: Boolean = false): (DataFrame, () => Unit) = {
-    val sigs = Bridge.freshLeaf(batchSigs.localCheckpoint(true))
-    val idx = bandIndexStoreProbeRead(spark, path,
-      hamming64BandsMeta(metaFamily, maxBucket), band64(sigs, carry = Nil),
-      excludeEpoch, buckets)
-    (incrementalHamming64(sigs, idx, maxHamming, maxBucket, family,
-      keepSelf),
-      () => Bridge.unpersistCheckpoint(sigs))
+  /** Embedding near-dups via signed-random-projection LSH: 64-bit SRP
+    * signatures (codegen'd SrpSignature, deterministic hyperplanes —
+    * no stored matrix), Hamming-banded into 4×16-bit buckets exactly
+    * like SimHash, then candidates are verified with EXACT cosine,
+    * rounded to `roundTo` — the estimate never decides, only blocks.
+    * The vector rides in the buckets and the index (what a real ANN
+    * index stores). Recall: a pair survives iff its signatures agree
+    * on one 16-bit band; for near-dups (angle → 0) band agreement
+    * approaches 1 (spec-bounded on planted duplicates). */
+  final case class Srp(threshold: Double, maxBucket: Int = 5000,
+                       roundTo: Int = 4) extends LshFamily {
+    private[operators] def name = "srp"
+    private[graft] def meta = IndexMeta("srp_bands", "maxBucket" -> maxBucket)
+    private[operators] def payload: Seq[String] = Seq("vec")
+    private[operators] def sigs(df: DataFrame, idCol: String,
+                                vecCol: String): DataFrame =
+      Par.widen(df, col(idCol)).select(col(idCol).as("id"),
+        col(vecCol).as("vec"), Sketches.srp_signature(col(vecCol)).as("sig"))
+    private[operators] def band(sigs: DataFrame): DataFrame =
+      band64(sigs, carry = Seq("vec"))
+    private[operators] def scoreName = "cos"
+    private[operators] def score(a: String => Column,
+                                 b: String => Column): Column =
+      round(Sim.cosine(a("vec"), b("vec")), roundTo)
+    private[operators] def keep(score: Column): Column = score >= threshold
   }
-
-  // --------------------------------------------- persisted band stores
-  /** Inner-partition bucket of a band key: every band-store row and
-    * every probe derive it from the SAME expression, so the probe's
-    * candidate-bucket set is a valid parquet partition filter by
-    * construction. */
-  private[graft] def bandBucket(buckets: Int): Column =
-    pmod(xxhash64(col("band"), col("bh")), lit(buckets.toLong)).cast("int")
-
-  /** The stored manifest carries the bucket count alongside the
-    * caller's banding geometry — a probe at a different bucketing
-    * refuses instead of silently scanning partitions that cannot
-    * match its filter expression. */
-  private[graft] def bandMetaWithBuckets(meta: IndexMeta,
-                                         buckets: Int): IndexMeta =
-    IndexMeta(meta.family, meta.params + ("bb_buckets" -> buckets.toString))
-
-  /** Persisted, epoch-structured store for the banding families'
-    * indexes ([[minHashBandIndex]], [[simHashBandIndex]],
-    * [[srpBandIndex]], [[hamming64BandIndex]]): band-key rows are
-    * DISJOINT across append-only batches, so the epoch fold is
-    * identity — compaction's value here is file count and partition-
-    * listing latency, not row reduction (an identity fold can never
-    * corrupt, so no family gate is needed on compact). The caller
-    * supplies the family manifest with the banding geometry
-    * (`IndexMeta("minhash_bands", "numHashes" -> 64, "bands" -> 16,
-    * "shingleK" -> 3, "maxBucket" -> 200)`, …): reads and appends
-    * check it, so a probe banded differently refuses loudly instead
-    * of silently missing candidates — the persisted-level enforcement
-    * of the byte-identical-band-keys contracts (q93/q97/q98).
-    *
-    * Layout (round 16 — the cert-store discipline applied here): rows
-    * are inner-partitioned by `bb = pmod(xxhash64(band, bh), buckets)`
-    * so a batch probe reads ONLY its own band keys' buckets as a
-    * parquet partition filter ([[bandIndexStoreProbeRead]]) — at
-    * 100 TB the probe's scan cost is ∝ the batch's bucket set, not
-    * the corpus index. FORMAT BREAK vs rounds ≤ 15: the old flat
-    * layout (no `bb`, no `bb_buckets` manifest key) is refused by the
-    * manifest check with no migration path — rebuild the store with
-    * [[bandIndexStoreWrite]]; nothing long-lived used the old layout. */
-  /** One exchange on the bucket key before the partitioned write:
-    * without it every input task writes a file into every bucket
-    * directory (tasks × buckets small files — listing and probe-read
-    * poison at scale); with it each bucket is one task's output, and
-    * the within-partition (band, bh) sort gives the probe's equi-join
-    * key row-group min/max pruning inside each bucket file — the
-    * certTextParts postings discipline. */
-  private def bandBucketed(index: DataFrame, buckets: Int): DataFrame =
-    index.withColumn("bb", bandBucket(buckets))
-      .repartition(col("bb"))
-      .sortWithinPartitions(col("bb"), col("band"), col("bh"))
-
-  def bandIndexStoreWrite(index: DataFrame, path: String,
-                          meta: IndexMeta, buckets: Int = 64): Unit = {
-    EpochIndex.bootstrap(bandBucketed(index, buckets),
-      path, innerPartCols = Seq("bb"))
-    IndexMeta.write(index.sparkSession, path,
-      bandMetaWithBuckets(meta, buckets))
-  }
-
-  def bandIndexStoreRead(spark: org.apache.spark.sql.SparkSession,
-                         path: String, meta: IndexMeta,
-                         excludeEpoch: Option[String] = None,
-                         buckets: Int = 64): DataFrame = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(meta, buckets))
-    EpochIndex.read(spark, path, excludeEpoch,
-      innerPartCols = Seq("bb"),
-      bootstrapName = "bandIndexStoreWrite")
-      .drop(EpochIndex.EpochCol).drop("bb")
-  }
-
-  /** Partition-pruned probe read: only the buckets the batch's own
-    * band keys hash into are scanned — `batchBands` carries (band,
-    * bh) rows (any extra columns ignored), the distinct bucket set is
-    * bounded by `buckets` (driver-read under that bound), and the
-    * returned frame is exactly [[bandIndexStoreRead]] restricted to
-    * those buckets — which, joined on the full band key, loses no
-    * candidate because every index row a batch key can match carries
-    * the batch key's own bucket. */
-  def bandIndexStoreProbeRead(spark: org.apache.spark.sql.SparkSession,
-                              path: String, meta: IndexMeta,
-                              batchBands: DataFrame,
-                              excludeEpoch: Option[String] = None,
-                              buckets: Int = 64): DataFrame = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(meta, buckets))
-    val bbs = BoundedRead.boundedDriverRead(
-      batchBands.select(bandBucket(buckets).as("bb")).distinct(),
-      buckets, "bandIndexStoreProbeRead buckets",
-      s"distinct pmod values are bounded by buckets = $buckets")
-      .map(_.getInt(0))
-    // observed = false: the probe's whole value is the bucket-pruned
-    // scan, and a CollectMetrics barrier above the store read would
-    // block the bb filter from reaching partition pruning (the
-    // ivfIndexRead precedent — see EpochIndex.read's scaladoc)
-    EpochIndex.read(spark, path, excludeEpoch,
-      innerPartCols = Seq("bb"),
-      bootstrapName = "bandIndexStoreWrite", observed = false)
-      .filter(col("bb").isin(bbs: _*))
-      .drop(EpochIndex.EpochCol).drop("bb")
-  }
-
-  def bandIndexStoreAppend(spark: org.apache.spark.sql.SparkSession,
-                           path: String, partial: DataFrame, epoch: String,
-                           meta: IndexMeta, buckets: Int = 64): Unit = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(meta, buckets))
-    EpochIndex.append(bandBucketed(partial, buckets),
-      path, epoch, innerPartCols = Seq("bb"))
-  }
-
-  /** Every `<kind>_bands` family (minhash/simhash/srp/hamming64)
-    * shares the `bb`-bucketed layout and the identity fold — band rows
-    * are disjoint, so compaction bounds the file count. */
-  private[operators] val bandStore =
-    StoreFamily.flat("*_bands", _ => identity, Seq("bb"))
-
-  /** Erase documents from a band-index store — disk-level (the q237
-    * discipline extended to the legacy band families): band rows are
-    * per-document, so the erased store is exactly the retained
-    * documents' index, and after the rewrite no retained version,
-    * epoch directory or marker holds an erased id (q238 pins
-    * post-erase probe ≡ never-ingested against a from-scratch index
-    * over the retained corpus). Total erasure tears the store down
-    * ([[EpochIndex.eraseRewrite]]'s empty-keep path).
-    *
-    * @param ids one-column frame of victim ids (any column name) */
-  def bandIndexStoreErase(spark: org.apache.spark.sql.SparkSession,
-                          path: String, ids: DataFrame, meta: IndexMeta,
-                          buckets: Int = 64): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(meta, buckets))
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    EpochIndex.eraseRewrite(spark, path,
-      p => p.join(victims.select(col("_vid").as("id")), Seq("id"),
-        "left_anti"),
-      innerPartCols = Seq("bb"))
-  }
-
-  /** [[bandIndexStoreErase]] under the MinHash family manifest. */
-  def minHashBandIndexErase(spark: org.apache.spark.sql.SparkSession,
-                            path: String, ids: DataFrame,
-                            numHashes: Int = 64, bands: Int = 16,
-                            shingleK: Int = 3, maxBucket: Int = 200,
-                            blockCol: Option[String] = None,
-                            buckets: Int = 64): EpochIndex.CompactionStats =
-    bandIndexStoreErase(spark, path, ids,
-      minHashBandsMeta(numHashes, bands, shingleK, maxBucket, blockCol),
-      buckets)
-
-  /** [[bandIndexStoreErase]] under the SimHash family manifest. */
-  def simHashBandIndexErase(spark: org.apache.spark.sql.SparkSession,
-                            path: String, ids: DataFrame,
-                            maxBucket: Int = 5000,
-                            buckets: Int = 64): EpochIndex.CompactionStats =
-    bandIndexStoreErase(spark, path, ids,
-      hamming64BandsMeta("simhash_bands", maxBucket), buckets)
-
-  /** [[bandIndexStoreErase]] under the SRP family manifest. */
-  def srpBandIndexErase(spark: org.apache.spark.sql.SparkSession,
-                        path: String, ids: DataFrame,
-                        maxBucket: Int = 5000,
-                        buckets: Int = 64): EpochIndex.CompactionStats =
-    bandIndexStoreErase(spark, path, ids,
-      hamming64BandsMeta("srp_bands", maxBucket), buckets)
 
   /** 4×16-bit banding of a materialized 64-bit `sig` column — the ONE
-    * implementation behind SimHash and SRP banding, so the
-    * index-build/probe/full-run byte-identical-band-keys contracts
-    * (q97, q98) hold by construction instead of by parallel edits.
-    * Output: (id, sig, carry…, band, bh). */
+    * implementation behind every Hamming-banded family. Output:
+    * (id, sig, carry…, band, bh). */
   private def band64(sigs: DataFrame, carry: Seq[String]): DataFrame = {
     val bandStructs = (0 until 4).map { b =>
       struct(lit(b).as("band"),
@@ -1413,14 +978,355 @@ object Dedup {
       .select(keep :+ col("bk.band") :+ col("bk.bh"): _*)
   }
 
-  /** Shared SimHash signature front end: codegen'd signature computed
-    * at full width (exchange below the projection, [[Par.widen]] —
-    * scale-adaptive no-op on a wide scan), in the (id, sig) shape the
-    * signature-level Hamming engine consumes. */
-  private def textSigs(df: DataFrame, idCol: String,
-                       textCol: String): DataFrame =
-    Par.widen(df, col(idCol))
-      .select(col(idCol).as("id"), simHash(col(textCol)).as("sig"))
+  /** Near-duplicate pairs of `df` under `family` — (id_a, id_b,
+    * <score>) with id_a < id_b, distinct, filtered by the family's
+    * verification (est_jaccard comes back null for a MinHash at
+    * threshold 0.0).
+    *
+    * COST MODEL — read before trusting a wall-clock number: the
+    * quadratic step enumerates pairs inside each band bucket, so total
+    * candidate work is Σ over buckets of |bucket|² (after the
+    * identical-membership collapse and the `maxBucket` skew guard).
+    * That sum is NOT linear in corpus size: buckets are near-dup
+    * cliques, and if clique sizes grow with the corpus — planted
+    * duplicates at a fixed RATE, the common synthetic and crawl shape —
+    * doubling the corpus quadruples Σ|bucket|². The q93 benchmark
+    * measures a ~36× time slope for 10× data at shingleK=1 for exactly
+    * this reason; that is the model working, not a regression. At
+    * 100 TB the knobs, in order: raise MinHash `shingleK` (smaller,
+    * more specific buckets), block with `blockCol`, and keep
+    * `maxBucket` tight — a bucket at the cap contributes maxBucket² no
+    * matter how the corpus grows, making the guard the hard ceiling on
+    * per-bucket cost. Bench emits a per-query SF slope and flags
+    * super-linear jumps (`slope_flags` in bench_stats.json) so a
+    * cost-model breach surfaces as a named flag, not a mystery
+    * headline number. */
+  def lshPairs(df: DataFrame, idCol: String, valueCol: String,
+               family: LshFamily): DataFrame = {
+    val sigs = family.sigs(df, idCol, valueCol)
+    val pairs = bucketPairs(family.band(sigs), family)
+    if (family.payload.nonEmpty) pairs
+    else if (!family.scores)
+      pairs.select(col("id_a"), col("id_b"),
+        lit(null).cast("double").as(family.scoreName))
+    // ids-only buckets: fetch both signatures by id (small enough to
+    // auto-broadcast at bench scale; AQE picks a shuffle join when the
+    // corpus outgrows the broadcast threshold) and score once per pair
+    else pairs
+      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        family.score(c => col(s"${c}_a"), c => col(s"${c}_b")).as(family.scoreName))
+      .filter(family.keep(col(family.scoreName)))
+  }
+
+  /** Bucket member list: ids alone, or (id, payload…) structs. */
+  private def bucketList(family: LshFamily): (String, Column) =
+    if (family.payload.isEmpty) ("ids", col("id"))
+    else ("xs", struct(col("id") +: family.payload.map(col): _*))
+
+  /** The quadratic step over band-key rows: bucket membership as a
+    * sorted list (one shuffle), with the skew guard and singleton drop
+    * applied on list size. Buckets with IDENTICAL membership collapse
+    * before pairing: near-identical documents agree on most of their
+    * bands, so without this each clique's pair set is regenerated once
+    * per agreeing band — measured ~30× redundant pre-distinct volume on
+    * a near-dup-heavy corpus; distinct() on (block, list) costs one
+    * shuffle of O(#buckets) list rows instead of O(Σ bucket²) pair
+    * rows. Lists are sorted, so pair generation emits id_a < id_b by
+    * construction. Ids-only families come back as distinct candidate
+    * (id_a, id_b) — deduped BEFORE any scoring, so each pair is scored
+    * (or verified) once; payload families come back verified as
+    * (id_a, id_b, <score>). */
+  private def bucketPairs(banded: DataFrame, family: LshFamily): DataFrame = {
+    val (list, member) = bucketList(family)
+    val xs = col(list)
+    val buckets = guardBuckets(
+      banded.groupBy(family.bucketKey.map(col): _*)
+        .agg(sort_array(collect_list(member)).as(list)),
+      list, family.maxBucket, family.guard, dropSingletons = true)
+      .select(family.blockKey.map(col) :+ xs: _*)
+      .distinct()
+    val rest = explode(slice(xs, col("i") + lit(2), size(xs)))
+    if (family.payload.isEmpty)
+      buckets.select(posexplode(xs).as(Seq("i", "id_a")), xs)
+        .select(col("id_a"), rest.as("id_b"))
+        .distinct()
+    else
+      buckets.select(posexplode(xs).as(Seq("i", "x")), xs)
+        .select(col("x.id").as("id_a") +:
+          family.payload.map(c => col(s"x.$c").as(s"${c}_a")) :+
+          rest.as("y"): _*)
+        .select(col("id_a"), col("y.id").as("id_b"),
+          family.score(c => col(s"${c}_a"), c => col(s"y.$c"))
+            .as(family.scoreName))
+        .filter(family.keep(col(family.scoreName)))
+        .distinct()
+  }
+
+  /** The corpus-side state for incremental near-dup: one
+    * (block…, band, bh, id, payload…) row per bucket membership, with
+    * degenerate mega-buckets dropped at BUILD time so every later probe
+    * inherits the skew guard. At 100 TB this is the band table a daily
+    * pipeline writes once per corpus rebuild ([[bandIndexWrite]]) and
+    * range-reads per batch — O(docs · bands) fixed-width rows; probing
+    * it never re-tokenizes, re-hashes or re-shuffles the corpus. */
+  def bandIndex(df: DataFrame, idCol: String, valueCol: String,
+                family: LshFamily): DataFrame = {
+    val (list, member) = bucketList(family)
+    val key = family.bucketKey.map(col)
+    val rows = guardBuckets(
+      family.band(family.sigs(df, idCol, valueCol))
+        .groupBy(key: _*).agg(collect_list(member).as(list)),
+      list, family.maxBucket, s"${family.name}_index", dropSingletons = false)
+    if (family.payload.isEmpty)
+      rows.select(key :+ explode(col(list)).as("id"): _*)
+    else
+      rows.select(key :+ explode(col(list)).as("x"): _*)
+        .select(key ++ (col("x.id").as("id") +:
+          family.payload.map(c => col(s"x.$c").as(c))): _*)
+  }
+
+  /** Near-dup pairs for a NEW batch against an already-indexed corpus
+    * ([[bandIndex]] built with the SAME family): within-batch pairs
+    * plus batch×corpus pairs from an equi join of the batch's band keys
+    * against the index, both verified — (id_a, id_b), id_a < id_b,
+    * distinct. The corpus pays nothing per batch.
+    *
+    * The batch is signatured and banded ONCE (an eager local
+    * checkpoint, released by the harness sweep like every batch-query
+    * pin), and both halves read that banded frame.
+    *
+    * With a shared `maxBucket` comfortably above the largest real
+    * clique, the output equals the full-corpus [[lshPairs]] candidate
+    * set restricted to pairs touching the batch (q93/q97/q98/q124 pin
+    * this in-engine; DedupSpec proves it on real data) — near the guard
+    * boundary the two can differ, because the full run sees combined
+    * bucket sizes while the incremental run guards each side
+    * separately. That divergence is OBSERVABLE: every guard stage
+    * emits a dropped-bucket counter into the executed query's observed
+    * metrics — read the total with [[droppedBuckets]]; nonzero on
+    * either side near a tight `maxBucket` means candidates were lost
+    * asymmetrically.
+    *
+    * Cost model: the within-batch half inherits [[lshPairs]]'
+    * Σ|bucket|² over BATCH buckets only — the incremental win; the
+    * cross half is one equi join on band keys whose output is bounded
+    * by batch-bucket × corpus-bucket co-membership, capped by
+    * `maxBucket` per side. */
+  def lshProbe(batch: DataFrame, idCol: String, valueCol: String,
+               index: DataFrame, family: LshFamily): DataFrame =
+    probeBanded(pinBanded(batch, idCol, valueCol, family), index, family,
+      keepSelf = false)
+
+  /** [[lshProbe]] against the PERSISTED store: the batch's band-key
+    * bucket set becomes the store read's parquet partition filter, and
+    * the manifest check refuses a probe banded differently. Scan cost
+    * is ∝ the batch's bucket set — at 100 TB the corpus index is never
+    * scanned whole per batch.
+    *
+    * The internal banding pin outlives the call (it backs the returned
+    * plan); batch/bench callers rely on the harness sweep to free it. A
+    * caller inside a LONG-LIVED loop with no sweep — a streaming sink's
+    * foreachBatch — must use [[lshProbeStorePinned]] and release the
+    * pin itself, or it leaks one pinned RDD per batch for the session
+    * lifetime. */
+  def lshProbeStore(spark: org.apache.spark.sql.SparkSession, path: String,
+                    batch: DataFrame, idCol: String, valueCol: String,
+                    family: LshFamily, buckets: Int = 64,
+                    excludeEpoch: Option[String] = None): DataFrame =
+    lshProbeStorePinned(spark, path, batch, idCol, valueCol, family,
+      buckets, excludeEpoch)._1
+
+  /** [[lshProbeStore]] with caller-managed release: the second element
+    * frees the internal banding checkpoint (call it only after the
+    * pairs are consumed or themselves pinned — the pin backs the
+    * returned plan). `keepSelf` keeps (id, id) batch×corpus matches —
+    * the sink's re-delivery signal. */
+  private[graft] def lshProbeStorePinned(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      batch: DataFrame, idCol: String, valueCol: String,
+      family: LshFamily, buckets: Int = 64,
+      excludeEpoch: Option[String] = None,
+      keepSelf: Boolean = false): (DataFrame, () => Unit) = {
+    val banded = pinBanded(batch, idCol, valueCol, family)
+    val idx = bandIndexProbeRead(spark, path, family, banded, excludeEpoch,
+      buckets)
+    (probeBanded(banded, idx, family, keepSelf),
+      () => Bridge.unpersistCheckpoint(banded))
+  }
+
+  private def pinBanded(batch: DataFrame, idCol: String, valueCol: String,
+                        family: LshFamily): DataFrame = {
+    family.requireProbeable()
+    Bridge.freshLeaf(family.band(family.sigs(batch, idCol, valueCol))
+      .localCheckpoint(true))
+  }
+
+  /** Both probe halves from the one banded batch. */
+  private def probeBanded(banded: DataFrame, index: DataFrame,
+                          family: LshFamily, keepSelf: Boolean): DataFrame =
+    bucketPairs(banded, family).select("id_a", "id_b")
+      .unionByName(cross(banded, index, family, keepSelf))
+      .distinct()
+
+  /** The batch×corpus half: an equi join on the band key, verified on
+    * the carried payload. */
+  private def cross(banded: DataFrame, index: DataFrame, family: LshFamily,
+                    keepSelf: Boolean): DataFrame = {
+    val corpus = family.payload.foldLeft(index.withColumnRenamed("id", "corpus_id"))(
+      (d, c) => d.withColumnRenamed(c, s"corpus_$c"))
+    val joined = banded.join(corpus, family.bucketKey)
+      .filter(if (keepSelf) lit(true) else col("id") =!= col("corpus_id"))
+    (if (family.scores)
+       joined.filter(family.keep(family.score(col, c => col(s"corpus_$c"))))
+     else joined)
+      .select(least(col("id"), col("corpus_id")).as("id_a"),
+        greatest(col("id"), col("corpus_id")).as("id_b"))
+      .distinct()
+  }
+
+  // --------------------------------------------- persisted band stores
+  /** Inner-partition bucket of a band key: every band-store row and
+    * every probe derive it from the SAME expression, so the probe's
+    * candidate-bucket set is a valid parquet partition filter by
+    * construction. */
+  private[graft] def bandBucket(buckets: Int): Column =
+    pmod(xxhash64(col("band"), col("bh")), lit(buckets.toLong)).cast("int")
+
+  /** The stored manifest carries the bucket count alongside the
+    * family's banding geometry — a probe at a different bucketing
+    * refuses instead of silently scanning partitions that cannot
+    * match its filter expression. */
+  private[graft] def bandMetaWithBuckets(meta: IndexMeta,
+                                         buckets: Int): IndexMeta =
+    IndexMeta(meta.family, meta.params + ("bb_buckets" -> buckets.toString))
+
+  /** Persisted, epoch-structured store of a family's [[bandIndex]]:
+    * band-key rows are DISJOINT across append-only batches, so the
+    * epoch fold is identity — compaction's value here is file count and
+    * partition-listing latency, not row reduction (an identity fold can
+    * never corrupt, so no family gate is needed on compact). The
+    * family's manifest records the banding geometry
+    * (`minhash_bands` numHashes/bands/shingleK/maxBucket/blockCol, …):
+    * reads, probes and appends check it, so a probe banded differently
+    * refuses loudly instead of silently missing candidates — the
+    * persisted-level enforcement of the byte-identical-band-keys
+    * contracts (q93/q97/q98/q124).
+    *
+    * Layout: rows are inner-partitioned by
+    * `bb = pmod(xxhash64(band, bh), buckets)` so a batch probe reads
+    * ONLY its own band keys' buckets as a parquet partition filter
+    * ([[bandIndexProbeRead]]). One exchange on the bucket key precedes
+    * the partitioned write: without it every input task writes a file
+    * into every bucket directory (tasks × buckets small files — listing
+    * and probe-read poison at scale); with it each bucket is one task's
+    * output, and the within-partition (band, bh) sort gives the probe's
+    * equi-join key row-group min/max pruning inside each bucket file —
+    * the certTextParts postings discipline. */
+  private def bandBucketed(index: DataFrame, buckets: Int): DataFrame =
+    index.withColumn("bb", bandBucket(buckets))
+      .repartition(col("bb"))
+      .sortWithinPartitions(col("bb"), col("band"), col("bh"))
+
+  def bandIndexWrite(corpus: DataFrame, idCol: String, valueCol: String,
+                     path: String, family: LshFamily,
+                     buckets: Int = 64): Unit = {
+    EpochIndex.bootstrap(
+      bandBucketed(bandIndex(corpus, idCol, valueCol, family), buckets),
+      path, innerPartCols = Seq("bb"))
+    IndexMeta.write(corpus.sparkSession, path,
+      bandMetaWithBuckets(family.meta, buckets))
+  }
+
+  /** Append one batch's band rows as a new epoch (idempotent per epoch
+    * name; manifest-checked). */
+  def bandIndexAppend(spark: org.apache.spark.sql.SparkSession,
+                      path: String, batch: DataFrame, idCol: String,
+                      valueCol: String, epoch: String, family: LshFamily,
+                      buckets: Int = 64): Unit = {
+    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
+    EpochIndex.append(
+      bandBucketed(bandIndex(batch, idCol, valueCol, family), buckets),
+      path, epoch, innerPartCols = Seq("bb"))
+  }
+
+  def bandIndexRead(spark: org.apache.spark.sql.SparkSession,
+                    path: String, family: LshFamily,
+                    excludeEpoch: Option[String] = None,
+                    buckets: Int = 64): DataFrame = {
+    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
+    EpochIndex.read(spark, path, excludeEpoch,
+      innerPartCols = Seq("bb"),
+      bootstrapName = "bandIndexWrite")
+      .drop(EpochIndex.EpochCol).drop("bb")
+  }
+
+  /** Partition-pruned probe read: only the buckets the batch's own
+    * band keys hash into are scanned — `batchBands` carries (band,
+    * bh) rows (any extra columns ignored), the distinct bucket set is
+    * bounded by `buckets` (driver-read under that bound), and the
+    * returned frame is exactly [[bandIndexRead]] restricted to those
+    * buckets — which, joined on the full band key, loses no candidate
+    * because every index row a batch key can match carries the batch
+    * key's own bucket. */
+  private def bandIndexProbeRead(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, family: LshFamily,
+                                 batchBands: DataFrame,
+                                 excludeEpoch: Option[String],
+                                 buckets: Int): DataFrame = {
+    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
+    val bbs = BoundedRead.boundedDriverRead(
+      batchBands.select(bandBucket(buckets).as("bb")).distinct(),
+      buckets, "bandIndexProbeRead buckets",
+      s"distinct pmod values are bounded by buckets = $buckets")
+      .map(_.getInt(0))
+    // observed = false: the probe's whole value is the bucket-pruned
+    // scan, and a CollectMetrics barrier above the store read would
+    // block the bb filter from reaching partition pruning (the
+    // ivfIndexRead precedent — see EpochIndex.read's scaladoc)
+    EpochIndex.read(spark, path, excludeEpoch,
+      innerPartCols = Seq("bb"),
+      bootstrapName = "bandIndexWrite", observed = false)
+      .filter(col("bb").isin(bbs: _*))
+      .drop(EpochIndex.EpochCol).drop("bb")
+  }
+
+  /** Every `<kind>_bands` family shares the `bb`-bucketed layout and
+    * the identity fold — band rows are disjoint, so compaction bounds
+    * the file count. */
+  private[operators] val bandStore =
+    StoreFamily.flat("*_bands", _ => identity, Seq("bb"))
+
+  /** Erase documents from any band store — disk-level (the q237
+    * discipline): band rows are per-document, so removing an id is an
+    * anti-join on `id` whatever the banding, and the erased store is
+    * exactly the retained documents' index. No geometry is passed: the
+    * store's own manifest must name a `*_bands` family in the bucketed
+    * layout. After the rewrite no retained version, epoch directory or
+    * marker holds an erased id (q238 pins post-erase probe ≡
+    * never-ingested against a from-scratch index over the retained
+    * corpus; EraseSpec pins it per retained version and epoch). Total
+    * erasure tears the store down ([[EpochIndex.eraseRewrite]]'s
+    * empty-keep path).
+    *
+    * @param ids one-column frame of victim ids (any column name) */
+  def bandIndexErase(spark: org.apache.spark.sql.SparkSession,
+                     path: String, ids: DataFrame): EpochIndex.CompactionStats = {
+    val meta = IndexMeta.read(spark, path).getOrElse(
+      throw new IllegalStateException(s"band store at $path has no " +
+        "_GRAFT_META manifest — refusing to rewrite an unidentified store"))
+    require(bandStore.accepts(meta.family),
+      s"refusing $path: its manifest says family '${meta.family}', " +
+        "bandIndexErase rewrites only *_bands stores")
+    require(meta.params.contains("bb_buckets"),
+      s"refusing $path: pre-bucketing band-store layout (no bb_buckets " +
+        "in its manifest) — rebuild it with bandIndexWrite")
+    val victims = ids.select(col(ids.columns.head).as("id")).distinct()
+    EpochIndex.eraseRewrite(spark, path,
+      p => p.join(victims, Seq("id"), "left_anti"),
+      innerPartCols = Seq("bb"))
+  }
 
   /** Connected components over a near-duplicate pair list: the final
     * dedup stage that turns pairwise matches into clusters with one
@@ -1770,142 +1676,9 @@ object Dedup {
     ids.join(labels.filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol)), Seq(idCol), "left_anti")
 
-  /** Embedding near-duplicate pairs via SRP-LSH — the sub-quadratic
-    * scale path embeddingNearDup's block-local brute force documents
-    * as missing: 64-bit signed-random-projection signatures (codegen'd
-    * SrpSignature, deterministic hyperplanes — no stored matrix),
-    * Hamming-banded into 4×16-bit buckets exactly like simHashPairs,
-    * then candidates are verified with EXACT cosine — the estimate
-    * never decides, only blocks. Shuffle volume per doc is 4 rows of
-    * (band key, id, vector); pair scoring touches only same-bucket
-    * candidates. Recall: a pair survives iff its signatures agree on
-    * one 16-bit band; for near-dups (angle → 0) band-agreement
-    * probability approaches 1 (spec-bounded on planted duplicates).
-    *
-    * @return (id_a, id_b, cos) with id_a < id_b, cos >= threshold
-    */
-  def embeddingLshPairs(df: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, maxBucket: Int = 5000,
-                        roundTo: Int = 4): DataFrame = {
-    val banded = srpBanded(df, idCol, vecCol)
-    val buckets = guardBuckets(
-      banded.groupBy("band", "bh")
-        .agg(sort_array(collect_list(struct(col("id"), col("vec")))).as("xs")),
-      "xs", maxBucket, "srp", dropSingletons = true)
-      .select(col("xs"))
-      .distinct()
-    buckets
-      .select(posexplode(col("xs")).as(Seq("i", "x")), col("xs"))
-      .select(col("x.id").as("id_a"), col("x.vec").as("vec_a"),
-        explode(slice(col("xs"), col("i") + lit(2), size(col("xs")))).as("y"))
-      .select(col("id_a"), col("y.id").as("id_b"),
-        round(Sim.cosine(col("vec_a"), col("y.vec")), roundTo).as("cos"))
-      .filter(col("cos") >= threshold)
-      .distinct()
-  }
-
-  /** Persisted SRP band index — the embedding-family twin of
-    * [[simHashBandIndex]]: (band, bh, id, vec) per vector × 4 bands
-    * of its 64-bit signed-random-projection signature, written once
-    * at corpus build. Vectors ride in the index (what a real ANN
-    * index stores) so the probe cosine-verifies without re-reading
-    * the corpus table. */
-  def srpBandIndex(df: DataFrame, idCol: String, vecCol: String,
-                   maxBucket: Int = 5000): DataFrame = {
-    val banded = srpBanded(df, idCol, vecCol)
-    guardBuckets(
-      banded.groupBy("band", "bh")
-        .agg(collect_list(struct(col("id"), col("vec"))).as("xs")),
-      "xs", maxBucket, "srp_index", dropSingletons = false)
-      .select(col("band"), col("bh"), explode(col("xs")).as("x"))
-      .select(col("band"), col("bh"), col("x.id").as("id"), col("x.vec").as("vec"))
-  }
-
-  /** Probe new vectors against a persisted [[srpBandIndex]]:
-    * within-batch pairs plus batch×corpus pairs cosine-verified at
-    * `threshold`, corpus vectors never re-read. Same contract as the
-    * other two families (q98 pins the full-run equivalence). */
-  def incrementalEmbeddingLsh(newDocs: DataFrame, idCol: String, vecCol: String,
-                              bandIndex: DataFrame, threshold: Double,
-                              maxBucket: Int = 5000,
-                              roundTo: Int = 4): DataFrame = {
-    val internal = embeddingLshPairs(newDocs, idCol, vecCol, threshold,
-      maxBucket, roundTo).select("id_a", "id_b", "cos")
-    internal.unionByName(
-      srpCross(srpBanded(newDocs, idCol, vecCol), bandIndex, threshold,
-        roundTo)).distinct()
-  }
-
-  /** The batch×corpus half of [[incrementalEmbeddingLsh]] — one
-    * definition for the in-memory and store-backed probes. */
-  private def srpCross(batchBanded: DataFrame, bandIndex: DataFrame,
-                       threshold: Double, roundTo: Int,
-                       keepSelf: Boolean = false): DataFrame =
-    batchBanded
-      .join(bandIndex
-          .withColumnRenamed("id", "corpus_id")
-          .withColumnRenamed("vec", "corpus_vec"),
-        Seq("band", "bh"))
-      .filter(if (keepSelf) lit(true) else col("id") =!= col("corpus_id"))
-      .select(least(col("id"), col("corpus_id")).as("id_a"),
-        greatest(col("id"), col("corpus_id")).as("id_b"),
-        round(Sim.cosine(col("vec"), col("corpus_vec")), roundTo).as("cos"))
-      .filter(col("cos") >= threshold)
-      .distinct()
-
-  /** Persist an [[srpBandIndex]] to the bucketed band store. */
-  def srpBandIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
-                        path: String, maxBucket: Int = 5000,
-                        buckets: Int = 64): Unit =
-    bandIndexStoreWrite(srpBandIndex(corpus, idCol, vecCol, maxBucket),
-      path, hamming64BandsMeta("srp_bands", maxBucket), buckets)
-
-  /** [[incrementalEmbeddingLsh]] against the PERSISTED store: batch
-    * SRP banding computed once (pinned), store read pruned to the
-    * batch's band-key buckets by parquet partition filter. */
-  def incrementalEmbeddingLshFromStore(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxBucket: Int = 5000, buckets: Int = 64,
-      roundTo: Int = 4, excludeEpoch: Option[String] = None): DataFrame =
-    incrementalEmbeddingLshFromStorePinned(spark, path, newDocs, idCol,
-      vecCol, threshold, maxBucket, buckets, roundTo, excludeEpoch)._1
-
-  /** [[incrementalEmbeddingLshFromStore]] with caller-managed release
-    * of the internal SRP-banding checkpoint — for foreachBatch
-    * callers with no harness sweep (see
-    * [[incrementalSimHashFromStore]]'s pin-lifecycle note). */
-  private[graft] def incrementalEmbeddingLshFromStorePinned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxBucket: Int = 5000, buckets: Int = 64,
-      roundTo: Int = 4, excludeEpoch: Option[String] = None,
-      keepSelf: Boolean = false): (DataFrame, () => Unit) = {
-    val batchBanded = Bridge.freshLeaf(
-      srpBanded(newDocs, idCol, vecCol).localCheckpoint(true))
-    val idx = bandIndexStoreProbeRead(spark, path,
-      hamming64BandsMeta("srp_bands", maxBucket), batchBanded,
-      excludeEpoch, buckets)
-    val internal = embeddingLshPairs(newDocs, idCol, vecCol, threshold,
-      maxBucket, roundTo).select("id_a", "id_b", "cos")
-    (internal.unionByName(srpCross(batchBanded, idx, threshold, roundTo,
-        keepSelf))
-      .distinct(),
-      () => Bridge.unpersistCheckpoint(batchBanded))
-  }
-
-  /** Shared SRP banding front end ([[band64]] carrying the vector for
-    * downstream cosine verification). */
-  private def srpBanded(df: DataFrame, idCol: String,
-                        vecCol: String): DataFrame =
-    band64(Par.widen(df, col(idCol))
-      .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        Sketches.srp_signature(col(vecCol)).as("sig")),
-      carry = Seq("vec"))
-
   /** Exact n-gram Jaccard over an EXPLICIT candidate pair list — the
     * scale-safe verifier stage: candidates come from a sub-quadratic
-    * generator (minHashLsh / simHashPairs), never from within-block
+    * generator ([[lshPairs]] under MinHash/SimHash), never from within-block
     * brute force. Each document's shingle set is hashed once into a
     * sorted long array; the two joins then ship 8-byte hash arrays to
     * the (sparse) candidate pairs, and scoring is a codegen'd linear
@@ -1941,7 +1714,7 @@ object Dedup {
   /** EXACT all-pairs similarity join via prefix filtering (the
     * AllPairs/PPJoin family, Bayardo et al., WWW 2007): every pair of
     * documents with token-set Jaccard ≥ `threshold` is returned —
-    * zero false negatives, the guarantee [[minHashLsh]] trades away
+    * zero false negatives, the guarantee MinHash [[lshPairs]] trades away
     * for speed. This is the join a DEDUP CERTIFICATION pass runs
     * (prove the shipped corpus has no surviving pair above t);
     * banded LSH remains the right candidate generator when a
@@ -2040,7 +1813,7 @@ object Dedup {
     * is returned, zero false negatives. This is the join a SEMANTIC
     * dedup certification pass runs (prove the shipped corpus has no
     * surviving pair above τ — the guarantee [[semanticDedup]]'s
-    * cell-blocked scoring and [[embeddingLshPairs]]'s SRP banding
+    * cell-blocked scoring and [[lshPairs]]' SRP banding
     * trade away for speed; q200 measures their recall against
     * sampled queries, this operator CERTIFIES the whole corpus).
     *

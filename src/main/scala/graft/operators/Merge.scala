@@ -282,13 +282,4 @@ object Incremental {
       .collectFirst { case (v, dir) if Fs.dataFiles(spark, dir).nonEmpty =>
         CatalystTypeConverters.convertToScala(v, dataType) }
   }
-
-  /** Keep only rows strictly above the target's high-water mark —
-    * the `WHERE x > (SELECT MAX(x) FROM {{this}})` pattern. On a
-    * partition column this prunes file partitions at scan time. */
-  def newerThan(updates: DataFrame, target: DataFrame, c: String): DataFrame =
-    highWaterMark(target, c) match {
-      case Some(hwm) => updates.filter(col(c) > lit(hwm))
-      case None      => updates
-    }
 }

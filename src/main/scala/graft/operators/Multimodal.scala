@@ -58,8 +58,6 @@ object Multimodal {
                            width: Option[Int], height: Option[Int],
                            feature: Array[Float],
                            feature_kind: String)
-  case class AssetFrames(asset_id: Long, n_frames: Int,
-                         resized_len: Int, frame_hashes: Seq[String])
   case class AssetAudioMeta(asset_id: Long, modality: String,
                             byte_len: Long,
                             audio_format: Option[String],
@@ -766,7 +764,7 @@ object Multimodal {
     * (difference hash) — grayscale, box-resize to a 9×8 grid, one bit
     * per horizontal neighbor comparison. Robust to re-encoding,
     * resizing and small edits; 64 bits, so the SimHash Hamming
-    * machinery ([[Dedup.hammingPairs64]]) clusters image near-dups
+    * machinery ([[Dedup.lshPairs]] under [[Dedup.Hamming64]]) clusters image near-dups
     * with zero new shuffle shapes.
     *
     * All arithmetic is EXACT integer math (luma in 1/1000ths,
@@ -827,10 +825,6 @@ object Multimodal {
       }
       Some(h)
     }
-
-    /** Decode (hand-rolled PNG first, then ImageIO) and hash. */
-    def dHashBytes(b: Array[Byte]): Option[Long] =
-      PngCodec.decode(b).orElse(ImageIoCodec.decode(b)).flatMap(dHash)
   }
 
   case class AssetImageHash(asset_id: Long, modality: String,
@@ -839,7 +833,8 @@ object Multimodal {
                             dhash: Option[Long])
 
   /** Per-partition perceptual-hash extraction — the front half of the
-    * image near-dup pipeline (back half: [[Dedup.hammingPairs64]] on
+    * image near-dup pipeline (back half: [[Dedup.lshPairs]] under
+    * [[Dedup.Hamming64]] on
     * the emitted signatures). */
   def extractImageHash(spark: SparkSession, assets: DataFrame): Dataset[AssetImageHash] = {
     import spark.implicits._
@@ -1128,11 +1123,6 @@ object Multimodal {
       else Some(Meta(width, math.abs(height), nFrames, truncated))
     }
 
-    /** Keep every `every`-th frame (0, every, 2·every, …) — real frame
-      * sampling over decoded frames. */
-    def sampleEvery(frames: Vector[Array[Byte]], every: Int): Vector[Array[Byte]] =
-      frames.zipWithIndex.collect { case (f, i) if i % math.max(1, every) == 0 => f }
-
     /** Nearest-neighbor resize of one RGB frame: source index
       * sx = ⌊x·w/tw⌋, sy = ⌊y·h/th⌋ — deterministic, closed-form for
       * planted gradients (the oracle recomputes it in SQL). */
@@ -1234,37 +1224,6 @@ object Multimodal {
             height = dims.map(_._3),
             feature = feature,
             feature_kind = featureKind)
-        }
-      }
-  }
-
-  /** REAL per-partition video frame pipeline: decode (AVI raw-DIB or
-    * MJPEG via `AviCodec`) → keep every `every`-th frame → nearest-
-    * neighbor resize to `targetW`×`targetH` → md5 per resized frame.
-    * Non-video payloads surface as zero frames, never errors.
-    * `n_frames` counts KEPT frames; `resized_len` is the per-frame
-    * RGB byte size after resize (tw·th·3). */
-  def resizeAndSample(spark: SparkSession, assets: DataFrame,
-                      every: Int = 2, targetW: Int = 8,
-                      targetH: Int = 8): Dataset[AssetFrames] = {
-    import spark.implicits._
-    assets.select("asset_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, payload) =>
-          // keepEvery pushes the sampling INTO the walk: skipped
-          // frames are counted, never decoded — kept-frames-only
-          // decode cost and peak memory
-          AviCodec.decode(payload, keepEvery = every) match {
-            case Some(v) =>
-              val kept = v.frames
-                .map(AviCodec.resizeNearest(_, v.width, v.height, targetW, targetH))
-              AssetFrames(id, kept.size, targetW * targetH * 3,
-                kept.map(f => md.digest(f).map("%02x".format(_)).mkString))
-            case None =>
-              AssetFrames(id, 0, 0, Seq.empty)
-          }
         }
       }
   }

@@ -223,7 +223,7 @@ object Similarity {
 
   /** A persisted IVF index: the two tables a 100 TB pipeline writes at
     * corpus-build time and only READS per query batch — the ANN twin
-    * of `Dedup.minHashBandIndex` (the persisted band table the
+    * of `Dedup.bandIndex` (the persisted band table the
     * incremental near-dup probes use). `centroids` is tiny
     * (cell, [[vecColName]]); `assignments` is one fixed-width row per
     * corpus vector (id, vec, cell), stored partitioned by

@@ -320,7 +320,7 @@ object Traversal {
     * Scale shape: pair enumeration fans out per SOURCE page as
     * out-degree², so sources above `maxOutDeg` (mega-hub index pages
     * that co-cite everything and signal nothing) are dropped BEFORE
-    * the self-join — the [[Dedup.minHashLsh]] `maxBucket` discipline
+    * the self-join — the [[Dedup.lshPairs]] `maxBucket` discipline
     * applied to graphs; the cost model is Σ min(outdeg, maxOutDeg)²
     * over sources. The final cut is a bounded-heap TakeOrdered
     * (orderBy+limit), never a global sort.

@@ -91,6 +91,14 @@ object Catalog {
         (col("n_missed") === 0 && col("n_spurious") === 0).as("sets_match"))
   }
 
+  /** The source-blocked, recall-oriented MinHash banding of
+    * q20/q42/q93/q137/q189: 32 bands of 2 rows over unigram shingles,
+    * candidate-only (an exact verifier owns the 0.5 cut), the skew
+    * guard above the largest real clique. */
+  private val sourceMinHash = Dedup.MinHash(numHashes = 64, bands = 32,
+    shingleK = 1, threshold = 0.0, maxBucket = 10000,
+    blockCol = Some("source"))
+
   // ---------------------------------------------------------------- A3/A1/A2
   val q1Agg = q("q1_agg",
     "Grouped SUM/AVG/COUNT (A2,A3) — TPC-H Q1-shaped pricing summary",
@@ -480,9 +488,8 @@ object Catalog {
     val docs = Tables.documents(s, d)
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       blockCol = "source", k = 1, threshold = 0.5).select("id_a", "id_b")
-    val candidates = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source")).select("id_a", "id_b")
+    val candidates = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
+      .select("id_a", "id_b")
     val recalled = exact.join(candidates, Seq("id_a", "id_b"), "left_semi")
     exact.agg(count(lit(1)).as("n_true_pairs"))
       .crossJoin(broadcast(recalled.agg(count(lit(1)).as("n_recalled"))))
@@ -530,7 +537,8 @@ object Catalog {
     val planted = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("text"))
     val corpus = docs.unionByName(planted)
-    val banded = Dedup.simHashPairs(corpus, "doc_id", "text", maxHamming = 3)
+    val banded = Dedup.lshPairs(corpus, "doc_id", "text",
+      Dedup.SimHash(maxHamming = 3))
       .select("id_a", "id_b")
     val sigs = corpus.select(col("doc_id").as("id"), col("source"),
       Dedup.simHash(col("text")).as("sig"))
@@ -981,9 +989,7 @@ object Catalog {
     // correctness knob: near-dup cliques legitimately form large
     // 2-row-band buckets, so it sits above the largest real clique.
     val docs = Tables.documents(s, d)
-    val cands = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val cands = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
     val pairs = Dedup.ngramJaccardVerify(docs, cands, "doc_id", "text",
       k = 1, threshold = 0.5)
     Dedup.connectedComponents(pairs)
@@ -2290,7 +2296,7 @@ object Catalog {
   }
 
   // ---------------------------------------------------------------- SRP embedding LSH
-  /** Dedup.embeddingLshPairs — the sub-quadratic embedding near-dup
+  /** Dedup.lshPairs under SRP — the sub-quadratic embedding near-dup
     * path (SRP signatures + Hamming banding + exact-cosine verify).
     * The synthetic embeddings carry no true near-duplicates (SRP
     * banding targets cosine ≈ 1), so the query injects an exact copy
@@ -2313,9 +2319,9 @@ object Catalog {
     val base = Tables.embeddings(s, d)
     val planted = base.filter(pmod(col("vec_id"), lit(10)) === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    Dedup.embeddingLshPairs(
+    Dedup.lshPairs(
       base.select(col("vec_id"), col("embedding")).unionByName(planted),
-      "vec_id", "embedding", threshold = 0.99)
+      "vec_id", "embedding", Dedup.Srp(threshold = 0.99))
   }
 
   // ---------------------------------------------------------------- multimodal audio decode (oracled)
@@ -2618,7 +2624,7 @@ object Catalog {
   // ---------------------------------------------------------------- dedup: incremental MinHash-LSH vs persisted band index
   /** The near-dup sibling of q90's exact bloom dedup: a daily batch is
     * probed against the corpus's PERSISTED band index
-    * (`Dedup.minHashBandIndex` — the table a 100 TB pipeline writes at
+    * (`Dedup.bandIndex` — the table a 100 TB pipeline writes at
     * corpus build and only range-reads per batch), so the corpus is
     * never re-tokenized or re-signatured. Correctness contract: with
     * the skew guard above the largest real clique, the incremental
@@ -2638,15 +2644,10 @@ object Catalog {
     // filter — PlanAuditSpec gates partitionFilters.nonEmpty on it
     val root = scratchDir(s, "q93_lshidx")
     graft.sources.Fs.deleteRecursively(s, root)
-    Dedup.minHashBandIndexWrite(corpus, "doc_id", "text", root,
-      numHashes = 64, bands = 32, shingleK = 1,
-      maxBucket = 10000, blockCol = Some("source"))
-    val incremental = Dedup.incrementalMinHashLshFromStore(s, root, batch,
-      "doc_id", "text", numHashes = 64, bands = 32, shingleK = 1,
-      maxBucket = 10000, blockCol = Some("source"))
-    val full = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    Dedup.bandIndexWrite(corpus, "doc_id", "text", root, sourceMinHash)
+    val incremental = Dedup.lshProbeStore(s, root, batch, "doc_id", "text",
+      sourceMinHash)
+    val full = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
       .select("id_a", "id_b")
     restrictedEquivalence(batch, batch.select(col("doc_id").as("id_a")),
       full, incremental.select("id_a", "id_b"), "n_batch_docs")
@@ -2831,7 +2832,7 @@ object Catalog {
   /** q93's SimHash twin: the daily batch probes the corpus's
     * PERSISTED (band, bh, id, sig) index — signatures ride in the
     * index so the probe Hamming-verifies without corpus text — and
-    * the result must equal the full-corpus `simHashPairs` run
+    * the result must equal the full-corpus SimHash `lshPairs` run
     * restricted to pairs touching the batch. Computed both ways
     * in-engine, emitted as a boolean the oracle pins alongside the
     * batch size DuckDB recomputes. */
@@ -2845,12 +2846,12 @@ object Catalog {
     // persisted bucketed store + partition-pruned probe (round 16)
     val root = scratchDir(s, "q97_shidx")
     graft.sources.Fs.deleteRecursively(s, root)
-    Dedup.simHashBandIndexWrite(corpus, "doc_id", "text", root,
-      maxBucket = 10000)
-    val incremental = Dedup.incrementalSimHashFromStore(s, root, batch,
-      "doc_id", "text", maxHamming = 3, maxBucket = 10000)
-    val full = Dedup.simHashPairs(docs, "doc_id", "text",
-      maxHamming = 3, maxBucket = 10000).select("id_a", "id_b")
+    val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
+    Dedup.bandIndexWrite(corpus, "doc_id", "text", root, lsh)
+    val incremental = Dedup.lshProbeStore(s, root, batch, "doc_id", "text",
+      lsh)
+    val full = Dedup.lshPairs(docs, "doc_id", "text", lsh)
+      .select("id_a", "id_b")
     restrictedEquivalence(batch, batch.select(col("doc_id").as("id_a")),
       full, incremental.select("id_a", "id_b"), "n_batch_docs")
   }
@@ -2860,7 +2861,7 @@ object Catalog {
     * new EMBEDDINGS probe the corpus's persisted SRP band index
     * (vectors ride in the index, as a real ANN index stores them)
     * and the cosine-verified result must equal the full-corpus
-    * `embeddingLshPairs` run restricted to pairs touching the batch.
+    * SRP `lshPairs` run restricted to pairs touching the batch.
     * With this, every near-dup family — token MinHash, bitwise
     * SimHash, embedding SRP — has the same daily-batch shape: probe
     * a stored index, never re-process the corpus. */
@@ -2881,17 +2882,15 @@ object Catalog {
     val batch = vecs.filter(pmod(col("vec_id"), lit(3)) === 0)
       .unionByName(planted)
     val corpus = vecs.filter(pmod(col("vec_id"), lit(3)) =!= 0)
-    val threshold = 0.99
+    val lsh = Dedup.Srp(threshold = 0.99, maxBucket = 10000)
     // persisted bucketed store + partition-pruned probe (round 16)
     val root = scratchDir(s, "q98_srpidx")
     graft.sources.Fs.deleteRecursively(s, root)
-    Dedup.srpBandIndexWrite(corpus, "vec_id", "embedding", root,
-      maxBucket = 10000)
-    val incremental = Dedup.incrementalEmbeddingLshFromStore(s, root, batch,
-      "vec_id", "embedding", threshold, maxBucket = 10000)
-      .select("id_a", "id_b")
-    val full = Dedup.embeddingLshPairs(vecs.unionByName(planted),
-      "vec_id", "embedding", threshold, maxBucket = 10000)
+    Dedup.bandIndexWrite(corpus, "vec_id", "embedding", root, lsh)
+    val incremental = Dedup.lshProbeStore(s, root, batch, "vec_id",
+      "embedding", lsh)
+    val full = Dedup.lshPairs(vecs.unionByName(planted),
+      "vec_id", "embedding", lsh)
       .select("id_a", "id_b")
     restrictedEquivalence(batch, batch.select(col("vec_id").as("id_a")),
       full, incremental.select("id_a", "id_b"), "n_batch_vecs")
@@ -4005,7 +4004,7 @@ object Catalog {
         col("dhash"))
   }
 
-  /** Image near-dup pairs: [[Dedup.hammingPairs64]] over the q122
+  /** Image near-dup pairs: Hamming64 [[Dedup.lshPairs]] over the q122
     * hashes. At maxHamming = 3 the banded output is EXACTLY the
     * Hamming-≤3 pair set (pigeonhole over 4×16-bit bands), so the
     * oracle pins it with a brute-force all-pairs scan over the
@@ -4021,7 +4020,7 @@ object Catalog {
     val sigs = Multimodal.extractImageHash(s, plantedDhashAssets(s, d)).toDF()
       .filter(col("is_image"))
       .select(col("asset_id").as("id"), col("dhash").as("sig"))
-    Dedup.hammingPairs64(sigs, maxHamming = 3, family = "image_dhash")
+    Dedup.lshPairs(sigs, "id", "sig", Dedup.Hamming64("image_dhash"))
       .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
   }
 
@@ -4029,13 +4028,13 @@ object Catalog {
     * for the IMAGE family, through the PERSISTED bucketed band store
     * (round 17: the image family joins the text families' store
     * discipline — corpus dHash band rows land once in a
-    * `bb`-bucketed [[Dedup.bandIndexStoreWrite]] store, and the
+    * `bb`-bucketed [[Dedup.bandIndexWrite]] store, and the
     * batch's probe reads ONLY its own band-key buckets as a parquet
-    * partition filter via [[Dedup.incrementalHamming64FromStore]]);
+    * partition filter via [[Dedup.lshProbeStore]]);
     * the corpus is never re-decoded or re-hashed, and at 100 TB the
     * probe's scan cost is ∝ the batch's bucket set, not the corpus
     * index. Proof in-engine, pinned by the oracle: probe output ≡
-    * full-corpus [[Dedup.hammingPairs64]] restricted to pairs
+    * full-corpus [[Dedup.lshPairs]] restricted to pairs
     * touching the batch. Groups of 4 planted variants span the
     * batch/corpus split (doc_id % 3), so cross pairs genuinely
     * exercise the store join. */
@@ -4051,13 +4050,10 @@ object Catalog {
     val corpus = sigs.filter(pmod(col("id"), lit(3)) =!= 0)
     val root = scratchDir(s, "q124_dhash_store")
     graft.sources.Fs.deleteRecursively(s, root)
-    Dedup.bandIndexStoreWrite(
-      Dedup.hamming64BandIndex(corpus, family = "image_dhash_index"),
-      root, Dedup.hamming64BandsMeta("image_dhash_bands", 5000))
-    val incremental = Dedup.incrementalHamming64FromStore(s, root, batch,
-      "image_dhash_bands", maxHamming = 3, family = "image_dhash")
-    val full = Dedup.hammingPairs64(sigs, maxHamming = 3,
-      family = "image_dhash").select("id_a", "id_b")
+    val lsh = Dedup.Hamming64("image_dhash", maxHamming = 3)
+    Dedup.bandIndexWrite(corpus, "id", "sig", root, lsh)
+    val incremental = Dedup.lshProbeStore(s, root, batch, "id", "sig", lsh)
+    val full = Dedup.lshPairs(sigs, "id", "sig", lsh).select("id_a", "id_b")
     restrictedEquivalence(batch, batch.select(col("id").as("id_a")),
       full, incremental.select("id_a", "id_b"), "n_batch_images")
   }
@@ -4583,9 +4579,7 @@ object Catalog {
       |       CAST(n_members - 1 AS BIGINT) AS n_dropped
       |FROM sel WHERE rk = 1""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val cands = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val cands = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
     val pairs = Dedup.ngramJaccardVerify(docs, cands, "doc_id", "text",
       k = 1, threshold = 0.5)
     val scored = docs.select(col("doc_id"),
@@ -7341,9 +7335,7 @@ object Catalog {
     // verify → CC); the split itself adds ONE left join (labels hold
     // only clustered docs — broadcast-small) + a scan-side md5.
     val docs = Tables.documents(s, d)
-    val cands = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val cands = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
     val pairs = Dedup.ngramJaccardVerify(docs, cands, "doc_id", "text",
       k = 1, threshold = 0.5)
     Splits.clusterSafeSplit(docs, "doc_id", Dedup.connectedComponents(pairs))
@@ -9373,7 +9365,7 @@ object Catalog {
 
   /** q237's discipline extended to the LEGACY band-index families
     * (the round-16 task): erase documents from the persisted
-    * (bucketed) SimHash band store with [[Dedup.simHashBandIndexErase]]
+    * (bucketed) SimHash band store with [[Dedup.bandIndexErase]]
     * — a disk-level [[EpochIndex.eraseRewrite]] — then prove, in one
     * result the oracle pins, that (a) the partition-pruned probe
     * against the erased store equals the probe against a FROM-SCRATCH
@@ -9396,23 +9388,20 @@ object Catalog {
       .select("doc_id")
     val root = scratchDir(s, "q238_bandidx")
     graft.sources.Fs.deleteRecursively(s, root)
-    Dedup.simHashBandIndexWrite(corpus, "doc_id", "text", root,
-      maxBucket = 10000)
-    Dedup.simHashBandIndexErase(s, root, victims, maxBucket = 10000)
-    val erased = Dedup.incrementalSimHashFromStore(s, root, batch,
-      "doc_id", "text", maxHamming = 3, maxBucket = 10000)
+    val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
+    Dedup.bandIndexWrite(corpus, "doc_id", "text", root, lsh)
+    Dedup.bandIndexErase(s, root, victims)
+    val erased = Dedup.lshProbeStore(s, root, batch, "doc_id", "text", lsh)
       .select("id_a", "id_b")
     val retained = corpus.join(victims, Seq("doc_id"), "left_anti")
-    val fresh = Dedup.incrementalSimHash(batch, "doc_id", "text",
-      Dedup.simHashBandIndex(retained, "doc_id", "text",
-        maxBucket = 10000), maxHamming = 3, maxBucket = 10000)
+    val fresh = Dedup.lshProbe(batch, "doc_id", "text",
+      Dedup.bandIndex(retained, "doc_id", "text", lsh), lsh)
       .select("id_a", "id_b")
     val missed = fresh.join(erased, Seq("id_a", "id_b"), "left_anti")
       .agg(count(lit(1)).as("n_missed"))
     val spurious = erased.join(fresh, Seq("id_a", "id_b"), "left_anti")
       .agg(count(lit(1)).as("n_spurious"))
-    val victimRefs = Dedup.bandIndexStoreRead(s, root,
-      Dedup.hamming64BandsMeta("simhash_bands", 10000))
+    val victimRefs = Dedup.bandIndexRead(s, root, lsh)
       .join(victims.select(col("doc_id").as("id")), Seq("id"), "left_semi")
       .agg(count(lit(1)).as("n_victim_refs"))
     batch.agg(count(lit(1)).as("n_batch_docs"))

@@ -1275,18 +1275,23 @@ object Streaming {
       .start()
   }
 
-  /** Streaming NEAR-dup ingest over the persisted (bucketed) SimHash
-    * band store — the near-duplicate completion of
+  /** Streaming NEAR-dup ingest over a persisted (bucketed) band store,
+    * for any banded-LSH family ([[graft.operators.Dedup.LshFamily]]:
+    * SimHash for telescoped/typo-level text near-dups, a candidate-only
+    * MinHash for shingle-overlap near-dups, SRP for embedding near-dups
+    * — semantic dedup at the door) — the near-duplicate completion of
     * [[dedupIngestSink]]'s exact shape and the streaming form of the
-    * q97/q238 family: each micro-batch probes the STORED index
+    * q93/q97/q98/q238 family: each micro-batch probes the STORED index
     * (partition-pruned to the batch's own band-key buckets,
-    * [[graft.operators.Dedup.incrementalSimHashFromStore]]), keeps
-    * only docs whose near-dup component touches no standing corpus
-    * doc AND whose id is the component's minimum among batch members
-    * (the q42 canonical-keep policy, per batch), then lands the
-    * SURVIVORS' band rows in the index and the survivors in the
-    * corpus. Dropped docs never pollute either store — the exact
-    * sink's accepted-only contract.
+    * [[graft.operators.Dedup.lshProbeStore]]), keeps only docs whose
+    * near-dup component touches no standing corpus doc AND whose id is
+    * the component's minimum among batch members (the q42
+    * canonical-keep policy, per batch), then lands the SURVIVORS' band
+    * rows in the index and the survivors in the corpus. Dropped docs
+    * never pollute either store — the exact sink's accepted-only
+    * contract. LSH recall caveat carried from the batch operator:
+    * candidates are banded, so a true pair missed by every band is
+    * admitted — the family's banding bound.
     *
     * Replay idempotency is the cert-sink argument: the probe EXCLUDES
     * this epoch's own index partial, within-batch pairs are a pure
@@ -1294,9 +1299,9 @@ object Streaming {
     * overwrites — an at-least-once redelivery recomputes the
     * identical survivor set and rewrites its own partitions. A
     * standing corpus with an EMPTY index refuses at activation
-    * (every document produces a signature row, so an empty index
-    * under a standing corpus is always torn state, never legitimate
-    * — no tolerance case, unlike the text-cert sink).
+    * (every document produces a band row, so an empty index under a
+    * standing corpus is always torn state, never legitimate — no
+    * tolerance case, unlike the text-cert sink).
     *
     * Id contract: `idCol` must be integral — the canonical keep and
     * every RTBF path cast ids to long, and a string id NULLs out of
@@ -1304,18 +1309,22 @@ object Streaming {
     * upstream with `xxhash64(natural_key)` (the activation refusal
     * prints the recipe; docs/DEPLOYMENT.md "Streaming ingest: the id
     * contract" has the full rationale, including why the min-id keep
-    * needs ids STABLE across re-deliveries). */
+    * needs ids STABLE across re-deliveries).
+    *
+    * @param valueCol the family's signature input (text, or vector
+    *                 for SRP) */
   def nearDupIngestSink(stream: DataFrame, spark: SparkSession,
                         corpusPath: String, indexPath: String,
-                        idCol: String, textCol: String,
-                        checkpoint: String, maxHamming: Int = 3,
-                        maxBucket: Int = 5000,
+                        idCol: String, valueCol: String,
+                        checkpoint: String,
+                        family: graft.operators.Dedup.LshFamily =
+                          graft.operators.Dedup.SimHash(),
                         buckets: Int = 64): StreamingQuery = {
     import graft.operators.{Dedup, EpochIndex, IndexMeta}
-    val meta = Dedup.hamming64BandsMeta("simhash_bands", maxBucket)
+    family.requireProbeable()
     nearDupActivationChecks(stream, spark, corpusPath, indexPath, idCol,
-      checkpoint,
-      "nearDupIngestSink", "simHashBandIndexWrite")
+      checkpoint, "nearDupIngestSink",
+      s"Dedup.bandIndexWrite(corpus, idCol, valueCol, path, $family)")
     val token = runToken(spark, checkpoint)
     stream.writeStream
       .trigger(Trigger.AvailableNow())
@@ -1323,22 +1332,21 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         if (!batch.isEmpty) {
           IndexMeta.writeIfAbsent(spark, indexPath,
-            Dedup.bandMetaWithBuckets(meta, buckets))
+            Dedup.bandMetaWithBuckets(family.meta, buckets))
           val epoch = s"$token-$epochId"
           val (pairs, freePin) =
             if (EpochIndex.nonEmpty(spark, indexPath,
                 innerPartCols = Seq("bb")))
-              Dedup.incrementalSimHashFromStorePinned(spark, indexPath,
-                batch, idCol, textCol, maxHamming, maxBucket, buckets,
-                excludeEpoch = Some(epoch), keepSelf = true)
-            else (Dedup.simHashPairs(batch, idCol, textCol, maxHamming,
-              maxBucket).select("id_a", "id_b"), () => ())
+              Dedup.lshProbeStorePinned(spark, indexPath, batch, idCol,
+                valueCol, family, buckets, excludeEpoch = Some(epoch),
+                keepSelf = true)
+            else (Dedup.lshPairs(batch, idCol, valueCol, family)
+              .select("id_a", "id_b"), () => ())
           val accepted = nearDupAccepted(batch, idCol, pairs, freePin)
           try {
             if (!accepted.isEmpty) {
-              Dedup.bandIndexStoreAppend(spark, indexPath,
-                Dedup.simHashBandIndex(accepted, idCol, textCol,
-                  maxBucket), epoch, meta, buckets)
+              Dedup.bandIndexAppend(spark, indexPath, accepted, idCol,
+                valueCol, epoch, family, buckets)
               epochWrite(accepted, corpusPath, token, epochId)
             }
           } finally release(accepted)
@@ -1347,7 +1355,7 @@ object Streaming {
       .start()
   }
 
-  /** Shared activation refusals of the near-dup ingest sinks: the
+  /** Activation refusals of [[nearDupIngestSink]]: the
     * flat-layout check, the corpus-ahead-of-index check (every
     * document yields a signature/banding row, so an empty index under
     * a standing corpus is always torn state — no tolerance case,
@@ -1378,7 +1386,7 @@ object Streaming {
         "standing corpus first, or point the sink at a fresh corpusPath")
   }
 
-  /** Shared keep policy of the near-dup ingest sinks: a batch doc
+  /** Keep policy of [[nearDupIngestSink]]: a batch doc
     * survives iff its near-dup component touches no standing-corpus
     * doc AND its id is the component's minimum among batch members
     * (the q42 canonical-keep policy, per batch); unpaired docs
@@ -1430,131 +1438,6 @@ object Streaming {
         live.join(dropIds, Seq(idCol), "left_anti").localCheckpoint(true)
       } finally release(comp)
     } finally freePin()
-  }
-
-  /** Streaming near-dup ingest over the persisted (bucketed) SRP band
-    * store — the EMBEDDING member of the near-dup ingest family
-    * ([[nearDupIngestSink]] = Hamming over text SimHash,
-    * [[nearDupTextIngestSink]] = Jaccard over shingle MinHash, this =
-    * cosine over signed-random-projection signatures): each batch of
-    * (id, vector) rows probes the stored SRP index partition-pruned
-    * to its own band-key buckets
-    * ([[graft.operators.Dedup.incrementalEmbeddingLshFromStore]]),
-    * cosine-verifies candidates at `threshold`, and lands only the
-    * canonical survivors — semantic dedup at the door for an
-    * embedding stream. Keep policy, replay idempotency, accepted-only
-    * writes and every activation refusal are shared with the other
-    * two (every vector yields an SRP signature — zero-norm vectors
-    * band too, they just verify cosine 0 — so the empty-index-under-
-    * standing-corpus refusal has no tolerance case here either). LSH
-    * recall caveat: a true pair whose signatures disagree on all 4
-    * bands is admitted — the [[graft.operators.Dedup
-    * .embeddingLshPairs]] bound at Hamming-banding granularity. Same
-    * id contract as the SimHash sink: integral `idCol` only
-    * (docs/DEPLOYMENT.md "Streaming ingest: the id contract"). */
-  def nearDupVecIngestSink(stream: DataFrame, spark: SparkSession,
-                           corpusPath: String, indexPath: String,
-                           idCol: String, vecCol: String,
-                           checkpoint: String, threshold: Double,
-                           maxBucket: Int = 5000,
-                           buckets: Int = 64): StreamingQuery = {
-    import graft.operators.{Dedup, EpochIndex, IndexMeta}
-    val meta = Dedup.hamming64BandsMeta("srp_bands", maxBucket)
-    nearDupActivationChecks(stream, spark, corpusPath, indexPath, idCol,
-      checkpoint,
-      "nearDupVecIngestSink", "srpBandIndexWrite")
-    val token = runToken(spark, checkpoint)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          IndexMeta.writeIfAbsent(spark, indexPath,
-            Dedup.bandMetaWithBuckets(meta, buckets))
-          val epoch = s"$token-$epochId"
-          val (pairs, freePin) =
-            if (EpochIndex.nonEmpty(spark, indexPath,
-                innerPartCols = Seq("bb")))
-              Dedup.incrementalEmbeddingLshFromStorePinned(spark,
-                indexPath, batch, idCol, vecCol, threshold, maxBucket,
-                buckets, excludeEpoch = Some(epoch), keepSelf = true)
-            else (Dedup.embeddingLshPairs(batch, idCol, vecCol,
-              threshold, maxBucket), () => ())
-          val accepted = nearDupAccepted(batch, idCol,
-            pairs.select("id_a", "id_b"), freePin)
-          try {
-            if (!accepted.isEmpty) {
-              Dedup.bandIndexStoreAppend(spark, indexPath,
-                Dedup.srpBandIndex(accepted, idCol, vecCol, maxBucket),
-                epoch, meta, buckets)
-              epochWrite(accepted, corpusPath, token, epochId)
-            }
-          } finally release(accepted)
-        }
-      }
-      .start()
-  }
-
-  /** Streaming near-dup ingest over the persisted (bucketed) MinHash
-    * band store — [[nearDupIngestSink]]'s text-shingle (Jaccard)
-    * twin: the Hamming sink catches telescoped/typo-level near-dups;
-    * this one catches shingle-overlap near-dups (boilerplate
-    * recombination, partial copies), probing the STORED minhash index
-    * partition-pruned to the batch's own band-key buckets
-    * ([[graft.operators.Dedup.incrementalMinHashLshFromStore]]).
-    * Keep policy, replay idempotency, accepted-only writes and every
-    * activation refusal are the SimHash sink's, shared above. LSH
-    * recall caveat carried from the batch operator: candidates are
-    * banded, so pairs missed by every band are admitted — same
-    * probability bound as [[graft.operators.Dedup.minHashLsh]] at the
-    * given (numHashes, bands). Same id contract as the SimHash sink:
-    * integral `idCol` only (docs/DEPLOYMENT.md "Streaming ingest:
-    * the id contract"). */
-  def nearDupTextIngestSink(stream: DataFrame, spark: SparkSession,
-                            corpusPath: String, indexPath: String,
-                            idCol: String, textCol: String,
-                            checkpoint: String, numHashes: Int = 64,
-                            bands: Int = 16, shingleK: Int = 3,
-                            maxBucket: Int = 200,
-                            buckets: Int = 64): StreamingQuery = {
-    import graft.operators.{Dedup, EpochIndex, IndexMeta}
-    val meta = Dedup.minHashBandsMeta(numHashes, bands, shingleK,
-      maxBucket, blockCol = None)
-    nearDupActivationChecks(stream, spark, corpusPath, indexPath, idCol,
-      checkpoint,
-      "nearDupTextIngestSink", "minHashBandIndexWrite")
-    val token = runToken(spark, checkpoint)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          IndexMeta.writeIfAbsent(spark, indexPath,
-            Dedup.bandMetaWithBuckets(meta, buckets))
-          val epoch = s"$token-$epochId"
-          val (pairs, freePin) =
-            if (EpochIndex.nonEmpty(spark, indexPath,
-                innerPartCols = Seq("bb")))
-              Dedup.incrementalMinHashLshFromStorePinned(spark, indexPath,
-                batch, idCol, textCol, numHashes, bands, shingleK,
-                maxBucket, blockCol = None, buckets,
-                excludeEpoch = Some(epoch), keepSelf = true)
-            else (Dedup.minHashLsh(batch, idCol, textCol, numHashes,
-              bands, shingleK, threshold = 0.0, maxBucket)
-              .select("id_a", "id_b"), () => ())
-          val accepted = nearDupAccepted(batch, idCol, pairs, freePin)
-          try {
-            if (!accepted.isEmpty) {
-              Dedup.bandIndexStoreAppend(spark, indexPath,
-                Dedup.minHashBandIndex(accepted, idCol, textCol,
-                  numHashes, bands, shingleK, maxBucket), epoch, meta,
-                buckets)
-              epochWrite(accepted, corpusPath, token, epochId)
-            }
-          } finally release(accepted)
-        }
-      }
-      .start()
   }
 
   /** Streaming retrieval-index ingest — the continuous form of

@@ -24,9 +24,9 @@ object Scratch {
     // second pass is the steady-state number the bench reports
     for (round <- 1 to 2) {
       println(s"[scratch] ---- round $round")
-      val cands = Dedup.minHashLsh(docs, "doc_id", "text",
+      val cands = Dedup.lshPairs(docs, "doc_id", "text", Dedup.MinHash(
         numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-        maxBucket = 10000, blockCol = Some("source"))
+        maxBucket = 10000, blockCol = Some("source")))
       time("lsh_candidates")(println("cands=" + cands.count()))
 
       val pairs = Dedup.ngramJaccardVerify(docs, cands, "doc_id", "text",

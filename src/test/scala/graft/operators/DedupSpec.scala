@@ -11,6 +11,12 @@ class DedupSpec extends SparkSpecBase {
   private val docA2 = "The quick brown fox jumps over the lazy dog again and again!"  // near-identical
   private val docB = "completely different content about spark query engines and shuffles"
 
+  /** The q42 banding: source-blocked, 32 bands of 2 rows, unigram
+    * shingles, candidate-only. */
+  private val sourceMinHash = Dedup.MinHash(numHashes = 64, bands = 32,
+    shingleK = 1, threshold = 0.0, maxBucket = 10000,
+    blockCol = Some("source"))
+
   private def docs = Seq(
     (1L, docA, "s1"), (2L, docA2, "s1"), (3L, docB, "s1"),
     (4L, docA, "s2")  // exact dup of 1 (after canonicalization)
@@ -30,8 +36,8 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("minHashLsh surfaces exact and near duplicates, not unrelated docs") {
-    val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 16, shingleK = 2, threshold = 0.5)
+    val pairs = Dedup.lshPairs(docs, "doc_id", "text",
+      Dedup.MinHash(numHashes = 64, bands = 16, shingleK = 2, threshold = 0.5))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L)))  // exact dup: signature identical
     assert(pairs.contains((1L, 2L)))  // near dup
@@ -47,7 +53,8 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("simHash: identical text → identical signature; hamming 0 pair found") {
-    val pairs = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.lshPairs(docs, "doc_id", "text",
+      Dedup.SimHash(maxHamming = 3))
       .as[(Long, Long, Long)].collect()
     val exact = pairs.find(p => p._1 == 1L && p._2 == 4L)
     assert(exact.exists(_._3 === 0L))
@@ -72,9 +79,7 @@ class DedupSpec extends SparkSpecBase {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // blockCol=source ⇒ candidates are same-source by construction
     // and threshold=0 skips signature scoring (est_jaccard null)
-    val cands = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val cands = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
     assert(cands.filter($"est_jaccard".isNotNull).count() === 0)
     val verified = Dedup.ngramJaccardVerify(docs, cands, "doc_id", "text",
       k = 1, threshold = 0.5)
@@ -155,17 +160,11 @@ class DedupSpec extends SparkSpecBase {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val batch = docs.filter($"doc_id" % 3 === 0)
     val corpus = docs.filter($"doc_id" % 3 =!= 0)
-    val index = Dedup.minHashBandIndex(corpus, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, maxBucket = 10000,
-      blockCol = Some("source"))
-    val incr = Dedup.incrementalMinHashLsh(batch, "doc_id", "text", index,
-      numHashes = 64, bands = 32, shingleK = 1, maxBucket = 10000,
-      blockCol = Some("source"))
+    val index = Dedup.bandIndex(corpus, "doc_id", "text", sourceMinHash)
+    val incr = Dedup.lshProbe(batch, "doc_id", "text", index, sourceMinHash)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val batchIds = batch.select("doc_id").as[Long].collect().toSet
-    val full = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val full = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val touching = full.filter(p => batchIds(p._1) || batchIds(p._2))
     assert(touching.nonEmpty, "equivalence must not be vacuous")
@@ -174,19 +173,22 @@ class DedupSpec extends SparkSpecBase {
 
     // empty batch → empty output; empty corpus index → batch-internal only
     val emptyBatch = batch.limit(0)
-    assert(Dedup.incrementalMinHashLsh(emptyBatch, "doc_id", "text", index,
-      numHashes = 64, bands = 32, shingleK = 1, maxBucket = 10000,
-      blockCol = Some("source")).count() === 0L)
+    assert(Dedup.lshProbe(emptyBatch, "doc_id", "text", index,
+      sourceMinHash).count() === 0L)
     val emptyIndex = index.limit(0)
-    val internalOnly = Dedup.incrementalMinHashLsh(batch, "doc_id", "text", emptyIndex,
-      numHashes = 64, bands = 32, shingleK = 1, maxBucket = 10000,
-      blockCol = Some("source"))
+    val internalOnly = Dedup.lshProbe(batch, "doc_id", "text", emptyIndex,
+      sourceMinHash)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val batchOnly = Dedup.minHashLsh(batch, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val batchOnly = Dedup.lshPairs(batch, "doc_id", "text", sourceMinHash)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(internalOnly === batchOnly)
+    // ids-only bands cannot score a batch×corpus pair: a scoring
+    // MinHash probe refuses instead of verifying half its output
+    val scoring = intercept[IllegalArgumentException] {
+      Dedup.lshProbe(batch, "doc_id", "text", index,
+        sourceMinHash.copy(threshold = 0.5))
+    }
+    assert(scoring.getMessage.contains("threshold = 0.0"), scoring.getMessage)
   }
 
   test("incrementalSimHash ≡ full-corpus banding restricted to the batch (sf0.001)") {
@@ -194,13 +196,12 @@ class DedupSpec extends SparkSpecBase {
       .select("doc_id", "text")
     val batch = docs.filter($"doc_id" % 3 === 0)
     val corpus = docs.filter($"doc_id" % 3 =!= 0)
-    val index = Dedup.simHashBandIndex(corpus, "doc_id", "text", maxBucket = 10000)
-    val incr = Dedup.incrementalSimHash(batch, "doc_id", "text", index,
-      maxHamming = 3, maxBucket = 10000)
+    val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
+    val index = Dedup.bandIndex(corpus, "doc_id", "text", lsh)
+    val incr = Dedup.lshProbe(batch, "doc_id", "text", index, lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val batchIds = batch.select("doc_id").as[Long].collect().toSet
-    val full = Dedup.simHashPairs(docs, "doc_id", "text",
-      maxHamming = 3, maxBucket = 10000)
+    val full = Dedup.lshPairs(docs, "doc_id", "text", lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val touching = full.filter(p => batchIds(p._1) || batchIds(p._2))
     assert(touching.nonEmpty, "equivalence must not be vacuous")
@@ -208,13 +209,12 @@ class DedupSpec extends SparkSpecBase {
       s"missed=${(touching -- incr).take(5)} spurious=${(incr -- touching).take(5)}")
 
     // empty batch → empty; empty index → batch-internal pairs only
-    assert(Dedup.incrementalSimHash(batch.limit(0), "doc_id", "text", index)
-      .count() === 0L)
-    val internalOnly = Dedup.incrementalSimHash(batch, "doc_id", "text",
-      index.limit(0), maxHamming = 3, maxBucket = 10000)
+    assert(Dedup.lshProbe(batch.limit(0), "doc_id", "text", index,
+      Dedup.SimHash()).count() === 0L)
+    val internalOnly = Dedup.lshProbe(batch, "doc_id", "text",
+      index.limit(0), lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val batchOnly = Dedup.simHashPairs(batch, "doc_id", "text",
-      maxHamming = 3, maxBucket = 10000)
+    val batchOnly = Dedup.lshPairs(batch, "doc_id", "text", lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(internalOnly === batchOnly)
   }
@@ -228,26 +228,25 @@ class DedupSpec extends SparkSpecBase {
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     val batch = vecs.filter($"vec_id" % 3 === 0).unionByName(planted)
     val corpus = vecs.filter($"vec_id" % 3 =!= 0)
-    val index = Dedup.srpBandIndex(corpus, "vec_id", "embedding", maxBucket = 10000)
-    val incr = Dedup.incrementalEmbeddingLsh(batch, "vec_id", "embedding",
-      index, threshold = 0.99, maxBucket = 10000)
+    val lsh = Dedup.Srp(threshold = 0.99, maxBucket = 10000)
+    val index = Dedup.bandIndex(corpus, "vec_id", "embedding", lsh)
+    val incr = Dedup.lshProbe(batch, "vec_id", "embedding", index, lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val batchIds = batch.select("vec_id").as[Long].collect().toSet
-    val full = Dedup.embeddingLshPairs(vecs.unionByName(planted),
-      "vec_id", "embedding", threshold = 0.99, maxBucket = 10000)
+    val full = Dedup.lshPairs(vecs.unionByName(planted),
+      "vec_id", "embedding", lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val touching = full.filter(p => batchIds(p._1) || batchIds(p._2))
     assert(touching.nonEmpty, "equivalence must not be vacuous")
     assert(incr === touching,
       s"missed=${(touching -- incr).take(5)} spurious=${(incr -- touching).take(5)}")
     // empty edges
-    assert(Dedup.incrementalEmbeddingLsh(batch.limit(0), "vec_id", "embedding",
-      index, threshold = 0.99).count() === 0L)
-    val internalOnly = Dedup.incrementalEmbeddingLsh(batch, "vec_id", "embedding",
-      index.limit(0), threshold = 0.99, maxBucket = 10000)
+    assert(Dedup.lshProbe(batch.limit(0), "vec_id", "embedding",
+      index, Dedup.Srp(threshold = 0.99)).count() === 0L)
+    val internalOnly = Dedup.lshProbe(batch, "vec_id", "embedding",
+      index.limit(0), lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val batchOnly = Dedup.embeddingLshPairs(batch, "vec_id", "embedding",
-      threshold = 0.99, maxBucket = 10000)
+    val batchOnly = Dedup.lshPairs(batch, "vec_id", "embedding", lsh)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(internalOnly === batchOnly)
   }
@@ -257,7 +256,7 @@ class DedupSpec extends SparkSpecBase {
   // recall), SimHash banding is DETERMINISTIC for maxHamming = 3: at
   // most 3 differing bits can touch at most 3 of the 4 bands, so every
   // true pair shares at least one intact band and recall is exactly
-  // 100%; and since simHashPairs re-filters candidates on the true
+  // 100%; and since SimHash lshPairs re-filters candidates on the true
   // 64-bit Hamming distance, precision is exact too. The spec therefore
   // asserts full set equality with the all-pairs form — it fails if the
   // band slicing (shift/mask offsets), bucket collapse, pair
@@ -270,7 +269,8 @@ class DedupSpec extends SparkSpecBase {
     val brute = sigs.as("a").join(sigs.as("b"), col("a.id") < col("b.id"))
       .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= 3)
       .select(col("a.id"), col("b.id")).as[(Long, Long)].collect().toSet
-    val banded = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 3)
+    val banded = Dedup.lshPairs(docs, "doc_id", "text",
+      Dedup.SimHash(maxHamming = 3))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(brute.size > 1000, s"ground truth unexpectedly small: ${brute.size}")
     assert(banded === brute,
@@ -291,8 +291,9 @@ class DedupSpec extends SparkSpecBase {
     // (combined size 12 > 8) and finds nothing…
     val clones = (0L until 12L).map(i => (i, "alpha beta gamma delta epsilon zeta"))
     val docs = clones.toDF("doc_id", "text")
-    val full = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 16, bands = 4, shingleK = 1, threshold = 0.0, maxBucket = 8)
+    val tight = Dedup.MinHash(numHashes = 16, bands = 4, shingleK = 1,
+      threshold = 0.0, maxBucket = 8)
+    val full = Dedup.lshPairs(docs, "doc_id", "text", tight)
     // collect(), not count(): observed metrics attach to the
     // QueryExecution that ran, and only collect/foreach run df's own
     assert(full.collect().isEmpty)
@@ -305,18 +306,16 @@ class DedupSpec extends SparkSpecBase {
     // drops, neither incremental side did.
     val corpus = docs.filter($"doc_id" < 6)
     val batch = docs.filter($"doc_id" >= 6)
-    val index = Dedup.minHashBandIndex(corpus, "doc_id", "text",
-      numHashes = 16, bands = 4, shingleK = 1, maxBucket = 8)
-    val inc = Dedup.incrementalMinHashLsh(batch, "doc_id", "text", index,
-      numHashes = 16, bands = 4, shingleK = 1, maxBucket = 8)
+    val index = Dedup.bandIndex(corpus, "doc_id", "text", tight)
+    val inc = Dedup.lshProbe(batch, "doc_id", "text", index, tight)
     assert(inc.collect().nonEmpty)
     assert(Dedup.droppedBuckets(inc) === 0,
       "incremental sides under the guard must not count drops")
 
     // and far from the boundary (guard above the clique) nobody drops:
     // the equivalence contract's precondition is checkable, not assumed
-    val fullWide = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 16, bands = 4, shingleK = 1, threshold = 0.0, maxBucket = 100)
+    val fullWide = Dedup.lshPairs(docs, "doc_id", "text",
+      tight.copy(maxBucket = 100))
     assert(fullWide.collect().length === 12 * 11 / 2)
     assert(Dedup.droppedBuckets(fullWide) === 0)
   }
@@ -326,9 +325,7 @@ class DedupSpec extends SparkSpecBase {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       blockCol = "source", k = 1, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val candidates = Dedup.minHashLsh(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, shingleK = 1, threshold = 0.0,
-      maxBucket = 10000, blockCol = Some("source"))
+    val candidates = Dedup.lshPairs(docs, "doc_id", "text", sourceMinHash)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.size > 1000, s"ground truth unexpectedly small: ${exact.size}")
     val recall = exact.count(candidates.contains).toDouble / exact.size

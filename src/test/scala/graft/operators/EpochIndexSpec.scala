@@ -449,16 +449,13 @@ class EpochIndexSpec extends SparkSpecBase {
 
   test("band store: write/append/read round-trips under a checked manifest; identity compaction") {
     val root = tmp("graft-ei-band")
-    val meta = IndexMeta("minhash_bands",
-      "numHashes" -> 8, "bands" -> 4, "shingleK" -> 3, "maxBucket" -> 200)
-    val idx1 = Dedup.minHashBandIndex(b1, "doc_id", "text",
-      numHashes = 8, bands = 4)
-    val idx2 = Dedup.minHashBandIndex(b2, "doc_id", "text",
-      numHashes = 8, bands = 4)
-    Dedup.bandIndexStoreWrite(idx1, root, meta)
-    Dedup.bandIndexStoreAppend(spark, root, idx2, "day-2", meta)
+    val lsh = Dedup.MinHash(numHashes = 8, bands = 4)
+    val idx1 = Dedup.bandIndex(b1, "doc_id", "text", lsh)
+    val idx2 = Dedup.bandIndex(b2, "doc_id", "text", lsh)
+    Dedup.bandIndexWrite(b1, "doc_id", "text", root, lsh)
+    Dedup.bandIndexAppend(spark, root, b2, "doc_id", "text", "day-2", lsh)
     def rows(): Set[(Int, Long, Long)] =
-      Dedup.bandIndexStoreRead(spark, root, meta)
+      Dedup.bandIndexRead(spark, root, lsh)
         .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
     val before = rows()
     assert(before === (idx1.union(idx2)
@@ -466,9 +463,7 @@ class EpochIndexSpec extends SparkSpecBase {
     Maintenance.compactStore(spark, root)
     assert(rows() === before)
     val e = intercept[IllegalArgumentException] {
-      Dedup.bandIndexStoreRead(spark, root,
-        IndexMeta("minhash_bands", "numHashes" -> 16, "bands" -> 4,
-          "shingleK" -> 3, "maxBucket" -> 200))
+      Dedup.bandIndexRead(spark, root, lsh.copy(numHashes = 16))
     }
     assert(e.getMessage.contains("numHashes"), e.getMessage)
   }
@@ -496,10 +491,10 @@ class EpochIndexSpec extends SparkSpecBase {
         .toDF("doc_id", "text")
       // SimHash: a one-doc batch has 4 band keys → ≤ 4 of 16 buckets
       val shRoot = tmp("graft-ei-shprune")
-      Dedup.simHashBandIndexWrite(corpus, "doc_id", "text", shRoot,
-        buckets = 16)
-      val sh = scansOf(Dedup.incrementalSimHashFromStore(spark, shRoot,
-        oneDoc, "doc_id", "text", buckets = 16), "shprune")
+      Dedup.bandIndexWrite(corpus, "doc_id", "text", shRoot,
+        Dedup.SimHash(), buckets = 16)
+      val sh = scansOf(Dedup.lshProbeStore(spark, shRoot,
+        oneDoc, "doc_id", "text", Dedup.SimHash(), buckets = 16), "shprune")
       assert(sh.nonEmpty, "no store scan in the SimHash probe plan")
       assert(sh.forall(_.partitionFilters.nonEmpty),
         "SimHash probe scan lost its partition filter")
@@ -510,11 +505,12 @@ class EpochIndexSpec extends SparkSpecBase {
       assert(spark.read.parquet(shRoot).select("bb").distinct().count() > 4)
       // MinHash: 4 bands → ≤ 4 of 16 buckets
       val mhRoot = tmp("graft-ei-mhprune")
-      Dedup.minHashBandIndexWrite(corpus, "doc_id", "text", mhRoot,
-        numHashes = 8, bands = 4, shingleK = 1, buckets = 16)
-      val mh = scansOf(Dedup.incrementalMinHashLshFromStore(spark, mhRoot,
-        oneDoc, "doc_id", "text", numHashes = 8, bands = 4, shingleK = 1,
-        buckets = 16), "mhprune")
+      val mhLsh = Dedup.MinHash(numHashes = 8, bands = 4, shingleK = 1,
+        threshold = 0.0)
+      Dedup.bandIndexWrite(corpus, "doc_id", "text", mhRoot, mhLsh,
+        buckets = 16)
+      val mh = scansOf(Dedup.lshProbeStore(spark, mhRoot,
+        oneDoc, "doc_id", "text", mhLsh, buckets = 16), "mhprune")
       assert(mh.nonEmpty && mh.forall(_.partitionFilters.nonEmpty),
         "MinHash probe scan lost its partition filter")
       assert(mh.map(partsRead).max <= 4,
@@ -525,12 +521,13 @@ class EpochIndexSpec extends SparkSpecBase {
         (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
         .toDF("vec_id", "embedding")
       val srpRoot = tmp("graft-ei-srpprune")
-      Dedup.srpBandIndexWrite(vecs, "vec_id", "embedding", srpRoot,
-        buckets = 16)
-      val srp = scansOf(Dedup.incrementalEmbeddingLshFromStore(spark,
+      Dedup.bandIndexWrite(vecs, "vec_id", "embedding", srpRoot,
+        Dedup.Srp(threshold = 0.9), buckets = 16)
+      val srp = scansOf(Dedup.lshProbeStore(spark,
         srpRoot, Seq((900L, Array.fill(8)(rnd.nextGaussian().toFloat)))
           .toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.9, buckets = 16), "srpprune")
+        "vec_id", "embedding", Dedup.Srp(threshold = 0.9), buckets = 16),
+        "srpprune")
       assert(srp.nonEmpty && srp.forall(_.partitionFilters.nonEmpty),
         "SRP probe scan lost its partition filter")
       assert(srp.map(partsRead).max <= 4,
@@ -538,8 +535,8 @@ class EpochIndexSpec extends SparkSpecBase {
       // a probe at a different bucketing refuses (its filter
       // expression would not match the stored layout)
       val e = intercept[IllegalArgumentException] {
-        Dedup.incrementalSimHashFromStore(spark, shRoot, oneDoc,
-          "doc_id", "text", buckets = 32)
+        Dedup.lshProbeStore(spark, shRoot, oneDoc,
+          "doc_id", "text", Dedup.SimHash(), buckets = 32)
       }
       assert(e.getMessage.contains("bb_buckets"), e.getMessage)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)

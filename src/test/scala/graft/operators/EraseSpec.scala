@@ -59,19 +59,15 @@ class EraseSpec extends SparkSpecBase {
   test("band-index stores: erase filters by id, probe ≡ from-scratch over the retained corpus, no victim on disk") {
     // MinHash family (q238 pins the SimHash twin at catalog level)
     val root = tmp("mh")
-    Dedup.minHashBandIndexWrite(docsDF.filter(col("doc_id") <= 4), "doc_id",
-      "text", root, numHashes = 8, bands = 4, shingleK = 1)
-    Dedup.bandIndexStoreAppend(spark, root,
-      Dedup.minHashBandIndex(docsDF.filter(col("doc_id") > 4), "doc_id",
-        "text", numHashes = 8, bands = 4, shingleK = 1),
-      "day-2", Dedup.minHashBandsMeta(8, 4, 1, 200, None))
-    Dedup.minHashBandIndexErase(spark, root, victims,
-      numHashes = 8, bands = 4, shingleK = 1)
-    val got = Dedup.bandIndexStoreRead(spark, root,
-      Dedup.minHashBandsMeta(8, 4, 1, 200, None))
+    val lsh = Dedup.MinHash(numHashes = 8, bands = 4, shingleK = 1)
+    Dedup.bandIndexWrite(docsDF.filter(col("doc_id") <= 4), "doc_id",
+      "text", root, lsh)
+    Dedup.bandIndexAppend(spark, root, docsDF.filter(col("doc_id") > 4),
+      "doc_id", "text", "day-2", lsh)
+    Dedup.bandIndexErase(spark, root, victims)
+    val got = Dedup.bandIndexRead(spark, root, lsh)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
-    val fresh = Dedup.minHashBandIndex(retained, "doc_id", "text",
-      numHashes = 8, bands = 4, shingleK = 1)
+    val fresh = Dedup.bandIndex(retained, "doc_id", "text", lsh)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
     assert(got === fresh)
     assert(got.nonEmpty, "degenerate erasure test")
@@ -81,14 +77,53 @@ class EraseSpec extends SparkSpecBase {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
     val vroot = tmp("srp")
-    Dedup.srpBandIndexWrite(vecs.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", vroot)
-    Dedup.srpBandIndexErase(spark, vroot, Seq(3L, 7L).toDF("vec_id"))
+    val srp = Dedup.Srp(threshold = 0.9)
+    Dedup.bandIndexWrite(vecs.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", vroot, srp)
+    Dedup.bandIndexErase(spark, vroot, Seq(3L, 7L).toDF("vec_id"))
     assertNoVictimOnDisk(vroot, Seq("id"), Set(3L, 7L))
-    assert(Dedup.bandIndexStoreRead(spark, vroot,
-      Dedup.hamming64BandsMeta("srp_bands", 5000))
+    assert(Dedup.bandIndexRead(spark, vroot, srp)
       .select("id").as[Long].collect().toSet ===
       vecs.map(_._1).toSet -- Set(3L, 7L))
+  }
+
+  test("band-index erase needs no geometry: a non-default MinHash store loses every victim from every retained version and epoch") {
+    // geometry, skew guard and bucketing all off their defaults: the
+    // eraser reads the family and bb_buckets from the store's own
+    // manifest, so the caller passes only the victim ids
+    val lsh = Dedup.MinHash(numHashes = 12, bands = 3, shingleK = 2,
+      maxBucket = 50)
+    val root = tmp("mh-geometry")
+    Dedup.bandIndexWrite(docsDF.filter(col("doc_id") <= 2), "doc_id",
+      "text", root, lsh, buckets = 8)
+    Dedup.bandIndexAppend(spark, root, docsDF.filter(col("doc_id") === 3L ||
+      col("doc_id") === 4L), "doc_id", "text", "day-2", lsh, buckets = 8)
+    // two compactions leave the older base as a RETAINED version; a
+    // live epoch lands on top of the current one
+    Maintenance.compactStore(spark, root, keepVersions = 3)
+    Dedup.bandIndexAppend(spark, root, docsDF.filter(col("doc_id") === 5L),
+      "doc_id", "text", "day-3", lsh, buckets = 8)
+    Maintenance.compactStore(spark, root, keepVersions = 3)
+    Dedup.bandIndexAppend(spark, root, docsDF.filter(col("doc_id") === 6L),
+      "doc_id", "text", "day-4", lsh, buckets = 8)
+    assert(EpochIndex.versions(spark, root)._1.size >= 2,
+      "no retained version to erase from")
+    // victims sit in the bootstrap base (2) and a folded epoch (4)
+    Dedup.bandIndexErase(spark, root, victims)
+    assertNoVictimOnDisk(root, Seq("id"), victimIds)
+    val got = Dedup.bandIndexRead(spark, root, lsh, buckets = 8)
+      .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
+    assert(got === Dedup.bandIndex(retained, "doc_id", "text", lsh)
+      .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet)
+    assert(got.map(_._3) === docs.map(_._1).toSet -- victimIds)
+    // the eraser refuses a store that is not a band store
+    val grams = tmp("not-bands")
+    Dedup.gramFreqIndexWrite(Dedup.gramFreqIndex(docsDF, "doc_id", "text",
+      n = 3), grams, n = 3)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.bandIndexErase(spark, grams, victims)
+    }
+    assert(e.getMessage.contains("*_bands"), e.getMessage)
   }
 
   test("IVF and IVF-PQ stores: per-vector rows erase, quantizer geometry stays, probe sees only retained vectors") {
@@ -376,21 +411,20 @@ class EraseSpec extends SparkSpecBase {
       val (corpus, vict) =
         gen.pureApply(Gen.Parameters.default, Seed(7L + i))
       val root = tmp(s"prop$i")
-      Dedup.simHashBandIndexWrite(corpus.toDF("doc_id", "text"),
-        "doc_id", "text", root)
-      Dedup.simHashBandIndexErase(spark, root,
+      Dedup.bandIndexWrite(corpus.toDF("doc_id", "text"),
+        "doc_id", "text", root, Dedup.SimHash())
+      Dedup.bandIndexErase(spark, root,
         (vict :+ -1L).toDF("doc_id")) // -1: erasing absent ids is a no-op
-      val meta = Dedup.hamming64BandsMeta("simhash_bands", 5000)
       val kept = corpus.filterNot(d => vict.contains(d._1))
       if (kept.isEmpty)
         assert(!EpochIndex.nonEmpty(spark, root, innerPartCols = Seq("bb")),
           s"seed ${7 + i}: all-victims erase did not tear down")
       else {
-        val got = Dedup.bandIndexStoreRead(spark, root, meta)
+        val got = Dedup.bandIndexRead(spark, root, Dedup.SimHash())
           .select("band", "bh", "id", "sig")
           .as[(Int, Long, Long, Long)].collect().toSet
-        val fresh = Dedup.simHashBandIndex(kept.toDF("doc_id", "text"),
-          "doc_id", "text")
+        val fresh = Dedup.bandIndex(kept.toDF("doc_id", "text"),
+          "doc_id", "text", Dedup.SimHash())
           .select("band", "bh", "id", "sig")
           .as[(Int, Long, Long, Long)].collect().toSet
         assert(got === fresh, s"seed ${7 + i}: erase ≠ rebuild")
@@ -594,7 +628,7 @@ class EraseSpec extends SparkSpecBase {
     val band = s"$tree/band"
     val ledger = s"$tree/ledger"
     val grams = s"$tree/grams"
-    Dedup.simHashBandIndexWrite(docsDF, "doc_id", "text", band)
+    Dedup.bandIndexWrite(docsDF, "doc_id", "text", band, Dedup.SimHash())
     Dedup.certLedgerWrite(Dedup.exactJaccardJoin(docsDF, "doc_id",
       "text", threshold = 0.3, shingleK = 1), ledger, "jaccard", 0.3)
     Dedup.gramFreqIndexWrite(
@@ -605,7 +639,7 @@ class EraseSpec extends SparkSpecBase {
         col("id_b").isin(victimIds.toSeq.map(Long.box): _*))
       .count() > 0)
     // erase the band store ONLY — the sweep must localize the misses
-    Dedup.simHashBandIndexErase(spark, band, victims)
+    Dedup.bandIndexErase(spark, band, victims)
     val report = Maintenance.erasureAudit(spark, tree, victimIds.toSeq)
     val hits = report.hits
     // discovered roots come back as filesystem URIs — compare by suffix

@@ -179,7 +179,7 @@ class MultimodalSpec extends SparkSpecBase {
       s"JPEG mean drifted: $m vs $wantMean"))
   }
 
-  test("AviCodec.resizeNearest matches the naive reference; sampleEvery strides") {
+  test("AviCodec.resizeNearest matches the naive reference") {
     val w = 7; val h = 5; val tw = 3; val th = 2
     val frame = rndFrames(w, h, 1, seed = 9).head
     val got = Multimodal.AviCodec.resizeNearest(frame, w, h, tw, th)
@@ -187,10 +187,6 @@ class MultimodalSpec extends SparkSpecBase {
       val sx = x * w / tw; val sy = y * h / th
       assert(got((y * tw + x) * 3 + c) === frame((sy * w + sx) * 3 + c))
     }
-    val fs = rndFrames(2, 2, 7, seed = 3).toVector
-    val kept = Multimodal.AviCodec.sampleEvery(fs, 3)
-    assert(kept.size === 3) // frames 0, 3, 6
-    assert(kept(1).toSeq === fs(3).toSeq)
   }
 
   test("AviCodec returns None for non-AVI, truncated, and undersized-frame payloads") {
@@ -203,24 +199,6 @@ class MultimodalSpec extends SparkSpecBase {
     bad(bad.length - 1) = 0x7F
     // truncating mid-frame must not throw
     Multimodal.AviCodec.decode(good.dropRight(3))
-  }
-
-  test("resizeAndSample: real AVI decode, frame stride + hash per kept frame") {
-    val frames = rndFrames(6, 4, 5, seed = 11)
-    val avi = buildAvi(6, 4, frames)
-    val df = Seq((1L, avi), (2L, "not video".getBytes)).toDF("asset_id", "payload")
-    val rows = Multimodal.resizeAndSample(spark, df, every = 2,
-      targetW = 4, targetH = 2).collect().sortBy(_.asset_id)
-    assert(rows(0).n_frames === 3) // frames 0, 2, 4 of 5
-    assert(rows(0).resized_len === 4 * 2 * 3)
-    assert(rows(0).frame_hashes.length === 3)
-    assert(rows(0).frame_hashes.distinct.length === 3) // random frames differ
-    // hash must equal md5 of the independently-computed resize
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val want = md.digest(Multimodal.AviCodec.resizeNearest(frames.head, 6, 4, 4, 2))
-      .map("%02x".format(_)).mkString
-    assert(rows(0).frame_hashes.head === want)
-    assert(rows(1).n_frames === 0 && rows(1).frame_hashes.isEmpty)
   }
 
   private def hexBytes(h: String): Array[Byte] =
@@ -293,14 +271,6 @@ class MultimodalSpec extends SparkSpecBase {
     // non-images decline quietly
     assert(Multimodal.ImageIoCodec.decode("plain text".getBytes).isEmpty)
     assert(Multimodal.ImageIoCodec.decode(null).isEmpty)
-  }
-
-  test("non-video payloads surface as zero frames, never errors") {
-    val tiny = Multimodal.assetsFromText(
-      Seq((1L, "abc")).toDF("doc_id", "text"), "doc_id", "text")
-    val r = Multimodal.resizeAndSample(spark, tiny, every = 2).head()
-    assert(r.resized_len === 0)
-    assert(r.n_frames === 0)
   }
 
   test("extractFrameStats: decode → sample → resize → channel means, oracle-style") {
@@ -798,7 +768,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("ImageHash: RGB luma path and end-to-end PNG decode round-trip") {
-    // encode an RGB image via ImageIO, hash through dHashBytes
+    // encode an RGB image via ImageIO, hash through extractImageHash
     val img = new java.awt.image.BufferedImage(18, 16,
       java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
     val rnd = new scala.util.Random(7)
@@ -809,11 +779,14 @@ class MultimodalSpec extends SparkSpecBase {
     }
     val baos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", baos)
-    val viaBytes = Multimodal.ImageHash.dHashBytes(baos.toByteArray)
+    val hashed = Multimodal.extractImageHash(spark,
+      Seq((1L, "image", baos.toByteArray), (2L, "text", "not an image".getBytes))
+        .toDF("asset_id", "modality", "payload"))
+      .collect().map(h => h.asset_id -> h.dhash).toMap
     // equal-RGB luma = 1000·v, gray path = 1000·v — identical bits
     val direct = Multimodal.ImageHash.dHash(grayPixels(9, 8)((x, y) => g(y * 9 + x)))
-    assert(viaBytes === direct && viaBytes.isDefined)
-    assert(Multimodal.ImageHash.dHashBytes("not an image".getBytes).isEmpty)
+    assert(hashed(1L) === direct && hashed(1L).isDefined)
+    assert(hashed(2L).isEmpty)
   }
 
   test("extractImageHash + hammingPairs64: planted image near-dups cluster") {
@@ -854,7 +827,7 @@ class MultimodalSpec extends SparkSpecBase {
       if java.lang.Long.bitCount(hashes(a) ^ hashes(b)) <= 3
     } yield (a, b)).toSet
     val sigs = hashes.toSeq.toDF("id", "sig")
-    val got = Dedup.hammingPairs64(sigs, maxHamming = 3)
+    val got = Dedup.lshPairs(sigs, "id", "sig", Dedup.Hamming64(maxHamming = 3))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got === expected)
     assert(expected.nonEmpty) // the planted variants really are near

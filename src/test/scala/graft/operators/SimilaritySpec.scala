@@ -99,7 +99,8 @@ class SimilaritySpec extends SparkSpecBase {
       (id + 1, v.map(x => x + (rnd.nextGaussian() * 0.01).toFloat))
     }
     val df = (bases ++ dups).toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingLshPairs(df, "vec_id", "embedding", threshold = 0.9)
+    val pairs = Dedup.lshPairs(df, "vec_id", "embedding",
+      Dedup.Srp(threshold = 0.9))
       .as[(Long, Long, Double)].collect()
     // every planted (2i, 2i+1) pair must surface: at cosine ≈ 1 the
     // signatures agree on (nearly) all bits, so some 16-bit band matches

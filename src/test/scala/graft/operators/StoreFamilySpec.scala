@@ -36,6 +36,8 @@ class StoreFamilySpec extends SparkSpecBase {
   private val docsB = Seq(
     (10L, "alpha beta gamma delta\nshared line two\nnew line"),
     (11L, "nu xi omicron pi rho\nshared line one")).toDF("doc_id", "text")
+  private val smallMinHash = Dedup.MinHash(numHashes = 8, bands = 4,
+    shingleK = 1)
   private def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), "[\\s\\n]+"))
       .as("token"))
@@ -240,15 +242,11 @@ class StoreFamilySpec extends SparkSpecBase {
       root => rows(Quality.qualityCutsRead(spark, root, "ppl", Seq("src")))),
     Case("minhash_bands",
       root => {
-        Dedup.minHashBandIndexWrite(docsA, "doc_id", "text", root,
-          numHashes = 8, bands = 4, shingleK = 1)
-        Dedup.bandIndexStoreAppend(spark, root,
-          Dedup.minHashBandIndex(docsB, "doc_id", "text", numHashes = 8,
-            bands = 4, shingleK = 1), "day-2",
-          Dedup.minHashBandsMeta(8, 4, 1, 200, None))
+        Dedup.bandIndexWrite(docsA, "doc_id", "text", root, smallMinHash)
+        Dedup.bandIndexAppend(spark, root, docsB, "doc_id", "text",
+          "day-2", smallMinHash)
       },
-      root => rows(Dedup.bandIndexStoreRead(spark, root,
-        Dedup.minHashBandsMeta(8, 4, 1, 200, None))))
+      root => rows(Dedup.bandIndexRead(spark, root, smallMinHash)))
   )
 
   /** Directories under `root` (relative; "" = the root) holding epoch

@@ -328,6 +328,9 @@ class PlanAuditSpec extends SparkSpecBase {
     // simhash/SRP — a silent recompute multiplier). Gate: no plan
     // line anywhere in these queries contains more than one sketch
     // call, and each query does contain its sketch (non-vacuous).
+    // Per PLAN, the sketch is computed by exactly one Project — the
+    // full-corpus run's: the store probe signatures and bands its
+    // batch once (a pinned leaf) and derives both halves from it.
     val sketchOf = Map(
       "q93_incremental_lsh" -> "minhash_shingled(",
       "q97_incremental_simhash" -> "simhash64(",
@@ -340,6 +343,57 @@ class PlanAuditSpec extends SparkSpecBase {
       assert(multi.isEmpty,
         s"$name: sketch duplicated into band consumers (CollapseProject " +
           s"guard regressed):\n${multi.mkString("\n")}")
+      assert(sketchProjects(plan, tok) === 1,
+        s"$name: the sketch is computed by more than the full run:\n$plan")
+    }
+  }
+
+  /** Project nodes that compute the sketch `tok` — per plan, not per
+    * line. */
+  private def sketchProjects(plan: String, tok: String): Int =
+    plan.linesIterator.count(l => l.contains("Project [") && l.contains(tok))
+
+  test("in-memory LSH probes signature each batch once, for every family") {
+    // The probe signatures and bands its batch ONCE, into a pinned
+    // leaf, and derives the within-batch and batch×corpus halves from
+    // that banded frame, so the assembled probe plan computes no batch
+    // sketch at all. The index is a checkpointed leaf here, so every
+    // sketch Project left in the plan would be the batch's.
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions.{col, pmod, lit, xxhash64}
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+      .select("doc_id", "text")
+    val vecs = graft.sources.Tables.embeddings(spark, sfDir)
+      .select("vec_id", "embedding")
+    def plans(df: org.apache.spark.sql.DataFrame, idCol: String,
+              valueCol: String, family: Dedup.LshFamily) =
+      withStaticPlans {
+        val batch = df.filter(pmod(col(idCol), lit(3)) === 0)
+        val index = Dedup.bandIndex(
+          df.filter(pmod(col(idCol), lit(3)) =!= 0), idCol, valueCol,
+          family).localCheckpoint()
+        (Dedup.lshPairs(batch, idCol, valueCol, family)
+          .queryExecution.executedPlan.toString,
+          Dedup.lshProbe(batch, idCol, valueCol, index, family)
+            .queryExecution.executedPlan.toString)
+      }
+    val hashed = docs.select(col("doc_id"), xxhash64(col("text")).as("h"))
+    val cases = Seq(
+      ("MinHash", plans(docs, "doc_id", "text",
+        Dedup.MinHash(threshold = 0.0)), "minhash_shingled("),
+      ("SimHash", plans(docs, "doc_id", "text", Dedup.SimHash()),
+        "simhash64("),
+      ("Hamming64", plans(hashed, "doc_id", "h", Dedup.Hamming64()),
+        "xxhash64(text"),
+      ("SRP", plans(vecs, "vec_id", "embedding",
+        Dedup.Srp(threshold = 0.9)), "srp_signature("))
+    for ((family, (pairsPlan, probePlan), tok) <- cases) {
+      // non-vacuous: the same batch's full run computes the sketch in
+      // exactly one Project, spelled `tok`
+      assert(sketchProjects(pairsPlan, tok) === 1,
+        s"$family pairs plan:\n$pairsPlan")
+      assert(sketchProjects(probePlan, tok) === 0,
+        s"$family probe recomputes the batch sketch in its plan:\n$probePlan")
     }
   }
 

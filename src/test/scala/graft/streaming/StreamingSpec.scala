@@ -1219,13 +1219,12 @@ class StreamingSpec extends SparkSpecBase {
     assert(corpusIds() === Set(1L, 3L, 12L, 22L), s"got ${corpusIds()}")
     // accepted-only stores: the index holds exactly the survivors'
     // band rows — dropped docs polluted nothing
-    assert(Dedup.bandIndexStoreRead(spark, index,
-      Dedup.hamming64BandsMeta("simhash_bands", 5000))
+    assert(Dedup.bandIndexRead(spark, index, Dedup.SimHash())
       .select("id").as[Long].collect().toSet === Set(1L, 3L, 12L, 22L))
     // survivors are pairwise non-near-dup — the sink's whole claim
-    assert(Dedup.simHashPairs(
+    assert(Dedup.lshPairs(
       spark.read.parquet(corpus).select("doc_id", "text"),
-      "doc_id", "text").count() === 0L)
+      "doc_id", "text", Dedup.SimHash()).count() === 0L)
     // a standing corpus with a FRESH index path refuses at activation
     val e = intercept[IllegalArgumentException] {
       Streaming.nearDupIngestSink(
@@ -1236,11 +1235,12 @@ class StreamingSpec extends SparkSpecBase {
         "doc_id", "text",
         Files.createTempDirectory("graft-ndup-ckp2").toString)
     }
-    assert(e.getMessage.contains("simHashBandIndexWrite"), e.getMessage)
+    assert(e.getMessage.contains("bandIndexWrite"), e.getMessage)
   }
 
   test("streaming near-dup TEXT ingest (MinHash twin): canonical keep, store-probe rejection, accepted-only, compaction-safe, zero leaked pins") {
     import graft.operators.{Dedup, Maintenance}
+    val textLsh = Dedup.MinHash(threshold = 0.0)
     graft.GraftSession.sweepPersistedRdds(spark)
     val src = Files.createTempDirectory("graft-ndt-src").toString
     val corpus = Files.createTempDirectory("graft-ndt-c").toString + "/c"
@@ -1260,9 +1260,9 @@ class StreamingSpec extends SparkSpecBase {
       rows.toDF("doc_id", "text").write.parquet(s"$src/$name")
     def drain(): Unit = {
       val schema = spark.read.parquet(s"$src/b1").schema
-      Streaming.nearDupTextIngestSink(
+      Streaming.nearDupIngestSink(
         Streaming.fileStream(spark, schema, s"$src/*"),
-        spark, corpus, index, "doc_id", "text", ckp)
+        spark, corpus, index, "doc_id", "text", ckp, textLsh)
         .awaitTermination()
     }
     deliver("b1", b1); drain()
@@ -1294,13 +1294,12 @@ class StreamingSpec extends SparkSpecBase {
     assert(corpusIds() === Set(1L, 3L, 12L, 22L), s"got ${corpusIds()}")
     // accepted-only stores: the index holds exactly the survivors'
     // band rows — dropped docs polluted nothing
-    assert(Dedup.bandIndexStoreRead(spark, index,
-      Dedup.minHashBandsMeta(64, 16, 3, 200, None))
+    assert(Dedup.bandIndexRead(spark, index, textLsh)
       .select("id").as[Long].collect().toSet === Set(1L, 3L, 12L, 22L))
     // survivors are pairwise non-near-dup at the sink's banding
-    assert(Dedup.minHashLsh(
+    assert(Dedup.lshPairs(
       spark.read.parquet(corpus).select("doc_id", "text"),
-      "doc_id", "text", threshold = 0.0).count() === 0L)
+      "doc_id", "text", textLsh).count() === 0L)
     // the foreachBatch loop released every checkpoint it pinned —
     // probe pin, CC mapping, accepted set (a long-lived streaming
     // JVM has no harness sweep; the sink must not leak per batch)
@@ -1308,15 +1307,15 @@ class StreamingSpec extends SparkSpecBase {
       s"sink leaked ${spark.sparkContext.getPersistentRDDs.size} pinned RDDs")
     // a standing corpus with a FRESH index path refuses at activation
     val e = intercept[IllegalArgumentException] {
-      Streaming.nearDupTextIngestSink(
+      Streaming.nearDupIngestSink(
         Streaming.fileStream(spark,
           spark.read.parquet(s"$src/b1").schema, s"$src/*"),
         spark, corpus,
         Files.createTempDirectory("graft-ndt-i2").toString + "/i",
         "doc_id", "text",
-        Files.createTempDirectory("graft-ndt-ckp2").toString)
+        Files.createTempDirectory("graft-ndt-ckp2").toString, textLsh)
     }
-    assert(e.getMessage.contains("minHashBandIndexWrite"), e.getMessage)
+    assert(e.getMessage.contains("bandIndexWrite"), e.getMessage)
   }
 
   test("streaming near-dup VECTOR ingest (SRP twin): canonical keep, store-probe rejection, accepted-only, zero leaked pins") {
@@ -1336,10 +1335,10 @@ class StreamingSpec extends SparkSpecBase {
       rows.toDF("vec_id", "embedding").write.parquet(s"$src/$name")
     def drain(): Unit = {
       val schema = spark.read.parquet(s"$src/b1").schema
-      Streaming.nearDupVecIngestSink(
+      Streaming.nearDupIngestSink(
         Streaming.fileStream(spark, schema, s"$src/*"),
         spark, corpus, index, "vec_id", "embedding", ckp,
-        threshold = 0.8).awaitTermination()
+        Dedup.Srp(threshold = 0.8)).awaitTermination()
     }
     deliver("b1", b1); drain()
     def corpusIds() = spark.read.parquet(corpus)
@@ -1350,27 +1349,26 @@ class StreamingSpec extends SparkSpecBase {
     assert(corpusIds() === Set(1L, 3L, 12L),
       s"corpus-touching rejection broke: ${corpusIds()}")
     // accepted-only: the SRP index holds exactly the survivors
-    assert(Dedup.bandIndexStoreRead(spark, index,
-      Dedup.hamming64BandsMeta("srp_bands", 5000))
+    assert(Dedup.bandIndexRead(spark, index, Dedup.Srp(threshold = 0.8))
       .select("id").as[Long].collect().toSet === Set(1L, 3L, 12L))
     // survivors are pairwise below threshold
-    assert(Dedup.embeddingLshPairs(
+    assert(Dedup.lshPairs(
       spark.read.parquet(corpus).select("vec_id", "embedding"),
-      "vec_id", "embedding", threshold = 0.8).count() === 0L)
+      "vec_id", "embedding", Dedup.Srp(threshold = 0.8)).count() === 0L)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"sink leaked ${spark.sparkContext.getPersistentRDDs.size} pinned RDDs")
     // standing corpus + fresh index path refuses at activation
     val e = intercept[IllegalArgumentException] {
-      Streaming.nearDupVecIngestSink(
+      Streaming.nearDupIngestSink(
         Streaming.fileStream(spark,
           spark.read.parquet(s"$src/b1").schema, s"$src/*"),
         spark, corpus,
         Files.createTempDirectory("graft-ndv-i2").toString + "/i",
         "vec_id", "embedding",
         Files.createTempDirectory("graft-ndv-ckp2").toString,
-        threshold = 0.8)
+        Dedup.Srp(threshold = 0.8))
     }
-    assert(e.getMessage.contains("srpBandIndexWrite"), e.getMessage)
+    assert(e.getMessage.contains("bandIndexWrite"), e.getMessage)
   }
 
   test("near-dup sinks refuse non-integral id columns and flat (non-epoch) corpus layouts at activation") {
@@ -1390,12 +1388,13 @@ class StreamingSpec extends SparkSpecBase {
     }
     assert(e1.getMessage.contains("integral"), e1.getMessage)
     val e1t = intercept[IllegalArgumentException] {
-      Streaming.nearDupTextIngestSink(
+      Streaming.nearDupIngestSink(
         Streaming.fileStream(spark, sschema, s"$src/s*"), spark,
         Files.createTempDirectory("graft-ndrf-c2").toString + "/c",
         Files.createTempDirectory("graft-ndrf-i2").toString + "/i",
         "doc_id", "text",
-        Files.createTempDirectory("graft-ndrf-ckp2").toString)
+        Files.createTempDirectory("graft-ndrf-ckp2").toString,
+        graft.operators.Dedup.MinHash(threshold = 0.0))
     }
     assert(e1t.getMessage.contains("integral"), e1t.getMessage)
     // flat corpus layout: EpochIndex.nonEmpty reads it as empty, so
