@@ -73,7 +73,10 @@ object CorpusDemo {
       streamDelivered: Long = 0L, streamAccepted: Long = 0L,
       streamPlantedSurvivors: Long = 0L,
       streamAcceptedAfterReplay: Long = 0L, streamGated: Long = 0L,
-      stageSec: Seq[(String, Double)] = Nil)
+      stageSec: Seq[(String, Double)] = Nil,
+      // the quality gate's ppl scores minus the erase stage's victims:
+      // the slice the erase re-froze the calibration over
+      retainedScores: Option[DataFrame] = None)
 
   def run(spark: SparkSession, sfDir: String, outDir: String): Result = {
     def barrier(df: DataFrame): DataFrame = df.localCheckpoint(true)
@@ -299,7 +302,8 @@ object CorpusDemo {
     //      overlap between gates.
     val lmRef = Tables.documents(spark, sfDir)
       .filter(col("lang") === "en").select("doc_id", "text")
-    val (quality, gateReasons) = staged("quality_gate") {
+    val cutsRoot = s"$outDir/stores/quality_cuts"
+    val (quality, gateReasons, scored) = staged("quality_gate") {
       val scored = barrier(fresh.join(
         LmFilter.lmPerplexity(fresh, "doc_id", "text",
           LmFilter.lmIndex(lmRef, "doc_id", "text"))
@@ -309,8 +313,10 @@ object CorpusDemo {
       // same cuts, same buckets, but the thresholds any later batch
       // (or a rerun) scores against are a named, versioned artifact —
       // the corpus card can cite WHICH calibration this funnel ran
-      // under, and the maintenance sweep below sees the store
-      val cutsRoot = s"$outDir/stores/quality_cuts"
+      // under, and the maintenance sweep below sees the store (fresh
+      // per run: a stale run's versions and erasure log would leak
+      // into this run's card)
+      Fs.deleteRecursively(spark, cutsRoot)
       Quality.qualityCutsWrite(spark, cutsRoot,
         Quality.qualityCuts(scored, "ppl", Seq("source")),
         "ppl", Seq("source"))
@@ -329,7 +335,7 @@ object CorpusDemo {
         boundWhy = "at most 2^3 - 1 failed-gate combinations")
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       (barrier(gated.filter(col("keep"))
-        .select("doc_id", "source", "text")), reasonCounts)
+        .select("doc_id", "source", "text")), reasonCounts, scored)
     }
 
     // ---- cluster-safe split: hash the NEAR-DUP CLUSTER id, so no
@@ -486,7 +492,7 @@ object CorpusDemo {
           LmFilter.lmIndex(lmRef, "doc_id", "text"))
           .select("doc_id", "ppl"), Seq("doc_id"))
       val gated = Quality.qualityBucketsWith(scored, "ppl", Seq("source"),
-        Quality.qualityCutsRead(spark, s"$outDir/stores/quality_cuts",
+        Quality.qualityCutsRead(spark, cutsRoot,
           "ppl", Seq("source")), as = "_b")
         .filter(col("_b").isNotNull && col("_b") =!= "tail").count()
       (b1.count() + b2.count(), accepted, plantedSurvivors,
@@ -518,26 +524,34 @@ object CorpusDemo {
     val card = staged("final_card") {
       val row = graft.operators.Audit.cardFromStores(spark, quality,
         "text", certJacRoot, 0.5, certCosRoot, 0.4, ccRoot,
-        s"$outDir/stores/quality_cuts", "ppl", Seq("source")).head()
+        cutsRoot, "ppl", Seq("source")).head()
       row.schema.fieldNames.toSeq.zipWithIndex.map { case (n, i) =>
         n -> String.valueOf(row.get(i)) }
     }
 
-    // ---- erase (q237/q238 + the round-16 family erasers): right-to-
+    // ---- erase (q237/q238 + the store-family erase forms): right-to-
     //      be-forgotten END-TO-END. A small deterministic victim set
-    //      leaves every store this run wrote — both cert ledgers
-    //      (filter by id), the cc_labels labeling (REBUILD from the
-    //      erased ledger: min-id labels are identifiers too), and the
-    //      KMV profile (REBUILD: bottom-k cannot re-admit what a
-    //      victim displaced) — all disk-level rewrites. The final
-    //      card then re-emits FROM THE REWRITTEN STORES: its pair
-    //      counts drop by exactly the victims' contribution (counted
-    //      from the ledgers BEFORE the erase — a store read), and the
-    //      card's new erasure columns cite the rewrite history, so a
-    //      release can prove both WHAT it certified and WHAT it
-    //      forgot. CorpusDemoSpec pins the exact arithmetic.
+    //      leaves every store this run wrote, in ONE Maintenance
+    //      .eraseAll over the store tree: it discovers every store,
+    //      filters the cert ledgers and the stream band store by id,
+    //      subtracts the victims' own line partial from the
+    //      boilerplate counts, and replaces the fold-lossy stores with
+    //      the request's rebuilds — the cc_labels labeling (from the
+    //      ERASED ledger: min-id labels are identifiers too), the KMV
+    //      profile (bottom-k cannot re-admit what a victim displaced)
+    //      and the ppl calibration (quantiles fitted on the victims'
+    //      scores are re-frozen over the retained ones) — refusing
+    //      before any rewrite if a store's input is missing, and ending
+    //      with the RTBF audit. The final card then re-emits FROM THE
+    //      REWRITTEN STORES: its pair counts drop by exactly the
+    //      victims' contribution (counted from the ledgers BEFORE the
+    //      erase — a store read), and the card's erasure columns cite
+    //      the rewrite history, so a release can prove both WHAT it
+    //      certified and WHAT it forgot. CorpusDemoSpec pins the exact
+    //      arithmetic.
     val (nVictims, erasedJacPairs, erasedCosPairs,
-      erasedBpLineRefs, bpAfterErase, cardAfterErase, eraseAudit) =
+      erasedBpLineRefs, bpAfterErase, cardAfterErase, eraseAudit,
+      retainedScores) =
       staged("erase") {
         // deterministic, nonempty at every SF: the two smallest
         // released ids play the data-subject request (orderBy+limit
@@ -554,57 +568,50 @@ object CorpusDemo {
             .distinct().count()
         val jacTouch = touching(certJacRoot, "jaccard", 0.5)
         val cosTouch = touching(certCosRoot, "cosine", 0.4)
-        Dedup.certLedgerErase(spark, certJacRoot, victims, "jaccard", 0.5)
-        Dedup.certLedgerErase(spark, certCosRoot, victims, "cosine", 0.4)
-        Dedup.ccLabelsRebuild(spark, ccRoot,
-          Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
-            .select("id_a", "id_b"), "cosine", 0.4)
-        Cardinality.kmvIndexErase(spark, kmvRoot,
-          Cardinality.kmvSketch(docs.join(victims, Seq("doc_id"),
-            "left_anti"), col("source"), col("doc_id"), k = 32),
-          32, "doc_id")
-        // SUBTRACT-erase through the boilerplate count store: the
-        // victims' own line partial folds in negated (exact,
-        // O(victims)); the post-erase total must drop by exactly that
-        // partial — the count-store arithmetic q239/q240 pin at the
-        // oracle, proven here live on the funnel's own store
         val victimDocs = barrier(
           quality.join(victims, Seq("doc_id"), "left_semi"))
         val bpVictimRefs = Dedup.boilerplateIndex(victimDocs,
           "doc_id", "text", "\n")
           .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
-        Dedup.boilerplateIndexErase(spark, bpRoot, victimDocs,
-          "doc_id", "text", "\n")
+        val retained = scored.join(victims, Seq("doc_id"), "left_anti")
+        // certify: eraseAll ends in ONE verification sweep over the
+        // whole store tree — every parquet file of every discovered
+        // store (retained versions and torn epochs included) free of
+        // victim ids. The returned certificate is recorded whole:
+        // footer-stats pruning ratio and any id column the sweep could
+        // NOT verify (this funnel's stores are all integral-keyed, so
+        // that list pins empty)
+        val audit = Maintenance.eraseAll(spark, s"$outDir/stores",
+          Maintenance.EraseRequest(victims)
+            .withInput(ccRoot, Dedup.ccLabelsMeta("cosine", 0.4))(
+              Dedup.connectedComponents(Dedup.certLedgerRead(spark,
+                certCosRoot, "cosine", 0.4).select("id_a", "id_b")))
+            .withInput(kmvRoot, Cardinality.kmvMeta(32, "doc_id"))(
+              Cardinality.kmvSketch(docs.join(victims, Seq("doc_id"),
+                "left_anti"), col("source"), col("doc_id"), k = 32))
+            .withInput(bpRoot, Dedup.boilerplateIndexMeta("\n", 1))(
+              Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n"))
+            .withInput(cutsRoot, Quality.cutsMeta("ppl", Seq("source")))(
+              Quality.qualityCuts(retained, "ppl", Seq("source"))))
+        // the stream corpus is a plain table, not a store: the q160
+        // table-level delete
+        Merge.deleteWrite(spark, streamCorpus, victims,
+          Seq("doc_id"), "_epoch")
+        // the SUBTRACT arithmetic q239/q240 pin at the oracle, proven
+        // live on the funnel's own store: the post-erase total dropped
+        // by exactly the victims' partial
         val bpAfter = Dedup.boilerplateIndexRead(spark, bpRoot)
           .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
         require(bpAfter == bpLineRefs - bpVictimRefs,
           s"boilerplate subtract-erase arithmetic broke: " +
             s"$bpLineRefs - $bpVictimRefs != $bpAfter")
-        // the STREAMING stores absorb the same request: the sink's
-        // band store by the q238 filter arm (the victims were in the
-        // streamed slice by construction), the stream corpus by the
-        // q160 table-level delete — the RTBF audit below covers the
-        // band store like every other store in the tree
-        Dedup.bandIndexErase(spark, streamBandsRoot, victims)
-        Merge.deleteWrite(spark, streamCorpus, victims,
-          Seq("doc_id"), "_epoch")
-        // certify: ONE verification sweep over the whole store tree —
-        // every parquet file of every discovered store (retained
-        // versions and torn epochs included) free of victim ids, the
-        // call an RTBF pipeline makes between "erasers ran" and
-        // "request closed" (refuses loudly otherwise). The returned
-        // certificate is recorded whole: footer-stats pruning ratio
-        // and any id column the sweep could NOT verify (this funnel's
-        // stores are all integral-keyed, so that list pins empty)
-        val audit = Maintenance.requireErased(spark, s"$outDir/stores",
-          victims.select("doc_id").collect().map(_.getLong(0)).toSeq)
         val after = graft.operators.Audit.cardFromStores(spark,
           quality.join(victims, Seq("doc_id"), "left_anti"), "text",
           certJacRoot, 0.5, certCosRoot, 0.4, ccRoot,
-          s"$outDir/stores/quality_cuts", "ppl", Seq("source")).head()
+          cutsRoot, "ppl", Seq("source")).head()
         (victims.count(), jacTouch, cosTouch, bpVictimRefs, bpAfter,
           after.schema.fieldNames.toSeq.zipWithIndex.map { case (n, i) =>
-            n -> String.valueOf(after.get(i)) }, audit)
+            n -> String.valueOf(after.get(i)) }, audit, retained)
       }
 
     // ---- record-level attrition (q195): why each ingested doc is
@@ -661,7 +668,8 @@ object CorpusDemo {
       streamPlantedSurvivors = streamPlantedSurvivors,
       streamAcceptedAfterReplay = streamAcceptedAfterReplay,
       streamGated = streamGated,
-      stageSec = stageSec.toList)
+      stageSec = stageSec.toList,
+      retainedScores = Some(retainedScores))
   }
 
   def main(args: Array[String]): Unit = {

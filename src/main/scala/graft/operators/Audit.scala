@@ -79,8 +79,19 @@ object Audit {
         pmod(sum(col("digest").cast("decimal(38,0)")),
           lit(Mod).cast("decimal(38,0)")).cast("long").as("digest"))
 
-  private[operators] val digestStore =
-    StoreFamily.flat("table_digest", _ => digestFold)
+  /** Erasure is exact MODULAR subtraction, no table re-scan:
+    * digest(A \ V) = digest(A) − digest(V) mod M and counts subtract,
+    * so the victims' own [[digestPartial]] folds in negated. Two
+    * refusals keep it honest: a group whose count would go NEGATIVE
+    * (a "victim" row this ledger never digested), and a group whose
+    * count reaches zero with a NON-zero residual digest (the victims'
+    * bytes differ from what was ingested). For surviving groups a
+    * wrong victim payload is undetectable by ANY digest scheme — the
+    * ledger still verifies against the retained replica, which is the
+    * check that matters. */
+  private[operators] val digestStore = StoreFamily.flat("table_digest",
+    _ => digestFold, StoreFamily.Subtract(Seq("n_rows"),
+      residualCols = Seq("digest"), absorbed = "digested"))
   private[graft] def digestMeta(cols: Seq[String],
                                 groupName: String): IndexMeta =
     IndexMeta(digestStore.name, "cols" -> cols.mkString(","),
@@ -128,64 +139,6 @@ object Audit {
     IndexMeta.check(spark, path, digestMeta(cols, groupName))
     digestFold(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "digestIndexWrite"))
-  }
-
-  /** Erase rows from a persisted digest ledger — disk-level and
-    * EXACT, no table re-scan: the digest is a sum of per-row hashes
-    * mod 2^61−1, so digest(A \ V) = digest(A) − digest(V) mod M and
-    * counts subtract — the count-store erase algebra
-    * ([[graft.operators.Dedup.gramFreqIndexErase]]) carried to the
-    * modular field. The victims' own partial is recomputed from the
-    * RTBF payload (their rows must be presentable to be
-    * subtractable), negated, and folded in; groups whose rows all
-    * leave drop off the disk in every retained version and epoch.
-    *
-    * Two refusals keep the subtraction honest: a group whose count
-    * would go NEGATIVE (a "victim" row this ledger never digested),
-    * and a group whose count reaches zero with a NON-zero residual
-    * digest (the victims' bytes differ from what was ingested —
-    * canonicalization drift, a re-encoded column; subtracting the
-    * wrong hashes would leave the ledger silently unverifiable).
-    * The zero-count check is exact; for surviving groups a wrong
-    * victim payload is undetectable by ANY digest scheme — the
-    * ledger still verifies against the retained replica, which is
-    * the check that matters.
-    *
-    * @param victims the victim ROWS (the RTBF payload), carrying the
-    *                digested columns; `group` is the same derivation
-    *                ingest used */
-  def digestIndexErase(spark: org.apache.spark.sql.SparkSession,
-                       path: String, victims: DataFrame,
-                       cols: Seq[String], groupName: String,
-                       group: Column): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, digestMeta(cols, groupName))
-    val litMod = lit(Mod).cast("decimal(38,0)")
-    val negated = digestPartial(victims, cols, group)
-      .select(col("group"), (-col("n_rows")).as("n_rows"),
-        (-col("digest")).as("digest"))
-    EpochIndex.eraseRewrite(spark, path, p =>
-      p.unionByName(negated)
-        .groupBy(col("group"))
-        .agg(sum(col("n_rows")).as("n_rows"),
-          pmod(sum(col("digest").cast("decimal(38,0)")), litMod)
-            .cast("long").as("digest"))
-        .withColumn("n_rows",
-          when(col("n_rows") < 0L,
-            raise_error(concat(
-              lit("digestIndexErase: negative n_rows for group "),
-              col("group"),
-              lit(" — a victim row was never digested here; erase only " +
-                "rows this ledger actually absorbed"))).cast("long"))
-          .when(col("n_rows") === 0L && col("digest") =!= 0L,
-            raise_error(concat(
-              lit("digestIndexErase: group "), col("group"),
-              lit(" empties with a non-zero residual digest — the victim " +
-                "payload's bytes differ from what was ingested " +
-                "(canonicalization drift?); fix the payload rather than " +
-                "leave an unverifiable ledger"))).cast("long"))
-          .otherwise(col("n_rows")))
-        .filter(col("n_rows") =!= 0L)
-        .select(col("group"), col("n_rows"), col("digest")))
   }
 
   /** Digest-driven divergence localization — the two-pass shape for
@@ -295,7 +248,7 @@ object Audit {
       "cert_pairs_cosine" -> cosineLedger,
       "cc_labels" -> labelsPath,
       // the calibration is cited by version above, so its RTBF
-      // re-freezes ([[Quality.qualityCutsRefreeze]] — logged to the
+      // re-freezes (the quality_cuts Rebuild erase — logged to the
       // same _ERASURES) are part of this card's erasure story too
       "quality_cuts" -> cutsPath)
       .flatMap { case (name, p) =>

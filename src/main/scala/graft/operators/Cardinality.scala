@@ -204,8 +204,12 @@ object Cardinality {
           "(acc, x) -> zip_with(acc, x, (a, b) -> greatest(a, b)))")
         .as("regs"))
 
+  /** Erasure is a REBUILD, never a filter (the cert-stats precedent):
+    * registers are max-folds, so a document's contribution cannot be
+    * subtracted out of them; the only exact erased state is
+    * [[hllSketch]] recomputed over the retained corpus. */
   private[operators] val hllStore = StoreFamily.flat("hll_registers",
-    param => hllFold(1 << param("p").toInt))
+    param => hllFold(1 << param("p").toInt), StoreFamily.Rebuild())
   private[graft] def hllMeta(p: Int, keyName: String): IndexMeta =
     IndexMeta(hllStore.name, "p" -> p, "keyName" -> keyName)
 
@@ -228,21 +232,6 @@ object Cardinality {
                      p: Int, keyName: String): Unit = {
     IndexMeta.check(spark, path, hllMeta(p, keyName))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** ERASURE form — a REBUILD, never a filter (the cert-stats
-    * precedent): HLL registers are max-folds, so a document's
-    * contribution cannot be subtracted out of them; the only exact
-    * erased state is the sketch recomputed over the retained corpus.
-    * Callers build `rebuilt` with the same [[hllSketch]] derivation
-    * over the corpus minus the victims; the constant fold rides
-    * [[EpochIndex.eraseRewrite]], so no epoch directory or retained
-    * version still carries a register the victims raised. */
-  def hllIndexErase(spark: org.apache.spark.sql.SparkSession,
-                    path: String, rebuilt: DataFrame, p: Int,
-                    keyName: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, hllMeta(p, keyName))
-    EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
   }
 
   /** Checked read: one merged register array per group across the
@@ -272,8 +261,11 @@ object Cardinality {
           s"cast(array() as array<bigint>), " +
           s"(acc, x) -> array_union(acc, x))), 1, $k)").as("sketch"))
 
+  /** Erasure is a REBUILD ([[hllStore]]'s rationale): a bottom-k
+    * sketch cannot re-admit the (k+1)-th smallest hash a victim
+    * displaced — recompute [[kmvSketch]] over the retained corpus. */
   private[operators] val kmvStore = StoreFamily.flat("kmv_bottom_k",
-    param => kmvFold(param("k").toInt))
+    param => kmvFold(param("k").toInt), StoreFamily.Rebuild())
   private[graft] def kmvMeta(k: Int, keyName: String): IndexMeta =
     IndexMeta(kmvStore.name, "k" -> k, "keyName" -> keyName)
 
@@ -297,17 +289,6 @@ object Cardinality {
                      k: Int, keyName: String): Unit = {
     IndexMeta.check(spark, path, kmvMeta(k, keyName))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** ERASURE form — a REBUILD ([[hllIndexErase]]'s rationale): a
-    * bottom-k sketch cannot re-admit the (k+1)-th smallest hash a
-    * victim displaced, so subtraction is impossible; recompute over
-    * the retained corpus and rewrite disk-clean. */
-  def kmvIndexErase(spark: org.apache.spark.sql.SparkSession,
-                    path: String, rebuilt: DataFrame, k: Int,
-                    keyName: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, kmvMeta(k, keyName))
-    EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
   }
 
   /** Checked read: one bottom-k sketch per group across the compacted

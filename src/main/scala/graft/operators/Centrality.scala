@@ -331,12 +331,17 @@ object Centrality {
 
   /** Two substores: `census` partials sum (compacted first, and the
     * stats compaction reports) and `edges` rows are disjoint across
-    * epochs (identity fold — bounds the file count). */
+    * epochs (identity fold — bounds the file count). Erasing NODES
+    * filters every edge touching a victim and REBUILDS the census from
+    * the retained edges (a triangle count cannot drop per node: a
+    * victim's triangles also counted its retained co-members). */
   private[operators] val censusStore = StoreFamily("graph_census", Seq(
     StoreFamily.substore("census", _ => p =>
       p.agg(coalesce(sum(col("n_edges")), lit(0L)).as("n_edges"),
-        coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles"))),
-    StoreFamily.substore("edges", _ => identity)), reports = "census")
+        coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles")),
+      StoreFamily.Derived("edges", p => censusOf(p.select(col("a"), col("b"))))),
+    StoreFamily.substore("edges", _ => identity,
+      StoreFamily.Filter(_ => Seq("a", "b")))), reports = "census")
 
   private def censusOf(canonEdges: DataFrame): DataFrame =
     triangleCount(canonEdges.select(col("a").as("src"), col("b").as("dst")))
@@ -393,35 +398,5 @@ object Centrality {
       bootstrapName = "triangleCensusWrite")
       .agg(coalesce(sum(col("n_edges")), lit(0L)).as("n_edges"),
         coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles"))
-  }
-
-  /** Erase NODES from a census store — disk-level, both substores:
-    * every edge touching a victim leaves the edges store (filter),
-    * and the census partials REBUILD from the retained edges (a
-    * triangle count cannot drop per-node: a victim's triangles also
-    * counted its retained co-members). After it returns the census
-    * equals a from-scratch count over the retained graph and no
-    * retained version or epoch holds a victim edge. Total erasure
-    * tears both substores down.
-    *
-    * @param ids one-column frame of victim node ids (any column name) */
-  def triangleCensusErase(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          ids: DataFrame): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, censusMeta)
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    val edges = EpochIndex.eraseRewrite(spark, s"$path/edges", p => p
-      .join(victims.select(col("_vid").as("a")), Seq("a"), "left_anti")
-      .join(victims.select(col("_vid").as("b")), Seq("b"), "left_anti"))
-    if (edges.version == EpochIndex.TornDownVersion)
-      EpochIndex.eraseRewrite(spark, s"$path/census", _.limit(0))
-    else {
-      val rebuilt = censusOf(EpochIndex.read(spark, s"$path/edges",
-        bootstrapName = "triangleCensusWrite", observed = false)
-        .select(col("a"), col("b")))
-      EpochIndex.eraseRewrite(spark, s"$path/census", _ => rebuilt)
-      ()
-    }
-    edges
   }
 }

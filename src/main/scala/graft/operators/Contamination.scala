@@ -67,26 +67,13 @@ object Contamination {
       .select(md5(col("_ng").cast("binary")).as("gram_fp"))
       .distinct()
 
+  /** Overwrite-mode plain parquet, versioned wholesale — which is also
+    * its erasure form: the stored rows are corpus-wide DISTINCT
+    * fingerprints with no item id to filter by, so erasing benchmark
+    * items is this write over the retained benchmark (overwrite
+    * deletes the old files). No manifest, so no store family. */
   def benchmarkGramIndexWrite(index: DataFrame, path: String): Unit =
     index.write.mode("overwrite").parquet(path)
-
-  def benchmarkGramIndexRead(spark: org.apache.spark.sql.SparkSession,
-                             path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Erase benchmark items from the persisted gram index — a
-    * wholesale REBUILD over the retained benchmark, because the
-    * stored rows are corpus-wide DISTINCT fingerprints that carry no
-    * item id to filter by (a gram shared by a victim and a retained
-    * item must survive; one unique to the victim must not — only the
-    * rebuild distinguishes them). Overwrite-mode parquet deletes the
-    * old files, so nothing of the victims' grams remains on disk —
-    * the store's own "versioned wholesale" model doubling as its
-    * erasure form. */
-  def benchmarkGramIndexErase(retainedBenchmark: DataFrame, textCol: String,
-                              path: String, n: Int = 8): Unit =
-    benchmarkGramIndexWrite(
-      benchmarkGramIndex(retainedBenchmark, textCol, n), path)
 
   /** Probe a persisted benchmark index: identical output contract to
     * [[ngramOverlap]] (ContaminationSpec pins the equivalence), but
@@ -192,7 +179,10 @@ object Contamination {
     * re-reading benchmark text (q111's discipline at the embedding
     * level). The index is a plain overwrite parquet (eval suites are
     * small and versioned wholesale, nothing to fold incrementally —
-    * the epoch machinery would be weight without work here). */
+    * the epoch machinery would be weight without work here). Erasure
+    * is this write over the retained benchmark: an in-place filtered
+    * self-overwrite of the directory being read is the classic
+    * self-read corruption. */
   def benchmarkVecIndexWrite(benchmark: DataFrame, idCol: String,
                              vecCol: String, path: String): Unit =
     benchmark.select(col(idCol).as("bench_id"), col(vecCol).as("bvec"))
@@ -201,16 +191,6 @@ object Contamination {
   def benchmarkVecIndexRead(spark: org.apache.spark.sql.SparkSession,
                             path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Erase benchmark items from the persisted embedding index —
-    * rebuild-by-overwrite from the retained benchmark (the
-    * [[benchmarkGramIndexErase]] model; rows here DO carry bench_id,
-    * but an in-place filtered self-overwrite of the parquet dir being
-    * read is the classic self-read corruption, and the store's write
-    * form is wholesale anyway). */
-  def benchmarkVecIndexErase(retainedBenchmark: DataFrame, idCol: String,
-                             vecCol: String, path: String): Unit =
-    benchmarkVecIndexWrite(retainedBenchmark, idCol, vecCol, path)
 
   /** The reverse view of [[semanticOverlap]] — the report the
     * EVAL-SET owner asks for: per benchmark item, how many training

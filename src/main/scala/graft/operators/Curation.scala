@@ -168,8 +168,15 @@ object Curation {
   private def capCountFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("key")).agg(sum(col("n")).as("n"))
 
-  private[operators] val capStore =
-    StoreFamily.flat("domain_cap_counts", _ => capCountFold)
+  /** Erasure subtracts the victims' own [[capCountIndex]] partial —
+    * exact and O(victims), never a corpus re-count; keys only the
+    * victims contributed to leave the disk. RTBF caveat the caller
+    * owns: counts already CONSUMED by a published cap decision are
+    * not undone — erasure fixes what FUTURE batches rank against;
+    * re-opening past quota slots is a re-publication decision, not an
+    * index operation. */
+  private[operators] val capStore = StoreFamily.flat("domain_cap_counts",
+    _ => capCountFold, StoreFamily.Subtract(Seq("n")))
   private[graft] def capIndexMeta(keyName: String): IndexMeta =
     IndexMeta(capStore.name, "keyName" -> keyName)
 
@@ -202,34 +209,6 @@ object Curation {
     IndexMeta.check(spark, path, capIndexMeta(keyName))
     capCountFold(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "capCountIndexWrite"))
-  }
-
-  /** Erase documents from a persisted per-key count index —
-    * disk-level, by exact count subtraction (the
-    * [[graft.operators.Dedup.gramFreqIndexErase]] discipline: counts
-    * ADD over disjoint-doc partials, so erasing = folding in the
-    * victims' OWN partial negated — exact and O(victims), never a
-    * corpus re-count). After it returns the store equals
-    * [[capCountIndex]] over the corpus WITHOUT the victims; keys only
-    * the victims contributed to leave the disk in every retained
-    * version and epoch, and a "victim" this store never counted (or
-    * counted under a different key derivation) refuses loudly rather
-    * than silently subtracting a retained document's contribution.
-    *
-    * RTBF caveat the caller owns: counts already CONSUMED by a
-    * published cap decision are not undone here — erasure fixes what
-    * FUTURE batches rank against; re-opening past quota slots is a
-    * re-publication decision, not an index operation.
-    *
-    * @param victims the victim documents with their key derivation —
-    *                the same (key, id) the ingest partials used */
-  def capCountIndexErase(spark: org.apache.spark.sql.SparkSession,
-                         path: String, victims: DataFrame,
-                         key: Column, id: Column,
-                         keyName: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, capIndexMeta(keyName))
-    Dedup.countSubtractErase(spark, path, capCountIndex(victims, key, id),
-      "key", "n", "capCountIndexErase")
   }
 
   /** Batch arrival-order cap against persisted history:

@@ -309,18 +309,6 @@ object Dedup {
     reassembleLines(marked, idCol, sep)
   }
 
-  /** Fold a LATER batch's first occurrences into an existing index:
-    * the stored (earlier) occurrence wins every collision — under the
-    * append-only id contract the stored side is always earlier, so
-    * this equals rebuilding over the union (spec-pinned). */
-  def lineFirstOccIndexMerge(index: DataFrame, batchIndex: DataFrame): DataFrame =
-    index.select(col("fp"), col("wid"), col("wpos"), lit(0).as("_src"))
-      .unionByName(batchIndex.select(col("fp"), col("wid"), col("wpos"),
-        lit(1).as("_src")))
-      .groupBy(col("fp"))
-      .agg(min(struct(col("_src"), col("wid"), col("wpos"))).as("w"))
-      .select(col("fp"), col("w.wid").as("wid"), col("w.wpos").as("wpos"))
-
   /** THE first-occurrence fold — min (wid, wpos) per fingerprint over
     * any union of partials. Shared by the epoch-scoped read AND
     * compaction (associative, so a compacted base
@@ -331,8 +319,13 @@ object Dedup {
       .agg(min(struct(col("wid"), col("wpos"))).as("w"))
       .select(col("fp"), col("w.wid").as("wid"), col("w.wpos").as("wpos"))
 
-  private[operators] val lineStore =
-    StoreFamily.flat("line_first_occ", _ => firstOccFold)
+  /** Erasure is a REBUILD, not a filter (the cc_labels precedent):
+    * the min-fold already discarded every LATER occurrence of a line
+    * whose first holder is now a victim, so dropping the victim's rows
+    * would lose lines the retained corpus still contains — the exact
+    * erased state is [[lineFirstOccIndex]] over the retained corpus. */
+  private[operators] val lineStore = StoreFamily.flat("line_first_occ",
+    _ => firstOccFold, StoreFamily.Rebuild())
   private[graft] def lineIndexMeta(sep: String, minLineLen: Int): IndexMeta =
     IndexMeta(lineStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
@@ -386,25 +379,6 @@ object Dedup {
     EpochIndex.append(partial, path, epoch)
   }
 
-  /** ERASURE form for the first-occurrence store — a REBUILD, not a
-    * filter (the cc_labels precedent): compaction's min-fold already
-    * discarded every LATER occurrence of a line whose first holder is
-    * now a victim, so dropping the victim's rows would lose lines the
-    * retained corpus still contains — the only exact erased state is
-    * recomputed from the retained corpus. Callers build it with
-    * [[lineFirstOccIndex]] over the corpus minus the victims and pass
-    * it here; the constant fold rides [[EpochIndex.eraseRewrite]] so
-    * no epoch directory or retained version still names a victim as
-    * a first-occurrence witness. */
-  def lineFirstOccIndexRebuild(spark: org.apache.spark.sql.SparkSession,
-                               path: String, rebuilt: DataFrame,
-                               sep: String,
-                               minLineLen: Int = 1): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, lineIndexMeta(sep, minLineLen))
-    EpochIndex.eraseRewrite(spark, path,
-      _ => rebuilt.select(col("fp"), col("wid"), col("wpos")))
-  }
-
   /** Persisted line-frequency index for boilerplate removal — the
     * table a 100 TB pipeline writes once at corpus-build time:
     * (fp, n_docs), one fixed-width row per DISTINCT line, never the
@@ -428,8 +402,12 @@ object Dedup {
   private def countsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
 
-  private[operators] val boilerStore =
-    StoreFamily.flat("boilerplate_counts", _ => countsFold)
+  /** Erasure subtracts the victims' own [[boilerplateIndex]] partial
+    * (line counts ADD over disjoint documents): the store then equals
+    * the index over the corpus WITHOUT the victims, and lines unique
+    * to them leave the disk. */
+  private[operators] val boilerStore = StoreFamily.flat("boilerplate_counts",
+    _ => countsFold, StoreFamily.Subtract(Seq("n_docs")))
   private[graft] def boilerplateIndexMeta(sep: String, minLineLen: Int): IndexMeta =
     IndexMeta(boilerStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
@@ -477,23 +455,6 @@ object Dedup {
                              minLineLen: Int = 1): Unit = {
     IndexMeta.check(spark, path, boilerplateIndexMeta(sep, minLineLen))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Erase documents from a persisted line-frequency index — exact
-    * count subtraction (the [[gramFreqIndexErase]] discipline at line
-    * granularity): after it returns the store equals
-    * [[boilerplateIndex]] over the corpus WITHOUT the victims, and
-    * lines unique to the victims survive in no retained version or
-    * epoch. Victim documents (id + text) are required because their
-    * count partial must be recomputed to be subtracted. */
-  def boilerplateIndexErase(spark: org.apache.spark.sql.SparkSession,
-                            path: String, victimDocs: DataFrame,
-                            idCol: String, textCol: String, sep: String,
-                            minLineLen: Int = 1): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, boilerplateIndexMeta(sep, minLineLen))
-    countSubtractErase(spark, path,
-      boilerplateIndex(victimDocs, idCol, textCol, sep, minLineLen),
-      "fp", "n_docs", "boilerplateIndexErase")
   }
 
   /** Incremental boilerplate removal — the daily-batch shape
@@ -761,8 +722,8 @@ object Dedup {
     * verified, and the store manifest. Every role is ONE
     * implementation over these values — full-run pairs
     * ([[lshPairs]]), the index build ([[bandIndex]]) and its store
-    * ([[bandIndexWrite]]/[[bandIndexAppend]]/[[bandIndexRead]]/
-    * [[bandIndexErase]]), the in-memory and store probes
+    * ([[bandIndexWrite]]/[[bandIndexAppend]]/[[bandIndexRead]], erased
+    * through [[Maintenance.eraseStore]]), the in-memory and store probes
     * ([[lshProbe]]/[[lshProbeStore]]) and the streaming sink
     * (`Streaming.nearDupIngestSink`) — so the full run, the index
     * build and the probe produce byte-identical band keys by
@@ -1294,39 +1255,13 @@ object Dedup {
 
   /** Every `<kind>_bands` family shares the `bb`-bucketed layout and
     * the identity fold — band rows are disjoint, so compaction bounds
-    * the file count. */
-  private[operators] val bandStore =
-    StoreFamily.flat("*_bands", _ => identity, Seq("bb"))
-
-  /** Erase documents from any band store — disk-level (the q237
-    * discipline): band rows are per-document, so removing an id is an
-    * anti-join on `id` whatever the banding, and the erased store is
-    * exactly the retained documents' index. No geometry is passed: the
-    * store's own manifest must name a `*_bands` family in the bucketed
-    * layout. After the rewrite no retained version, epoch directory or
-    * marker holds an erased id (q238 pins post-erase probe ≡
-    * never-ingested against a from-scratch index over the retained
-    * corpus; EraseSpec pins it per retained version and epoch). Total
-    * erasure tears the store down ([[EpochIndex.eraseRewrite]]'s
-    * empty-keep path).
-    *
-    * @param ids one-column frame of victim ids (any column name) */
-  def bandIndexErase(spark: org.apache.spark.sql.SparkSession,
-                     path: String, ids: DataFrame): EpochIndex.CompactionStats = {
-    val meta = IndexMeta.read(spark, path).getOrElse(
-      throw new IllegalStateException(s"band store at $path has no " +
-        "_GRAFT_META manifest — refusing to rewrite an unidentified store"))
-    require(bandStore.accepts(meta.family),
-      s"refusing $path: its manifest says family '${meta.family}', " +
-        "bandIndexErase rewrites only *_bands stores")
-    require(meta.params.contains("bb_buckets"),
-      s"refusing $path: pre-bucketing band-store layout (no bb_buckets " +
-        "in its manifest) — rebuild it with bandIndexWrite")
-    val victims = ids.select(col(ids.columns.head).as("id")).distinct()
-    EpochIndex.eraseRewrite(spark, path,
-      p => p.join(victims, Seq("id"), "left_anti"),
-      innerPartCols = Seq("bb"))
-  }
+    * the file count. Erasure filters by `id` whatever the banding (no
+    * geometry is passed): the erased store is exactly the retained
+    * documents' index (q238 pins post-erase probe ≡ never-ingested). A
+    * pre-bucketing layout (no `bb_buckets` in the manifest) refuses —
+    * rebuild it with [[bandIndexWrite]]. */
+  private[operators] val bandStore = StoreFamily.flat("*_bands", _ => identity,
+    StoreFamily.Filter(param => { param("bb_buckets"); Seq("id") }), Seq("bb"))
 
   /** Connected components over a near-duplicate pair list: the final
     * dedup stage that turns pairwise matches into clusters with one
@@ -2207,9 +2142,14 @@ object Dedup {
 
   // -------------------------------------------------- certification ledger
 
-  /** Identity fold: ledger rows are disjoint (see the class doc). */
-  private[operators] val certLedgerStore =
-    StoreFamily.flat("cert_pairs", _ => identity)
+  /** Identity fold: ledger rows are disjoint (see the class doc).
+    * Erasure drops every pair touching a victim: the ledger then equals
+    * the full exact join over the corpus WITHOUT the erased documents
+    * (the induction restarts from the erased state, so erase the
+    * cert_text/cert_vec stores in the same window — [[Maintenance
+    * .eraseAll]] does). */
+  private[operators] val certLedgerStore = StoreFamily.flat("cert_pairs",
+    _ => identity, StoreFamily.Filter(_ => Seq("id_a", "id_b")))
   private[graft] def certLedgerMeta(metric: String,
                                     threshold: Double): IndexMeta =
     IndexMeta(certLedgerStore.name, "metric" -> metric,
@@ -2258,129 +2198,16 @@ object Dedup {
       .drop(EpochIndex.EpochCol)
   }
 
-  /** Erase every pair touching `ids` from a certification ledger —
-    * disk-level removal ([[EpochIndex.eraseRewrite]]: after it
-    * returns, no retained version, epoch directory or marker holds a
-    * pair referencing an erased id). The ledger then equals the full
-    * exact join over the corpus WITHOUT the erased documents — the
-    * induction restarts from the erased state, so run the store
-    * erasers ([[certTextIndexErase]]/[[certVecIndexErase]]) in the
-    * same maintenance window or the next probe would re-certify
-    * against fingerprints of documents the ledger no longer admits.
-    *
-    * @param ids one-column frame of ids to erase (any column name) */
-  def certLedgerErase(spark: org.apache.spark.sql.SparkSession,
-                      path: String, ids: DataFrame, metric: String,
-                      threshold: Double): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, certLedgerMeta(metric, threshold))
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    EpochIndex.eraseRewrite(spark, path, p => p
-      .join(victims.select(col("_vid").as("id_a")), Seq("id_a"), "left_anti")
-      .join(victims.select(col("_vid").as("id_b")), Seq("id_b"), "left_anti"))
-  }
-
-  /** Rebuild the labeling from scratch over `pairs` (normally the
-    * post-erasure ledger read) — the ERASURE form for `cc_labels`:
-    * a filter cannot erase an id from a labeling, because min-id
-    * LABELS are identifiers too (an erased id that was its
-    * component's min would survive as every other member's
-    * cluster_id). The only erased-state labeling is the one recomputed
-    * from the erased edge set; [[EpochIndex.eraseRewrite]] with a
-    * constant fold makes the rewrite disk-clean (no delta epoch or
-    * retained base version still names the erased ids). */
-  def ccLabelsRebuild(spark: org.apache.spark.sql.SparkSession,
-                      path: String, pairs: DataFrame, metric: String,
-                      threshold: Double): DataFrame = {
-    IndexMeta.check(spark, path, ccLabelsMeta(metric, threshold))
-    val labels = connectedComponents(pairs)
-    EpochIndex.eraseRewrite(spark, path,
-      _ => labels.select(col("id"), col("cluster_id")))
-    labels
-  }
-
-  /** Erase documents from the text certification store — all three
-    * substores, disk-level: fingerprints and postings drop the ids'
-    * rows through [[EpochIndex.eraseRewrite]]'s filtering fold, and
-    * the stats partials are REBUILT from the retained postings (a
-    * count cannot be filtered per-document — it must be recomputed;
-    * the rebuild rides the same two-pass rewrite so no stale count
-    * survives on disk and the substores stay epoch-aligned). After
-    * this, every probe answers exactly as if the documents had never
-    * been ingested — q237 pins that against brute force over the
-    * retained corpus. */
-  def certTextIndexErase(spark: org.apache.spark.sql.SparkSession,
-                         path: String, ids: DataFrame, threshold: Double,
-                         shingleK: Int = 1, maxBucket: Int = 100000,
-                         buckets: Int = 64): Unit = {
-    IndexMeta.check(spark, path,
-      certTextMeta(threshold, shingleK, maxBucket, buckets))
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    def keepIds(p: DataFrame) = p.join(
-      victims.select(col("_vid").as("id")), Seq("id"), "left_anti")
-    // the fps and postings rewrites touch disjoint substores —
-    // independent two-pass compactions, overlapped (guide §2.6); only
-    // the stats rebuild depends on the rewritten postings and runs
-    // after
-    var post: EpochIndex.CompactionStats = null
-    Par.concurrently(
-      () => EpochIndex.eraseRewrite(spark, s"$path/$CertTextFps", keepIds,
-        innerPartCols = Seq("ib")),
-      () => post = EpochIndex.eraseRewrite(spark,
-        s"$path/$CertTextPostings", keepIds, innerPartCols = Seq("pb")))
-    // TOTAL erasure (every document a victim): the postings store was
-    // torn down, so there is nothing to rebuild counts from — tear
-    // the stats substore down the same way (a schema-preserving empty
-    // keep takes eraseRewrite's teardown path) instead of reading a
-    // store that no longer exists
-    if (post.version == EpochIndex.TornDownVersion)
-      EpochIndex.eraseRewrite(spark, s"$path/$CertTextStats",
-        _.limit(0), innerPartCols = Seq("pb"))
-    else {
-      val rebuilt = EpochIndex.read(spark, s"$path/$CertTextPostings",
-        innerPartCols = Seq("pb"), bootstrapName = "certTextIndexWrite",
-        observed = false)
-        .drop(EpochIndex.EpochCol)
-        .groupBy(col("pb"), col("pt")).agg(count(lit(1)).as("cnt"))
-      EpochIndex.eraseRewrite(spark, s"$path/$CertTextStats",
-        _ => rebuilt, innerPartCols = Seq("pb"))
-      ()
-    }
-  }
-
-  /** [[certTextIndexErase]]'s cosine twin: band rows drop by id, the
-    * cell-count stats rebuild from the retained bands. The frozen
-    * pivot geometry is untouched — pivots are aggregate directions,
-    * not records of any document, and keeping them is what lets
-    * already-banded epochs stay consistent. */
-  def certVecIndexErase(spark: org.apache.spark.sql.SparkSession,
-                        path: String, ids: DataFrame, threshold: Double,
-                        maxCell: Long = 100000L, roundTo: Int = 4): Unit = {
-    certVecPivots(spark, path, threshold, roundTo, maxCell)
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    val bands = EpochIndex.eraseRewrite(spark, s"$path/$CertVecBands",
-      p => p.join(victims.select(col("_vid").as("id")), Seq("id"),
-        "left_anti"),
-      innerPartCols = Seq("b0", "b1"))
-    // total erasure: band store torn down → tear the stats down too
-    // (certTextIndexErase's branch, cosine twin)
-    if (bands.version == EpochIndex.TornDownVersion)
-      EpochIndex.eraseRewrite(spark, s"$path/$CertVecStats", _.limit(0))
-    else {
-      val rebuilt = EpochIndex.read(spark, s"$path/$CertVecBands",
-        innerPartCols = Seq("b0", "b1"),
-        bootstrapName = "certVecIndexWrite", observed = false)
-        .drop(EpochIndex.EpochCol)
-        .groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt"))
-      EpochIndex.eraseRewrite(spark, s"$path/$CertVecStats", _ => rebuilt)
-      ()
-    }
-  }
-
   // ------------------------------------------- persisted repair labels
 
-  /** Min-fold (the family merge — see [[ccLabelsFold]]). */
+  /** Min-fold (the family merge — see [[ccLabelsFold]]). Erasure is a
+    * REBUILD: min-id LABELS are identifiers too (an erased id that was
+    * its component's min would survive a filter as every other
+    * member's cluster_id), so the erased labeling is
+    * [[connectedComponents]] over the erased ledger. */
   private[operators] val ccLabelsStore = StoreFamily.flat("cc_labels",
-    _ => p => p.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")))
+    _ => p => p.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")),
+    StoreFamily.Rebuild())
   private[graft] def ccLabelsMeta(metric: String,
                                   threshold: Double): IndexMeta =
     IndexMeta(ccLabelsStore.name, "metric" -> metric,
@@ -2505,6 +2332,11 @@ object Dedup {
       "shingleK" -> shingleK, "maxBucket" -> maxBucket,
       "buckets" -> buckets)
 
+  /** The certification stores' per-document substores erase by `id`;
+    * their count partials rebuild from the retained rows (a count
+    * cannot be filtered per document). */
+  private val byId = StoreFamily.Filter(_ => Seq("id"))
+
   /** The three substores of a text certification root — the bm25
     * multi-subdir layout, manifest at the root:
     *  - `postings/`: exploded prefix rows `(pb, pt, id, n)`, inner-
@@ -2532,9 +2364,11 @@ object Dedup {
     * document-count-shaped substore). */
   private[operators] val certTextStore = StoreFamily("cert_text", Seq(
     StoreFamily.substore(CertTextStats, _ => p =>
-      p.groupBy(col("pb"), col("pt")).agg(sum(col("cnt")).as("cnt")), Seq("pb")),
-    StoreFamily.substore(CertTextPostings, _ => identity, Seq("pb")),
-    StoreFamily.substore(CertTextFps, _ => identity, Seq("ib"))),
+      p.groupBy(col("pb"), col("pt")).agg(sum(col("cnt")).as("cnt")),
+      StoreFamily.Derived(CertTextPostings, p =>
+        p.groupBy(col("pb"), col("pt")).agg(count(lit(1)).as("cnt"))), Seq("pb")),
+    StoreFamily.substore(CertTextPostings, _ => identity, byId, Seq("pb")),
+    StoreFamily.substore(CertTextFps, _ => identity, byId, Seq("ib"))),
     reports = CertTextFps)
 
   /** Refuse loudly when a certification root's substores disagree on
@@ -2869,8 +2703,10 @@ object Dedup {
     * (b0, b1). Compaction reports the band fold. */
   private[operators] val certVecStore = StoreFamily("cert_vec", Seq(
     StoreFamily.substore(CertVecStats, _ => p =>
-      p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt"))),
-    StoreFamily.substore(CertVecBands, _ => identity, Seq("b0", "b1"))),
+      p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt")),
+      StoreFamily.Derived(CertVecBands, p =>
+        p.groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt")))),
+    StoreFamily.substore(CertVecBands, _ => identity, byId, Seq("b0", "b1"))),
     reports = CertVecBands)
   private[graft] def certVecMeta(threshold: Double, roundTo: Int,
                                  maxCell: Long,
@@ -3263,8 +3099,8 @@ object Dedup {
     * an empty or mis-pathed index would report seen_frac = 0 for
     * every doc — the silent "everything is novel" verdict a curation
     * gate must never emit. */
-  private[operators] val gramStore =
-    StoreFamily.flat("gram_freq", _ => gramCountsFold)
+  private[operators] val gramStore = StoreFamily.flat("gram_freq",
+    _ => gramCountsFold, StoreFamily.Subtract(Seq("n_docs")))
   private[graft] def gramFreqIndexMeta(n: Int): IndexMeta =
     IndexMeta(gramStore.name, "n" -> n)
 
@@ -3310,57 +3146,6 @@ object Dedup {
                         n: Int): DataFrame = {
     IndexMeta.check(spark, path, gramFreqIndexMeta(n))
     gramFreqIndexRead(spark, path, excludeEpoch)
-  }
-
-  /** Shared count-subtraction erase fold for the additive count
-    * stores (gram_freq, boilerplate line counts): counts ADD over
-    * disjoint-doc partials, so erasing documents = folding in the
-    * victims' OWN partial negated — exact (the partial is a
-    * deterministic function of the victim text, so it is bitwise the
-    * contribution ingest added) and O(victims), not O(corpus). Rows
-    * whose count reaches zero leave the disk (grams/lines unique to
-    * the victims survive nowhere); a NEGATIVE count refuses loudly —
-    * it means a "victim" was never ingested (or was ingested with
-    * different text), and dropping the row would silently erase a
-    * retained document's contribution too. */
-  private[graft] def countSubtractErase(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      victimPartial: DataFrame, keyCol: String,
-      cntCol: String, op: String): EpochIndex.CompactionStats = {
-    val negated = victimPartial.select(col(keyCol),
-      (-col(cntCol)).as(cntCol))
-    EpochIndex.eraseRewrite(spark, path, p =>
-      p.unionByName(negated)
-        .groupBy(col(keyCol)).agg(sum(col(cntCol)).as(cntCol))
-        .filter(col(cntCol) =!= 0L)
-        .withColumn(cntCol,
-          when(col(cntCol) < 0L,
-            raise_error(concat(
-              lit(s"$op: negative $cntCol for "), col(keyCol).cast("string"),
-              lit(" — a victim document was never ingested here (or was " +
-                "ingested with different text); erase only documents " +
-                "this store actually indexed"))).cast("long"))
-          .otherwise(col(cntCol)))
-        .select(col(keyCol), col(cntCol)))
-  }
-
-  /** Erase documents from a persisted gram-frequency index —
-    * disk-level, by exact count subtraction ([[countSubtractErase]]):
-    * after it returns the store equals [[gramFreqIndex]] over the
-    * corpus WITHOUT the victims, and grams unique to the victims
-    * survive in no retained version or epoch.
-    *
-    * @param victimDocs the victim documents (id + text — the RTBF
-    *                   request payload; their gram partial must be
-    *                   recomputable to be subtractable) */
-  def gramFreqIndexErase(spark: org.apache.spark.sql.SparkSession,
-                         path: String, victimDocs: DataFrame,
-                         idCol: String, textCol: String,
-                         n: Int = 8): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, gramFreqIndexMeta(n))
-    countSubtractErase(spark, path,
-      gramFreqIndex(victimDocs, idCol, textCol, n),
-      "gram_fp", "n_docs", "gramFreqIndexErase")
   }
 
   def incrementalDupGramFraction(batch: DataFrame, index: DataFrame,

@@ -483,9 +483,9 @@ object EpochIndex {
                              uncommitted: Seq[String] = Nil)
 
   /** Version sentinel in [[CompactionStats]] when [[eraseRewrite]]
-    * tore the store down because `keep` removed every row — family
-    * erasers branch on it to skip rebuild reads of a store that no
-    * longer exists. Starts with `_` so it can never collide with a
+    * tore the store down because `keep` removed every row — the
+    * Derived erase form branches on it to skip rebuild reads of a
+    * store that no longer exists. Starts with `_` so it can never collide with a
     * real `v=N` version directory name. */
   val TornDownVersion = "_torn_down"
 
@@ -546,13 +546,12 @@ object EpochIndex {
     * same single-writer maintenance window as the rewrite itself),
     * stamped with wall-clock millis so multi-store consumers can
     * order entries ACROSS logs ([[erasureLog]]).
-    * `private[graft]` for the non-epoch erasure paths that must still
-    * land on the audit surface — [[graft.operators.Quality
-    * .qualityCutsRefreeze]] replaces a versioned calibration snapshot
-    * rather than rewriting epochs, but the RTBF record it leaves is
-    * the same `_ERASURES` line `describeStores` and the release card
-    * read. */
-  private[graft] def logErasure(spark: SparkSession, root: String,
+    * Also the record of the non-epoch erasure path — the snapshot
+    * Rebuild form ([[StoreFamily.Rebuild]]) replaces a versioned
+    * calibration rather than rewriting epochs, but the RTBF record it
+    * leaves is the same `_ERASURES` line `describeStores` and the
+    * release card read. */
+  private[operators] def logErasure(spark: SparkSession, root: String,
                                 line: String): Unit = {
     val prior = rawErasureLines(spark, root)
     writeTextFile(fsOf(spark, new Path(root)),

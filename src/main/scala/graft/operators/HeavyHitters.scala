@@ -77,8 +77,13 @@ object HeavyHitters {
   private def cmsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("r"), col("b")).agg(sum(col("c")).as("c"))
 
+  /** Erasure is a REBUILD (the sketch-store convention, even though
+    * CMS cells are additive in principle): [[countMinSketch]] over the
+    * retained stream. One convention across all four sketch families
+    * beats a per-family subtract-vs-rebuild split an operator must
+    * memorize. */
   private[operators] val cmsStore =
-    StoreFamily.flat("cms_counts", _ => cmsFold)
+    StoreFamily.flat("cms_counts", _ => cmsFold, StoreFamily.Rebuild())
   private[graft] def cmsMeta(depth: Int, width: Int,
                              itemName: String): IndexMeta =
     IndexMeta(cmsStore.name, "depth" -> depth, "width" -> width,
@@ -104,20 +109,6 @@ object HeavyHitters {
                      depth: Int, width: Int, itemName: String): Unit = {
     IndexMeta.check(spark, path, cmsMeta(depth, width, itemName))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** ERASURE form — a REBUILD (the sketch-store convention, even
-    * though CMS cells are additive in principle): recompute over the
-    * retained stream and rewrite disk-clean via
-    * [[EpochIndex.eraseRewrite]]'s constant fold, so no epoch or
-    * retained version still carries cells the victims raised. One
-    * convention across all four sketch families beats a per-family
-    * subtract-vs-rebuild split an operator must memorize. */
-  def cmsIndexErase(spark: org.apache.spark.sql.SparkSession,
-                    path: String, rebuilt: DataFrame, depth: Int,
-                    width: Int, itemName: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, cmsMeta(depth, width, itemName))
-    EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
   }
 
   /** Checked read: the summed cells across base and live epochs —

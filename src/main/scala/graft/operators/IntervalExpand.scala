@@ -121,8 +121,12 @@ object IntervalExpand {
       partials.select(col(keyCol), col("island_start"), col("island_end")),
       keyCol, col("island_start"), col("island_end"))
 
+  /** Erasure is a REBUILD, never a filter: island merging is lossy —
+    * an island that absorbed a victim's interval cannot be un-merged,
+    * so the erased state is [[mergeIntervals]] over the retained raw
+    * intervals. */
   private[operators] val islandsStore = StoreFamily.flat("interval_islands",
-    param => islandsFold(param("keyCol")))
+    param => islandsFold(param("keyCol")), StoreFamily.Rebuild())
   private[graft] def islandsMeta(keyCol: String): IndexMeta =
     IndexMeta(islandsStore.name, "keyCol" -> keyCol)
 
@@ -157,21 +161,5 @@ object IntervalExpand {
     IndexMeta.check(spark, path, islandsMeta(keyCol))
     islandsFold(keyCol)(EpochIndex.read(spark, path, excludeEpoch,
       bootstrapName = "islandsIndexWrite"))
-  }
-
-  /** ERASURE form for the islands store — a REBUILD, never a filter
-    * (the `lineFirstOccIndexRebuild` rationale): island merging is
-    * lossy — an island that absorbed a victim's interval cannot be
-    * un-merged, so the only exact erased state is re-merged from the
-    * retained raw intervals. Callers pass them; the constant fold
-    * rides `EpochIndex.eraseRewrite` so no epoch or retained version
-    * still carries an island a victim's interval widened. */
-  def islandsIndexRebuild(spark: org.apache.spark.sql.SparkSession,
-                          path: String, retainedIntervals: DataFrame,
-                          keyCol: String, start: Column,
-                          end: Column): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, islandsMeta(keyCol))
-    val rebuilt = mergeIntervals(retainedIntervals, keyCol, start, end)
-    EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
   }
 }

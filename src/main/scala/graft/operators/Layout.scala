@@ -541,16 +541,6 @@ object Layout {
       .select(col("file")).collect().map(_.getString(0)).toSeq
   }
 
-  /** Incremental zone-map maintenance: stats for a batch of NEWLY
-    * written files union into the manifest — appended files never
-    * re-scan the existing table (the persisted-index shape the
-    * near-dup/boilerplate/IVF families follow; same disjointness
-    * contract: `newFiles` must not re-list files already in the
-    * manifest, or their rows double). Associative — per-batch appends
-    * equal one whole-table build (spec-pinned). */
-  def zoneMapAppend(manifest: DataFrame, newFilesStats: DataFrame): DataFrame =
-    manifest.unionByName(newFilesStats)
-
   /** Range read through the zone map: scan only overlapping files,
     * then apply the exact predicate (the manifest prunes at file
     * granularity; the residual filter restores row semantics).

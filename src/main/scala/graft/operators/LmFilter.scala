@@ -129,7 +129,11 @@ object LmFilter {
   }
 
   // ------------------------------------------------ persisted LM store
-  private[operators] val lmStore = StoreFamily.flat("lm_bigram", _ => lmFold)
+  /** Erasure subtracts the victims' own [[lmIndex]] count partial:
+    * the store then scores every document exactly as an LM trained
+    * without the victims would. */
+  private[operators] val lmStore = StoreFamily.flat("lm_bigram", _ => lmFold,
+    StoreFamily.Subtract(Seq("c"), absorbed = "trained on"))
   private[graft] def lmMeta(ctxBuckets: Int, bigramBuckets: Int): IndexMeta =
     IndexMeta(lmStore.name,
       "ctx_buckets" -> ctxBuckets, "bigram_buckets" -> bigramBuckets)
@@ -167,36 +171,5 @@ object LmFilter {
                     ctxBuckets: Int, bigramBuckets: Int): Unit = {
     IndexMeta.check(spark, path, lmMeta(ctxBuckets, bigramBuckets))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Erase reference documents from a trained LM store — exact count
-    * subtraction (the `gramFreqIndexErase` discipline over the
-    * (_g, _b) composite key): model counts ADD over disjoint
-    * reference batches, so erasing = folding in the victims' own
-    * count partial negated; after it returns the store scores every
-    * document exactly as an LM trained without the victims would.
-    * Buckets that would go negative refuse loudly — a "victim" never
-    * trained on (or trained with different text). */
-  def lmIndexErase(spark: org.apache.spark.sql.SparkSession, path: String,
-                   victimRef: DataFrame, idCol: String, textCol: String,
-                   ctxBuckets: Int = 4096,
-                   bigramBuckets: Int = 32768): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, lmMeta(ctxBuckets, bigramBuckets))
-    val negated = lmIndex(victimRef, idCol, textCol, ctxBuckets,
-      bigramBuckets).select(col("_g"), col("_b"), (-col("c")).as("c"))
-    EpochIndex.eraseRewrite(spark, path, p =>
-      lmFold(p.unionByName(negated))
-        .withColumn("c",
-          when(col("c") < 0L,
-            raise_error(concat(
-              lit("lmIndexErase: negative count for bucket ("),
-              col("_g").cast("string"), lit(","),
-              col("_b").cast("string"),
-              lit(") — a victim document was never trained on here (or " +
-                "was trained with different text); erase only reference " +
-                "documents this model ingested"))).cast("long"))
-          .otherwise(col("c")))
-        .filter(col("c") =!= 0L)
-        .select(col("_g"), col("_b"), col("c")))
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** One maintenance entry point for every persisted index family —
   * the operational closure over the engine's log-structured stores.
@@ -9,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * storage tree it does not hand-enumerate; this discovers stores by
   * their `_GRAFT_META` manifests and looks each manifest's `family` up
   * in [[Families]], the one list of every [[StoreFamily]] (each
-  * declared next to its family's code), for the substores to fold.
+  * declared next to its family's code), for the substores to fold —
+  * and, for a right-to-be-forgotten request, the form each substore
+  * erases by ([[eraseStore]], [[eraseAll]]).
   *
   * Failure posture: maintenance keeps going past a failing store
   * (one poisoned root must not starve every other index of
@@ -106,23 +109,25 @@ object Maintenance {
     discoverStores(spark, treeRoot, maxDepth).map { root =>
       val meta = IndexMeta.read(spark, root).getOrElse(
         sys.error(s"manifest vanished under sweep at $root"))
-      val substores = familyOf(meta).map(_.substores)
-        .getOrElse(Seq(StoreFamily.Substore("", Nil, None)))
+      val substores = familyOf(meta)
+        .map(_.substores.map(s => s.subdir -> s.innerPartCols))
+        .getOrElse(Seq("" -> Nil))
       val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-      val states = substores.flatMap { s =>
-        val p = s.path(root)
+      def path(subdir: String) = if (subdir.isEmpty) root else s"$root/$subdir"
+      val states = substores.flatMap { case (subdir, inner) =>
+        val p = path(subdir)
         if (!fs.exists(new Path(p))) None
         else {
           val (retained, current) = EpochIndex.versions(spark, p)
-          Some(EpochStoreState(s.subdir,
-            EpochIndex.committedEpochNames(spark, p, s.innerPartCols),
-            EpochIndex.uncommittedEpochNames(spark, p, s.innerPartCols),
+          Some(EpochStoreState(subdir,
+            EpochIndex.committedEpochNames(spark, p, inner),
+            EpochIndex.uncommittedEpochNames(spark, p, inner),
             retained, current))
         }
       }
-      val erasures = substores.flatMap { s =>
-        EpochIndex.erasures(spark, s.path(root))
-          .map(v => if (s.subdir.isEmpty) v else s"${s.subdir}:$v")
+      val erasures = substores.flatMap { case (subdir, _) =>
+        EpochIndex.erasures(spark, path(subdir))
+          .map(v => if (subdir.isEmpty) v else s"$subdir:$v")
       }
       StoreInfo(root, meta.family, meta.params, states, erasures)
     }
@@ -191,6 +196,139 @@ object Maintenance {
     results
   }
 
+  // ------------------------------------------------------- erasure
+
+  /** One right-to-be-forgotten request: the victim ids, plus, per
+    * store root whose family erases by Subtract or Rebuild, the
+    * caller-built input — built with the family's own functions
+    * (`gramFreqIndex`, `capCountIndex`, `digestPartial`,
+    * `kmvSketch`, `qualityCuts`, …) over the victims (Subtract) or
+    * the retained rows (Rebuild).
+    *
+    * @param victims one-column frame of victim ids (any column name)
+    * @param inputs store root → input; each input carries the
+    *               [[IndexMeta]] it was built under, checked against
+    *               the store's manifest before any rewrite, and builds
+    *               lazily, so a rebuild that reads an erased store
+    *               (cc_labels from the erased ledger) sees the erased
+    *               state */
+  final case class EraseRequest(victims: DataFrame,
+                                inputs: Map[String, EraseRequest.Input] = Map.empty) {
+    /** This request plus `root`'s input, built under `meta`. */
+    def withInput(root: String, meta: IndexMeta)(build: => DataFrame): EraseRequest =
+      copy(inputs = inputs + (root -> EraseRequest.Input(meta, () => build)))
+  }
+
+  object EraseRequest {
+    final case class Input(meta: IndexMeta, build: () => DataFrame)
+  }
+
+  /** One store resolved against the registry and the request. */
+  private final case class ErasePlan(root: String, meta: IndexMeta,
+                                     family: StoreFamily,
+                                     input: Option[EraseRequest.Input]) {
+    def run(victims: DataFrame): EpochIndex.CompactionStats =
+      family.erase(victims.sparkSession, root, meta, victims,
+        input.map(_.build))
+  }
+
+  private def qualified(spark: SparkSession, root: String): String = {
+    val p = new Path(root)
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(p).toString.stripSuffix("/")
+  }
+
+  /** Resolve `root` for erasure. Every refusal that needs no data —
+    * no manifest, unknown family, a missing or unneeded input, an
+    * input built under other parameters — comes back as Left, so
+    * [[eraseAll]] can name them all before it rewrites anything. */
+  private def planErase(spark: SparkSession, root: String,
+                        request: EraseRequest): Either[String, ErasePlan] = {
+    val here = qualified(spark, root)
+    val input = request.inputs.collectFirst {
+      case (k, in) if qualified(spark, k) == here => in }
+    IndexMeta.read(spark, root) match {
+      case None => Left(s"$root has no _GRAFT_META manifest — not a graft " +
+        "index store; refusing to rewrite an unidentified store")
+      case Some(meta) => familyOf(meta) match {
+        case None => Left(s"$root: unknown index family '${meta.family}' — " +
+          "declare it in Maintenance.Families rather than skip the store")
+        case Some(family) => (family.erasesWithInput, input) match {
+          case (Some(s), None) =>
+            val (form, what) = s.erase match {
+              case _: StoreFamily.Subtract => ("Subtract", "the victims' partial")
+              case _ => ("Rebuild", "the state rebuilt over the retained rows")
+            }
+            Left(s"$root (${meta.family}) erases by $form and needs $what, " +
+              "which the request does not carry")
+          case (None, Some(_)) =>
+            Left(s"$root (${meta.family}) erases by victim id alone, but " +
+              "the request carries an input for it — wrong root?")
+          case (_, in) =>
+            scala.util.Try(in.foreach(i => IndexMeta.check(spark, root, i.meta)))
+              .toEither.left.map(_.getMessage)
+              .map(_ => ErasePlan(root, meta, family, in))
+        }
+      }
+    }
+  }
+
+  /** Erase ONE store, disk-level: the manifest's family picks each
+    * substore's erase form ([[StoreFamily.Erase]]) and every build
+    * parameter; the request supplies the victims and, for a Subtract
+    * or Rebuild family, the input checked against the manifest.
+    * Returns the family's reported substore stats (the snapshot
+    * family's: the re-frozen version). */
+  def eraseStore(spark: SparkSession, root: String,
+                 request: EraseRequest): EpochIndex.CompactionStats = {
+    val plan = planErase(spark, root, request)
+      .fold(msg => throw new IllegalArgumentException(s"refusing to erase: $msg"),
+        identity)
+    plan.family.checkErase(spark, root, plan.input.map(_.build))
+    plan.run(request.victims)
+  }
+
+  /** Right-to-be-forgotten over a whole store tree — the erasure
+    * counterpart of [[compactAll]]: discover every store, refuse
+    * BEFORE any rewrite when some store cannot be erased as asked
+    * (the refusal names every such root and the form that needs the
+    * missing input), then erase the Filter stores, the Subtract
+    * stores and the Rebuild stores in that order (a rebuild may read
+    * a filtered store), and certify with [[requireErased]]. The
+    * victim ids are read once, before any rewrite. Returns the
+    * certificate. */
+  def eraseAll(spark: SparkSession, treeRoot: String, request: EraseRequest,
+               maxDepth: Int = 4): ErasureAuditReport = {
+    import spark.implicits._
+    val found = discover(spark, treeRoot, maxDepth)
+    require(found.unexplored.isEmpty,
+      s"eraseAll at $treeRoot: store discovery bottomed out at " +
+        s"maxDepth=$maxDepth with unexplored directories below — a store " +
+        "any deeper would keep the victims. Raise maxDepth. Unexplored: " +
+        found.unexplored.mkString(", "))
+    val v = request.victims
+    val ids = v.select(col(v.columns.head).cast("long")).na.drop().distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+    require(ids.nonEmpty, s"eraseAll at $treeRoot: the request names no victim")
+    val roots = found.stores.map(qualified(spark, _)).toSet
+    val planned = found.stores.map(planErase(spark, _, request))
+    val refusals = planned.collect { case Left(msg) => msg } ++
+      request.inputs.keys.filterNot(k => roots(qualified(spark, k)))
+        .map(k => s"$k: the request carries an input for it, but no store " +
+          "was discovered there")
+    require(refusals.isEmpty, s"eraseAll at $treeRoot refused before any " +
+      s"rewrite — ${refusals.mkString("; ")}")
+    val plans = planned.collect { case Right(p) => p }
+    plans.foreach(p => p.family.checkErase(spark, p.root, p.input.map(_.build)))
+    val victims = ids.toDF("id")
+    plans.sortBy(_.family.erasesWithInput.map(_.erase) match {
+      case None => 0
+      case Some(_: StoreFamily.Subtract) => 1
+      case Some(_) => 2
+    }).foreach(_.run(victims))
+    requireErased(spark, treeRoot, ids, maxDepth = maxDepth)
+  }
+
   // ------------------------------------------------- erasure audit
 
   /** One surviving victim reference found by [[erasureAudit]]: the
@@ -250,7 +388,7 @@ object Maintenance {
     discover(spark, treeRoot, maxDepth).unexplored
 
   /** Right-to-be-forgotten VERIFICATION sweep — the operational
-    * closure after the erasers run: walk EVERY parquet file under
+    * closure after the erase runs: walk EVERY parquet file under
     * every discovered store (including `_base` version trees and
     * torn epoch directories Spark readers skip — exactly where a
     * stale copy of an erased row would hide) and report every row
@@ -293,15 +431,15 @@ object Maintenance {
     *
     * Caveat an auditor must know: this proves no ROW carries a
     * victim ID. Derived state without ids (count deltas, digest
-    * residues, calibration thresholds) is covered by the family
-    * erasers' own contracts (subtract-exactness, re-freeze), not by
+    * residues, calibration thresholds) is covered by the erase
+    * forms' own contracts (subtract-exactness, re-freeze), not by
     * this scan — the audit is the id-level half of the proof. */
   def erasureAudit(spark: SparkSession, treeRoot: String,
                    victimIds: Seq[Long],
                    idCols: Seq[String] = ErasureAuditIdCols,
                    maxDepth: Int = 4,
                    footerPrune: Boolean = true): ErasureAuditReport = {
-    import org.apache.spark.sql.functions.{col, count, lit, when}
+    import org.apache.spark.sql.functions.{count, lit, when}
     import scala.jdk.CollectionConverters._
     require(victimIds.nonEmpty, "erasureAudit needs at least one victim id")
     val victimSet = victimIds.toSet
@@ -460,12 +598,12 @@ object Maintenance {
   }
 
   /** [[erasureAudit]] that REFUSES on any surviving reference — the
-    * form an automated RTBF pipeline calls between "erasers ran" and
-    * "request closed". Returns the full report so the caller can
-    * RECORD the certificate: files walked vs read, and every
-    * id-named column the sweep could not verify (the refusal message
-    * names them too — an incomplete-erasure failure should state its
-    * blind spots alongside its hits). A nonempty `unverified` does
+    * form an automated RTBF pipeline calls between "erase ran" and
+    * "request closed" ([[eraseAll]] ends with it). Returns the full
+    * report so the caller can RECORD the certificate: files walked vs
+    * read, and every id-named column the sweep could not verify (the
+    * refusal message names them too — an incomplete-erasure failure
+    * should state its blind spots alongside its hits). A nonempty `unverified` does
     * NOT fail the call: those columns are disclosed, and closing
     * them needs either integral keying at ingest or a caller-side
     * audit — see [[UnverifiedIdColumn]]. */
@@ -484,8 +622,10 @@ object Maintenance {
         report.hits.map(h => s"${h.root}${if (h.subroot.isEmpty) ""
           else "/" + h.subroot}.${h.column} still holds ${h.nRows} " +
           "victim row(s)").mkString("; ") +
-        " — a family eraser was skipped, or ran before a torn epoch " +
-        "was repaired; re-run the missing erasers and audit again" + blind)
+        " — a store under this tree was erased by hand and another was " +
+        "missed, or an erase ran before a torn epoch was repaired; repair " +
+        "it and erase the whole tree with Maintenance.eraseAll (it " +
+        "discovers every store), then audit again" + blind)
     report
   }
 }

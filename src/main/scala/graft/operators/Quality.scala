@@ -37,8 +37,14 @@ object Quality {
   val CutsFamily = "quality_cuts"
 
   /** Each freeze IS a compacted base (publishVersion retention GCs
-    * superseded versions), so the family has nothing to compact. */
-  private[operators] val cutsStore = StoreFamily.snapshot(CutsFamily)
+    * superseded versions), so the family has nothing to compact.
+    * Erasure is a RE-FREEZE, not a filter: the thresholds are
+    * quantiles FITTED on the calibration slice (every threshold is a
+    * function of every score), so the only exact erasure is
+    * [[qualityCuts]] over the retained slice, published with
+    * `keepVersions = 1` — retaining the victim-fitted version would
+    * keep the erased rows' influence readable on disk. */
+  private[operators] val cutsStore = StoreFamily.snapshot(CutsFamily, "cuts")
 
   private def validateCuts(cuts: Seq[Double]): Unit = {
     require(cuts.nonEmpty && cuts.forall(p => p > 0.0 && p < 1.0),
@@ -133,8 +139,8 @@ object Quality {
       .drop(names: _*)
   }
 
-  private def cutsMeta(scoreCol: String, byCols: Seq[String],
-                       cuts: Seq[Double]) =
+  private[graft] def cutsMeta(scoreCol: String, byCols: Seq[String],
+                              cuts: Seq[Double] = Seq(1.0 / 3, 2.0 / 3)): IndexMeta =
     IndexMeta(CutsFamily, "score" -> scoreCol,
       "by" -> byCols.mkString(","),
       "cuts" -> cuts.map(c => f"$c%.6f").mkString(","))
@@ -169,41 +175,6 @@ object Quality {
     val version = Layout.publishVersion(spark, s"$root/cuts", keepVersions)(
       dir => thresholds.write.mode("overwrite").parquet(dir))
     IndexMeta.writeIfAbsent(spark, root, meta)
-    version
-  }
-
-  /** The erasure arm of the quality_cuts family — a RE-FREEZE, not a
-    * filter: the frozen thresholds are quantiles FITTED on the
-    * calibration slice, so victim rows' influence cannot be filtered
-    * out of the table (every threshold is a function of every score).
-    * The only exact erasure is recomputation over the retained
-    * calibration slice — this is the fold-lossy families' REBUILD
-    * discipline (sketches, first-occurrence) applied to a versioned
-    * snapshot. The caller passes the RETAINED scores (calibration
-    * slice minus victims); the new calibration publishes behind the
-    * same atomic pointer flip as any freeze, with `keepVersions = 1`
-    * deliberately forced: retaining the superseded victim-fitted
-    * version would keep the erased rows' statistical influence
-    * readable on disk, which is exactly what the request revokes (the
-    * time-travel window is the price of the erasure — same trade
-    * every eraseRewrite makes). The `_ERASURES` line lands at the
-    * store root, so `Maintenance.describeStores` and the audit card
-    * cite this re-freeze like any other family's rewrite.
-    *
-    * Returns the published version name. Manifest-checked: a
-    * re-freeze under different score/grouping/cuts is a different
-    * CONTRACT, not an erasure — it refuses (change parameters via a
-    * new root, as ever). */
-  def qualityCutsRefreeze(spark: org.apache.spark.sql.SparkSession,
-                          root: String, retainedScores: DataFrame,
-                          scoreCol: String, byCols: Seq[String],
-                          cuts: Seq[Double] = Seq(1.0 / 3, 2.0 / 3)): String = {
-    IndexMeta.check(spark, root, cutsMeta(scoreCol, byCols, cuts))
-    val thresholds = qualityCuts(retainedScores, scoreCol, byCols, cuts)
-    val version = Layout.publishVersion(spark, s"$root/cuts",
-      keepVersions = 1)(dir =>
-      thresholds.write.mode("overwrite").parquet(dir))
-    EpochIndex.logErasure(spark, root, version)
     version
   }
 

@@ -268,12 +268,58 @@ object Relevance {
   /** Two substores: `stats` partials sum into one row (compacted
     * first, and the stats compaction reports); `postings` rows are
     * disjoint across epochs (append-only doc ids), so their fold is
-    * identity — compaction bounds the FILE count. */
+    * identity — compaction bounds the FILE count.
+    *
+    * Erasure filters the postings by `doc_id` and SUBTRACTS the
+    * victims' exact statistics partial ([[bm25DocStats]]: N and Σdl
+    * are additive over disjoint doc sets, so the erased stats are
+    * bitwise the retained corpus's, zero-token victims included).
+    * Contract: a doc id lands in exactly one epoch, so erase only
+    * documents this index ingested — [[bm25Posted]] refuses a
+    * tokenized victim with no posting row before any rewrite. */
   private[operators] val bm25Store = StoreFamily("bm25_postings", Seq(
     StoreFamily.substore("stats", _ => p =>
       p.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("sumdl")), lit(0L)).as("sumdl"))),
-    StoreFamily.substore("postings", _ => identity)), reports = "stats")
+        coalesce(sum(col("sumdl")), lit(0L)).as("sumdl")),
+      StoreFamily.Subtract(Seq("n_docs", "sumdl"), check = Some(bm25Posted))),
+    StoreFamily.substore("postings", _ => identity,
+      StoreFamily.Filter(_ => Seq("doc_id")))), reports = "stats")
+
+  /** Per-document corpus statistics `(doc_id, n_docs = 1, sumdl = dl)`
+    * — summed, the [[bm25Postings]] stats partial; per document, the
+    * bm25 erase's Subtract input (the membership check needs the
+    * ids). */
+  def bm25DocStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"), lit(1L).as("n_docs"),
+      TextFunctions.tokenCount(col(textCol)).cast("long").as("sumdl"))
+
+  /** The bm25 erase's membership check: a tokenized victim that has no
+    * posting row was never ingested here — subtracting its stats would
+    * corrupt N/avgdl for every retained score with no loud symptom
+    * (the negative-count refusal only catches gross overshoot).
+    * Zero-token victims have no postings by construction and stay the
+    * caller's ingest-contract responsibility. */
+  private def bm25Posted(spark: org.apache.spark.sql.SparkSession,
+                         path: String, partial: DataFrame): Unit = {
+    require(partial.columns.contains("doc_id"), s"bm25 erase at $path: " +
+      "the statistics partial must be per document (Relevance.bm25DocStats)")
+    val tokenized = partial.filter(col("sumdl") > 0L).select("doc_id").distinct()
+    // semi-join BEFORE distinct: the scan over postings is unavoidable
+    // (ids are not the sort key), but only victim-matching rows should
+    // reach a shuffle
+    val present = EpochIndex.read(spark, s"$path/postings",
+        bootstrapName = "bm25IndexWrite", observed = false)
+      .select("doc_id")
+      .join(broadcast(tokenized), Seq("doc_id"), "left_semi")
+      .distinct()
+    val missing = tokenized.join(present, Seq("doc_id"), "left_anti")
+      .limit(6).collect().map(_.getLong(0))
+    require(missing.isEmpty,
+      s"bm25 erase at $path: victim ids ${missing.mkString(", ")} have no " +
+        "posting rows — they were never ingested here (or were ingested " +
+        "with different text); erasing them would silently corrupt the " +
+        "corpus statistics. Erase only documents this index ingested")
+  }
 
   /** Bootstrap a stored retrieval index at `path` (`postings/` and
     * `stats/` epoch stores under one `_GRAFT_META` manifest, the IVF
@@ -301,79 +347,6 @@ object Relevance {
     val (postings, stats) = bm25Postings(batch, idCol, textCol)
     EpochIndex.append(postings, s"$path/postings", epoch)
     EpochIndex.append(stats, s"$path/stats", epoch)
-  }
-
-  /** Erase documents from a stored retrieval index — disk-level, both
-    * substores: posting rows are per-document (filter), and the
-    * corpus statistics SUBTRACT the victims' exact partial (N and
-    * Σdl are additive over disjoint doc sets, and the partial is the
-    * same deterministic [[bm25Postings]] computation ingest ran — so
-    * the erased stats are bitwise the retained corpus's, including
-    * zero-token victims, which carry no postings but did count toward
-    * N). After it returns, every probe scores exactly as if the
-    * victims were never ingested, and no retained version, epoch or
-    * marker holds a victim's posting. Requires the victim DOCUMENTS
-    * (id + text — the RTBF request payload) and the same ingest
-    * contract every append relies on: a doc id lands in exactly one
-    * epoch, so erase only documents this index actually ingested
-    * (subtracting a never-ingested doc would corrupt N/avgdl for
-    * every retained document's score — same failure class the
-    * fresh-checkpoint refusal guards on the streaming side). */
-  def bm25IndexErase(spark: org.apache.spark.sql.SparkSession,
-                     path: String, victimDocs: DataFrame, idCol: String,
-                     textCol: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, postingsMeta(idCol, textCol))
-    val (_, victimStats) = bm25Postings(victimDocs, idCol, textCol)
-    val negated = victimStats.select((-col("n_docs")).as("n_docs"),
-      (-col("sumdl")).as("sumdl"))
-    val victims = victimDocs
-      .select(col(idCol).cast("long").as("doc_id")).distinct()
-    // membership check BEFORE any rewrite: a tokenized victim that has
-    // no posting row was never ingested here — subtracting its stats
-    // partial would corrupt N/avgdl for every retained score with no
-    // loud symptom (the negative-stats guard below only catches gross
-    // overshoot). Zero-token victims have no postings by construction
-    // and cannot be membership-checked — their mis-erase remains the
-    // caller's ingest-contract responsibility (scaladoc).
-    val tokenized = victimDocs
-      .filter(graft.functions.TextFunctions.tokenCount(col(textCol)) > 0)
-      .select(col(idCol).cast("long").as("doc_id")).distinct()
-    // semi-join BEFORE distinct: the scan over postings is unavoidable
-    // (ids are not the sort key), but only victim-matching rows should
-    // reach a shuffle — a distinct over every posting's doc_id would
-    // shuffle the whole store to answer a |victims|-sized question
-    val present = EpochIndex.read(spark, s"$path/postings",
-        bootstrapName = "bm25IndexWrite", observed = false)
-      .select("doc_id")
-      .join(broadcast(tokenized), Seq("doc_id"), "left_semi")
-      .distinct()
-    val missing = tokenized.join(present, Seq("doc_id"), "left_anti")
-      .limit(6).collect().map(_.getLong(0))
-    require(missing.isEmpty,
-      s"bm25IndexErase: victim ids ${missing.mkString(", ")} have no " +
-        "posting rows — they were never ingested here (or were ingested " +
-        "with different text); erasing them would silently corrupt the " +
-        "corpus statistics. Erase only documents this index ingested")
-    val postings = EpochIndex.eraseRewrite(spark, s"$path/postings",
-      p => p.join(victims, Seq("doc_id"), "left_anti"))
-    EpochIndex.eraseRewrite(spark, s"$path/stats", p =>
-      p.unionByName(negated)
-        .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-          coalesce(sum(col("sumdl")), lit(0L)).as("sumdl"))
-        // the negative check runs BEFORE the zero-row drop — a
-        // subtraction that overshoots must refuse, not tear down
-        .withColumn("n_docs",
-          when(col("n_docs") < 0L || col("sumdl") < 0L,
-            raise_error(lit(
-              "bm25IndexErase: negative corpus statistics after the " +
-                "subtraction — a victim document was never ingested " +
-                "here (or was ingested with different text); erase " +
-                "only documents this index actually ingested"))
-              .cast("long"))
-          .otherwise(col("n_docs")))
-        .filter(col("n_docs") > 0L)
-        .select(col("n_docs"), col("sumdl")))
-    postings
   }
 
   /** BM25 top-k from the STORED index — bit-identical to

@@ -121,8 +121,11 @@ object SampleSketch {
       .agg(slice(array_sort(array_distinct(flatten(
         collect_list(col("sketch"))))), 1, k).as("sketch"))
 
+  /** Erasure is a REBUILD (the HLL store's rationale): a bottom-k
+    * value sample cannot re-admit the entries a victim displaced, so
+    * [[sampleSketch]] is recomputed over the retained corpus. */
   private[operators] val sketchStore = StoreFamily.flat("sample_sketch",
-    param => sketchFold(param("k").toInt))
+    param => sketchFold(param("k").toInt), StoreFamily.Rebuild())
   private[graft] def indexMeta(k: Int, keyName: String,
                                valueName: String): IndexMeta =
     IndexMeta(sketchStore.name, "k" -> k, "keyName" -> keyName,
@@ -150,18 +153,6 @@ object SampleSketch {
                               valueName: String): Unit = {
     IndexMeta.check(spark, path, indexMeta(k, keyName, valueName))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** ERASURE form — a REBUILD (`Cardinality.hllIndexErase`'s
-    * rationale): a bottom-k value sample cannot re-admit the entries
-    * a victim displaced, so recompute over the retained corpus and
-    * rewrite disk-clean via the constant fold. */
-  def sampleSketchIndexErase(spark: org.apache.spark.sql.SparkSession,
-                             path: String, rebuilt: DataFrame, k: Int,
-                             keyName: String,
-                             valueName: String): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, indexMeta(k, keyName, valueName))
-    EpochIndex.eraseRewrite(spark, path, _ => rebuilt)
   }
 
   /** Checked read: one merged sketch per group across the compacted

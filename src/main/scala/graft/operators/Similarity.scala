@@ -686,10 +686,22 @@ object Similarity {
   /** Assignment rows are disjoint across epochs, so the fold is
     * identity — compaction bounds the per-cell FILE count (one file
     * per cell per epoch forever, otherwise) rather than the row
-    * count. The centroids are plain parquet beside the epoch store. */
+    * count. The centroids are plain parquet beside the epoch store.
+    *
+    * Erasure filters the per-vector rows by the id column the manifest
+    * records (the first of `cols`): the erased store is exactly the
+    * retained vectors' index. The centroids are UNTOUCHED — like the
+    * cert_vec pivots, they are aggregate directions, not records of
+    * any document, and keeping them keeps already-assigned epochs
+    * consistent. */
   private[operators] val ivfStore = StoreFamily("ivf",
-    Seq(StoreFamily.substore("assignments", _ => identity, Seq("cell"))),
+    Seq(StoreFamily.substore("assignments", _ => identity,
+      StoreFamily.Filter(manifestIdCol), Seq("cell"))),
     reports = "assignments")
+
+  /** The id column an IVF-family manifest records first in `cols`. */
+  private def manifestIdCol(param: String => String): Seq[String] =
+    Seq(param("cols").split(",").head)
   private def ivfMeta(idCol: String, vecCol: String): IndexMeta =
     IndexMeta(ivfStore.name, "cols" -> s"$idCol,$vecCol")
 
@@ -731,27 +743,6 @@ object Similarity {
         observed = false)
         .withColumn("cell", col("cell").cast("long"))
         .drop(EpochIndex.EpochCol))
-  }
-
-  /** Erase vectors from a stored IVF index — disk-level (the q237
-    * discipline): assignment rows are per-vector, so the erased store
-    * is exactly the retained vectors' index and every probe answers
-    * as if the victims never ingested. The centroids are UNTOUCHED —
-    * like the cert_vec pivots, they are aggregate directions, not
-    * records of any document, and keeping them is what lets already-
-    * assigned epochs stay consistent. Total erasure tears the
-    * assignments store down ([[EpochIndex.eraseRewrite]]).
-    *
-    * @param ids one-column frame of victim ids (any column name) */
-  def ivfIndexErase(spark: org.apache.spark.sql.SparkSession,
-                    path: String, ids: DataFrame,
-                    idCol: String): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, ivfStore.name)
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    EpochIndex.eraseRewrite(spark, s"$path/assignments",
-      p => p.join(victims.select(col("_vid").as(idCol)), Seq(idCol),
-        "left_anti"),
-      innerPartCols = Seq("cell"))
   }
 
   /** Cell-occupancy skew of a stored IVF index — the number that says
@@ -1157,9 +1148,13 @@ object Similarity {
   }
 
   /** Identity-fold `codes` epochs (the [[ivfStore]] disjoint-rows
-    * rationale); centroids and codebooks are plain parquet. */
+    * rationale); centroids and codebooks are plain parquet. Erasure
+    * filters the per-vector code rows; centroids AND codebooks stay —
+    * both are aggregate quantizer geometry, and keeping them keeps
+    * already-encoded epochs decodable. */
   private[operators] val ivfPqStore = StoreFamily("ivf_pq",
-    Seq(StoreFamily.substore("codes", _ => identity, Seq("cell"))),
+    Seq(StoreFamily.substore("codes", _ => identity,
+      StoreFamily.Filter(manifestIdCol), Seq("cell"))),
     reports = "codes")
 
   def ivfPqIndexWrite(index: IvfPqIndex, path: String): Unit = {
@@ -1186,21 +1181,6 @@ object Similarity {
         observed = false)
         .withColumn("cell", col("cell").cast("long"))
         .drop(EpochIndex.EpochCol))
-  }
-
-  /** [[ivfIndexErase]]'s PQ twin: code rows are per-vector, so they
-    * filter; centroids AND codebooks stay — both are aggregate
-    * quantizer geometry (the frozen-pivot rationale), and keeping
-    * them is what keeps already-encoded epochs decodable. */
-  def ivfPqIndexErase(spark: org.apache.spark.sql.SparkSession,
-                      path: String, ids: DataFrame,
-                      idCol: String): EpochIndex.CompactionStats = {
-    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
-    val victims = ids.select(col(ids.columns.head).as("_vid")).distinct()
-    EpochIndex.eraseRewrite(spark, s"$path/codes",
-      p => p.join(victims.select(col("_vid").as(idCol)), Seq(idCol),
-        "left_anti"),
-      innerPartCols = Seq("cell"))
   }
 
   /** [[ivfRecluster]]'s IVF+PQ twin — the maintenance arm that

@@ -296,7 +296,7 @@ object Splits {
       index, idCol, buckets, roundTo)
 
   // ------------------------------------------ persisted DSIR store
-  private def dsirMeta(buckets: Int): IndexMeta =
+  private[graft] def dsirMeta(buckets: Int): IndexMeta =
     IndexMeta(dsirStore.name, "buckets" -> buckets)
 
   /** THE bucket-count fold — per-bucket (cr, ct) ADD across disjoint
@@ -305,8 +305,10 @@ object Splits {
     partials.groupBy(col("_b"))
       .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
 
-  private[operators] val dsirStore =
-    StoreFamily.flat("dsir_buckets", _ => dsirFold)
+  /** Erasure subtracts the victims' own [[dsirIndex]] partial — built
+    * under the SAME `targetFilter` the store was (it decides ct). */
+  private[operators] val dsirStore = StoreFamily.flat("dsir_buckets",
+    _ => dsirFold, StoreFamily.Subtract(Seq("cr", "ct")))
 
   /** Persist a [[dsirIndex]] as an epoch-structured store (the
     * `_epoch=base` layout the other index families share), recording
@@ -336,37 +338,6 @@ object Splits {
                       buckets: Int): Unit = {
     IndexMeta.check(spark, path, dsirMeta(buckets))
     EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Erase documents from a stored DSIR bucket index — exact count
-    * subtraction (the `gramFreqIndexErase` discipline over (cr, ct)):
-    * bucket counts ADD over disjoint batches, so erasing = folding in
-    * the victims' own feature partial negated; scores afterwards
-    * equal an index built without the victims. `targetFilter` must be
-    * the SAME predicate the store was built under (it decides ct) —
-    * pass the victims through it exactly as ingest did. Buckets that
-    * would go negative refuse loudly. */
-  def dsirIndexErase(spark: org.apache.spark.sql.SparkSession,
-                     path: String, victimDocs: DataFrame, idCol: String,
-                     textCol: String, targetFilter: Column,
-                     buckets: Int = 1024): EpochIndex.CompactionStats = {
-    IndexMeta.check(spark, path, dsirMeta(buckets))
-    val negated = dsirIndex(victimDocs, idCol, textCol, targetFilter,
-      buckets).select(col("_b"), (-col("cr")).as("cr"),
-      (-col("ct")).as("ct"))
-    EpochIndex.eraseRewrite(spark, path, p =>
-      dsirFold(p.unionByName(negated))
-        .withColumn("cr",
-          when(col("cr") < 0L || col("ct") < 0L,
-            raise_error(concat(
-              lit("dsirIndexErase: negative count for bucket "),
-              col("_b").cast("string"),
-              lit(" — a victim document was never ingested here (or " +
-                "was ingested with different text/target flag); erase " +
-                "only documents this index ingested"))).cast("long"))
-          .otherwise(col("cr")))
-        .filter(col("cr") =!= 0L || col("ct") =!= 0L)
-        .select(col("_b"), col("cr"), col("ct")))
   }
 
   private def dsirScore(feats: DataFrame, counts: DataFrame, idCol: String,

@@ -9312,7 +9312,7 @@ object Catalog {
       s"$root/cuts", "alpha_ratio", Seq("source"))
   }
 
-  /** [[Dedup.certTextIndexErase]] + [[Dedup.certLedgerErase]] — the
+  /** [[Maintenance.eraseStore]] over a cert_text store — the
     * right-to-be-forgotten arm of the certification family (q160/q175
     * reach tables; this reaches the PERSISTED INDEX artifacts): build
     * the store and ledger over the corpus, erase the %11 documents
@@ -9356,8 +9356,7 @@ object Catalog {
       threshold = 0.85, shingleK = 1)
     val victims = corpus.filter(pmod(col("doc_id"), lit(11)) === 0)
       .select("doc_id")
-    Dedup.certTextIndexErase(s, s"$root/idx", victims, threshold = 0.85,
-      shingleK = 1)
+    Maintenance.eraseStore(s, s"$root/idx", Maintenance.EraseRequest(victims))
     Dedup.certTextIndexProbe(s, s"$root/idx",
       docs.filter(pmod(col("doc_id"), lit(13)) === 0),
       "doc_id", "text", threshold = 0.85, shingleK = 1)
@@ -9365,8 +9364,9 @@ object Catalog {
 
   /** q237's discipline extended to the LEGACY band-index families
     * (the round-16 task): erase documents from the persisted
-    * (bucketed) SimHash band store with [[Dedup.bandIndexErase]]
-    * — a disk-level [[EpochIndex.eraseRewrite]] — then prove, in one
+    * (bucketed) SimHash band store with [[Maintenance.eraseStore]]
+    * (the band family's id Filter, a disk-level
+    * [[graft.operators.EpochIndex.eraseRewrite]]) — then prove, in one
     * result the oracle pins, that (a) the partition-pruned probe
     * against the erased store equals the probe against a FROM-SCRATCH
     * index built over the corpus minus the victims (post-erase ≡
@@ -9390,7 +9390,7 @@ object Catalog {
     graft.sources.Fs.deleteRecursively(s, root)
     val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
     Dedup.bandIndexWrite(corpus, "doc_id", "text", root, lsh)
-    Dedup.bandIndexErase(s, root, victims)
+    Maintenance.eraseStore(s, root, Maintenance.EraseRequest(victims))
     val erased = Dedup.lshProbeStore(s, root, batch, "doc_id", "text", lsh)
       .select("id_a", "id_b")
     val retained = corpus.join(victims, Seq("doc_id"), "left_anti")
@@ -9418,8 +9418,9 @@ object Catalog {
     * erased state, because gram counts (unlike minhash band keys) are
     * SQL-expressible: the corpus gram store is built over ALL non-
     * batch docs (two epochs), the %7==1 docs are erased by exact
-    * count subtraction ([[Dedup.gramFreqIndexErase]] — the victims'
-    * own partial folded in negated, zero rows leaving the disk), and
+    * count subtraction (the gram_freq Subtract form of
+    * [[Maintenance.eraseStore]] — the victims' own partial folded in
+    * negated, zero rows leaving the disk), and
     * the batch's novelty probe against the ERASED store must match,
     * number for number, DuckDB's computation over a corpus that
     * simply never contained the victims. */
@@ -9455,9 +9456,11 @@ object Catalog {
     Dedup.gramFreqIndexAppend(s, root,
       Dedup.gramFreqIndex(corpus.filter(pmod(col("doc_id"), lit(2)) === 1),
         "doc_id", "text", n = 8), epoch = "day2", n = 8)
-    Dedup.gramFreqIndexErase(s, root,
-      corpus.filter(pmod(col("doc_id"), lit(7)) === 1),
-      "doc_id", "text", n = 8)
+    val victims = corpus.filter(pmod(col("doc_id"), lit(7)) === 1)
+    Maintenance.eraseStore(s, root,
+      Maintenance.EraseRequest(victims.select("doc_id"))
+        .withInput(root, Dedup.gramFreqIndexMeta(8))(
+          Dedup.gramFreqIndex(victims, "doc_id", "text", n = 8)))
     Dedup.incrementalDupGramFraction(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2),
       Dedup.gramFreqIndexRead(s, root, None, n = 8),
@@ -9469,8 +9472,9 @@ object Catalog {
     * accept counts are SQL-expressible, so DuckDB itself recomputes
     * the erased state): the per-domain count store is built over the
     * history in two epochs, the %7==1 history docs are erased by
-    * exact count subtraction ([[Curation.capCountIndexErase]] — the
-    * victims' own partial folded in negated), and the batch's
+    * exact count subtraction (the domain_cap_counts Subtract form of
+    * [[Maintenance.eraseStore]] — the victims' own partial folded in
+    * negated), and the batch's
     * arrival-order cap against the ERASED store must match, rank for
     * rank, DuckDB's cap over a history that simply never contained
     * the victims. The erasure-semantics point q146 cannot make: a
@@ -9506,9 +9510,11 @@ object Catalog {
       col("domain"), col("doc_id"))
     Curation.capCountIndexWrite(partial(0), root, keyName)
     Curation.capCountIndexAppend(s, root, partial(1), "day-2", keyName)
-    val stats = Curation.capCountIndexErase(s, root,
-      history.filter(pmod(col("doc_id"), lit(7)) === 1),
-      col("domain"), col("doc_id"), keyName)
+    val victims = history.filter(pmod(col("doc_id"), lit(7)) === 1)
+    val stats = Maintenance.eraseStore(s, root,
+      Maintenance.EraseRequest(victims.select("doc_id"))
+        .withInput(root, Curation.capIndexMeta(keyName))(
+          Curation.capCountIndex(victims, col("domain"), col("doc_id"))))
     require(stats.folded.nonEmpty,
       s"q240: erasure folded nothing at $root — store build failed")
     Curation.incrementalCapPerKey(batch, col("domain"), col("doc_id"),
@@ -9519,7 +9525,8 @@ object Catalog {
   /** Calibration re-freeze under the oracle — the quality_cuts
     * erasure arm (a fitted quantile table cannot FILTER victims out;
     * the only exact erasure is recomputation over the retained
-    * calibration slice, [[Quality.qualityCutsRefreeze]]): q229's
+    * calibration slice — the quality_cuts Rebuild form of
+    * [[Maintenance.eraseStore]]): q229's
     * frozen-calibration shape with an RTBF in the middle. Cuts
     * freeze on the full calibration slice, the %7==1 calibration
     * docs are then erased by re-freeze (victim-fitted version GC'd,
@@ -9557,9 +9564,12 @@ object Catalog {
     Quality.qualityCutsWrite(s, root,
       Quality.qualityCuts(scored(calSlice), "score", Seq("source")),
       "score", Seq("source"))
-    Quality.qualityCutsRefreeze(s, root,
-      scored(calSlice.filter(pmod(col("doc_id"), lit(7)) =!= 1)),
-      "score", Seq("source"))
+    val victims = calSlice.filter(pmod(col("doc_id"), lit(7)) === 1)
+    Maintenance.eraseStore(s, root,
+      Maintenance.EraseRequest(victims.select("doc_id"))
+        .withInput(root, Quality.cutsMeta("score", Seq("source")))(
+          Quality.qualityCuts(scored(calSlice.filter(
+            pmod(col("doc_id"), lit(7)) =!= 1)), "score", Seq("source"))))
     Quality.qualityBucketsWith(
       scored(docs.filter(pmod(col("doc_id"), lit(9)) === 0)),
       "score", Seq("source"),
@@ -9570,7 +9580,8 @@ object Catalog {
   }
 
   /** Digest-ledger erasure under the oracle — the table_digest
-    * erasure arm ([[Audit.digestIndexErase]]): digests are sums of
+    * erasure arm (its Subtract form, [[Maintenance.eraseStore]]):
+    * digests are sums of
     * per-row hashes mod 2^61−1, so erasure is exact MODULAR
     * subtraction, never a table re-scan. q171's two-epoch ledger over
     * lineitem, the %7==1 orders' rows erased by subtracting their own
@@ -9605,9 +9616,11 @@ object Catalog {
     Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
     Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
       "l_returnflag")
-    val stats = Audit.digestIndexErase(s, root,
-      li.filter(pmod(col("l_orderkey"), lit(7)) === 1), cols,
-      "l_returnflag", col("l_returnflag"))
+    val victims = li.filter(pmod(col("l_orderkey"), lit(7)) === 1)
+    val stats = Maintenance.eraseStore(s, root,
+      Maintenance.EraseRequest(victims.select("l_orderkey"))
+        .withInput(root, Audit.digestMeta(cols, "l_returnflag"))(
+          Audit.digestPartial(victims, cols, col("l_returnflag"))))
     require(stats.folded.nonEmpty,
       s"q242: erasure folded nothing at $root — ledger build failed")
     Audit.digestIndexRead(s, root, cols, "l_returnflag")

@@ -72,8 +72,8 @@ object Streaming {
     *  2. **Integral ids** (`integralIdCols`): any id column the
     *     sink's keep/erase policy casts to long — min-id canonical
     *     keeps, cap-quota joins, and every RTBF path
-    *     (`certLedgerErase` victim filters, `Maintenance
-    *     .erasureAudit`'s id sweep) key on integral ids; a string id
+    *     (`Maintenance.eraseAll`'s victim filters,
+    *     `Maintenance.erasureAudit`'s id sweep) key on integral ids; a string id
     *     casts to NULL and silently corrupts the policy instead of
     *     failing. The refusal prints the keying recipe (docs/
     *     DEPLOYMENT.md "Streaming ingest" has the full contract).
@@ -416,7 +416,7 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     ingestActivation(spark, "ivfIngestSink", stream, checkpoint,
       epochPaths = Seq("assignments" -> s"$indexPath/assignments"),
-      // erasure (ivfIndexErase) and recluster key on integral ids
+      // erasure (the ivf Filter form) and recluster key on integral ids
       integralIdCols = Seq(idCol))
     require(graft.sources.Fs.exists(spark, s"$indexPath/centroids"),
       s"ivfIngestSink: no centroids at $indexPath — bootstrap the " +
@@ -1049,7 +1049,7 @@ object Streaming {
     import graft.operators.{Dedup, EpochIndex, IndexMeta}
     ingestActivation(spark, "certIngestSink", stream, checkpoint,
       epochPaths = Seq("corpus" -> corpusPath),
-      // certLedgerErase / the RTBF audit sweep filter id_a/id_b as
+      // the ledger's erase filter / the RTBF audit sweep read id_a/id_b as
       // longs — string-keyed pairs would be silently un-erasable
       integralIdCols = Seq(idCol))
     // corpus-ahead-of-index refusal: a standing corpus whose

@@ -156,13 +156,16 @@ class CorpusDemoSpec extends SparkSpecBase {
       (r.nSemKept - r.nSemRepairKept).toString, s"card: $card")
     assert(card("n_docs") === r.nQuality.toString, s"card: $card")
     // the version string is whatever the store's CURRENT pointer says
-    // (the versioned calibration store accretes one freeze per demo
-    // run at this fixed outDir — by design; the card must cite the
-    // live pointer, not a constant)
+    // (the card must cite the live pointer, not a constant): the
+    // pre-erase card cites the first freeze, which the erase stage's
+    // re-freeze then superseded; the post-erase card cites the re-freeze
+    val after = r.cardAfterErase.toMap
     val (_, current) = graft.operators.Layout.listVersions(spark,
       s"$outDir/stores/quality_cuts/cuts")
     assert(card("calibration_score") === "ppl" &&
-      current.contains(card("calibration_version")), s"card: $card vs $current")
+      current.contains(after("calibration_version")) &&
+      card("calibration_version") < after("calibration_version"),
+      s"card: $card, after: $after vs $current")
     assert(r.kmvProbes ===
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select("source").distinct().count())
@@ -173,7 +176,6 @@ class CorpusDemoSpec extends SparkSpecBase {
     // victims' pairs and nothing else), its released-docs count drops
     // by the victim count, and the erasure columns cite the rewrite
     // history the fresh card called "none".
-    val after = r.cardAfterErase.toMap
     assert(r.nVictims === 2L, s"victim pick moved: $r")
     assert(card("erasure_rewrites") === "0" &&
       card("last_erasure") === "none", s"pre-erase card: $card")
@@ -187,11 +189,26 @@ class CorpusDemoSpec extends SparkSpecBase {
       s"degenerate erase stage — victim touched no ledger pair: $r")
     assert(after("n_docs").toLong === r.nQuality - r.nVictims,
       s"released-docs count: $after")
-    // three cited stores were rewritten (jac ledger, cos ledger,
-    // labels rebuild); the last citation is store-qualified
-    assert(after("erasure_rewrites") === "3", s"after: $after")
-    assert(after("last_erasure").startsWith("cc_labels:"),
+    // four cited stores were rewritten (jac ledger, cos ledger, labels
+    // rebuild, calibration re-freeze — eraseAll runs the rebuilds
+    // last); the last citation is store-qualified
+    assert(after("erasure_rewrites") === "4", s"after: $after")
+    assert(after("last_erasure").startsWith("quality_cuts:"),
       s"after: $after")
+    // the calibration was fitted on scores that included the victims:
+    // the erase re-froze it over the retained scores, and the live
+    // thresholds are exactly that fit
+    val cutsRoot = s"$outDir/stores/quality_cuts"
+    val (_, liveCuts) = graft.operators.Layout.listVersions(spark,
+      s"$cutsRoot/cuts")
+    assert(graft.operators.EpochIndex.erasures(spark, cutsRoot) === liveCuts.toSeq,
+      s"cuts erasure history: ${graft.operators.EpochIndex.erasures(spark, cutsRoot)}")
+    val retainedScores = r.retainedScores.get
+    assert(retainedScores.count() === r.nFresh - r.nVictims)
+    assert(graft.operators.Quality.qualityCutsRead(spark, cutsRoot, "ppl",
+      Seq("source")).collect().toSet ===
+      graft.operators.Quality.qualityCuts(retainedScores, "ppl",
+        Seq("source")).collect().toSet)
     // subtract-erase through the boilerplate count store (round 17):
     // the post-erase line-ref total drops by EXACTLY the victims'
     // partial — and the victims contributed at least their own lines,

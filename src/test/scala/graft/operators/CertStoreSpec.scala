@@ -420,12 +420,15 @@ class CertStoreSpec extends SparkSpecBase {
     // victim 1 is its component's MIN-ID — it survives a naive filter
     // as every clustermate's LABEL, which is why labels REBUILD
     val victims = Seq(1L, 102L).toDF("doc_id")
-    Dedup.certTextIndexErase(spark, idx, victims, threshold = 0.5,
-      shingleK = 1)
-    Dedup.certLedgerErase(spark, led, victims, "jaccard", 0.5)
-    Dedup.ccLabelsRebuild(spark, lab,
-      Dedup.certLedgerRead(spark, led, "jaccard", 0.5)
-        .select("id_a", "id_b"), "jaccard", 0.5)
+    val request = Maintenance.EraseRequest(victims)
+    Maintenance.eraseStore(spark, idx, request)
+    Maintenance.eraseStore(spark, led, request)
+    // the labels rebuild reads the ERASED ledger: the input is built
+    // when the erase runs, not when the request is made
+    Maintenance.eraseStore(spark, lab, request
+      .withInput(lab, Dedup.ccLabelsMeta("jaccard", 0.5))(
+        Dedup.connectedComponents(Dedup.certLedgerRead(spark, led,
+          "jaccard", 0.5).select("id_a", "id_b"))))
     val retained = full.filterNot(r => r._1 == 1L || r._1 == 102L)
     // the probe answers exactly as if the victims never ingested
     val got = Dedup.certTextIndexProbe(spark, idx,
@@ -476,8 +479,8 @@ class CertStoreSpec extends SparkSpecBase {
     val idx = tmp("eraseall")
     Dedup.certTextIndexWrite(corpusDocs.toDF("doc_id", "text"),
       "doc_id", "text", idx, threshold = 0.5, shingleK = 1)
-    Dedup.certTextIndexErase(spark, idx,
-      corpusDocs.map(_._1).toDF("doc_id"), threshold = 0.5, shingleK = 1)
+    Maintenance.eraseStore(spark, idx,
+      Maintenance.EraseRequest(corpusDocs.map(_._1).toDF("doc_id")))
     assert(!Dedup.certTextIndexNonEmpty(spark, idx))
     def parquetFiles(f: java.io.File): Seq[String] =
       Option(f.listFiles).toSeq.flatten.flatMap { c =>
@@ -501,8 +504,8 @@ class CertStoreSpec extends SparkSpecBase {
     val root = tmp("eraseallvec")
     Dedup.certVecIndexWrite(vecs.toDF("vec_id", "embedding"),
       "vec_id", "embedding", root, threshold = 0.4)
-    Dedup.certVecIndexErase(spark, root,
-      vecs.map(_._1).toDF("vec_id"), threshold = 0.4)
+    Maintenance.eraseStore(spark, root,
+      Maintenance.EraseRequest(vecs.map(_._1).toDF("vec_id")))
     assert(!Dedup.certVecIndexNonEmpty(spark, root))
     assert(parquetFiles(new java.io.File(root)).isEmpty,
       "parquet survives a total vec-store erasure")
@@ -525,8 +528,8 @@ class CertStoreSpec extends SparkSpecBase {
     Dedup.certVecIndexAppend(spark, root, b1.toDF("vec_id", "embedding"),
       "vec_id", "embedding", "b1", threshold = 0.4)
     val victimIds = Set(0L, 3L, 104L)
-    Dedup.certVecIndexErase(spark, root,
-      victimIds.toSeq.toDF("vec_id"), threshold = 0.4)
+    Maintenance.eraseStore(spark, root,
+      Maintenance.EraseRequest(victimIds.toSeq.toDF("vec_id")))
     val retained = (corpus ++ b1).filterNot(r => victimIds(r._1))
     val got = Dedup.certVecIndexProbe(spark, root,
       probeRows.toDF("vec_id", "embedding"), "vec_id", "embedding",

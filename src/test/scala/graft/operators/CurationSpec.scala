@@ -188,13 +188,6 @@ class CurationSpec extends SparkSpecBase {
       (10L, "new line", 2L),
       (11L, "fresh", 1L),
       (12L, "", 0L)))
-    // folding the batch's own index in equals a rebuild over the union
-    val merged = Dedup.lineFirstOccIndexMerge(idx,
-      Dedup.lineFirstOccIndex(batch, "doc_id", "text", "\n"))
-    val rebuilt = Dedup.lineFirstOccIndex(
-      corpus.unionByName(batch), "doc_id", "text", "\n")
-    assert(merged.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(merged).isEmpty,
-      "merged index diverges from whole-corpus rebuild")
   }
 
   test("dedupLinesAcrossCorpus: minLineLen exempts short lines (blank breaks recur untouched)") {

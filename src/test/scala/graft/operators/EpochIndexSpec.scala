@@ -329,8 +329,8 @@ class EpochIndexSpec extends SparkSpecBase {
     EpochIndex.append(Seq((9L, "z")).toDF("id", "v"), path, "e9")
     assert(EpochIndex.read(spark, path).select("id")
       .as[Long].collect().toSet === Set(9L))
-    // inner-partitioned twin (the certTextIndexErase/certVecIndexErase
-    // shape the ADVICE flagged): branch dirs must go too
+    // inner-partitioned twin (the cert_text/cert_vec erase shape the
+    // ADVICE flagged): branch dirs must go too
     val p2 = tmp("graft-ei-erase-all-inner")
     EpochIndex.bootstrap(
       Seq((1L, 0, "a"), (2L, 1, "b")).toDF("id", "pb", "v"), p2,

@@ -4,19 +4,31 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-16 erasure contracts: every persisted store family that
-  * carries document-derived rows has a disk-level eraser, and after
-  * it runs (a) the store answers exactly as if the victims were
-  * never ingested, and (b) a walk over EVERY parquet file under the
-  * store root (including `_`-prefixed base trees Spark readers skip
-  * — exactly where a stale copy would hide) finds no victim
-  * reference. Filterable families (band indexes, IVF/PQ, BM25
-  * postings) drop rows; additive count families (gram_freq,
-  * boilerplate) SUBTRACT the victims' exact partial; fold-lossy
-  * families (first-occurrence, HLL/KMV/CMS/sample sketches) REBUILD
-  * from the retained corpus — the cert-stats/cc_labels precedent. */
+/** Erasure contracts: every persisted store family that carries
+  * document-derived rows erases disk-level through
+  * [[Maintenance.eraseStore]], and after it runs (a) the store answers
+  * exactly as if the victims were never ingested, and (b) a walk over
+  * EVERY parquet file under the store root (including `_`-prefixed
+  * base trees Spark readers skip — exactly where a stale copy would
+  * hide) finds no victim reference. Filterable families (band
+  * indexes, IVF/PQ, BM25 postings) drop rows; additive count families
+  * (gram_freq, boilerplate) SUBTRACT the victims' exact partial;
+  * fold-lossy families (first-occurrence, HLL/KMV/CMS/sample
+  * sketches) REBUILD from the retained corpus — the
+  * cert-stats/cc_labels precedent. */
 class EraseSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** Erase the victim ids from the store at `root` (Filter families). */
+  private def erase(root: String, ids: DataFrame): EpochIndex.CompactionStats =
+    Maintenance.eraseStore(spark, root, Maintenance.EraseRequest(ids))
+
+  /** Erase with the store's Subtract partial or Rebuild frame, built
+    * under `meta`. */
+  private def eraseWith(root: String, meta: IndexMeta)(
+      input: => DataFrame): EpochIndex.CompactionStats =
+    Maintenance.eraseStore(spark, root,
+      Maintenance.EraseRequest(victims).withInput(root, meta)(input))
 
   private def tmp(name: String) = java.nio.file.Files
     .createTempDirectory("graft-erase").toString + "/" + name
@@ -64,7 +76,7 @@ class EraseSpec extends SparkSpecBase {
       "text", root, lsh)
     Dedup.bandIndexAppend(spark, root, docsDF.filter(col("doc_id") > 4),
       "doc_id", "text", "day-2", lsh)
-    Dedup.bandIndexErase(spark, root, victims)
+    erase(root, victims)
     val got = Dedup.bandIndexRead(spark, root, lsh)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
     val fresh = Dedup.bandIndex(retained, "doc_id", "text", lsh)
@@ -80,7 +92,7 @@ class EraseSpec extends SparkSpecBase {
     val srp = Dedup.Srp(threshold = 0.9)
     Dedup.bandIndexWrite(vecs.toDF("vec_id", "embedding"),
       "vec_id", "embedding", vroot, srp)
-    Dedup.bandIndexErase(spark, vroot, Seq(3L, 7L).toDF("vec_id"))
+    erase(vroot, Seq(3L, 7L).toDF("vec_id"))
     assertNoVictimOnDisk(vroot, Seq("id"), Set(3L, 7L))
     assert(Dedup.bandIndexRead(spark, vroot, srp)
       .select("id").as[Long].collect().toSet ===
@@ -89,7 +101,7 @@ class EraseSpec extends SparkSpecBase {
 
   test("band-index erase needs no geometry: a non-default MinHash store loses every victim from every retained version and epoch") {
     // geometry, skew guard and bucketing all off their defaults: the
-    // eraser reads the family and bb_buckets from the store's own
+    // erase reads the family and bb_buckets from the store's own
     // manifest, so the caller passes only the victim ids
     val lsh = Dedup.MinHash(numHashes = 12, bands = 3, shingleK = 2,
       maxBucket = 50)
@@ -109,21 +121,37 @@ class EraseSpec extends SparkSpecBase {
     assert(EpochIndex.versions(spark, root)._1.size >= 2,
       "no retained version to erase from")
     // victims sit in the bootstrap base (2) and a folded epoch (4)
-    Dedup.bandIndexErase(spark, root, victims)
+    erase(root, victims)
     assertNoVictimOnDisk(root, Seq("id"), victimIds)
     val got = Dedup.bandIndexRead(spark, root, lsh, buckets = 8)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet
     assert(got === Dedup.bandIndex(retained, "doc_id", "text", lsh)
       .select("band", "bh", "id").as[(Int, Long, Long)].collect().toSet)
     assert(got.map(_._3) === docs.map(_._1).toSet -- victimIds)
-    // the eraser refuses a store that is not a band store
+    // the id filter is the band family's, picked by the manifest: a
+    // store of another family refuses the ids-only request, naming
+    // the form it needs, and keeps every file
     val grams = tmp("not-bands")
     Dedup.gramFreqIndexWrite(Dedup.gramFreqIndex(docsDF, "doc_id", "text",
       n = 3), grams, n = 3)
-    val e = intercept[IllegalArgumentException] {
-      Dedup.bandIndexErase(spark, grams, victims)
-    }
-    assert(e.getMessage.contains("*_bands"), e.getMessage)
+    val gramFiles = parquetFiles(new java.io.File(grams)).toSet
+    val e = intercept[IllegalArgumentException](erase(grams, victims))
+    assert(e.getMessage.contains("gram_freq") &&
+      e.getMessage.contains("Subtract"), e.getMessage)
+    assert(parquetFiles(new java.io.File(grams)).toSet === gramFiles)
+    // a pre-bucketing band store (no bb_buckets in its manifest)
+    // refuses rather than rewrite a layout the filter cannot address
+    val legacy = tmp("mh-legacy")
+    Dedup.bandIndexWrite(docsDF, "doc_id", "text", legacy, lsh)
+    val meta = IndexMeta.read(spark, legacy).get
+    IndexMeta.write(spark, legacy, meta.copy(params = meta.params - "bb_buckets"))
+    val e2 = intercept[RuntimeException](erase(legacy, victims))
+    assert(e2.getMessage.contains("bb_buckets"), e2.getMessage)
+    // and a directory with no manifest is never rewritten
+    val bare = tmp("no-manifest")
+    docsDF.write.parquet(bare)
+    val e3 = intercept[IllegalArgumentException](erase(bare, victims))
+    assert(e3.getMessage.contains("no _GRAFT_META manifest"), e3.getMessage)
   }
 
   test("IVF and IVF-PQ stores: per-vector rows erase, quantizer geometry stays, probe sees only retained vectors") {
@@ -136,8 +164,7 @@ class EraseSpec extends SparkSpecBase {
     Similarity.ivfIndexWrite(
       Similarity.ivfIndex(vecs.toDF("vec_id", "embedding"), cents,
         "vec_id", "embedding"), root)
-    Similarity.ivfIndexErase(spark, root, Seq(1L, 5L, 9L).toDF("vec_id"),
-      "vec_id")
+    erase(root, Seq(1L, 5L, 9L).toDF("vec_id"))
     assertNoVictimOnDisk(s"$root/assignments", Seq("vec_id"),
       Set(1L, 5L, 9L))
     val after = Similarity.ivfIndexRead(spark, root)
@@ -150,8 +177,7 @@ class EraseSpec extends SparkSpecBase {
     Similarity.ivfPqIndexWrite(
       Similarity.ivfPqIndex(vecs.toDF("vec_id", "embedding"), cents,
         "vec_id", "embedding", m = 4, k = 8), proot)
-    Similarity.ivfPqIndexErase(spark, proot, Seq(2L, 6L).toDF("vec_id"),
-      "vec_id")
+    erase(proot, Seq(2L, 6L).toDF("vec_id"))
     assertNoVictimOnDisk(s"$proot/codes", Seq("vec_id"), Set(2L, 6L))
     assert(spark.read.parquet(s"$proot/codebooks").count() > 0)
   }
@@ -164,8 +190,8 @@ class EraseSpec extends SparkSpecBase {
     Dedup.gramFreqIndexAppend(spark, root,
       Dedup.gramFreqIndex(docsDF.filter(col("doc_id") > 4), "doc_id",
         "text", n = 3), "day-2", n = 3)
-    Dedup.gramFreqIndexErase(spark, root, victimDocs, "doc_id", "text",
-      n = 3)
+    eraseWith(root, Dedup.gramFreqIndexMeta(3))(
+      Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3))
     val got = Dedup.gramFreqIndexRead(spark, root, None, n = 3)
       .as[(String, Long)].collect().toSet
     val rebuilt = Dedup.gramFreqIndex(retained, "doc_id", "text", n = 3)
@@ -184,9 +210,9 @@ class EraseSpec extends SparkSpecBase {
       "victim-only grams survive on disk")
     // subtracting a never-ingested "victim" refuses loudly
     val e = intercept[Exception] {
-      Dedup.gramFreqIndexErase(spark, root,
+      eraseWith(root, Dedup.gramFreqIndexMeta(3))(Dedup.gramFreqIndex(
         Seq((99L, "totally novel text nobody ingested"))
-          .toDF("doc_id", "text"), "doc_id", "text", n = 3)
+          .toDF("doc_id", "text"), "doc_id", "text", n = 3))
     }
     assert(e.getMessage.contains("never ingested"), e.getMessage)
   }
@@ -195,14 +221,21 @@ class EraseSpec extends SparkSpecBase {
     val root = tmp("boiler")
     Dedup.boilerplateIndexWrite(
       Dedup.boilerplateIndex(docsDF, "doc_id", "text", "\n"), root, "\n")
-    Dedup.boilerplateIndexErase(spark, root, victimDocs, "doc_id", "text",
-      "\n")
+    eraseWith(root, Dedup.boilerplateIndexMeta("\n", 1))(
+      Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n"))
     val got = Dedup.boilerplateIndexRead(spark, root)
       .as[(String, Long)].collect().toSet
     val rebuilt = Dedup.boilerplateIndex(retained, "doc_id", "text", "\n")
       .as[(String, Long)].collect().toSet
     assert(got === rebuilt)
     assert(got.nonEmpty, "degenerate erasure test")
+    // subtracting lines this store never counted refuses loudly
+    val e = intercept[Exception] {
+      eraseWith(root, Dedup.boilerplateIndexMeta("\n", 1))(
+        Dedup.boilerplateIndex(Seq((99L, "a line nobody ingested"))
+          .toDF("doc_id", "text"), "doc_id", "text", "\n"))
+    }
+    assert(e.getMessage.contains("never ingested"), e.getMessage)
   }
 
   test("line first-occurrence: erase is a REBUILD — a line first held by a victim survives under its retained holder") {
@@ -213,7 +246,7 @@ class EraseSpec extends SparkSpecBase {
     // docs 3 and 6 (retained): a row FILTER would lose it entirely;
     // the rebuild re-points it at doc 3
     val rebuilt = Dedup.lineFirstOccIndex(retained, "doc_id", "text", "\n")
-    Dedup.lineFirstOccIndexRebuild(spark, root, rebuilt, "\n")
+    eraseWith(root, Dedup.lineIndexMeta("\n", 1))(rebuilt)
     val got = Dedup.lineFirstOccIndexRead(spark, root)
       .as[(String, Long, Int)].collect().toSet
     assert(got === rebuilt.as[(String, Long, Int)].collect().toSet)
@@ -228,7 +261,8 @@ class EraseSpec extends SparkSpecBase {
       "doc_id", "text")
     Relevance.bm25IndexAppend(spark, root,
       docsDF.filter(col("doc_id") > 4), "doc_id", "text", "day-2")
-    Relevance.bm25IndexErase(spark, root, victimDocs, "doc_id", "text")
+    eraseWith(root, Relevance.postingsMeta("doc_id", "text"))(
+      Relevance.bm25DocStats(victimDocs, "doc_id", "text"))
     val terms = Seq("alpha", "shared", "lambda")
     val got = Relevance.bm25IndexProbe(spark, root, "doc_id", "text",
       terms, k = 10).as[(Long, Int, Double)].collect().toSeq
@@ -238,9 +272,9 @@ class EraseSpec extends SparkSpecBase {
     assert(got.nonEmpty, "degenerate erasure test")
     assertNoVictimOnDisk(s"$root/postings", Seq("doc_id"), victimIds)
     val e = intercept[Exception] {
-      Relevance.bm25IndexErase(spark, root,
-        Seq((99L, "totally novel text")).toDF("doc_id", "text"),
-        "doc_id", "text")
+      eraseWith(root, Relevance.postingsMeta("doc_id", "text"))(
+        Relevance.bm25DocStats(Seq((99L, "totally novel text"))
+          .toDF("doc_id", "text"), "doc_id", "text"))
     }
     assert(e.getMessage.contains("never ingested"), e.getMessage)
   }
@@ -258,8 +292,7 @@ class EraseSpec extends SparkSpecBase {
     val hRebuilt = Cardinality.hllSketch(
       grp(retainedRows.toDF("doc_id", "token")), lit("all"), col("token"),
       p = 6)
-    Cardinality.hllIndexErase(spark, hroot, hRebuilt, p = 6,
-      keyName = "token")
+    eraseWith(hroot, Cardinality.hllMeta(6, "token"))(hRebuilt)
     val hGot = Cardinality.hllIndexRead(spark, hroot, p = 6,
       keyName = "token").select("regs").as[Seq[Int]].collect()
     val hExpect = hRebuilt.select("regs").as[Seq[Int]].collect()
@@ -277,8 +310,7 @@ class EraseSpec extends SparkSpecBase {
       keyName = "token")
     val kRebuilt = Cardinality.kmvSketch(retainedRows.toDF("doc_id", "token"),
       lit("all"), col("token"), k = 16)
-    Cardinality.kmvIndexErase(spark, kroot, kRebuilt, k = 16,
-      keyName = "token")
+    eraseWith(kroot, Cardinality.kmvMeta(16, "token"))(kRebuilt)
     assert(Cardinality.kmvIndexRead(spark, kroot, k = 16,
       keyName = "token").select("sketch").as[Seq[Long]].collect().toSeq ===
       kRebuilt.select("sketch").as[Seq[Long]].collect().toSeq)
@@ -290,8 +322,7 @@ class EraseSpec extends SparkSpecBase {
       itemName = "token")
     val cRebuilt = HeavyHitters.countMinSketch(
       retainedRows.toDF("doc_id", "token"), "token", depth = 3, width = 32)
-    HeavyHitters.cmsIndexErase(spark, croot, cRebuilt, depth = 3,
-      width = 32, itemName = "token")
+    eraseWith(croot, HeavyHitters.cmsMeta(3, 32, "token"))(cRebuilt)
     assert(HeavyHitters.cmsIndexRead(spark, croot, depth = 3, width = 32,
       itemName = "token").as[(Int, Long, Long)].collect().toSet ===
       cRebuilt.as[(Int, Long, Long)].collect().toSet)
@@ -306,8 +337,7 @@ class EraseSpec extends SparkSpecBase {
     val sRebuilt = SampleSketch.sampleSketch(
       vals.filterNot(v => victimIds(v._1)).toDF("doc_id", "len"),
       lit("all"), col("doc_id"), col("len"), k = 4)
-    SampleSketch.sampleSketchIndexErase(spark, sroot, sRebuilt, k = 4,
-      keyName = "doc_id", valueName = "len")
+    eraseWith(sroot, SampleSketch.indexMeta(4, "doc_id", "len"))(sRebuilt)
     val sGot = SampleSketch.sampleSketchIndexRead(spark, sroot, k = 4,
       keyName = "doc_id", valueName = "len")
     assert(sGot.count() === sRebuilt.count())
@@ -326,7 +356,8 @@ class EraseSpec extends SparkSpecBase {
     LmFilter.lmIndexAppend(spark, root,
       LmFilter.lmIndex(docsDF.filter(col("doc_id") > 4), "doc_id",
         "text"), "day-2", 4096, 32768)
-    LmFilter.lmIndexErase(spark, root, victimDocs, "doc_id", "text")
+    eraseWith(root, LmFilter.lmMeta(4096, 32768))(
+      LmFilter.lmIndex(victimDocs, "doc_id", "text"))
     val probe = Seq((50L, "alpha beta gamma shared line one")).toDF(
       "doc_id", "text")
     val got = LmFilter.lmPerplexity(probe, "doc_id", "text",
@@ -341,7 +372,8 @@ class EraseSpec extends SparkSpecBase {
     val tgt = col("doc_id") % 2 === 1
     Splits.dsirIndexWrite(
       Splits.dsirIndex(docsDF, "doc_id", "text", tgt), droot, 1024)
-    Splits.dsirIndexErase(spark, droot, victimDocs, "doc_id", "text", tgt)
+    eraseWith(droot, Splits.dsirMeta(1024))(
+      Splits.dsirIndex(victimDocs, "doc_id", "text", tgt))
     assert(Splits.dsirIndexRead(spark, droot, 1024)
       .as[(Long, Long, Long)].collect().toSet ===
       Splits.dsirIndex(retained, "doc_id", "text", tgt)
@@ -350,9 +382,15 @@ class EraseSpec extends SparkSpecBase {
     val phantom = Seq((99L, "totally novel text nobody ingested"))
       .toDF("doc_id", "text")
     val e = intercept[Exception] {
-      LmFilter.lmIndexErase(spark, root, phantom, "doc_id", "text")
+      eraseWith(root, LmFilter.lmMeta(4096, 32768))(
+        LmFilter.lmIndex(phantom, "doc_id", "text"))
     }
     assert(e.getMessage.contains("never trained"), e.getMessage)
+    val e2 = intercept[Exception] {
+      eraseWith(droot, Splits.dsirMeta(1024))(
+        Splits.dsirIndex(phantom, "doc_id", "text", tgt))
+    }
+    assert(e2.getMessage.contains("never ingested"), e2.getMessage)
   }
 
   test("interval islands: erase is a REBUILD — an island a victim's interval widened re-splits") {
@@ -366,8 +404,8 @@ class EraseSpec extends SparkSpecBase {
     IntervalExpand.islandsIndexWrite(all.select("k", "s", "e"), root,
       "k", col("s"), col("e"))
     val kept = all.filter(col("owner") =!= 2L)
-    IntervalExpand.islandsIndexRebuild(spark, root,
-      kept.select("k", "s", "e"), "k", col("s"), col("e"))
+    eraseWith(root, IntervalExpand.islandsMeta("k"))(
+      IntervalExpand.mergeIntervals(kept, "k", col("s"), col("e")))
     val got = IntervalExpand.islandsIndexRead(spark, root, "k")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((10L, 1L, 6L), (10L, 9L, 14L), (20L, 0L, 3L)),
@@ -384,7 +422,7 @@ class EraseSpec extends SparkSpecBase {
       edges.filter(col("src") > 2), "day-2")
     // node 1 is in triangle (1,2,3); erasing it must drop that
     // triangle but keep (3,4,5)
-    Centrality.triangleCensusErase(spark, root, Seq(1L).toDF("node"))
+    erase(root, Seq(1L).toDF("node"))
     val census = Centrality.triangleCensusRead(spark, root)
       .as[(Long, Long)].head()
     assert(census === ((4L, 1L)), s"census after erase: $census")
@@ -413,8 +451,7 @@ class EraseSpec extends SparkSpecBase {
       val root = tmp(s"prop$i")
       Dedup.bandIndexWrite(corpus.toDF("doc_id", "text"),
         "doc_id", "text", root, Dedup.SimHash())
-      Dedup.bandIndexErase(spark, root,
-        (vict :+ -1L).toDF("doc_id")) // -1: erasing absent ids is a no-op
+      erase(root, (vict :+ -1L).toDF("doc_id")) // -1: erasing absent ids is a no-op
       val kept = corpus.filterNot(d => vict.contains(d._1))
       if (kept.isEmpty)
         assert(!EpochIndex.nonEmpty(spark, root, innerPartCols = Seq("bb")),
@@ -453,8 +490,10 @@ class EraseSpec extends SparkSpecBase {
       val victimDocs = corpus.filter(d => vict.contains(d._1))
         .toDF("doc_id", "text")
       val kept = corpus.filterNot(d => vict.contains(d._1))
-      Dedup.gramFreqIndexErase(spark, root, victimDocs, "doc_id",
-        "text", n = 3)
+      Maintenance.eraseStore(spark, root,
+        Maintenance.EraseRequest(victimDocs.select("doc_id"))
+          .withInput(root, Dedup.gramFreqIndexMeta(3))(
+            Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3)))
       if (kept.isEmpty)
         assert(!EpochIndex.nonEmpty(spark, root),
           s"seed ${19 + i}: all-victims erase did not tear down")
@@ -471,8 +510,11 @@ class EraseSpec extends SparkSpecBase {
     val groot = tmp("contgram")
     Contamination.benchmarkGramIndexWrite(
       Contamination.benchmarkGramIndex(docsDF, "text", n = 3), groot)
-    Contamination.benchmarkGramIndexErase(retained, "text", groot, n = 3)
-    assert(Contamination.benchmarkGramIndexRead(spark, groot)
+    // no manifest, no store family: erasure is the writer over the
+    // retained benchmark
+    Contamination.benchmarkGramIndexWrite(
+      Contamination.benchmarkGramIndex(retained, "text", n = 3), groot)
+    assert(spark.read.parquet(groot)
       .as[String].collect().toSet ===
       Contamination.benchmarkGramIndex(retained, "text", n = 3)
         .as[String].collect().toSet)
@@ -480,7 +522,7 @@ class EraseSpec extends SparkSpecBase {
     val vecs = docs.map { case (id, _) =>
       (id, Array.fill(4)(id.toFloat)) }.toDF("doc_id", "embedding")
     Contamination.benchmarkVecIndexWrite(vecs, "doc_id", "embedding", vroot)
-    Contamination.benchmarkVecIndexErase(
+    Contamination.benchmarkVecIndexWrite(
       vecs.filter(!col("doc_id").isin(victimIds.toSeq.map(Long.box): _*)),
       "doc_id", "embedding", vroot)
     assertNoVictimOnDisk(vroot, Seq("bench_id"), victimIds)
@@ -504,8 +546,8 @@ class EraseSpec extends SparkSpecBase {
       partial(docsDF.filter(col("doc_id") <= 3)), root, "mod4")
     Curation.capCountIndexAppend(spark, root,
       partial(docsDF.filter(col("doc_id") > 3)), "day-2", "mod4")
-    val stats = Curation.capCountIndexErase(spark, root, victimDocs,
-      capKey, col("doc_id"), "mod4")
+    val stats = eraseWith(root, Curation.capIndexMeta("mod4"))(
+      partial(victimDocs))
     val got = Curation.capCountIndexRead(spark, root, "mod4")
       .as[(String, Long)].collect().toSet
     val rebuilt = partial(retained).as[(String, Long)].collect().toSet
@@ -524,9 +566,9 @@ class EraseSpec extends SparkSpecBase {
       "victim-only keys survive on disk")
     // subtracting a never-counted "victim" refuses loudly
     val e = intercept[Exception] {
-      Curation.capCountIndexErase(spark, root,
+      eraseWith(root, Curation.capIndexMeta("mod4"))(Curation.capCountIndex(
         Seq((99L, "x"), (100L, "x"), (101L, "x")).toDF("doc_id", "text"),
-        lit("k99"), col("doc_id"), "mod4")
+        lit("k99"), col("doc_id")))
     }
     assert(e.getMessage.contains("never ingested"), e.getMessage)
   }
@@ -539,8 +581,8 @@ class EraseSpec extends SparkSpecBase {
       root, cols, "mod3")
     Audit.digestIndexAppend(spark, root,
       part(docsDF.filter(col("doc_id") > 3)), "day-2", cols, "mod3")
-    val stats = Audit.digestIndexErase(spark, root, victimDocs, cols,
-      "mod3", domainOf)
+    val stats = eraseWith(root, Audit.digestMeta(cols, "mod3"))(
+      part(victimDocs))
     val got = Audit.digestIndexRead(spark, root, cols, "mod3")
       .as[(String, Long, Long)].collect().toSet
     val rebuilt = part(retained).as[(String, Long, Long)].collect().toSet
@@ -553,7 +595,7 @@ class EraseSpec extends SparkSpecBase {
       .select("_g").as[String].head()
     val rest = retained.withColumn("_g", domainOf).filter(col("_g") === g)
       .drop("_g")
-    Audit.digestIndexErase(spark, root, rest, cols, "mod3", domainOf)
+    eraseWith(root, Audit.digestMeta(cols, "mod3"))(part(rest))
     val onDisk = spark.read
       .parquet(parquetFiles(new java.io.File(root)): _*)
       .select("group").as[String].collect().toSet
@@ -567,9 +609,9 @@ class EraseSpec extends SparkSpecBase {
       part(docsDF.filter(pmod(col("doc_id"), lit(3)) =!= 2)),
       root3, cols, "mod3")
     val e1 = intercept[Exception] {
-      Audit.digestIndexErase(spark, root3,
+      eraseWith(root3, Audit.digestMeta(cols, "mod3"))(part(
         Seq((5L, "never here"), (8L, "nor this"), (11L, "nope"))
-          .toDF("doc_id", "text"), cols, "mod3", domainOf)
+          .toDF("doc_id", "text")))
     }
     assert(e1.getMessage.contains("never digested"), e1.getMessage)
     // right ids, WRONG bytes: the emptying-group residual-digest
@@ -577,9 +619,8 @@ class EraseSpec extends SparkSpecBase {
     val root2 = tmp("digest2")
     Audit.digestIndexWrite(part(docsDF), root2, cols, "mod3")
     val e2 = intercept[Exception] {
-      Audit.digestIndexErase(spark, root2,
-        docsDF.withColumn("text", upper(col("text"))), cols, "mod3",
-        domainOf)
+      eraseWith(root2, Audit.digestMeta(cols, "mod3"))(
+        part(docsDF.withColumn("text", upper(col("text")))))
     }
     assert(e2.getMessage.contains("residual digest"), e2.getMessage)
   }
@@ -593,8 +634,8 @@ class EraseSpec extends SparkSpecBase {
       Seq("source"))
     val retainedScores = scores
       .filter(!col("doc_id").isin(victimIds.toSeq.map(Long.box): _*))
-    val v2 = Quality.qualityCutsRefreeze(spark, root, retainedScores,
-      "ppl", Seq("source"))
+    val v2 = eraseWith(root, Quality.cutsMeta("ppl", Seq("source")))(
+      Quality.qualityCuts(retainedScores, "ppl", Seq("source"))).version
     assert(v2 !== v1)
     // the live calibration equals a fresh fit on the retained slice
     val got = Quality.qualityCutsRead(spark, root, "ppl", Seq("source"))
@@ -613,10 +654,12 @@ class EraseSpec extends SparkSpecBase {
     assert(EpochIndex.erasures(spark, root) === Seq(v2))
     // a re-freeze under a different contract is refused, not absorbed
     val e = intercept[Exception] {
-      Quality.qualityCutsRefreeze(spark, root, retainedScores, "ppl",
-        Seq("source"), cuts = Seq(0.25, 0.5, 0.75))
+      eraseWith(root, Quality.cutsMeta("ppl", Seq("source"),
+        cuts = Seq(0.25, 0.5, 0.75)))(Quality.qualityCuts(retainedScores,
+        "ppl", Seq("source"), Seq(0.25, 0.5, 0.75)))
     }
     assert(e.getMessage.contains("do not match"), e.getMessage)
+    assert(Layout.listVersions(spark, s"$root/cuts")._2 === Some(v2))
   }
 
   test("erasureAudit: the RTBF verification sweep finds survivors only where an eraser was skipped, then certifies completeness") {
@@ -639,7 +682,7 @@ class EraseSpec extends SparkSpecBase {
         col("id_b").isin(victimIds.toSeq.map(Long.box): _*))
       .count() > 0)
     // erase the band store ONLY — the sweep must localize the misses
-    Dedup.bandIndexErase(spark, band, victims)
+    erase(band, victims)
     val report = Maintenance.erasureAudit(spark, tree, victimIds.toSeq)
     val hits = report.hits
     // discovered roots come back as filesystem URIs — compare by suffix
@@ -658,7 +701,7 @@ class EraseSpec extends SparkSpecBase {
     // the gram store never surfaces: no id-bearing column
     assert(!hits.exists(_.root.endsWith("/grams")))
     // finish the request: erase the ledger too, audit certifies
-    Dedup.certLedgerErase(spark, ledger, victims, "jaccard", 0.3)
+    erase(ledger, victims)
     val clean = Maintenance.erasureAudit(spark, tree, victimIds.toSeq)
     assert(clean.hits.isEmpty)
     // footer-stats pruning never changes the verdict, only the bytes
@@ -672,12 +715,52 @@ class EraseSpec extends SparkSpecBase {
     Maintenance.requireErased(spark, tree, victimIds.toSeq)
   }
 
+  test("eraseAll refuses before any rewrite when a discovered store lacks its input, then erases the whole tree") {
+    val tree = java.nio.file.Files
+      .createTempDirectory("graft-erase-all").toString
+    val band = s"$tree/band"
+    val kmv = s"$tree/kmv"
+    val lsh = Dedup.MinHash(numHashes = 8, bands = 4, shingleK = 1)
+    Dedup.bandIndexWrite(docsDF, "doc_id", "text", band, lsh)
+    def sketch(df: DataFrame) =
+      Cardinality.kmvSketch(df, lit("all"), col("doc_id"), k = 16)
+    Cardinality.kmvIndexWrite(sketch(docsDF), kmv, 16, "doc_id")
+    def snapshot(): Map[String, Long] =
+      parquetFiles(new java.io.File(tree))
+        .map(f => f -> new java.io.File(f).lastModified()).toMap
+    val before = snapshot()
+    val e = intercept[IllegalArgumentException] {
+      Maintenance.eraseAll(spark, tree, Maintenance.EraseRequest(victims))
+    }
+    assert(e.getMessage.contains("/kmv") &&
+      e.getMessage.contains("kmv_bottom_k") &&
+      e.getMessage.contains("Rebuild"), e.getMessage)
+    assert(!e.getMessage.contains("/band"), e.getMessage)
+    // an input built under other parameters refuses the same way
+    val e2 = intercept[IllegalArgumentException] {
+      Maintenance.eraseAll(spark, tree, Maintenance.EraseRequest(victims)
+        .withInput(kmv, Cardinality.kmvMeta(32, "doc_id"))(sketch(retained)))
+    }
+    assert(e2.getMessage.contains("do not match"), e2.getMessage)
+    assert(snapshot() === before, "a refused eraseAll rewrote files")
+    // with the rebuild supplied, one call erases both stores and
+    // certifies the tree
+    val report = Maintenance.eraseAll(spark, tree,
+      Maintenance.EraseRequest(victims)
+        .withInput(kmv, Cardinality.kmvMeta(16, "doc_id"))(sketch(retained)))
+    assert(report.clean && report.filesTotal > 0, s"$report")
+    assert(Cardinality.kmvIndexRead(spark, kmv, 16, "doc_id")
+      .select("sketch").as[Seq[Long]].collect().toSeq ===
+      sketch(retained).select("sketch").as[Seq[Long]].collect().toSeq)
+    assertNoVictimOnDisk(band, Seq("id"), victimIds)
+  }
+
   test("eraseRewrite returns the version its _ERASURES line cites (stats/audit cross-reference)") {
     val root = tmp("vagree")
     Dedup.gramFreqIndexWrite(
       Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), root, n = 3)
-    val stats = Dedup.gramFreqIndexErase(spark, root, victimDocs,
-      "doc_id", "text", n = 3)
+    val stats = eraseWith(root, Dedup.gramFreqIndexMeta(3))(
+      Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3))
     assert(EpochIndex.erasures(spark, root).lastOption ===
       Some(stats.version),
       "CompactionStats.version and the logged last_erasure diverge")

@@ -367,33 +367,6 @@ class LayoutSpec extends SparkSpecBase {
     assert(pruned.inputFiles.length === hit.size)
   }
 
-  test("zone map append: batch stats union equals a whole-table rebuild") {
-    val dir = new java.io.File("target/tmp/layout-zonemap-append").getAbsolutePath
-    graft.sources.Fs.deleteRecursively(spark, dir)
-    spark.range(0, 400).toDF("id")
-      .repartitionByRange(4, col("id")).write.parquet(dir)
-    // snapshot eagerly: a lazy manifest would re-list the dir AFTER the
-    // append and double-count (real callers read a persisted manifest)
-    val base = Layout.zoneMap(spark.read.parquet(dir), Seq("id"))
-      .localCheckpoint(true)
-    // append a new batch of files, stats built from the NEW files only
-    spark.range(400, 600).toDF("id")
-      .repartitionByRange(2, col("id")).write.mode("append").parquet(dir)
-    val all = spark.read.parquet(dir).inputFiles.toSet
-    val newFiles = all -- base.select("file").collect().map(_.getString(0)).toSet
-    val batchStats = Layout.zoneMap(
-      spark.read.parquet(newFiles.toSeq: _*), Seq("id"))
-    val appended = Layout.zoneMapAppend(base, batchStats)
-    val rebuilt = Layout.zoneMap(spark.read.parquet(dir), Seq("id"))
-    assert(appended.exceptAll(rebuilt).isEmpty &&
-      rebuilt.exceptAll(appended).isEmpty,
-      "incrementally appended manifest diverges from whole-table rebuild")
-    // and the appended manifest prunes correctly into the new range
-    val hit = Layout.pruneFiles(appended, "id", lit(450L), lit(460L))
-    assert(hit.nonEmpty && hit.forall(newFiles.contains),
-      s"new-range predicate should hit only appended files: $hit")
-  }
-
   test("zone map: a STALE manifest (files on disk it never saw) refuses instead of silently dropping rows") {
     // the deleteWrite/compaction hazard: a partition rewrite replaces
     // file names, and a pruned read against the old manifest would

@@ -117,8 +117,10 @@ class MaintenanceSpec extends SparkSpecBase {
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/indexes/lines/_epoch=torn-1"), true)
-    Dedup.lineFirstOccIndexRebuild(spark, s"$root/indexes/lines",
-      Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n"), "\n")
+    Maintenance.eraseStore(spark, s"$root/indexes/lines",
+      Maintenance.EraseRequest(Seq(99L).toDF("doc_id"))
+        .withInput(s"$root/indexes/lines", Dedup.lineIndexMeta("\n", 1))(
+          Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n")))
     val erased = Maintenance.describeStores(spark, root).head.erasures
     assert(erased.size === 1 && erased.head.startsWith("v"),
       s"erasure history not surfaced: $erased")

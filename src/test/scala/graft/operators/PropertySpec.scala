@@ -574,8 +574,8 @@ class PropertySpec extends SparkSpecBase {
             val root = tmpStore(s"erase$t")
             Dedup.certTextIndexWrite(corpus.toDF("doc_id", "text"),
               "doc_id", "text", root, threshold = t, shingleK = 1)
-            Dedup.certTextIndexErase(spark, root,
-              victims.toDF("doc_id"), threshold = t, shingleK = 1)
+            Maintenance.eraseStore(spark, root,
+              Maintenance.EraseRequest(victims.toDF("doc_id")))
             val got = Dedup.certTextIndexProbe(spark, root,
               batch.toDF("doc_id", "text"), "doc_id", "text",
               threshold = t, shingleK = 1)
