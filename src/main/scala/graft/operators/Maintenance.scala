@@ -50,7 +50,7 @@ object Maintenance {
     def failed: Boolean = error.isDefined
   }
 
-  private def familyOf(meta: IndexMeta): Option[StoreFamily] =
+  private[graft] def familyOf(meta: IndexMeta): Option[StoreFamily] =
     Families.find(_.accepts(meta.family))
 
   private def compact(spark: SparkSession, root: String,

@@ -702,7 +702,7 @@ object Similarity {
   /** The id column an IVF-family manifest records first in `cols`. */
   private def manifestIdCol(param: String => String): Seq[String] =
     Seq(param("cols").split(",").head)
-  private def ivfMeta(idCol: String, vecCol: String): IndexMeta =
+  private[graft] def ivfMeta(idCol: String, vecCol: String): IndexMeta =
     IndexMeta(ivfStore.name, "cols" -> s"$idCol,$vecCol")
 
   /** Write the index: `path/centroids` plain parquet, `path/assignments`

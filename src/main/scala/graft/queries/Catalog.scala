@@ -60,6 +60,13 @@ object Catalog {
     s"${System.getProperty("java.io.tmpdir")}/graft-scratch-" +
       s"${s.sparkContext.applicationId}/$name"
 
+  /** [[scratchDir]] cleared for this invocation. */
+  private def freshScratch(s: SparkSession, name: String): String = {
+    val root = scratchDir(s, name)
+    graft.sources.Fs.deleteRecursively(s, root)
+    root
+  }
+
   /** Shared incremental-equals-full scaffold for q93/q97/q98: the
     * full-corpus pair set restricted to pairs touching the batch must
     * equal the incremental probe's output — emitted as (batch size,
@@ -2642,8 +2649,7 @@ object Catalog {
     // the index is a PERSISTED bucketed store (round 16): the probe
     // reads only the batch's band-key buckets as a parquet partition
     // filter — PlanAuditSpec gates partitionFilters.nonEmpty on it
-    val root = scratchDir(s, "q93_lshidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q93_lshidx")
     Dedup.bandIndexWrite(corpus, "doc_id", "text", root, sourceMinHash)
     val incremental = Dedup.lshProbeStore(s, root, batch, "doc_id", "text",
       sourceMinHash)
@@ -2844,8 +2850,7 @@ object Catalog {
     val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val corpus = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     // persisted bucketed store + partition-pruned probe (round 16)
-    val root = scratchDir(s, "q97_shidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q97_shidx")
     val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
     Dedup.bandIndexWrite(corpus, "doc_id", "text", root, lsh)
     val incremental = Dedup.lshProbeStore(s, root, batch, "doc_id", "text",
@@ -2884,8 +2889,7 @@ object Catalog {
     val corpus = vecs.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val lsh = Dedup.Srp(threshold = 0.99, maxBucket = 10000)
     // persisted bucketed store + partition-pruned probe (round 16)
-    val root = scratchDir(s, "q98_srpidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q98_srpidx")
     Dedup.bandIndexWrite(corpus, "vec_id", "embedding", root, lsh)
     val incremental = Dedup.lshProbeStore(s, root, batch, "vec_id",
       "embedding", lsh)
@@ -4048,8 +4052,7 @@ object Catalog {
       .localCheckpoint() // hash once; index build, probe and full run reuse it
     val batch = sigs.filter(pmod(col("id"), lit(3)) === 0)
     val corpus = sigs.filter(pmod(col("id"), lit(3)) =!= 0)
-    val root = scratchDir(s, "q124_dhash_store")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q124_dhash_store")
     val lsh = Dedup.Hamming64("image_dhash", maxHamming = 3)
     Dedup.bandIndexWrite(corpus, "id", "sig", root, lsh)
     val incremental = Dedup.lshProbeStore(s, root, batch, "id", "sig", lsh)
@@ -4266,8 +4269,7 @@ object Catalog {
     "Zone-map manifest: per-file min/max stats + file-pruned range read (layout/data skipping)",
     """SELECT doc_id, n_chars FROM documents
       |WHERE n_chars >= 400 AND n_chars <= 600""".stripMargin) { (s, d) =>
-    val dir = scratchDir(s, "q130_zonemap/docs")
-    graft.sources.Fs.deleteRecursively(s, dir)
+    val dir = freshScratch(s, "q130_zonemap/docs")
     Tables.documents(s, d).select("doc_id", "n_chars")
       .repartitionByRange(8, col("n_chars"))
       .write.mode("overwrite").parquet(dir)
@@ -4864,8 +4866,7 @@ object Catalog {
       broadcast(docs.agg(expr("max(doc_id) div 2").as("_cut"))))
     val corpus = withCut.filter(col("doc_id") <= col("_cut")).drop("_cut")
     val batch = withCut.filter(col("doc_id") > col("_cut")).drop("_cut")
-    val root = scratchDir(s, "q143_lineidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q143_lineidx")
     def epoch(r: Int): DataFrame = Dedup.lineFirstOccIndex(
       corpus.filter(pmod(col("doc_id"), lit(3)) === r), "doc_id", "text", sep)
     Dedup.lineFirstOccIndexWrite(epoch(0), root, sep)
@@ -5072,8 +5073,7 @@ object Catalog {
       broadcast(docs.agg(expr("max(doc_id) * 7 div 10").as("_cut"))))
     val history = withCut.filter(col("doc_id") <= col("_cut")).drop("_cut")
     val batch = withCut.filter(col("doc_id") > col("_cut")).drop("_cut")
-    val root = scratchDir(s, "q146_capidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q146_capidx")
     def partial(r: Int): DataFrame = Curation.capCountIndex(
       history.filter(pmod(col("doc_id"), lit(2)) === r),
       col("domain"), col("doc_id"))
@@ -5227,8 +5227,7 @@ object Catalog {
       |FROM rk WHERE rn <= 48 GROUP BY event_type""".stripMargin) { (s, d) =>
     val k = 48
     val ev = Tables.events(s, d)
-    val root = scratchDir(s, "q149_skstore")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q149_skstore")
     def epochSketch(r: Int): DataFrame = SampleSketch.sampleSketch(
       ev.filter(pmod(col("event_id"), lit(2)) === r),
       col("event_type"), col("event_id"), col("value"), k)
@@ -5345,8 +5344,7 @@ object Catalog {
       |WHERE n_matched > 0
       |ORDER BY score DESC, doc_id ASC LIMIT 40""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val root = scratchDir(s, "q151_bm25")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q151_bm25")
     Relevance.bm25IndexWrite(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
       root, "doc_id", "text")
     Relevance.bm25IndexAppend(s, root,
@@ -5558,8 +5556,7 @@ object Catalog {
       |FROM r WHERE rk <= 10""".stripMargin) { (s, d) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val root = scratchDir(s, "q155_bm25mq")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q155_bm25mq")
     Relevance.bm25IndexWrite(docs, root, "doc_id", "text")
     val queries = Seq(
       (0L, Seq("join", "filter")),
@@ -5640,8 +5637,7 @@ object Catalog {
     import s.implicits._
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
-    val root = scratchDir(s, "q156_hybrid")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q156_hybrid")
     Relevance.bm25IndexWrite(docs, root, "doc_id", "text")
     val queries = Seq(
       (0L, Seq("join", "filter")),
@@ -5851,8 +5847,7 @@ object Catalog {
       |         ELSE CAST($HllC AS DOUBLE) / CAST(sumsc AS DOUBLE) END, 4) AS hll_est
       |FROM sums s JOIN ex ON s.event_type = ex.event_type""".stripMargin) { (s, d) =>
     val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-    val root = scratchDir(s, "q159_hll")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q159_hll")
     def epochSketch(r: Int) = Cardinality.hllSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), HllP)
@@ -5882,8 +5877,7 @@ object Catalog {
     """SELECT event_id, user_id, event_type FROM events
       |WHERE user_id IS NULL OR user_id % 37 <> 0""".stripMargin) { (s, d) =>
     val ev = Tables.events(s, d)
-    val root = scratchDir(s, "q160_erase")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q160_erase")
     ev.write.partitionBy("event_type").parquet(root)
     val victims = ev.filter(pmod(col("user_id"), lit(37)) === 0)
       .select(col("user_id")).distinct()
@@ -6019,8 +6013,7 @@ object Catalog {
     def toks(r: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === r)
       .select(explode(TextFunctions.tokens(coalesce(col("text"), lit(""))))
         .as("token"))
-    val root = scratchDir(s, "q163_cms")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q163_cms")
     HeavyHitters.cmsIndexWrite(
       HeavyHitters.countMinSketch(toks(0), "token", depth, width),
       root, depth, width, "token")
@@ -6162,8 +6155,7 @@ object Catalog {
       |FROM orders GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types._
     val ord = Tables.orders(s, d)
-    val root = scratchDir(s, "q166_evolve")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q166_evolve")
     // generation 1: int keys, no amount, plus an undeclared column
     ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
       .select(col("o_orderkey").cast("int").as("o_orderkey"),
@@ -6397,8 +6389,7 @@ object Catalog {
     def partial(r: Int) = Audit.digestPartial(
       li.filter(pmod(col("l_orderkey"), lit(2)) === r), cols,
       col("l_returnflag"))
-    val root = scratchDir(s, "q171_ledger")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q171_ledger")
     Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
     Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
       "l_returnflag")
@@ -6445,8 +6436,7 @@ object Catalog {
           .cast("long").as("s"),
         (datediff(col("o_orderdate"), to_date(lit("1970-01-01"))).cast("long")
           + pmod(col("o_orderkey"), lit(20)) + lit(1L)).as("e"))
-    val root = scratchDir(s, "q172_islands")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q172_islands")
     IntervalExpand.islandsIndexWrite(ivs(0), root, "o_custkey",
       col("s"), col("e"))
     IntervalExpand.islandsIndexAppend(s, root, ivs(1), "o_custkey",
@@ -6626,8 +6616,7 @@ object Catalog {
       |       CAST(count(*) AS BIGINT) AS n_rows_b
       |FROM h GROUP BY event_type""".stripMargin) { (s, d) =>
     val ev = Tables.events(s, d)
-    val root = scratchDir(s, "q175_erase")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q175_erase")
     ev.write.partitionBy("event_type").parquet(root)
     val victims = ev.filter(pmod(col("user_id"), lit(37)) === 0)
       .select(col("user_id")).distinct()
@@ -6668,8 +6657,7 @@ object Catalog {
       |             END, 4) AS kmv_est
       |FROM x JOIN s ON x.event_type = s.event_type""".stripMargin) { (s, d) =>
     val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-    val root = scratchDir(s, "q176_kmv")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q176_kmv")
     def epochSketch(r: Int) = Cardinality.kmvSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), k = 32)
@@ -6802,8 +6790,7 @@ object Catalog {
       |       FROM s1)
       |SELECT * FROM e0 UNION ALL SELECT * FROM e1""".stripMargin) { (s, d) =>
     val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-    val root = scratchDir(s, "q178_tt")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q178_tt")
     def epochSketch(r: Int) = Cardinality.kmvSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), k = 32)
@@ -6895,8 +6882,7 @@ object Catalog {
     val docs = Tables.documents(s, d)
     val v = docs.select(col("doc_id").as("id"))
     val e = plantedEdges(docs)
-    val root = scratchDir(s, "q180_ranks")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q180_ranks")
     Centrality.pageRankFixedPoint(v, e, iterations = 2)
       .write.mode("overwrite").parquet(root) // yesterday's job ends
     Centrality.pageRankFixedPoint(v, e, iterations = 1,
@@ -6949,8 +6935,7 @@ object Catalog {
     val bucket = pmod(col("a") * lit(7L) + col("b"), lit(5L))
     def part(p: Column => Column) = u.filter(p(bucket))
       .select(col("a").as("src"), col("b").as("dst"))
-    val root = scratchDir(s, scratch)
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, scratch)
     (root, IndexedSeq(part(_ >= 2), part(_ === 0), part(_ === 1)))
   }
 
@@ -7589,8 +7574,7 @@ object Catalog {
       |       sim >= 0.5 AS contaminated
       |FROM r WHERE rk = 1""".stripMargin) { (s, d) =>
     val e = Tables.embeddings(s, d)
-    val root = scratchDir(s, "q196_bench_vecs")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q196_bench_vecs")
     Contamination.benchmarkVecIndexWrite(
       e.filter(pmod(col("vec_id"), lit(29)) === 0), "vec_id", "embedding", root)
     Contamination.semanticOverlapStored(
@@ -8125,8 +8109,7 @@ object Catalog {
       |FROM probe LEFT JOIN corpus ON probe.ng = corpus.ng
       |GROUP BY probe.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val root = scratchDir(s, "q207_gram_index")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q207_gram_index")
     Dedup.gramFreqIndexWrite(
       Dedup.gramFreqIndex(docs.filter(pmod(col("doc_id"), lit(5)).isin(0, 1)),
         "doc_id", "text", n = 8), root, n = 8)
@@ -8223,8 +8206,7 @@ object Catalog {
       |FROM documents d LEFT JOIN sc s ON d.doc_id = s.doc_id
       |WHERE d.doc_id % 5 = 2""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val root = scratchDir(s, "q209_lm_index")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q209_lm_index")
     val ref = docs.filter(pmod(col("doc_id"), lit(5)) =!= 2)
     LmFilter.lmIndexWrite(
       LmFilter.lmIndex(ref.filter(pmod(col("doc_id"), lit(5)).isin(0, 1)),
@@ -9189,11 +9171,10 @@ object Catalog {
       .filter(pmod(col("vec_id"), lit(5)) === 0)
     val corpus = e.filter(pmod(col("vec_id"), lit(7)) > 1)
     val batch = e.filter(pmod(col("vec_id"), lit(7)) <= 1)
-    val root = scratchDir(s, "q235_repair_labels_store")
-    // clear per invocation (the scratchDir contract): a re-run must
-    // not fold into the previous run's compacted base — exactly the
-    // replay-across-compaction refusal the store exists to raise
-    graft.sources.Fs.deleteRecursively(s, root)
+    // cleared per invocation: a re-run must not fold into the previous
+    // run's compacted base — exactly the replay-across-compaction
+    // refusal the store exists to raise
+    val root = freshScratch(s, "q235_repair_labels_store")
     // vec-index and label bootstraps write disjoint substores —
     // independent eager work, overlapped (guide §2.6)
     graft.operators.Par.concurrently(
@@ -9283,8 +9264,7 @@ object Catalog {
       |CROSS JOIN rep CROSS JOIN cal""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
-    val root = scratchDir(s, "q236_card_from_stores")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q236_card_from_stores")
     // one-time certification (the ingest loop's standing job, paid
     // here so there are stores to cite): both ledgers, the repair
     // labeling folded FROM the cosine ledger, the frozen calibration.
@@ -9350,8 +9330,7 @@ object Catalog {
     // victim, as id or as label).
     val docs = Tables.documents(s, d)
     val corpus = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-    val root = scratchDir(s, "q237_cert_erasure")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q237_cert_erasure")
     Dedup.certTextIndexWrite(corpus, "doc_id", "text", s"$root/idx",
       threshold = 0.85, shingleK = 1)
     val victims = corpus.filter(pmod(col("doc_id"), lit(11)) === 0)
@@ -9386,8 +9365,7 @@ object Catalog {
     val corpus = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val victims = corpus.filter(pmod(col("doc_id"), lit(7)) === 1)
       .select("doc_id")
-    val root = scratchDir(s, "q238_bandidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q238_bandidx")
     val lsh = Dedup.SimHash(maxHamming = 3, maxBucket = 10000)
     Dedup.bandIndexWrite(corpus, "doc_id", "text", root, lsh)
     Maintenance.eraseStore(s, root, Maintenance.EraseRequest(victims))
@@ -9448,8 +9426,7 @@ object Catalog {
       |GROUP BY probe.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 2)
-    val root = scratchDir(s, "q239_gram_erasure")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q239_gram_erasure")
     Dedup.gramFreqIndexWrite(
       Dedup.gramFreqIndex(corpus.filter(pmod(col("doc_id"), lit(2)) === 0),
         "doc_id", "text", n = 8), root, n = 8)
@@ -9503,8 +9480,7 @@ object Catalog {
       broadcast(docs.agg(expr("max(doc_id) * 7 div 10").as("_cut"))))
     val history = withCut.filter(col("doc_id") <= col("_cut")).drop("_cut")
     val batch = withCut.filter(col("doc_id") > col("_cut")).drop("_cut")
-    val root = scratchDir(s, "q240_capidx")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q240_capidx")
     def partial(r: Int): DataFrame = Curation.capCountIndex(
       history.filter(pmod(col("doc_id"), lit(2)) === r),
       col("domain"), col("doc_id"))
@@ -9559,8 +9535,7 @@ object Catalog {
       col("doc_id"), col("source"),
       TextFunctions.tokenCount(col("text")).cast("double").as("score"))
     val calSlice = docs.filter(pmod(col("doc_id"), lit(9)) =!= 0)
-    val root = scratchDir(s, "q241_cuts_refreeze")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q241_cuts_refreeze")
     Quality.qualityCutsWrite(s, root,
       Quality.qualityCuts(scored(calSlice), "score", Seq("source")),
       "score", Seq("source"))
@@ -9611,8 +9586,7 @@ object Catalog {
     def partial(r: Int) = Audit.digestPartial(
       li.filter(pmod(col("l_orderkey"), lit(2)) === r), cols,
       col("l_returnflag"))
-    val root = scratchDir(s, "q242_digest_erasure")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q242_digest_erasure")
     Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
     Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
       "l_returnflag")
@@ -9997,8 +9971,7 @@ object Catalog {
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val corpus = e.filter(pmod(col("vec_id"), lit(4)) =!= 1)
     val batch = e.filter(pmod(col("vec_id"), lit(4)) === 1)
-    val root = scratchDir(s, "q243_ivf_recluster")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q243_ivf_recluster")
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 16),
       "vec_id", "embedding"), root)
@@ -10090,8 +10063,7 @@ object Catalog {
       |SELECT p.vec_id, CAST(p.sub AS BIGINT) AS sub, p.code, cl.cell
       |FROM pa2 p JOIN cells cl USING (vec_id)""".stripMargin) { (s, d) =>
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val root = scratchDir(s, "q244_ivfpq_recluster")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q244_ivfpq_recluster")
     Similarity.ivfPqIndexWrite(Similarity.ivfPqIndex(e,
       Similarity.pickCentroids(e, "vec_id", "embedding", 8),
       "vec_id", "embedding", m = 4, k = 4, iters = 0), root)
@@ -10137,8 +10109,7 @@ object Catalog {
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val corpus = e.filter(pmod(col("vec_id"), lit(4)) =!= 1)
     val batch = e.filter(pmod(col("vec_id"), lit(4)) === 1)
-    val root = scratchDir(s, "q245_ivf_cell_skew")
-    graft.sources.Fs.deleteRecursively(s, root)
+    val root = freshScratch(s, "q245_ivf_cell_skew")
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 16),
       "vec_id", "embedding"), root)

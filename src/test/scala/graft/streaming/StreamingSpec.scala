@@ -1911,4 +1911,116 @@ class StreamingSpec extends SparkSpecBase {
     assert(pruned.count() === 11L)
     assert(hit.size < tracked.length, "no files were pruned")
   }
+
+  /** Every file under `root`, relative to it (empty when absent). */
+  private def fileSet(root: String): Set[String] = {
+    val base = java.nio.file.Paths.get(root)
+    if (!Files.exists(base)) Set.empty
+    else {
+      val walk = Files.walk(base)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(base.relativize(_).toString).toSet
+      } finally walk.close()
+    }
+  }
+
+  test("manifest rule: a restart under other build parameters refuses at activation, store untouched (hll p, cms width, ivf id column)") {
+    import graft.operators.Similarity
+    def refusesUntouched(store: String)(start: => Unit): Unit = {
+      val before = fileSet(store)
+      assert(before.contains("_GRAFT_META"), before)
+      val e = intercept[IllegalArgumentException](start)
+      assert(e.getMessage.contains("do not match"), e.getMessage)
+      assert(fileSet(store) === before)
+    }
+    // hll: same checkpoint, p + 1 (no refusal class: the manifest rule alone)
+    val hll = SinkFixtures.all(spark).toMap.apply("hllIngestSink")()
+    val hllCkp = Files.createTempDirectory("graft-mr-hll").toString
+    hll.deliver(0); hll.start(hllCkp).awaitTermination()
+    // activation refuses before the stream is ever read
+    def idle(corpus: String) = Streaming.fileStream(spark,
+      spark.read.parquet(corpus).drop("_epoch").schema,
+      Files.createTempDirectory("graft-mr-idle").toString)
+    val Seq(hllCorpus, hllIdx) = hll.roots
+    refusesUntouched(hllIdx) {
+      Streaming.hllIngestSink(idle(hllCorpus), spark, hllCorpus, hllIdx,
+        "grp", "v", 7, hllCkp)
+    }
+    // cms: same checkpoint (so the fresh-checkpoint refusal cannot fire),
+    // another width
+    val cms = SinkFixtures.all(spark).toMap.apply("cmsIngestSink")()
+    val cmsCkp = Files.createTempDirectory("graft-mr-cms").toString
+    cms.deliver(0); cms.start(cmsCkp).awaitTermination()
+    val Seq(cmsCorpus, cmsIdx) = cms.roots
+    refusesUntouched(cmsIdx) {
+      Streaming.cmsIngestSink(idle(cmsCorpus), spark, cmsCorpus, cmsIdx,
+        "item", 3, 128, cmsCkp)
+    }
+    // ivf: a stream keyed by another id column — the ivf erase reads the
+    // id column from the manifest and could not see its assignments
+    val ivf = SinkFixtures.all(spark).toMap.apply("ivfIngestSink")()
+    val Seq(ivfIdx) = ivf.roots
+    val ivfSrc = Files.createTempDirectory("graft-mr-ivf-src").toString
+    Seq((500L, Array.fill(8)(0.5f))).toDF("id", "embedding")
+      .write.parquet(s"$ivfSrc/b0")
+    refusesUntouched(ivfIdx) {
+      Streaming.ivfIngestSink(Streaming.fileStream(spark,
+        spark.read.parquet(s"$ivfSrc/b0").schema, s"$ivfSrc/*"), spark,
+        ivfIdx, "id", "embedding",
+        Files.createTempDirectory("graft-mr-ivf-ckp").toString)
+    }
+    // the ivf manifest names the id column the store was built with
+    assert(graft.operators.IndexMeta.read(spark, ivfIdx).get.params("cols")
+      .startsWith("vec_id"))
+    assert(Similarity.ivfIndexRead(spark, ivfIdx).assignments.count() === 20L)
+  }
+
+  test("at-least-once replay matrix: every ingest sink re-runs its newest epoch to the same rows, leaving nothing pinned") {
+    val sc = spark.sparkContext
+    val fixtures = SinkFixtures.all(spark)
+    assert(fixtures.size === 19)
+    fixtures.foreach { case (name, mk) =>
+      val fx = mk()
+      val ckp = Files.createTempDirectory("graft-replay-ckp").toString
+      val pinned = sc.getPersistentRDDs.keySet
+      fx.deliver(0); fx.start(ckp).awaitTermination()
+      fx.deliver(1); fx.start(ckp).awaitTermination()
+      def snapshot() = fx.roots.flatMap(SinkFixtures.tables(spark, _))
+        .map(t => t -> SinkFixtures.rows(spark, t, fx.volatileCols.getOrElse(t, Nil)))
+      val before = snapshot()
+      assert(before.forall(_._2.nonEmpty), s"$name: an empty table ${before.filter(_._2.isEmpty).map(_._1)}")
+      // forget epoch 1's commit: the restart re-runs it under the same id
+      val commits = new java.io.File(ckp, "commits")
+      assert(commits.list().toSet.contains("1") && !commits.list().contains("2"),
+        s"$name: expected exactly two epochs, got ${commits.list().toSeq}")
+      assert(new java.io.File(commits, "1").delete())
+      new java.io.File(commits, ".1.crc").delete()
+      fx.start(ckp).awaitTermination()
+      assert(new java.io.File(commits, "1").exists(), s"$name: epoch 1 was not re-run")
+      before.zip(snapshot()).foreach { case ((table, b), (_, a)) =>
+        assert(a === b, s"$name: $table changed under the replay")
+      }
+      // no growth: the context cleaner may drop older RDDs meanwhile.
+      // Open for the cert sinks: Dedup's certification probe and index
+      // helpers pin internally and return no release handle, so their
+      // blocks wait for a GC (listed open in CHANGES.md)
+      val leaked = sc.getPersistentRDDs.keySet -- pinned
+      if (!Set("certIngestSink", "certVecIngestSink").contains(name))
+        assert(leaked.isEmpty, s"$name left ${leaked.size} RDDs pinned")
+    }
+  }
+
+  test("one ingest path: writeStream, runToken and IndexMeta.writeIfAbsent each have exactly one call site in Streaming.scala") {
+    val code = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/streaming/Streaming.scala")), "UTF-8")
+      .split("\n").map(_.trim).filterNot(l =>
+        l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+    def sites(call: String) = code.count(l => l.contains(call) && !l.startsWith("def "))
+    assert(sites(".writeStream") === 1)
+    assert(code.count(l => l.contains("runToken(") &&
+      !l.startsWith("private def runToken(")) === 1)
+    assert(sites("IndexMeta.writeIfAbsent(") === 1)
+  }
 }
