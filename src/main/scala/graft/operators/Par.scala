@@ -44,7 +44,8 @@ object Par {
   /** [[widen]] keyed by a named column. */
   def widen(df: DataFrame, key: String): DataFrame = widen(df, col(key))
 
-  /** Run independent eager actions (store builds) concurrently —
+  /** Run independent eager actions (store builds, a pipeline layer's
+    * models) concurrently and return their results in thunk order —
     * guide §2.6 "overlap independent jobs": Spark's scheduler runs
     * several jobs at once; actions are sequential only because the
     * caller invokes them sequentially. A store-building query fires
@@ -57,28 +58,32 @@ object Par {
     * lets the rest use leftover capacity — exactly the back-fill
     * behaviour wanted.
     *
+    * The pool is as wide as the call: one thread per thunk, shut down
+    * on return. A single thunk runs on the caller's thread.
+    *
     * Every thunk runs to completion even if a sibling fails (a store
     * write must not be abandoned mid-epoch by someone else's error —
     * torn-store repair is the crash contract, not the happy path);
-    * the first failure then propagates. */
-  def concurrently(thunks: (() => Unit)*): Unit = {
-    if (thunks.sizeIs <= 1) { thunks.foreach(_.apply()); return }
+    * the first failure in thunk order then propagates, whichever
+    * failed first in time (ParSpec). */
+  def all[T](thunks: (() => T)*): Seq[T] = {
+    if (thunks.sizeIs <= 1) return thunks.map(_.apply())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
     try {
       val fs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = t()
+        pool.submit(new java.util.concurrent.Callable[T] {
+          override def call(): T = t()
         })
       }
-      var first: Throwable = null
-      fs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (first == null) first = e.getCause
-        }
+      val outcomes = fs.map { f =>
+        try Right(f.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
       }
-      if (first != null) throw first
+      outcomes.foreach { case Left(e) => throw e; case _ => }
+      outcomes.collect { case Right(v) => v }
     } finally pool.shutdown()
   }
+
+  /** [[all]] for actions run for their effect. */
+  def concurrently(thunks: (() => Unit)*): Unit = { all(thunks: _*); () }
 }

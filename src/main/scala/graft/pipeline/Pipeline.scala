@@ -6,14 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Incremental, Merge}
+import graft.operators.{Incremental, Merge, Par}
 import graft.sources.Fs
 
 /** End-to-end pipeline runner: the Airflow DAG + dbt layer ordering
   * (reference: stripe_update_dag.py:17-42, strict staging → curated →
-  * marts) re-expressed as a topologically-ordered sequence of model
-  * functions with merge materialization and high-water-mark
-  * incrementality.
+  * marts) re-expressed as three layers run one after another, the
+  * models inside each layer run concurrently (dbt's `threads` pool
+  * inside each Airflow layer task), with merge materialization and
+  * high-water-mark incrementality. The layers: staging + dimensions,
+  * curated, marts. A layer starts only after every model of the one
+  * before it has finished; each model's Spark jobs carry the job
+  * description `graft.pipeline <table>` (PipelineSpec checks both).
+  *
+  * Failures: a failed model invokes `onFailure(table, error)` once,
+  * on the thread that ran it, so several models of one layer may
+  * alert, concurrently. The rest of that layer still runs to the end;
+  * no later layer starts, and the first failure in the layer's
+  * declaration order is rethrown (the DAG stops at the failed layer
+  * like Airflow would; graft.operators.Par.all).
   *
   * Rerun safety (the README.md:93-129 idempotency contract): every
   * table is materialized with `Merge.mergeInto` on its unique key, so
@@ -52,38 +63,34 @@ class Pipeline(
     *
     * Merge.mergeWrite prunes the target read to the touched partitions
     * and dynamic-overwrites only those directories — daily cost is
-    * O(updated partitions), not O(table). Failures invoke the alerting
-    * callback (the reference's on_failure_callback,
-    * stripe_update_dag.py:25-37) then propagate — the DAG stops at the
-    * failed layer like Airflow would. */
+    * O(updated partitions), not O(table). */
   private def materialize(name: String, keys: Seq[String], partitionCol: String,
                           hwmCol: String, clusterCols: Seq[String] = Nil)(
-                          updates: Option[Any] => DataFrame): DataFrame =
-    try {
-      val all = updates(None)
-      val hwmField = all.schema(hwmCol)
-      def dirs = Fs.partitionDirs(spark, path(name), partitionCol)
-      val hwm =
-        if (fullRefresh) None
-        else if (hwmCol == partitionCol)
-          Incremental.partitionHighWaterMark(spark, path(name), partitionCol, hwmField.dataType)
-        else {
-          // a missing table has no mark; IO errors on an existing table
-          // propagate (graft.sources.Fs scaladoc)
-          val existing = dirs
-          if (existing.isEmpty) None
-          else Incremental.highWaterMark(
-            Fs.readParquet(spark, path(name), existing, StructType(Seq(hwmField))), hwmCol)
-        }
-      val fresh = hwm.fold(all)(h => updates(hwm).filter(col(hwmCol) > lit(h)))
-      Merge.mergeWrite(spark, path(name), fresh, keys, partitionCol,
-        clusterCols, versionCol = Some("_loaded_at")) match {
-        case Some(written) => Fs.readParquet(spark, path(name), dirs, written)
-        // empty updates against a missing table write nothing — hand the
-        // (empty, schema-correct) frame downstream instead of a dead path
-        case None => fresh.limit(0)
+                          updates: Option[Any] => DataFrame): DataFrame = {
+    val all = updates(None)
+    val hwmField = all.schema(hwmCol)
+    def dirs = Fs.partitionDirs(spark, path(name), partitionCol)
+    val hwm =
+      if (fullRefresh) None
+      else if (hwmCol == partitionCol)
+        Incremental.partitionHighWaterMark(spark, path(name), partitionCol, hwmField.dataType)
+      else {
+        // a missing table has no mark; IO errors on an existing table
+        // propagate (graft.sources.Fs scaladoc)
+        val existing = dirs
+        if (existing.isEmpty) None
+        else Incremental.highWaterMark(
+          Fs.readParquet(spark, path(name), existing, StructType(Seq(hwmField))), hwmCol)
       }
-    } catch { case e: Throwable => onFailure(name, e); throw e }
+    val fresh = hwm.fold(all)(h => updates(hwm).filter(col(hwmCol) > lit(h)))
+    Merge.mergeWrite(spark, path(name), fresh, keys, partitionCol,
+      clusterCols, versionCol = Some("_loaded_at")) match {
+      case Some(written) => Fs.readParquet(spark, path(name), dirs, written)
+      // empty updates against a missing table write nothing — hand the
+      // (empty, schema-correct) frame downstream instead of a dead path
+      case None => fresh.limit(0)
+    }
+  }
 
   /** Full rebuild of a dimension table, read back with its known schema. */
   private def rebuild(name: String, df: DataFrame): DataFrame = {
@@ -91,53 +98,68 @@ class Pipeline(
     spark.read.schema(df.schema).parquet(path(name))
   }
 
-  /** Run the full DAG from raw source frames. Returns the mart
-    * frames. Dimension tables are full rebuilds (reference:
+  /** One model: `build(table)` under the job description
+    * `graft.pipeline <table>`, restored on the way out; a failure
+    * invokes the alerting callback (the reference's
+    * on_failure_callback, stripe_update_dag.py:25-37), then
+    * propagates. */
+  private def model(table: String, build: String => DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft.pipeline $table")
+    try build(table)
+    catch { case e: Throwable => onFailure(table, e); throw e }
+    finally sc.setJobDescription(prior)
+  }
+
+  /** One layer: its models run concurrently, each on its own thread;
+    * returns once all have finished (see the class doc for failures). */
+  private def layer(models: (String, String => DataFrame)*): Map[String, DataFrame] =
+    models.map(_._1).zip(Par.all(models.map { case (t, build) =>
+      () => model(t, build) }: _*)).toMap
+
+  /** Run the full DAG from raw source frames. Returns every table's
+    * frame. Dimension tables are full rebuilds (reference:
     * exchange_rates.sql:1-3, calendar.sql:1-3 `materialized="table"`);
     * everything else is an incremental merge. */
   def run(rawInvoices: DataFrame,
           rawSubscriptions: DataFrame,
           rawSubscriptionUpdates: DataFrame): Map[String, DataFrame] = {
     def staged(raw: DataFrame) = Models.staged(raw).withColumn("_loaded_at", loadedAt)
+    // stg_* : unique key id, HWM on created_at_date
+    def stg(raw: DataFrame): String => DataFrame =
+      materialize(_, Seq("id"), "created_at_date", "created_at_date")(_ => staged(raw))
 
-    // ---- staging (stg_* : unique key id, HWM on created_at_date)
-    val stgInvoices = materialize("stg_invoices", Seq("id"),
-      "created_at_date", "created_at_date")(_ => staged(rawInvoices))
-    val stgSubscriptions = materialize("stg_subscriptions", Seq("id"),
-      "created_at_date", "created_at_date")(_ => staged(rawSubscriptions))
-    val stgSubscriptionUpdates = materialize("stg_subscription_updates", Seq("id"),
-      "created_at_date", "created_at_date")(_ => staged(rawSubscriptionUpdates))
-
-    // ---- dims (full rebuild)
-    val fx = rebuild("exchange_rates", Models.exchangeRates(spark, asOf))
-    val calendar = rebuild("calendar", Models.calendar(spark, asOf))
+    // ---- staging + dims (full rebuild)
+    val staging = layer(
+      "stg_invoices" -> stg(rawInvoices),
+      "stg_subscriptions" -> stg(rawSubscriptions),
+      "stg_subscription_updates" -> stg(rawSubscriptionUpdates),
+      "exchange_rates" -> (rebuild(_, Models.exchangeRates(spark, asOf))),
+      "calendar" -> (rebuild(_, Models.calendar(spark, asOf))))
+    val stgInvoices = staging("stg_invoices")
+    val fx = staging("exchange_rates")
 
     // ---- curated (HWM on created_at_date / invoice_created_date)
-    val invoices = materialize("invoices", Seq("invoice_id"),
-      "created_at_date", "created_at_date", Seq("customer_id"))(
-      _ => Models.invoices(stgInvoices, loadedAt))
-    val lineItems = materialize("invoice_line_items", Seq("line_item_id"),
-      "invoice_created_date", "invoice_created_date", Seq("invoice_id", "subscription_id"))(
-      _ => Models.invoiceLineItems(stgInvoices, loadedAt))
+    val curated = layer(
+      "invoices" -> (materialize(_, Seq("invoice_id"),
+        "created_at_date", "created_at_date", Seq("customer_id"))(
+        _ => Models.invoices(stgInvoices, loadedAt))),
+      "invoice_line_items" -> (materialize(_, Seq("line_item_id"),
+        "invoice_created_date", "invoice_created_date", Seq("invoice_id", "subscription_id"))(
+        _ => Models.invoiceLineItems(stgInvoices, loadedAt))))
+    val lineItems = curated("invoice_line_items")
 
     // ---- marts (composite keys; HWM on invoice_created_at)
-    val deferred = materialize("deferred_revenue", Seq("line_item_id", "as_of_date"),
-      "as_of_date", "invoice_created_at", Seq("customer_id", "subscription_id"))(
-      hwm => Models.deferredRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))
-    val recognized = materialize("recognized_revenue", Seq("line_item_id", "recognition_date"),
-      "recognition_date", "invoice_created_at", Seq("customer_id", "line_item_id"))(
-      hwm => Models.recognizedRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))
+    val marts = layer(
+      "deferred_revenue" -> (materialize(_, Seq("line_item_id", "as_of_date"),
+        "as_of_date", "invoice_created_at", Seq("customer_id", "subscription_id"))(
+        hwm => Models.deferredRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))),
+      "recognized_revenue" -> (materialize(_, Seq("line_item_id", "recognition_date"),
+        "recognition_date", "invoice_created_at", Seq("customer_id", "line_item_id"))(
+        hwm => Models.recognizedRevenue(Pipeline.martInput(lineItems, hwm), fx, loadedAt))))
 
-    val out = Map(
-      "stg_invoices" -> stgInvoices,
-      "stg_subscriptions" -> stgSubscriptions,
-      "stg_subscription_updates" -> stgSubscriptionUpdates,
-      "exchange_rates" -> fx,
-      "calendar" -> calendar,
-      "invoices" -> invoices,
-      "invoice_line_items" -> lineItems,
-      "deferred_revenue" -> deferred,
-      "recognized_revenue" -> recognized)
+    val out = staging ++ curated ++ marts
     // register every table as a view so analysts can spark.sql over
     // the warehouse by name (the E3 surface)
     out.foreach { case (name, df) => df.createOrReplaceTempView(name) }
@@ -220,27 +242,30 @@ object Checks {
       f"$pct%.2f%% missing (threshold $thresholdPct%%)")
   }
 
-  /** The README.md:164-168 aspirational tests. */
-  def standardSuite(tables: Map[String, DataFrame]): Seq[CheckResult] = Seq(
-    unique(tables("calendar"), Seq("date_day"), "calendar"),
-    notNull(tables("calendar"), "date_day", "calendar"),
-    unique(tables("invoices"), Seq("invoice_id"), "invoices"),
-    notNull(tables("invoices"), "invoice_id", "invoices"),
-    unique(tables("invoice_line_items"), Seq("line_item_id"), "invoice_line_items"),
-    unique(tables("deferred_revenue"), Seq("line_item_id", "as_of_date"), "deferred_revenue"),
-    unique(tables("recognized_revenue"), Seq("line_item_id", "recognition_date"), "recognized_revenue"),
-    CheckResult("no_negative_amounts",
+  /** The README.md:164-168 aspirational tests, in this order. Each is
+    * an independent read-only count, so they run concurrently
+    * (graft.operators.Par.all). */
+  def standardSuite(tables: Map[String, DataFrame]): Seq[CheckResult] = Par.all(
+    () => unique(tables("calendar"), Seq("date_day"), "calendar"),
+    () => notNull(tables("calendar"), "date_day", "calendar"),
+    () => unique(tables("invoices"), Seq("invoice_id"), "invoices"),
+    () => notNull(tables("invoices"), "invoice_id", "invoices"),
+    () => unique(tables("invoice_line_items"), Seq("line_item_id"), "invoice_line_items"),
+    () => unique(tables("deferred_revenue"), Seq("line_item_id", "as_of_date"), "deferred_revenue"),
+    () => unique(tables("recognized_revenue"), Seq("line_item_id", "recognition_date"),
+      "recognized_revenue"),
+    () => CheckResult("no_negative_amounts",
       tables("invoice_line_items").filter(col("amount") < 0).count() == 0,
       "negative line-item amounts"),
-    CheckResult("no_orphaned_line_items",
+    () => CheckResult("no_orphaned_line_items",
       tables("invoice_line_items").join(tables("invoices"),
         Seq("invoice_id"), "left_anti").count() == 0,
       "line items without a parent invoice"),
-    CheckResult("no_missing_fx_rates",
+    () => CheckResult("no_missing_fx_rates",
       tables("invoice_line_items").join(
         tables("exchange_rates").filter(col("to_currency") === "USD")
           .select(col("from_currency").as("currency")),
         Seq("currency"), "left_anti").count() == 0,
       "currencies without a USD rate"),
-    missingPeriodEnd(tables("invoice_line_items")))
+    () => missingPeriodEnd(tables("invoice_line_items")))
 }

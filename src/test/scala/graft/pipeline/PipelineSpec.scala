@@ -211,14 +211,21 @@ class PipelineSpec extends SparkSpecBase {
     val n = spark.sql(
       "SELECT count(*) FROM deferred_revenue WHERE deferred_revenue_usd > 0").head().getLong(0)
     assert(n > 0)
-    // failure callback fires and the error propagates
-    var alerted: Option[String] = None
+    // failure callback fires and the error propagates; the callback
+    // runs on the models' own threads, several at once
+    val alerted = new java.util.concurrent.ConcurrentLinkedQueue[String]
     // a path UNDER a regular file cannot be created — guaranteed write failure
     val blocker = Files.createTempFile("graft-blocker", ".dat")
     val bad = new Pipeline(spark, blocker.toString + "/wh", asOf,
-      onFailure = (t, _) => alerted = Some(t))
-    intercept[Throwable] { bad.run(rawInvoices, emptySubs, emptyUpdates) }
-    assert(alerted.contains("stg_invoices"))
+      onFailure = (t, _) => alerted.add(t))
+    // the first day's inputs, so every first-layer model has rows to write
+    val Seq(invoices, subscriptions, updates) = raw(1)
+    intercept[Throwable] { bad.run(invoices, subscriptions, updates) }
+    // every model of the first layer fails and alerts once; no later
+    // layer starts, so no curated or mart model alerts
+    val alerts = alerted.toArray.toSeq.map(_.toString)
+    assert(alerts.sorted === Seq("calendar", "exchange_rates", "stg_invoices",
+      "stg_subscription_updates", "stg_subscriptions"))
   }
 
   test("typed Dataset surface binds the mart schemas") {
@@ -299,6 +306,11 @@ class PipelineSpec extends SparkSpecBase {
                      inputs: Seq[DataFrame]): Map[String, DataFrame] =
     new Pipeline(spark, dir, asOf, fullRefresh).run(inputs(0), inputs(1), inputs(2))
 
+  /** A day-2 Spark job: its description and its start and end times. */
+  private case class DayJob(description: Option[String], start: Long, end: Long)
+  /** Every job of the day-2 run in [[incremental]], by job id. */
+  private val day2Jobs = new java.util.concurrent.ConcurrentHashMap[Int, DayJob]
+
   /** Day 1 then day 2 incrementally into one warehouse, and the Spark
     * jobs the day-2 run started (listener bus drained on both sides). */
   private lazy val incremental: (String, Map[String, DataFrame], Int) = {
@@ -307,8 +319,14 @@ class PipelineSpec extends SparkSpecBase {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        day2Jobs.put(j.jobId, DayJob(
+          Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description"))),
+          j.time, Long.MaxValue))
+      }
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        day2Jobs.computeIfPresent(j.jobId, (_, r) => r.copy(end = j.time))
     }
     org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(sc)
     sc.addSparkListener(listener)
@@ -382,5 +400,37 @@ class PipelineSpec extends SparkSpecBase {
     val budget = 43
     val (_, _, jobs) = incremental
     assert(jobs <= budget, s"day-2 Pipeline.run started $jobs Spark jobs (budget $budget)")
+  }
+
+  test("models run concurrently inside each layer, the layers one after another") {
+    val layers = Seq(
+      Seq("stg_invoices", "stg_subscriptions", "stg_subscription_updates",
+        "exchange_rates", "calendar"),
+      Seq("invoices", "invoice_line_items"),
+      Seq("deferred_revenue", "recognized_revenue"))
+    assert(layers.flatten.toSet === tableNames.toSet)
+    incremental
+    val jobs = day2Jobs.values.toArray(Array.empty[DayJob]).toSeq
+    assert(jobs.nonEmpty)
+    // every job says which model started it, and every job ended
+    val tags = tableNames.map(t => s"graft.pipeline $t").toSet
+    assert(jobs.forall(_.description.exists(tags)), jobs.map(_.description).distinct)
+    assert(jobs.forall(_.end != Long.MaxValue))
+    def ofTable(t: String) = jobs.filter(_.description.contains(s"graft.pipeline $t"))
+    val spans = layers.map(_.filter(t => ofTable(t).nonEmpty).map { t =>
+      t -> (ofTable(t).map(_.start).min, ofTable(t).map(_.end).max) }.toMap)
+    // no job of a layer starts before the last job of the layer before ends
+    for (Seq(before, after) <- spans.sliding(2)) {
+      val lastEnd = before.values.map(_._2).max
+      val firstStart = after.values.map(_._1).min
+      assert(firstStart >= lastEnd, s"$after started before $before ended")
+    }
+    // inside the first layer, at least two models' job spans overlap
+    val first = spans.head.toSeq
+    val overlapping = for {
+      (a, (s1, e1)) <- first; (b, (s2, e2)) <- first
+      if a < b && s1 < e2 && s2 < e1
+    } yield (a, b)
+    assert(overlapping.nonEmpty, s"no two first-layer models overlapped: $first")
   }
 }
