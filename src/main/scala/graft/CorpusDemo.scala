@@ -137,9 +137,8 @@ object CorpusDemo {
       // below — and the final card's citation — are LEDGER READS,
       // and a later ingest loop appends batch pairs instead of ever
       // re-running corpus²
-      Dedup.certLedgerWrite(Dedup.exactJaccardJoin(near, "doc_id",
-        "text", threshold = 0.5, shingleK = 1), certJacRoot,
-        "jaccard", 0.5)
+      Dedup.certLedgerWrite(Dedup.exactJoin(near, "doc_id", "text",
+        Dedup.Jaccard(0.5)), certJacRoot, "jaccard", 0.5)
       val split = Dedup.certLedgerRead(spark, certJacRoot, "jaccard", 0.5)
         .join(src.select(col("doc_id").as("id_a"), col("source").as("_sa")),
           Seq("id_a"))
@@ -191,8 +190,8 @@ object CorpusDemo {
         // the residual split below reads them back, and the repair
         // stage consumes the same ledger instead of re-running the
         // exact join a second time
-        Dedup.certLedgerWrite(Dedup.exactCosineJoin(
-          keptVecs, "vec_id", "embedding", threshold = 0.4),
+        Dedup.certLedgerWrite(Dedup.exactJoin(
+          keptVecs, "vec_id", "embedding", Dedup.Cosine(0.4)),
           certCosRoot, "cosine", 0.4)
         val split = Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
           .join(cells.select(col("vec_id").as("id_a"),
@@ -225,14 +224,16 @@ object CorpusDemo {
         // the demo's fixed outDir persists across runs: a fresh run
         // must not fold into the last run's labeling
         Fs.deleteRecursively(spark, ccRoot)
-        Dedup.ccLabelsFold(spark, ccRoot,
-          Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
-            .select("id_a", "id_b"), "base", "cosine", 0.4)
+        // the fold's returned labeling is pinned and unused here: free it
+        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(
+          Dedup.ccLabelsFold(spark, ccRoot,
+            Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
+              .select("id_a", "id_b"), "base", "cosine", 0.4))
         val repaired = barrier(Dedup.repairSurvivorsFromStore(spark,
           semKeptVecs, "vec_id", ccRoot, "cosine", 0.4))
         (repaired.count(),
-          Dedup.exactCosineJoin(repaired, "vec_id", "embedding",
-            threshold = 0.4).count(), repaired)
+          Dedup.exactJoin(repaired, "vec_id", "embedding",
+            Dedup.Cosine(0.4)).count(), repaired)
       }
 
     // ---- semantic_filter: the repaired survivor set becomes the

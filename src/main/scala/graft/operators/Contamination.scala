@@ -230,7 +230,8 @@ object Contamination {
     * maximum overlap ratio (the same cluster-level reasoning
     * [[Splits.clusterSafeSplit]] applies to train/test assignment).
     *
-    * Cluster edges come from [[Dedup.exactJaccardJoin]] (the q215
+    * Cluster edges come from [[Dedup.exactJoin]] under
+    * [[Dedup.Jaccard]] (the q215
     * exact join — deterministic and oracle-replayable, where
     * LSH-seeded edges would not be) and collapse via
     * [[Dedup.connectedComponents]]. Docs not in any pair are their
@@ -252,8 +253,8 @@ object Contamination {
                         flagThreshold: Double = 0.1,
                         roundTo: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = Dedup.exactJaccardJoin(docs, idCol, textCol,
-      pairThreshold, shingleK).select(col("id_a"), col("id_b"))
+    val pairs = Dedup.exactJoin(docs, idCol, textCol,
+      Dedup.Jaccard(pairThreshold, shingleK)).select(col("id_a"), col("id_b"))
     val cc = Dedup.connectedComponents(pairs)
     val ratios = ngramOverlap(docs.filter(!benchFilter),
         docs.filter(benchFilter), idCol, textCol, n)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Sketches, TextFunctions}
@@ -1184,7 +1184,7 @@ object Dedup {
     * and probe-read poison at scale); with it each bucket is one task's
     * output, and the within-partition (band, bh) sort gives the probe's
     * equi-join key row-group min/max pruning inside each bucket file —
-    * the certTextParts postings discipline. */
+    * the cert_text postings discipline ([[Jaccard]]). */
   private def bandBucketed(index: DataFrame, buckets: Int): DataFrame =
     index.withColumn("bb", bandBucket(buckets))
       .repartition(col("bb"))
@@ -1442,7 +1442,14 @@ object Dedup {
     *         stored ∪ batch vertices */
   def incrementalComponents(storedLabels: DataFrame, pairs: DataFrame,
                             idA: String = "id_a",
-                            idB: String = "id_b"): DataFrame = {
+                            idB: String = "id_b"): DataFrame =
+    incrementalWithMini(storedLabels, pairs, idA, idB)._1
+
+  /** [[incrementalComponents]] and the mini CC's pinned mapping it
+    * reads (free it once the labeling is materialized). */
+  private def incrementalWithMini(storedLabels: DataFrame, pairs: DataFrame,
+                                  idA: String = "id_a",
+                                  idB: String = "id_b"): (DataFrame, DataFrame) = {
     val lab = storedLabels.select(col("id"), col("cluster_id"))
     val mapped = pairs
       .join(lab.select(col("id").as(idA), col("cluster_id").as("_la")),
@@ -1468,7 +1475,7 @@ object Dedup {
     val newLabels = newIds
       .join(mini, newIds("id") === col("_sv"), "left")
       .select(col("id"), coalesce(col("_nl"), col("id")).as("cluster_id"))
-    updatedStored.unionByName(newLabels)
+    (updatedStored.unionByName(newLabels), mini)
   }
 
   /** Embedding-cosine near-duplicate pairs: all pairs within a
@@ -1557,7 +1564,7 @@ object Dedup {
     * [[semanticDedup]] trades away, using the certification join's
     * own output. SemDeDup's keep rule is cell-LOCAL, so pairs whose
     * members landed in different IVF cells survive it — the exact
-    * residual [[exactCosineJoin]] measures (the corpus-card
+    * residual [[exactJoin]] under [[Cosine]] measures (the corpus-card
     * `sem_residual_cross` number). This operator CONSUMES that
     * certification: the residual edges over the survivors feed
     * [[connectedComponents]] (min-id labels, the q42 machinery), one
@@ -1581,8 +1588,8 @@ object Dedup {
   def semanticRepair(survivors: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, nPivots: Int = 4,
                      maxCell: Long = 100000L, roundTo: Int = 4): DataFrame = {
-    val edges = exactCosineJoin(survivors, idCol, vecCol, threshold,
-      nPivots, maxCell, roundTo).select(col("id_a"), col("id_b"))
+    val edges = exactJoin(survivors, idCol, vecCol,
+      Cosine(threshold, nPivots, maxCell, roundTo)).select(col("id_a"), col("id_b"))
     val drops = connectedComponents(edges)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
@@ -1594,7 +1601,7 @@ object Dedup {
     * min-id labels over every certified pair so far
     * ([[connectedComponents]] at bootstrap,
     * [[incrementalComponents]] folded with each batch's
-    * [[certVecIndexProbe]]/[[certTextIndexProbe]] cross pairs + self
+    * [[certBatchPairs]] — [[certIndexProbe]] cross pairs + self
     * join), the repaired survivor set is every ingested id whose
     * label is ITSELF — non-canonical members drop, ids that never
     * appeared in a pair are kept by construction (absent from the
@@ -1646,498 +1653,596 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** EXACT all-pairs similarity join via prefix filtering (the
-    * AllPairs/PPJoin family, Bayardo et al., WWW 2007): every pair of
-    * documents with token-set Jaccard ≥ `threshold` is returned —
-    * zero false negatives, the guarantee MinHash [[lshPairs]] trades away
-    * for speed. This is the join a DEDUP CERTIFICATION pass runs
-    * (prove the shipped corpus has no surviving pair above t);
-    * banded LSH remains the right candidate generator when a
-    * bounded miss rate is acceptable.
+  // ------------------------------------------------ exact certification
+
+  /** An EXACT similarity metric — the join a dedup CERTIFICATION pass
+    * runs (prove the shipped corpus has no surviving pair above τ):
+    * every pair at or above `threshold` is returned, zero false
+    * negatives, the guarantee banded LSH ([[LshFamily]]) trades away
+    * for speed. One implementation per role serves both values:
+    * [[exactJoin]] (corpus × corpus), [[exactJoinAgainst]] (batch ×
+    * corpus, in memory), [[certBatchPairs]] (one batch's certified
+    * pairs) and the persisted store — [[certIndexWrite]],
+    * [[certIndexAppend]], [[certIndexProbe]]. Each value states its
+    * own parts once: the per-document rows, the blocking key, the
+    * verify, the overflow guard and the store manifest.
     *
-    * Candidate generation: tokens get a GLOBAL order (document
-    * frequency ASC, token — rarest first); a doc whose distinct-token
-    * set has size n indexes only its first n − ⌈t·n⌉ + 1 tokens in
-    * that order (its PREFIX). The prefix-filter lemma: two sets with
-    * Jaccard ≥ t must share at least one token inside both prefixes,
-    * so the equi-join on prefix tokens loses nothing. The PPJoin
-    * length filter (t·|A| ≤ |B| ≤ |A|/t) rides the join; exact
-    * verification is the codegen'd sorted-hash merge
-    * ([[ngramJaccardVerify]]'s scorer). The ⌈·⌉ computes with a 1e-9
-    * slack so binary rounding of t·n can only LENGTHEN a prefix
-    * (more candidates — safe), never shorten it (false negatives).
+    * Exact forms never depend on their blocking choices (token order,
+    * pivots) for the RESULT — only candidate counts do. Degenerate
+    * rows (zero-token documents, zero-norm vectors) certify nothing
+    * and are excluded by every form.
     *
-    * Scale shape: prefixes hold the RAREST tokens, so candidate
-    * buckets are small by construction on natural text — that
-    * df-ascending order is the entire trick; cost is
-    * O(Σ prefix-bucket²), not O(docs²). A pathological token (a
-    * boilerplate string shared corpus-wide that survives into
-    * prefixes) still explodes a bucket, so `maxBucket` arms an
-    * in-plan tripwire (raise_error naming the token, the
-    * sequenceByKey discipline) — it FAILS rather than silently
-    * dropping candidates, because dropping would break the exactness
-    * contract this operator exists to provide.
-    *
-    * Degenerate docs: documents with ZERO tokens certify nothing and
-    * are excluded at EVERY shingle granularity — one convention for
-    * all k, so certification counts never shift with `shingleK` on
-    * empty/whitespace docs (at k ≥ 2 the short-doc fallback shingle
-    * would otherwise pair two empty docs at jaccard 1.0 while k = 1
-    * dropped them).
-    *
-    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥
-    *         threshold (filtered unrounded, displayed at 4dp)
-    */
-  def exactJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                       threshold: Double = 0.5, shingleK: Int = 3,
-                       maxBucket: Int = 100000): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1]: $threshold")
-    require(maxBucket >= 1, s"maxBucket must be >= 1: $maxBucket")
-    import org.apache.spark.sql.expressions.Window
-    // the shingle granularity is the selectivity dial: unigram sets
-    // (k=1) treat every same-vocabulary template as a near-dup;
-    // k-shingles demand shared WORD ORDER (the q20/q21 convention)
-    val shingleCol =
-      if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
-      else shingles(col(textCol), shingleK)
-    val sets = Par.widen(df, col(idCol))
-      .filter(size(TextFunctions.tokens(col(textCol))) > 0)
-      .select(col(idCol).as("id"), shingleCol.as("_s"))
-      .filter(size(col("_s")) > 0)
-      .repartition(col("id"))
-    val toks = sets.select(col("id"), size(col("_s")).cast("long").as("_n"),
-      explode(col("_s")).as("_t"))
-    val dfreq = toks.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-    def neededOverlap(n: Column) =
-      ceil(n.cast("double") * lit(threshold) - lit(1e-9))
-    val wDoc = Window.partitionBy(col("id")).orderBy(col("_df"), col("_t"))
-    val prefix = toks.join(dfreq, Seq("_t"))
-      .withColumn("_pos", row_number().over(wDoc))
-      .filter(col("_pos") <= col("_n") - neededOverlap(col("_n")) + 1)
-    // bucket tripwire: counted on the (small) prefix table, evaluated
-    // in-plan on the carried length column — zero extra actions
-    val guarded = prefix
-      .withColumn("_bkt", count(lit(1)).over(Window.partitionBy(col("_t"))))
-      .withColumn("_gn",
-        when(col("_bkt") > maxBucket, raise_error(concat(
-          lit("exactJaccardJoin prefix bucket overflow: token '"),
-          col("_t"),
-          lit("' appears in "), col("_bkt").cast("string"),
-          lit(s" prefixes (> $maxBucket) — quadratic candidate blow-up; " +
-            "raise maxBucket only with the cost understood, or strip the " +
-            "offending boilerplate token upstream"))).cast("long"))
-          .otherwise(col("_n")))
-    val ca = guarded.select(col("id").as("id_a"), col("_t"),
-      col("_gn").as("_na"))
-    val cb = guarded.select(col("id").as("id_b"), col("_t"),
-      col("_gn").as("_nb"))
-    val cand = ca.join(cb, Seq("_t"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(col("_nb") >= neededOverlap(col("_na")) &&
-        col("_na") >= neededOverlap(col("_nb")))
-      .select("id_a", "id_b").distinct()
-    ngramJaccardVerify(df, cand, idCol, textCol, k = shingleK,
-      threshold = threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("jaccard"), 4).as("jaccard"))
+    * A batch×corpus form (store probe or in-memory) is one
+    * candidate+verify core ([[CertMetric.cross]]) over a
+    * [[CertSource]]: the store's partition-pruned reads, or in-memory
+    * parts of the corpus frame. An over-full blocking key (a
+    * boilerplate token in `maxBucket`+ prefixes, a mass-collapsed
+    * `maxCell`+ band cell) FAILS loudly, never drops candidates —
+    * dropping would break the exactness contract: in-plan for the
+    * in-memory forms, driver-side from the persisted stats for a
+    * store probe (so a poisoned store refuses every probe, touched
+    * or not). */
+  sealed trait CertMetric extends Product with Serializable {
+    def threshold: Double
+    /** The ledger/labels metric name and the pair score column. */
+    private[graft] def name: String
+    private[graft] def score: String
+    private[operators] def store: StoreFamily
+    /** The key substore and the blocking-key columns its stats
+      * substore counts (`cnt` per key). */
+    private[operators] def keySub: String
+    private[operators] def key: Seq[String]
+    /** maxBucket / maxCell: the most rows one blocking key may hold. */
+    private[operators] def limit: Long
+    /** At most this many distinct inner-partition values per substore
+      * (the bound of a probe's pruning read). */
+    private[operators] def partCap: Int
+    /** raise_error naming an over-full key; `what` qualifies the kind. */
+    private[operators] def overflow(what: String, key: Seq[Column],
+                                    n: Column): Column
+    /** `rows` plus `_cn`, its key's row count. */
+    private[operators] def counted(rows: DataFrame,
+                                   key: Seq[String]): DataFrame
+    /** (id, value) rows that can certify anything (degenerate dropped). */
+    private[operators] def docs(df: DataFrame, idCol: String,
+                                valueCol: String): DataFrame
+    /** The blocking geometry `who` picks from a corpus (cosine: its
+      * pivots, at least two; Jaccard: none). */
+    private[operators] def blocking(corpus: DataFrame, idCol: String,
+                                    valueCol: String, who: String): Pivots
+    private[graft] def meta(geo: Pivots): IndexMeta
+    /** The manifest a sink writes at activation; None when the geometry
+      * derives from data (cosine pivots freeze from the first batch). */
+    private[graft] def fixedMeta: Option[IndexMeta]
+    /** Manifest check; returns the store's frozen geometry. */
+    private[operators] def frozen(spark: SparkSession, path: String): Pivots
+    /** One slice's substore frames, keyed by subdir (`pin` marks the
+      * frames several substores share). */
+    private[operators] def parts(df: DataFrame, idCol: String,
+                                 valueCol: String, geo: Pivots,
+                                 pin: DataFrame => DataFrame): Map[String, DataFrame]
+    /** A substore frame's on-disk layout. */
+    private[operators] def laidOut(sub: String, df: DataFrame): DataFrame = df
+    private[operators] def selfJoin(df: DataFrame, idCol: String,
+                                    valueCol: String): DataFrame
+    /** (id_corpus, id_batch, score): the batch×corpus candidates and
+      * their exact verify. */
+    private[operators] def cross(batch: DataFrame, idCol: String,
+                                 valueCol: String, geo: Pivots,
+                                 src: CertSource): DataFrame
   }
 
-  /** EXACT all-pairs cosine join — [[exactJaccardJoin]]'s twin on the
-    * EMBEDDING side: every pair of vectors with cosine ≥ `threshold`
-    * is returned, zero false negatives. This is the join a SEMANTIC
-    * dedup certification pass runs (prove the shipped corpus has no
-    * surviving pair above τ — the guarantee [[semanticDedup]]'s
-    * cell-blocked scoring and [[lshPairs]]' SRP banding
-    * trade away for speed; q200 measures their recall against
-    * sampled queries, this operator CERTIFIES the whole corpus).
+  private[graft] type Pivots = Seq[Array[Float]]
+
+  /** Token-set Jaccard over word `shingleK`-shingles (k = 1: the
+    * tokens; larger k demands shared word ORDER, the q20/q21
+    * convention).
     *
-    * Blocking is pivot-angle banding (the generalized-hyperplane /
-    * pivot bound of the metric-space join literature — Jacox & Samet
-    * TODS 2008, MRSimJoin ICDE 2012 — specialized to the sphere):
-    * `nPivots` deterministic pivots come from the md5 rule
-    * ([[graft.operators.Similarity.pickCentroids]] — blocking choice
-    * never affects the RESULT, which is what the oracle replays);
-    * every vector gets, per pivot, the band
+    * Candidates come from prefix filtering (the AllPairs/PPJoin
+    * family, Bayardo et al., WWW 2007): a set of n shingles under a
+    * total order keeps its first n − ⌈t·n⌉ + 1 as its PREFIX. Two sets
+    * with Jaccard ≥ t share a shingle inside both prefixes, so the
+    * self-join's equi-join on prefix keys loses nothing; the order is
+    * document frequency ascending (rarest first) — purely the
+    * bucket-size optimization, since prefixes of natural text then
+    * hold rare shingles (cost O(Σ prefix-bucket²), not O(docs²)). The
+    * ⌈·⌉ computes with a 1e-9 slack so binary rounding of t·n can only
+    * LENGTHEN a prefix (more candidates — safe), never shorten it.
+    *
+    * Batch×corpus is ONE-SIDED: corpus prefixes (under the corpus
+    * slice's own df order) against the batch's FULL sets. For a
+    * qualifying pair |A∩B| ≥ ⌈t·|A|⌉ while A's non-prefix suffix holds
+    * only ⌈t·|A|⌉ − 1 shingles, so some shared shingle lands in A's
+    * prefix whatever total order cut it (the R×S corollary) — which is
+    * why a store's epochs may each cut under their own slice's order
+    * and stay exact. The PPJoin length filter (t·|A| ≤ |B| ≤ |A|/t)
+    * rides every candidate join. Keys are xxhash64 shingle hashes: a
+    * collision only ADDS a candidate; the verify (a linear merge of
+    * sorted shingle-hash arrays) alone decides membership.
+    *
+    * Store layout (`cert_text`, manifest at the root):
+    *  - `postings/`: prefix rows `(pb, pt, id, n)`, inner-partitioned
+    *    by `pb = pmod(pt, buckets)` so a probe's batch buckets become
+    *    a PARQUET PARTITION FILTER (the q151 `term IN (…)` shape), and
+    *    sorted by `pt` within files for row-group skipping;
+    *  - `stats/`: `(pb, pt, cnt)` prefix-bucket-count partials,
+    *    sum-folded — the `maxBucket` guard reads these, one row per
+    *    distinct prefix token, never the postings;
+    *  - `fps/`: `(ib, id, n, hset)` fingerprint rows, the verify side,
+    *    inner-partitioned by `ib = pmod(xxhash64(id), buckets)` so the
+    *    verify scan prunes to the candidates' id buckets.
+    *  No substore carries text: a probe never re-reads, re-tokenizes
+    *  or re-df-counts the corpus.
+    *
+    * @return pairs scored `jaccard`: filtered unrounded, displayed at 4dp */
+  final case class Jaccard(threshold: Double, shingleK: Int = 1,
+                           maxBucket: Int = 100000, buckets: Int = 64)
+      extends CertMetric {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1]: $threshold")
+    require(shingleK >= 1, s"shingleK must be >= 1: $shingleK")
+    require(maxBucket >= 1, s"maxBucket must be >= 1: $maxBucket")
+    require(buckets >= 1, s"buckets must be >= 1: $buckets")
+    private[graft] def name = "jaccard"
+    private[graft] def score = "jaccard"
+    private[operators] def store = certTextStore
+    private[operators] def keySub = CertTextPostings
+    private[operators] def key = Seq("pt")
+    private[operators] def limit = maxBucket.toLong
+    private[operators] def partCap = buckets
+
+    private[operators] def overflow(what: String, key: Seq[Column], n: Column) =
+      raise_error(concat(
+        lit(s"exact Jaccard certification ${what}prefix bucket overflow: " +
+          "shingle hash "), key.head.cast("string"),
+        lit(" appears in "), n.cast("string"),
+        lit(s" prefixes (> $maxBucket) — quadratic candidate blow-up; " +
+          "strip the boilerplate token upstream or raise maxBucket with " +
+          "the cost understood")))
+
+    /** A count window: the candidate join on the same key colocates the
+      * bucket anyway, so the count rides that exchange. */
+    private[operators] def counted(rows: DataFrame, key: Seq[String]) =
+      rows.withColumn("_cn", count(lit(1)).over(
+        Window.partitionBy(key.map(col): _*)))
+
+    /** (id, _s): each document's distinct shingle set — THE front end.
+      * Zero-token documents drop at every k, so certification counts
+      * never shift with `shingleK` (the k ≥ 2 short-document fallback
+      * shingle would otherwise pair two empty documents at 1.0). */
+    private[operators] def docs(df: DataFrame, idCol: String, textCol: String) =
+      df.filter(size(TextFunctions.tokens(col(textCol))) > 0)
+        .select(col(idCol).as("id"),
+          (if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
+           else shingles(col(textCol), shingleK)).as("_s"))
+        .filter(size(col("_s")) > 0)
+
+    private def sets(df: DataFrame, idCol: String, textCol: String) =
+      docs(df, idCol, textCol).repartition(col("id"))
+
+    private def needed(n: Column) =
+      ceil(n.cast("double") * lit(threshold) - lit(1e-9))
+
+    private def lengthOk(na: Column, nb: Column) =
+      nb >= needed(na) && na >= needed(nb)
+
+    /** (id, n, pt): each set's prefix under the df order of `sets`. */
+    private def prefix(sets: DataFrame): DataFrame = {
+      val toks = sets.select(col("id"), size(col("_s")).cast("long").as("n"),
+        explode(col("_s")).as("_t"))
+      val dfreq = toks.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
+      toks.join(dfreq, Seq("_t"))
+        .withColumn("_pos", row_number().over(
+          Window.partitionBy(col("id")).orderBy(col("_df"), col("_t"))))
+        .filter(col("_pos") <= col("n") - needed(col("n")) + 1)
+        .select(col("id"), col("n"), xxhash64(col("_t")).as("pt"))
+    }
+
+    private def hashed(sets: DataFrame) =
+      sets.select(col("id"), Sketches.hashed_token_set(col("_s")).as("hset"))
+
+    /** The exact verify of (a, b) candidates from (id, hset) rows. */
+    private def verify(cand: DataFrame, a: String, b: String,
+                       ha: DataFrame, hb: DataFrame): DataFrame =
+      cand.join(ha.select(col("id").as(a), col("hset").as("_ha")), Seq(a))
+        .join(hb.select(col("id").as(b), col("hset").as("_hb")), Seq(b))
+        .select(col(a), col(b),
+          Sketches.jaccard_sorted_long(col("_ha"), col("_hb")).as("_j"))
+        .filter(col("_j") >= threshold)
+        .select(col(a), col(b), round(col("_j"), 4).as("jaccard"))
+
+    private[operators] def blocking(corpus: DataFrame, idCol: String,
+                                    textCol: String, who: String) = Nil
+    private[graft] def meta(geo: Pivots) =
+      IndexMeta(certTextStore.name, "threshold" -> f"$threshold%.4f",
+        "shingleK" -> shingleK, "maxBucket" -> maxBucket,
+        "buckets" -> buckets)
+    private[graft] def fixedMeta = Some(meta(Nil))
+    private[operators] def frozen(spark: SparkSession, path: String) = {
+      IndexMeta.check(spark, path, meta(Nil))
+      Nil
+    }
+
+    private def idBucket(id: Column) =
+      pmod(xxhash64(id), lit(buckets.toLong)).cast("int")
+    private def pb = pmod(col("pt"), lit(buckets.toLong)).cast("int").as("pb")
+
+    /** The sets and the prefix cut feed all three substores: pinned, so
+      * a write tokenizes and df-orders the slice once. */
+    private[operators] def parts(df: DataFrame, idCol: String, textCol: String,
+                                 geo: Pivots, pin: DataFrame => DataFrame) = {
+      val s = pin(sets(df, idCol, textCol))
+      val p = pin(prefix(s))
+      Map(
+        CertStats -> p.groupBy(pb, col("pt")).agg(count(lit(1)).as("cnt")),
+        CertTextPostings -> p.select(pb, col("pt"), col("id"), col("n")),
+        CertTextFps -> s.select(idBucket(col("id")).as("ib"), col("id"),
+          size(col("_s")).cast("long").as("n"),
+          Sketches.hashed_token_set(col("_s")).as("hset")))
+    }
+
+    /** One exchange on the bucket key, so each `pb` directory is one
+      * task's file (not tasks × buckets small files). */
+    override private[operators] def laidOut(sub: String, df: DataFrame) =
+      if (sub != CertTextPostings) df
+      else df.repartition(col("pb")).sortWithinPartitions(col("pb"), col("pt"))
+
+    private[operators] def selfJoin(df: DataFrame, idCol: String,
+                                    textCol: String): DataFrame = {
+      // widened: the tokenizing runs at full width on a narrow scan
+      val s = sets(Par.widen(df, col(idCol)), idCol, textCol)
+      val p = guarded(this, prefix(s), key, "")
+      val cand = p.select(col("id").as("id_a"), col("pt"), col("n").as("_na"))
+        .join(p.select(col("id").as("id_b"), col("pt"), col("n").as("_nb")),
+          Seq("pt"))
+        .filter(col("id_a") < col("id_b") && lengthOk(col("_na"), col("_nb")))
+        .select("id_a", "id_b").distinct()
+      verify(cand, "id_a", "id_b", hashed(s), hashed(s))
+    }
+
+    /** Candidates are pinned when the source pins: a store probe then
+      * prunes its verify scan to their id buckets. */
+    private[operators] def cross(batch: DataFrame, idCol: String,
+                                 textCol: String, geo: Pivots,
+                                 src: CertSource): DataFrame = {
+      val b = src.pin(sets(batch, idCol, textCol))
+      val bToks = b.select(col("id").as("id_batch"),
+          size(col("_s")).cast("long").as("_nb"), explode(col("_s")).as("_t"))
+        .select(col("id_batch"), col("_nb"), xxhash64(col("_t")).as("pt"))
+      val cand = src.pin(src.read(CertTextPostings, bToks.select(pb))
+        .select(col("pt"), col("id").as("id_corpus"), col("n").as("_nc"))
+        .join(bToks, Seq("pt"))
+        .filter(lengthOk(col("_nc"), col("_nb")))
+        .select("id_corpus", "id_batch").distinct())
+      verify(cand, "id_corpus", "id_batch",
+        src.read(CertTextFps, cand.select(idBucket(col("id_corpus")).as("ib"))),
+        hashed(b))
+    }
+  }
+
+  /** Cosine similarity of embedding vectors, blocked by pivot-angle
+    * bands (the generalized-hyperplane / pivot bound of the
+    * metric-space join literature — Jacox & Samet TODS 2008,
+    * MRSimJoin ICDE 2012 — specialized to the sphere): up to
+    * `nPivots` deterministic pivots from the md5 rule
+    * ([[graft.operators.Similarity.pickCentroids]] over the nonzero-norm
+    * rows — the blocking choice never affects the RESULT, which is
+    * what the oracle replays), and per pivot the band
     * ⌊angle(vec, pivot) / θ⌋ with θ = acos(threshold) + 1e-3. The
     * spherical triangle inequality |angle(x,p) − angle(y,p)| ≤
-    * angle(x,y) ≤ acos(threshold) < θ means a qualifying pair's
-    * bands differ by AT MOST 1 on every pivot — the 1e-3 widening
-    * absorbs float noise in the band boundary, turning "≤" into "<"
-    * (a wider band only ever ADDS candidates: safe). Each vector
-    * replicates to {b, b+1} on the first two pivots (4×, fixed);
-    * a qualifying pair then meets at EXACTLY the canonical cell
-    * (max(b0ₐ,b0ᵦ), max(b1ₐ,b1ᵦ)) — one equi-join match per pair,
-    * no post-hoc distinct. Remaining pivots prune as in-plan
-    * |Δband| ≤ 1 integer checks before the exact cosine verify,
-    * which alone decides membership (round to `roundTo` dp — the
-    * q34 engine/oracle convention — then ≥ threshold).
+    * angle(x,y) ≤ acos(threshold) < θ puts a qualifying pair's bands
+    * at most 1 apart on EVERY pivot (the 1e-3 widening absorbs float
+    * noise; a wider band only ever adds candidates). The first two
+    * pivots key the join, the rest prune as in-plan |Δband| ≤ 1
+    * checks before the exact verify — round(cos, `roundTo`) ≥
+    * threshold, the q34 engine/oracle convention — which alone
+    * decides membership. Pruning power is θ-bound (π/θ bands per
+    * pivot: τ = 0.9 blocks the sphere into ~7² cells, τ ≤ 0.5
+    * degrades toward all-pairs — inherent to EXACT joins at wide
+    * angles).
     *
-    * Pruning power is θ-bound: π/θ bands per pivot, so a τ = 0.9
-    * certification (θ ≈ 0.45) blocks the sphere into ~7² cells per
-    * key pair while τ ≤ 0.5 (θ > 1 rad) degrades toward all-pairs —
-    * inherent to EXACT joins at wide angles, not a defect; the
-    * certification thresholds that matter sit high. Cost is
-    * O(Σ cell²), and a mass-collapsed cell (every vector at the same
-    * angle to both blocking pivots — the concentration shape of very
-    * high dimensions) is handled by ADAPTIVE RE-BLOCKING: pairs whose
-    * canonical meet cell exceeds `maxCell` are re-joined one level
-    * deeper, on pivots 2/3 as extra {b, b+1}-replicated key columns
-    * (exactness preserved — more pivots only ever NARROW candidates,
-    * and the deeper canonical cell is still a single meet). Only the
-    * overflow cells' rows pay the extra 4× replication; healthy cells
-    * never notice. A cell that STILL overflows at the deeper key
-    * (mass-collapsed on all four pivots, or nPivots = 2 with no
-    * spare pivots to split on) trips the in-plan `maxCell`
-    * raise_error backstop (groupBy+join-back on the cell key, NOT a
-    * window — the q205 hot-key lesson) rather than silently
-    * degrading: failing is the final contract for a certification
-    * op, but it now takes a collapse the re-blocking cannot spread.
+    * Self-join: every vector replicates to {b, b+1} on the two key
+    * pivots (4×), so a qualifying pair meets at EXACTLY the canonical
+    * cell (max(b0ₐ,b0ᵦ), max(b1ₐ,b1ᵦ)) — one match per pair, no
+    * distinct. A cell over `maxCell` (every vector at one angle to
+    * both key pivots — the concentration shape of high dimensions) is
+    * RE-BLOCKED: its rows key one level deeper on pivots 2/3 as extra
+    * {b, b+1} keys (exact — more pivots only narrow candidates, and the
+    * deeper canonical cell is still a single meet); only the overflow
+    * cells' rows pay the extra 4×. A cell that still
+    * overflows (collapsed on all four pivots, or no spare pivot) trips
+    * the guard. Fewer than two bandable vectors hold no pair: the
+    * self-join is empty.
     *
-    * Degenerate vectors: zero-norm vectors have no defined angle and
-    * certify nothing — excluded, the [[exactJaccardJoin]]
-    * empty-doc convention.
+    * Batch×corpus: the CORPUS keys by its own (b0, b1) band cell,
+    * unreplicated; only the batch replicates, to the 3×3
+    * {b−1, b, b+1}² neighborhood (9×, of a batch), so every
+    * |Δband| ≤ 1 pair meets at the corpus row's cell exactly once and
+    * the corpus never explodes. It needs a corpus of at least two
+    * bandable vectors to block at all.
     *
-    * @return (id_a, id_b, cos) with id_a < id_b, round(cos, roundTo)
-    *         ≥ threshold */
-  def exactCosineJoin(df: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double, nPivots: Int = 4,
-                      maxCell: Long = 100000L,
-                      roundTo: Int = 4): DataFrame = {
+    * Store layout (`cert_vec`): `bands/` — `(id, vec, b0..)` rows,
+    * inner-partitioned by the (b0, b1) key, so a probe reads only the
+    * ≤ 9·|batch cells| partitions it can pair with — and `stats/` —
+    * `(b0, b1, cnt)` cell-count partials, sum-folded and geometry-
+    * bounded. The pivots are FROZEN into the manifest at bootstrap:
+    * every epoch bands under them byte-identically and a probe reads
+    * them back instead of re-picking (a gradually staler pivot set
+    * costs candidates, never pairs).
+    *
+    * @return pairs scored `cos`: round(cos, roundTo) ≥ threshold */
+  final case class Cosine(threshold: Double, nPivots: Int = 4,
+                          maxCell: Long = 100000L, roundTo: Int = 4)
+      extends CertMetric {
     require(threshold > -1.0 && threshold < 1.0,
       s"threshold must be in (-1, 1): $threshold")
     require(nPivots >= 2 && nPivots <= 16,
       s"nPivots must be in [2, 16] (two block the join, the rest prefilter): $nPivots")
-    // band width covers the ROUNDED contract, not just true cos ≥ τ:
-    // the output filter admits any pair with round(cos, roundTo) ≥ τ,
-    // i.e. true cos ≥ τ − 0.5·10^-roundTo — the bands must too, or
-    // the borderline pairs the brute-force oracle returns would be
-    // exactly the ones the blocking loses
-    val theta = math.acos(math.max(-1.0,
+    private[graft] def name = "cosine"
+    private[graft] def score = "cos"
+    private[operators] def store = certVecStore
+    private[operators] def keySub = CertVecBands
+    private[operators] def key = Seq("b0", "b1")
+    private[operators] def limit = maxCell
+
+    /** The band width covers the ROUNDED contract: the verify admits
+      * round(cos, roundTo) ≥ τ, i.e. true cos ≥ τ − 0.5·10^-roundTo,
+      * and the bands must too, or the borderline pairs the brute-force
+      * oracle returns would be exactly the ones the blocking loses. */
+    private val theta = math.acos(math.max(-1.0,
       threshold - 0.5 * math.pow(10, -roundTo))) + 1e-3
-    // bounded metadata read: the pivot VECTORS become plan literals,
-    // so band assignment is pure codegen'd row math — the corpus
-    // never shuffles (or broadcasts) for it
-    // zero-norm rows are excluded from the pick as from banding below,
-    // so the degrade message counts exactly the bandable population
-    val pivots = BoundedRead.boundedDriverRead(
-      Sim.pickCentroids(
-        df.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0),
-        idCol, vecCol, nPivots).orderBy("cell"),
-      nPivots, "exactCosineJoin pivots",
-      s"pickCentroids emits at most nPivots = $nPivots rows")
-      .map(_.getSeq[Float](1).toArray)
-    // a corpus smaller than nPivots yields fewer pivots — degrade to
-    // what exists (more pivots only ever NARROW candidates, so fewer
-    // is still exact; < 2 cannot block the join at all)
-    val nP = pivots.length
-    require(nP >= 2,
-      s"exactCosineJoin needs >= 2 pivot vectors to block the join; " +
-        s"the corpus supplied only $nP nonzero-norm vectors — a corpus " +
-        "this small certifies faster by brute force (crossJoin + filter)")
-    def band(p: Array[Float]) =
-      floor(acos(greatest(lit(-1.0), least(lit(1.0),
-        Sim.cosine(col("_v"), typedLit(p))))) / lit(theta)).cast("int")
-    val bandCols = pivots.zipWithIndex.map { case (p, i) => band(p).as(s"_b$i") }
-    // widen the scan before the per-row band math: every self-join
-    // branch below re-derives from this lineage, so a narrow scan
-    // would run the acos banding serially once per branch
-    val pts = Par.widen(df, col(idCol))
-      .select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      // cosine(v, v) is 1 for any nonzero vector and 0 (the engine's
-      // zero-denominator convention) for a zero-norm one — the
-      // degenerate-vector exclusion as one codegen'd predicate
-      .filter(Sim.cosine(col("_v"), col("_v")) > 0.0)
-      .select(col("_id") +: col("_v") +: bandCols: _*)
-    val rep = pts
-      .withColumn("_k0", explode(array(col("_b0"), col("_b0") + 1)))
-      .withColumn("_k1", explode(array(col("_b1"), col("_b1") + 1)))
-    // cell counts via groupBy (map-side partials crush a hot cell; a
-    // window could not), joined back on the key ints. Cell COUNT is
-    // θ-bounded (≤ (π/θ + 2)²) — the count table broadcasts whatever
-    // the corpus size.
-    val sizes = broadcast(rep.groupBy(col("_k0"), col("_k1"))
-      .agg(count(lit(1)).as("_cn")))
-    val flagged = rep.join(sizes, Seq("_k0", "_k1"))
-    // the canonical-meet self-join over one replicated key set: each
-    // qualifying pair joins exactly once, at the cell where every key
-    // column equals the pairwise band max. `canonical` holds the key
-    // indices the join equates (and therefore implies |Δband| ≤ 1
-    // for); every OTHER pivot prunes as an explicit |Δ| ≤ 1 check.
-    def pairJoin(side: DataFrame, key: Seq[String],
-                 canonical: Seq[Int]): DataFrame = {
-      val checks = (2 until nP).filterNot(canonical.contains).map(i =>
-        abs(col(s"_b$i") - col(s"_xb$i")) <= 1)
-      val rightCols = key.map(col) ++ Seq(
-        col("_id").as("_xid"), col("_v").as("_xv"),
-        col("_g").as("_xg")) ++
-        (0 until nP).map(i => col(s"_b$i").as(s"_xb$i"))
-      side.join(side.select(rightCols: _*), key)
-        .filter(col("_id") < col("_xid"))
-        .filter(canonical.map(i =>
-          col(s"_k$i") === greatest(col(s"_b$i"), col(s"_xb$i")))
-          .foldLeft(lit(true))(_ && _))
-        .filter(checks.foldLeft(lit(true))(_ && _))
-        // the guard columns are load-bearing (always-true on healthy
-        // cells): column pruning must not drop the raise_error branch
-        .filter(col("_g") > 0L && col("_xg") > 0L)
-        .select(col("_id").as("id_a"), col("_xid").as("id_b"),
-          round(Sim.cosine(col("_v"), col("_xv")), roundTo).as("cos"))
+
+    /** Bands lie in [0, ⌈π/θ⌉], so a batch's 3×3 neighborhood spans
+      * at most (⌈π/θ⌉ + 3)² cells, whatever the batch or corpus size. */
+    private[operators] def partCap = {
+      val maxBands = (math.Pi / theta).toInt + 3
+      maxBands * maxBands
+    }
+
+    private[operators] def overflow(what: String, key: Seq[Column], n: Column) =
+      raise_error(concat((Seq(
+        lit(s"exact cosine certification ${what}cell overflow: band cell (")) ++
+        key.flatMap(k => Seq(k.cast("string"), lit(","))).init ++ Seq(
+        lit(") holds "), n.cast("string"),
+        lit(s" vectors (> $maxCell) — quadratic pair blow-up; certify at " +
+          "a tighter threshold (more, narrower bands) or raise maxCell " +
+          "with the O(cell²) cost understood"))): _*))
+
+    /** Cell counts by groupBy (map-side partials crush a hot cell; a
+      * window could not — the q205 hot-key lesson), joined back: the
+      * cell COUNT is θ-bounded, so the count table broadcasts whatever
+      * the corpus size. */
+    private[operators] def counted(rows: DataFrame, key: Seq[String]) =
+      rows.join(broadcast(rows.groupBy(key.map(col): _*)
+        .agg(count(lit(1)).as("_cn"))), key)
+
+    /** (id, vec) nonzero-norm rows: cosine(v, v) is 1 for any nonzero
+      * vector and 0 (the engine's zero-denominator convention) for a
+      * zero-norm one, which has no angle to band. */
+    private[operators] def docs(df: DataFrame, idCol: String, vecCol: String) =
+      df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .filter(Sim.cosine(col("vec"), col("vec")) > 0.0)
+
+    /** Up to `nPivots` pivots of the bandable rows — a bounded metadata
+      * read: the pivot VECTORS become plan literals, so banding is
+      * codegen'd row math and the corpus never shuffles for it. */
+    private def pick(corpus: DataFrame, idCol: String, vecCol: String): Pivots =
+      BoundedRead.boundedDriverRead(
+        Sim.pickCentroids(docs(corpus, idCol, vecCol), "id", "vec", nPivots)
+          .orderBy("cell"),
+        nPivots, "certification pivots",
+        s"pickCentroids emits at most nPivots = $nPivots rows")
+        .map(_.getSeq[Float](1).toArray).toIndexedSeq
+
+    /** Fewer pivots than asked only drop prefilters (still exact); fewer
+      * than two cannot key the join. */
+    private[operators] def blocking(corpus: DataFrame, idCol: String,
+                                    vecCol: String, who: String) = {
+      val pivots = pick(corpus, idCol, vecCol)
+      require(pivots.length >= 2,
+        s"$who needs >= 2 pivot vectors to block the join; the corpus " +
+          s"supplied only ${pivots.length} nonzero-norm vectors — a corpus " +
+          "this small certifies faster by brute force (crossJoin + filter), " +
+          "and a store is bootstrapped with certIndexWrite over a real corpus")
+      pivots
+    }
+
+    private[graft] def meta(pivots: Pivots) =
+      IndexMeta(certVecStore.name, "threshold" -> f"$threshold%.4f",
+        "roundTo" -> roundTo, "maxCell" -> maxCell,
+        "nPivots" -> pivots.length,
+        "pivots" -> pivots.map(_.mkString(",")).mkString(";"))
+
+    private[graft] def fixedMeta = None
+
+    /** Scalar parameters must match exactly; the pivots are read back
+      * (`Float.toString`/`toFloat` round-trips bit-identically) — frozen
+      * at bootstrap, never the caller's to supply. */
+    private[operators] def frozen(spark: SparkSession, path: String) = {
+      val stored = IndexMeta.read(spark, path).getOrElse(
+        throw new IllegalStateException(
+          s"cosine certification store at $path has no _GRAFT_META " +
+            "manifest — bootstrap it with certIndexWrite"))
+      require(stored.family == certVecStore.name,
+        s"index family mismatch at $path: stored '${stored.family}', " +
+          s"probe expects '${certVecStore.name}' — wrong index path?")
+      val pivots = stored.params.getOrElse("pivots", sys.error(
+        s"manifest at $path records no frozen pivots — not a " +
+          "certIndexWrite store"))
+        .split(";").map(_.split(",").map(_.toFloat)).toIndexedSeq
+      IndexMeta.check(spark, path, meta(pivots))
+      pivots
+    }
+
+    /** (id, vec, b0..b{p-1}): the one band rule of every form. */
+    private def banded(df: DataFrame, idCol: String, vecCol: String,
+                       pivots: Pivots): DataFrame = {
+      def band(p: Array[Float]) =
+        floor(acos(greatest(lit(-1.0), least(lit(1.0),
+          Sim.cosine(col("vec"), typedLit(p))))) / lit(theta)).cast("int")
+      docs(df, idCol, vecCol).select(col("id") +: col("vec") +:
+        pivots.zipWithIndex.map { case (p, i) => band(p).as(s"b$i") }: _*)
+    }
+
+    private def cos(a: Column, b: Column) = round(Sim.cosine(a, b), roundTo)
+
+    /** The banding runs once and feeds both substores. */
+    private[operators] def parts(df: DataFrame, idCol: String, vecCol: String,
+                                 pivots: Pivots, pin: DataFrame => DataFrame) = {
+      val bands = pin(banded(df, idCol, vecCol, pivots))
+      Map(CertStats -> bands.groupBy(col("b0"), col("b1"))
+          .agg(count(lit(1)).as("cnt")),
+        CertVecBands -> bands)
+    }
+
+    private[operators] def selfJoin(df: DataFrame, idCol: String,
+                                    vecCol: String): DataFrame = {
+      val pivots = pick(df, idCol, vecCol)
+      val nP = pivots.length
+      // widened before the band math: every branch below re-derives
+      // from this lineage
+      val pts = banded(Par.widen(df, col(idCol)), idCol, vecCol, pivots)
+      if (nP < 2) return pts.select(col("id").as("id_a"),
+        col("id").as("id_b"), lit(1.0).as("cos")).filter(lit(false))
+      val rep = pts
+        .withColumn("_k0", explode(array(col("b0"), col("b0") + 1)))
+        .withColumn("_k1", explode(array(col("b1"), col("b1") + 1)))
+      // pivots 2/3 (those that exist) are the re-blocking reserve: an
+      // over-full (b0, b1) cell's rows also replicate to {b, b+1} on
+      // them, every other row keys them at -1 (bands are ≥ 0). Both
+      // members of a pair share its meet cell, so they take the same
+      // branch and still meet exactly once, in one join.
+      val deep = Seq(2, 3).filter(_ < nP)
+      val keyed = if (deep.isEmpty) rep else deep.foldLeft(
+          counted(rep, Seq("_k0", "_k1"))) { case (d, i) =>
+        d.withColumn(s"_k$i", explode(when(col("_cn") > maxCell,
+          array(col(s"b$i"), col(s"b$i") + 1)).otherwise(array(lit(-1)))))
+      }.drop("_cn")
+      val key = (0 +: 1 +: deep).map(i => s"_k$i")
+      val side = guarded(this, keyed, key,
+        if (deep.isEmpty) "nPivots=2 " else "re-blocked ")
+      // the canonical meet: each key pivot equals the pair's band max;
+      // every pivot past the first two also prunes as |Δband| ≤ 1
+      def meet(i: Int) = col(s"_k$i") === greatest(col(s"b$i"), col(s"_xb$i"))
+      val conds = (col("id") < col("_xid")) +: meet(0) +: meet(1) +:
+        (deep.map(i => col(s"_k$i") === -1 || meet(i)) ++
+          (2 until nP).map(i => abs(col(s"b$i") - col(s"_xb$i")) <= 1))
+      side.join(side.select(key.map(col) ++ Seq(col("id").as("_xid"),
+          col("vec").as("_xv")) ++
+          (0 until nP).map(i => col(s"b$i").as(s"_xb$i")): _*), key)
+        .filter(conds.reduce(_ && _))
+        .select(col("id").as("id_a"), col("_xid").as("id_b"),
+          cos(col("vec"), col("_xv")).as("cos"))
         .filter(col("cos") >= threshold)
     }
-    def overflowError(key: Seq[String], what: String) = {
-      val cell = key.flatMap(k => Seq(col(k).cast("string"), lit(","))).init
-      raise_error(concat(
-        (Seq(lit(s"exactCosineJoin cell overflow: ${what}band cell (")) ++
-          cell ++ Seq(lit(") holds "), col("_cn").cast("string"),
-          lit(s" replicas (> $maxCell) — quadratic pair blow-up; raise " +
-            "maxCell only with the O(cell²) cost understood, or certify " +
-            "at a tighter threshold (more, narrower bands)"))): _*))
-    }
-    // pivots 2/3 (those that exist) are the re-blocking reserve
-    val deepPivots = Seq(2, 3).filter(_ < nP)
-    if (deepPivots.isEmpty) {
-      // nPivots = 2: nothing to split on — the tripwire is the guard
-      val guarded = flagged
-        .withColumn("_g", when(col("_cn") > maxCell,
-          overflowError(Seq("_k0", "_k1"), "nPivots=2 ").cast("long"))
-          .otherwise(col("_cn")))
-        .drop("_cn")
-      pairJoin(guarded, Seq("_k0", "_k1"), canonical = Seq(0, 1))
-    } else {
-      // pass A: pairs whose canonical meet cell is healthy — both
-      // members' replicas in an overflow cell route to pass B, so the
-      // split is BY PAIR (each pair has exactly one meet cell) and
-      // the union below is disjoint by construction
-      val healthy = flagged.filter(col("_cn") <= maxCell)
-        .withColumn("_g", col("_cn")).drop("_cn")
-      val passA = pairJoin(healthy, Seq("_k0", "_k1"),
-        canonical = Seq(0, 1))
-      // pass B: overflow cells re-block one level deeper — the same
-      // {b, b+1} replication on the reserve pivots, the same
-      // canonical-max single meet, now on 3-4 key ints
-      val ovRep = deepPivots.foldLeft(
-        flagged.filter(col("_cn") > maxCell).drop("_cn")) {
-        case (d, i) => d.withColumn(s"_k$i",
-          explode(array(col(s"_b$i"), col(s"_b$i") + 1)))
-      }
-      val deepKey = Seq("_k0", "_k1") ++ deepPivots.map(i => s"_k$i")
-      val deepSizes = broadcast(ovRep.groupBy(deepKey.map(col): _*)
-        .agg(count(lit(1)).as("_cn")))
-      val ovGuarded = ovRep.join(deepSizes, deepKey)
-        .withColumn("_g", when(col("_cn") > maxCell,
-          overflowError(deepKey, "re-blocked ").cast("long"))
-          .otherwise(col("_cn")))
-        .drop("_cn")
-      val passB = pairJoin(ovGuarded, deepKey,
-        canonical = Seq(0, 1) ++ deepPivots)
-      passA.unionByName(passB)
+
+    private[operators] def cross(batch: DataFrame, idCol: String,
+                                 vecCol: String, pivots: Pivots,
+                                 src: CertSource): DataFrame = {
+      val bRep = src.pin(banded(batch, idCol, vecCol, pivots))
+        .select(col("id").as("id_batch") +: col("vec").as("_vb") +:
+          pivots.indices.map(i => col(s"b$i").as(s"_b${i}b")): _*)
+        .withColumn("b0", explode(array(col("_b0b") - 1, col("_b0b"),
+          col("_b0b") + 1)))
+        .withColumn("b1", explode(array(col("_b1b") - 1, col("_b1b"),
+          col("_b1b") + 1)))
+      val corpus = src.read(CertVecBands, bRep.select("b0", "b1"))
+        .select(col("id").as("id_corpus") +: col("vec").as("_vc") +:
+          pivots.indices.map(i => col(s"b$i").cast("int").as(s"_b${i}c")): _*)
+        .withColumn("b0", col("_b0c")).withColumn("b1", col("_b1c"))
+      corpus.join(bRep, Seq("b0", "b1"))
+        .filter((2 until pivots.length).map(i =>
+          abs(col(s"_b${i}c") - col(s"_b${i}b")) <= 1)
+          .foldLeft(lit(true))(_ && _))
+        .select(col("id_corpus"), col("id_batch"),
+          cos(col("_vc"), col("_vb")).as("cos"))
+        .filter(col("cos") >= threshold)
     }
   }
 
-  /** Batch-vs-corpus EXACT Jaccard join — the INCREMENTAL form of
-    * [[exactJaccardJoin]]: every (corpus doc, batch doc) pair with
-    * token-set Jaccard ≥ `threshold`, zero false negatives. This is
-    * how certification stays affordable on a growing corpus: the
-    * corpus×corpus pass ([[exactJaccardJoin]]) runs once, then every
-    * arriving batch certifies R×S against the corpus — cost scales
-    * with the BATCH, not with corpus², and a clean result plus the
-    * batch's own self-join certifies the merged corpus by induction.
-    *
-    * Same prefix-filter machinery (Bayardo et al., WWW 2007): one
-    * global token order (document frequency ASC over corpus ∪ batch —
-    * the order only shapes bucket sizes, never the result), prefixes
-    * of length n − ⌈t·n⌉ + 1 on BOTH sides, candidates from the
-    * prefix-token equi-join, PPJoin length filter both ways, exact
-    * codegen'd sorted-hash verify. The corpus-side prefix buckets
-    * carry the `maxBucket` raise_error tripwire (groupBy+join-back on
-    * the token — the q205 hot-key shape, NOT a window: the corpus
-    * prefix table is corpus-scale). Degenerate (zero-token) docs are
-    * excluded on both sides at every `shingleK`, the
-    * [[exactJaccardJoin]] convention.
-    *
-    * PRODUCTION STEERING: this one-shot form re-reads, re-tokenizes
-    * and re-df-counts the CORPUS on every call — right for an
-    * acceptance query or a once-ever audit where the corpus frame is
-    * already in hand (q230's induction proof is exactly that shape),
-    * wrong for a recurring ingest loop. The production path is the
-    * persisted store: [[certTextIndexWrite]] fingerprints the corpus
-    * ONCE, [[certTextIndexProbe]] answers every later batch from
-    * `(id, n, hset)` + postings rows without touching corpus text,
-    * and [[certTextIndexAppend]] folds the batch in — O(batch) text
-    * work per batch, the contract this per-call re-scan cannot make.
-    *
-    * @return (id_corpus, id_batch, jaccard), jaccard ≥ threshold
-    *         (filtered unrounded, displayed at 4dp); a doc present on
-    *         both sides pairs with itself at 1.0 — that IS the
-    *         re-ingestion signal a certification exists to raise */
-  def exactJaccardJoinAgainst(corpus: DataFrame, batch: DataFrame,
-                              idCol: String, textCol: String,
-                              threshold: Double, shingleK: Int = 1,
-                              maxBucket: Int = 100000): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1]: $threshold")
-    require(shingleK >= 1, s"shingleK must be >= 1: $shingleK")
-    def sets(df: DataFrame) = {
-      val shingleCol =
-        if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
-        else shingles(col(textCol), shingleK)
-      Par.widen(df, col(idCol))
-        .filter(size(TextFunctions.tokens(col(textCol))) > 0)
-        .select(col(idCol).as("id"), shingleCol.as("_s"))
-        .filter(size(col("_s")) > 0)
-        .repartition(col("id"))
-    }
-    def toks(s: DataFrame) = s.select(col("id"),
-      size(col("_s")).cast("long").as("_n"), explode(col("_s")).as("_t"))
-    val cSets = sets(corpus); val bSets = sets(batch)
-    val cToks = toks(cSets); val bToks = toks(bSets)
-    // ONE global order for both sides' prefixes (the lemma needs a
-    // consistent total order, nothing more)
-    val dfreq = cToks.unionByName(bToks)
-      .groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-    def neededOverlap(n: Column) =
-      ceil(n.cast("double") * lit(threshold) - lit(1e-9))
-    def prefix(t: DataFrame) = {
-      val w = Window.partitionBy(col("id")).orderBy(col("_df"), col("_t"))
-      t.join(dfreq, Seq("_t"))
-        .withColumn("_pos", row_number().over(w))
-        .filter(col("_pos") <= col("_n") - neededOverlap(col("_n")) + 1)
-        .select(col("id"), col("_t"), col("_n"))
-    }
-    val cPrefix = prefix(cToks)
-    // corpus-side bucket tripwire via groupBy + equi-join back — the
-    // corpus prefix table is the big side, a count window over it
-    // would colocate a boilerplate token's whole bucket in one task
-    val buckets = cPrefix.groupBy(col("_t")).agg(count(lit(1)).as("_bkt"))
-    val cGuarded = cPrefix.join(buckets, Seq("_t"))
-      .withColumn("_gn",
-        when(col("_bkt") > maxBucket, raise_error(concat(
-          lit("exactJaccardJoinAgainst corpus prefix bucket overflow: " +
-            "token '"), col("_t"),
-          lit("' appears in "), col("_bkt").cast("string"),
-          lit(s" corpus prefixes (> $maxBucket) — quadratic candidate " +
-            "blow-up; strip the boilerplate token upstream or raise " +
-            "maxBucket with the cost understood"))).cast("long"))
-          .otherwise(col("_n")))
-    val cand = cGuarded.select(col("id").as("id_corpus"), col("_t"),
-        col("_gn").as("_nc"))
-      .join(prefix(bToks).select(col("id").as("id_batch"), col("_t"),
-        col("_n").as("_nb")), Seq("_t"))
-      .filter(col("_nb") >= neededOverlap(col("_nc")) &&
-        col("_nc") >= neededOverlap(col("_nb")))
-      .select("id_corpus", "id_batch").distinct()
-    // exact verify: hash each side's shingle set once, linear merge
-    val cHash = cSets.select(col("id").as("id_corpus"),
-      Sketches.hashed_token_set(col("_s")).as("_ha"))
-    val bHash = bSets.select(col("id").as("id_batch"),
-      Sketches.hashed_token_set(col("_s")).as("_hb"))
-    cand.join(cHash, Seq("id_corpus")).join(bHash, Seq("id_batch"))
-      .select(col("id_corpus"), col("id_batch"),
-        Sketches.jaccard_sorted_long(col("_ha"), col("_hb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_corpus"), col("id_batch"),
-        round(col("jaccard"), 4).as("jaccard"))
+  /** `when(n > limit)` raise the metric's overflow, else `n` (≥ 1). */
+  private def guard(m: CertMetric, what: String, key: Seq[Column],
+                    n: Column): Column =
+    when(n > m.limit, m.overflow(what, key, n).cast("long")).otherwise(n)
+
+  /** `rows` behind the in-plan overflow guard on `key` — a filter that
+    * is always true on healthy keys, load-bearing so column pruning
+    * cannot drop the raise_error branch. */
+  private def guarded(m: CertMetric, rows: DataFrame, key: Seq[String],
+                      what: String): DataFrame =
+    m.counted(rows, key)
+      .filter(guard(m, what, key.map(col), col("_cn")) > 0L).drop("_cn")
+
+  /** Where a batch×corpus cross reads the corpus. */
+  private[operators] trait CertSource {
+    /** Materialize a frame that feeds several reads (a store probe
+      * pins eagerly; in memory it stays lazy). */
+    def pin(df: DataFrame): DataFrame
+    /** Substore `sub`'s rows, restricted (a store: by partition filter)
+      * to the inner-partition values `keys` carries. */
+    def read(sub: String, keys: DataFrame): DataFrame
   }
 
-  /** Batch-vs-corpus EXACT cosine join — [[exactCosineJoin]]'s
-    * incremental form and [[exactJaccardJoinAgainst]]'s embedding
-    * twin: every (corpus vector, batch vector) pair with cosine ≥
-    * `threshold`, zero false negatives, at batch-proportional cost.
+  /** The in-memory corpus parts (key substore behind the in-plan guard). */
+  private final class MemorySource(parts: Map[String, DataFrame])
+      extends CertSource {
+    def pin(df: DataFrame): DataFrame = df
+    def read(sub: String, keys: DataFrame): DataFrame = parts(sub)
+  }
+
+  /** EXACT all-pairs join: every pair of `df` rows with `metric`'s
+    * similarity ≥ its threshold, zero false negatives (see
+    * [[CertMetric]], [[Jaccard]], [[Cosine]]).
     *
-    * Same pivot-angle bands (pivots from the CORPUS md5 rule — the
-    * blocking choice never affects the result). The asymmetry does
-    * the scaling work: the CORPUS keys by its own (b0, b1) bands,
-    * unreplicated — only the BATCH replicates, to the 3×3
-    * {b−1, b, b+1}² neighborhood (9×, trivial on a batch) — so every
-    * |Δband| ≤ 1 pair meets at the corpus row's own cell exactly
-    * once, no dedup pass, and the corpus never explodes. Remaining
-    * pivots prune as |Δband| ≤ 1 integer checks before the exact
-    * verify; the corpus-side cell tripwire (groupBy + join-back)
-    * fails loudly on mass collapse.
+    * @return (id_a, id_b, <score>) with id_a < id_b */
+  def exactJoin(df: DataFrame, idCol: String, valueCol: String,
+                metric: CertMetric): DataFrame =
+    metric.selfJoin(df, idCol, valueCol)
+
+  /** Batch-vs-corpus EXACT join: every (corpus row, batch row) pair at
+    * or above the threshold, zero false negatives — the incremental
+    * form of [[exactJoin]]: the corpus×corpus pass runs once, then a
+    * clean batch result plus the batch's own [[exactJoin]] certifies
+    * the merged corpus by induction ([[certBatchPairs]]). It is the
+    * store probe's candidate+verify core fed by in-memory parts of
+    * `corpus` (cosine pivots picked from it, at least two), with the
+    * corpus-side overflow guard in-plan.
     *
-    * PRODUCTION STEERING: this one-shot form RE-PICKS pivots from the
-    * current corpus and re-bands every corpus vector on every call —
-    * right for an acceptance query over a corpus frame already in
-    * hand (the q231 induction proof), wrong for a recurring ingest
-    * loop, where per-call pivot re-picks also mean no two calls'
-    * bands line up. The production path is the persisted store:
-    * [[certVecIndexWrite]] freezes the pivot geometry into the
-    * manifest and bands the corpus ONCE, [[certVecIndexProbe]]
-    * answers every later batch from the stored band rows, and
-    * [[certVecIndexAppend]] folds the batch in under the same frozen
-    * geometry — O(batch) banding per batch, mutually consistent
-    * epochs, the contract this per-call re-scan cannot make.
+    * PRODUCTION STEERING: this one-shot form re-derives the corpus
+    * parts (shingles and df order, or pivots and bands) on every call —
+    * right for an acceptance query over a corpus frame already in hand
+    * (q230/q231's induction proofs), wrong for a recurring ingest loop,
+    * where [[certIndexWrite]] derives them ONCE, [[certIndexProbe]]
+    * answers every batch from the stored rows and [[certIndexAppend]]
+    * folds the batch in: O(batch) work per batch.
     *
-    * @return (id_corpus, id_batch, cos), round(cos, roundTo) ≥
-    *         threshold; zero-norm vectors excluded on both sides */
-  def exactCosineJoinAgainst(corpus: DataFrame, batch: DataFrame,
-                             idCol: String, vecCol: String,
-                             threshold: Double, nPivots: Int = 4,
-                             maxCell: Long = 100000L,
-                             roundTo: Int = 4): DataFrame = {
-    require(threshold > -1.0 && threshold < 1.0,
-      s"threshold must be in (-1, 1): $threshold")
-    require(nPivots >= 2 && nPivots <= 16,
-      s"nPivots must be in [2, 16]: $nPivots")
-    // same rounded-contract band widening as exactCosineJoin
-    val theta = math.acos(math.max(-1.0,
-      threshold - 0.5 * math.pow(10, -roundTo))) + 1e-3
-    val pivots = BoundedRead.boundedDriverRead(
-      Sim.pickCentroids(
-        corpus.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0),
-        idCol, vecCol, nPivots).orderBy("cell"),
-      nPivots, "exactCosineJoinAgainst pivots",
-      s"pickCentroids emits at most nPivots = $nPivots rows")
-      .map(_.getSeq[Float](1).toArray)
-    // degrade to the pivots the corpus can supply — the
-    // exactCosineJoin convention (fewer pivots = fewer prefilters,
-    // never a missed pair); zero-norm rows are excluded from the pick
-    // as from banding, so the count below is the bandable population
-    val nP = pivots.length
-    require(nP >= 2,
-      s"exactCosineJoinAgainst needs >= 2 corpus pivot vectors; the " +
-        s"corpus supplied only $nP nonzero-norm vectors — a corpus " +
-        "this small certifies faster by brute force (crossJoin + filter)")
-    def band(p: Array[Float]) =
-      floor(acos(greatest(lit(-1.0), least(lit(1.0),
-        Sim.cosine(col("_v"), typedLit(p))))) / lit(theta)).cast("int")
-    def pts(df: DataFrame, side: String) = df
-      .select(col(idCol).as(s"_id$side"), col(vecCol).as("_v"))
-      .filter(Sim.cosine(col("_v"), col("_v")) > 0.0)
-      .select(col(s"_id$side") +: col("_v").as(s"_v$side") +:
-        pivots.zipWithIndex.map { case (p, i) => band(p).as(s"_b$i$side") }: _*)
-    val cPts = pts(corpus, "c")
-    // corpus-side cell tripwire on the UNREPLICATED (b0, b1) key
-    val sizes = broadcast(cPts.groupBy(col("_b0c"), col("_b1c"))
-      .agg(count(lit(1)).as("_cn")))
-    val cGuarded = cPts.join(sizes, Seq("_b0c", "_b1c"))
-      .withColumn("_g",
-        when(col("_cn") > maxCell, raise_error(concat(
-          lit("exactCosineJoinAgainst corpus cell overflow: band cell ("),
-          col("_b0c").cast("string"), lit(","),
-          col("_b1c").cast("string"), lit(") holds "),
-          col("_cn").cast("string"),
-          lit(s" corpus vectors (> $maxCell) — certify at a tighter " +
-            "threshold (narrower bands) or raise maxCell with the " +
-            "O(cell × batch-neighborhood) cost understood"))).cast("long"))
-          .otherwise(col("_cn")))
-      .drop("_cn")
-    // batch replicates to the 3×3 band neighborhood — the batch is
-    // the small side by contract, 9× of small is still small
-    val bRep = pts(batch, "b")
-      .withColumn("_b0c", explode(array(col("_b0b") - 1, col("_b0b"),
-        col("_b0b") + 1)))
-      .withColumn("_b1c", explode(array(col("_b1b") - 1, col("_b1b"),
-        col("_b1b") + 1)))
-    val prefixChecks = (2 until nP).map(i =>
-      abs(col(s"_b${i}c") - col(s"_b${i}b")) <= 1)
-    cGuarded.join(bRep, Seq("_b0c", "_b1c"))
-      .filter(prefixChecks.foldLeft(lit(true))(_ && _))
-      .filter(col("_g") > 0L)
-      .select(col("_idc").as("id_corpus"), col("_idb").as("id_batch"),
-        round(Sim.cosine(col("_vc"), col("_vb")), roundTo).as("cos"))
-      .filter(col("cos") >= threshold)
+    * @return (id_corpus, id_batch, <score>); a row present on both
+    *         sides pairs with itself — the re-ingestion signal a
+    *         certification exists to raise */
+  def exactJoinAgainst(corpus: DataFrame, batch: DataFrame, idCol: String,
+                       valueCol: String, metric: CertMetric): DataFrame = {
+    val geo = metric.blocking(corpus, idCol, valueCol, "exactJoinAgainst")
+    val parts = metric.parts(corpus, idCol, valueCol, geo, identity)
+    metric.cross(batch, idCol, valueCol, geo, new MemorySource(
+      parts.updated(metric.keySub,
+        guarded(metric, parts(metric.keySub), metric.key, "corpus "))))
+  }
+
+  /** One batch's certified pairs — the unit a certification ledger
+    * appends ([[certLedgerAppend]]): its batch×corpus pairs (`cross`,
+    * from [[certIndexProbe]] or [[exactJoinAgainst]]; None while no
+    * corpus exists) canonicalized to id_a < id_b, plus the batch's
+    * own [[exactJoin]].
+    *
+    * @return (id_a, id_b, <score>) */
+  def certBatchPairs(batch: DataFrame, cross: Option[DataFrame],
+                     idCol: String, valueCol: String,
+                     metric: CertMetric): DataFrame = {
+    val self = exactJoin(batch, idCol, valueCol, metric)
+    cross.fold(self)(_.select(
+      least(col("id_corpus"), col("id_batch")).as("id_a"),
+      greatest(col("id_corpus"), col("id_batch")).as("id_b"),
+      col(metric.score)).unionByName(self))
   }
 
   // -------------------------------------------------- certification ledger
@@ -2156,12 +2261,12 @@ object Dedup {
       "threshold" -> f"$threshold%.4f")
 
   /** Bootstrap a certification ledger with the one-time full
-    * corpus×corpus pass ([[exactJaccardJoin]] / [[exactCosineJoin]]
+    * corpus×corpus pass ([[exactJoin]]
     * output — any `(id_a, id_b, <score>)` pair frame). The ledger is
     * the OPERATIONAL form of the incremental certification story:
     * after this bootstrap, every arriving batch appends its
-    * batch-vs-corpus pairs ([[exactJaccardJoinAgainst]], canonicalized
-    * to `id_a < id_b`) plus its own self-join, and by induction the
+    * [[certBatchPairs]] (its batch-vs-corpus pairs, canonicalized to
+    * `id_a < id_b`, plus its own self-join), and by induction the
     * ledger always equals the full join over everything ingested —
     * the release-audit artifact ("these, exactly, are the surviving
     * ≥ τ pairs of shipped corpus N") without ever re-running
@@ -2277,7 +2382,10 @@ object Dedup {
     * production loop's one call: read the store, run the super-vertex
     * contraction ([[incrementalComponents]] — O(batch) mini-CC, never
     * a corpus recontraction), append only the CHANGED/NEW rows as this
-    * epoch's delta, and return the updated complete labeling.
+    * epoch's delta, and return the updated complete labeling — pinned
+    * (a checkpoint): the caller frees it with
+    * `Bridge.unpersistCheckpoint` once consumed, or at once when only
+    * the store matters.
     *
     * An EMPTY store bootstraps from this fold's own
     * [[connectedComponents]] (the first nonempty fold IS the
@@ -2301,8 +2409,9 @@ object Dedup {
     } else {
       val stored = ccLabelsRead(spark, path, metric, threshold,
         excludeEpoch = Some(epoch))
-      val updated = Bridge.freshLeaf(
-        incrementalComponents(stored, pairs).localCheckpoint(true))
+      val (labels, mini) = incrementalWithMini(stored, pairs)
+      val updated = Bridge.freshLeaf(labels.localCheckpoint(true))
+      Bridge.unpersistCheckpoint(mini)
       val delta = updated
         .join(stored.withColumnRenamed("cluster_id", "_old"),
           Seq("id"), "left")
@@ -2326,36 +2435,17 @@ object Dedup {
 
   // ------------------------------------------- certification index stores
 
-  private[graft] def certTextMeta(threshold: Double, shingleK: Int,
-                                  maxBucket: Int, buckets: Int): IndexMeta =
-    IndexMeta(certTextStore.name, "threshold" -> f"$threshold%.4f",
-      "shingleK" -> shingleK, "maxBucket" -> maxBucket,
-      "buckets" -> buckets)
-
   /** The certification stores' per-document substores erase by `id`;
     * their count partials rebuild from the retained rows (a count
     * cannot be filtered per document). */
   private val byId = StoreFamily.Filter(_ => Seq("id"))
 
-  /** The three substores of a text certification root — the bm25
-    * multi-subdir layout, manifest at the root:
-    *  - `postings/`: exploded prefix rows `(pb, pt, id, n)`, inner-
-    *    partitioned by `pb = pmod(pt, buckets)` so a probe's batch
-    *    bucket set becomes a PARQUET PARTITION FILTER (the q151
-    *    `term IN (…)` shape), and best-effort sorted by `pt` within
-    *    files for row-group skipping;
-    *  - `stats/`: per-epoch `(pb, pt, cnt)` prefix-bucket-count
-    *    partials, sum-folded — the maxBucket guard reads THESE (a
-    *    one-row-per-distinct-token table) instead of re-aggregating
-    *    the postings per probe;
-    *  - `fps/`: `(ib, id, n, hset)` fingerprint rows, the exact-verify
-    *    side, inner-partitioned by `ib = pmod(xxhash64(id), buckets)`
-    *    so the verify scan prunes to the CANDIDATES' id buckets —
-    *    with postings and bands pruned too, no probe path scans any
-    *    substore whole. */
+  /** Substores of a certification root ([[Jaccard]]'s and [[Cosine]]'s
+    * layouts); both count their blocking keys in `stats/`. */
+  private val CertStats = "stats"
   private val CertTextPostings = "postings"
-  private val CertTextStats = "stats"
   private val CertTextFps = "fps"
+  private val CertVecBands = "bands"
 
   /** Fingerprint and postings rows are disjoint across epochs
     * (identity fold — one row per document/prefix token, documents
@@ -2363,7 +2453,7 @@ object Dedup {
     * (pb, pt). Compaction reports the fps fold (the
     * document-count-shaped substore). */
   private[operators] val certTextStore = StoreFamily("cert_text", Seq(
-    StoreFamily.substore(CertTextStats, _ => p =>
+    StoreFamily.substore(CertStats, _ => p =>
       p.groupBy(col("pb"), col("pt")).agg(sum(col("cnt")).as("cnt")),
       StoreFamily.Derived(CertTextPostings, p =>
         p.groupBy(col("pb"), col("pt")).agg(count(lit(1)).as("cnt"))), Seq("pb")),
@@ -2371,16 +2461,77 @@ object Dedup {
     StoreFamily.substore(CertTextFps, _ => identity, byId, Seq("ib"))),
     reports = CertTextFps)
 
+  /** Band rows are disjoint across epochs (identity fold — bounds the
+    * per-cell file count); the cell-count partials SUM-fold per
+    * (b0, b1). Compaction reports the band fold. */
+  private[operators] val certVecStore = StoreFamily("cert_vec", Seq(
+    StoreFamily.substore(CertStats, _ => p =>
+      p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt")),
+      StoreFamily.Derived(CertVecBands, p =>
+        p.groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt")))),
+    StoreFamily.substore(CertVecBands, _ => identity, byId, Seq("b0", "b1"))),
+    reports = CertVecBands)
+
+  private def certSub(m: CertMetric, sub: String): StoreFamily.Substore =
+    m.store.substores.find(_.subdir == sub).get
+
+  /** Eager checkpoints one store call takes, freed together. */
+  private class Pins {
+    private var held = List.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val p = Bridge.freshLeaf(df.localCheckpoint(true))
+      held ::= p
+      p
+    }
+    def release(): Unit = {
+      held.foreach(Bridge.unpersistCheckpoint(_))
+      held = Nil
+    }
+  }
+
+  /** A store probe's corpus: substores read partition-pruned to the
+    * batch's keys — the key set is a bounded driver read (at most
+    * [[CertMetric.partCap]] values by construction), so a small batch
+    * touches only its own partitions' files. */
+  private final class StoreSource(spark: SparkSession, path: String,
+                                  m: CertMetric, excludeEpoch: Option[String])
+      extends Pins with CertSource {
+    def whole(sub: String): DataFrame = {
+      val s = certSub(m, sub)
+      EpochIndex.read(spark, s.path(path), excludeEpoch,
+        innerPartCols = s.innerPartCols, bootstrapName = "certIndexWrite")
+        .drop(EpochIndex.EpochCol)
+    }
+    def read(sub: String, keys: DataFrame): DataFrame = {
+      val s = certSub(m, sub)
+      // one long per partition: (b0, b1) encodes b0·2²⁰ + b1 (bands ≪
+      // 2¹⁹ because θ ≥ 1e-3), so one isin is the whole filter
+      val part = s.innerPartCols.map(c => col(c).cast("long"))
+        .reduce((a, b) => a * lit(1L << 20) + b)
+      val values = BoundedRead.boundedDriverRead(
+        keys.select(part).distinct(), m.partCap,
+        s"certIndexProbe $sub partitions",
+        s"a ${m.store.name} store has at most ${m.partCap} ${s.subdir} partitions")
+        .map(r => Long.box(r.getLong(0)))
+      // observed = false: a CollectMetrics barrier would block the
+      // partition filter (EpochIndex.read's scaladoc)
+      EpochIndex.read(spark, s.path(path), excludeEpoch,
+        innerPartCols = s.innerPartCols, bootstrapName = "certIndexWrite",
+        observed = false)
+        .drop(EpochIndex.EpochCol)
+        .filter(part.isin(values.toIndexedSeq: _*))
+    }
+  }
+
   /** Refuse loudly when a certification root's substores disagree on
     * which epochs they hold — the torn-append shape (a crash between
     * substore writes) that would otherwise mis-count guards or
     * silently drop verify rows. Re-running the append for the missing
     * epoch repairs it (appends are idempotent per epoch name). */
-  private def requireAlignedCertEpochs(
-      spark: org.apache.spark.sql.SparkSession, root: String,
-      subs: Seq[(String, Seq[String])]): Unit = {
-    val sets = subs.map { case (s, inner) =>
-      s -> EpochIndex.committedEpochNames(spark, s"$root/$s", inner).toSet }
+  private def requireAlignedCertEpochs(spark: SparkSession, root: String,
+                                       store: StoreFamily): Unit = {
+    val sets = store.substores.map(s => s.subdir ->
+      EpochIndex.committedEpochNames(spark, s.path(root), s.innerPartCols).toSet)
     require(sets.map(_._2).distinct.size == 1,
       s"certification store at $root has mis-aligned substores: " +
         sets.map { case (s, e) =>
@@ -2391,598 +2542,143 @@ object Dedup {
         "remove the torn directory")
   }
 
-  /** One document slice → its certification substore frames
-    * (fps, postings, stats) — fingerprints only: none carries text,
-    * so a probe never re-reads or re-tokenizes the corpus.
-    *
-    * The prefix is the first `n − ⌈t·n⌉ + 1` shingles under a
-    * document-frequency-ascending order over THIS slice. Any total
-    * order keeps the prefix-filter lemma exact (see
-    * [[certTextIndexProbe]] — the probe matches corpus prefixes
-    * against batch FULL sets, which is order-free); df-ascending is
-    * purely the bucket-size optimization, so append epochs ordering
-    * by their own slice's df — the corpus-wide order is long frozen —
-    * cost at most extra candidates, never a missed pair.
-    *
-    * The returned frames share eagerly-checkpointed parents (`sets`,
-    * the prefix cut) so the THREE substore writes tokenize and
-    * df-order the slice once, not three times. */
-  private def certTextParts(df: DataFrame, idCol: String, textCol: String,
-                            threshold: Double, shingleK: Int,
-                            buckets: Int): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val shingleCol =
-      if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
-      else shingles(col(textCol), shingleK)
-    val sets = Bridge.freshLeaf(df
-      .filter(size(TextFunctions.tokens(col(textCol))) > 0)
-      .select(col(idCol).as("id"), shingleCol.as("_s"))
-      .filter(size(col("_s")) > 0)
-      .repartition(col("id"))
-      .localCheckpoint(true))
-    val toks = sets.select(col("id"), size(col("_s")).cast("long").as("_n"),
-      explode(col("_s")).as("_t"))
-    val dfreq = toks.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-    def needed(n: Column) =
-      ceil(n.cast("double") * lit(threshold) - lit(1e-9))
-    val w = Window.partitionBy(col("id")).orderBy(col("_df"), col("_t"))
-    val pref = Bridge.freshLeaf(toks.join(dfreq, Seq("_t"))
-      .withColumn("_pos", row_number().over(w))
-      .filter(col("_pos") <= col("_n") - needed(col("_n")) + 1)
-      .select(col("id"), col("_n").as("n"), xxhash64(col("_t")).as("pt"))
-      .localCheckpoint(true))
-    val postings = pref
-      .select(pmod(col("pt"), lit(buckets.toLong)).cast("int").as("pb"),
-        col("pt"), col("id"), col("n"))
-      .repartition(col("pb"))
-      .sortWithinPartitions(col("pb"), col("pt"))
-    val stats = pref
-      .groupBy(pmod(col("pt"), lit(buckets.toLong)).cast("int").as("pb"),
-        col("pt"))
-      .agg(count(lit(1)).as("cnt"))
-    val fps = sets.select(
-      pmod(xxhash64(col("id")), lit(buckets.toLong)).cast("int").as("ib"),
-      col("id"), size(col("_s")).cast("long").as("n"),
-      Sketches.hashed_token_set(col("_s")).as("hset"))
-    (fps, postings, stats)
+  /** One slice's substore frames in the store's declaration order,
+    * their shared checkpoints released once `f` has written them. */
+  private def withParts(m: CertMetric, df: DataFrame, idCol: String,
+                        valueCol: String, geo: Pivots)(
+      f: Seq[(StoreFamily.Substore, DataFrame)] => Unit): Unit = {
+    val pins = new Pins
+    try {
+      val parts = m.parts(df, idCol, valueCol, geo, pins.pin)
+      f(m.store.substores.map(s => s -> m.laidOut(s.subdir, parts(s.subdir))))
+    } finally pins.release()
   }
 
-  /** Bootstrap the persisted Jaccard certification index — the store
-    * that makes [[exactJaccardJoinAgainst]]'s "cost ∝ batch" claim
-    * true for SCANS, not just joins: the corpus is tokenized, df-
-    * ordered, and prefix-cut exactly ONCE, here; every later batch
-    * probes partition-pruned postings + `(id, n, hset)` fingerprint rows
-    * ([[certTextIndexProbe]]) and appends its own
-    * ([[certTextIndexAppend]]), so an ingest lifetime of N batches
-    * pays O(N · batch) text work instead of O(N · corpus) — the
-    * q93/q97/q107 incremental contract, extended to the EXACT
-    * certification family. The manifest pins threshold + shingleK +
-    * maxBucket: a probe at a different τ or granularity refuses
-    * loudly (prefix lengths are τ-specific — probing across τ would
-    * silently miss pairs). */
-  def certTextIndexWrite(corpus: DataFrame, idCol: String, textCol: String,
-                         path: String, threshold: Double, shingleK: Int = 1,
-                         maxBucket: Int = 100000, buckets: Int = 64): Unit = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1]: $threshold")
-    require(shingleK >= 1, s"shingleK must be >= 1: $shingleK")
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val (fps, postings, stats) =
-      certTextParts(corpus, idCol, textCol, threshold, shingleK, buckets)
-    // the three substores derive from certTextParts' checkpoints and
-    // write to disjoint paths — independent actions, overlapped
-    // (guide §2.6); the meta manifest still lands strictly last
-    Par.concurrently(
-      () => EpochIndex.bootstrap(stats, s"$path/$CertTextStats",
-        innerPartCols = Seq("pb")),
-      () => EpochIndex.bootstrap(postings, s"$path/$CertTextPostings",
-        innerPartCols = Seq("pb")),
-      () => EpochIndex.bootstrap(fps, s"$path/$CertTextFps",
-        innerPartCols = Seq("ib")))
-    IndexMeta.write(corpus.sparkSession, path,
-      certTextMeta(threshold, shingleK, maxBucket, buckets))
+  /** Bootstrap a persisted certification index — the store that makes
+    * "cost ∝ batch" true for SCANS, not just joins: the corpus is
+    * shingled and prefix-cut (or banded under pivots frozen into the
+    * manifest) exactly ONCE, here; every later batch probes
+    * partition-pruned substores ([[certIndexProbe]]) and appends its
+    * own rows ([[certIndexAppend]]), so N batches pay O(N · batch)
+    * work instead of O(N · corpus) — the q93/q97/q107 incremental
+    * contract, extended to EXACT certification. The manifest pins the
+    * metric's parameters: a probe at another τ or granularity refuses
+    * loudly (prefix lengths and bands are τ-specific — probing across
+    * τ would silently miss pairs). The substores write concurrently
+    * (disjoint paths, one shared slice checkpoint); the manifest lands
+    * strictly last. */
+  def certIndexWrite(corpus: DataFrame, idCol: String, valueCol: String,
+                     path: String, metric: CertMetric): Unit = {
+    val geo = metric.blocking(corpus, idCol, valueCol, "certIndexWrite")
+    withParts(metric, corpus, idCol, valueCol, geo)(parts =>
+      Par.concurrently(parts.map { case (s, df) => () =>
+        EpochIndex.bootstrap(df, s.path(path), innerPartCols = s.innerPartCols)
+      }: _*))
+    IndexMeta.write(corpus.sparkSession, path, metric.meta(geo))
   }
 
-  /** Append one certified batch's index rows as one epoch (idempotent
-    * under at-least-once replay — the EpochIndex append unit; all
-    * three substores get the SAME epoch name, and a crash between the
-    * substore writes is caught by the probe's epoch-alignment check,
-    * repaired by re-running this append). The caller's contract is
-    * the ledger's: probe first, then append, so by induction the
-    * store always mirrors everything certified. */
-  def certTextIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                          path: String, batch: DataFrame, idCol: String,
-                          textCol: String, epoch: String, threshold: Double,
-                          shingleK: Int = 1, maxBucket: Int = 100000,
-                          buckets: Int = 64): Unit = {
-    IndexMeta.check(spark, path,
-      certTextMeta(threshold, shingleK, maxBucket, buckets))
-    val (fps, postings, stats) =
-      certTextParts(batch, idCol, textCol, threshold, shingleK, buckets)
-    EpochIndex.append(stats, s"$path/$CertTextStats", epoch,
-      innerPartCols = Seq("pb"))
-    EpochIndex.append(postings, s"$path/$CertTextPostings", epoch,
-      innerPartCols = Seq("pb"))
-    EpochIndex.append(fps, s"$path/$CertTextFps", epoch,
-      innerPartCols = Seq("ib"))
+  /** Append one certified batch's index rows as one epoch, under the
+    * manifest's frozen geometry (idempotent under at-least-once replay
+    * — the EpochIndex append unit; every substore gets the SAME epoch
+    * name, and a crash between substore writes is caught by the
+    * probe's epoch-alignment check, repaired by re-running this
+    * append). The caller's contract is the ledger's: probe first, then
+    * append, so the store always mirrors everything certified. */
+  def certIndexAppend(spark: SparkSession, path: String, batch: DataFrame,
+                      idCol: String, valueCol: String, epoch: String,
+                      metric: CertMetric): Unit =
+    withParts(metric, batch, idCol, valueCol, metric.frozen(spark, path))(
+      _.foreach { case (s, df) =>
+        EpochIndex.append(df, s.path(path), epoch,
+          innerPartCols = s.innerPartCols)
+      })
+
+  /** Freeze a certification manifest WITHOUT a bootstrap base — the
+    * streaming sink's first-batch hook: a cosine store born under
+    * `certVecIngestSink` has no corpus yet, so its pivots freeze from
+    * the FIRST batch (the deterministic md5 rule — a replay of that
+    * batch re-derives the identical pivots). The publish is atomic
+    * ([[IndexMeta.writeIfAbsent]]): of two concurrent first
+    * activations exactly one geometry survives, and the loser checks
+    * (and thereafter bands under) the winner's. An existing manifest
+    * is checked, never clobbered. */
+  private[graft] def certIndexMetaWriteIfAbsent(
+      spark: SparkSession, path: String, firstBatch: DataFrame,
+      idCol: String, valueCol: String, metric: CertMetric): Unit = {
+    if (IndexMeta.read(spark, path).isEmpty)
+      IndexMeta.writeIfAbsent(spark, path, metric.meta(
+        metric.blocking(firstBatch, idCol, valueCol, "a stream's first batch")))
+    metric.frozen(spark, path)
+    ()
   }
 
-  /** Batch-vs-corpus EXACT Jaccard join THROUGH the persisted index —
-    * [[exactJaccardJoinAgainst]]'s store-backed form, same output
-    * contract (every (corpus, batch) pair with Jaccard ≥ τ, zero
-    * false negatives), but the corpus side is postings + `(id, n, hset)`
-    * fingerprint rows read from `path`: corpus TEXT is never re-read,
-    * re-tokenized, or re-df-counted per batch.
+  /** Batch-vs-corpus EXACT join THROUGH the persisted index —
+    * [[exactJoinAgainst]]'s output contract, the same candidate+verify
+    * core, but the corpus side is read from `path` (frozen geometry,
+    * no corpus text or re-banding per batch). Every substore read is
+    * PARTITION-PRUNED to what the batch can pair with (postings by the
+    * batch's token buckets, fingerprints by the candidates' id
+    * buckets, bands by the batch's 3×3 neighborhood cells). The
+    * `maxBucket`/`maxCell` guard reads the PERSISTED stats (summed
+    * partials, one row per blocking key) DRIVER-SIDE at probe
+    * construction: a poisoned store refuses every probe, empty batches
+    * and untouched keys included, and the candidate plan stays
+    * guard-free.
     *
-    * Exactness under a one-sided prefix: candidates are corpus
-    * PREFIX hashes equi-joined against the batch's FULL shingle-hash
-    * sets. For any qualifying pair, |A∩B| ≥ ⌈t·|A|⌉ while A's
-    * non-prefix suffix holds only ⌈t·|A|⌉ − 1 shingles — so some
-    * shared shingle lands in A's prefix, whatever total order cut it
-    * (Bayardo et al. WWW 2007, the R×S corollary). One-sided means
-    * the store needs no frozen global token order to stay exact
-    * across appends; the PPJoin length filter still applies both ways
-    * (carried `n` vs batch `n`). xxhash64 candidate keys can collide
-    * — a collision only ADDS a candidate, and the exact sorted-hash
-    * verify decides membership.
-    *
-    * PRUNED probe scan: the candidate join reads the postings store
-    * through a `pb IN (batch's buckets)` PARTITION FILTER (`pb` is a
-    * store partition column; the bucket list is a bounded driver read
-    * — at most `buckets` values by construction), so a small batch
-    * touches only its own buckets' files instead of the whole
-    * fingerprint index — the q151 postings-pushdown shape. The
-    * `maxBucket` tripwire reads the PERSISTED stats substore (summed
-    * `(pt, cnt)` partials — one row per distinct prefix token, folded
-    * at write/compact time) instead of re-aggregating the postings
-    * per probe, checked driver-side at probe construction as a
-    * one-row bounded metadata read: it fails loudly on a corpus-wide
-    * boilerplate token for EVERY probe, touched or not — the
-    * poisoned-index signal must not wait for a batch that happens to
-    * hit the hot token.
+    * The internal checkpoints outlive the call (they back the returned
+    * plan); batch/bench callers rely on the harness sweep. A
+    * long-lived loop with no sweep — a streaming sink — uses
+    * [[certIndexProbePinned]] and releases them itself.
     *
     * @param excludeEpoch the streaming replay hook: drop one live
     *                     epoch's rows ([[EpochIndex.read]] refuses if
     *                     it was already compacted into the base)
-    * @return (id_corpus, id_batch, jaccard), jaccard ≥ threshold
-    *         (filtered unrounded, displayed at 4dp) */
-  def certTextIndexProbe(spark: org.apache.spark.sql.SparkSession,
-                         path: String, batch: DataFrame, idCol: String,
-                         textCol: String, threshold: Double,
-                         shingleK: Int = 1, maxBucket: Int = 100000,
-                         buckets: Int = 64,
-                         excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path,
-      certTextMeta(threshold, shingleK, maxBucket, buckets))
-    requireAlignedCertEpochs(spark, path, Seq(
-      CertTextFps -> Seq("ib"), CertTextPostings -> Seq("pb"),
-      CertTextStats -> Seq("pb")))
-    def needed(n: Column) =
-      ceil(n.cast("double") * lit(threshold) - lit(1e-9))
-    // batch side: FULL shingle-hash sets (the one-sided lemma needs no
-    // batch prefix, hence no order agreement with the store);
-    // checkpointed once — it feeds the driver-side bucket list, the
-    // candidate join and the verify join
-    val shingleCol =
-      if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
-      else shingles(col(textCol), shingleK)
-    val bSets = Bridge.freshLeaf(batch
-      .filter(size(TextFunctions.tokens(col(textCol))) > 0)
-      .select(col(idCol).as("id_batch"), shingleCol.as("_s"))
-      .filter(size(col("_s")) > 0)
-      .repartition(col("id_batch"))
-      .localCheckpoint(true))
-    val bToks = bSets.select(col("id_batch"),
-      size(col("_s")).cast("long").as("_nb"),
-      explode(col("_s")).as("_tt"))
-      .select(col("id_batch"), col("_nb"), xxhash64(col("_tt")).as("pt"))
-    // the batch's bucket list — bounded by the manifest constant, so
-    // the collect is a metadata read, never corpus-shaped
-    val pbs = BoundedRead.boundedDriverRead(
-      bToks.select(pmod(col("pt"), lit(buckets.toLong)).cast("int").as("pb"))
-        .distinct(),
-      buckets, "certTextIndexProbe batch buckets",
-      s"pb = pmod(hash, $buckets) has at most $buckets distinct values")
-      .map(_.getInt(0))
-    // postings, partition-pruned to the batch's buckets (observed =
-    // false: a CollectMetrics barrier would block the partition
-    // filter — EpochIndex.read's scaladoc)
-    val postings = EpochIndex.read(spark, s"$path/$CertTextPostings",
-      excludeEpoch, innerPartCols = Seq("pb"),
-      bootstrapName = "certTextIndexWrite", observed = false)
-      .drop(EpochIndex.EpochCol)
-      .filter(col("pb").isin(pbs.map(Int.box).toIndexedSeq: _*))
-    // corpus-wide hottest prefix bucket from the PERSISTED stats —
-    // summed partials over a one-row-per-token table, never a re-scan
-    // of the postings. Checked DRIVER-SIDE at probe construction (a
-    // one-row bounded metadata read of a pre-aggregated store, not
-    // corpus work): the poisoned-index refusal fires for EVERY probe,
-    // empty batches and untouched buckets included, and the candidate
-    // plan stays guard-free.
-    val hot = BoundedRead.boundedDriverRead(
-      EpochIndex.read(spark, s"$path/$CertTextStats", excludeEpoch,
-        innerPartCols = Seq("pb"), bootstrapName = "certTextIndexWrite")
-        .drop(EpochIndex.EpochCol)
-        .groupBy(col("pt")).agg(sum(col("cnt")).as("_bkt"))
-        .agg(max(struct(col("_bkt"), col("pt"))).as("_hot"))
-        .select(col("_hot._bkt").as("bkt"), col("_hot.pt").as("pt")),
-      1, "certTextIndexProbe hottest bucket",
-      "a global aggregate emits exactly one row")
-    hot.filterNot(_.isNullAt(0)).foreach { r =>
-      require(r.getLong(0) <= maxBucket,
-        s"certTextIndexProbe corpus prefix bucket overflow: hash " +
-          s"${r.getLong(1)} appears in ${r.getLong(0)} corpus prefixes " +
-          s"(> $maxBucket) — quadratic candidate blow-up; strip the " +
-          "boilerplate token upstream or rebuild the index with the " +
-          "cost understood")
-    }
-    // candidates, materialized ONCE (they were always computed once;
-    // the checkpoint additionally lets the verify scan below prune):
-    // their id buckets are ≤ `buckets` distinct values by construction,
-    // so the fingerprint read becomes a partition-filtered scan too —
-    // no probe path scans any substore whole
-    val cand = Bridge.freshLeaf(postings
-      .select(col("pt"), col("id").as("id_corpus"), col("n").as("_nc"))
-      .join(bToks, Seq("pt"))
-      .filter(col("_nb") >= needed(col("_nc")) &&
-        col("_nc") >= needed(col("_nb")))
-      .select("id_corpus", "id_batch").distinct()
-      .localCheckpoint(true))
-    val ibs = BoundedRead.boundedDriverRead(
-      cand.select(pmod(xxhash64(col("id_corpus")), lit(buckets.toLong))
-        .cast("int").as("ib")).distinct(),
-      buckets, "certTextIndexProbe candidate id buckets",
-      s"ib = pmod(hash, $buckets) has at most $buckets distinct values")
-      .map(_.getInt(0))
-    val bHash = bSets.select(col("id_batch"),
-      Sketches.hashed_token_set(col("_s")).as("_hb"))
-    val fps = EpochIndex.read(spark, s"$path/$CertTextFps", excludeEpoch,
-      innerPartCols = Seq("ib"),
-      bootstrapName = "certTextIndexWrite", observed = false)
-      .filter(col("ib").isin(ibs.map(Int.box).toIndexedSeq: _*))
-      .drop(EpochIndex.EpochCol)
-    cand.join(fps.select(col("id").as("id_corpus"), col("hset").as("_ha")),
-        Seq("id_corpus"))
-      .join(bHash, Seq("id_batch"))
-      .select(col("id_corpus"), col("id_batch"),
-        Sketches.jaccard_sorted_long(col("_ha"), col("_hb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_corpus"), col("id_batch"),
-        round(col("jaccard"), 4).as("jaccard"))
+    * @return (id_corpus, id_batch, <score>) */
+  def certIndexProbe(spark: SparkSession, path: String, batch: DataFrame,
+                     idCol: String, valueCol: String, metric: CertMetric,
+                     excludeEpoch: Option[String] = None): DataFrame =
+    certIndexProbePinned(spark, path, batch, idCol, valueCol, metric,
+      excludeEpoch)._1
+
+  /** [[certIndexProbe]] with caller-managed release: the second element
+    * frees the probe's checkpoints (call it only after the pairs are
+    * consumed or themselves pinned). */
+  private[graft] def certIndexProbePinned(
+      spark: SparkSession, path: String, batch: DataFrame, idCol: String,
+      valueCol: String, metric: CertMetric,
+      excludeEpoch: Option[String] = None): (DataFrame, () => Unit) = {
+    val geo = metric.frozen(spark, path)
+    requireAlignedCertEpochs(spark, path, metric.store)
+    val src = new StoreSource(spark, path, metric, excludeEpoch)
+    val k = metric.key.map(col)
+    BoundedRead.boundedDriverRead(
+      src.whole(CertStats).groupBy(k: _*).agg(sum(col("cnt")).as("_n"))
+        .agg(max(struct(col("_n") +: k: _*)).as("_hot"))
+        .select(guard(metric, "corpus ", metric.key.map(c => col(s"_hot.$c")),
+          col("_hot._n"))),
+      1, "certIndexProbe hottest key", "a global aggregate emits exactly one row")
+    (metric.cross(batch, idCol, valueCol, geo, src), () => src.release())
   }
 
-  /** Does the text certification store hold any index data (a live
-    * epoch or a compacted base)? The gate the streaming sink probes
-    * through — a single definition so a layout change cannot silently
-    * diverge from what [[certTextIndexProbe]] actually reads. */
-  def certTextIndexNonEmpty(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Boolean =
-    EpochIndex.nonEmpty(spark, s"$path/$CertTextFps",
-      innerPartCols = Seq("ib"))
-
-  /** Does `corpus` hold at least one row the text certification index
-    * would carry — a non-empty shingle set at this granularity (the
-    * exact [[certTextParts]] filters)? The activation predicate that
-    * lets the streaming sink tell a WRONGLY-empty index under a
-    * standing indexable corpus (refuse — probes would silently miss
-    * pairs) from a LEGITIMATELY empty one (every ingested text empty
-    * at this shingleK: no probe could ever match, and the suggested
-    * repair `certTextIndexWrite` cannot produce index rows from such
-    * a corpus either — refusing would brick the pipeline forever).
-    * `limit(1)` under the filter: the scan stops at the first
-    * indexable row, so the common refusal check stays cheap even when
-    * this rare empty-index branch is taken. */
-  def certTextHasIndexable(corpus: DataFrame, textCol: String,
-                           shingleK: Int = 1): Boolean = {
-    val shingleCol =
-      if (shingleK == 1) array_distinct(TextFunctions.tokens(col(textCol)))
-      else shingles(col(textCol), shingleK)
-    !corpus
-      .filter(size(TextFunctions.tokens(col(textCol))) > 0)
-      .filter(size(shingleCol) > 0)
-      .limit(1).isEmpty
+  /** Does the certification store hold any index data (a live epoch or
+    * a compacted base)? The gate the streaming sinks probe through. */
+  def certIndexNonEmpty(spark: SparkSession, path: String,
+                        metric: CertMetric): Boolean = {
+    val s = certSub(metric, metric.store.reports)
+    EpochIndex.nonEmpty(spark, s.path(path), innerPartCols = s.innerPartCols)
   }
 
-  /** [[certTextHasIndexable]]'s cosine twin: any non-zero-norm vector
-    * ([[certVecRows]] drops zero-norm rows — they cannot band, so a
-    * corpus of only zero-norm vectors legitimately yields an empty
-    * band store). */
-  def certVecHasIndexable(corpus: DataFrame, vecCol: String): Boolean =
-    !corpus.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0)
-      .limit(1).isEmpty
-
-  /** Substores of a cosine certification root: `bands/` (the banded
-    * vector rows, inner-partitioned by the (b0, b1) blocking key) and
-    * `stats/` (per-epoch (b0, b1, cnt) cell-count partials, sum-folded
-    * — geometry-bounded, so always broadcast-sized). */
-  private val CertVecBands = "bands"
-  private val CertVecStats = "stats"
-
-  /** Band rows are disjoint across epochs (identity fold — bounds the
-    * per-cell file count); the cell-count partials SUM-fold per
-    * (b0, b1). Compaction reports the band fold. */
-  private[operators] val certVecStore = StoreFamily("cert_vec", Seq(
-    StoreFamily.substore(CertVecStats, _ => p =>
-      p.groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("cnt")),
-      StoreFamily.Derived(CertVecBands, p =>
-        p.groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt")))),
-    StoreFamily.substore(CertVecBands, _ => identity, byId, Seq("b0", "b1"))),
-    reports = CertVecBands)
-  private[graft] def certVecMeta(threshold: Double, roundTo: Int,
-                                 maxCell: Long,
-                                 pivots: Seq[Array[Float]]): IndexMeta =
-    IndexMeta(certVecStore.name, "threshold" -> f"$threshold%.4f",
-      "roundTo" -> roundTo, "maxCell" -> maxCell,
-      "nPivots" -> pivots.length,
-      "pivots" -> pivots.map(_.mkString(",")).mkString(";"))
-
-  /** Manifest check for the cosine certification store that also
-    * RETURNS the frozen pivot geometry: scalar parameters must match
-    * the probe's exactly (refuse loudly), while the pivots are read
-    * back from the manifest — they were frozen at bootstrap and are
-    * not the caller's to supply. Float round-trip via
-    * `Float.toString`/`toFloat` is exact, so the parsed pivots are
-    * bit-identical to the frozen ones. */
-  private def certVecPivots(spark: org.apache.spark.sql.SparkSession,
-                            path: String, threshold: Double, roundTo: Int,
-                            maxCell: Long): Array[Array[Float]] = {
-    val stored = IndexMeta.read(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"cosine certification store at $path has no _GRAFT_META " +
-          "manifest — bootstrap it with certVecIndexWrite"))
-    require(stored.family == certVecStore.name,
-      s"index family mismatch at $path: stored '${stored.family}', " +
-        s"probe expects '${certVecStore.name}' — wrong index path?")
-    val pivots = stored.params.getOrElse("pivots", sys.error(
-      s"manifest at $path records no frozen pivots — not a " +
-        "certVecIndexWrite store"))
-      .split(";").map(_.split(",").map(_.toFloat))
-    IndexMeta.check(spark, path, certVecMeta(threshold, roundTo, maxCell,
-      pivots.toIndexedSeq))
-    pivots
-  }
-
-  private def certVecTheta(threshold: Double, roundTo: Int): Double =
-    math.acos(math.max(-1.0,
-      threshold - 0.5 * math.pow(10, -roundTo))) + 1e-3
-
-  /** `(id, vec, b0..b{p-1})` band rows under a FIXED pivot set — the
-    * shared front end of the cosine store's bootstrap and appends, so
-    * every epoch's bands are byte-identical by construction. */
-  private def certVecRows(df: DataFrame, idCol: String, vecCol: String,
-                          pivots: Array[Array[Float]],
-                          theta: Double): DataFrame = {
-    def band(p: Array[Float]) =
-      floor(acos(greatest(lit(-1.0), least(lit(1.0),
-        Sim.cosine(col("_v"), typedLit(p))))) / lit(theta)).cast("int")
-    df.select(col(idCol).as("id"), col(vecCol).as("_v"))
-      .filter(Sim.cosine(col("_v"), col("_v")) > 0.0)
-      .select(col("id") +: col("_v").as("vec") +:
-        pivots.zipWithIndex.toIndexedSeq
-          .map { case (p, i) => band(p).as(s"b$i") }: _*)
-  }
-
-  /** Bootstrap the persisted cosine certification index —
-    * [[certTextIndexWrite]]'s embedding twin: corpus vectors banded
-    * ONCE under pivots FROZEN into the manifest. Freezing is what
-    * makes appends sound: [[exactCosineJoinAgainst]] re-picks pivots
-    * from the current corpus per call, so bands computed yesterday
-    * would not line up with a probe computed today — here the
-    * geometry is a manifest constant, every epoch's bands are
-    * mutually consistent, and a probe reads pivots back instead of
-    * re-deriving them from data. Pivot QUALITY never affects
-    * exactness (bands only block; the cosine verify decides), so a
-    * frozen, gradually-staler pivot set costs at most candidate
-    * counts. */
-  def certVecIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
-                        path: String, threshold: Double, nPivots: Int = 4,
-                        maxCell: Long = 100000L, roundTo: Int = 4): Unit = {
-    require(threshold > -1.0 && threshold < 1.0,
-      s"threshold must be in (-1, 1): $threshold")
-    require(nPivots >= 2 && nPivots <= 16,
-      s"nPivots must be in [2, 16]: $nPivots")
-    val spark = corpus.sparkSession
-    // zero-norm vectors cannot band (certVecRows drops them) and make
-    // degenerate pivots (acos against them is undefined) — exclude
-    // them from the pick so the pivot set reflects bandable rows and
-    // the degrade message below counts what it claims to count
-    val pivots = BoundedRead.boundedDriverRead(
-      Sim.pickCentroids(
-        corpus.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0),
-        idCol, vecCol, nPivots).orderBy("cell"),
-      nPivots, "certVecIndexWrite pivots",
-      s"pickCentroids emits at most nPivots = $nPivots rows")
-      .map(_.getSeq[Float](1).toArray)
-    require(pivots.length >= 2,
-      s"certVecIndexWrite needs >= 2 pivot vectors; the corpus " +
-        s"supplied only ${pivots.length} nonzero-norm vectors")
-    val theta = certVecTheta(threshold, roundTo)
-    // bands inner-partitioned by the (b0, b1) blocking key: the probe's
-    // 3×3 neighborhood cell set becomes a parquet partition filter.
-    // The banding runs once (eager checkpoint) and feeds both the
-    // band store and its per-cell count partials — the stats substore
-    // the probe's maxCell guard reads instead of re-aggregating bands.
-    val bands = Bridge.freshLeaf(
-      certVecRows(corpus, idCol, vecCol, pivots, theta)
-        .localCheckpoint(true))
-    // both substores read the banding checkpoint and write to
-    // disjoint paths — independent actions, overlapped (guide §2.6)
-    Par.concurrently(
-      () => EpochIndex.bootstrap(bands, s"$path/$CertVecBands",
-        innerPartCols = Seq("b0", "b1")),
-      () => EpochIndex.bootstrap(
-        bands.groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt")),
-        s"$path/$CertVecStats"))
-    IndexMeta.write(spark, path,
-      certVecMeta(threshold, roundTo, maxCell, pivots.toIndexedSeq))
-  }
-
-  /** Freeze the cosine certification manifest WITHOUT a bootstrap
-    * base — the streaming sink's first-batch hook: a store born under
-    * `certVecIngestSink` has no corpus yet, so the pivots freeze from
-    * the FIRST batch (the deterministic md5 rule — an at-least-once
-    * replay of that batch re-derives the identical pivots, and
-    * writeIfAbsent semantics make the record idempotent) and every
-    * epoch append then bands under them. An existing manifest is
-    * checked, never clobbered. Pivot QUALITY never affects exactness
-    * (bands only block); a skewed first batch costs candidates, not
-    * pairs — bootstrap with [[certVecIndexWrite]] over a real corpus
-    * when one exists. */
-  private[graft] def certVecMetaWriteIfAbsent(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      firstBatch: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nPivots: Int, maxCell: Long,
-      roundTo: Int): Unit = {
-    if (IndexMeta.read(spark, path).isEmpty) {
-      val pivots = BoundedRead.boundedDriverRead(
-        Sim.pickCentroids(
-          firstBatch.filter(Sim.cosine(col(vecCol), col(vecCol)) > 0.0),
-          idCol, vecCol, nPivots).orderBy("cell"),
-        nPivots, "certVecMetaWriteIfAbsent pivots",
-        s"pickCentroids emits at most nPivots = $nPivots rows")
-        .map(_.getSeq[Float](1).toArray)
-      require(pivots.length >= 2,
-        s"cannot freeze a cosine certification geometry from a " +
-          s"${pivots.length}-nonzero-norm-vector first batch — " +
-          "bootstrap the store with certVecIndexWrite over a real " +
-          "corpus first")
-      // ATOMIC publish (IndexMeta.writeIfAbsent: unique temp +
-      // rename-without-replace, winner decided by content read-back):
-      // two concurrent first activations can no longer both freeze —
-      // exactly one geometry survives, and the loser falls through to
-      // verify (and thereafter band under) the WINNER's manifest
-      IndexMeta.writeIfAbsent(spark, path,
-        certVecMeta(threshold, roundTo, maxCell, pivots.toIndexedSeq))
-      certVecPivots(spark, path, threshold, roundTo, maxCell)
-      ()
-    } else {
-      certVecPivots(spark, path, threshold, roundTo, maxCell)
-      ()
-    }
-  }
-
-  /** Append one certified batch's band rows as one epoch, banded
-    * under the manifest's FROZEN pivots (never re-picked). */
-  def certVecIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         path: String, batch: DataFrame, idCol: String,
-                         vecCol: String, epoch: String, threshold: Double,
-                         maxCell: Long = 100000L, roundTo: Int = 4): Unit = {
-    val pivots = certVecPivots(spark, path, threshold, roundTo, maxCell)
-    val bands = Bridge.freshLeaf(
-      certVecRows(batch, idCol, vecCol, pivots,
-        certVecTheta(threshold, roundTo)).localCheckpoint(true))
-    EpochIndex.append(
-      bands.groupBy(col("b0"), col("b1")).agg(count(lit(1)).as("cnt")),
-      s"$path/$CertVecStats", epoch)
-    EpochIndex.append(bands, s"$path/$CertVecBands", epoch,
-      innerPartCols = Seq("b0", "b1"))
-  }
-
-  /** Batch-vs-corpus EXACT cosine join THROUGH the persisted index —
-    * [[exactCosineJoinAgainst]]'s store-backed form, same output
-    * contract, but the corpus side is `(id, vec, bands)` rows read
-    * from `path/bands` and the pivots come frozen from the manifest:
-    * no per-batch corpus banding, no per-batch pivot re-pick. The
-    * corpus stays unreplicated; the batch carries the 3×3 band
-    * neighborhood; remaining pivots prune as |Δband| ≤ 1 integer
-    * checks before the exact verify.
-    *
-    * PRUNED probe scan: the band store is partitioned by (b0, b1),
-    * and the batch's distinct neighborhood cells — a bounded driver
-    * read, ≤ (⌈π/θ⌉+3)² values by geometry, never corpus-shaped —
-    * become a PARTITION FILTER on the scan: the probe reads only the
-    * ≤ 9·|batch cells| band partitions it can possibly pair with.
-    * The maxCell tripwire reads the PERSISTED stats substore (summed
-    * (b0, b1, cnt) partials, geometry-bounded rows) instead of
-    * re-aggregating the band store per probe, checked driver-side at
-    * probe construction as a one-row bounded metadata read — it fails
-    * loudly on ANY oversized corpus cell for every probe, probed or
-    * not (the mass-collapse signal must not wait for a batch that
-    * happens to land in the collapsed cell). */
-  def certVecIndexProbe(spark: org.apache.spark.sql.SparkSession,
-                        path: String, batch: DataFrame, idCol: String,
-                        vecCol: String, threshold: Double,
-                        maxCell: Long = 100000L, roundTo: Int = 4,
-                        excludeEpoch: Option[String] = None): DataFrame = {
-    val pivots = certVecPivots(spark, path, threshold, roundTo, maxCell)
-    val nP = pivots.length
-    val theta = certVecTheta(threshold, roundTo)
-    requireAlignedCertEpochs(spark, path, Seq(
-      CertVecBands -> Seq("b0", "b1"), CertVecStats -> Nil))
-    val bRows = Bridge.freshLeaf(
-      certVecRows(batch, idCol, vecCol, pivots, theta)
-        .localCheckpoint(true))
-    val bPts = bRows.select(col("id").as("_idb") +: col("vec").as("_vb") +:
-      (0 until nP).map(i => col(s"b$i").as(s"_b${i}b")): _*)
-    val bRep = bPts
-      .withColumn("_b0c", explode(array(col("_b0b") - 1, col("_b0b"),
-        col("_b0b") + 1)))
-      .withColumn("_b1c", explode(array(col("_b1b") - 1, col("_b1b"),
-        col("_b1b") + 1)))
-    // the probed cell set, collected under a GEOMETRY bound: bands
-    // are floor(acos/θ) ∈ [0, ⌈π/θ⌉], so the 3×3 neighborhood spans
-    // at most (⌈π/θ⌉ + 3)² distinct (b0, b1) values whatever the
-    // batch or corpus size. Encoded b0·2²⁰ + b1 (bands ≪ 2¹⁹ because
-    // θ ≥ 1e-3) so one isin over an arithmetic expression of the two
-    // partition columns is the whole filter.
-    val maxBands = (math.Pi / theta).toInt + 3
-    val cellCap = maxBands * maxBands
-    val cellKey = 1L << 20
-    val cells = BoundedRead.boundedDriverRead(
-      bRep.select(col("_b0c"), col("_b1c")).distinct(), cellCap,
-      "certVecIndexProbe probe cells",
-      s"bands lie in [0, π/θ] so the 3×3 neighborhood has at most " +
-        s"$cellCap distinct cells")
-      .map(r => r.getInt(0).toLong * cellKey + r.getInt(1))
-    // observed = false: the partition filter must reach the scan
-    // (CollectMetrics is a pushdown barrier — EpochIndex.read's doc)
-    val idx = EpochIndex.read(spark, s"$path/$CertVecBands", excludeEpoch,
-      innerPartCols = Seq("b0", "b1"),
-      bootstrapName = "certVecIndexWrite", observed = false)
-      .filter((col("b0").cast("long") * lit(cellKey) +
-        col("b1").cast("long")).isin(cells.map(Long.box).toIndexedSeq: _*))
-      .drop(EpochIndex.EpochCol)
-      .withColumn("b0", col("b0").cast("int"))
-      .withColumn("b1", col("b1").cast("int"))
-    val cPts = idx.select(col("id").as("_idc") +: col("vec").as("_vc") +:
-      (0 until nP).map(i => col(s"b$i").as(s"_b${i}c")): _*)
-    // hottest-cell guard from the persisted stats partials (summed,
-    // geometry-bounded rows) — checked DRIVER-SIDE at probe
-    // construction like certTextIndexProbe's: fires for every probe,
-    // independent of which cells the batch touches, and keeps the
-    // candidate plan guard-free
-    val hot = BoundedRead.boundedDriverRead(
-      EpochIndex.read(spark, s"$path/$CertVecStats", excludeEpoch,
-        bootstrapName = "certVecIndexWrite")
-        .drop(EpochIndex.EpochCol)
-        .groupBy(col("b0"), col("b1")).agg(sum(col("cnt")).as("_cn"))
-        .agg(max(struct(col("_cn"), col("b0"), col("b1"))).as("_hot"))
-        .select(col("_hot._cn").as("cn"), col("_hot.b0").as("b0"),
-          col("_hot.b1").as("b1")),
-      1, "certVecIndexProbe hottest cell",
-      "a global aggregate emits exactly one row")
-    hot.filterNot(_.isNullAt(0)).foreach { r =>
-      require(r.getLong(0) <= maxCell,
-        s"certVecIndexProbe corpus cell overflow: band cell " +
-          s"(${r.getInt(1)},${r.getInt(2)}) holds ${r.getLong(0)} " +
-          s"corpus vectors (> $maxCell) — certify at a tighter " +
-          "threshold (narrower bands) or rebuild with the " +
-          "O(cell × batch-neighborhood) cost understood")
-    }
-    val prefixChecks = (2 until nP).map(i =>
-      abs(col(s"_b${i}c") - col(s"_b${i}b")) <= 1)
-    cPts.join(bRep, Seq("_b0c", "_b1c"))
-      .filter(prefixChecks.foldLeft(lit(true))(_ && _))
-      .select(col("_idc").as("id_corpus"), col("_idb").as("id_batch"),
-        round(Sim.cosine(col("_vc"), col("_vb")), roundTo).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** [[certTextIndexNonEmpty]]'s cosine twin. */
-  def certVecIndexNonEmpty(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Boolean =
-    EpochIndex.nonEmpty(spark, s"$path/$CertVecBands",
-      innerPartCols = Seq("b0", "b1"))
+  /** Does `corpus` hold a row the index would carry (a nonempty shingle
+    * set at this granularity, a nonzero-norm vector)? The activation
+    * predicate that tells a WRONGLY-empty index under a standing
+    * indexable corpus (refuse — probes would silently miss pairs) from
+    * a LEGITIMATELY empty one (no probe could ever match, and
+    * [[certIndexWrite]] could not index such a corpus either —
+    * refusing would brick the pipeline). `limit(1)`: the scan stops at
+    * the first indexable row. */
+  def certHasIndexable(corpus: DataFrame, idCol: String, valueCol: String,
+                       metric: CertMetric): Boolean =
+    !metric.docs(corpus, idCol, valueCol).limit(1).isEmpty
 
   /** Exact n-gram (word-shingle) Jaccard for all pairs within a
     * blocking key — the exact verifier for LSH candidates. Pair

@@ -309,7 +309,7 @@ object Packing {
                      idCol: String, textCol: String): DataFrame = {
     def be4(c: Column) = unhex(lpad(hex(c), 8, "0"))
     def be8(c: Column) = unhex(lpad(hex(c), 16, "0"))
-    // NULL-text tripwire (the exactJaccardJoin discipline): concat is
+    // NULL-text tripwire (the exact joins' guard discipline): concat is
     // null-propagating, so ONE null record would null the ENTIRE bin
     // payload while n_docs stays positive — the silent-corruption
     // shape a loader then NPEs on. Fail loudly, naming the doc.

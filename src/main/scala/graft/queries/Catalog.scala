@@ -52,17 +52,14 @@ object Catalog {
     * materialized store (q130's zone-mapped copy, q143's epoch
     * index): under the JVM temp dir, suffixed with the Spark
     * application id so two drivers running the catalog concurrently
-    * never race on each other's scratch tables. Callers clear it per
+    * never race on each other's scratch tables. Cleared for this
     * invocation — a fresh tempdir per run would accrete one corpus
-    * copy per bench pass, and deleteOnExit never removes non-empty
-    * dirs. */
-  private def scratchDir(s: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch-" +
-      s"${s.sparkContext.applicationId}/$name"
-
-  /** [[scratchDir]] cleared for this invocation. */
+    * copy per bench pass, deleteOnExit never removes non-empty dirs,
+    * and a store left by an earlier run in the same application would
+    * change what the query writes. */
   private def freshScratch(s: SparkSession, name: String): String = {
-    val root = scratchDir(s, name)
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch-" +
+      s"${s.sparkContext.applicationId}/$name"
     graft.sources.Fs.deleteRecursively(s, root)
     root
   }
@@ -7770,18 +7767,17 @@ object Catalog {
     // "which certification did shard N ship under" answer, emitted as
     // card columns). Both pair counts round-trip the cert_pairs
     // ledger — the count a release auditor reads IS a ledger read.
-    val root = scratchDir(s, "q199_corpus_card")
+    val root = freshScratch(s, "q199_corpus_card")
     val emb = Tables.embeddings(s, d)
     // the two certification bootstraps read different tables and
     // write different stores — independent actions, overlapped
     // (guide §2.6: one build's driver-bound stage storm back-fills
     // with the other's executor work)
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(Dedup.exactJaccardJoin(docs, "doc_id",
-        "text", threshold = 0.85, shingleK = 3), s"$root/jac",
-        "jaccard", 0.85),
-      () => Dedup.certLedgerWrite(Dedup.exactCosineJoin(emb, "vec_id",
-        "embedding", threshold = 0.4), s"$root/cos", "cosine", 0.4))
+      () => Dedup.certLedgerWrite(Dedup.exactJoin(docs, "doc_id", "text",
+        Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac", "jaccard", 0.85),
+      () => Dedup.certLedgerWrite(Dedup.exactJoin(emb, "vec_id", "embedding",
+        Dedup.Cosine(0.4)), s"$root/cos", "cosine", 0.4))
     val certj = Dedup.certLedgerRead(s, s"$root/jac", "jaccard", 0.85)
       .agg(count(lit(1)).as("cert_jaccard_pairs"))
       .select(lit(0.85).as("cert_jaccard_tau"), col("cert_jaccard_pairs"))
@@ -8490,7 +8486,7 @@ object Catalog {
       "vec_id", "embedding", perCell = 3)
   }
 
-  /** [[Dedup.exactJaccardJoin]] under the oracle: EVERY pair with
+  /** [[Dedup.exactJoin]] under [[Dedup.Jaccard]] and the oracle: EVERY pair with
     * 3-shingle-set Jaccard ≥ 0.5 — corpus-wide, NO blocking key
     * (q21 is the blocked unigram sibling) — via prefix filtering in
     * Spark vs brute force in DuckDB, so the oracle directly
@@ -8518,8 +8514,8 @@ object Catalog {
       |  FROM ne a JOIN ne b ON a.doc_id < b.doc_id)
       |SELECT id_a, id_b, round(jac, 4) AS jaccard
       |FROM p WHERE jac >= 0.5""".stripMargin) { (s, d) =>
-    Dedup.exactJaccardJoin(Tables.documents(s, d), "doc_id", "text",
-      threshold = 0.5, shingleK = 3)
+    Dedup.exactJoin(Tables.documents(s, d), "doc_id", "text",
+      Dedup.Jaccard(0.5, shingleK = 3))
   }
 
   /** [[Profile.vocabGrowth]] under the oracle: Heaps'-law vocabulary
@@ -8987,7 +8983,7 @@ object Catalog {
           .select(lit("par").as("init"), col("n_vectors"), col("mean_cost")))
   }
 
-  /** [[Dedup.exactCosineJoin]] — q215's twin on the embedding side:
+  /** [[Dedup.exactJoin]] under [[Dedup.Cosine]] — q215's twin on the embedding side:
     * EVERY pair with cosine ≥ τ, exactly (pivot-angle banding, zero
     * false negatives by the spherical triangle inequality). The
     * oracle is deliberately BRUTE FORCE: an exact join's result is
@@ -9002,8 +8998,8 @@ object Catalog {
       |       round(list_cosine_similarity(a.vec, b.vec), 4) AS cos
       |FROM v a JOIN v b ON a.vec_id < b.vec_id
       |WHERE round(list_cosine_similarity(a.vec, b.vec), 4) >= 0.4""".stripMargin) { (s, d) =>
-    Dedup.exactCosineJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-      threshold = 0.4)
+    Dedup.exactJoin(Tables.embeddings(s, d), "vec_id", "embedding",
+      Dedup.Cosine(0.4))
   }
 
   /** Per-k CTE block for the q225 elbow oracle: md5-rule seed pick,
@@ -9107,25 +9103,21 @@ object Catalog {
       .filter(pmod(col("vec_id"), lit(3)) === 0)
     val corpus = e.filter(pmod(col("vec_id"), lit(7)) =!= 0)
     val batch = e.filter(pmod(col("vec_id"), lit(7)) === 0)
-    val root = scratchDir(s, "q234_incremental_repair")
+    val root = freshScratch(s, "q234_incremental_repair")
     // the vec-index bootstrap and the label bootstrap both scan the
     // corpus but share no store — independent eager work, overlapped
     // (guide §2.6)
+    val cos = Dedup.Cosine(0.4)
     var labels: org.apache.spark.sql.DataFrame = null
     graft.operators.Par.concurrently(
-      () => Dedup.certVecIndexWrite(corpus, "vec_id", "embedding", root,
-        threshold = 0.4),
+      () => Dedup.certIndexWrite(corpus, "vec_id", "embedding", root, cos),
       () => labels = Dedup.connectedComponents(
-        Dedup.exactCosineJoin(corpus, "vec_id", "embedding",
-          threshold = 0.4).select("id_a", "id_b")))
-    val cross = Dedup.certVecIndexProbe(s, root, batch,
-        "vec_id", "embedding", threshold = 0.4)
-      .select(least(col("id_corpus"), col("id_batch")).as("id_a"),
-        greatest(col("id_corpus"), col("id_batch")).as("id_b"))
-    val self = Dedup.exactCosineJoin(batch, "vec_id", "embedding",
-      threshold = 0.4).select("id_a", "id_b")
+        Dedup.exactJoin(corpus, "vec_id", "embedding", cos)
+          .select("id_a", "id_b")))
+    val cross = Dedup.certIndexProbe(s, root, batch, "vec_id", "embedding", cos)
     val updated = Dedup.incrementalComponents(labels,
-      cross.unionByName(self))
+      Dedup.certBatchPairs(batch, Some(cross), "vec_id", "embedding", cos)
+        .select("id_a", "id_b"))
     Dedup.repairSurvivors(e.select("vec_id"), updated, "vec_id")
   }
 
@@ -9177,25 +9169,24 @@ object Catalog {
     val root = freshScratch(s, "q235_repair_labels_store")
     // vec-index and label bootstraps write disjoint substores —
     // independent eager work, overlapped (guide §2.6)
+    val cos = Dedup.Cosine(0.4)
     graft.operators.Par.concurrently(
-      () => Dedup.certVecIndexWrite(corpus, "vec_id", "embedding",
-        s"$root/vec", threshold = 0.4),
+      () => Dedup.certIndexWrite(corpus, "vec_id", "embedding",
+        s"$root/vec", cos),
       () => Dedup.ccLabelsWrite(
         Dedup.connectedComponents(
-          Dedup.exactCosineJoin(corpus, "vec_id", "embedding",
-            threshold = 0.4).select("id_a", "id_b")),
+          Dedup.exactJoin(corpus, "vec_id", "embedding", cos)
+            .select("id_a", "id_b")),
         s"$root/labels", "cosine", 0.4))
     // compact FIRST: the fold below must compose with a base, not
     // just raw epochs (the crossing a long-running ingest hits daily)
     Maintenance.compactStore(s, s"$root/labels")
-    val cross = Dedup.certVecIndexProbe(s, s"$root/vec", batch,
-        "vec_id", "embedding", threshold = 0.4)
-      .select(least(col("id_corpus"), col("id_batch")).as("id_a"),
-        greatest(col("id_corpus"), col("id_batch")).as("id_b"))
-    val self = Dedup.exactCosineJoin(batch, "vec_id", "embedding",
-      threshold = 0.4).select("id_a", "id_b")
-    Dedup.ccLabelsFold(s, s"$root/labels", cross.unionByName(self),
-      "e1", "cosine", 0.4)
+    val cross = Dedup.certIndexProbe(s, s"$root/vec", batch,
+      "vec_id", "embedding", cos)
+    // the fold's returned labeling is pinned and unused here: free it
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(Dedup.ccLabelsFold(s, s"$root/labels",
+      Dedup.certBatchPairs(batch, Some(cross), "vec_id", "embedding", cos)
+        .select("id_a", "id_b"), "e1", "cosine", 0.4))
     Dedup.repairSurvivorsFromStore(s, e.select("vec_id"), "vec_id",
       s"$root/labels", "cosine", 0.4)
   }
@@ -9273,19 +9264,19 @@ object Catalog {
     // actions, overlapped (guide §2.6); only the labels fold depends
     // on (reads) the cosine ledger and runs after.
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(Dedup.exactJaccardJoin(docs, "doc_id",
-        "text", threshold = 0.85, shingleK = 3), s"$root/jac",
-        "jaccard", 0.85),
-      () => Dedup.certLedgerWrite(Dedup.exactCosineJoin(emb, "vec_id",
-        "embedding", threshold = 0.4), s"$root/cos", "cosine", 0.4),
+      () => Dedup.certLedgerWrite(Dedup.exactJoin(docs, "doc_id", "text",
+        Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac", "jaccard", 0.85),
+      () => Dedup.certLedgerWrite(Dedup.exactJoin(emb, "vec_id", "embedding",
+        Dedup.Cosine(0.4)), s"$root/cos", "cosine", 0.4),
       () => Quality.qualityCutsWrite(s, s"$root/cuts",
         Quality.qualityCuts(docs.select(col("source"),
           TextFunctions.alphaRatio(col("text")).as("alpha_ratio")),
           "alpha_ratio", Seq("source")),
         "alpha_ratio", Seq("source")))
-    Dedup.ccLabelsFold(s, s"$root/labels",
+    // the fold's returned labeling is pinned and unused here: free it
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(Dedup.ccLabelsFold(s, s"$root/labels",
       Dedup.certLedgerRead(s, s"$root/cos", "cosine", 0.4)
-        .select("id_a", "id_b"), "base", "cosine", 0.4)
+        .select("id_a", "id_b"), "base", "cosine", 0.4))
     // THE CARD: store reads + one docs profile pass, nothing else
     graft.operators.Audit.cardFromStores(s, docs, "text",
       s"$root/jac", 0.85, s"$root/cos", 0.4, s"$root/labels",
@@ -9331,14 +9322,13 @@ object Catalog {
     val docs = Tables.documents(s, d)
     val corpus = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
     val root = freshScratch(s, "q237_cert_erasure")
-    Dedup.certTextIndexWrite(corpus, "doc_id", "text", s"$root/idx",
-      threshold = 0.85, shingleK = 1)
+    val jac = Dedup.Jaccard(0.85)
+    Dedup.certIndexWrite(corpus, "doc_id", "text", s"$root/idx", jac)
     val victims = corpus.filter(pmod(col("doc_id"), lit(11)) === 0)
       .select("doc_id")
     Maintenance.eraseStore(s, s"$root/idx", Maintenance.EraseRequest(victims))
-    Dedup.certTextIndexProbe(s, s"$root/idx",
-      docs.filter(pmod(col("doc_id"), lit(13)) === 0),
-      "doc_id", "text", threshold = 0.85, shingleK = 1)
+    Dedup.certIndexProbe(s, s"$root/idx",
+      docs.filter(pmod(col("doc_id"), lit(13)) === 0), "doc_id", "text", jac)
   }
 
   /** q237's discipline extended to the LEGACY band-index families
@@ -9652,9 +9642,10 @@ object Catalog {
     Similarity.simplifiedSilhouette(e, trained, "vec_id", "embedding")
   }
 
-  /** [[Dedup.certTextIndexProbe]] — incremental certification THROUGH
-    * the persisted index: the corpus's postings + `(id, n, hset)`
-    * fingerprint rows are written once ([[Dedup.certTextIndexWrite]],
+  /** [[Dedup.certIndexProbe]] under [[Dedup.Jaccard]] — incremental
+    * certification THROUGH the persisted index: the corpus's postings +
+    * `(id, n, hset)` fingerprint rows are written once
+    * ([[Dedup.certIndexWrite]],
     * the store round-trip sitting IN the checked lineage — the
     * q207/q209/q229 pattern), then the arriving batch (doc_id % 13 =
     * 0 plays the day's ingest) probes the STORE: corpus text is never
@@ -9678,18 +9669,17 @@ object Catalog {
       |SELECT id_corpus, id_batch, round(jac, 4) AS jaccard
       |FROM p WHERE jac >= 0.85""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val root = scratchDir(s, "q227_jaccard_against")
-    Dedup.certTextIndexWrite(
-      docs.filter(pmod(col("doc_id"), lit(13)) =!= 0),
-      "doc_id", "text", root, threshold = 0.85, shingleK = 1)
-    Dedup.certTextIndexProbe(s, root,
-      docs.filter(pmod(col("doc_id"), lit(13)) === 0),
-      "doc_id", "text", threshold = 0.85, shingleK = 1)
+    val root = freshScratch(s, "q227_jaccard_against")
+    val jac = Dedup.Jaccard(0.85)
+    Dedup.certIndexWrite(docs.filter(pmod(col("doc_id"), lit(13)) =!= 0),
+      "doc_id", "text", root, jac)
+    Dedup.certIndexProbe(s, root,
+      docs.filter(pmod(col("doc_id"), lit(13)) === 0), "doc_id", "text", jac)
   }
 
-  /** [[Dedup.certVecIndexProbe]] — the embedding twin of q227, also
-    * store-backed: corpus vectors banded ONCE under pivots FROZEN in
-    * the manifest ([[Dedup.certVecIndexWrite]]), then the batch
+  /** [[Dedup.certIndexProbe]] under [[Dedup.Cosine]] — the embedding
+    * twin of q227, also store-backed: corpus vectors banded ONCE under
+    * pivots FROZEN in the manifest ([[Dedup.certIndexWrite]]), then the batch
     * probes the store — corpus unreplicated, batch carrying the 9×
     * band neighborhood, no per-batch corpus banding or pivot
     * re-pick. */
@@ -9702,13 +9692,12 @@ object Catalog {
       |FROM v c JOIN v b ON c.vec_id % 7 <> 0 AND b.vec_id % 7 = 0
       |WHERE round(list_cosine_similarity(c.vec, b.vec), 4) >= 0.4""".stripMargin) { (s, d) =>
     val e = Tables.embeddings(s, d)
-    val root = scratchDir(s, "q228_cosine_against")
-    Dedup.certVecIndexWrite(
-      e.filter(pmod(col("vec_id"), lit(7)) =!= 0),
-      "vec_id", "embedding", root, threshold = 0.4)
-    Dedup.certVecIndexProbe(s, root,
-      e.filter(pmod(col("vec_id"), lit(7)) === 0),
-      "vec_id", "embedding", threshold = 0.4)
+    val root = freshScratch(s, "q228_cosine_against")
+    val cos = Dedup.Cosine(0.4)
+    Dedup.certIndexWrite(e.filter(pmod(col("vec_id"), lit(7)) =!= 0),
+      "vec_id", "embedding", root, cos)
+    Dedup.certIndexProbe(s, root,
+      e.filter(pmod(col("vec_id"), lit(7)) === 0), "vec_id", "embedding", cos)
   }
 
   /** The certification ledger's induction claim, proven as a query:
@@ -9741,14 +9730,8 @@ object Catalog {
       .filter(pmod(col("doc_id"), lit(3)) === 0)
     val corpus = docs.filter(pmod(col("doc_id"), lit(13)) =!= 0)
     val batch = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
-    val root = scratchDir(s, "q230_cert_ledger")
-    val cross = Dedup.exactJaccardJoinAgainst(corpus, batch,
-        "doc_id", "text", threshold = 0.85, shingleK = 1)
-      .select(least(col("id_corpus"), col("id_batch")).as("id_a"),
-        greatest(col("id_corpus"), col("id_batch")).as("id_b"),
-        col("jaccard"))
-    val self = Dedup.exactJaccardJoin(batch, "doc_id", "text",
-      threshold = 0.85, shingleK = 1)
+    val root = freshScratch(s, "q230_cert_ledger")
+    val jac = Dedup.Jaccard(0.85)
     // the bootstrap write and the batch pair computation share no
     // store — overlap them (guide §2.6); the append itself (which
     // needs the bootstrapped manifest) runs after, reading the
@@ -9756,15 +9739,15 @@ object Catalog {
     var pairs: org.apache.spark.sql.DataFrame = null
     graft.operators.Par.concurrently(
       () => Dedup.certLedgerWrite(
-        Dedup.exactJaccardJoin(corpus, "doc_id", "text",
-          threshold = 0.85, shingleK = 1),
+        Dedup.exactJoin(corpus, "doc_id", "text", jac),
         root, "jaccard", 0.85),
-      () => pairs = stageBarrier(cross.unionByName(self)))
+      () => pairs = stageBarrier(Dedup.certBatchPairs(batch,
+        Some(Dedup.exactJoinAgainst(corpus, batch, "doc_id", "text", jac)),
+        "doc_id", "text", jac)))
     Dedup.certLedgerAppend(s, root, pairs, "batch-1",
       "jaccard", 0.85)
     val ledger = Dedup.certLedgerRead(s, root, "jaccard", 0.85)
-    val full = Dedup.exactJaccardJoin(docs, "doc_id", "text",
-      threshold = 0.85, shingleK = 1)
+    val full = Dedup.exactJoin(docs, "doc_id", "text", jac)
     val missed = full.join(ledger, Seq("id_a", "id_b", "jaccard"),
       "left_anti").agg(count(lit(1)).as("n_missed"))
     val spurious = ledger.join(full, Seq("id_a", "id_b", "jaccard"),
@@ -9778,8 +9761,8 @@ object Catalog {
 
   /** q230's induction on the EMBEDDING side — same ledger family,
     * metric "cosine": bootstrap with the corpus exact cosine join,
-    * append one batch's cross ([[Dedup.exactCosineJoinAgainst]]) +
-    * self pairs, assert pair-for-pair equality with the full join.
+    * append one batch's [[Dedup.certBatchPairs]] (cross pairs from
+    * [[Dedup.exactJoinAgainst]] + self pairs), assert pair-for-pair equality with the full join.
     * Together with q230 this pins that the certification ledger is
     * metric-agnostic in PRACTICE, not just by schema. */
   val q231CertLedgerCos = q("q231_cert_ledger_cos",
@@ -9796,27 +9779,21 @@ object Catalog {
       .filter(pmod(col("vec_id"), lit(3)) === 0)
     val corpus = e.filter(pmod(col("vec_id"), lit(7)) =!= 0)
     val batch = e.filter(pmod(col("vec_id"), lit(7)) === 0)
-    val root = scratchDir(s, "q231_cert_ledger_cos")
-    val cross = Dedup.exactCosineJoinAgainst(corpus, batch,
-        "vec_id", "embedding", threshold = 0.4)
-      .select(least(col("id_corpus"), col("id_batch")).as("id_a"),
-        greatest(col("id_corpus"), col("id_batch")).as("id_b"),
-        col("cos"))
-    val self = Dedup.exactCosineJoin(batch, "vec_id", "embedding",
-      threshold = 0.4)
+    val root = freshScratch(s, "q231_cert_ledger_cos")
+    val cos = Dedup.Cosine(0.4)
     // same overlap as q230: bootstrap write ∥ batch pair computation
     var pairs: org.apache.spark.sql.DataFrame = null
     graft.operators.Par.concurrently(
       () => Dedup.certLedgerWrite(
-        Dedup.exactCosineJoin(corpus, "vec_id", "embedding",
-          threshold = 0.4),
+        Dedup.exactJoin(corpus, "vec_id", "embedding", cos),
         root, "cosine", 0.4),
-      () => pairs = stageBarrier(cross.unionByName(self)))
+      () => pairs = stageBarrier(Dedup.certBatchPairs(batch,
+        Some(Dedup.exactJoinAgainst(corpus, batch, "vec_id", "embedding", cos)),
+        "vec_id", "embedding", cos)))
     Dedup.certLedgerAppend(s, root, pairs, "batch-1",
       "cosine", 0.4)
     val ledger = Dedup.certLedgerRead(s, root, "cosine", 0.4)
-    val full = Dedup.exactCosineJoin(e, "vec_id", "embedding",
-      threshold = 0.4)
+    val full = Dedup.exactJoin(e, "vec_id", "embedding", cos)
     val missed = full.join(ledger, Seq("id_a", "id_b", "cos"),
       "left_anti").agg(count(lit(1)).as("n_missed"))
     val spurious = ledger.join(full, Seq("id_a", "id_b", "cos"),
@@ -9908,7 +9885,7 @@ object Catalog {
     def scored(df: org.apache.spark.sql.DataFrame) = df.select(
       col("doc_id"), col("source"),
       TextFunctions.tokenCount(col("text")).cast("double").as("score"))
-    val root = scratchDir(s, "q229_quality_cuts")
+    val root = freshScratch(s, "q229_quality_cuts")
     Quality.qualityCutsWrite(s, root,
       Quality.qualityCuts(scored(docs.filter(pmod(col("doc_id"), lit(9)) =!= 0)),
         "score", Seq("source")),

@@ -952,14 +952,19 @@ object Streaming {
 
   // ------------------------------------------------ certification sinks
 
-  /** THE certification sinks' body (text and embedding): each
-    * non-empty micro-batch probes the persisted certification index
-    * (`probe`, None while the index is empty) and exact-joins against
-    * itself (`selfPairs`); the pairs land in the ledger as one epoch,
-    * optionally fold into the `cc_labels` store, then the batch's own
-    * rows land in the index (`append`) and the batch in the corpus —
+  /** THE certification sinks' body, for either
+    * [[graft.operators.Dedup.CertMetric]]: each non-empty micro-batch's
+    * certified pairs ([[graft.operators.Dedup.certBatchPairs]] — its
+    * probe of the persisted certification index, None while the index
+    * is empty, plus its own exact join) land in the ledger as one
+    * epoch, optionally fold into the `cc_labels` store, then the
+    * batch's own rows land in the index and the batch in the corpus —
     * so after every activation the ledger equals the full corpus-wide
-    * exact join over everything ever ingested, by induction.
+    * exact join over everything ever ingested, by induction. A store
+    * whose geometry derives from data (cosine pivots) freezes its
+    * manifest from the first batch
+    * ([[graft.operators.Dedup.certIndexMetaWriteIfAbsent]] —
+    * deterministic, replay-idempotent).
     *
     * Ordering: ledger BEFORE labels BEFORE index BEFORE corpus, and the
     * probe EXCLUDES this epoch's own index partial — a crash (or an
@@ -968,7 +973,11 @@ object Streaming {
     * rewrites the same rows; a replay across an index compaction
     * refuses loudly inside the store read rather than double-
     * certifying. The ledger (and labels) manifest is checked at
-    * activation: appends at another metric/τ refuse, never merge.
+    * activation: appends at another metric/τ refuse, never merge. A
+    * standing corpus over an EMPTY index refuses at activation —
+    * unless the corpus has no indexable row (legitimate, not torn: the
+    * bootstrap writer could not index it either; this rare branch pays
+    * one limit(1)-bounded corpus scan).
     *
     * Labels are the ledger's derived view: an EMPTY labels store folds
     * the full ledger minus this epoch plus this epoch's pairs, so
@@ -978,27 +987,37 @@ object Streaming {
     * min-label monotonicity makes every replay idempotent. */
   private def certSink(stream: DataFrame, spark: SparkSession, sink: String,
                        corpusPath: String, ledgerPath: String,
-                       indexPath: String, idCol: String, checkpoint: String,
-                       metric: String, score: String, threshold: Double,
-                       labelsPath: Option[String], indexMeta: Option[IndexMeta],
-                       guard: => Unit)(
-      selfPairs: DataFrame => DataFrame,
-      probe: (DataFrame, String) => Option[DataFrame],
-      append: (DataFrame, String) => Unit): StreamingQuery = {
+                       indexPath: String, idCol: String, valueCol: String,
+                       checkpoint: String, metric: Dedup.CertMetric,
+                       labelsPath: Option[String]): StreamingQuery = {
+    val (name, threshold) = (metric.name, metric.threshold)
     val stores = Seq(Store("corpus", corpusPath),
-      store("ledger", ledgerPath, Dedup.certLedgerMeta(metric, threshold))) ++
-      indexMeta.map(store("index", indexPath, _)) ++
-      labelsPath.map(store("labels", _, Dedup.ccLabelsMeta(metric, threshold)))
+      store("ledger", ledgerPath, Dedup.certLedgerMeta(name, threshold))) ++
+      metric.fixedMeta.map(store("index", indexPath, _)) ++
+      labelsPath.map(store("labels", _, Dedup.ccLabelsMeta(name, threshold)))
     ingestSink(stream, spark, sink, checkpoint, stores,
       // the ledger's erase filter / the RTBF audit sweep read id_a/id_b
       // as longs — string-keyed pairs would be silently un-erasable
-      integralIdCols = Seq(idCol), guard = guard) { (batch, epoch) =>
+      integralIdCols = Seq(idCol),
+      guard = requireIndexedCorpus(spark, sink, corpusPath, indexPath,
+        Dedup.certIndexNonEmpty(spark, indexPath, metric),
+        !Dedup.certHasIndexable(EpochIndex.read(spark, corpusPath,
+          observed = false, bootstrapName = sink), idCol, valueCol, metric),
+        "certify only self-pairs and the ledger would silently diverge " +
+          "from the full corpus-wide exact join",
+        "certIndexWrite (and the ledger with certLedgerWrite)")) {
+      (batch, epoch) =>
       if (!batch.isEmpty) {
-        val self = selfPairs(batch)
-        val pairs = epoch.pin(probe(batch, epoch.id).fold(self)(
-          _.select(least(col("id_corpus"), col("id_batch")).as("id_a"),
-            greatest(col("id_corpus"), col("id_batch")).as("id_b"),
-            col(score)).unionByName(self)))
+        Dedup.certIndexMetaWriteIfAbsent(spark, indexPath, batch, idCol,
+          valueCol, metric)
+        val cross = Option.when(Dedup.certIndexNonEmpty(spark, indexPath, metric)) {
+          val (pairs, free) = Dedup.certIndexProbePinned(spark, indexPath,
+            batch, idCol, valueCol, metric, excludeEpoch = Some(epoch.id))
+          epoch.onRelease(free)
+          pairs
+        }
+        val pairs = epoch.pin(
+          Dedup.certBatchPairs(batch, cross, idCol, valueCol, metric))
         epoch.write(pairs, ledgerPath)
         labelsPath.foreach { lp =>
           val epochPairs = pairs.select("id_a", "id_b")
@@ -1010,28 +1029,24 @@ object Streaming {
               .select("id_a", "id_b").unionByName(epochPairs)
           // the fold returns the updated labeling pinned: free it with the epoch
           val labels = Dedup.ccLabelsFold(spark, lp, foldPairs, epoch.id,
-            metric, threshold)
+            name, threshold)
           epoch.onRelease(() => release(labels))
         }
-        append(batch, epoch.id)
+        Dedup.certIndexAppend(spark, indexPath, batch, idCol, valueCol,
+          epoch.id, metric)
         epoch.write(batch, corpusPath)
       }
     }
   }
 
-  /** Streaming dedup certification — q230's induction claim run as a
-    * LIVE loop, store-backed ([[certSink]]): each micro-batch probes
-    * the PERSISTED text certification index
-    * ([[graft.operators.Dedup.certTextIndexProbe]] — fingerprint rows,
+  /** Streaming dedup certification ([[certSink]] under
+    * [[graft.operators.Dedup.Jaccard]]) — q230's induction claim run as
+    * a LIVE loop over the persisted `cert_text` index: fingerprint rows,
     * so corpus text is never re-read, re-tokenized or re-df-counted per
-    * micro-batch; scan cost ∝ batch). Bootstrap ledger + index from the
-    * one-time [[graft.operators.Dedup.exactJaccardJoin]] /
-    * [[graft.operators.Dedup.certTextIndexWrite]] pass, or start from
-    * empty for a corpus born under this sink. A standing corpus over an
-    * EMPTY index refuses at activation — unless the corpus has no
-    * indexable row at this shingleK (legitimate, not torn: the
-    * bootstrap writer could not index it either; this rare branch pays
-    * one limit(1)-bounded corpus scan). `labelsPath` keeps the
+    * micro-batch (scan cost ∝ batch). Bootstrap ledger + index from the
+    * one-time [[graft.operators.Dedup.exactJoin]] /
+    * [[graft.operators.Dedup.certIndexWrite]] pass, or start from empty
+    * for a corpus born under this sink. `labelsPath` keeps the
     * persisted repair labeling (metric="jaccard") current, so the live
     * certified-repair view is a store read
     * ([[graft.operators.Dedup.repairSurvivorsFromStore]]). */
@@ -1045,38 +1060,20 @@ object Streaming {
                      buckets: Int = 64,
                      labelsPath: Option[String] = None): StreamingQuery =
     certSink(stream, spark, "certIngestSink", corpusPath, ledgerPath,
-      indexPath, idCol, checkpoint, "jaccard", "jaccard", threshold,
-      labelsPath, Some(Dedup.certTextMeta(threshold, shingleK, maxBucket, buckets)),
-      guard = requireIndexedCorpus(spark, "certIngestSink", corpusPath,
-        indexPath, Dedup.certTextIndexNonEmpty(spark, indexPath),
-        !Dedup.certTextHasIndexable(EpochIndex.read(spark, corpusPath,
-          observed = false, bootstrapName = "certIngestSink"), textCol, shingleK),
-        certHazard, "certTextIndexWrite (and the ledger with certLedgerWrite)"))(
-      selfPairs = Dedup.exactJaccardJoin(_, idCol, textCol, threshold,
-        shingleK, maxBucket),
-      probe = (batch, epoch) =>
-        Option.when(Dedup.certTextIndexNonEmpty(spark, indexPath))(
-          Dedup.certTextIndexProbe(spark, indexPath, batch, idCol, textCol,
-            threshold, shingleK, maxBucket, buckets, excludeEpoch = Some(epoch))),
-      append = Dedup.certTextIndexAppend(spark, indexPath, _, idCol, textCol,
-        _, threshold, shingleK, maxBucket, buckets))
+      indexPath, idCol, textCol, checkpoint,
+      Dedup.Jaccard(threshold, shingleK, maxBucket, buckets), labelsPath)
 
-  private val certHazard = "certify only self-pairs and the ledger would " +
-    "silently diverge from the full corpus-wide exact join"
-
-  /** [[certIngestSink]]'s EMBEDDING twin — streaming SEMANTIC
-    * certification over the cert_vec store ([[certSink]]): each
-    * micro-batch of vectors probes the persisted banded index (frozen
-    * pivots, corpus vectors never re-banded per batch), so the
-    * metric="cosine" ledger equals the full corpus-wide exact cosine
-    * join over everything ingested after every activation. A store
-    * born under this sink freezes its pivot geometry from the FIRST
-    * batch ([[graft.operators.Dedup.certVecMetaWriteIfAbsent]] —
-    * deterministic, replay-idempotent; the one manifest this sink
-    * writes itself, since it is derived from data); bootstrap with
-    * `certVecIndexWrite` + `certLedgerWrite` when a corpus predates
-    * the stream. A standing corpus of only zero-norm vectors
-    * legitimately has an empty index (they cannot band). */
+  /** [[certIngestSink]]'s EMBEDDING twin ([[certSink]] under
+    * [[graft.operators.Dedup.Cosine]]) — streaming SEMANTIC
+    * certification over the `cert_vec` store: each micro-batch of
+    * vectors probes the persisted banded index (frozen pivots, corpus
+    * vectors never re-banded per batch), so the metric="cosine" ledger
+    * equals the full corpus-wide exact cosine join over everything
+    * ingested after every activation. A store born under this sink
+    * freezes its pivots from the FIRST batch; bootstrap with
+    * `certIndexWrite` + `certLedgerWrite` when a corpus predates the
+    * stream. A standing corpus of only zero-norm vectors legitimately
+    * has an empty index (they cannot band). */
   def certVecIngestSink(stream: DataFrame, spark: SparkSession,
                         corpusPath: String, ledgerPath: String,
                         indexPath: String,
@@ -1086,31 +1083,8 @@ object Streaming {
                         roundTo: Int = 4,
                         labelsPath: Option[String] = None): StreamingQuery =
     certSink(stream, spark, "certVecIngestSink", corpusPath, ledgerPath,
-      indexPath, idCol, checkpoint, "cosine", "cos", threshold,
-      labelsPath, indexMeta = None,
-      guard = requireIndexedCorpus(spark, "certVecIngestSink", corpusPath,
-        indexPath, Dedup.certVecIndexNonEmpty(spark, indexPath),
-        !Dedup.certVecHasIndexable(EpochIndex.read(spark, corpusPath,
-          observed = false, bootstrapName = "certVecIngestSink"), vecCol),
-        certHazard, "certVecIndexWrite (and the ledger with certLedgerWrite)"))(
-      // a 1-row batch cannot supply exactCosineJoin's 2 blocking pivots;
-      // its self-pair set comes from the block-local brute verifier
-      selfPairs = batch =>
-        if (batch.limit(2).count() >= 2)
-          Dedup.exactCosineJoin(batch, idCol, vecCol, threshold,
-            nPivots, maxCell, roundTo)
-        else Dedup.embeddingNearDup(batch.withColumn("_one", lit(1)),
-            idCol, vecCol, "_one", threshold, roundTo)
-          .select(col("id_a"), col("id_b"), col("cos")),
-      probe = { (batch, epoch) =>
-        Dedup.certVecMetaWriteIfAbsent(spark, indexPath, batch,
-          idCol, vecCol, threshold, nPivots, maxCell, roundTo)
-        Option.when(Dedup.certVecIndexNonEmpty(spark, indexPath))(
-          Dedup.certVecIndexProbe(spark, indexPath, batch, idCol, vecCol,
-            threshold, maxCell, roundTo, excludeEpoch = Some(epoch)))
-      },
-      append = Dedup.certVecIndexAppend(spark, indexPath, _, idCol, vecCol,
-        _, threshold, maxCell, roundTo))
+      indexPath, idCol, vecCol, checkpoint,
+      Dedup.Cosine(threshold, nPivots, maxCell, roundTo), labelsPath)
 
   // ------------------------------------------------------- near-dup sink
 

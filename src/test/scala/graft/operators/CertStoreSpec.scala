@@ -3,9 +3,9 @@ package graft.operators
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** The persisted certification index stores: probes must equal the
-  * text-scanning against-joins EXACTLY (both are exact, so equality is
-  * set equality on (id, id, score)), appends must stay consistent with
+/** The persisted certification index stores: probes must equal brute
+  * force EXACTLY (both are exact, so equality is set equality on
+  * (id, id, score)), appends must stay consistent with
   * the frozen geometry, and the store round-trip must survive
   * compaction and refuse parameter mixups — the properties that make
   * "cost ∝ batch" true for scans, not just joins. */
@@ -33,20 +33,40 @@ class CertStoreSpec extends SparkSpecBase {
     (202L, "iota kappa lambda mu"),     // copy of 3 (bootstrap corpus)
     (203L, "psi omega aleph bet"))
 
+  /** Brute-force judge of a probe: every (corpus, batch) pair of the
+    * block-local verifier over corpus ∪ batch in one constant block
+    * (corpus ids sit below batch ids), scored at the probes' 4dp. */
   private def jaccardAgainst(corpus: Seq[(Long, String)],
-                             batch: Seq[(Long, String)], t: Double) =
-    Dedup.exactJaccardJoinAgainst(corpus.toDF("doc_id", "text"),
-      batch.toDF("doc_id", "text"), "doc_id", "text", threshold = t,
-      shingleK = 1).as[(Long, Long, Double)].collect().toSet
+                             batch: Seq[(Long, String)], t: Double) = {
+    val boundary = batch.map(_._1).min
+    assert(corpus.forall(_._1 < boundary))
+    Dedup.ngramJaccardPairs((corpus ++ batch).toDF("doc_id", "text")
+        .withColumn("blk", lit(1)), "doc_id", "text", "blk", k = 1,
+        threshold = t)
+      .filter(col("id_a") < boundary && col("id_b") >= boundary)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4))
+      .as[(Long, Long, Double)].collect().toSet
+  }
 
-  test("certTextIndex: probe ≡ exactJaccardJoinAgainst; appended epochs join the standing corpus") {
+  /** [[jaccardAgainst]]'s cosine twin: the block-local brute cosine. */
+  private def cosineAgainst(corpus: Seq[(Long, Array[Float])],
+                            batch: Seq[(Long, Array[Float])], t: Double) = {
+    val boundary = batch.map(_._1).min
+    assert(corpus.forall(_._1 < boundary))
+    Dedup.embeddingNearDup((corpus ++ batch).toDF("vec_id", "embedding")
+        .withColumn("blk", lit(1)), "vec_id", "embedding", "blk", t)
+      .filter(col("id_a") < boundary && col("id_b") >= boundary)
+      .as[(Long, Long, Double)].collect().toSet
+  }
+
+  test("certTextIndex: probe ≡ brute force; appended epochs join the standing corpus") {
     val root = tmp("jac")
     val corpus = corpusDocs.toDF("doc_id", "text")
-    Dedup.certTextIndexWrite(corpus, "doc_id", "text", root,
-      threshold = 0.5, shingleK = 1)
+    Dedup.certIndexWrite(corpus, "doc_id", "text", root,
+      Dedup.Jaccard(0.5, shingleK = 1))
     def probe(batch: Seq[(Long, String)]) =
-      Dedup.certTextIndexProbe(spark, root, batch.toDF("doc_id", "text"),
-        "doc_id", "text", threshold = 0.5, shingleK = 1)
+      Dedup.certIndexProbe(spark, root, batch.toDF("doc_id", "text"), "doc_id",
+        "text", Dedup.Jaccard(0.5, shingleK = 1))
         .as[(Long, Long, Double)].collect().toSet
     val got1 = probe(batch1Docs)
     assert(got1 === jaccardAgainst(corpusDocs, batch1Docs, 0.5))
@@ -55,9 +75,8 @@ class CertStoreSpec extends SparkSpecBase {
     // append batch1, probe batch2: the standing corpus now includes
     // batch1 — prefix rows cut under batch1's OWN df order (the
     // one-sided lemma is order-free, so this stays exact)
-    Dedup.certTextIndexAppend(spark, root,
-      batch1Docs.toDF("doc_id", "text"), "doc_id", "text", "b1",
-      threshold = 0.5, shingleK = 1)
+    Dedup.certIndexAppend(spark, root, batch1Docs.toDF("doc_id", "text"), "doc_id",
+      "text", "b1", Dedup.Jaccard(0.5, shingleK = 1))
     val got2 = probe(batch2Docs)
     assert(got2 === jaccardAgainst(corpusDocs ++ batch1Docs.take(3),
       batch2Docs, 0.5))
@@ -66,14 +85,12 @@ class CertStoreSpec extends SparkSpecBase {
     assert(got2.contains((3L, 202L, 1.0)),
       "pair against a BOOTSTRAP doc missing")
     // replayed append of the same epoch rewrites, never duplicates
-    Dedup.certTextIndexAppend(spark, root,
-      batch1Docs.toDF("doc_id", "text"), "doc_id", "text", "b1",
-      threshold = 0.5, shingleK = 1)
+    Dedup.certIndexAppend(spark, root, batch1Docs.toDF("doc_id", "text"), "doc_id",
+      "text", "b1", Dedup.Jaccard(0.5, shingleK = 1))
     assert(probe(batch2Docs) === got2)
     // the streaming replay hook: excluding b1 probes the pre-append corpus
-    val excl = Dedup.certTextIndexProbe(spark, root,
-      batch2Docs.toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, shingleK = 1, excludeEpoch = Some("b1"))
+    val excl = Dedup.certIndexProbe(spark, root, batch2Docs.toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1), excludeEpoch = Some("b1"))
       .as[(Long, Long, Double)].collect().toSet
     assert(excl === jaccardAgainst(corpusDocs, batch2Docs, 0.5))
     // identity-fold compaction via the maintenance dispatch preserves
@@ -86,9 +103,8 @@ class CertStoreSpec extends SparkSpecBase {
     // tau-specific), so the manifest check is load-bearing
     for ((t, k) <- Seq((0.8, 1), (0.5, 3))) {
       val e = intercept[Exception] {
-        Dedup.certTextIndexProbe(spark, root,
-          batch2Docs.toDF("doc_id", "text"), "doc_id", "text",
-          threshold = t, shingleK = k)
+        Dedup.certIndexProbe(spark, root, batch2Docs.toDF("doc_id", "text"),
+          "doc_id", "text", Dedup.Jaccard(t, shingleK = k))
       }
       assert(e.getMessage.contains("do not match") ||
         e.getMessage.contains("mismatch"), e.getMessage)
@@ -108,25 +124,24 @@ class CertStoreSpec extends SparkSpecBase {
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
     vecs.toDF("vec_id", "embedding").write.parquet(s"$dir/vecs")
     val jacRoot = tmp("jacdel"); val vecRoot = tmp("vecdel")
-    Dedup.certTextIndexWrite(spark.read.parquet(s"$dir/docs"),
-      "doc_id", "text", jacRoot, threshold = 0.5, shingleK = 1)
-    Dedup.certVecIndexWrite(spark.read.parquet(s"$dir/vecs"),
-      "vec_id", "embedding", vecRoot, threshold = 0.4)
+    Dedup.certIndexWrite(spark.read.parquet(s"$dir/docs"), "doc_id", "text", jacRoot,
+      Dedup.Jaccard(0.5, shingleK = 1))
+    Dedup.certIndexWrite(spark.read.parquet(s"$dir/vecs"), "vec_id", "embedding",
+      vecRoot, Dedup.Cosine(0.4))
     def rmrf(p: String): Unit = {
       val f = new java.io.File(p)
       if (f.isDirectory) f.listFiles.foreach(c => rmrf(c.getPath))
       f.delete(); ()
     }
     rmrf(s"$dir/docs"); rmrf(s"$dir/vecs")
-    val jac = Dedup.certTextIndexProbe(spark, jacRoot,
-      batch1Docs.toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, shingleK = 1)
+    val jac = Dedup.certIndexProbe(spark, jacRoot, batch1Docs.toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1))
       .as[(Long, Long, Double)].collect().toSet
     assert(jac === jaccardAgainst(corpusDocs, batch1Docs, 0.5))
-    val cos = Dedup.certVecIndexProbe(spark, vecRoot,
+    val cos = Dedup.certIndexProbe(spark, vecRoot,
       vecs.take(5).map { case (i, v) => (i + 100L, v) }
         .toDF("vec_id", "embedding"),
-      "vec_id", "embedding", threshold = 0.4)
+      "vec_id", "embedding", Dedup.Cosine(0.4))
       .as[(Long, Long, Double)].collect()
     assert(cos.nonEmpty, "re-ingested vectors must certify against the store")
   }
@@ -175,13 +190,12 @@ class CertStoreSpec extends SparkSpecBase {
     try {
       // ---- text side: one-doc batch touches ≤ its-tokens buckets
       val jacRoot = tmp("jacprune")
-      Dedup.certTextIndexWrite(corpusDocs.toDF("doc_id", "text"),
-        "doc_id", "text", jacRoot, threshold = 0.5, shingleK = 1,
-        buckets = 8)
+      Dedup.certIndexWrite(corpusDocs.toDF("doc_id", "text"), "doc_id", "text",
+        jacRoot, Dedup.Jaccard(0.5, shingleK = 1, buckets = 8))
       seen.clear()
       val oneDoc = Seq((900L, "alpha beta")).toDF("doc_id", "text")
-      val jProbe = Dedup.certTextIndexProbe(spark, jacRoot, oneDoc,
-        "doc_id", "text", threshold = 0.5, shingleK = 1, buckets = 8)
+      val jProbe = Dedup.certIndexProbe(spark, jacRoot, oneDoc, "doc_id", "text",
+        Dedup.Jaccard(0.5, shingleK = 1, buckets = 8))
       def eagerScans(frag: String) = {
         import scala.jdk.CollectionConverters._
         val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -225,11 +239,11 @@ class CertStoreSpec extends SparkSpecBase {
       def v() = Array.fill(8)(rnd.nextGaussian().toFloat)
       val vecRoot = tmp("vecprune")
       val corpus = (0 until 60).map(i => (i.toLong, v()))
-      Dedup.certVecIndexWrite(corpus.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", vecRoot, threshold = 0.9)
-      val vProbe = Dedup.certVecIndexProbe(spark, vecRoot,
+      Dedup.certIndexWrite(corpus.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        vecRoot, Dedup.Cosine(0.9))
+      val vProbe = Dedup.certIndexProbe(spark, vecRoot,
         Seq((900L, v())).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.9)
+        "vec_id", "embedding", Dedup.Cosine(0.9))
       val bands = scansOf(vProbe, "/bands")
       assert(bands.nonEmpty, "no band scan in the probe plan")
       assert(bands.forall(_.partitionFilters.nonEmpty),
@@ -253,19 +267,18 @@ class CertStoreSpec extends SparkSpecBase {
     val root = tmp("jacflood")
     val flood = Seq.tabulate(8)(i => (200L + i, s"shared u$i"))
       .toDF("doc_id", "text")
-    Dedup.certTextIndexWrite(flood, "doc_id", "text", root,
-      threshold = 0.5, shingleK = 1, maxBucket = 3)
+    Dedup.certIndexWrite(flood, "doc_id", "text", root,
+      Dedup.Jaccard(0.5, shingleK = 1, maxBucket = 3))
     val e = intercept[Exception] {
-      Dedup.certTextIndexProbe(spark, root,
-        batch1Docs.toDF("doc_id", "text"), "doc_id", "text",
-        threshold = 0.5, shingleK = 1, maxBucket = 3).collect()
+      Dedup.certIndexProbe(spark, root, batch1Docs.toDF("doc_id", "text"), "doc_id",
+        "text", Dedup.Jaccard(0.5, shingleK = 1, maxBucket = 3)).collect()
     }
     assert(e.getMessage.contains("prefix bucket overflow"), e.getMessage)
   }
 
   // -------------------------------------------------------- cosine side
 
-  test("certVecIndex: frozen pivots; probe ≡ exactCosineJoinAgainst across appends") {
+  test("certVecIndex: frozen pivots; probe ≡ brute force across appends") {
     val rnd = new scala.util.Random(97)
     def noise(dim: Int) = Array.fill(dim)(rnd.nextGaussian().toFloat)
     def near(base: Array[Float]) =
@@ -279,34 +292,25 @@ class CertStoreSpec extends SparkSpecBase {
     val b2Rows = (200 until 204).map(i => (i.toLong, near(c1))) ++
       (204 until 210).map(i => (i.toLong, noise(8)))
     val corpus = corpusRows.toDF("vec_id", "embedding")
-    def against(c: Seq[(Long, Array[Float])], b: Seq[(Long, Array[Float])],
-                t: Double) =
-      Dedup.exactCosineJoinAgainst(c.toDF("vec_id", "embedding"),
-        b.toDF("vec_id", "embedding"), "vec_id", "embedding", t)
-        .as[(Long, Long, Double)].collect().toSet
     for (tau <- Seq(0.4, 0.9)) {
       val root = tmp(s"vec$tau")
-      Dedup.certVecIndexWrite(corpus, "vec_id", "embedding", root,
-        threshold = tau)
+      Dedup.certIndexWrite(corpus, "vec_id", "embedding", root, Dedup.Cosine(tau))
       def probe(b: Seq[(Long, Array[Float])]) =
-        Dedup.certVecIndexProbe(spark, root,
-          b.toDF("vec_id", "embedding"), "vec_id", "embedding",
-          threshold = tau).as[(Long, Long, Double)].collect().toSet
+        Dedup.certIndexProbe(spark, root, b.toDF("vec_id", "embedding"), "vec_id",
+          "embedding", Dedup.Cosine(tau)).as[(Long, Long, Double)].collect().toSet
       val got1 = probe(b1Rows)
-      assert(got1 === against(corpusRows, b1Rows, tau),
+      assert(got1 === cosineAgainst(corpusRows, b1Rows, tau),
         s"tau=$tau bootstrap probe diverged")
       assert(got1.nonEmpty, s"tau=$tau: degenerate test corpus")
       assert(!got1.exists(p => p._1 == 115L || p._2 == 115L),
         "zero-norm vector certified")
       // append batch1 (banded under the FROZEN pivots), probe batch2
-      // against the grown corpus: the against-join re-picks pivots
-      // from the grown corpus, the store never does — both exact, so
-      // outputs must still coincide
-      Dedup.certVecIndexAppend(spark, root,
-        b1Rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-        "b1", threshold = tau)
+      // against the grown corpus: the store never re-picks its pivots,
+      // and the probe must still equal brute force
+      Dedup.certIndexAppend(spark, root, b1Rows.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", "b1", Dedup.Cosine(tau))
       val got2 = probe(b2Rows)
-      assert(got2 === against(corpusRows ++ b1Rows, b2Rows, tau),
+      assert(got2 === cosineAgainst(corpusRows ++ b1Rows, b2Rows, tau),
         s"tau=$tau post-append probe diverged")
       assert(got2.exists(_._1 >= 100L),
         s"tau=$tau: no pair against an appended vector — epochs not probed")
@@ -316,9 +320,8 @@ class CertStoreSpec extends SparkSpecBase {
       assert(probe(b2Rows) === got2)
       // probing at another tau refuses loudly (bands are theta-specific)
       val e = intercept[Exception] {
-        Dedup.certVecIndexProbe(spark, root,
-          b2Rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-          threshold = if (tau == 0.4) 0.9 else 0.4)
+        Dedup.certIndexProbe(spark, root, b2Rows.toDF("vec_id", "embedding"),
+          "vec_id", "embedding", Dedup.Cosine(if (tau == 0.4) 0.9 else 0.4))
       }
       assert(e.getMessage.contains("do not match"), e.getMessage)
     }
@@ -333,11 +336,11 @@ class CertStoreSpec extends SparkSpecBase {
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val root = tmp("veccollapse")
-    Dedup.certVecIndexWrite(corpus, "vec_id", "embedding", root,
-      threshold = 0.4, maxCell = 5L)
+    Dedup.certIndexWrite(corpus, "vec_id", "embedding", root,
+      Dedup.Cosine(0.4, maxCell = 5L))
     val e = intercept[Exception] {
-      Dedup.certVecIndexProbe(spark, root, batch, "vec_id", "embedding",
-        threshold = 0.4, maxCell = 5L).collect()
+      Dedup.certIndexProbe(spark, root, batch, "vec_id", "embedding",
+        Dedup.Cosine(0.4, maxCell = 5L)).collect()
     }
     assert(e.getMessage.contains("corpus cell overflow"), e.getMessage)
   }
@@ -406,14 +409,12 @@ class CertStoreSpec extends SparkSpecBase {
     val idx = s"$dir/idx"; val led = s"$dir/led"; val lab = s"$dir/lab"
     val full = corpusDocs ++ batch1Docs.take(3)
     // a store with a compacted-spanning history: bootstrap + one epoch
-    Dedup.certTextIndexWrite(corpusDocs.toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.5, shingleK = 1)
-    Dedup.certTextIndexAppend(spark, idx,
-      batch1Docs.toDF("doc_id", "text"), "doc_id", "text", "b1",
-      threshold = 0.5, shingleK = 1)
-    Dedup.certLedgerWrite(Dedup.exactJaccardJoin(
-      full.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.5,
-      shingleK = 1), led, "jaccard", 0.5)
+    Dedup.certIndexWrite(corpusDocs.toDF("doc_id", "text"), "doc_id", "text", idx,
+      Dedup.Jaccard(0.5, shingleK = 1))
+    Dedup.certIndexAppend(spark, idx, batch1Docs.toDF("doc_id", "text"), "doc_id",
+      "text", "b1", Dedup.Jaccard(0.5, shingleK = 1))
+    Dedup.certLedgerWrite(Dedup.exactJoin(full.toDF("doc_id", "text"), "doc_id",
+      "text", Dedup.Jaccard(0.5, shingleK = 1)), led, "jaccard", 0.5)
     Dedup.ccLabelsFold(spark, lab,
       Dedup.certLedgerRead(spark, led, "jaccard", 0.5)
         .select("id_a", "id_b"), "base", "jaccard", 0.5)
@@ -431,17 +432,16 @@ class CertStoreSpec extends SparkSpecBase {
           "jaccard", 0.5).select("id_a", "id_b"))))
     val retained = full.filterNot(r => r._1 == 1L || r._1 == 102L)
     // the probe answers exactly as if the victims never ingested
-    val got = Dedup.certTextIndexProbe(spark, idx,
-      batch2Docs.toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, shingleK = 1)
+    val got = Dedup.certIndexProbe(spark, idx, batch2Docs.toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1))
       .as[(Long, Long, Double)].collect().toSet
     assert(got === jaccardAgainst(retained, batch2Docs, 0.5))
     assert(got.nonEmpty, "degenerate erasure test")
     // the erased ledger equals the retained corpus's full exact join
     assert(Dedup.certLedgerRead(spark, led, "jaccard", 0.5)
       .as[(Long, Long, Double)].collect().toSet ===
-      Dedup.exactJaccardJoin(retained.toDF("doc_id", "text"),
-        "doc_id", "text", threshold = 0.5, shingleK = 1)
+      Dedup.exactJoin(retained.toDF("doc_id", "text"), "doc_id", "text",
+        Dedup.Jaccard(0.5, shingleK = 1))
         .as[(Long, Long, Double)].collect().toSet)
     // the rebuilt labeling names no victim — as an ID or as a LABEL
     val labeled = Dedup.ccLabelsRead(spark, lab, "jaccard", 0.5)
@@ -477,11 +477,11 @@ class CertStoreSpec extends SparkSpecBase {
     // before pass 2's identity compaction failed schema inference, so
     // the store was bricked with the manifest still claiming it live
     val idx = tmp("eraseall")
-    Dedup.certTextIndexWrite(corpusDocs.toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.5, shingleK = 1)
+    Dedup.certIndexWrite(corpusDocs.toDF("doc_id", "text"), "doc_id", "text", idx,
+      Dedup.Jaccard(0.5, shingleK = 1))
     Maintenance.eraseStore(spark, idx,
       Maintenance.EraseRequest(corpusDocs.map(_._1).toDF("doc_id")))
-    assert(!Dedup.certTextIndexNonEmpty(spark, idx))
+    assert(!Dedup.certIndexNonEmpty(spark, idx, Dedup.Jaccard(0.5)))
     def parquetFiles(f: java.io.File): Seq[String] =
       Option(f.listFiles).toSeq.flatten.flatMap { c =>
         if (c.isDirectory) parquetFiles(c)
@@ -490,11 +490,10 @@ class CertStoreSpec extends SparkSpecBase {
     assert(parquetFiles(new java.io.File(idx)).isEmpty,
       "parquet survives a total text-store erasure")
     // the torn-down store starts a clean new life under the same root
-    Dedup.certTextIndexWrite(batch1Docs.take(3).toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.5, shingleK = 1)
-    assert(Dedup.certTextIndexProbe(spark, idx,
-      batch2Docs.toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, shingleK = 1)
+    Dedup.certIndexWrite(batch1Docs.take(3).toDF("doc_id", "text"), "doc_id", "text",
+      idx, Dedup.Jaccard(0.5, shingleK = 1))
+    assert(Dedup.certIndexProbe(spark, idx, batch2Docs.toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1))
       .as[(Long, Long, Double)].collect().toSet ===
       jaccardAgainst(batch1Docs.take(3), batch2Docs, 0.5))
     // cosine twin
@@ -502,11 +501,11 @@ class CertStoreSpec extends SparkSpecBase {
     val vecs = (0 until 20).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
     val root = tmp("eraseallvec")
-    Dedup.certVecIndexWrite(vecs.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", root, threshold = 0.4)
+    Dedup.certIndexWrite(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      root, Dedup.Cosine(0.4))
     Maintenance.eraseStore(spark, root,
       Maintenance.EraseRequest(vecs.map(_._1).toDF("vec_id")))
-    assert(!Dedup.certVecIndexNonEmpty(spark, root))
+    assert(!Dedup.certIndexNonEmpty(spark, root, Dedup.Cosine(0.4)))
     assert(parquetFiles(new java.io.File(root)).isEmpty,
       "parquet survives a total vec-store erasure")
   }
@@ -523,22 +522,18 @@ class CertStoreSpec extends SparkSpecBase {
     val b1 = (100 until 110).map(i => (i.toLong, noise()))
     val probeRows = (200 until 206).map(i => (i.toLong, near(c1)))
     val root = tmp("erasevec")
-    Dedup.certVecIndexWrite(corpus.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", root, threshold = 0.4)
-    Dedup.certVecIndexAppend(spark, root, b1.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", "b1", threshold = 0.4)
+    Dedup.certIndexWrite(corpus.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      root, Dedup.Cosine(0.4))
+    Dedup.certIndexAppend(spark, root, b1.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", "b1", Dedup.Cosine(0.4))
     val victimIds = Set(0L, 3L, 104L)
     Maintenance.eraseStore(spark, root,
       Maintenance.EraseRequest(victimIds.toSeq.toDF("vec_id")))
     val retained = (corpus ++ b1).filterNot(r => victimIds(r._1))
-    val got = Dedup.certVecIndexProbe(spark, root,
+    val got = Dedup.certIndexProbe(spark, root,
       probeRows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      threshold = 0.4).as[(Long, Long, Double)].collect().toSet
-    val expect = Dedup.exactCosineJoinAgainst(
-      retained.toDF("vec_id", "embedding"),
-      probeRows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      threshold = 0.4).as[(Long, Long, Double)].collect().toSet
-    assert(got === expect)
+      Dedup.Cosine(0.4)).as[(Long, Long, Double)].collect().toSet
+    assert(got === cosineAgainst(retained, probeRows, 0.4))
     assert(got.nonEmpty && !got.exists(p => victimIds(p._1)),
       s"erased vector certified: $got")
   }
@@ -552,19 +547,23 @@ class CertStoreSpec extends SparkSpecBase {
     val brute = Dedup.embeddingNearDup(tiny.withColumn("blk", lit(1)),
       "vec_id", "embedding", "blk", 0.0 - 0.9999)
       .as[(Long, Long, Double)].collect().toSet
-    val got = Dedup.exactCosineJoin(tiny, "vec_id", "embedding",
-      threshold = -0.9999, nPivots = 4)
+    val got = Dedup.exactJoin(tiny, "vec_id", "embedding",
+      Dedup.Cosine(-0.9999, nPivots = 4))
       .as[(Long, Long, Double)].collect().toSet
     assert(got === brute)
-    val cross = Dedup.exactCosineJoinAgainst(tiny,
-      Seq((10L, v())).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", threshold = -0.9999, nPivots = 4)
+    val cross = Dedup.exactJoinAgainst(tiny,
+      Seq((10L, v())).toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Dedup.Cosine(-0.9999, nPivots = 4))
       .as[(Long, Long, Double)].collect()
     assert(cross.length === 3)
-    // a single-vector corpus cannot block at all: loud, with guidance
+    // a single-vector corpus holds no pair, so its self-join is empty;
+    // it cannot block a batch against it at all: loud, with guidance
     val one = Seq((1L, v())).toDF("vec_id", "embedding")
+    assert(Dedup.exactJoin(one, "vec_id", "embedding", Dedup.Cosine(0.4))
+      .isEmpty)
     val e = intercept[Exception] {
-      Dedup.exactCosineJoin(one, "vec_id", "embedding", threshold = 0.4)
+      Dedup.exactJoinAgainst(one, tiny, "vec_id", "embedding",
+        Dedup.Cosine(0.4))
     }
     assert(e.getMessage.contains("brute force"), e.getMessage)
   }

@@ -67,6 +67,36 @@ class CheckpointHygieneSpec extends SparkSpecBase {
     assert(pinned === 0)
   }
 
+  test("certification store calls free their own pins: write, append, and a pinned probe once released") {
+    GraftSession.sweepPersistedRdds(spark)
+    def ids = spark.sparkContext.getPersistentRDDs.keySet
+    val dir = java.nio.file.Files.createTempDirectory("graft-certpins").toString
+    val rnd = new scala.util.Random(5)
+    def vecs(from: Int, until: Int) = (from until until)
+      .map(i => (i.toLong, Array.fill(4)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val cases = Seq(
+      (Dedup.Jaccard(0.5), "doc_id", "text",
+        Seq((1L, "alpha beta gamma"), (2L, "alpha beta delta"),
+          (3L, "kappa lambda mu")).toDF("doc_id", "text"),
+        Seq((10L, "alpha beta gamma"), (11L, "nu xi")).toDF("doc_id", "text")),
+      (Dedup.Cosine(0.4), "vec_id", "embedding", vecs(0, 12), vecs(20, 24)))
+    for ((metric, idCol, valueCol, corpus, batch) <- cases) {
+      val root = s"$dir/${metric.name}"
+      val before = ids
+      Dedup.certIndexWrite(corpus, idCol, valueCol, root, metric)
+      assert(ids === before, s"$metric: certIndexWrite left pins")
+      val (pairs, free) = Dedup.certIndexProbePinned(spark, root, batch,
+        idCol, valueCol, metric)
+      pairs.collect()
+      assert(ids !== before, s"$metric: the probe pinned nothing to release")
+      free()
+      assert(ids === before, s"$metric: the probe's release left pins")
+      Dedup.certIndexAppend(spark, root, batch, idCol, valueCol, "b1", metric)
+      assert(ids === before, s"$metric: certIndexAppend left pins")
+    }
+  }
+
   test("catalog query + harness sweep leaves zero pinned RDDs") {
     GraftSession.sweepPersistedRdds(spark)
     // q157 composes the checkpoint-heaviest operator (iterative

@@ -549,8 +549,8 @@ class DedupSpec extends SparkSpecBase {
       corpus.withColumn("blk", lit(1)), "doc_id", "text", "blk",
       k = 1, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val fast = Dedup.exactJaccardJoin(corpus, "doc_id", "text",
-      threshold = 0.5, shingleK = 1)
+    val fast = Dedup.exactJoin(corpus, "doc_id", "text", Dedup.Jaccard(0.5,
+      shingleK = 1))
     val fastPairs = fast.select("id_a", "id_b")
       .as[(Long, Long)].collect().toSet
     assert(fastPairs === brute, s"prefix filter missed/added pairs: " +
@@ -562,14 +562,14 @@ class DedupSpec extends SparkSpecBase {
     // a token flooding the prefixes trips the in-plan guard loudly
     val flood = Seq.tabulate(8)(i => (100L + i, s"shared u$i")).toDF("doc_id", "text")
     val e = intercept[Exception] {
-      Dedup.exactJaccardJoin(flood, "doc_id", "text",
-        threshold = 0.5, shingleK = 1, maxBucket = 3).collect()
+      Dedup.exactJoin(flood, "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1,
+        maxBucket = 3)).collect()
     }
     assert(e.getMessage.contains("prefix bucket overflow"), e.getMessage)
     // default 3-shingle granularity: the exact dup still surfaces,
     // the same-vocabulary-different-order pair does not
-    val k3 = Dedup.exactJaccardJoin(corpus, "doc_id", "text",
-      threshold = 0.5)
+    val k3 = Dedup.exactJoin(corpus, "doc_id", "text", Dedup.Jaccard(0.5,
+      shingleK = 3))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(k3.contains((4L, 5L)))
     assert(!k3.contains((1L, 2L)))  // J on 3-shingles: 2/4 common? engineered below threshold
@@ -583,8 +583,8 @@ class DedupSpec extends SparkSpecBase {
     val corpus = Seq((1L, ""), (2L, "   "), (3L, "a b c d"), (4L, "a b c d"))
       .toDF("doc_id", "text")
     for (k <- Seq(1, 2, 3)) {
-      val pairs = Dedup.exactJaccardJoin(corpus, "doc_id", "text",
-        threshold = 0.5, shingleK = k)
+      val pairs = Dedup.exactJoin(corpus, "doc_id", "text", Dedup.Jaccard(0.5,
+        shingleK = k))
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(!pairs.contains((1L, 2L)), s"empty docs paired at k=$k")
       assert(pairs.contains((3L, 4L)), s"real dup missed at k=$k")
@@ -607,23 +607,23 @@ class DedupSpec extends SparkSpecBase {
       val brute = Dedup.embeddingNearDup(df.withColumn("blk", lit(1)),
         "vec_id", "embedding", "blk", tau)
         .as[(Long, Long, Double)].collect().toSet
-      val fast = Dedup.exactCosineJoin(df, "vec_id", "embedding", tau)
+      val fast = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(tau))
         .as[(Long, Long, Double)].collect().toSet
       assert(fast === brute,
         s"tau=$tau: banding missed/added pairs (miss=${brute -- fast}, " +
           s"extra=${fast -- brute})")
       assert(brute.nonEmpty, s"tau=$tau: degenerate test corpus")
     }
-    val again = Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.9)
+    val again = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.9))
       .as[(Long, Long, Double)].collect().toSet
-    val first = Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.9)
+    val first = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.9))
       .as[(Long, Long, Double)].collect().toSet
     assert(again === first)
     // nPivots = 2 (blocking pivots only, zero prefilters) is a valid
     // documented configuration — regression: the prefilter conjunction
     // used to empty-reduce here
-    val minimal = Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.9,
-      nPivots = 2).as[(Long, Long, Double)].collect().toSet
+    val minimal = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.9,
+      nPivots = 2)).as[(Long, Long, Double)].collect().toSet
     assert(minimal === first)
     // a (b0, b1) cell over maxCell USED to trip the guard here;
     // adaptive re-blocking now splits the overflow cells one level
@@ -635,8 +635,8 @@ class DedupSpec extends SparkSpecBase {
     val brute09 = Dedup.embeddingNearDup(df.withColumn("blk", lit(1)),
       "vec_id", "embedding", "blk", 0.9)
       .as[(Long, Long, Double)].collect().toSet
-    val reblocked = Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.9,
-      maxCell = 40).as[(Long, Long, Double)].collect().toSet
+    val reblocked = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.9,
+      maxCell = 40)).as[(Long, Long, Double)].collect().toSet
     assert(reblocked === brute09,
       s"re-blocked join diverged (miss=${brute09 -- reblocked}, " +
         s"extra=${reblocked -- brute09})")
@@ -644,8 +644,8 @@ class DedupSpec extends SparkSpecBase {
     // maxCell trips the tripwire in that configuration — proof the
     // completion above went through the re-blocking, not slack
     val e2 = intercept[Exception] {
-      Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.9,
-        nPivots = 2, maxCell = 40).collect()
+      Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.9, nPivots = 2,
+        maxCell = 40)).collect()
     }
     assert(e2.getMessage.contains("cell overflow"), e2.getMessage)
     // collapse on ALL pivots (a clone cohort: every angle identical,
@@ -654,8 +654,8 @@ class DedupSpec extends SparkSpecBase {
     val clones = (0 until 15).map(i => (i.toLong, c1))
       .toDF("vec_id", "embedding")
     val e3 = intercept[Exception] {
-      Dedup.exactCosineJoin(clones, "vec_id", "embedding", 0.9,
-        maxCell = 10).collect()
+      Dedup.exactJoin(clones, "vec_id", "embedding", Dedup.Cosine(0.9,
+        maxCell = 10)).collect()
     }
     assert(e3.getMessage.contains("re-blocked"), e3.getMessage)
   }
@@ -666,13 +666,13 @@ class DedupSpec extends SparkSpecBase {
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat))) :+
       (100L, Array.fill(8)(0f)) :+ (101L, Array.fill(8)(0f))
     val df = vecs.toDF("vec_id", "embedding")
-    val pairs = Dedup.exactCosineJoin(df, "vec_id", "embedding", 0.4)
+    val pairs = Dedup.exactJoin(df, "vec_id", "embedding", Dedup.Cosine(0.4))
       .as[(Long, Long, Double)].collect()
     assert(!pairs.exists(p => p._1 >= 100L || p._2 >= 100L),
       s"zero-norm vector paired: ${pairs.mkString(", ")}")
   }
 
-  test("exactJaccardJoinAgainst equals brute force; re-ingested doc surfaces at 1.0; tripwire fires") {
+  test("exactJoinAgainst under Jaccard equals brute force; re-ingested doc surfaces at 1.0; tripwire fires") {
     val corpus = Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma epsilon"),
@@ -684,8 +684,8 @@ class DedupSpec extends SparkSpecBase {
       (102L, "alpha beta gamma zeta"),         // J(.,1) = 3/5
       (103L, "tau upsilon phi chi")            // novel
     ).toDF("doc_id", "text")
-    val got = Dedup.exactJaccardJoinAgainst(corpus, batch,
-      "doc_id", "text", threshold = 0.5, shingleK = 1)
+    val got = Dedup.exactJoinAgainst(corpus, batch, "doc_id", "text",
+      Dedup.Jaccard(0.5, shingleK = 1))
       .as[(Long, Long, Double)].collect().toSet
     // brute force over the cross product is the judge
     val brute = (for {
@@ -703,8 +703,8 @@ class DedupSpec extends SparkSpecBase {
     val flood = Seq.tabulate(8)(i => (200L + i, s"shared u$i"))
       .toDF("doc_id", "text")
     val e = intercept[Exception] {
-      Dedup.exactJaccardJoinAgainst(flood, batch, "doc_id", "text",
-        threshold = 0.5, shingleK = 1, maxBucket = 3).collect()
+      Dedup.exactJoinAgainst(flood, batch, "doc_id", "text", Dedup.Jaccard(0.5,
+        shingleK = 1, maxBucket = 3)).collect()
     }
     assert(e.getMessage.contains("corpus prefix bucket overflow"),
       e.getMessage)
@@ -729,8 +729,8 @@ class DedupSpec extends SparkSpecBase {
         "vec_id", "embedding", "blk", tau)
         .filter(col("id_a") < 100L && col("id_b") >= 100L)
         .as[(Long, Long, Double)].collect().toSet
-      val got = Dedup.exactCosineJoinAgainst(corpus, batch,
-        "vec_id", "embedding", tau)
+      val got = Dedup.exactJoinAgainst(corpus, batch, "vec_id", "embedding",
+        Dedup.Cosine(tau))
         .as[(Long, Long, Double)].collect().toSet
       assert(got === brute,
         s"tau=$tau: miss=${brute -- got} extra=${got -- brute}")
@@ -738,10 +738,23 @@ class DedupSpec extends SparkSpecBase {
     }
     // the corpus-side cell tripwire fails loudly on mass collapse
     val e = intercept[Exception] {
-      Dedup.exactCosineJoinAgainst(corpus, batch, "vec_id", "embedding",
-        0.4, maxCell = 5).collect()
+      Dedup.exactJoinAgainst(corpus, batch, "vec_id", "embedding", Dedup.Cosine(0.4,
+        maxCell = 5)).collect()
     }
     assert(e.getMessage.contains("corpus cell overflow"), e.getMessage)
+  }
+
+  test("one exact-certification path: each metric part is written once in Dedup.scala") {
+    // the shingle-set front end, the prefix overlap's 1e-9 slack, the
+    // cosine band width θ and the pivot pick each have exactly one
+    // definition — a second copy is a fork of the exactness contract
+    val code = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/operators/Dedup.scala")), "UTF-8")
+      .split("\n").map(_.trim).filterNot(l =>
+        l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+    for (part <- Seq("array_distinct(TextFunctions.tokens(col(", "- lit(1e-9)",
+        "math.acos(math.max(-1.0", "Sim.pickCentroids("))
+      assert(code.count(_.contains(part)) === 1, s"'$part' is not written once")
   }
 
   test("certLedger lifecycle: bootstrap+append reads whole, survives compaction, refuses mixups") {

@@ -672,8 +672,8 @@ class EraseSpec extends SparkSpecBase {
     val ledger = s"$tree/ledger"
     val grams = s"$tree/grams"
     Dedup.bandIndexWrite(docsDF, "doc_id", "text", band, Dedup.SimHash())
-    Dedup.certLedgerWrite(Dedup.exactJaccardJoin(docsDF, "doc_id",
-      "text", threshold = 0.3, shingleK = 1), ledger, "jaccard", 0.3)
+    Dedup.certLedgerWrite(Dedup.exactJoin(docsDF, "doc_id", "text",
+      Dedup.Jaccard(0.3, shingleK = 1)), ledger, "jaccard", 0.3)
     Dedup.gramFreqIndexWrite(
       Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), grams, n = 3)
     // victims must actually appear in the ledger or the test is vacuous

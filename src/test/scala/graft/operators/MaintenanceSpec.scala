@@ -196,20 +196,20 @@ class MaintenanceSpec extends SparkSpecBase {
   test("certification index families dispatch through the sweep") {
     val root = tree()
     import spark.implicits._
-    Dedup.certTextIndexWrite(
+    Dedup.certIndexWrite(
       Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
-      "doc_id", "text", s"$root/cert_text", threshold = 0.8)
-    Dedup.certTextIndexAppend(spark, s"$root/cert_text",
+      "doc_id", "text", s"$root/cert_text", Dedup.Jaccard(0.8))
+    Dedup.certIndexAppend(spark, s"$root/cert_text",
       Seq((2L, "delta epsilon zeta")).toDF("doc_id", "text"),
-      "doc_id", "text", "b1", threshold = 0.8)
+      "doc_id", "text", "b1", Dedup.Jaccard(0.8))
     val rnd = new scala.util.Random(3)
     def v() = Array.fill(4)(rnd.nextGaussian().toFloat)
-    Dedup.certVecIndexWrite(
+    Dedup.certIndexWrite(
       Seq((1L, v()), (2L, v()), (3L, v())).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$root/cert_vec", threshold = 0.8)
-    Dedup.certVecIndexAppend(spark, s"$root/cert_vec",
+      "vec_id", "embedding", s"$root/cert_vec", Dedup.Cosine(0.8))
+    Dedup.certIndexAppend(spark, s"$root/cert_vec",
       Seq((4L, v())).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", "b1", threshold = 0.8)
+      "vec_id", "embedding", "b1", Dedup.Cosine(0.8))
     Dedup.ccLabelsFold(spark, s"$root/cc_labels",
       Seq((1L, 2L)).toDF("id_a", "id_b"), "b1", "cosine", 0.8)
     val results = Maintenance.compactAll(spark, root)

@@ -359,8 +359,8 @@ class PropertySpec extends SparkSpecBase {
         val brute = Dedup.ngramJaccardPairs(df.withColumn("blk", lit(1)),
           "doc_id", "text", "blk", k = 1, threshold = t)
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-        val fast = Dedup.exactJaccardJoin(df, "doc_id", "text",
-          threshold = t, shingleK = 1)
+        val fast = Dedup.exactJoin(df, "doc_id", "text",
+          Dedup.Jaccard(t, shingleK = 1))
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet
         assert(fast === brute, s"t=$t rows=$rows")
     }
@@ -394,8 +394,8 @@ class PropertySpec extends SparkSpecBase {
         "vec_id", "embedding", "blk", t)
         .as[(Long, Long, Double)].collect().toSet
       for (p <- Seq(2, 4)) {
-        val fast = Dedup.exactCosineJoin(df, "vec_id", "embedding", t,
-          nPivots = p).as[(Long, Long, Double)].collect().toSet
+        val fast = Dedup.exactJoin(df, "vec_id", "embedding",
+          Dedup.Cosine(t, nPivots = p)).as[(Long, Long, Double)].collect().toSet
         assert(fast === brute,
           s"t=$t nPivots=$p miss=${brute -- fast} extra=${fast -- brute}")
       }
@@ -413,8 +413,8 @@ class PropertySpec extends SparkSpecBase {
         "vec_id", "embedding", "blk", t)
         .filter(col("id_a") < 1000L && col("id_b") >= 1000L)
         .as[(Long, Long, Double)].collect().toSet
-      val got = Dedup.exactCosineJoinAgainst(corpus, batch,
-        "vec_id", "embedding", t)
+      val got = Dedup.exactJoinAgainst(corpus, batch, "vec_id", "embedding",
+        Dedup.Cosine(t))
         .as[(Long, Long, Double)].collect().toSet
       assert(got === brute,
         s"t=$t miss=${brute -- got} extra=${got -- brute}")
@@ -433,8 +433,8 @@ class PropertySpec extends SparkSpecBase {
         j = cs.intersect(bs).size.toDouble / cs.union(bs).size
         if j >= t
       } yield (ci, 1000L + bi)).toSet
-      val got = Dedup.exactJaccardJoinAgainst(corpus, batch,
-        "doc_id", "text", threshold = t, shingleK = 1)
+      val got = Dedup.exactJoinAgainst(corpus, batch, "doc_id", "text",
+        Dedup.Jaccard(t, shingleK = 1))
         .select("id_corpus", "id_batch")
         .as[(Long, Long)].collect().toSet
       assert(got === naive,
@@ -467,16 +467,16 @@ class PropertySpec extends SparkSpecBase {
             if j >= t
           } yield (ci, bi)).toSet
         val root = tmpStore(s"jac$t")
-        Dedup.certTextIndexWrite(corpus.toDF("doc_id", "text"),
-          "doc_id", "text", root, threshold = t, shingleK = 1)
+        Dedup.certIndexWrite(corpus.toDF("doc_id", "text"), "doc_id", "text", root,
+          Dedup.Jaccard(t, shingleK = 1))
         def probe(b: List[(Long, String)]) =
-          Dedup.certTextIndexProbe(spark, root, b.toDF("doc_id", "text"),
-            "doc_id", "text", threshold = t, shingleK = 1)
+          Dedup.certIndexProbe(spark, root, b.toDF("doc_id", "text"), "doc_id",
+            "text", Dedup.Jaccard(t, shingleK = 1))
             .select("id_corpus", "id_batch")
             .as[(Long, Long)].collect().toSet
         assert(probe(b1) === naive(corpus, b1), s"t=$t rows=$rows")
-        Dedup.certTextIndexAppend(spark, root, b1.toDF("doc_id", "text"),
-          "doc_id", "text", "b1", threshold = t, shingleK = 1)
+        Dedup.certIndexAppend(spark, root, b1.toDF("doc_id", "text"), "doc_id",
+          "text", "b1", Dedup.Jaccard(t, shingleK = 1))
         assert(probe(b2) === naive(corpus ++ b1, b2),
           s"post-append t=$t rows=$rows")
     }
@@ -498,16 +498,14 @@ class PropertySpec extends SparkSpecBase {
           .as[(Long, Long, Double)].collect().toSet
       if (corpus.size >= 2) {
         val root = tmpStore(s"vec$t")
-        Dedup.certVecIndexWrite(corpus.toDF("vec_id", "embedding"),
-          "vec_id", "embedding", root, threshold = t)
+        Dedup.certIndexWrite(corpus.toDF("vec_id", "embedding"), "vec_id",
+          "embedding", root, Dedup.Cosine(t))
         def probe(b: List[(Long, Array[Float])]) =
-          Dedup.certVecIndexProbe(spark, root,
-            b.toDF("vec_id", "embedding"), "vec_id", "embedding",
-            threshold = t).as[(Long, Long, Double)].collect().toSet
+          Dedup.certIndexProbe(spark, root, b.toDF("vec_id", "embedding"), "vec_id",
+            "embedding", Dedup.Cosine(t)).as[(Long, Long, Double)].collect().toSet
         assert(probe(b1) === brute(corpus ++ b1, 1000L), s"t=$t")
-        Dedup.certVecIndexAppend(spark, root,
-          b1.toDF("vec_id", "embedding"), "vec_id", "embedding", "b1",
-          threshold = t)
+        Dedup.certIndexAppend(spark, root, b1.toDF("vec_id", "embedding"), "vec_id",
+          "embedding", "b1", Dedup.Cosine(t))
         assert(probe(b2) === brute(corpus ++ b1 ++ b2, 2000L),
           s"post-append t=$t")
       }
@@ -572,13 +570,12 @@ class PropertySpec extends SparkSpecBase {
                 if j >= t
               } yield (ci, bi)).toSet
             val root = tmpStore(s"erase$t")
-            Dedup.certTextIndexWrite(corpus.toDF("doc_id", "text"),
-              "doc_id", "text", root, threshold = t, shingleK = 1)
+            Dedup.certIndexWrite(corpus.toDF("doc_id", "text"), "doc_id", "text",
+              root, Dedup.Jaccard(t, shingleK = 1))
             Maintenance.eraseStore(spark, root,
               Maintenance.EraseRequest(victims.toDF("doc_id")))
-            val got = Dedup.certTextIndexProbe(spark, root,
-              batch.toDF("doc_id", "text"), "doc_id", "text",
-              threshold = t, shingleK = 1)
+            val got = Dedup.certIndexProbe(spark, root, batch.toDF("doc_id", "text"),
+              "doc_id", "text", Dedup.Jaccard(t, shingleK = 1))
               .select("id_corpus", "id_batch")
               .as[(Long, Long)].collect().toSet
             assert(got === naive(retained, batch),
@@ -586,12 +583,11 @@ class PropertySpec extends SparkSpecBase {
             // and the store still composes: append + re-probe stays
             // equal to brute force over retained ∪ appended
             val extra = List((5000L, retained.head._2))
-            Dedup.certTextIndexAppend(spark, root,
-              extra.toDF("doc_id", "text"), "doc_id", "text",
-              "post-erase", threshold = t, shingleK = 1)
-            val got2 = Dedup.certTextIndexProbe(spark, root,
+            Dedup.certIndexAppend(spark, root, extra.toDF("doc_id", "text"),
+              "doc_id", "text", "post-erase", Dedup.Jaccard(t, shingleK = 1))
+            val got2 = Dedup.certIndexProbe(spark, root,
               batch.toDF("doc_id", "text"), "doc_id", "text",
-              threshold = t, shingleK = 1)
+              Dedup.Jaccard(t, shingleK = 1))
               .select("id_corpus", "id_batch")
               .as[(Long, Long)].collect().toSet
             assert(got2 === naive(retained ++ extra, batch),
@@ -609,8 +605,9 @@ class PropertySpec extends SparkSpecBase {
           "vec_id", "embedding", "blk", t)
           .as[(Long, Long, Double)].collect().toSet
         try {
-          val fast = Dedup.exactCosineJoin(df, "vec_id", "embedding", t,
-            maxCell = maxCell).as[(Long, Long, Double)].collect().toSet
+          val fast = Dedup.exactJoin(df, "vec_id", "embedding",
+            Dedup.Cosine(t, maxCell = maxCell))
+            .as[(Long, Long, Double)].collect().toSet
           assert(fast === brute, s"t=$t maxCell=$maxCell " +
             s"miss=${brute -- fast} extra=${fast -- brute}")
         } catch {

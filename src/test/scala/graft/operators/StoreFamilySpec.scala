@@ -255,24 +255,24 @@ class StoreFamilySpec extends SparkSpecBase {
       root => rows(Dedup.certLedgerRead(spark, root, "jaccard", 0.85))),
     Case("cert_text", docVictims,
       docsBuild(
-        (root, d) => Dedup.certTextIndexWrite(d, "doc_id", "text", root,
-          threshold = 0.5, shingleK = 1),
-        (root, d) => Dedup.certTextIndexAppend(spark, root, d, "doc_id",
-          "text", "day-2", threshold = 0.5, shingleK = 1)),
+        (root, d) => Dedup.certIndexWrite(d, "doc_id", "text", root,
+          Dedup.Jaccard(0.5, shingleK = 1)),
+        (root, d) => Dedup.certIndexAppend(spark, root, d, "doc_id", "text", "day-2",
+          Dedup.Jaccard(0.5, shingleK = 1))),
       None,
-      root => rows(Dedup.certTextIndexProbe(spark, root,
+      root => rows(Dedup.certIndexProbe(spark, root,
         docsA.union(docsB).select((col("doc_id") + 1000L).as("doc_id"),
-          col("text")), "doc_id", "text", threshold = 0.5, shingleK = 1))),
+          col("text")), "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1)))),
     Case("cert_vec", vecVictims,
       (root, drop) => {
-        Dedup.certVecIndexWrite(without(corpusVecs, "vec_id", drop), "vec_id",
-          "embedding", root, threshold = 0.4)
-        Dedup.certVecIndexAppend(spark, root, without(batchVecs, "vec_id", drop),
-          "vec_id", "embedding", "day-2", threshold = 0.4)
+        Dedup.certIndexWrite(without(corpusVecs, "vec_id", drop), "vec_id",
+          "embedding", root, Dedup.Cosine(0.4))
+        Dedup.certIndexAppend(spark, root, without(batchVecs, "vec_id", drop),
+          "vec_id", "embedding", "day-2", Dedup.Cosine(0.4))
       },
       None,
-      root => rows(Dedup.certVecIndexProbe(spark, root, probeVecs, "vec_id",
-        "embedding", threshold = 0.4))),
+      root => rows(Dedup.certIndexProbe(spark, root, probeVecs, "vec_id",
+        "embedding", Dedup.Cosine(0.4)))),
     Case("cc_labels", Seq(3L),
       (root, drop) => {
         Dedup.ccLabelsFold(spark, root, withoutPairs(ccPairsA, drop),

@@ -1124,8 +1124,8 @@ class StreamingSpec extends SparkSpecBase {
     def ledgerPairs() = Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
       .as[(Long, Long, Double)].collect().toSet
     def fullPairs(rows: Seq[(Long, String)]) =
-      Dedup.exactJaccardJoin(rows.toDF("doc_id", "text"),
-        "doc_id", "text", threshold = 0.5, shingleK = 1)
+      Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id", "text",
+        Dedup.Jaccard(0.5, shingleK = 1))
         .as[(Long, Long, Double)].collect().toSet
     deliver("b1", b1); drain()
     // the live induction: after every activation the ledger IS the
@@ -1161,7 +1161,7 @@ class StreamingSpec extends SparkSpecBase {
     // the index mirrors everything certified (one row per nonempty doc)
     assert(graft.operators.EpochIndex.read(spark, s"$index/fps",
       innerPartCols = Seq("ib"),
-      bootstrapName = "certTextIndexWrite").count() === 8L)
+      bootstrapName = "certIndexWrite").count() === 8L)
     // a sink pointed at this ledger with ANOTHER tau refuses before
     // writing anything — the checked-manifest contract (a pre-existing
     // mismatched ledger must never silently absorb appends)
@@ -1504,7 +1504,7 @@ class StreamingSpec extends SparkSpecBase {
         Files.createTempDirectory("graft-certref-ckp").toString,
         threshold = 0.5)
     }
-    assert(e.getMessage.contains("certTextIndexWrite"), e.getMessage)
+    assert(e.getMessage.contains("certIndexWrite"), e.getMessage)
     // nothing landed under the refused activation
     assert(!graft.sources.Fs.exists(spark, ledger) &&
       !graft.sources.Fs.exists(spark, index))
@@ -1522,13 +1522,13 @@ class StreamingSpec extends SparkSpecBase {
         Files.createTempDirectory("graft-certref-vckp").toString,
         threshold = 0.4)
     }
-    assert(e2.getMessage.contains("certVecIndexWrite"), e2.getMessage)
+    assert(e2.getMessage.contains("certIndexWrite"), e2.getMessage)
     // bootstrapping the index over the standing corpus clears the
     // refusal — the sink then runs and the induction holds
-    Dedup.certTextIndexWrite(rows.toDF("doc_id", "text"), "doc_id",
-      "text", index, threshold = 0.5, shingleK = 1)
-    Dedup.certLedgerWrite(Dedup.exactJaccardJoin(rows.toDF("doc_id", "text"),
-      "doc_id", "text", threshold = 0.5, shingleK = 1), ledger,
+    Dedup.certIndexWrite(rows.toDF("doc_id", "text"), "doc_id", "text", index,
+      Dedup.Jaccard(0.5, shingleK = 1))
+    Dedup.certLedgerWrite(Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id",
+      "text", Dedup.Jaccard(0.5, shingleK = 1)), ledger,
       "jaccard", 0.5)
     Streaming.certIngestSink(
       Streaming.fileStream(spark, schema, s"$src/b*"),
@@ -1539,9 +1539,8 @@ class StreamingSpec extends SparkSpecBase {
       .as[(Long, Long, Double)].collect().toSet
     // bootstrap pair (1,2)@1.0 + stream re-ingestions vs the standing
     // corpus: the ledger equals the full exact join over corpus ∪ batch
-    val expect = Dedup.exactJaccardJoin(
-      (rows ++ rows).distinct.toDF("doc_id", "text"),
-      "doc_id", "text", threshold = 0.5, shingleK = 1)
+    val expect = Dedup.exactJoin((rows ++ rows).distinct.toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1))
       .as[(Long, Long, Double)].collect().toSet ++
       Set((1L, 1L, 1.0), (2L, 2L, 1.0), (1L, 2L, 1.0))
     assert(pairs === expect, s"got $pairs")
@@ -1551,7 +1550,7 @@ class StreamingSpec extends SparkSpecBase {
     import graft.operators.Dedup
     // the refusal's false positive: a corpus whose every text is
     // empty (or every vector zero-norm) legitimately produces an
-    // EMPTY index — certTextIndexWrite could not make index rows from
+    // EMPTY index — certIndexWrite could not make index rows from
     // it either, so refusing would brick the pipeline forever with a
     // repair instruction that cannot work
     val src = Files.createTempDirectory("graft-certtol-src").toString
@@ -1572,8 +1571,8 @@ class StreamingSpec extends SparkSpecBase {
     // exactly the batch's own exact join
     assert(Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
       .as[(Long, Long, Double)].collect().toSet ===
-      Dedup.exactJaccardJoin(rows.toDF("doc_id", "text"), "doc_id",
-        "text", threshold = 0.5, shingleK = 1)
+      Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id", "text",
+        Dedup.Jaccard(0.5, shingleK = 1))
         .as[(Long, Long, Double)].collect().toSet)
     // cosine twin: zero-norm standing corpus cannot band — tolerated
     val vcorpus = Files.createTempDirectory("graft-certtol-vc").toString + "/c"
@@ -1593,8 +1592,8 @@ class StreamingSpec extends SparkSpecBase {
       threshold = 0.9).awaitTermination()
     assert(Dedup.certLedgerRead(spark, vledger, "cosine", 0.9)
       .as[(Long, Long, Double)].collect().toSet ===
-      Dedup.exactCosineJoin(vrows.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.9)
+      Dedup.exactJoin(vrows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        Dedup.Cosine(0.9))
         .as[(Long, Long, Double)].collect().toSet)
   }
 
@@ -1622,7 +1621,7 @@ class StreamingSpec extends SparkSpecBase {
       threshold = 0.99, labelsPath = Some(labels)).awaitTermination()
     drain()
     // the batch landed (index + corpus) even though no pair certified
-    assert(Dedup.certVecIndexNonEmpty(spark, index))
+    assert(Dedup.certIndexNonEmpty(spark, index, Dedup.Cosine(0.99)))
     assert(spark.read.parquet(corpus).count() === 3L)
     // a later batch WITH pairs folds normally and the store-read
     // repair view equals the from-scratch rebuild. The pair sits
@@ -1645,6 +1644,35 @@ class StreamingSpec extends SparkSpecBase {
       .as[Long].collect().toSet
     assert(keptIds === rebuilt, s"store $keptIds vs rebuilt $rebuilt")
     assert(keptIds.size === 4, s"expected one of (10,11) repaired: $keptIds")
+  }
+
+  test("certVecIngestSink: a later batch with fewer than two bandable vectors certifies its cross pairs and keeps the stream running") {
+    import graft.operators.Dedup
+    // one nonzero-norm and one zero-norm vector: the batch's self-join
+    // has < 2 pivots to block on and no pair to find — it must come
+    // back empty, not fail the micro-batch (and every replay of it)
+    val src = Files.createTempDirectory("graft-v1-src").toString
+    val corpus = Files.createTempDirectory("graft-v1-c").toString + "/c"
+    val ledger = Files.createTempDirectory("graft-v1-l").toString + "/l"
+    val index = Files.createTempDirectory("graft-v1-i").toString + "/i"
+    val ckp = Files.createTempDirectory("graft-v1-ckp").toString
+    val b1 = Seq((1L, Array(1.0f, 0.0f, 0.0f)), (2L, Array(0.0f, 1.0f, 0.0f)),
+      (3L, Array(0.0f, 0.0f, 1.0f)))
+    val b2 = Seq((10L, Array(0.99f, 0.05f, 0.0f)), (11L, Array(0.0f, 0.0f, 0.0f)))
+    def drain(): Unit = Streaming.certVecIngestSink(
+      Streaming.fileStream(spark, spark.read.parquet(s"$src/b1").schema,
+        s"$src/*"),
+      spark, corpus, ledger, index, "vec_id", "embedding", ckp,
+      threshold = 0.9).awaitTermination()
+    b1.toDF("vec_id", "embedding").write.parquet(s"$src/b1")
+    drain()
+    b2.toDF("vec_id", "embedding").write.parquet(s"$src/b2")
+    drain()
+    assert(spark.read.parquet(corpus).count() === 5L)
+    // the one bandable newcomer still certifies against the corpus
+    assert(Dedup.certLedgerRead(spark, ledger, "cosine", 0.9)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet ===
+      Set((1L, 10L)))
   }
 
   test("streaming SEMANTIC certification: cosine ledger ≡ full exact join after every activation, frozen first-batch pivots, compaction-safe") {
@@ -1688,8 +1716,8 @@ class StreamingSpec extends SparkSpecBase {
     def ledgerPairs() = Dedup.certLedgerRead(spark, ledger, "cosine", 0.9)
       .as[(Long, Long, Double)].collect().toSet
     def fullPairs(rows: Seq[(Long, Array[Float])]) =
-      Dedup.exactCosineJoin(rows.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.9)
+      Dedup.exactJoin(rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        Dedup.Cosine(0.9))
         .as[(Long, Long, Double)].collect().toSet
     deliver("b1", b1); drain()
     assert(ledgerPairs() === fullPairs(b1))
@@ -1720,8 +1748,8 @@ class StreamingSpec extends SparkSpecBase {
     val kept = storeKept()
     assert(kept.select("vec_id").as[Long].collect().toSet ===
       rebuiltKeptIds(), "store-read repaired set diverged after b3")
-    assert(Dedup.exactCosineJoin(kept, "vec_id", "embedding",
-      threshold = 0.9).count() === 0L, "repair left residual pairs")
+    assert(Dedup.exactJoin(kept, "vec_id", "embedding",
+      Dedup.Cosine(0.9)).count() === 0L, "repair left residual pairs")
     // MID-LIFE ADOPTION self-heal: a labels store introduced only now,
     // over a ledger three activations deep, bootstraps from the FULL
     // ledger at its first fold — no manual CC bootstrap step
@@ -2002,13 +2030,9 @@ class StreamingSpec extends SparkSpecBase {
       before.zip(snapshot()).foreach { case ((table, b), (_, a)) =>
         assert(a === b, s"$name: $table changed under the replay")
       }
-      // no growth: the context cleaner may drop older RDDs meanwhile.
-      // Open for the cert sinks: Dedup's certification probe and index
-      // helpers pin internally and return no release handle, so their
-      // blocks wait for a GC (listed open in CHANGES.md)
+      // no growth: the context cleaner may drop older RDDs meanwhile
       val leaked = sc.getPersistentRDDs.keySet -- pinned
-      if (!Set("certIngestSink", "certVecIngestSink").contains(name))
-        assert(leaked.isEmpty, s"$name left ${leaked.size} RDDs pinned")
+      assert(leaked.isEmpty, s"$name left ${leaked.size} RDDs pinned")
     }
   }
 
