@@ -8486,8 +8486,8 @@ object Catalog {
       "vec_id", "embedding", perCell = 3)
   }
 
-  /** [[Dedup.exactJoin]] under [[Dedup.Jaccard]] and the oracle: EVERY pair with
-    * 3-shingle-set Jaccard ≥ 0.5 — corpus-wide, NO blocking key
+  /** [[Dedup.exactJoin]] under [[Dedup.Jaccard]] and the oracle:
+    * EVERY pair with 3-shingle-set Jaccard ≥ 0.5 — corpus-wide, NO blocking key
     * (q21 is the blocked unigram sibling) — via prefix filtering in
     * Spark vs brute force in DuckDB, so the oracle directly
     * certifies the prefix-filter lemma's zero-false-negative claim
@@ -8983,7 +8983,8 @@ object Catalog {
           .select(lit("par").as("init"), col("n_vectors"), col("mean_cost")))
   }
 
-  /** [[Dedup.exactJoin]] under [[Dedup.Cosine]] — q215's twin on the embedding side:
+  /** [[Dedup.exactJoin]] under [[Dedup.Cosine]] — q215's twin on the
+    * embedding side:
     * EVERY pair with cosine ≥ τ, exactly (pivot-angle banding, zero
     * false negatives by the spherical triangle inequality). The
     * oracle is deliberately BRUTE FORCE: an exact join's result is
@@ -9184,9 +9185,10 @@ object Catalog {
     val cross = Dedup.certIndexProbe(s, s"$root/vec", batch,
       "vec_id", "embedding", cos)
     // the fold's returned labeling is pinned and unused here: free it
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(Dedup.ccLabelsFold(s, s"$root/labels",
-      Dedup.certBatchPairs(batch, Some(cross), "vec_id", "embedding", cos)
-        .select("id_a", "id_b"), "e1", "cosine", 0.4))
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(
+      Dedup.ccLabelsFold(s, s"$root/labels",
+        Dedup.certBatchPairs(batch, Some(cross), "vec_id", "embedding", cos)
+          .select("id_a", "id_b"), "e1", "cosine", 0.4))
     Dedup.repairSurvivorsFromStore(s, e.select("vec_id"), "vec_id",
       s"$root/labels", "cosine", 0.4)
   }
@@ -9274,9 +9276,10 @@ object Catalog {
           "alpha_ratio", Seq("source")),
         "alpha_ratio", Seq("source")))
     // the fold's returned labeling is pinned and unused here: free it
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(Dedup.ccLabelsFold(s, s"$root/labels",
-      Dedup.certLedgerRead(s, s"$root/cos", "cosine", 0.4)
-        .select("id_a", "id_b"), "base", "cosine", 0.4))
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(
+      Dedup.ccLabelsFold(s, s"$root/labels",
+        Dedup.certLedgerRead(s, s"$root/cos", "cosine", 0.4)
+          .select("id_a", "id_b"), "base", "cosine", 0.4))
     // THE CARD: store reads + one docs profile pass, nothing else
     graft.operators.Audit.cardFromStores(s, docs, "text",
       s"$root/jac", 0.85, s"$root/cos", 0.4, s"$root/labels",
@@ -9679,7 +9682,8 @@ object Catalog {
 
   /** [[Dedup.certIndexProbe]] under [[Dedup.Cosine]] — the embedding
     * twin of q227, also store-backed: corpus vectors banded ONCE under
-    * pivots FROZEN in the manifest ([[Dedup.certIndexWrite]]), then the batch
+    * pivots FROZEN in the manifest ([[Dedup.certIndexWrite]]), then the
+    * batch
     * probes the store — corpus unreplicated, batch carrying the 9×
     * band neighborhood, no per-batch corpus banding or pivot
     * re-pick. */
@@ -9762,7 +9766,8 @@ object Catalog {
   /** q230's induction on the EMBEDDING side — same ledger family,
     * metric "cosine": bootstrap with the corpus exact cosine join,
     * append one batch's [[Dedup.certBatchPairs]] (cross pairs from
-    * [[Dedup.exactJoinAgainst]] + self pairs), assert pair-for-pair equality with the full join.
+    * [[Dedup.exactJoinAgainst]] + self pairs), assert pair-for-pair
+    * equality with the full join.
     * Together with q230 this pins that the certification ledger is
     * metric-agnostic in PRACTICE, not just by schema. */
   val q231CertLedgerCos = q("q231_cert_ledger_cos",
