@@ -15,7 +15,9 @@ import graft.SparkSpecBase
   * suite alike), so each budget is its largest measured count plus 2 —
   * an exact budget would be a flaky gate; growth beyond the measured
   * spread still fails. The exact-certification queries (q215, q224,
-  * q227, q228) carry the larger of two fresh-JVM counts, no headroom.
+  * q227, q228) and the flat-store queries (q143, q146, q149, q159,
+  * q163, q171, q172, q176, q178, q207, q209) carry the larger of two
+  * fresh-JVM counts, no headroom.
   * Each test reports its count, so a budget can be re-measured from
   * the test output. */
 class EraseJobBudgetSpec extends SparkSpecBase {
@@ -32,6 +34,17 @@ class EraseJobBudgetSpec extends SparkSpecBase {
     "q240_cap_erasure" -> 31,
     "q241_cuts_refreeze" -> 22,
     "q242_digest_erasure" -> 19,
+    "q143_epoch_compaction" -> 29,
+    "q146_incremental_domain_caps" -> 21,
+    "q149_sketch_store" -> 13,
+    "q159_hll_store" -> 18,
+    "q163_cms_store" -> 15,
+    "q171_digest_ledger" -> 13,
+    "q172_islands_store" -> 13,
+    "q176_kmv_store" -> 18,
+    "q178_store_time_travel" -> 20,
+    "q207_gram_freq_store" -> 16,
+    "q209_lm_store" -> 18,
     "q181_graph_census_store" -> 76,
     "q199_corpus_card" -> 78,
     "q230_cert_ledger" -> 57,
