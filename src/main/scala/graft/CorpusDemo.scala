@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{BoundedRead, Cardinality, Contamination, Curation,
-  Dedup, LmFilter, Maintenance, Merge, Packing, Quality, Similarity, Splits}
+  Dedup, LmFilter, Maintenance, Merge, Packing, Quality, Similarity, Splits,
+  StoreFamily}
 import graft.sources.{Fs, Tables}
 
 /** The LLM-data-pipeline story as ONE runnable main — the second-half
@@ -130,6 +131,7 @@ object CorpusDemo {
     //      behind — the number a corpus card must carry so the
     //      blocking tradeoff is a recorded decision, not a surprise.
     val certJacRoot = s"$outDir/stores/cert_jac"
+    val certJac = Dedup.certLedger("jaccard", 0.5)
     val (nResidualWithin, nResidualCross) = staged("certify_dedup") {
       val src = near.select(col("doc_id"), col("source"))
       // the exact join runs ONCE and its pairs land in a cert_pairs
@@ -137,9 +139,9 @@ object CorpusDemo {
       // below — and the final card's citation — are LEDGER READS,
       // and a later ingest loop appends batch pairs instead of ever
       // re-running corpus²
-      Dedup.certLedgerWrite(Dedup.exactJoin(near, "doc_id", "text",
-        Dedup.Jaccard(0.5)), certJacRoot, "jaccard", 0.5)
-      val split = Dedup.certLedgerRead(spark, certJacRoot, "jaccard", 0.5)
+      certJac.write(Dedup.exactJoin(near, "doc_id", "text",
+        Dedup.Jaccard(0.5)), certJacRoot)
+      val split = certJac.read(spark, certJacRoot)
         .join(src.select(col("doc_id").as("id_a"), col("source").as("_sa")),
           Seq("id_a"))
         .join(src.select(col("doc_id").as("id_b"), col("source").as("_sb")),
@@ -163,6 +165,7 @@ object CorpusDemo {
     //      blocking tradeoff — the number the corpus card carries so
     //      a denser centroid set is a recorded decision.
     val certCosRoot = s"$outDir/stores/cert_cos"
+    val certCos = Dedup.certLedger("cosine", 0.4)
     val (nSemKept, nSemResidualWithin, nSemResidualCross, semKeptVecs,
       semCapacityK) = staged("certify_semantic") {
         val emb = Tables.embeddings(spark, sfDir)
@@ -190,10 +193,9 @@ object CorpusDemo {
         // the residual split below reads them back, and the repair
         // stage consumes the same ledger instead of re-running the
         // exact join a second time
-        Dedup.certLedgerWrite(Dedup.exactJoin(
-          keptVecs, "vec_id", "embedding", Dedup.Cosine(0.4)),
-          certCosRoot, "cosine", 0.4)
-        val split = Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
+        certCos.write(Dedup.exactJoin(
+          keptVecs, "vec_id", "embedding", Dedup.Cosine(0.4)), certCosRoot)
+        val split = certCos.read(spark, certCosRoot)
           .join(cells.select(col("vec_id").as("id_a"),
             col("cell").as("_ca")), Seq("id_a"))
           .join(cells.select(col("vec_id").as("id_b"),
@@ -227,8 +229,8 @@ object CorpusDemo {
         // the fold's returned labeling is pinned and unused here: free it
         org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(
           Dedup.ccLabelsFold(spark, ccRoot,
-            Dedup.certLedgerRead(spark, certCosRoot, "cosine", 0.4)
-              .select("id_a", "id_b"), "base", "cosine", 0.4))
+            certCos.read(spark, certCosRoot).select("id_a", "id_b"), "base",
+            "cosine", 0.4))
         val repaired = barrier(Dedup.repairSurvivorsFromStore(spark,
           semKeptVecs, "vec_id", ccRoot, "cosine", 0.4))
         (repaired.count(),
@@ -408,14 +410,15 @@ object CorpusDemo {
     //      cert ledgers exercise filter-erase, the kmv profile
     //      rebuild-erase; this store completes the mechanism set)
     val bpRoot = s"$outDir/stores/boilerplate"
+    val bpStore = Dedup.boilerplateCounts("\n")
     val bpLineRefs = staged("boilerplate_store") {
       Fs.deleteRecursively(spark, bpRoot)
       def bpart(r: Int) = Dedup.boilerplateIndex(
         quality.filter(pmod(col("doc_id"), lit(2)) === r),
         "doc_id", "text", "\n")
-      Dedup.boilerplateIndexWrite(bpart(0), bpRoot, "\n")
-      Dedup.boilerplateIndexAppend(spark, bpRoot, bpart(1), "epoch-2", "\n")
-      Dedup.boilerplateIndexRead(spark, bpRoot)
+      bpStore.write(bpart(0), bpRoot)
+      bpStore.append(spark, bpRoot, bpart(1), "epoch-2")
+      bpStore.read(spark, bpRoot)
         .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
     }
 
@@ -504,15 +507,16 @@ object CorpusDemo {
     //      source, written epoch 1, appended epoch 2, compacted via
     //      the store-tree maintenance sweep, probed from disk (q176)
     val kmvRoot = s"$outDir/stores/kmv_docs"
+    val kmvStore = Cardinality.kmv(32, "doc_id")
     Fs.deleteRecursively(spark, kmvRoot)
     def epoch(r: Int) = Cardinality.kmvSketch(
       docs.filter(pmod(col("doc_id"), lit(2)) === r),
       col("source"), col("doc_id"), k = 32)
     val (compacted, kmvProbes) = staged("kmv_store") {
-      Cardinality.kmvIndexWrite(epoch(0), kmvRoot, 32, "doc_id")
-      Cardinality.kmvIndexAppend(spark, kmvRoot, epoch(1), "epoch-2", 32, "doc_id")
+      kmvStore.write(epoch(0), kmvRoot)
+      kmvStore.append(spark, kmvRoot, epoch(1), "epoch-2")
       val c = Maintenance.compactAll(spark, s"$outDir/stores")
-      (c, Cardinality.kmvIndexRead(spark, kmvRoot, 32, "doc_id").count())
+      (c, kmvStore.read(spark, kmvRoot).count())
     }
 
     // ---- final card (q236): the release card, emitted FROM THE
@@ -559,16 +563,16 @@ object CorpusDemo {
         // is TakeOrdered — bounded, never a global sort)
         val victims = barrier(quality.select("doc_id")
           .orderBy(col("doc_id")).limit(2))
-        def touching(path: String, metric: String, tau: Double): Long =
-          Dedup.certLedgerRead(spark, path, metric, tau)
+        def touching(path: String, ledger: StoreFamily.Bound): Long =
+          ledger.read(spark, path)
             .join(victims.select(col("doc_id").as("id_a")), Seq("id_a"),
               "left_semi")
-            .unionByName(Dedup.certLedgerRead(spark, path, metric, tau)
+            .unionByName(ledger.read(spark, path)
               .join(victims.select(col("doc_id").as("id_b")), Seq("id_b"),
                 "left_semi"))
             .distinct().count()
-        val jacTouch = touching(certJacRoot, "jaccard", 0.5)
-        val cosTouch = touching(certCosRoot, "cosine", 0.4)
+        val jacTouch = touching(certJacRoot, certJac)
+        val cosTouch = touching(certCosRoot, certCos)
         val victimDocs = barrier(
           quality.join(victims, Seq("doc_id"), "left_semi"))
         val bpVictimRefs = Dedup.boilerplateIndex(victimDocs,
@@ -584,13 +588,13 @@ object CorpusDemo {
         // that list pins empty)
         val audit = Maintenance.eraseAll(spark, s"$outDir/stores",
           Maintenance.EraseRequest(victims)
-            .withInput(ccRoot, Dedup.ccLabelsMeta("cosine", 0.4))(
-              Dedup.connectedComponents(Dedup.certLedgerRead(spark,
-                certCosRoot, "cosine", 0.4).select("id_a", "id_b")))
-            .withInput(kmvRoot, Cardinality.kmvMeta(32, "doc_id"))(
+            .withInput(ccRoot, Dedup.ccLabels("cosine", 0.4).meta)(
+              Dedup.connectedComponents(
+                certCos.read(spark, certCosRoot).select("id_a", "id_b")))
+            .withInput(kmvRoot, kmvStore.meta)(
               Cardinality.kmvSketch(docs.join(victims, Seq("doc_id"),
                 "left_anti"), col("source"), col("doc_id"), k = 32))
-            .withInput(bpRoot, Dedup.boilerplateIndexMeta("\n", 1))(
+            .withInput(bpRoot, bpStore.meta)(
               Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n"))
             .withInput(cutsRoot, Quality.cutsMeta("ppl", Seq("source")))(
               Quality.qualityCuts(retained, "ppl", Seq("source"))))
@@ -601,7 +605,7 @@ object CorpusDemo {
         // the SUBTRACT arithmetic q239/q240 pin at the oracle, proven
         // live on the funnel's own store: the post-erase total dropped
         // by exactly the victims' partial
-        val bpAfter = Dedup.boilerplateIndexRead(spark, bpRoot)
+        val bpAfter = bpStore.read(spark, bpRoot)
           .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
         require(bpAfter == bpLineRefs - bpVictimRefs,
           s"boilerplate subtract-erase arithmetic broke: " +

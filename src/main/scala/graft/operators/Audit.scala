@@ -92,10 +92,18 @@ object Audit {
   private[operators] val digestStore = StoreFamily.flat("table_digest",
     _ => digestFold, StoreFamily.Subtract(Seq("n_rows"),
       residualCols = Seq("digest"), absorbed = "digested"))
-  private[graft] def digestMeta(cols: Seq[String],
-                                groupName: String): IndexMeta =
-    IndexMeta(digestStore.name, "cols" -> cols.mkString(","),
-      "groupName" -> groupName)
+
+  /** A stored digest ledger (`table_digest`): one (group, n_rows,
+    * digest) row per group, the digested column list + group
+    * derivation in the manifest (digesting different columns against
+    * a stored ledger is the silent-divergence class the manifest
+    * refuses). The table is hashed ONCE; every batch appends its own
+    * [[digestPartial]] — a ROW lands in exactly one epoch, re-digesting
+    * rows double-counts them — and a read folds the per-group ledger,
+    * ≡ [[tableDigest]] over the union of the digested row sets, so
+    * verification against a replica never re-scans the table. */
+  def digestLedger(cols: Seq[String], groupName: String): StoreFamily.Bound =
+    digestStore.bind("cols" -> cols.mkString(","), "groupName" -> groupName)
 
   /** Per-group digest partial in the store's schema: (group, n_rows,
     * digest). `group` is the caller's drill-down unit rendered as a
@@ -105,41 +113,6 @@ object Audit {
     tableDigest(df.withColumn("_grp", group.cast("string")), cols,
       groupCols = Seq("_grp"))
       .select(col("_grp").as("group"), col("n_rows"), col("digest"))
-
-  /** Bootstrap a stored digest ledger: one (group, n_rows, digest)
-    * row per group, the digested column list + group derivation in
-    * the manifest (digesting different columns against a stored
-    * ledger is the silent-divergence class the manifest refuses).
-    * The table is hashed ONCE; every batch appends its own partial
-    * ([[digestIndexAppend]]), and verification against a replica is
-    * a read of ≤ groups × epochs tiny rows — never a table re-scan. */
-  def digestIndexWrite(index: DataFrame, path: String, cols: Seq[String],
-                       groupName: String): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, digestMeta(cols, groupName))
-  }
-
-  /** Append one batch's per-group digest partial as a new epoch
-    * (idempotent per epoch name; manifest-checked). Contract (shared
-    * with every additive store — CMS): a ROW lands in exactly one
-    * epoch; re-digesting rows double-counts them. */
-  def digestIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                        path: String, partial: DataFrame, epoch: String,
-                        cols: Seq[String], groupName: String): Unit = {
-    IndexMeta.check(spark, path, digestMeta(cols, groupName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: the folded per-group ledger across base and live
-    * epochs — ≡ [[tableDigest]] over the union of the digested row
-    * sets (additivity). */
-  def digestIndexRead(spark: org.apache.spark.sql.SparkSession,
-                      path: String, cols: Seq[String], groupName: String,
-                      excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, digestMeta(cols, groupName))
-    digestFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "digestIndexWrite"))
-  }
 
   /** Digest-driven divergence localization — the two-pass shape for
     * comparing 100 TB tables: pass one digests each side PER GROUP
@@ -206,17 +179,17 @@ object Audit {
       (count(lit(1)) -
         countDistinct(TextFunctions.fingerprint(col(textCol))))
         .as("n_exact_dup_docs"))
-    val certj = Dedup.certLedgerRead(spark, jaccardLedger, "jaccard",
-        jaccardTau)
+    val certj = Dedup.certLedger("jaccard", jaccardTau)
+      .read(spark, jaccardLedger)
       .agg(count(lit(1)).as("cert_jaccard_pairs"))
       .select(lit(jaccardTau).as("cert_jaccard_tau"),
         col("cert_jaccard_pairs"))
-    val certc = Dedup.certLedgerRead(spark, cosineLedger, "cosine",
-        cosineTau)
+    val certc = Dedup.certLedger("cosine", cosineTau)
+      .read(spark, cosineLedger)
       .agg(count(lit(1)).as("cert_cosine_pairs"))
       .select(lit(cosineTau).as("cert_cosine_tau"),
         col("cert_cosine_pairs"))
-    val rep = Dedup.ccLabelsRead(spark, labelsPath, "cosine", cosineTau)
+    val rep = Dedup.ccLabels("cosine", cosineTau).read(spark, labelsPath)
       .agg(countDistinct(col("cluster_id")).as("repair_components"),
         coalesce(sum(when(col("id") =!= col("cluster_id"), 1L)
           .otherwise(0L)), lit(0L)).as("repair_dropped"))

@@ -210,40 +210,16 @@ object Cardinality {
     * [[hllSketch]] recomputed over the retained corpus. */
   private[operators] val hllStore = StoreFamily.flat("hll_registers",
     param => hllFold(1 << param("p").toInt), StoreFamily.Rebuild())
-  private[graft] def hllMeta(p: Int, keyName: String): IndexMeta =
-    IndexMeta(hllStore.name, "p" -> p, "keyName" -> keyName)
 
-  /** Bootstrap a stored cardinality profile: one (group, regs) row
-    * per group, `p` and the counted-key derivation in the manifest
+  /** A stored cardinality profile (`hll_registers`): one (group, regs)
+    * row per group, `p` and the counted-key derivation in the manifest
     * (estimating a p=9 store as p=12 is the silent-divergence class
     * the manifest refuses). The corpus is counted ONCE; each batch
-    * appends its own registers; the store answers distinct counts
-    * over the whole history by register max — no rescan, ever. */
-  def hllIndexWrite(index: DataFrame, path: String, p: Int,
-                    keyName: String): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, hllMeta(p, keyName))
-  }
-
-  /** Append one batch's per-group registers as a new epoch
-    * (idempotent per epoch name; manifest-checked). */
-  def hllIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                     path: String, partial: DataFrame, epoch: String,
-                     p: Int, keyName: String): Unit = {
-    IndexMeta.check(spark, path, hllMeta(p, keyName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: one merged register array per group across the
-    * compacted base and live epochs — ≡ [[hllSketch]] over the union
-    * of the counted row sets (max-merge closure). */
-  def hllIndexRead(spark: org.apache.spark.sql.SparkSession,
-                   path: String, p: Int, keyName: String,
-                   excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, hllMeta(p, keyName))
-    hllFold(1 << p)(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "hllIndexWrite"))
-  }
+    * appends its own registers; a read max-merges one register array
+    * per group — ≡ [[hllSketch]] over the union of the counted row
+    * sets, so distinct counts over the whole history need no rescan. */
+  def hll(p: Int, keyName: String): StoreFamily.Bound =
+    hllStore.bind("p" -> p, "keyName" -> keyName)
 
   // ------------------- persisted KMV store (bottom-k family symmetry)
 
@@ -266,52 +242,19 @@ object Cardinality {
     * displaced — recompute [[kmvSketch]] over the retained corpus. */
   private[operators] val kmvStore = StoreFamily.flat("kmv_bottom_k",
     param => kmvFold(param("k").toInt), StoreFamily.Rebuild())
-  private[graft] def kmvMeta(k: Int, keyName: String): IndexMeta =
-    IndexMeta(kmvStore.name, "k" -> k, "keyName" -> keyName)
 
-  /** Bootstrap a stored bottom-k profile: one (group, sketch) row per
-    * group, `k` and the counted-key derivation in the manifest (a
-    * k=128 store probed as k=512 would silently under-estimate — the
-    * manifest refuses instead). The corpus is hashed ONCE; each batch
-    * appends its own sketch partial; the store answers distinct
-    * counts, Jaccard and intersection sizes over the whole history
-    * from k longs per group — no rescan, ever. */
-  def kmvIndexWrite(index: DataFrame, path: String, k: Int,
-                    keyName: String): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, kmvMeta(k, keyName))
-  }
-
-  /** Append one batch's per-group sketch as a new epoch (idempotent
-    * per epoch name; manifest-checked). */
-  def kmvIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                     path: String, partial: DataFrame, epoch: String,
-                     k: Int, keyName: String): Unit = {
-    IndexMeta.check(spark, path, kmvMeta(k, keyName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: one bottom-k sketch per group across the compacted
-    * base and live epochs — ≡ [[kmvSketch]] over the union of the
-    * counted row sets (bottom-k closure). */
-  def kmvIndexRead(spark: org.apache.spark.sql.SparkSession,
-                   path: String, k: Int, keyName: String,
-                   excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, kmvMeta(k, keyName))
-    kmvFold(k)(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "kmvIndexWrite"))
-  }
-
-  /** Time-travel probe: the per-group sketches EXACTLY as retained
-    * compaction `version` folded them ([[EpochIndex.readAsOf]]) —
-    * "the distinct-count profile release N shipped with", immutable
-    * and bit-replayable however much the live store has grown since. */
-  def kmvIndexReadAsOf(spark: org.apache.spark.sql.SparkSession,
-                       path: String, version: String, k: Int,
-                       keyName: String): DataFrame = {
-    IndexMeta.check(spark, path, kmvMeta(k, keyName))
-    EpochIndex.readAsOf(spark, path, version)
-  }
+  /** A stored bottom-k profile (`kmv_bottom_k`): one (group, sketch)
+    * row per group, `k` and the counted-key derivation in the manifest
+    * (a k=128 store probed as k=512 would silently under-estimate —
+    * the manifest refuses instead). The corpus is hashed ONCE; each
+    * batch appends its own sketch partial; a read is one bottom-k
+    * sketch per group — ≡ [[kmvSketch]] over the union of the counted
+    * row sets — answering distinct counts, Jaccard and intersection
+    * sizes over the whole history from k longs per group. Its
+    * `readAsOf` is "the distinct-count profile release N shipped
+    * with", bit-replayable however much the live store has grown. */
+  def kmv(k: Int, keyName: String): StoreFamily.Bound =
+    kmvStore.bind("k" -> k, "keyName" -> keyName)
 
   /** Report: per-group exact distinct count (the ground truth a
     * grouped report can afford) next to the KMV estimate — the q131

@@ -177,39 +177,16 @@ object Curation {
     * index operation. */
   private[operators] val capStore = StoreFamily.flat("domain_cap_counts",
     _ => capCountFold, StoreFamily.Subtract(Seq("n")))
-  private[graft] def capIndexMeta(keyName: String): IndexMeta =
-    IndexMeta(capStore.name, "keyName" -> keyName)
 
-  /** Bootstrap a stored count index (epoch layout + `_GRAFT_META`).
+  /** A stored per-key count index (`domain_cap_counts`); a read sums
+    * the per-key totals across the compacted base and live epochs.
     * `keyName` names the key derivation (e.g. "psl_registered_domain")
     * — the manifest guard against probing with a DIFFERENT domain
     * definition than the index was built under, the one parameter a
     * count table cannot reveal about itself. The cap itself is NOT
     * index state: any cap probes the same counts. */
-  def capCountIndexWrite(index: DataFrame, path: String,
-                         keyName: String): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, capIndexMeta(keyName))
-  }
-
-  /** Append one batch's per-key counts as a new epoch (idempotent
-    * per epoch name; manifest-checked). */
-  def capCountIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                          path: String, partial: DataFrame,
-                          epoch: String, keyName: String): Unit = {
-    IndexMeta.check(spark, path, capIndexMeta(keyName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: per-key totals summed across the compacted base
-    * and live epochs. */
-  def capCountIndexRead(spark: org.apache.spark.sql.SparkSession,
-                        path: String, keyName: String,
-                        excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, capIndexMeta(keyName))
-    capCountFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "capCountIndexWrite"))
-  }
+  def capCounts(keyName: String): StoreFamily.Bound =
+    capStore.bind("keyName" -> keyName)
 
   /** Batch arrival-order cap against persisted history:
     * `incrementalCapPerKey(batch, …, priorCounts)` ≡

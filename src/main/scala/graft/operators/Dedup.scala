@@ -275,7 +275,7 @@ object Dedup {
     * precedes every batch id (the append-only contract; ingest order
     * IS the id order in this family) and sep/minLineLen match the
     * index build — stored indexes record them in the `_GRAFT_META`
-    * manifest (checked by the path-taking read), and an in-memory
+    * manifest (checked by every [[lineFirstOcc]] read), and an in-memory
     * batch partial carries them in its [[LinePartial]] token.
     * Spec-pinned.
     *
@@ -326,79 +326,32 @@ object Dedup {
     * erased state is [[lineFirstOccIndex]] over the retained corpus. */
   private[operators] val lineStore = StoreFamily.flat("line_first_occ",
     _ => firstOccFold, StoreFamily.Rebuild())
-  private[graft] def lineIndexMeta(sep: String, minLineLen: Int): IndexMeta =
-    IndexMeta(lineStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
-  /** Read a LOG-STRUCTURED stored first-occurrence index: epoch
-    * partitions (plus the compacted base, if the store has been
-    * compacted) each hold a (fp, wid, wpos) partial; the min (wid, wpos)
-    * per fingerprint is the corpus-wide first occurrence (exact under
-    * the append-only id-order contract — ids never interleave across
-    * epochs). `excludeEpoch` drops one epoch's partial before
-    * aggregating — the replay-idempotency hook the streaming sink
-    * needs. A flat index written directly from [[lineFirstOccIndex]]
-    * (no `_epoch` column) reads through the same call. */
-  def lineFirstOccIndexRead(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            excludeEpoch: Option[String] = None): DataFrame =
-    firstOccFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "lineFirstOccIndexWrite"))
-
-  /** Checked read: refuses loudly (via the `_GRAFT_META` manifest)
-    * if the stored index was built under a different sep/minLineLen —
-    * the silent-divergence class [[incrementalDedupLines]]'s contract
-    * used to delegate to the caller. */
-  def lineFirstOccIndexRead(spark: org.apache.spark.sql.SparkSession,
-                            path: String, excludeEpoch: Option[String],
-                            sep: String, minLineLen: Int): DataFrame = {
-    IndexMeta.check(spark, path, lineIndexMeta(sep, minLineLen))
-    lineFirstOccIndexRead(spark, path, excludeEpoch)
-  }
-
-  /** Bootstrap a STORED first-occurrence index in the layout the
-    * streaming sink appends to (an `_epoch=base` partition — same
-    * convention as the boilerplate/IVF index writers), recording the
-    * build parameters in the `_GRAFT_META` manifest every checked
-    * read verifies. */
-  def lineFirstOccIndexWrite(index: DataFrame, path: String,
-                             sep: String, minLineLen: Int = 1): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, lineIndexMeta(sep, minLineLen))
-  }
-
-  /** Append one batch's first-occurrence partial as a new epoch —
-    * the batch-job sibling of the streaming sink's index write
-    * (idempotent: a retry under the same epoch name replaces its own
-    * partition). Parameters are manifest-checked: appending a
-    * different-sep partial would poison every later read. */
-  def lineFirstOccIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                              path: String, partial: DataFrame,
-                              epoch: String, sep: String,
-                              minLineLen: Int = 1): Unit = {
-    IndexMeta.check(spark, path, lineIndexMeta(sep, minLineLen))
-    EpochIndex.append(partial, path, epoch)
-  }
+  /** The stored first-occurrence index (`line_first_occ`), bound to
+    * its build parameters: epoch partitions (plus the compacted base,
+    * once compacted) each hold a (fp, wid, wpos) partial, and a read
+    * takes the min (wid, wpos) per fingerprint — the corpus-wide first
+    * occurrence, exact under the append-only id-order contract (ids
+    * never interleave across epochs). A read or append under another
+    * sep/minLineLen refuses (the manifest check) — the
+    * silent-divergence class [[incrementalDedupLines]]'s contract used
+    * to delegate to the caller. */
+  def lineFirstOcc(sep: String, minLineLen: Int = 1): StoreFamily.Bound =
+    lineStore.bind("sep" -> sep, "minLineLen" -> minLineLen)
 
   /** Persisted line-frequency index for boilerplate removal — the
     * table a 100 TB pipeline writes once at corpus-build time:
     * (fp, n_docs), one fixed-width row per DISTINCT line, never the
     * corpus text. [[incrementalRemoveBoilerplate]] probes it;
-    * [[boilerplateIndexMerge]] folds a new batch's counts in. */
+    * [[boilerplateCounts]] stores it and merges a new batch's counts
+    * in. */
   def boilerplateIndex(df: DataFrame, idCol: String, textCol: String,
                        sep: String, minLineLen: Int = 1): DataFrame =
     lineCounts(lineSegs(df, idCol, textCol, sep), idCol, minLineLen)
 
-  /** Fold a (disjoint-doc) batch's line counts into an existing
-    * index: frequencies ADD because no document is counted twice.
-    * Associative — building per-shard indexes and merging equals one
-    * corpus-wide build (spec-pinned). */
-  def boilerplateIndexMerge(index: DataFrame, batchIndex: DataFrame): DataFrame =
-    index.unionByName(batchIndex)
-      .groupBy(col("fp"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-
   /** THE line-count fold — counts ADD across partials (disjoint doc
-    * sets). Shared by the epoch-scoped read and compaction. */
+    * sets), so per-shard indexes merged equal one corpus-wide build
+    * (spec-pinned). */
   private def countsFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
 
@@ -408,54 +361,15 @@ object Dedup {
     * to them leave the disk. */
   private[operators] val boilerStore = StoreFamily.flat("boilerplate_counts",
     _ => countsFold, StoreFamily.Subtract(Seq("n_docs")))
-  private[graft] def boilerplateIndexMeta(sep: String, minLineLen: Int): IndexMeta =
-    IndexMeta(boilerStore.name, "sep" -> sep, "minLineLen" -> minLineLen)
 
-  /** Read a LOG-STRUCTURED stored line-frequency index: epoch
-    * partitions (plus the compacted base, if the store has been
-    * compacted) each hold a (fp, n_docs) partial
-    * (`Streaming.boilerplateIngestSink` writes them); summing per
-    * fingerprint yields the corpus-wide counts. `excludeEpoch` drops
-    * one epoch's partial before aggregating — the replay-idempotency
-    * hook the streaming sink needs (its scaladoc explains why).
-    * A flat index written directly from [[boilerplateIndex]] (no
-    * `_epoch` column) reads through the same call. */
-  def boilerplateIndexRead(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           excludeEpoch: Option[String] = None): DataFrame =
-    countsFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "boilerplateIndexWrite"))
-
-  /** Checked read: manifest-verifies sep/minLineLen before probing
-    * (a mismatched probe silently under- or over-removes). */
-  def boilerplateIndexRead(spark: org.apache.spark.sql.SparkSession,
-                           path: String, excludeEpoch: Option[String],
-                           sep: String, minLineLen: Int): DataFrame = {
-    IndexMeta.check(spark, path, boilerplateIndexMeta(sep, minLineLen))
-    boilerplateIndexRead(spark, path, excludeEpoch)
-  }
-
-  /** Bootstrap a STORED line-frequency index from a batch-built one
-    * ([[boilerplateIndex]]) in the layout the streaming sink appends
-    * to — an `_epoch=base` partition, the same convention as
-    * `Similarity.ivfIndexWrite`, so later epoch-scoped dynamic
-    * overwrites coexist with the seed instead of corrupting partition
-    * discovery. Records sep/minLineLen in the `_GRAFT_META` manifest. */
-  def boilerplateIndexWrite(index: DataFrame, path: String,
-                            sep: String, minLineLen: Int = 1): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, boilerplateIndexMeta(sep, minLineLen))
-  }
-
-  /** Append one disjoint batch's count partial as a new epoch
-    * (manifest-checked; idempotent under a repeated epoch name). */
-  def boilerplateIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                             path: String, partial: DataFrame,
-                             epoch: String, sep: String,
-                             minLineLen: Int = 1): Unit = {
-    IndexMeta.check(spark, path, boilerplateIndexMeta(sep, minLineLen))
-    EpochIndex.append(partial, path, epoch)
-  }
+  /** The stored line-frequency index (`boilerplate_counts`), bound to
+    * its build parameters: epoch partitions (plus the compacted base)
+    * each hold a (fp, n_docs) partial (`Streaming.boilerplateIngestSink`
+    * writes them), and a read sums them per fingerprint into the
+    * corpus-wide counts. A read or append under another sep/minLineLen
+    * refuses — a mismatched probe silently under- or over-removes. */
+  def boilerplateCounts(sep: String, minLineLen: Int = 1): StoreFamily.Bound =
+    boilerStore.bind("sep" -> sep, "minLineLen" -> minLineLen)
 
   /** Incremental boilerplate removal — the daily-batch shape
     * completing the same persisted-index family as the near-dup
@@ -468,8 +382,9 @@ object Dedup {
     * batch's documents (spec-pinned) — PROVIDED `sep` and
     * `minLineLen` match the index build's: a mismatched probe
     * silently under- or over-removes, which is why stored indexes
-    * record them in `_GRAFT_META` (the path-taking read checks it)
-    * and in-memory partials carry them in the [[LinePartial]] token.
+    * record them in `_GRAFT_META` (every [[boilerplateCounts]] read
+    * checks it) and in-memory partials carry them in the
+    * [[LinePartial]] token.
     *
     * @param batchCounts the batch's own line counts, if the caller
     *        already built them — a [[LinePartial]] minted by
@@ -1260,7 +1175,7 @@ object Dedup {
     * documents' index (q238 pins post-erase probe ≡ never-ingested). A
     * pre-bucketing layout (no `bb_buckets` in the manifest) refuses —
     * rebuild it with [[bandIndexWrite]]. */
-  private[operators] val bandStore = StoreFamily.flat("*_bands", _ => identity,
+  private[graft] val bandStore = StoreFamily.flat("*_bands", _ => identity,
     StoreFamily.Filter(param => { param("bb_buckets"); Seq("id") }), Seq("bb"))
 
   /** Connected components over a near-duplicate pair list: the final
@@ -1687,7 +1602,7 @@ object Dedup {
     /** The ledger/labels metric name and the pair score column. */
     private[graft] def name: String
     private[graft] def score: String
-    private[operators] def store: StoreFamily
+    private[graft] def store: StoreFamily
     /** The key substore and the blocking-key columns its stats
       * substore counts (`cnt` per key). */
     private[operators] def keySub: String
@@ -1785,7 +1700,7 @@ object Dedup {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
     private[graft] def name = "jaccard"
     private[graft] def score = "jaccard"
-    private[operators] def store = certTextStore
+    private[graft] def store = certTextStore
     private[operators] def keySub = CertTextPostings
     private[operators] def key = Seq("pt")
     private[operators] def limit = maxBucket.toLong
@@ -1980,7 +1895,7 @@ object Dedup {
       s"nPivots must be in [2, 16] (two block the join, the rest prefilter): $nPivots")
     private[graft] def name = "cosine"
     private[graft] def score = "cos"
-    private[operators] def store = certVecStore
+    private[graft] def store = certVecStore
     private[operators] def keySub = CertVecBands
     private[operators] def key = Seq("b0", "b1")
     private[operators] def limit = maxCell
@@ -2229,7 +2144,7 @@ object Dedup {
   }
 
   /** One batch's certified pairs — the unit a certification ledger
-    * appends ([[certLedgerAppend]]): its batch×corpus pairs (`cross`,
+    * appends ([[certLedger]]): its batch×corpus pairs (`cross`,
     * from [[certIndexProbe]] or [[exactJoinAgainst]]; None while no
     * corpus exists) canonicalized to id_a < id_b, plus the batch's
     * own [[exactJoin]].
@@ -2255,53 +2170,25 @@ object Dedup {
     * .eraseAll]] does). */
   private[operators] val certLedgerStore = StoreFamily.flat("cert_pairs",
     _ => identity, StoreFamily.Filter(_ => Seq("id_a", "id_b")))
-  private[graft] def certLedgerMeta(metric: String,
-                                    threshold: Double): IndexMeta =
-    IndexMeta(certLedgerStore.name, "metric" -> metric,
-      "threshold" -> f"$threshold%.4f")
 
-  /** Bootstrap a certification ledger with the one-time full
-    * corpus×corpus pass ([[exactJoin]]
-    * output — any `(id_a, id_b, <score>)` pair frame). The ledger is
-    * the OPERATIONAL form of the incremental certification story:
-    * after this bootstrap, every arriving batch appends its
-    * [[certBatchPairs]] (its batch-vs-corpus pairs, canonicalized to
-    * `id_a < id_b`, plus its own self-join), and by induction the
-    * ledger always equals the full join over everything ingested —
-    * the release-audit artifact ("these, exactly, are the surviving
-    * ≥ τ pairs of shipped corpus N") without ever re-running
-    * corpus². Rows are disjoint across epochs BY CONSTRUCTION (a
-    * batch's pairs all touch that batch's ids; one epoch per
-    * certified batch is the caller's append contract), so compaction
-    * is the identity fold and reads are epoch-unions. The manifest
-    * records metric + threshold: appending cosine pairs into a
-    * Jaccard ledger — or τ = 0.8 pairs into a τ = 0.85 ledger — is
+  /** A certification ledger (`cert_pairs`): the OPERATIONAL form of
+    * the incremental certification story. Bootstrap it with the
+    * one-time full corpus×corpus pass ([[exactJoin]] output — any
+    * `(id_a, id_b, <score>)` pair frame); after that every arriving
+    * batch appends its [[certBatchPairs]] (its batch-vs-corpus pairs,
+    * canonicalized to `id_a < id_b`, plus its own self-join) as one
+    * epoch, and by induction the ledger always equals the full join
+    * over everything ingested — the release-audit artifact ("these,
+    * exactly, are the surviving ≥ τ pairs of shipped corpus N") without
+    * ever re-running corpus². Rows are disjoint across epochs BY
+    * CONSTRUCTION (a batch's pairs all touch that batch's ids; one
+    * epoch per certified batch is the caller's append contract), so
+    * the fold is the identity and a read is the epoch union. The
+    * manifest records metric + threshold: appending cosine pairs into
+    * a Jaccard ledger — or τ = 0.8 pairs into a τ = 0.85 ledger — is
     * refused, not merged. */
-  def certLedgerWrite(pairs: DataFrame, path: String, metric: String,
-                      threshold: Double): Unit = {
-    EpochIndex.bootstrap(pairs, path)
-    IndexMeta.write(pairs.sparkSession, path,
-      certLedgerMeta(metric, threshold))
-  }
-
-  /** Append one certified batch's pairs as one epoch (an
-    * at-least-once replay of the same epoch name rewrites its own
-    * partition — idempotent). */
-  def certLedgerAppend(spark: org.apache.spark.sql.SparkSession,
-                       path: String, pairs: DataFrame, epoch: String,
-                       metric: String, threshold: Double): Unit = {
-    IndexMeta.check(spark, path, certLedgerMeta(metric, threshold))
-    EpochIndex.append(pairs, path, epoch)
-  }
-
-  /** Manifest-checked read of the full ledger (base ∪ live epochs). */
-  def certLedgerRead(spark: org.apache.spark.sql.SparkSession,
-                     path: String, metric: String,
-                     threshold: Double): DataFrame = {
-    IndexMeta.check(spark, path, certLedgerMeta(metric, threshold))
-    EpochIndex.read(spark, path, bootstrapName = "certLedgerWrite")
-      .drop(EpochIndex.EpochCol)
-  }
+  def certLedger(metric: String, threshold: Double): StoreFamily.Bound =
+    certLedgerStore.bind("metric" -> metric, "threshold" -> f"$threshold%.4f")
 
   // ------------------------------------------- persisted repair labels
 
@@ -2313,17 +2200,14 @@ object Dedup {
   private[operators] val ccLabelsStore = StoreFamily.flat("cc_labels",
     _ => p => p.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")),
     StoreFamily.Rebuild())
-  private[graft] def ccLabelsMeta(metric: String,
-                                  threshold: Double): IndexMeta =
-    IndexMeta(ccLabelsStore.name, "metric" -> metric,
-      "threshold" -> f"$threshold%.4f")
 
   /** Persisted connected-component labeling over everything the
     * certification ledger has certified — the state
     * [[incrementalComponents]] maintains, made a STORE so a production
     * ingest loop never re-derives bootstrap labels per run (the
     * verdict-named gap: every other incremental family persists its
-    * state; the labeling is what [[repairSurvivors]] reads).
+    * state; the labeling is what [[repairSurvivors]] reads). A read is
+    * the current complete labeling, (id, cluster_id).
     *
     * THE FOLD IS MIN, AND THAT IS A THEOREM, NOT A CONVENTION: labels
     * are component MIN-IDS, and components only ever MERGE as new
@@ -2342,7 +2226,13 @@ object Dedup {
     * by the batch's structure; reads are one co-partitioned
     * aggregation over delta rows. Manifest pins metric + τ so labels
     * derived from one certification can never silently absorb folds
-    * from another. */
+    * from another. Appends normally go through [[ccLabelsFold]], which
+    * computes the delta. */
+  def ccLabels(metric: String, threshold: Double): StoreFamily.Bound =
+    ccLabelsStore.bind("metric" -> metric, "threshold" -> f"$threshold%.4f")
+
+  /** Bootstrap a [[ccLabels]] store from a complete (nonempty)
+    * labeling. */
   def ccLabelsWrite(labels: DataFrame, path: String, metric: String,
                     threshold: Double): Unit = {
     require(!labels.isEmpty,
@@ -2350,32 +2240,8 @@ object Dedup {
         "labeling (a zero-row bootstrap bricks later reads); for a " +
         "pipeline with no certified pairs yet, start folding with " +
         "ccLabelsFold — it bootstraps from the first nonempty fold")
-    EpochIndex.bootstrap(labels.select(col("id"), col("cluster_id")), path)
-    IndexMeta.write(labels.sparkSession, path,
-      ccLabelsMeta(metric, threshold))
-  }
-
-  /** Append one fold's label DELTA as one epoch (manifest-checked,
-    * idempotent per epoch name; empty deltas are a no-op). Callers
-    * normally use [[ccLabelsFold]], which computes the delta. */
-  def ccLabelsAppend(spark: org.apache.spark.sql.SparkSession,
-                     path: String, delta: DataFrame, epoch: String,
-                     metric: String, threshold: Double): Unit = {
-    IndexMeta.check(spark, path, ccLabelsMeta(metric, threshold))
-    EpochIndex.append(delta.select(col("id"), col("cluster_id")),
-      path, epoch)
-  }
-
-  /** The current complete labeling: min per id over every delta ever
-    * folded (see the class doc's monotonicity argument) —
-    * (id, cluster_id), directly consumable by [[repairSurvivors]]. */
-  def ccLabelsRead(spark: org.apache.spark.sql.SparkSession,
-                   path: String, metric: String, threshold: Double,
-                   excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, ccLabelsMeta(metric, threshold))
-    EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "ccLabelsWrite")
-      .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
+    ccLabels(metric, threshold).write(
+      labels.select(col("id"), col("cluster_id")), path)
   }
 
   /** Fold one batch of certified pairs into the stored labeling — the
@@ -2400,15 +2266,17 @@ object Dedup {
     // records build parameters before any delta lands; every later
     // fold verifies them — folding τ=0.8 pairs into a τ=0.85 labeling
     // refuses, never merges
-    IndexMeta.writeIfAbsent(spark, path, ccLabelsMeta(metric, threshold))
-    IndexMeta.check(spark, path, ccLabelsMeta(metric, threshold))
+    val store = ccLabels(metric, threshold)
+    IndexMeta.writeIfAbsent(spark, path, store.meta)
+    IndexMeta.check(spark, path, store.meta)
+    def append(delta: DataFrame): Unit = store.append(spark, path,
+      delta.select(col("id"), col("cluster_id")), epoch)
     if (!EpochIndex.nonEmpty(spark, path)) {
       val labels = connectedComponents(pairs)
-      ccLabelsAppend(spark, path, labels, epoch, metric, threshold)
+      append(labels)
       labels
     } else {
-      val stored = ccLabelsRead(spark, path, metric, threshold,
-        excludeEpoch = Some(epoch))
+      val stored = store.read(spark, path, excludeEpoch = Some(epoch))
       val (labels, mini) = incrementalWithMini(stored, pairs)
       val updated = Bridge.freshLeaf(labels.localCheckpoint(true))
       Bridge.unpersistCheckpoint(mini)
@@ -2416,14 +2284,13 @@ object Dedup {
         .join(stored.withColumnRenamed("cluster_id", "_old"),
           Seq("id"), "left")
         .filter(col("_old").isNull || col("_old") =!= col("cluster_id"))
-        .select(col("id"), col("cluster_id"))
-      ccLabelsAppend(spark, path, delta, epoch, metric, threshold)
+      append(delta)
       updated
     }
   }
 
   /** The live certified-repair view FROM the store:
-    * [[repairSurvivors]] over [[ccLabelsRead]] — every ingested id
+    * [[repairSurvivors]] over the [[ccLabels]] read — every ingested id
     * whose stored label is itself (or that never certified a pair).
     * What a release pipeline reads instead of recomputing q232's CC. */
   def repairSurvivorsFromStore(spark: org.apache.spark.sql.SparkSession,
@@ -2431,7 +2298,7 @@ object Dedup {
                                labelsPath: String, metric: String,
                                threshold: Double): DataFrame =
     repairSurvivors(ids,
-      ccLabelsRead(spark, labelsPath, metric, threshold), idCol)
+      ccLabels(metric, threshold).read(spark, labelsPath), idCol)
 
   // ------------------------------------------- certification index stores
 
@@ -2763,7 +2630,7 @@ object Dedup {
     * fixed-width row per DISTINCT n-gram in the corpus — md5
     * fingerprints, never text (the gram-granularity sibling of
     * [[boilerplateIndex]]). [[incrementalDupGramFraction]] probes it;
-    * [[gramFreqIndexMerge]] folds a disjoint batch's counts in. */
+    * [[gramFreq]] stores it and merges a disjoint batch's counts in. */
   def gramFreqIndex(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 8): DataFrame =
     df.select(col(idCol).as("doc_id"),
@@ -2772,13 +2639,23 @@ object Dedup {
       .groupBy(col("gram_fp"))
       .agg(count(lit(1)).as("n_docs"))
 
-  /** Counts ADD across disjoint-doc batches (grams are per-doc
-    * DISTINCT, so no document is counted twice). Associative:
-    * per-shard builds merged equal one corpus-wide build
+  private[operators] val gramStore = StoreFamily.flat("gram_freq",
+    _ => gramCountsFold, StoreFamily.Subtract(Seq("n_docs")))
+
+  /** THE gram-count fold — counts ADD across disjoint-doc partials
+    * (grams are per-doc DISTINCT, so no document is counted twice).
+    * Associative: per-shard builds merged equal one corpus-wide build
     * (spec-pinned). */
-  def gramFreqIndexMerge(index: DataFrame, batchIndex: DataFrame): DataFrame =
-    index.unionByName(batchIndex)
-      .groupBy(col("gram_fp")).agg(sum(col("n_docs")).as("n_docs"))
+  private def gramCountsFold(partials: DataFrame): DataFrame =
+    partials.groupBy(col("gram_fp")).agg(sum(col("n_docs")).as("n_docs"))
+
+  /** The stored corpus gram-frequency index (`gram_freq`) in the
+    * epoch-partitioned layout the whole store family shares — the
+    * gram-granularity sibling of [[boilerplateCounts]]; a read sums
+    * the partials per fingerprint. The gram size `n` is in the
+    * manifest: probing an n=8 index with n=5 grams would silently
+    * report near-zero seen_frac for everything, so it refuses. */
+  def gramFreq(n: Int): StoreFamily.Bound = gramStore.bind("n" -> n)
 
   /** Batch novelty probe against a persisted corpus gram index — the
     * daily-batch shape of [[dupGramFraction]]: for each incoming doc,
@@ -2795,55 +2672,6 @@ object Dedup {
     * an empty or mis-pathed index would report seen_frac = 0 for
     * every doc — the silent "everything is novel" verdict a curation
     * gate must never emit. */
-  private[operators] val gramStore = StoreFamily.flat("gram_freq",
-    _ => gramCountsFold, StoreFamily.Subtract(Seq("n_docs")))
-  private[graft] def gramFreqIndexMeta(n: Int): IndexMeta =
-    IndexMeta(gramStore.name, "n" -> n)
-
-  /** THE gram-count fold — counts ADD across disjoint-doc partials
-    * (same contract as [[gramFreqIndexMerge]]); shared by the stored
-    * read and compaction. */
-  private def gramCountsFold(partials: DataFrame): DataFrame =
-    partials.groupBy(col("gram_fp")).agg(sum(col("n_docs")).as("n_docs"))
-
-  /** Bootstrap a STORED corpus gram-frequency index from a batch-built
-    * one ([[gramFreqIndex]]) in the epoch-partitioned layout the
-    * whole store family shares (`_epoch=base` + later appends, atomic
-    * `_CURRENT` compaction) — the gram-granularity sibling of
-    * [[boilerplateIndexWrite]]. Records the gram size `n` in the
-    * `_GRAFT_META` manifest: probing an n=8 index with n=5 grams
-    * would silently report near-zero seen_frac for everything. */
-  def gramFreqIndexWrite(index: DataFrame, path: String, n: Int): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, gramFreqIndexMeta(n))
-  }
-
-  /** Append one disjoint batch's gram-count partial as a new epoch
-    * (manifest-checked; idempotent under a repeated epoch name). */
-  def gramFreqIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                          path: String, partial: DataFrame,
-                          epoch: String, n: Int): Unit = {
-    IndexMeta.check(spark, path, gramFreqIndexMeta(n))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Read a stored gram-frequency index: epoch partials (plus the
-    * compacted base, if any) summed per fingerprint. `excludeEpoch`
-    * is the replay-idempotency hook the store family shares. */
-  def gramFreqIndexRead(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        excludeEpoch: Option[String] = None): DataFrame =
-    gramCountsFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "gramFreqIndexWrite"))
-
-  /** Checked read: manifest-verifies the gram size before probing. */
-  def gramFreqIndexRead(spark: org.apache.spark.sql.SparkSession,
-                        path: String, excludeEpoch: Option[String],
-                        n: Int): DataFrame = {
-    IndexMeta.check(spark, path, gramFreqIndexMeta(n))
-    gramFreqIndexRead(spark, path, excludeEpoch)
-  }
-
   def incrementalDupGramFraction(batch: DataFrame, index: DataFrame,
                                  idCol: String, textCol: String,
                                  n: Int = 8): DataFrame = {

@@ -84,42 +84,16 @@ object HeavyHitters {
     * memorize. */
   private[operators] val cmsStore =
     StoreFamily.flat("cms_counts", _ => cmsFold, StoreFamily.Rebuild())
-  private[graft] def cmsMeta(depth: Int, width: Int,
-                             itemName: String): IndexMeta =
-    IndexMeta(cmsStore.name, "depth" -> depth, "width" -> width,
-      "itemName" -> itemName)
 
-  /** Bootstrap a stored frequency sketch: d·w count cells in the
-    * epoch layout, geometry + item derivation in the manifest
-    * (probing a (4,1024) store as (4,2048) re-buckets every hash —
-    * the silent-divergence class the manifest refuses). The stream is
-    * counted ONCE; each batch appends its own cell partial; point
-    * estimates need only the ≤ d·w merged cells — never the stream. */
-  def cmsIndexWrite(sketch: DataFrame, path: String, depth: Int,
-                    width: Int, itemName: String): Unit = {
-    EpochIndex.bootstrap(sketch, path)
-    IndexMeta.write(sketch.sparkSession, path,
-      cmsMeta(depth, width, itemName))
-  }
-
-  /** Append one batch's cell partial as a new epoch (idempotent per
-    * epoch name; manifest-checked). */
-  def cmsIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                     path: String, partial: DataFrame, epoch: String,
-                     depth: Int, width: Int, itemName: String): Unit = {
-    IndexMeta.check(spark, path, cmsMeta(depth, width, itemName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: the summed cells across base and live epochs —
-    * ≡ [[countMinSketch]] over the concatenated streams. */
-  def cmsIndexRead(spark: org.apache.spark.sql.SparkSession,
-                   path: String, depth: Int, width: Int, itemName: String,
-                   excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, cmsMeta(depth, width, itemName))
-    cmsFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "cmsIndexWrite"))
-  }
+  /** A stored frequency sketch (`cms_counts`): d·w count cells in the
+    * epoch layout, geometry + item derivation in the manifest (probing
+    * a (4,1024) store as (4,2048) re-buckets every hash — the
+    * silent-divergence class the manifest refuses). The stream is
+    * counted ONCE; each batch appends its own cell partial; a read
+    * sums the cells — ≡ [[countMinSketch]] over the concatenated
+    * streams — so point estimates never touch the stream. */
+  def cms(depth: Int, width: Int, itemName: String): StoreFamily.Bound =
+    cmsStore.bind("depth" -> depth, "width" -> width, "itemName" -> itemName)
 
   /** End-to-end heavy-hitter report: exact top-k tokens (count desc,
     * token asc — deterministic under ties) alongside their count-min

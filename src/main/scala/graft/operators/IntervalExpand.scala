@@ -127,39 +127,14 @@ object IntervalExpand {
     * intervals. */
   private[operators] val islandsStore = StoreFamily.flat("interval_islands",
     param => islandsFold(param("keyCol")), StoreFamily.Rebuild())
-  private[graft] def islandsMeta(keyCol: String): IndexMeta =
-    IndexMeta(islandsStore.name, "keyCol" -> keyCol)
 
-  /** Bootstrap a stored coverage summary: the batch's merged islands
-    * per key, key column recorded in the manifest. Later batches
-    * append their own islands; reads re-merge — coverage questions
+  /** A stored coverage summary (`interval_islands`): merged islands
+    * per key, the key column in the manifest. Each write and append
+    * takes [[mergeIntervals]] output (an append may overlap earlier
+    * epochs — island merging is idempotent, unlike the additive
+    * stores); a read re-merges per key, ≡ [[mergeIntervals]] over the
+    * union of all raw intervals ever ingested, so coverage questions
     * over the whole history never re-read raw intervals. */
-  def islandsIndexWrite(intervals: DataFrame, path: String,
-                        keyCol: String, start: Column,
-                        end: Column): Unit = {
-    EpochIndex.bootstrap(mergeIntervals(intervals, keyCol, start, end), path)
-    IndexMeta.write(intervals.sparkSession, path, islandsMeta(keyCol))
-  }
-
-  /** Append one batch's islands as a new epoch (idempotent per epoch
-    * name; manifest-checked; overlap with earlier epochs is FINE —
-    * island merging is idempotent, unlike the additive stores). */
-  def islandsIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         path: String, batch: DataFrame, keyCol: String,
-                         start: Column, end: Column,
-                         epoch: String): Unit = {
-    IndexMeta.check(spark, path, islandsMeta(keyCol))
-    EpochIndex.append(mergeIntervals(batch, keyCol, start, end), path, epoch)
-  }
-
-  /** Checked read: the re-merged islands per key across base and
-    * live epochs — ≡ [[mergeIntervals]] over the union of all raw
-    * intervals ever ingested. */
-  def islandsIndexRead(spark: org.apache.spark.sql.SparkSession,
-                       path: String, keyCol: String,
-                       excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, islandsMeta(keyCol))
-    islandsFold(keyCol)(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "islandsIndexWrite"))
-  }
+  def islands(keyCol: String): StoreFamily.Bound =
+    islandsStore.bind("keyCol" -> keyCol)
 }

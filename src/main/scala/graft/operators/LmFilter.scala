@@ -63,8 +63,8 @@ object LmFilter {
   /** Train the hashed bigram LM: per-bucket occurrence counts, one
     * table with `_g` = 1 (context buckets) / 2 (bigram buckets) —
     * ≤ ctxBuckets + bigramBuckets rows whatever the reference corpus
-    * size. Counts ADD across disjoint reference batches
-    * ([[lmIndexMerge]]), which is what makes the persisted store's
+    * size. Counts ADD across disjoint reference batches (the [[lm]]
+    * store's fold), which is what makes the persisted store's
     * epoch-append sound. */
   def lmIndex(ref: DataFrame, idCol: String, textCol: String,
               ctxBuckets: Int = 4096,
@@ -76,11 +76,6 @@ object LmFilter {
       .groupBy(col("_g"), col("_b"))
       .agg(count(lit(1)).as("c"))
   }
-
-  /** Fold two disjoint batches' LM counts (same contract as the other
-    * count-index families: per-bucket ADD). */
-  def lmIndexMerge(index: DataFrame, batchIndex: DataFrame): DataFrame =
-    lmFold(index.unionByName(batchIndex))
 
   /** Score documents under a trained LM: per-doc mean negative log
     * likelihood over its bigrams and the corresponding perplexity.
@@ -134,42 +129,17 @@ object LmFilter {
     * without the victims would. */
   private[operators] val lmStore = StoreFamily.flat("lm_bigram", _ => lmFold,
     StoreFamily.Subtract(Seq("c"), absorbed = "trained on"))
-  private[graft] def lmMeta(ctxBuckets: Int, bigramBuckets: Int): IndexMeta =
-    IndexMeta(lmStore.name,
-      "ctx_buckets" -> ctxBuckets, "bigram_buckets" -> bigramBuckets)
 
-  /** THE count fold — per-(kind, bucket) ADD across epochs. Shared by
-    * the epoch-scoped read and compaction. */
+  /** THE count fold — per-(kind, bucket) ADD across epochs (disjoint
+    * reference batches). */
   private def lmFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("_g"), col("_b")).agg(sum(col("c")).as("c"))
 
-  /** Persist a trained [[lmIndex]] as an epoch-structured store,
-    * recording both bucket widths in the manifest — a probe hashed
-    * into a different bucket space silently mis-scores, so every
-    * read checks them. */
-  def lmIndexWrite(index: DataFrame, path: String,
-                   ctxBuckets: Int, bigramBuckets: Int): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path,
-      lmMeta(ctxBuckets, bigramBuckets))
-  }
-
-  /** Manifest-checked epoch-scoped read: model counts = per-epoch
-    * partials summed (bounded rows whatever the epoch count). */
-  def lmIndexRead(spark: org.apache.spark.sql.SparkSession, path: String,
-                  ctxBuckets: Int, bigramBuckets: Int,
-                  excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, lmMeta(ctxBuckets, bigramBuckets))
-    lmFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "lmIndexWrite"))
-  }
-
-  /** Append one disjoint reference batch's counts as a new epoch
-    * (manifest-checked; idempotent under a repeated epoch name). */
-  def lmIndexAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-                    partial: DataFrame, epoch: String,
-                    ctxBuckets: Int, bigramBuckets: Int): Unit = {
-    IndexMeta.check(spark, path, lmMeta(ctxBuckets, bigramBuckets))
-    EpochIndex.append(partial, path, epoch)
-  }
+  /** A trained [[lmIndex]] persisted as an epoch-structured store
+    * (`lm_bigram`), both bucket widths in the manifest — a probe
+    * hashed into a different bucket space silently mis-scores, so
+    * every read checks them. A read sums the per-epoch partials into
+    * the model counts (bounded rows whatever the epoch count). */
+  def lm(ctxBuckets: Int, bigramBuckets: Int): StoreFamily.Bound =
+    lmStore.bind("ctx_buckets" -> ctxBuckets, "bigram_buckets" -> bigramBuckets)
 }

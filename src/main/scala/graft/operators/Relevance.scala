@@ -277,7 +277,7 @@ object Relevance {
     * Contract: a doc id lands in exactly one epoch, so erase only
     * documents this index ingested — [[bm25Posted]] refuses a
     * tokenized victim with no posting row before any rewrite. */
-  private[operators] val bm25Store = StoreFamily("bm25_postings", Seq(
+  private[graft] val bm25Store = StoreFamily("bm25_postings", Seq(
     StoreFamily.substore("stats", _ => p =>
       p.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         coalesce(sum(col("sumdl")), lit(0L)).as("sumdl")),

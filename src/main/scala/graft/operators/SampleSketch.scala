@@ -98,7 +98,7 @@ object SampleSketch {
 
   /** Report: per-group sample size, lower-quantiles and row-count
     * estimate from already-built sketches ([[sampleSketch]] output, a
-    * stored profile table or [[sampleSketchIndexRead]] output). */
+    * stored profile table or a [[profile]] read). */
   def reportFromSketches(sketches: DataFrame, k: Int,
                          ps: Seq[Double]): DataFrame = {
     val qCols = ps.map(p => sketchQuantile(col("sketch"), p)
@@ -126,44 +126,15 @@ object SampleSketch {
     * [[sampleSketch]] is recomputed over the retained corpus. */
   private[operators] val sketchStore = StoreFamily.flat("sample_sketch",
     param => sketchFold(param("k").toInt), StoreFamily.Rebuild())
-  private[graft] def indexMeta(k: Int, keyName: String,
-                               valueName: String): IndexMeta =
-    IndexMeta(sketchStore.name, "k" -> k, "keyName" -> keyName,
-      "valueName" -> valueName)
 
-  /** Bootstrap a stored profile: one (group, sketch) row per group in
-    * the epoch layout, with `k` and the key/value derivations
-    * recorded in the `_GRAFT_META` manifest — probing with a
-    * different k (or a different metric) is the silent-divergence
-    * class the manifest refuses. The corpus is profiled ONCE; every
-    * later batch appends its own k-sample and the store answers
-    * quantiles over the whole history without any rescan. */
-  def sampleSketchIndexWrite(index: DataFrame, path: String, k: Int,
-                             keyName: String, valueName: String): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path,
-      indexMeta(k, keyName, valueName))
-  }
-
-  /** Append one batch's per-group sketch as a new epoch (idempotent
-    * per epoch name; manifest-checked). */
-  def sampleSketchIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                              path: String, partial: DataFrame,
-                              epoch: String, k: Int, keyName: String,
-                              valueName: String): Unit = {
-    IndexMeta.check(spark, path, indexMeta(k, keyName, valueName))
-    EpochIndex.append(partial, path, epoch)
-  }
-
-  /** Checked read: one merged sketch per group across the compacted
-    * base and live epochs — ≡ [[sampleSketch]] over the union of the
-    * profiled row sets (bottom-k closure). */
-  def sampleSketchIndexRead(spark: org.apache.spark.sql.SparkSession,
-                            path: String, k: Int, keyName: String,
-                            valueName: String,
-                            excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, indexMeta(k, keyName, valueName))
-    sketchFold(k)(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "sampleSketchIndexWrite"))
-  }
+  /** A stored profile (`sample_sketch`): one (group, sketch) row per
+    * group in the epoch layout, with `k` and the key/value derivations
+    * in the manifest — probing with a different k (or a different
+    * metric) is the silent-divergence class the manifest refuses. The
+    * corpus is profiled ONCE; every later batch appends its own
+    * k-sample, and a read merges one sketch per group — ≡
+    * [[sampleSketch]] over the union of the profiled row sets — so
+    * quantiles over the whole history need no rescan. */
+  def profile(k: Int, keyName: String, valueName: String): StoreFamily.Bound =
+    sketchStore.bind("k" -> k, "keyName" -> keyName, "valueName" -> valueName)
 }

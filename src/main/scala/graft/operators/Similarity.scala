@@ -694,7 +694,7 @@ object Similarity {
     * cert_vec pivots, they are aggregate directions, not records of
     * any document, and keeping them keeps already-assigned epochs
     * consistent. */
-  private[operators] val ivfStore = StoreFamily("ivf",
+  private[graft] val ivfStore = StoreFamily("ivf",
     Seq(StoreFamily.substore("assignments", _ => identity,
       StoreFamily.Filter(manifestIdCol), Seq("cell"))),
     reports = "assignments")

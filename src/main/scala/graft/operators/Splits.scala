@@ -296,11 +296,9 @@ object Splits {
       index, idCol, buckets, roundTo)
 
   // ------------------------------------------ persisted DSIR store
-  private[graft] def dsirMeta(buckets: Int): IndexMeta =
-    IndexMeta(dsirStore.name, "buckets" -> buckets)
 
   /** THE bucket-count fold — per-bucket (cr, ct) ADD across disjoint
-    * batches. Shared by the epoch-scoped read and compaction. */
+    * batches. */
   private def dsirFold(partials: DataFrame): DataFrame =
     partials.groupBy(col("_b"))
       .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
@@ -310,35 +308,14 @@ object Splits {
   private[operators] val dsirStore = StoreFamily.flat("dsir_buckets",
     _ => dsirFold, StoreFamily.Subtract(Seq("cr", "ct")))
 
-  /** Persist a [[dsirIndex]] as an epoch-structured store (the
-    * `_epoch=base` layout the other index families share), recording
-    * `buckets` in the `_GRAFT_META` manifest — a probe bucketed
-    * differently silently mis-buckets, so every read checks it. */
-  def dsirIndexWrite(index: DataFrame, path: String, buckets: Int): Unit = {
-    EpochIndex.bootstrap(index, path)
-    IndexMeta.write(index.sparkSession, path, dsirMeta(buckets))
-  }
-
-  /** Manifest-checked epoch-scoped read: corpus-wide bucket counts =
-    * per-epoch partials summed (≤ `buckets` rows whatever the epoch
-    * count — this family's probe cost never grows with history, but
-    * its FILE count does, which is what compaction bounds). */
-  def dsirIndexRead(spark: org.apache.spark.sql.SparkSession, path: String,
-                    buckets: Int,
-                    excludeEpoch: Option[String] = None): DataFrame = {
-    IndexMeta.check(spark, path, dsirMeta(buckets))
-    dsirFold(EpochIndex.read(spark, path, excludeEpoch,
-      bootstrapName = "dsirIndexWrite"))
-  }
-
-  /** Append one disjoint batch's bucket counts as a new epoch
-    * (manifest-checked; idempotent under a repeated epoch name). */
-  def dsirIndexAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-                      partial: DataFrame, epoch: String,
-                      buckets: Int): Unit = {
-    IndexMeta.check(spark, path, dsirMeta(buckets))
-    EpochIndex.append(partial, path, epoch)
-  }
+  /** A [[dsirIndex]] persisted as an epoch-structured store
+    * (`dsir_buckets`), `buckets` in the manifest — a probe bucketed
+    * differently silently mis-buckets, so every read checks it. A read
+    * sums the per-epoch partials into the corpus-wide bucket counts
+    * (≤ `buckets` rows whatever the epoch count — this family's probe
+    * cost never grows with history, but its FILE count does, which is
+    * what compaction bounds). */
+  def dsir(buckets: Int): StoreFamily.Bound = dsirStore.bind("buckets" -> buckets)
 
   private def dsirScore(feats: DataFrame, counts: DataFrame, idCol: String,
                         buckets: Int, roundTo: Int): DataFrame = {

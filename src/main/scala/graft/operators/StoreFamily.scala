@@ -29,6 +29,10 @@ final case class StoreFamily(name: String, substores: Seq[StoreFamily.Substore],
   def accepts(family: String): Boolean =
     if (name.startsWith("*")) family.endsWith(name.drop(1)) else family == name
 
+  /** This flat family bound to the manifest `params` (see [[Bound]]). */
+  private[operators] def bind(params: (String, Any)*): Bound =
+    Bound(this, IndexMeta(name, params: _*))
+
   /** Fold every substore in declaration order behind its atomic
     * `_CURRENT` flip; returns the `reports` substore's stats. A
     * family with no fold (a versioned snapshot) throws the typed
@@ -219,6 +223,62 @@ object StoreFamily {
   def substore(subdir: String, fold: Fold, erase: Erase,
                innerPartCols: Seq[String] = Nil): Substore =
     Substore(subdir, innerPartCols, Some(fold), erase)
+
+  /** A flat family bound to the manifest it is built under — the one
+    * write/append/read path of every flat store (each family's public
+    * constructor returns one, e.g. `Cardinality.hll(p, keyName)`).
+    * Every append and read first checks the stored manifest against
+    * `meta` (a driver-side file read, no Spark job): another HLL `p`,
+    * CMS width or gram size refuses instead of silently diverging. A
+    * read applies the family's registered [[Fold]] with `meta`'s
+    * parameters — the function [[Maintenance.compactStore]] folds the
+    * same store with — so a read and a compaction cannot disagree. */
+  final case class Bound(family: StoreFamily, meta: IndexMeta) {
+    require(family.accepts(meta.family) && family.substores.size == 1 &&
+      family.substores.head.subdir.isEmpty && family.substores.head.fold.isDefined,
+      s"${family.name} is not a flat family that can be bound to ${meta.family}")
+    private val sub = family.substores.head
+
+    private def fold(root: String): DataFrame => DataFrame =
+      sub.fold.get(meta.param(_, root))
+
+    /** Bootstrap the store at `root` from `index` (the `_epoch=base`
+      * layout), then record the manifest. */
+    def write(index: DataFrame, root: String): Unit = {
+      EpochIndex.bootstrap(index, root, sub.innerPartCols)
+      IndexMeta.write(index.sparkSession, root, meta)
+    }
+
+    /** Append one batch's partial as epoch `epoch` (idempotent per
+      * epoch name: a retry replaces its own partition). */
+    def append(spark: SparkSession, root: String, partial: DataFrame,
+               epoch: String): Unit = {
+      IndexMeta.check(spark, root, meta)
+      EpochIndex.append(partial, root, epoch, sub.innerPartCols)
+    }
+
+    /** The folded store: base ∪ live epochs through the family's fold.
+      * `excludeEpoch` drops one live epoch's partial first — the
+      * replay-idempotency hook of the streaming sinks. */
+    def read(spark: SparkSession, root: String,
+             excludeEpoch: Option[String] = None): DataFrame = {
+      IndexMeta.check(spark, root, meta)
+      fold(root)(EpochIndex.read(spark, root, excludeEpoch, sub.innerPartCols,
+        bootstrapName = s"the ${family.name} store's write")
+        .drop(EpochIndex.EpochCol))
+    }
+
+    /** The store exactly as retained compaction `version` folded it
+      * ([[EpochIndex.readAsOf]]). */
+    def readAsOf(spark: SparkSession, root: String, version: String): DataFrame = {
+      IndexMeta.check(spark, root, meta)
+      EpochIndex.readAsOf(spark, root, version)
+    }
+
+    /** Two partials folded into one — the fold over `a ∪ b`. */
+    def merge(a: DataFrame, b: DataFrame): DataFrame =
+      fold("(in-memory merge)")(a.unionByName(b))
+  }
 
   /** A family whose epochs live directly at the manifest root. */
   def flat(name: String, fold: Fold, erase: Erase,

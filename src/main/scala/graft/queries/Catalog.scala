@@ -4866,14 +4866,15 @@ object Catalog {
     val root = freshScratch(s, "q143_lineidx")
     def epoch(r: Int): DataFrame = Dedup.lineFirstOccIndex(
       corpus.filter(pmod(col("doc_id"), lit(3)) === r), "doc_id", "text", sep)
-    Dedup.lineFirstOccIndexWrite(epoch(0), root, sep)
-    Dedup.lineFirstOccIndexAppend(s, root, epoch(1), "day-2", sep)
-    Dedup.lineFirstOccIndexAppend(s, root, epoch(2), "day-3", sep)
+    val store = Dedup.lineFirstOcc(sep)
+    store.write(epoch(0), root)
+    store.append(s, root, epoch(1), "day-2")
+    store.append(s, root, epoch(2), "day-3")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q143: compaction folded nothing at $root — store build failed")
     Dedup.incrementalDedupLines(batch, "doc_id", "text",
-      Dedup.lineFirstOccIndexRead(s, root, None, sep, 1), sep)
+      store.read(s, root), sep)
   }
 
   // --------------------------------------- KMV algebra on the SQL surface
@@ -5074,13 +5075,14 @@ object Catalog {
     def partial(r: Int): DataFrame = Curation.capCountIndex(
       history.filter(pmod(col("doc_id"), lit(2)) === r),
       col("domain"), col("doc_id"))
-    Curation.capCountIndexWrite(partial(0), root, keyName)
-    Curation.capCountIndexAppend(s, root, partial(1), "day-2", keyName)
+    val store = Curation.capCounts(keyName)
+    store.write(partial(0), root)
+    store.append(s, root, partial(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q146: compaction folded nothing at $root — store build failed")
     Curation.incrementalCapPerKey(batch, col("domain"), col("doc_id"),
-      maxPerKey = 5, Curation.capCountIndexRead(s, root, keyName))
+      maxPerKey = 5, store.read(s, root))
       .select(col("key").as("domain"), col("id").as("doc_id"), col("rk"))
   }
 
@@ -5228,15 +5230,14 @@ object Catalog {
     def epochSketch(r: Int): DataFrame = SampleSketch.sampleSketch(
       ev.filter(pmod(col("event_id"), lit(2)) === r),
       col("event_type"), col("event_id"), col("value"), k)
-    SampleSketch.sampleSketchIndexWrite(epochSketch(0), root, k,
-      "event_type", "value")
-    SampleSketch.sampleSketchIndexAppend(s, root, epochSketch(1), "day-2",
-      k, "event_type", "value")
+    val store = SampleSketch.profile(k, "event_type", "value")
+    store.write(epochSketch(0), root)
+    store.append(s, root, epochSketch(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q149: compaction folded nothing at $root — store build failed")
     SampleSketch.reportFromSketches(
-      SampleSketch.sampleSketchIndexRead(s, root, k, "event_type", "value"),
+      store.read(s, root),
       k, ps = Seq(0.5, 0.9))
       .select(col("group").as("etype"), col("n_sample"),
         col("p50"), col("p90"), col("n_est"))
@@ -5848,15 +5849,15 @@ object Catalog {
     def epochSketch(r: Int) = Cardinality.hllSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), HllP)
-    Cardinality.hllIndexWrite(epochSketch(0), root, HllP, "user_id")
-    Cardinality.hllIndexAppend(s, root, epochSketch(1), "day-2", HllP,
-      "user_id")
+    val store = Cardinality.hll(HllP, "user_id")
+    store.write(epochSketch(0), root)
+    store.append(s, root, epochSketch(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q159: compaction folded nothing at $root — store build failed")
     val exact = ev.groupBy(col("event_type").as("group"))
       .agg(count_distinct(col("user_id")).as("n_exact"))
-    Cardinality.hllIndexRead(s, root, HllP, "user_id")
+    store.read(s, root)
       .join(exact, Seq("group"))
       .select(col("group").as("etype"), col("n_exact"),
         round(Cardinality.hllEstimate(col("regs"), HllP), 4).as("hll_est"))
@@ -6011,16 +6012,14 @@ object Catalog {
       .select(explode(TextFunctions.tokens(coalesce(col("text"), lit(""))))
         .as("token"))
     val root = freshScratch(s, "q163_cms")
-    HeavyHitters.cmsIndexWrite(
-      HeavyHitters.countMinSketch(toks(0), "token", depth, width),
-      root, depth, width, "token")
-    HeavyHitters.cmsIndexAppend(s, root,
-      HeavyHitters.countMinSketch(toks(1), "token", depth, width),
-      "day-2", depth, width, "token")
+    val store = HeavyHitters.cms(depth, width, "token")
+    def cells(i: Int) = HeavyHitters.countMinSketch(toks(i), "token", depth, width)
+    store.write(cells(0), root)
+    store.append(s, root, cells(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q163: compaction folded nothing at $root — store build failed")
-    val sketch = HeavyHitters.cmsIndexRead(s, root, depth, width, "token")
+    val sketch = store.read(s, root)
     val allToks = docs
       .select(explode(TextFunctions.tokens(coalesce(col("text"), lit(""))))
         .as("token"))
@@ -6387,13 +6386,13 @@ object Catalog {
       li.filter(pmod(col("l_orderkey"), lit(2)) === r), cols,
       col("l_returnflag"))
     val root = freshScratch(s, "q171_ledger")
-    Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
-    Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
-      "l_returnflag")
+    val store = Audit.digestLedger(cols, "l_returnflag")
+    store.write(partial(0), root)
+    store.append(s, root, partial(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q171: compaction folded nothing at $root — ledger build failed")
-    Audit.digestIndexRead(s, root, cols, "l_returnflag")
+    store.read(s, root)
       .select(col("group").as("l_returnflag"), col("n_rows"), col("digest"))
   }
 
@@ -6434,14 +6433,15 @@ object Catalog {
         (datediff(col("o_orderdate"), to_date(lit("1970-01-01"))).cast("long")
           + pmod(col("o_orderkey"), lit(20)) + lit(1L)).as("e"))
     val root = freshScratch(s, "q172_islands")
-    IntervalExpand.islandsIndexWrite(ivs(0), root, "o_custkey",
-      col("s"), col("e"))
-    IntervalExpand.islandsIndexAppend(s, root, ivs(1), "o_custkey",
-      col("s"), col("e"), "day-2")
+    val store = IntervalExpand.islands("o_custkey")
+    def islands(i: Int) =
+      IntervalExpand.mergeIntervals(ivs(i), "o_custkey", col("s"), col("e"))
+    store.write(islands(0), root)
+    store.append(s, root, islands(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q172: compaction folded nothing at $root — store build failed")
-    IntervalExpand.islandsIndexRead(s, root, "o_custkey")
+    store.read(s, root)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_islands"),
         sum(col("island_end") - col("island_start")).as("covered"))
@@ -6658,15 +6658,15 @@ object Catalog {
     def epochSketch(r: Int) = Cardinality.kmvSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), k = 32)
-    Cardinality.kmvIndexWrite(epochSketch(0), root, 32, "user_id")
-    Cardinality.kmvIndexAppend(s, root, epochSketch(1), "day-2", 32,
-      "user_id")
+    val store = Cardinality.kmv(32, "user_id")
+    store.write(epochSketch(0), root)
+    store.append(s, root, epochSketch(1), "day-2")
     val stats = Maintenance.compactStore(s, root)
     require(stats.folded.nonEmpty,
       s"q176: compaction folded nothing at $root — store build failed")
     val exact = ev.groupBy(col("event_type").as("group"))
       .agg(count_distinct(col("user_id")).as("n_exact"))
-    Cardinality.kmvIndexRead(s, root, 32, "user_id")
+    store.read(s, root)
       .join(exact, Seq("group"))
       .select(col("group").as("event_type"), col("n_exact"),
         round(Cardinality.kmvEstimate(col("sketch"), 32), 4).as("kmv_est"))
@@ -6791,10 +6791,10 @@ object Catalog {
     def epochSketch(r: Int) = Cardinality.kmvSketch(
       ev.filter(pmod(col("user_id"), lit(2)) === r),
       col("event_type"), col("user_id"), k = 32)
-    Cardinality.kmvIndexWrite(epochSketch(0), root, 32, "user_id")
+    val store = Cardinality.kmv(32, "user_id")
+    store.write(epochSketch(0), root)
     Maintenance.compactStore(s, root) // snapshot v1: batch 1 only
-    Cardinality.kmvIndexAppend(s, root, epochSketch(1), "day-2", 32,
-      "user_id")
+    store.append(s, root, epochSketch(1), "day-2")
     Maintenance.compactStore(s, root) // v2 live; v1 retained
     val (retained, current) = graft.operators.EpochIndex.versions(s, root)
     require(retained.size == 2 && current.contains(retained.last),
@@ -6803,10 +6803,10 @@ object Catalog {
     def est(df: DataFrame, tag: String) = df.select(
       lit(tag).as("version"), col("group").as("event_type"),
       round(Cardinality.kmvEstimate(col("sketch"), 32), 4).as("kmv_est"))
-    est(Cardinality.kmvIndexReadAsOf(s, root, retained.head, 32, "user_id"),
+    est(store.readAsOf(s, root, retained.head),
       "v1")
       .unionByName(est(
-        Cardinality.kmvIndexRead(s, root, 32, "user_id"), "current"))
+        store.read(s, root), "current"))
   }
 
   /** Incremental triangle census
@@ -7773,15 +7773,17 @@ object Catalog {
     // write different stores — independent actions, overlapped
     // (guide §2.6: one build's driver-bound stage storm back-fills
     // with the other's executor work)
+    val (jac, cos) = (Dedup.certLedger("jaccard", 0.85),
+      Dedup.certLedger("cosine", 0.4))
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(Dedup.exactJoin(docs, "doc_id", "text",
-        Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac", "jaccard", 0.85),
-      () => Dedup.certLedgerWrite(Dedup.exactJoin(emb, "vec_id", "embedding",
-        Dedup.Cosine(0.4)), s"$root/cos", "cosine", 0.4))
-    val certj = Dedup.certLedgerRead(s, s"$root/jac", "jaccard", 0.85)
+      () => jac.write(Dedup.exactJoin(docs, "doc_id", "text",
+        Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac"),
+      () => cos.write(Dedup.exactJoin(emb, "vec_id", "embedding",
+        Dedup.Cosine(0.4)), s"$root/cos"))
+    val certj = jac.read(s, s"$root/jac")
       .agg(count(lit(1)).as("cert_jaccard_pairs"))
       .select(lit(0.85).as("cert_jaccard_tau"), col("cert_jaccard_pairs"))
-    val cosLedger = Dedup.certLedgerRead(s, s"$root/cos", "cosine", 0.4)
+    val cosLedger = cos.read(s, s"$root/cos")
     val certc = cosLedger.agg(count(lit(1)).as("cert_cosine_pairs"))
       .select(lit(0.4).as("cert_cosine_tau"), col("cert_cosine_pairs"))
     // semantic residuals REUSE the cosine ledger: the exact join ran
@@ -8106,16 +8108,17 @@ object Catalog {
       |GROUP BY probe.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val root = freshScratch(s, "q207_gram_index")
-    Dedup.gramFreqIndexWrite(
+    val store = Dedup.gramFreq(8)
+    store.write(
       Dedup.gramFreqIndex(docs.filter(pmod(col("doc_id"), lit(5)).isin(0, 1)),
-        "doc_id", "text", n = 8), root, n = 8)
-    Dedup.gramFreqIndexAppend(s, root,
+        "doc_id", "text", n = 8), root)
+    store.append(s, root,
       Dedup.gramFreqIndex(docs.filter(pmod(col("doc_id"), lit(5)).isin(3, 4)),
-        "doc_id", "text", n = 8), epoch = "day2", n = 8)
+        "doc_id", "text", n = 8), "day2")
     Maintenance.compactStore(s, root)
     Dedup.incrementalDupGramFraction(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2),
-      Dedup.gramFreqIndexRead(s, root, None, n = 8),
+      Dedup.gramFreq(8).read(s, root),
       "doc_id", "text", n = 8)
   }
 
@@ -8204,17 +8207,17 @@ object Catalog {
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val root = freshScratch(s, "q209_lm_index")
     val ref = docs.filter(pmod(col("doc_id"), lit(5)) =!= 2)
-    LmFilter.lmIndexWrite(
+    val store = LmFilter.lm(ctxBuckets = 4096, bigramBuckets = 32768)
+    store.write(
       LmFilter.lmIndex(ref.filter(pmod(col("doc_id"), lit(5)).isin(0, 1)),
-        "doc_id", "text"), root, ctxBuckets = 4096, bigramBuckets = 32768)
-    LmFilter.lmIndexAppend(s, root,
+        "doc_id", "text"), root)
+    store.append(s, root,
       LmFilter.lmIndex(ref.filter(pmod(col("doc_id"), lit(5)).isin(3, 4)),
-        "doc_id", "text"), epoch = "day2",
-      ctxBuckets = 4096, bigramBuckets = 32768)
+        "doc_id", "text"), "day2")
     Maintenance.compactStore(s, root)
     LmFilter.lmPerplexity(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2), "doc_id", "text",
-      LmFilter.lmIndexRead(s, root, ctxBuckets = 4096, bigramBuckets = 32768))
+      store.read(s, root))
   }
 
   // ------------------------------------------------- k-means refinement
@@ -9265,11 +9268,12 @@ object Catalog {
     // different inputs and write different stores — independent
     // actions, overlapped (guide §2.6); only the labels fold depends
     // on (reads) the cosine ledger and runs after.
+    val cos = Dedup.certLedger("cosine", 0.4)
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(Dedup.exactJoin(docs, "doc_id", "text",
-        Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac", "jaccard", 0.85),
-      () => Dedup.certLedgerWrite(Dedup.exactJoin(emb, "vec_id", "embedding",
-        Dedup.Cosine(0.4)), s"$root/cos", "cosine", 0.4),
+      () => Dedup.certLedger("jaccard", 0.85).write(Dedup.exactJoin(docs,
+        "doc_id", "text", Dedup.Jaccard(0.85, shingleK = 3)), s"$root/jac"),
+      () => cos.write(Dedup.exactJoin(emb, "vec_id", "embedding",
+        Dedup.Cosine(0.4)), s"$root/cos"),
       () => Quality.qualityCutsWrite(s, s"$root/cuts",
         Quality.qualityCuts(docs.select(col("source"),
           TextFunctions.alphaRatio(col("text")).as("alpha_ratio")),
@@ -9278,8 +9282,8 @@ object Catalog {
     // the fold's returned labeling is pinned and unused here: free it
     org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(
       Dedup.ccLabelsFold(s, s"$root/labels",
-        Dedup.certLedgerRead(s, s"$root/cos", "cosine", 0.4)
-          .select("id_a", "id_b"), "base", "cosine", 0.4))
+        cos.read(s, s"$root/cos").select("id_a", "id_b"), "base", "cosine",
+        0.4))
     // THE CARD: store reads + one docs profile pass, nothing else
     graft.operators.Audit.cardFromStores(s, docs, "text",
       s"$root/jac", 0.85, s"$root/cos", 0.4, s"$root/labels",
@@ -9420,20 +9424,21 @@ object Catalog {
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 2)
     val root = freshScratch(s, "q239_gram_erasure")
-    Dedup.gramFreqIndexWrite(
+    val store = Dedup.gramFreq(8)
+    store.write(
       Dedup.gramFreqIndex(corpus.filter(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "text", n = 8), root, n = 8)
-    Dedup.gramFreqIndexAppend(s, root,
+        "doc_id", "text", n = 8), root)
+    store.append(s, root,
       Dedup.gramFreqIndex(corpus.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "doc_id", "text", n = 8), epoch = "day2", n = 8)
+        "doc_id", "text", n = 8), "day2")
     val victims = corpus.filter(pmod(col("doc_id"), lit(7)) === 1)
     Maintenance.eraseStore(s, root,
       Maintenance.EraseRequest(victims.select("doc_id"))
-        .withInput(root, Dedup.gramFreqIndexMeta(8))(
+        .withInput(root, store.meta)(
           Dedup.gramFreqIndex(victims, "doc_id", "text", n = 8)))
     Dedup.incrementalDupGramFraction(
       docs.filter(pmod(col("doc_id"), lit(5)) === 2),
-      Dedup.gramFreqIndexRead(s, root, None, n = 8),
+      Dedup.gramFreq(8).read(s, root),
       "doc_id", "text", n = 8)
   }
 
@@ -9477,17 +9482,18 @@ object Catalog {
     def partial(r: Int): DataFrame = Curation.capCountIndex(
       history.filter(pmod(col("doc_id"), lit(2)) === r),
       col("domain"), col("doc_id"))
-    Curation.capCountIndexWrite(partial(0), root, keyName)
-    Curation.capCountIndexAppend(s, root, partial(1), "day-2", keyName)
+    val store = Curation.capCounts(keyName)
+    store.write(partial(0), root)
+    store.append(s, root, partial(1), "day-2")
     val victims = history.filter(pmod(col("doc_id"), lit(7)) === 1)
     val stats = Maintenance.eraseStore(s, root,
       Maintenance.EraseRequest(victims.select("doc_id"))
-        .withInput(root, Curation.capIndexMeta(keyName))(
+        .withInput(root, store.meta)(
           Curation.capCountIndex(victims, col("domain"), col("doc_id"))))
     require(stats.folded.nonEmpty,
       s"q240: erasure folded nothing at $root — store build failed")
     Curation.incrementalCapPerKey(batch, col("domain"), col("doc_id"),
-      maxPerKey = 5, Curation.capCountIndexRead(s, root, keyName))
+      maxPerKey = 5, store.read(s, root))
       .select(col("key").as("domain"), col("id").as("doc_id"), col("rk"))
   }
 
@@ -9580,17 +9586,17 @@ object Catalog {
       li.filter(pmod(col("l_orderkey"), lit(2)) === r), cols,
       col("l_returnflag"))
     val root = freshScratch(s, "q242_digest_erasure")
-    Audit.digestIndexWrite(partial(0), root, cols, "l_returnflag")
-    Audit.digestIndexAppend(s, root, partial(1), "day-2", cols,
-      "l_returnflag")
+    val store = Audit.digestLedger(cols, "l_returnflag")
+    store.write(partial(0), root)
+    store.append(s, root, partial(1), "day-2")
     val victims = li.filter(pmod(col("l_orderkey"), lit(7)) === 1)
     val stats = Maintenance.eraseStore(s, root,
       Maintenance.EraseRequest(victims.select("l_orderkey"))
-        .withInput(root, Audit.digestMeta(cols, "l_returnflag"))(
+        .withInput(root, store.meta)(
           Audit.digestPartial(victims, cols, col("l_returnflag"))))
     require(stats.folded.nonEmpty,
       s"q242: erasure folded nothing at $root — ledger build failed")
-    Audit.digestIndexRead(s, root, cols, "l_returnflag")
+    store.read(s, root)
       .select(col("group").as("l_returnflag"), col("n_rows"), col("digest"))
   }
 
@@ -9736,21 +9742,19 @@ object Catalog {
     val batch = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
     val root = freshScratch(s, "q230_cert_ledger")
     val jac = Dedup.Jaccard(0.85)
+    val store = Dedup.certLedger("jaccard", 0.85)
     // the bootstrap write and the batch pair computation share no
     // store — overlap them (guide §2.6); the append itself (which
     // needs the bootstrapped manifest) runs after, reading the
     // already-materialized pairs
     var pairs: org.apache.spark.sql.DataFrame = null
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(
-        Dedup.exactJoin(corpus, "doc_id", "text", jac),
-        root, "jaccard", 0.85),
+      () => store.write(Dedup.exactJoin(corpus, "doc_id", "text", jac), root),
       () => pairs = stageBarrier(Dedup.certBatchPairs(batch,
         Some(Dedup.exactJoinAgainst(corpus, batch, "doc_id", "text", jac)),
         "doc_id", "text", jac)))
-    Dedup.certLedgerAppend(s, root, pairs, "batch-1",
-      "jaccard", 0.85)
-    val ledger = Dedup.certLedgerRead(s, root, "jaccard", 0.85)
+    store.append(s, root, pairs, "batch-1")
+    val ledger = store.read(s, root)
     val full = Dedup.exactJoin(docs, "doc_id", "text", jac)
     val missed = full.join(ledger, Seq("id_a", "id_b", "jaccard"),
       "left_anti").agg(count(lit(1)).as("n_missed"))
@@ -9786,18 +9790,17 @@ object Catalog {
     val batch = e.filter(pmod(col("vec_id"), lit(7)) === 0)
     val root = freshScratch(s, "q231_cert_ledger_cos")
     val cos = Dedup.Cosine(0.4)
+    val store = Dedup.certLedger("cosine", 0.4)
     // same overlap as q230: bootstrap write ∥ batch pair computation
     var pairs: org.apache.spark.sql.DataFrame = null
     graft.operators.Par.concurrently(
-      () => Dedup.certLedgerWrite(
-        Dedup.exactJoin(corpus, "vec_id", "embedding", cos),
-        root, "cosine", 0.4),
+      () => store.write(
+        Dedup.exactJoin(corpus, "vec_id", "embedding", cos), root),
       () => pairs = stageBarrier(Dedup.certBatchPairs(batch,
         Some(Dedup.exactJoinAgainst(corpus, batch, "vec_id", "embedding", cos)),
         "vec_id", "embedding", cos)))
-    Dedup.certLedgerAppend(s, root, pairs, "batch-1",
-      "cosine", 0.4)
-    val ledger = Dedup.certLedgerRead(s, root, "cosine", 0.4)
+    store.append(s, root, pairs, "batch-1")
+    val ledger = store.read(s, root)
     val full = Dedup.exactJoin(e, "vec_id", "embedding", cos)
     val missed = full.join(ledger, Seq("id_a", "id_b", "cos"),
       "left_anti").agg(count(lit(1)).as("n_missed"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
-import graft.operators.{Dedup, EpochIndex, IndexMeta, Maintenance, Merge}
+import graft.operators.{Dedup, EpochIndex, IndexMeta, Merge, StoreFamily}
 import graft.sources.Fs
 
 /** Structured Streaming surface of the engine.
@@ -38,25 +38,30 @@ object Streaming {
   // ------------------------------------------------------ ingest scaffold
 
   /** One store an ingest sink writes or reads: its role (named in
-    * refusals), its root, and — for a persisted store family — the
-    * manifest it is built under. A family store's epoch subroots come
-    * from its [[graft.operators.Maintenance.Families]] entry; a plain
-    * table (corpus, rejects, zone-map manifest) is its own root. */
+    * refusals), its root, and — for a persisted store — its
+    * [[StoreFamily]], whose substores are the epoch subroots, and the
+    * manifest it is built under (None while the manifest derives from
+    * the first batch, as the cosine certification index's pivots do).
+    * A plain table (corpus, rejects, zone-map manifest) is its own
+    * root. */
   private final case class Store(role: String, root: String,
+                                 family: Option[StoreFamily] = None,
                                  meta: Option[IndexMeta] = None) {
     /** (path, inner partition columns) of every epoch subroot. */
-    def subroots: Seq[(String, Seq[String])] = meta match {
+    def subroots: Seq[(String, Seq[String])] = family match {
       case None => Seq(root -> Nil)
-      case Some(m) => Maintenance.familyOf(m).getOrElse(sys.error(
-          s"no Maintenance.Families entry for family '${m.family}' at $root"))
-        .substores.map(s => s.path(root) -> s.innerPartCols)
+      case Some(f) => f.substores.map(s => s.path(root) -> s.innerPartCols)
     }
     def nonEmpty(spark: SparkSession): Boolean =
       subroots.exists { case (p, inner) => EpochIndex.nonEmpty(spark, p, inner) }
   }
 
-  private def store(role: String, root: String, meta: IndexMeta): Store =
-    Store(role, root, Some(meta))
+  private def store(role: String, root: String, family: StoreFamily,
+                    meta: IndexMeta): Store =
+    Store(role, root, Some(family), Some(meta))
+
+  private def store(role: String, root: String, bound: StoreFamily.Bound): Store =
+    store(role, root, bound.family, bound.meta)
 
   /** A fresh-checkpoint refusal: the "… partials" noun the standing
     * store holds, and what a re-delivered source would break there.
@@ -175,7 +180,7 @@ object Streaming {
             s"epoch layout (e.g. $f) — a flat parquet table this sink's " +
             "epoch-scoped reads and activation guards cannot see. " +
             "Re-ingest that data through an epoch write " +
-            "(EpochIndex.bootstrap, or the family's IndexWrite) or point " +
+            "(EpochIndex.bootstrap, or the family store's write) or point " +
             s"the sink at a fresh ${s.role} path")
       }
     integralIdCols.foreach { c =>
@@ -191,7 +196,7 @@ object Streaming {
           "contract\"")
     }
     if (!Fs.exists(spark, s"$checkpoint/$RunTokenFile")) refusal.foreach { r =>
-      stores.find(s => s.meta.isDefined && s.nonEmpty(spark)).foreach { s =>
+      stores.find(s => s.family.isDefined && s.nonEmpty(spark)).foreach { s =>
         throw new IllegalArgumentException(
           s"$sink: fresh checkpoint ($checkpoint) but ${s.root} already " +
             s"holds ${r.noun} partials. ${r.hazard} Restore the original " +
@@ -425,28 +430,28 @@ object Streaming {
     * the index. `clean` returns (corpus rows, index partial), pinning
     * what it materializes through the epoch.
     *
-    * `readIndex` receives this epoch's id to EXCLUDE: an at-least-once
-    * replay must not clean the batch against its own earlier partial
-    * (every batch doc reaches the corpus, so a replay that re-read its
-    * own failed-commit partial would count each line twice, clean
-    * differently, and overwrite epoch N with DIFFERENT rows). Corpus
-    * before index: a crash between them re-runs the epoch with the
-    * index still excluding it. */
+    * A family index (`bound`) is read EXCLUDING this epoch: an
+    * at-least-once replay must not clean the batch against its own
+    * earlier partial (every batch doc reaches the corpus, so a replay
+    * that re-read its own failed-commit partial would count each line
+    * twice, clean differently, and overwrite epoch N with DIFFERENT
+    * rows). Corpus before index: a crash between them re-runs the
+    * epoch with the index still excluding it. */
   private def cleaningSink(stream: DataFrame, spark: SparkSession, sink: String,
                            corpusPath: String, indexPath: String,
-                           checkpoint: String, meta: Option[IndexMeta],
+                           checkpoint: String, bound: Option[StoreFamily.Bound],
                            emptyIndex: StructType,
                            integralIdCols: Seq[String] = Nil,
                            refusal: Option[Refusal] = None)(
-      readIndex: String => DataFrame,
       clean: (DataFrame, DataFrame, Epoch) => (DataFrame, DataFrame)): StreamingQuery = {
-    val index = Store("index", indexPath, meta)
+    val index = bound.fold(Store("index", indexPath))(store("index", indexPath, _))
     ingestSink(stream, spark, sink, checkpoint,
       Seq(Store("corpus", corpusPath), index), integralIdCols, refusal) {
       (batch, epoch) =>
         val (kept, partial) = clean(batch,
-          if (index.nonEmpty(spark)) readIndex(epoch.id)
-          else emptyFrame(spark, emptyIndex), epoch)
+          if (!index.nonEmpty(spark)) emptyFrame(spark, emptyIndex)
+          else bound.fold(spark.read.parquet(indexPath))(
+            _.read(spark, indexPath, Some(epoch.id))), epoch)
         epoch.write(kept, corpusPath)
         epoch.write(partial, indexPath)
     }
@@ -484,16 +489,16 @@ object Streaming {
                       textCol: String, idCol: String, checkpoint: String,
                       bloomExpectedItems: Option[Long] = None): StreamingQuery =
     cleaningSink(stream, spark, "dedupIngestSink", corpusPath, indexPath,
-      checkpoint, meta = None, schema("fingerprint" -> StringType))(
-      readIndex = _ => spark.read.parquet(indexPath).select("fingerprint"),
-      clean = { (batch, index, epoch) =>
+      checkpoint, bound = None, schema("fingerprint" -> StringType)) {
+      (batch, stored, epoch) =>
+        val index = stored.select("fingerprint")
         val accepted = epoch.pin(bloomExpectedItems match {
           case Some(n) if index.limit(1).count() > 0 =>
             Dedup.bloomIncrementalExactDedup(batch, textCol, idCol, index, n)
           case _ => Dedup.incrementalExactDedup(batch, textCol, idCol, index)
         })
         (accepted.drop("fingerprint"), accepted.select("fingerprint"))
-      })
+    }
 
   /** Streaming keep-first line-dedup ingest — the streaming shape of
     * `Dedup.incrementalDedupLines` (q142's family): each micro-batch
@@ -511,19 +516,16 @@ object Streaming {
                           minLineLen: Int = 1,
                           allowForeignEpochs: Boolean = false): StreamingQuery =
     cleaningSink(stream, spark, "lineDedupIngestSink", corpusPath, indexPath,
-      checkpoint, Some(Dedup.lineIndexMeta(sep, minLineLen)),
+      checkpoint, Some(Dedup.lineFirstOcc(sep, minLineLen)),
       schema("fp" -> StringType, "wid" -> LongType, "wpos" -> IntegerType),
       refusal = refusal(allowForeignEpochs, "first-occurrence",
         "If the source re-delivers ingested documents, their own lines " +
-          "would dedup them to empty."))(
-      readIndex = ex => Dedup.lineFirstOccIndexRead(spark, indexPath,
-        Some(ex), sep, minLineLen),
-      clean = { (batch, index, epoch) =>
-        val partial = epoch.pin(
-          Dedup.lineFirstOccPartial(batch, idCol, textCol, sep, minLineLen))
-        (epoch.pin(Dedup.incrementalDedupLines(batch, idCol, textCol, index,
-          sep, minLineLen, batchIndex = Some(partial))), partial.frame)
-      })
+          "would dedup them to empty.")) { (batch, index, epoch) =>
+      val partial = epoch.pin(
+        Dedup.lineFirstOccPartial(batch, idCol, textCol, sep, minLineLen))
+      (epoch.pin(Dedup.incrementalDedupLines(batch, idCol, textCol, index,
+        sep, minLineLen, batchIndex = Some(partial))), partial.frame)
+    }
 
   /** Streaming boilerplate-cleaning ingest — the continuous form of
     * `Dedup.incrementalRemoveBoilerplate`: each micro-batch is cleaned
@@ -532,7 +534,7 @@ object Streaming {
     * and the batch's line-count PARTIAL joins the index the next batch
     * reads. The index is LOG-STRUCTURED — one (fp, n_docs) partial per
     * epoch partition, readers sum per fingerprint
-    * ([[graft.operators.Dedup.boilerplateIndexRead]]); counts are
+    * ([[graft.operators.Dedup.boilerplateCounts]]); counts are
     * additive over disjoint doc sets, so per-epoch partials + the
     * epoch overwrite compose into replay idempotency. Fresh-checkpoint
     * refusal: counts are keyed by doc id, so re-ingesting the same
@@ -546,20 +548,17 @@ object Streaming {
                             minLineLen: Int = 1,
                             allowForeignEpochs: Boolean = false): StreamingQuery =
     cleaningSink(stream, spark, "boilerplateIngestSink", corpusPath, indexPath,
-      checkpoint, Some(Dedup.boilerplateIndexMeta(sep, minLineLen)),
+      checkpoint, Some(Dedup.boilerplateCounts(sep, minLineLen)),
       schema("fp" -> StringType, "n_docs" -> LongType),
       refusal = refusal(allowForeignEpochs, "count",
         "If the source re-delivers ingested documents, their line counts " +
-          "would double silently."))(
-      readIndex = ex => Dedup.boilerplateIndexRead(spark, indexPath,
-        Some(ex), sep, minLineLen),
-      clean = { (batch, index, epoch) =>
-        val partial = epoch.pin(
-          Dedup.boilerplateCountsPartial(batch, idCol, textCol, sep, minLineLen))
-        (epoch.pin(Dedup.incrementalRemoveBoilerplate(batch, idCol, textCol,
-          index, sep, minDocs, minLineLen, batchCounts = Some(partial))),
-          partial.frame)
-      })
+          "would double silently.")) { (batch, index, epoch) =>
+      val partial = epoch.pin(
+        Dedup.boilerplateCountsPartial(batch, idCol, textCol, sep, minLineLen))
+      (epoch.pin(Dedup.incrementalRemoveBoilerplate(batch, idCol, textCol,
+        index, sep, minDocs, minLineLen, batchCounts = Some(partial))),
+        partial.frame)
+    }
 
   /** Streaming per-domain cap ingest — the caps family's streaming
     * shape (q146's incremental contract applied per micro-batch):
@@ -581,24 +580,21 @@ object Streaming {
                           allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.Curation
     cleaningSink(stream, spark, "domainCapIngestSink", corpusPath, indexPath,
-      checkpoint, Some(Curation.capIndexMeta(keyName)),
+      checkpoint, Some(Curation.capCounts(keyName)),
       schema("key" -> StringType, "n" -> LongType),
       // the quota keep rejoins kept ids to the batch through a long cast
       integralIdCols = Seq(idCol),
       refusal = refusal(allowForeignEpochs, "count",
         "If the source re-delivers ingested rows, every count doubles and " +
-          "later arrivals are starved of quota."))(
-      readIndex = ex => Curation.capCountIndexRead(spark, indexPath, keyName,
-        Some(ex)),
-      clean = { (batch, prior, epoch) =>
-        // built ONCE: feeds the keep decision AND is the index write
-        val partial = epoch.pin(
-          Curation.capCountIndex(batch, col(keyCol), col(idCol)))
-        val keptIds = Curation.incrementalCapPerKey(batch,
-          col(keyCol), col(idCol), maxPerKey, prior)
-        (epoch.pin(batch.join(keptIds.select(col("id").cast("long").as(idCol)),
-          Seq(idCol), "left_semi")), partial)
-      })
+          "later arrivals are starved of quota.")) { (batch, prior, epoch) =>
+      // built ONCE: feeds the keep decision AND is the index write
+      val partial = epoch.pin(
+        Curation.capCountIndex(batch, col(keyCol), col(idCol)))
+      val keptIds = Curation.incrementalCapPerKey(batch,
+        col(keyCol), col(idCol), maxPerKey, prior)
+      (epoch.pin(batch.join(keptIds.select(col("id").cast("long").as(idCol)),
+        Seq(idCol), "left_semi")), partial)
+    }
   }
 
   // ---------------------------------------------------------- partial sinks
@@ -613,19 +609,17 @@ object Streaming {
     * (max-merge HLL, union KMV, re-merge islands), whose stores
     * self-heal under replay. */
   private def partialIngestSink(stream: DataFrame, spark: SparkSession,
-                                sink: String,
-                                corpusPath: String, indexPath: String,
-                                checkpoint: String, meta: IndexMeta,
+                                sink: String, corpusPath: String,
+                                index: Store, checkpoint: String,
                                 refusal: Option[Refusal])(
       buildPartials: DataFrame => Seq[(String, DataFrame)]): StreamingQuery =
     ingestSink(stream, spark, sink, checkpoint,
-      Seq(Store("corpus", corpusPath), store("store", indexPath, meta)),
-      refusal = refusal) { (batch, epoch) =>
+      Seq(Store("corpus", corpusPath), index), refusal = refusal) { (batch, epoch) =>
       if (!batch.isEmpty) {
         val partials = buildPartials(batch).map { case (p, df) => p -> epoch.pin(df) }
         epoch.write(batch, corpusPath)
         partials.foreach { case (p, df) =>
-          epoch.write(df, if (p.isEmpty) indexPath else s"$indexPath/$p")
+          epoch.write(df, if (p.isEmpty) index.root else s"${index.root}/$p")
         }
       }
     }
@@ -647,8 +641,8 @@ object Streaming {
                              allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.SampleSketch
     partialIngestSink(stream, spark, "sampleSketchIngestSink",
-      corpusPath, indexPath, checkpoint,
-      SampleSketch.indexMeta(k, groupCol, valueCol),
+      corpusPath, store("store", indexPath, SampleSketch.profile(k, groupCol,
+        valueCol)), checkpoint,
       refusal(allowForeignEpochs, "sketch",
         "A reset source would re-land its rows in the corpus (the profile " +
           "store itself self-heals — identical resampled triples dedup in " +
@@ -660,7 +654,7 @@ object Streaming {
 
   /** Streaming HLL-profile ingest: each micro-batch lands in the
     * corpus and appends its per-group register partial; reads
-    * max-merge across epochs (`Cardinality.hllIndexRead`), and because
+    * max-merge across epochs (the `Cardinality.hll` store), and because
     * max-merge is IDEMPOTENT a replayed partial can never inflate an
     * estimate — no fresh-checkpoint refusal for the STORE (the corpus
     * write still relies on the epoch overwrite). */
@@ -670,15 +664,15 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Cardinality
     partialIngestSink(stream, spark, "hllIngestSink",
-      corpusPath, indexPath, checkpoint,
-      Cardinality.hllMeta(p, valueCol), refusal = None) { batch =>
+      corpusPath, store("store", indexPath, Cardinality.hll(p, valueCol)),
+      checkpoint, refusal = None) { batch =>
       Seq("" -> Cardinality.hllSketch(batch, col(groupCol), col(valueCol), p))
     }
   }
 
   /** Streaming KMV ingest — the bottom-k twin of [[hllIngestSink]]:
     * reads union-and-retruncate across epochs
-    * (`Cardinality.kmvIndexRead`); `array_union` dedupes, so a
+    * (the `Cardinality.kmv` store); `array_union` dedupes, so a
     * replayed partial merges to itself — no fresh-checkpoint refusal
     * for the STORE. */
   def kmvIngestSink(stream: DataFrame, spark: SparkSession,
@@ -687,15 +681,15 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Cardinality
     partialIngestSink(stream, spark, "kmvIngestSink",
-      corpusPath, indexPath, checkpoint,
-      Cardinality.kmvMeta(k, valueCol), refusal = None) { batch =>
+      corpusPath, store("store", indexPath, Cardinality.kmv(k, valueCol)),
+      checkpoint, refusal = None) { batch =>
       Seq("" -> Cardinality.kmvSketch(batch, col(groupCol), col(valueCol), k))
     }
   }
 
   /** Streaming count-min ingest: each micro-batch appends its d×w
     * cell-count partial; reads SUM across epochs
-    * (`HeavyHitters.cmsIndexRead`). Counts are additive — NOT
+    * (the `HeavyHitters.cms` store). Counts are additive — NOT
     * idempotent — so a reset source re-landing counted rows would
     * silently double every estimate: hence the refusal. */
   def cmsIngestSink(stream: DataFrame, spark: SparkSession,
@@ -705,8 +699,8 @@ object Streaming {
                     allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.HeavyHitters
     partialIngestSink(stream, spark, "cmsIngestSink",
-      corpusPath, indexPath, checkpoint,
-      HeavyHitters.cmsMeta(depth, width, itemCol),
+      corpusPath, store("store", indexPath,
+        HeavyHitters.cms(depth, width, itemCol)), checkpoint,
       refusal(allowForeignEpochs, "count",
         "Counts are additive: a reset source re-landing its rows would " +
           "double every estimate.")) { batch =>
@@ -717,7 +711,7 @@ object Streaming {
   /** Streaming islands maintenance: each micro-batch of raw intervals
     * lands in the corpus and appends its MERGED islands as an epoch
     * partial; reads re-merge across epochs
-    * (`IntervalExpand.islandsIndexRead`). Island merging is
+    * (the `IntervalExpand.islands` store). Island merging is
     * idempotent, so the store self-heals under replay — no
     * fresh-checkpoint refusal. */
   def islandsIngestSink(stream: DataFrame, spark: SparkSession,
@@ -726,8 +720,8 @@ object Streaming {
                         checkpoint: String): StreamingQuery = {
     import graft.operators.IntervalExpand
     partialIngestSink(stream, spark, "islandsIngestSink",
-      corpusPath, indexPath, checkpoint,
-      IntervalExpand.islandsMeta(keyCol), refusal = None) { batch =>
+      corpusPath, store("store", indexPath, IntervalExpand.islands(keyCol)),
+      checkpoint, refusal = None) { batch =>
       Seq("" -> IntervalExpand.mergeIntervals(batch, keyCol,
         col(startCol), col(endCol)))
     }
@@ -735,7 +729,7 @@ object Streaming {
 
   /** Streaming digest-ledger maintenance: each micro-batch appends
     * its per-group (n_rows, digest) partial; reads fold by modular
-    * addition (`Audit.digestIndexRead`), so the ledger always equals
+    * addition (the `Audit.digestLedger` store), so the ledger always equals
     * the digest of everything ingested and replica verification never
     * re-hashes the corpus. Digests are additive — a reset source
     * re-landing rows would shift every group's checksum: refusal. */
@@ -746,8 +740,8 @@ object Streaming {
                        allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.Audit
     partialIngestSink(stream, spark, "digestIngestSink",
-      corpusPath, indexPath, checkpoint,
-      Audit.digestMeta(cols, groupCol),
+      corpusPath, store("store", indexPath, Audit.digestLedger(cols, groupCol)),
+      checkpoint,
       refusal(allowForeignEpochs, "digest",
         "Digests are additive: a reset source re-landing its rows would " +
           "shift every group's checksum.")) { batch =>
@@ -759,7 +753,7 @@ object Streaming {
     * granularity sibling of [[boilerplateIngestSink]], minus the
     * cleaning step (novelty is an ANNOTATION probed on demand): each
     * micro-batch appends its `(gram_fp, n_docs)` count partial; reads
-    * sum across epochs (`Dedup.gramFreqIndexRead`), so a later
+    * sum across epochs (the `Dedup.gramFreq` store), so a later
     * `Dedup.incrementalDupGramFraction` probe sees every document ever
     * ingested while the corpus text is tokenized exactly once. Counts
     * are additive: a reset source would double every gram's count —
@@ -771,7 +765,7 @@ object Streaming {
                          checkpoint: String, n: Int = 8,
                          allowForeignEpochs: Boolean = false): StreamingQuery =
     partialIngestSink(stream, spark, "gramFreqIngestSink",
-      corpusPath, indexPath, checkpoint, Dedup.gramFreqIndexMeta(n),
+      corpusPath, store("store", indexPath, Dedup.gramFreq(n)), checkpoint,
       refusal(allowForeignEpochs, "gram-count",
         "Counts are additive: a reset source re-ingesting its documents " +
           "would double every gram's count.")) { batch =>
@@ -780,7 +774,7 @@ object Streaming {
 
   /** Streaming reference-LM maintenance: each micro-batch of REFERENCE
     * documents appends its hashed context/bigram count partial; reads
-    * sum across epochs (`LmFilter.lmIndexRead`), so a later
+    * sum across epochs (the `LmFilter.lm` store), so a later
     * `LmFilter.lmPerplexity` scores against every reference document
     * ever ingested while the model stays a bounded table. Counts are
     * additive: a reset source would double every count and shift every
@@ -793,8 +787,8 @@ object Streaming {
                    allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.LmFilter
     partialIngestSink(stream, spark, "lmIngestSink",
-      corpusPath, indexPath, checkpoint,
-      LmFilter.lmMeta(ctxBuckets, bigramBuckets),
+      corpusPath, store("store", indexPath, LmFilter.lm(ctxBuckets,
+        bigramBuckets)), checkpoint,
       refusal(allowForeignEpochs, "LM count",
         "Counts are additive: a reset source re-ingesting its documents " +
           "would double every count and shift every later perplexity.")) { batch =>
@@ -817,8 +811,8 @@ object Streaming {
                      allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.Relevance
     partialIngestSink(stream, spark, "bm25IngestSink",
-      corpusPath, indexPath, checkpoint,
-      Relevance.postingsMeta(idCol, textCol),
+      corpusPath, store("store", indexPath, Relevance.bm25Store,
+        Relevance.postingsMeta(idCol, textCol)), checkpoint,
       refusal(allowForeignEpochs, "postings",
         "A reset source would re-land its documents and double-count the " +
           "corpus statistics (N, avgdl) every score depends on.")) { batch =>
@@ -844,7 +838,8 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Similarity
     ingestSink(stream, spark, "ivfIngestSink", checkpoint,
-      Seq(store("assignments", indexPath, Similarity.ivfMeta(idCol, vecCol))),
+      Seq(store("assignments", indexPath, Similarity.ivfStore,
+        Similarity.ivfMeta(idCol, vecCol))),
       // erasure (the ivf Filter form) and recluster key on integral ids
       integralIdCols = Seq(idCol),
       guard = require(Fs.exists(spark, s"$indexPath/centroids"),
@@ -898,7 +893,7 @@ object Streaming {
 
   /** Streaming quality gate — the engine's two FROZEN quality artifacts
     * applied to a live ingest: each micro-batch is scored against the
-    * STORED reference LM (`LmFilter.lmIndexRead`, maintained by
+    * STORED reference LM (the `LmFilter.lm` store, maintained by
     * [[lmIngestSink]]) and bucketed against the STORED per-source
     * calibration (`Quality.qualityCutsRead` — frozen once, versioned),
     * then split: kept docs land in the corpus, rejected docs land in a
@@ -929,8 +924,8 @@ object Streaming {
       Seq(Store("corpus", corpusPath), Store("rejects", rejectsPath))) {
       (batch, epoch) =>
         if (!batch.isEmpty) {
-          val lm = LmFilter.lmIndexRead(spark, lmStorePath,
-            ctxBuckets, bigramBuckets)
+          val lm = LmFilter.lm(ctxBuckets, bigramBuckets)
+            .read(spark, lmStorePath)
           val cuts = Quality.qualityCutsRead(spark, cutsStorePath,
             "ppl", Seq(sourceCol))
           val scored = batch.join(
@@ -991,10 +986,13 @@ object Streaming {
                        checkpoint: String, metric: Dedup.CertMetric,
                        labelsPath: Option[String]): StreamingQuery = {
     val (name, threshold) = (metric.name, metric.threshold)
-    val stores = Seq(Store("corpus", corpusPath),
-      store("ledger", ledgerPath, Dedup.certLedgerMeta(name, threshold))) ++
-      metric.fixedMeta.map(store("index", indexPath, _)) ++
-      labelsPath.map(store("labels", _, Dedup.ccLabelsMeta(name, threshold)))
+    val ledger = Dedup.certLedger(name, threshold)
+    // the index is declared even while its manifest is unknown (cosine
+    // pivots freeze from the first batch): activation still checks the
+    // epoch layout of every substore
+    val stores = Seq(Store("corpus", corpusPath), store("ledger", ledgerPath, ledger),
+      Store("index", indexPath, Some(metric.store), metric.fixedMeta)) ++
+      labelsPath.map(store("labels", _, Dedup.ccLabels(name, threshold)))
     ingestSink(stream, spark, sink, checkpoint, stores,
       // the ledger's erase filter / the RTBF audit sweep read id_a/id_b
       // as longs — string-keyed pairs would be silently un-erasable
@@ -1005,7 +1003,7 @@ object Streaming {
           observed = false, bootstrapName = sink), idCol, valueCol, metric),
         "certify only self-pairs and the ledger would silently diverge " +
           "from the full corpus-wide exact join",
-        "certIndexWrite (and the ledger with certLedgerWrite)")) {
+        "certIndexWrite (and the ledger with Dedup.certLedger(…).write)")) {
       (batch, epoch) =>
       if (!batch.isEmpty) {
         Dedup.certIndexMetaWriteIfAbsent(spark, indexPath, batch, idCol,
@@ -1024,8 +1022,7 @@ object Streaming {
           val foldPairs =
             if (EpochIndex.nonEmpty(spark, lp) ||
                 !EpochIndex.nonEmpty(spark, ledgerPath)) epochPairs
-            else EpochIndex.read(spark, ledgerPath, excludeEpoch = Some(epoch.id),
-                bootstrapName = "certLedgerWrite")
+            else ledger.read(spark, ledgerPath, Some(epoch.id))
               .select("id_a", "id_b").unionByName(epochPairs)
           // the fold returns the updated labeling pinned: free it with the epoch
           val labels = Dedup.ccLabelsFold(spark, lp, foldPairs, epoch.id,
@@ -1071,7 +1068,7 @@ object Streaming {
     * equals the full corpus-wide exact cosine join over everything
     * ingested after every activation. A store born under this sink
     * freezes its pivots from the FIRST batch; bootstrap with
-    * `certIndexWrite` + `certLedgerWrite` when a corpus predates the
+    * `certIndexWrite` + a `certLedger` write when a corpus predates the
     * stream. A standing corpus of only zero-norm vectors legitimately
     * has an empty index (they cannot band). */
   def certVecIngestSink(stream: DataFrame, spark: SparkSession,
@@ -1128,8 +1125,8 @@ object Streaming {
     family.requireProbeable()
     def indexed = EpochIndex.nonEmpty(spark, indexPath, innerPartCols = Seq("bb"))
     ingestSink(stream, spark, "nearDupIngestSink", checkpoint,
-      Seq(Store("corpus", corpusPath),
-        store("index", indexPath, Dedup.bandMetaWithBuckets(family.meta, buckets))),
+      Seq(Store("corpus", corpusPath), store("index", indexPath, Dedup.bandStore,
+        Dedup.bandMetaWithBuckets(family.meta, buckets))),
       integralIdCols = Seq(idCol),
       guard = requireIndexedCorpus(spark, "nearDupIngestSink", corpusPath,
         indexPath, indexed, false,

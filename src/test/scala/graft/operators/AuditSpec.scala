@@ -76,11 +76,10 @@ class AuditSpec extends SparkSpecBase {
         col("day"))
     val root = java.nio.file.Files
       .createTempDirectory("graft-dgst").toString + "/store"
-    Audit.digestIndexWrite(partial(a), root, Seq("k", "v"), "day")
-    Audit.digestIndexAppend(spark, root, partial(b), "day-2",
-      Seq("k", "v"), "day")
+    Audit.digestLedger(Seq("k", "v"), "day").write(partial(a), root)
+    Audit.digestLedger(Seq("k", "v"), "day").append(spark, root, partial(b), "day-2")
     def stored(): Map[String, (Long, Long)] =
-      Audit.digestIndexRead(spark, root, Seq("k", "v"), "day")
+      Audit.digestLedger(Seq("k", "v"), "day").read(spark, root)
         .as[(String, Long, Long)].collect()
         .map(t => t._1 -> ((t._2, t._3))).toMap
     val direct = partial(a ++ b)
@@ -91,7 +90,7 @@ class AuditSpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      Audit.digestIndexRead(spark, root, Seq("k"), "day")
+      Audit.digestLedger(Seq("k"), "day").read(spark, root)
     }
     assert(e.getMessage.contains("cols"), e.getMessage)
   }

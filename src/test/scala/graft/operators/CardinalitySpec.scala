@@ -172,10 +172,10 @@ class CardinalitySpec extends SparkSpecBase {
       Cardinality.hllSketch(rows.toDF("g", "v"), col("g"), col("v"), p)
     val root = java.nio.file.Files
       .createTempDirectory("graft-hllstore").toString + "/store"
-    Cardinality.hllIndexWrite(sk(a), root, p, "v")
-    Cardinality.hllIndexAppend(spark, root, sk(b), "day-2", p, "v")
+    Cardinality.hll(p, "v").write(sk(a), root)
+    Cardinality.hll(p, "v").append(spark, root, sk(b), "day-2")
     def stored(): Map[String, Seq[Int]] =
-      Cardinality.hllIndexRead(spark, root, p, "v")
+      Cardinality.hll(p, "v").read(spark, root)
         .as[(String, Seq[Int])].collect().toMap
     val direct = sk(a ++ b).as[(String, Seq[Int])].collect().toMap
     assert(stored() === direct)
@@ -183,7 +183,7 @@ class CardinalitySpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      Cardinality.hllIndexRead(spark, root, p + 1, "v")
+      Cardinality.hll(p + 1, "v").read(spark, root)
     }
     assert(e.getMessage.contains("p:"), e.getMessage)
   }
@@ -196,10 +196,10 @@ class CardinalitySpec extends SparkSpecBase {
       Cardinality.kmvSketch(rows.toDF("g", "v"), col("g"), col("v"), k)
     val root = java.nio.file.Files
       .createTempDirectory("graft-kmvstore").toString + "/store"
-    Cardinality.kmvIndexWrite(sk(a), root, k, "v")
-    Cardinality.kmvIndexAppend(spark, root, sk(b), "day-2", k, "v")
+    Cardinality.kmv(k, "v").write(sk(a), root)
+    Cardinality.kmv(k, "v").append(spark, root, sk(b), "day-2")
     def stored(): Map[String, Seq[Long]] =
-      Cardinality.kmvIndexRead(spark, root, k, "v")
+      Cardinality.kmv(k, "v").read(spark, root)
         .as[(String, Seq[Long])].collect().toMap
     // bottom-k closure: union-and-retruncate across overlapping epochs
     // equals the sketch of the unioned rows
@@ -209,7 +209,7 @@ class CardinalitySpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      Cardinality.kmvIndexRead(spark, root, k + 1, "v")
+      Cardinality.kmv(k + 1, "v").read(spark, root)
     }
     assert(e.getMessage.contains("k:"), e.getMessage)
   }

@@ -351,7 +351,7 @@ class CertStoreSpec extends SparkSpecBase {
     def cc(pairs: Seq[(Long, Long)]) =
       Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toSet
-    def stored() = Dedup.ccLabelsRead(spark, root, "cosine", 0.4)
+    def stored() = Dedup.ccLabels("cosine", 0.4).read(spark, root)
       .as[(Long, Long)].collect().toSet
     // bootstrap: two components {1,2,3} and {10,11}
     val p0 = Seq((1L, 2L), (2L, 3L), (10L, 11L))
@@ -399,7 +399,7 @@ class CertStoreSpec extends SparkSpecBase {
     val root2 = tmp("cclabels2")
     Dedup.ccLabelsFold(spark, root2, p0.toDF("id_a", "id_b"),
       "b0", "cosine", 0.4)
-    assert(Dedup.ccLabelsRead(spark, root2, "cosine", 0.4)
+    assert(Dedup.ccLabels("cosine", 0.4).read(spark, root2)
       .as[(Long, Long)].collect().toSet === cc(p0))
   }
 
@@ -413,10 +413,10 @@ class CertStoreSpec extends SparkSpecBase {
       Dedup.Jaccard(0.5, shingleK = 1))
     Dedup.certIndexAppend(spark, idx, batch1Docs.toDF("doc_id", "text"), "doc_id",
       "text", "b1", Dedup.Jaccard(0.5, shingleK = 1))
-    Dedup.certLedgerWrite(Dedup.exactJoin(full.toDF("doc_id", "text"), "doc_id",
-      "text", Dedup.Jaccard(0.5, shingleK = 1)), led, "jaccard", 0.5)
+    Dedup.certLedger("jaccard", 0.5).write(Dedup.exactJoin(full.toDF("doc_id", "text"), "doc_id",
+      "text", Dedup.Jaccard(0.5, shingleK = 1)), led)
     Dedup.ccLabelsFold(spark, lab,
-      Dedup.certLedgerRead(spark, led, "jaccard", 0.5)
+      Dedup.certLedger("jaccard", 0.5).read(spark, led)
         .select("id_a", "id_b"), "base", "jaccard", 0.5)
     // victim 1 is its component's MIN-ID — it survives a naive filter
     // as every clustermate's LABEL, which is why labels REBUILD
@@ -427,9 +427,9 @@ class CertStoreSpec extends SparkSpecBase {
     // the labels rebuild reads the ERASED ledger: the input is built
     // when the erase runs, not when the request is made
     Maintenance.eraseStore(spark, lab, request
-      .withInput(lab, Dedup.ccLabelsMeta("jaccard", 0.5))(
-        Dedup.connectedComponents(Dedup.certLedgerRead(spark, led,
-          "jaccard", 0.5).select("id_a", "id_b"))))
+      .withInput(lab, Dedup.ccLabels("jaccard", 0.5).meta)(
+        Dedup.connectedComponents(Dedup.certLedger("jaccard", 0.5).read(spark,
+          led).select("id_a", "id_b"))))
     val retained = full.filterNot(r => r._1 == 1L || r._1 == 102L)
     // the probe answers exactly as if the victims never ingested
     val got = Dedup.certIndexProbe(spark, idx, batch2Docs.toDF("doc_id", "text"),
@@ -438,13 +438,13 @@ class CertStoreSpec extends SparkSpecBase {
     assert(got === jaccardAgainst(retained, batch2Docs, 0.5))
     assert(got.nonEmpty, "degenerate erasure test")
     // the erased ledger equals the retained corpus's full exact join
-    assert(Dedup.certLedgerRead(spark, led, "jaccard", 0.5)
+    assert(Dedup.certLedger("jaccard", 0.5).read(spark, led)
       .as[(Long, Long, Double)].collect().toSet ===
       Dedup.exactJoin(retained.toDF("doc_id", "text"), "doc_id", "text",
         Dedup.Jaccard(0.5, shingleK = 1))
         .as[(Long, Long, Double)].collect().toSet)
     // the rebuilt labeling names no victim — as an ID or as a LABEL
-    val labeled = Dedup.ccLabelsRead(spark, lab, "jaccard", 0.5)
+    val labeled = Dedup.ccLabels("jaccard", 0.5).read(spark, lab)
       .as[(Long, Long)].collect().toSet
     assert(labeled.nonEmpty)
     assert(labeled.forall { case (i, l) =>

@@ -99,28 +99,27 @@ class CurationSpec extends SparkSpecBase {
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-capidx").toString + "/store"
-    Curation.capCountIndexWrite(
-      Curation.capCountIndex(history.filter(col("id") <= 15L),
-        col("dom"), col("id")), root, "dom")
-    Curation.capCountIndexAppend(spark, root,
+    Curation.capCounts("dom").write(Curation.capCountIndex(history.filter(col("id") <= 15L),
+        col("dom"), col("id")), root)
+    Curation.capCounts("dom").append(spark, root,
       Curation.capCountIndex(history.filter(col("id") > 15L),
-        col("dom"), col("id")), "day-2", "dom")
+        col("dom"), col("id")), "day-2")
     val inc = Curation.incrementalCapPerKey(batch, col("dom"), col("id"),
-      cap, Curation.capCountIndexRead(spark, root, "dom"))
+      cap, Curation.capCounts("dom").read(spark, root))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(inc === full, s"incremental $inc vs full-restricted $full")
 
     // compaction: probe-after ≡ probe-before; counts survive the fold
-    val before = Curation.capCountIndexRead(spark, root, "dom")
+    val before = Curation.capCounts("dom").read(spark, root)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day-2"))
-    assert(Curation.capCountIndexRead(spark, root, "dom")
+    assert(Curation.capCounts("dom").read(spark, root)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet === before)
 
     // probing under a different key derivation refuses loudly
     val e = intercept[IllegalArgumentException] {
-      Curation.capCountIndexRead(spark, root, "url_host")
+      Curation.capCounts("url_host").read(spark, root)
     }
     assert(e.getMessage.contains("keyName"), e.getMessage)
   }

@@ -467,14 +467,14 @@ class DedupSpec extends SparkSpecBase {
     assert(inc.exists(_._3 > 0L), "no boilerplate removed — vacuous")
   }
 
-  test("boilerplateIndexMerge: per-shard builds merge to the corpus-wide index") {
+  test("boilerplateCounts.merge: per-shard builds merge to the corpus-wide index") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val a = Dedup.boilerplateIndex(docs.filter($"doc_id" % 2 === 0),
       "doc_id", "text", " the ")
     val b = Dedup.boilerplateIndex(docs.filter($"doc_id" % 2 =!= 0),
       "doc_id", "text", " the ")
-    val merged = Dedup.boilerplateIndexMerge(a, b)
+    val merged = Dedup.boilerplateCounts(" the ").merge(a, b)
       .as[(String, Long)].collect().sortBy(_._1)
     val whole = Dedup.boilerplateIndex(docs, "doc_id", "text", " the ")
       .as[(String, Long)].collect().sortBy(_._1)
@@ -762,9 +762,9 @@ class DedupSpec extends SparkSpecBase {
       .createTempDirectory("graft-cert").toString + "/ledger"
     val base = Seq((1L, 2L, 0.9), (3L, 4L, 1.0)).toDF("id_a", "id_b", "jaccard")
     val batch = Seq((2L, 101L, 0.88)).toDF("id_a", "id_b", "jaccard")
-    Dedup.certLedgerWrite(base, root, "jaccard", 0.85)
-    Dedup.certLedgerAppend(spark, root, batch, "b1", "jaccard", 0.85)
-    def read() = Dedup.certLedgerRead(spark, root, "jaccard", 0.85)
+    Dedup.certLedger("jaccard", 0.85).write(base, root)
+    Dedup.certLedger("jaccard", 0.85).append(spark, root, batch, "b1")
+    def read() = Dedup.certLedger("jaccard", 0.85).read(spark, root)
       .as[(Long, Long, Double)].collect().toSet
     val expect = Set((1L, 2L, 0.9), (3L, 4L, 1.0), (2L, 101L, 0.88))
     assert(read() === expect)
@@ -774,14 +774,14 @@ class DedupSpec extends SparkSpecBase {
     assert(stats.folded.nonEmpty)
     assert(read() === expect)
     // a replayed append of the same epoch rewrites, never duplicates
-    Dedup.certLedgerAppend(spark, root, batch, "b1", "jaccard", 0.85)
+    Dedup.certLedger("jaccard", 0.85).append(spark, root, batch, "b1")
     assert(read() === expect)
     // wrong metric or threshold refuses — merging cosine pairs into a
     // Jaccard ledger (or tau-0.8 pairs into a tau-0.85 one) is the
     // silent-divergence class the manifest closes
     for ((m, t) <- Seq(("cosine", 0.85), ("jaccard", 0.8))) {
       val e = intercept[IllegalArgumentException] {
-        Dedup.certLedgerAppend(spark, root, batch, "b2", m, t)
+        Dedup.certLedger(m, t).append(spark, root, batch, "b2")
       }
       assert(e.getMessage.contains("_GRAFT_META") ||
         e.getMessage.contains("meta") || e.getMessage.contains(m) ||
@@ -843,34 +843,33 @@ class DedupSpec extends SparkSpecBase {
     val b = Seq((3L, "a b e"), (4L, "x y z")).toDF("doc_id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft-gramidx").toString + "/store"
-    Dedup.gramFreqIndexWrite(Dedup.gramFreqIndex(a, "doc_id", "text", n = 2), root, n = 2)
-    Dedup.gramFreqIndexAppend(spark, root,
-      Dedup.gramFreqIndex(b, "doc_id", "text", n = 2), epoch = "day2", n = 2)
+    Dedup.gramFreq(2).write(Dedup.gramFreqIndex(a, "doc_id", "text", n = 2), root)
+    Dedup.gramFreq(2).append(spark, root, Dedup.gramFreqIndex(b, "doc_id", "text", n = 2), "day2")
     // replay-idempotency hook (pre-compaction, while day2 is a live
     // epoch): excluding it leaves exactly shard a's counts
-    val excluded = Dedup.gramFreqIndexRead(spark, root, Some("day2"))
+    val excluded = Dedup.gramFreq(2).read(spark, root, Some("day2"))
       .as[(String, Long)].collect().toMap
     val aOnly = Dedup.gramFreqIndex(a, "doc_id", "text", n = 2)
       .as[(String, Long)].collect().toMap
     assert(excluded === aOnly)
     val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day2"))
-    val stored = Dedup.gramFreqIndexRead(spark, root, None, n = 2)
+    val stored = Dedup.gramFreq(2).read(spark, root)
       .as[(String, Long)].collect().toMap
     val direct = Dedup.gramFreqIndex(a.unionByName(b), "doc_id", "text", n = 2)
       .as[(String, Long)].collect().toMap
     assert(stored === direct)
     // a probe built with the wrong gram size must refuse loudly
     val e = intercept[IllegalArgumentException] {
-      Dedup.gramFreqIndexRead(spark, root, None, n = 8)
+      Dedup.gramFreq(8).read(spark, root)
     }
     assert(e.getMessage.toLowerCase.contains("n"))
   }
 
-  test("gramFreqIndexMerge: per-shard builds merge to the corpus-wide index") {
+  test("gramFreq.merge: per-shard builds merge to the corpus-wide index") {
     val a = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
     val b = Seq((3L, "a b e"), (4L, "x y z")).toDF("doc_id", "text")
-    val merged = Dedup.gramFreqIndexMerge(
+    val merged = Dedup.gramFreq(2).merge(
       Dedup.gramFreqIndex(a, "doc_id", "text", n = 2),
       Dedup.gramFreqIndex(b, "doc_id", "text", n = 2))
       .as[(String, Long)].collect().toMap

@@ -23,13 +23,12 @@ class EpochIndexSpec extends SparkSpecBase {
   private val b2 = docs(10L -> "shared one\nshared two", 11L -> "delta\nshared two")
   private val b3 = docs(20L -> "shared two\nepsilon", 21L -> "zeta")
 
+  private val lines = Dedup.lineFirstOcc("\n")
+
   private def buildThreeEpochStore(path: String): Unit = {
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), path, sep = "\n")
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(b2, "doc_id", "text", "\n"), "day-2", sep = "\n")
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(b3, "doc_id", "text", "\n"), "day-3", sep = "\n")
+    lines.write(Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), path)
+    lines.append(spark, path, Dedup.lineFirstOccIndex(b2, "doc_id", "text", "\n"), "day-2")
+    lines.append(spark, path, Dedup.lineFirstOccIndex(b3, "doc_id", "text", "\n"), "day-3")
   }
 
   private def snap(df: DataFrame): Set[(String, Long, Int)] =
@@ -38,7 +37,7 @@ class EpochIndexSpec extends SparkSpecBase {
   test("compaction: probe-after equals probe-before, across repeated compactions") {
     val path = tmp("graft-ei-eq")
     buildThreeEpochStore(path)
-    val before = snap(Dedup.lineFirstOccIndexRead(spark, path))
+    val before = snap(lines.read(spark, path))
     // sanity: equals a single-shot build over the union
     assert(before === snap(Dedup.lineFirstOccIndex(
       b1.union(b2).union(b3), "doc_id", "text", "\n")))
@@ -46,13 +45,12 @@ class EpochIndexSpec extends SparkSpecBase {
     val s1 = Maintenance.compactStore(spark, path)
     assert(s1.folded.toSet === Set("base", "day-2", "day-3"))
     assert(s1.carried.isEmpty && s1.gcd.isEmpty)
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === before)
+    assert(snap(lines.read(spark, path)) === before)
 
     // append after compaction, read sees base + new epoch
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(docs(30L -> "shared two\nnew day"),
-        "doc_id", "text", "\n"), "day-4", sep = "\n")
-    val withDay4 = snap(Dedup.lineFirstOccIndexRead(spark, path))
+    lines.append(spark, path, Dedup.lineFirstOccIndex(docs(30L -> "shared two\nnew day"),
+        "doc_id", "text", "\n"), "day-4")
+    val withDay4 = snap(lines.read(spark, path))
     assert(withDay4 === snap(Dedup.lineFirstOccIndex(
       b1.union(b2).union(b3).union(docs(30L -> "shared two\nnew day")),
       "doc_id", "text", "\n")))
@@ -66,12 +64,12 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(s2.gcd.toSet === Set("base", "day-2", "day-3"))
     assert(!new java.io.File(s"$path/_epoch=base").exists())
     assert(!new java.io.File(s"$path/_epoch=day-2").exists())
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === withDay4)
+    assert(snap(lines.read(spark, path)) === withDay4)
 
     // compacting with nothing new is a harmless no-op rewrite
     val s3 = Maintenance.compactStore(spark, path)
     assert(s3.folded.isEmpty)
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === withDay4)
+    assert(snap(lines.read(spark, path)) === withDay4)
   }
 
   test("an epoch appended DURING compaction is never lost") {
@@ -93,7 +91,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(appended)
     // the late epoch is not in the folded manifest, so the read unions
     // it on top of the compacted base — nothing lost
-    val got = snap(Dedup.lineFirstOccIndexRead(spark, path))
+    val got = snap(lines.read(spark, path))
     assert(got === snap(Dedup.lineFirstOccIndex(
       b1.union(b2).union(b3).union(docs(40L -> "landed mid-compaction")),
       "doc_id", "text", "\n")))
@@ -102,7 +100,7 @@ class EpochIndexSpec extends SparkSpecBase {
   test("torn append (data, no commit marker) is invisible, never folds, and is reported") {
     val path = tmp("graft-ei-torn")
     buildThreeEpochStore(path)
-    val before = snap(Dedup.lineFirstOccIndexRead(spark, path))
+    val before = snap(lines.read(spark, path))
     // simulate a crash between the epoch data write and the commit
     // marker: the first half of EpochIndex.append, verbatim
     Dedup.lineFirstOccIndex(docs(40L -> "torn line\nshared one"),
@@ -113,21 +111,20 @@ class EpochIndexSpec extends SparkSpecBase {
       .mode("overwrite").parquet(path)
     assert(new java.io.File(s"$path/_epoch=torn-1").exists())
     // probes never see the torn rows; the store reports the leftover
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === before)
+    assert(snap(lines.read(spark, path)) === before)
     assert(EpochIndex.uncommittedEpochNames(spark, path) === Seq("torn-1"))
     // compaction ignores it — not folded, not GC'd — and reports it
     val s1 = Maintenance.compactStore(spark, path)
     assert(!s1.folded.contains("torn-1") && !s1.gcd.contains("torn-1"))
     assert(s1.uncommitted === Seq("torn-1"))
     assert(new java.io.File(s"$path/_epoch=torn-1").exists())
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) === before)
+    assert(snap(lines.read(spark, path)) === before)
     // the writer re-runs (idempotent dynamic overwrite) — the marker
     // lands last and only then does the epoch become visible
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(docs(40L -> "torn line\nshared one"),
-        "doc_id", "text", "\n"), "torn-1", sep = "\n")
+    lines.append(spark, path, Dedup.lineFirstOccIndex(docs(40L -> "torn line\nshared one"),
+        "doc_id", "text", "\n"), "torn-1")
     assert(EpochIndex.uncommittedEpochNames(spark, path).isEmpty)
-    assert(snap(Dedup.lineFirstOccIndexRead(spark, path)) ===
+    assert(snap(lines.read(spark, path)) ===
       snap(Dedup.lineFirstOccIndex(
         b1.union(b2).union(b3).union(docs(40L -> "torn line\nshared one")),
         "doc_id", "text", "\n")))
@@ -138,11 +135,9 @@ class EpochIndexSpec extends SparkSpecBase {
   test("time travel: readAsOf returns an old compaction exactly; GC'd versions refuse") {
     val path = tmp("graft-ei-tt")
     // v1 folds batch 1 alone; v2 folds everything
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), path, sep = "\n")
+    lines.write(Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), path)
     Maintenance.compactStore(spark, path)
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(b2, "doc_id", "text", "\n"), "day-2", sep = "\n")
+    lines.append(spark, path, Dedup.lineFirstOccIndex(b2, "doc_id", "text", "\n"), "day-2")
     Maintenance.compactStore(spark, path)
     val (retained, current) = EpochIndex.versions(spark, path)
     assert(retained.size === 2 && current.contains(retained.last))
@@ -154,8 +149,7 @@ class EpochIndexSpec extends SparkSpecBase {
       snap(Dedup.lineFirstOccIndex(b1.union(b2), "doc_id", "text", "\n")))
     // a third compaction (keepVersions = 2) GCs v1 — reading it must
     // refuse with the retained list, never return empty
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(b3, "doc_id", "text", "\n"), "day-3", sep = "\n")
+    lines.append(spark, path, Dedup.lineFirstOccIndex(b3, "doc_id", "text", "\n"), "day-3")
     Maintenance.compactStore(spark, path)
     val e = intercept[IllegalArgumentException] {
       EpochIndex.readAsOf(spark, path, retained.head)
@@ -168,26 +162,25 @@ class EpochIndexSpec extends SparkSpecBase {
     val path = tmp("graft-ei-replay")
     buildThreeEpochStore(path)
     // pre-compaction: excluding a live epoch works
-    val without2 = snap(Dedup.lineFirstOccIndexRead(spark, path, Some("day-2")))
+    val without2 = snap(lines.read(spark, path, Some("day-2")))
     assert(without2 === snap(Dedup.lineFirstOccIndex(
       b1.union(b3), "doc_id", "text", "\n")))
     Maintenance.compactStore(spark, path)
     val e = intercept[IllegalArgumentException] {
-      Dedup.lineFirstOccIndexRead(spark, path, Some("day-2")).collect()
+      lines.read(spark, path, Some("day-2")).collect()
     }
     assert(e.getMessage.contains("already compacted"), e.getMessage)
   }
 
   test("boilerplate counts: compaction preserves summed frequencies") {
     val path = tmp("graft-ei-bp")
-    Dedup.boilerplateIndexWrite(
-      Dedup.boilerplateIndex(b1, "doc_id", "text", "\n"), path, sep = "\n")
-    Dedup.boilerplateIndexAppend(spark, path,
-      Dedup.boilerplateIndex(b2, "doc_id", "text", "\n"), "day-2", sep = "\n")
-    val before = Dedup.boilerplateIndexRead(spark, path)
+    Dedup.boilerplateCounts("\n").write(Dedup.boilerplateIndex(b1, "doc_id", "text", "\n"), path)
+    Dedup.boilerplateCounts("\n").append(spark, path, Dedup.boilerplateIndex(b2,
+      "doc_id", "text", "\n"), "day-2")
+    val before = Dedup.boilerplateCounts("\n").read(spark, path)
       .as[(String, Long)].collect().toSet
     Maintenance.compactStore(spark, path)
-    val after = Dedup.boilerplateIndexRead(spark, path)
+    val after = Dedup.boilerplateCounts("\n").read(spark, path)
       .as[(String, Long)].collect().toSet
     assert(after === before)
     assert(before === Dedup.boilerplateIndex(
@@ -199,22 +192,21 @@ class EpochIndexSpec extends SparkSpecBase {
     val path = tmp("graft-ei-meta")
     buildThreeEpochStore(path)
     // matched: reads clean
-    assert(Dedup.lineFirstOccIndexRead(spark, path, None, "\n", 1).count() > 0)
+    assert(Dedup.lineFirstOcc("\n", 1).read(spark, path).count() > 0)
     // wrong sep: refuses with the stored-vs-probe diff
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.lineFirstOccIndexRead(spark, path, None, " the ", 1)
+      Dedup.lineFirstOcc(" the ", 1).read(spark, path)
     }
     assert(e1.getMessage.contains("sep"), e1.getMessage)
     // wrong family (a boilerplate probe over a line store): refuses
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.boilerplateIndexRead(spark, path, None, "\n", 1)
+      Dedup.boilerplateCounts("\n", 1).read(spark, path)
     }
     assert(e2.getMessage.contains("family"), e2.getMessage)
     // appends are guarded the same way
     val e3 = intercept[IllegalArgumentException] {
-      Dedup.lineFirstOccIndexAppend(spark, path,
-        Dedup.lineFirstOccIndex(b2, "doc_id", "text", " the "), "dayX",
-        sep = " the ")
+      Dedup.lineFirstOcc(" the ").append(spark, path, Dedup.lineFirstOccIndex(b2,
+        "doc_id", "text", " the "), "dayX")
     }
     assert(e3.getMessage.contains("sep"), e3.getMessage)
     // a manifest-less store refuses a checked read (probe on faith)
@@ -222,11 +214,11 @@ class EpochIndexSpec extends SparkSpecBase {
     EpochIndex.bootstrap(
       Dedup.lineFirstOccIndex(b1, "doc_id", "text", "\n"), bare)
     val e4 = intercept[IllegalStateException] {
-      Dedup.lineFirstOccIndexRead(spark, bare, None, "\n", 1)
+      Dedup.lineFirstOcc("\n", 1).read(spark, bare)
     }
     assert(e4.getMessage.contains("_GRAFT_META"), e4.getMessage)
-    // ... while the unchecked read still serves it (legacy layout)
-    assert(Dedup.lineFirstOccIndexRead(spark, bare).count() > 0)
+    // ... while the raw epoch layout itself still reads (legacy layout)
+    assert(EpochIndex.read(spark, bare).count() > 0)
   }
 
   test("bootstrap over a previously-compacted store removes the stale base and epochs — a bootstrap IS a fresh index") {
@@ -429,20 +421,18 @@ class EpochIndexSpec extends SparkSpecBase {
     val c2 = docs(10L -> "alpha beta epsilon", 11L -> "zeta eta theta")
     val batch = docs(20L -> "alpha beta gamma", 21L -> "unseen words here")
     val tgt = col("doc_id") % 2 === 0
-    Splits.dsirIndexWrite(
-      Splits.dsirIndex(c1, "doc_id", "text", tgt, 64), root, 64)
-    Splits.dsirIndexAppend(spark, root,
-      Splits.dsirIndex(c2, "doc_id", "text", tgt, 64), "day-2", 64)
-    val stored = Splits.dsirIndexRead(spark, root, 64)
+    Splits.dsir(64).write(Splits.dsirIndex(c1, "doc_id", "text", tgt, 64), root)
+    Splits.dsir(64).append(spark, root, Splits.dsirIndex(c2, "doc_id", "text", tgt, 64), "day-2")
+    val stored = Splits.dsir(64).read(spark, root)
     val direct = Splits.dsirIndex(c1.union(c2), "doc_id", "text", tgt, 64)
     def score(index: DataFrame): Set[(Long, Long, Double)] =
       Splits.dsirScoreWithIndex(batch, "doc_id", "text", index, 64)
         .as[(Long, Long, Double)].collect().toSet
     assert(score(stored) === score(direct))
     Maintenance.compactStore(spark, root)
-    assert(score(Splits.dsirIndexRead(spark, root, 64)) === score(direct))
+    assert(score(Splits.dsir(64).read(spark, root)) === score(direct))
     val e = intercept[IllegalArgumentException] {
-      Splits.dsirIndexRead(spark, root, 128)
+      Splits.dsir(128).read(spark, root)
     }
     assert(e.getMessage.contains("buckets"), e.getMessage)
   }
@@ -545,7 +535,7 @@ class EpochIndexSpec extends SparkSpecBase {
   test("probe stats: epochs scanned, base share, and growth are observable per read") {
     val path = tmp("graft-ei-obs")
     buildThreeEpochStore(path)
-    val pre = Dedup.lineFirstOccIndexRead(spark, path)
+    val pre = lines.read(spark, path)
     pre.collect()
     val st1 = EpochIndex.probeStats(pre)
     assert(st1.size === 1, st1)
@@ -555,7 +545,7 @@ class EpochIndexSpec extends SparkSpecBase {
     assert(st1.head.rowsAggregated > 0L)
 
     Maintenance.compactStore(spark, path)
-    val post = Dedup.lineFirstOccIndexRead(spark, path)
+    val post = lines.read(spark, path)
     post.collect()
     val st2 = EpochIndex.probeStats(post)
     assert(st2.head.epochsScanned === 0L) // every epoch folded into the base
@@ -565,10 +555,9 @@ class EpochIndexSpec extends SparkSpecBase {
 
     // append after compaction: the climbing live-epoch count IS the
     // "compaction due" signal the metric exists to expose
-    Dedup.lineFirstOccIndexAppend(spark, path,
-      Dedup.lineFirstOccIndex(docs(40L -> "shared two\nobserved day"),
-        "doc_id", "text", "\n"), "day-5", sep = "\n")
-    val p3 = Dedup.lineFirstOccIndexRead(spark, path)
+    lines.append(spark, path, Dedup.lineFirstOccIndex(docs(40L -> "shared two\nobserved day"),
+        "doc_id", "text", "\n"), "day-5")
+    val p3 = lines.read(spark, path)
     p3.collect()
     val st3 = EpochIndex.probeStats(p3)
     assert(st3.head.epochsScanned === 1L)

@@ -132,8 +132,8 @@ class EraseSpec extends SparkSpecBase {
     // store of another family refuses the ids-only request, naming
     // the form it needs, and keeps every file
     val grams = tmp("not-bands")
-    Dedup.gramFreqIndexWrite(Dedup.gramFreqIndex(docsDF, "doc_id", "text",
-      n = 3), grams, n = 3)
+    Dedup.gramFreq(3).write(Dedup.gramFreqIndex(docsDF, "doc_id", "text",
+      n = 3), grams)
     val gramFiles = parquetFiles(new java.io.File(grams)).toSet
     val e = intercept[IllegalArgumentException](erase(grams, victims))
     assert(e.getMessage.contains("gram_freq") &&
@@ -184,15 +184,14 @@ class EraseSpec extends SparkSpecBase {
 
   test("gram_freq: erase subtracts the victims' exact partial; store ≡ rebuild over retained; never-ingested victims refuse") {
     val root = tmp("gram")
-    Dedup.gramFreqIndexWrite(
-      Dedup.gramFreqIndex(docsDF.filter(col("doc_id") <= 4), "doc_id",
-        "text", n = 3), root, n = 3)
-    Dedup.gramFreqIndexAppend(spark, root,
+    Dedup.gramFreq(3).write(Dedup.gramFreqIndex(docsDF.filter(col("doc_id") <= 4), "doc_id",
+        "text", n = 3), root)
+    Dedup.gramFreq(3).append(spark, root,
       Dedup.gramFreqIndex(docsDF.filter(col("doc_id") > 4), "doc_id",
-        "text", n = 3), "day-2", n = 3)
-    eraseWith(root, Dedup.gramFreqIndexMeta(3))(
+        "text", n = 3), "day-2")
+    eraseWith(root, Dedup.gramFreq(3).meta)(
       Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3))
-    val got = Dedup.gramFreqIndexRead(spark, root, None, n = 3)
+    val got = Dedup.gramFreq(3).read(spark, root)
       .as[(String, Long)].collect().toSet
     val rebuilt = Dedup.gramFreqIndex(retained, "doc_id", "text", n = 3)
       .as[(String, Long)].collect().toSet
@@ -210,7 +209,7 @@ class EraseSpec extends SparkSpecBase {
       "victim-only grams survive on disk")
     // subtracting a never-ingested "victim" refuses loudly
     val e = intercept[Exception] {
-      eraseWith(root, Dedup.gramFreqIndexMeta(3))(Dedup.gramFreqIndex(
+      eraseWith(root, Dedup.gramFreq(3).meta)(Dedup.gramFreqIndex(
         Seq((99L, "totally novel text nobody ingested"))
           .toDF("doc_id", "text"), "doc_id", "text", n = 3))
     }
@@ -219,11 +218,11 @@ class EraseSpec extends SparkSpecBase {
 
   test("boilerplate counts: erase subtracts; store ≡ rebuild over retained") {
     val root = tmp("boiler")
-    Dedup.boilerplateIndexWrite(
-      Dedup.boilerplateIndex(docsDF, "doc_id", "text", "\n"), root, "\n")
-    eraseWith(root, Dedup.boilerplateIndexMeta("\n", 1))(
+    Dedup.boilerplateCounts("\n").write(Dedup.boilerplateIndex(docsDF, "doc_id",
+      "text", "\n"), root)
+    eraseWith(root, Dedup.boilerplateCounts("\n", 1).meta)(
       Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n"))
-    val got = Dedup.boilerplateIndexRead(spark, root)
+    val got = Dedup.boilerplateCounts("\n").read(spark, root)
       .as[(String, Long)].collect().toSet
     val rebuilt = Dedup.boilerplateIndex(retained, "doc_id", "text", "\n")
       .as[(String, Long)].collect().toSet
@@ -231,7 +230,7 @@ class EraseSpec extends SparkSpecBase {
     assert(got.nonEmpty, "degenerate erasure test")
     // subtracting lines this store never counted refuses loudly
     val e = intercept[Exception] {
-      eraseWith(root, Dedup.boilerplateIndexMeta("\n", 1))(
+      eraseWith(root, Dedup.boilerplateCounts("\n", 1).meta)(
         Dedup.boilerplateIndex(Seq((99L, "a line nobody ingested"))
           .toDF("doc_id", "text"), "doc_id", "text", "\n"))
     }
@@ -240,14 +239,13 @@ class EraseSpec extends SparkSpecBase {
 
   test("line first-occurrence: erase is a REBUILD — a line first held by a victim survives under its retained holder") {
     val root = tmp("lineocc")
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(docsDF, "doc_id", "text", "\n"), root, "\n")
+    Dedup.lineFirstOcc("\n").write(Dedup.lineFirstOccIndex(docsDF, "doc_id", "text", "\n"), root)
     // "shared line two" first occurs in doc 2 (a victim) and also in
     // docs 3 and 6 (retained): a row FILTER would lose it entirely;
     // the rebuild re-points it at doc 3
     val rebuilt = Dedup.lineFirstOccIndex(retained, "doc_id", "text", "\n")
-    eraseWith(root, Dedup.lineIndexMeta("\n", 1))(rebuilt)
-    val got = Dedup.lineFirstOccIndexRead(spark, root)
+    eraseWith(root, Dedup.lineFirstOcc("\n", 1).meta)(rebuilt)
+    val got = Dedup.lineFirstOcc("\n").read(spark, root)
       .as[(String, Long, Int)].collect().toSet
     assert(got === rebuilt.as[(String, Long, Int)].collect().toSet)
     assert(got.exists(_._2 === 3L),
@@ -286,15 +284,13 @@ class EraseSpec extends SparkSpecBase {
     def grp(df: DataFrame) = df.toDF("doc_id", "token")
     // HLL — registers are max-folds: subtraction impossible, rebuild only
     val hroot = tmp("hll")
-    Cardinality.hllIndexWrite(
-      Cardinality.hllSketch(grp(rows.toDF("doc_id", "token")),
-        lit("all"), col("token"), p = 6), hroot, p = 6, keyName = "token")
+    Cardinality.hll(6, "token").write(Cardinality.hllSketch(grp(rows.toDF("doc_id", "token")),
+        lit("all"), col("token"), p = 6), hroot)
     val hRebuilt = Cardinality.hllSketch(
       grp(retainedRows.toDF("doc_id", "token")), lit("all"), col("token"),
       p = 6)
-    eraseWith(hroot, Cardinality.hllMeta(6, "token"))(hRebuilt)
-    val hGot = Cardinality.hllIndexRead(spark, hroot, p = 6,
-      keyName = "token").select("regs").as[Seq[Int]].collect()
+    eraseWith(hroot, Cardinality.hll(6, "token").meta)(hRebuilt)
+    val hGot = Cardinality.hll(6, "token").read(spark, hroot).select("regs").as[Seq[Int]].collect()
     val hExpect = hRebuilt.select("regs").as[Seq[Int]].collect()
     assert(hGot.toSeq === hExpect.toSeq)
     // disk: the ONLY parquet content is the rebuilt partial (no stale
@@ -304,42 +300,37 @@ class EraseSpec extends SparkSpecBase {
       .select("regs").as[Seq[Int]].collect().toSeq === hExpect.toSeq)
     // KMV
     val kroot = tmp("kmv")
-    Cardinality.kmvIndexWrite(
-      Cardinality.kmvSketch(rows.toDF("doc_id", "token"),
-        lit("all"), col("token"), k = 16), kroot, k = 16,
-      keyName = "token")
+    Cardinality.kmv(16, "token").write(Cardinality.kmvSketch(rows.toDF("doc_id", "token"),
+        lit("all"), col("token"), k = 16), kroot)
     val kRebuilt = Cardinality.kmvSketch(retainedRows.toDF("doc_id", "token"),
       lit("all"), col("token"), k = 16)
-    eraseWith(kroot, Cardinality.kmvMeta(16, "token"))(kRebuilt)
-    assert(Cardinality.kmvIndexRead(spark, kroot, k = 16,
-      keyName = "token").select("sketch").as[Seq[Long]].collect().toSeq ===
+    eraseWith(kroot, Cardinality.kmv(16, "token").meta)(kRebuilt)
+    assert(Cardinality.kmv(16, "token").read(spark,
+      kroot).select("sketch").as[Seq[Long]].collect().toSeq ===
       kRebuilt.select("sketch").as[Seq[Long]].collect().toSeq)
     // CMS
     val croot = tmp("cms")
-    HeavyHitters.cmsIndexWrite(
-      HeavyHitters.countMinSketch(rows.toDF("doc_id", "token"), "token",
-        depth = 3, width = 32), croot, depth = 3, width = 32,
-      itemName = "token")
+    HeavyHitters.cms(3, 32,
+      "token").write(HeavyHitters.countMinSketch(rows.toDF("doc_id", "token"), "token",
+        depth = 3, width = 32), croot)
     val cRebuilt = HeavyHitters.countMinSketch(
       retainedRows.toDF("doc_id", "token"), "token", depth = 3, width = 32)
-    eraseWith(croot, HeavyHitters.cmsMeta(3, 32, "token"))(cRebuilt)
-    assert(HeavyHitters.cmsIndexRead(spark, croot, depth = 3, width = 32,
-      itemName = "token").as[(Int, Long, Long)].collect().toSet ===
+    eraseWith(croot, HeavyHitters.cms(3, 32, "token").meta)(cRebuilt)
+    assert(HeavyHitters.cms(3, 32, "token").read(spark, croot).as[(Int, Long,
+      Long)].collect().toSet ===
       cRebuilt.as[(Int, Long, Long)].collect().toSet)
     // sample sketch
     val sroot = tmp("ss")
     val vals = docs.map { case (id, text) => (id, text.length.toDouble) }
     val sRows = vals.toDF("doc_id", "len")
-    SampleSketch.sampleSketchIndexWrite(
-      SampleSketch.sampleSketch(sRows, lit("all"), col("doc_id"),
-        col("len"), k = 4), sroot, k = 4, keyName = "doc_id",
-      valueName = "len")
+    SampleSketch.profile(4, "doc_id", "len").write(SampleSketch.sampleSketch(sRows,
+      lit("all"), col("doc_id"),
+        col("len"), k = 4), sroot)
     val sRebuilt = SampleSketch.sampleSketch(
       vals.filterNot(v => victimIds(v._1)).toDF("doc_id", "len"),
       lit("all"), col("doc_id"), col("len"), k = 4)
-    eraseWith(sroot, SampleSketch.indexMeta(4, "doc_id", "len"))(sRebuilt)
-    val sGot = SampleSketch.sampleSketchIndexRead(spark, sroot, k = 4,
-      keyName = "doc_id", valueName = "len")
+    eraseWith(sroot, SampleSketch.profile(4, "doc_id", "len").meta)(sRebuilt)
+    val sGot = SampleSketch.profile(4, "doc_id", "len").read(spark, sroot)
     assert(sGot.count() === sRebuilt.count())
     // the k-sample store itself carries ids: no victim survives it
     assertNoVictimOnDisk(sroot, Nil, victimIds) // structural walk only
@@ -350,18 +341,17 @@ class EraseSpec extends SparkSpecBase {
     // perplexity of a probe batch must equal scoring under a model
     // trained only on the retained reference
     val root = tmp("lm")
-    LmFilter.lmIndexWrite(
-      LmFilter.lmIndex(docsDF.filter(col("doc_id") <= 4), "doc_id",
-        "text"), root, 4096, 32768)
-    LmFilter.lmIndexAppend(spark, root,
+    LmFilter.lm(4096, 32768).write(LmFilter.lmIndex(docsDF.filter(col("doc_id") <= 4), "doc_id",
+        "text"), root)
+    LmFilter.lm(4096, 32768).append(spark, root,
       LmFilter.lmIndex(docsDF.filter(col("doc_id") > 4), "doc_id",
-        "text"), "day-2", 4096, 32768)
-    eraseWith(root, LmFilter.lmMeta(4096, 32768))(
+        "text"), "day-2")
+    eraseWith(root, LmFilter.lm(4096, 32768).meta)(
       LmFilter.lmIndex(victimDocs, "doc_id", "text"))
     val probe = Seq((50L, "alpha beta gamma shared line one")).toDF(
       "doc_id", "text")
     val got = LmFilter.lmPerplexity(probe, "doc_id", "text",
-      LmFilter.lmIndexRead(spark, root, 4096, 32768))
+      LmFilter.lm(4096, 32768).read(spark, root))
       .select("ppl").as[Double].collect().toSeq
     val fresh = LmFilter.lmPerplexity(probe, "doc_id", "text",
       LmFilter.lmIndex(retained, "doc_id", "text"))
@@ -370,11 +360,10 @@ class EraseSpec extends SparkSpecBase {
     // DSIR: same contract on (cr, ct) bucket counts
     val droot = tmp("dsir")
     val tgt = col("doc_id") % 2 === 1
-    Splits.dsirIndexWrite(
-      Splits.dsirIndex(docsDF, "doc_id", "text", tgt), droot, 1024)
-    eraseWith(droot, Splits.dsirMeta(1024))(
+    Splits.dsir(1024).write(Splits.dsirIndex(docsDF, "doc_id", "text", tgt), droot)
+    eraseWith(droot, Splits.dsir(1024).meta)(
       Splits.dsirIndex(victimDocs, "doc_id", "text", tgt))
-    assert(Splits.dsirIndexRead(spark, droot, 1024)
+    assert(Splits.dsir(1024).read(spark, droot)
       .as[(Long, Long, Long)].collect().toSet ===
       Splits.dsirIndex(retained, "doc_id", "text", tgt)
         .as[(Long, Long, Long)].collect().toSet)
@@ -382,12 +371,12 @@ class EraseSpec extends SparkSpecBase {
     val phantom = Seq((99L, "totally novel text nobody ingested"))
       .toDF("doc_id", "text")
     val e = intercept[Exception] {
-      eraseWith(root, LmFilter.lmMeta(4096, 32768))(
+      eraseWith(root, LmFilter.lm(4096, 32768).meta)(
         LmFilter.lmIndex(phantom, "doc_id", "text"))
     }
     assert(e.getMessage.contains("never trained"), e.getMessage)
     val e2 = intercept[Exception] {
-      eraseWith(droot, Splits.dsirMeta(1024))(
+      eraseWith(droot, Splits.dsir(1024).meta)(
         Splits.dsirIndex(phantom, "doc_id", "text", tgt))
     }
     assert(e2.getMessage.contains("never ingested"), e2.getMessage)
@@ -401,12 +390,12 @@ class EraseSpec extends SparkSpecBase {
     val all = Seq((1L, 10L, 1L, 6L), (2L, 10L, 5L, 10L),
       (3L, 10L, 9L, 14L), (4L, 20L, 0L, 3L))
       .toDF("owner", "k", "s", "e")
-    IntervalExpand.islandsIndexWrite(all.select("k", "s", "e"), root,
-      "k", col("s"), col("e"))
+    IntervalExpand.islands("k").write(IntervalExpand.mergeIntervals(all.select("k",
+      "s", "e"), "k", col("s"), col("e")), root)
     val kept = all.filter(col("owner") =!= 2L)
-    eraseWith(root, IntervalExpand.islandsMeta("k"))(
+    eraseWith(root, IntervalExpand.islands("k").meta)(
       IntervalExpand.mergeIntervals(kept, "k", col("s"), col("e")))
-    val got = IntervalExpand.islandsIndexRead(spark, root, "k")
+    val got = IntervalExpand.islands("k").read(spark, root)
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((10L, 1L, 6L), (10L, 9L, 14L), (20L, 0L, 3L)),
       s"islands did not re-split: $got")
@@ -485,20 +474,19 @@ class EraseSpec extends SparkSpecBase {
         gen.pureApply(Gen.Parameters.default, Seed(19L + i))
       val root = tmp(s"propg$i")
       val all = corpus.toDF("doc_id", "text")
-      Dedup.gramFreqIndexWrite(
-        Dedup.gramFreqIndex(all, "doc_id", "text", n = 3), root, n = 3)
+      Dedup.gramFreq(3).write(Dedup.gramFreqIndex(all, "doc_id", "text", n = 3), root)
       val victimDocs = corpus.filter(d => vict.contains(d._1))
         .toDF("doc_id", "text")
       val kept = corpus.filterNot(d => vict.contains(d._1))
       Maintenance.eraseStore(spark, root,
         Maintenance.EraseRequest(victimDocs.select("doc_id"))
-          .withInput(root, Dedup.gramFreqIndexMeta(3))(
+          .withInput(root, Dedup.gramFreq(3).meta)(
             Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3)))
       if (kept.isEmpty)
         assert(!EpochIndex.nonEmpty(spark, root),
           s"seed ${19 + i}: all-victims erase did not tear down")
       else
-        assert(Dedup.gramFreqIndexRead(spark, root, None, n = 3)
+        assert(Dedup.gramFreq(3).read(spark, root)
           .as[(String, Long)].collect().toSet ===
           Dedup.gramFreqIndex(kept.toDF("doc_id", "text"), "doc_id",
             "text", n = 3).as[(String, Long)].collect().toSet,
@@ -542,13 +530,12 @@ class EraseSpec extends SparkSpecBase {
     val capKey = concat(lit("k"), pmod(col("doc_id"), lit(4)).cast("string"))
     def partial(f: DataFrame) =
       Curation.capCountIndex(f, capKey, col("doc_id"))
-    Curation.capCountIndexWrite(
-      partial(docsDF.filter(col("doc_id") <= 3)), root, "mod4")
-    Curation.capCountIndexAppend(spark, root,
-      partial(docsDF.filter(col("doc_id") > 3)), "day-2", "mod4")
-    val stats = eraseWith(root, Curation.capIndexMeta("mod4"))(
+    Curation.capCounts("mod4").write(partial(docsDF.filter(col("doc_id") <= 3)), root)
+    Curation.capCounts("mod4").append(spark, root,
+      partial(docsDF.filter(col("doc_id") > 3)), "day-2")
+    val stats = eraseWith(root, Curation.capCounts("mod4").meta)(
       partial(victimDocs))
-    val got = Curation.capCountIndexRead(spark, root, "mod4")
+    val got = Curation.capCounts("mod4").read(spark, root)
       .as[(String, Long)].collect().toSet
     val rebuilt = partial(retained).as[(String, Long)].collect().toSet
     assert(got === rebuilt)
@@ -566,7 +553,7 @@ class EraseSpec extends SparkSpecBase {
       "victim-only keys survive on disk")
     // subtracting a never-counted "victim" refuses loudly
     val e = intercept[Exception] {
-      eraseWith(root, Curation.capIndexMeta("mod4"))(Curation.capCountIndex(
+      eraseWith(root, Curation.capCounts("mod4").meta)(Curation.capCountIndex(
         Seq((99L, "x"), (100L, "x"), (101L, "x")).toDF("doc_id", "text"),
         lit("k99"), col("doc_id")))
     }
@@ -577,13 +564,12 @@ class EraseSpec extends SparkSpecBase {
     val root = tmp("digest")
     val cols = Seq("doc_id", "text")
     def part(f: DataFrame) = Audit.digestPartial(f, cols, domainOf)
-    Audit.digestIndexWrite(part(docsDF.filter(col("doc_id") <= 3)),
-      root, cols, "mod3")
-    Audit.digestIndexAppend(spark, root,
-      part(docsDF.filter(col("doc_id") > 3)), "day-2", cols, "mod3")
-    val stats = eraseWith(root, Audit.digestMeta(cols, "mod3"))(
+    Audit.digestLedger(cols, "mod3").write(part(docsDF.filter(col("doc_id") <= 3)), root)
+    Audit.digestLedger(cols, "mod3").append(spark, root,
+      part(docsDF.filter(col("doc_id") > 3)), "day-2")
+    val stats = eraseWith(root, Audit.digestLedger(cols, "mod3").meta)(
       part(victimDocs))
-    val got = Audit.digestIndexRead(spark, root, cols, "mod3")
+    val got = Audit.digestLedger(cols, "mod3").read(spark, root)
       .as[(String, Long, Long)].collect().toSet
     val rebuilt = part(retained).as[(String, Long, Long)].collect().toSet
     assert(got === rebuilt, "subtracted ledger ≠ digest of retained rows")
@@ -595,7 +581,7 @@ class EraseSpec extends SparkSpecBase {
       .select("_g").as[String].head()
     val rest = retained.withColumn("_g", domainOf).filter(col("_g") === g)
       .drop("_g")
-    eraseWith(root, Audit.digestMeta(cols, "mod3"))(part(rest))
+    eraseWith(root, Audit.digestLedger(cols, "mod3").meta)(part(rest))
     val onDisk = spark.read
       .parquet(parquetFiles(new java.io.File(root)): _*)
       .select("group").as[String].collect().toSet
@@ -605,11 +591,10 @@ class EraseSpec extends SparkSpecBase {
     // negative-count check is the one that must fire (a wrong payload
     // in a SURVIVING group is the documented undetectable case)
     val root3 = tmp("digest3")
-    Audit.digestIndexWrite(
-      part(docsDF.filter(pmod(col("doc_id"), lit(3)) =!= 2)),
-      root3, cols, "mod3")
+    Audit.digestLedger(cols, "mod3").write(part(docsDF.filter(pmod(col("doc_id"),
+      lit(3)) =!= 2)), root3)
     val e1 = intercept[Exception] {
-      eraseWith(root3, Audit.digestMeta(cols, "mod3"))(part(
+      eraseWith(root3, Audit.digestLedger(cols, "mod3").meta)(part(
         Seq((5L, "never here"), (8L, "nor this"), (11L, "nope"))
           .toDF("doc_id", "text")))
     }
@@ -617,9 +602,9 @@ class EraseSpec extends SparkSpecBase {
     // right ids, WRONG bytes: the emptying-group residual-digest
     // check refuses instead of leaving an unverifiable ledger
     val root2 = tmp("digest2")
-    Audit.digestIndexWrite(part(docsDF), root2, cols, "mod3")
+    Audit.digestLedger(cols, "mod3").write(part(docsDF), root2)
     val e2 = intercept[Exception] {
-      eraseWith(root2, Audit.digestMeta(cols, "mod3"))(
+      eraseWith(root2, Audit.digestLedger(cols, "mod3").meta)(
         part(docsDF.withColumn("text", upper(col("text")))))
     }
     assert(e2.getMessage.contains("residual digest"), e2.getMessage)
@@ -672,12 +657,11 @@ class EraseSpec extends SparkSpecBase {
     val ledger = s"$tree/ledger"
     val grams = s"$tree/grams"
     Dedup.bandIndexWrite(docsDF, "doc_id", "text", band, Dedup.SimHash())
-    Dedup.certLedgerWrite(Dedup.exactJoin(docsDF, "doc_id", "text",
-      Dedup.Jaccard(0.3, shingleK = 1)), ledger, "jaccard", 0.3)
-    Dedup.gramFreqIndexWrite(
-      Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), grams, n = 3)
+    Dedup.certLedger("jaccard", 0.3).write(Dedup.exactJoin(docsDF, "doc_id", "text",
+      Dedup.Jaccard(0.3, shingleK = 1)), ledger)
+    Dedup.gramFreq(3).write(Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), grams)
     // victims must actually appear in the ledger or the test is vacuous
-    assert(Dedup.certLedgerRead(spark, ledger, "jaccard", 0.3)
+    assert(Dedup.certLedger("jaccard", 0.3).read(spark, ledger)
       .filter(col("id_a").isin(victimIds.toSeq.map(Long.box): _*) ||
         col("id_b").isin(victimIds.toSeq.map(Long.box): _*))
       .count() > 0)
@@ -724,7 +708,7 @@ class EraseSpec extends SparkSpecBase {
     Dedup.bandIndexWrite(docsDF, "doc_id", "text", band, lsh)
     def sketch(df: DataFrame) =
       Cardinality.kmvSketch(df, lit("all"), col("doc_id"), k = 16)
-    Cardinality.kmvIndexWrite(sketch(docsDF), kmv, 16, "doc_id")
+    Cardinality.kmv(16, "doc_id").write(sketch(docsDF), kmv)
     def snapshot(): Map[String, Long] =
       parquetFiles(new java.io.File(tree))
         .map(f => f -> new java.io.File(f).lastModified()).toMap
@@ -739,7 +723,7 @@ class EraseSpec extends SparkSpecBase {
     // an input built under other parameters refuses the same way
     val e2 = intercept[IllegalArgumentException] {
       Maintenance.eraseAll(spark, tree, Maintenance.EraseRequest(victims)
-        .withInput(kmv, Cardinality.kmvMeta(32, "doc_id"))(sketch(retained)))
+        .withInput(kmv, Cardinality.kmv(32, "doc_id").meta)(sketch(retained)))
     }
     assert(e2.getMessage.contains("do not match"), e2.getMessage)
     assert(snapshot() === before, "a refused eraseAll rewrote files")
@@ -747,9 +731,9 @@ class EraseSpec extends SparkSpecBase {
     // certifies the tree
     val report = Maintenance.eraseAll(spark, tree,
       Maintenance.EraseRequest(victims)
-        .withInput(kmv, Cardinality.kmvMeta(16, "doc_id"))(sketch(retained)))
+        .withInput(kmv, Cardinality.kmv(16, "doc_id").meta)(sketch(retained)))
     assert(report.clean && report.filesTotal > 0, s"$report")
-    assert(Cardinality.kmvIndexRead(spark, kmv, 16, "doc_id")
+    assert(Cardinality.kmv(16, "doc_id").read(spark, kmv)
       .select("sketch").as[Seq[Long]].collect().toSeq ===
       sketch(retained).select("sketch").as[Seq[Long]].collect().toSeq)
     assertNoVictimOnDisk(band, Seq("id"), victimIds)
@@ -757,9 +741,8 @@ class EraseSpec extends SparkSpecBase {
 
   test("eraseRewrite returns the version its _ERASURES line cites (stats/audit cross-reference)") {
     val root = tmp("vagree")
-    Dedup.gramFreqIndexWrite(
-      Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), root, n = 3)
-    val stats = eraseWith(root, Dedup.gramFreqIndexMeta(3))(
+    Dedup.gramFreq(3).write(Dedup.gramFreqIndex(docsDF, "doc_id", "text", n = 3), root)
+    val stats = eraseWith(root, Dedup.gramFreq(3).meta)(
       Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 3))
     assert(EpochIndex.erasures(spark, root).lastOption ===
       Some(stats.version),

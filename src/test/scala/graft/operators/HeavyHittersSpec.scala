@@ -63,12 +63,11 @@ class HeavyHittersSpec extends SparkSpecBase {
     val b = items("x y y t u v w")
     val root = java.nio.file.Files
       .createTempDirectory("graft-cms").toString + "/store"
-    HeavyHitters.cmsIndexWrite(
-      HeavyHitters.countMinSketch(a, "w", d, w), root, d, w, "w")
-    HeavyHitters.cmsIndexAppend(spark, root,
-      HeavyHitters.countMinSketch(b, "w", d, w), "day-2", d, w, "w")
+    HeavyHitters.cms(d, w, "w").write(HeavyHitters.countMinSketch(a, "w", d, w), root)
+    HeavyHitters.cms(d, w, "w").append(spark, root, HeavyHitters.countMinSketch(b,
+      "w", d, w), "day-2")
     def stored(): Map[(Int, Long), Long] =
-      HeavyHitters.cmsIndexRead(spark, root, d, w, "w")
+      HeavyHitters.cms(d, w, "w").read(spark, root)
         .as[(Int, Long, Long)].collect()
         .map(t => (t._1, t._2) -> t._3).toMap
     val direct = HeavyHitters.countMinSketch(a.unionByName(b), "w", d, w)
@@ -79,7 +78,7 @@ class HeavyHittersSpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      HeavyHitters.cmsIndexRead(spark, root, d, w * 2, "w")
+      HeavyHitters.cms(d, w * 2, "w").read(spark, root)
     }
     assert(e.getMessage.contains("width"), e.getMessage)
   }

@@ -78,12 +78,12 @@ class IntervalExpandSpec extends SparkSpecBase {
     val b = Seq(("k1", 4L, 11L), ("k2", 2L, 4L), ("k3", 7L, 9L))
     val root = java.nio.file.Files
       .createTempDirectory("graft-isl").toString + "/store"
-    IntervalExpand.islandsIndexWrite(a.toDF("k", "s", "e"), root, "k",
-      col("s"), col("e"))
-    IntervalExpand.islandsIndexAppend(spark, root, b.toDF("k", "s", "e"),
-      "k", col("s"), col("e"), "day-2")
+    IntervalExpand.islands("k").write(IntervalExpand.mergeIntervals(a.toDF("k", "s",
+      "e"), "k", col("s"), col("e")), root)
+    IntervalExpand.islands("k").append(spark, root,
+      IntervalExpand.mergeIntervals(b.toDF("k", "s", "e"), "k", col("s"), col("e")), "day-2")
     def stored(): Set[(String, Long, Long)] =
-      IntervalExpand.islandsIndexRead(spark, root, "k")
+      IntervalExpand.islands("k").read(spark, root)
         .as[(String, Long, Long)].collect().toSet
     val direct = IntervalExpand.mergeIntervals(
       (a ++ b).toDF("k", "s", "e"), "k", col("s"), col("e"))
@@ -95,7 +95,7 @@ class IntervalExpandSpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      IntervalExpand.islandsIndexRead(spark, root, "wrong_key")
+      IntervalExpand.islands("wrong_key").read(spark, root)
     }
     assert(e.getMessage.contains("keyCol"), e.getMessage)
   }

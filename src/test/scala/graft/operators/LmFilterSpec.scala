@@ -52,33 +52,30 @@ class LmFilterSpec extends SparkSpecBase {
     val b = Seq((2L, "a b d")).toDF("doc_id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft-lmidx").toString + "/store"
-    LmFilter.lmIndexWrite(LmFilter.lmIndex(a, "doc_id", "text"), root,
-      ctxBuckets = 4096, bigramBuckets = 32768)
-    LmFilter.lmIndexAppend(spark, root,
-      LmFilter.lmIndex(b, "doc_id", "text"), epoch = "day2",
-      ctxBuckets = 4096, bigramBuckets = 32768)
+    LmFilter.lm(4096, 32768).write(LmFilter.lmIndex(a, "doc_id", "text"), root)
+    LmFilter.lm(4096, 32768).append(spark, root, LmFilter.lmIndex(b, "doc_id", "text"), "day2")
     // replay-idempotency hook: excluding the live epoch leaves shard a
-    val excluded = LmFilter.lmIndexRead(spark, root, 4096, 32768, Some("day2"))
+    val excluded = LmFilter.lm(4096, 32768).read(spark, root, Some("day2"))
       .as[(Int, Long, Long)].collect().toSet
     val aOnly = LmFilter.lmIndex(a, "doc_id", "text")
       .as[(Int, Long, Long)].collect().toSet
     assert(excluded === aOnly)
     val stats = Maintenance.compactStore(spark, root)
     assert(stats.folded.toSet === Set("base", "day2"))
-    val stored = LmFilter.lmIndexRead(spark, root, 4096, 32768)
+    val stored = LmFilter.lm(4096, 32768).read(spark, root)
       .as[(Int, Long, Long)].collect().toSet
     val direct = LmFilter.lmIndex(a.unionByName(b), "doc_id", "text")
       .as[(Int, Long, Long)].collect().toSet
     assert(stored === direct)
-    // merge helper agrees with the corpus-wide build
-    val merged = LmFilter.lmIndexMerge(
-      LmFilter.lmIndex(a, "doc_id", "text"),
-      LmFilter.lmIndex(b, "doc_id", "text"))
+    // the store's merge (its compaction fold) agrees with the
+    // corpus-wide build
+    val merged = LmFilter.lm(4096, 32768).merge(
+      LmFilter.lmIndex(a, "doc_id", "text"), LmFilter.lmIndex(b, "doc_id", "text"))
       .as[(Int, Long, Long)].collect().toSet
     assert(merged === direct)
     // a probe hashed into a different bucket space must refuse loudly
     val e = intercept[IllegalArgumentException] {
-      LmFilter.lmIndexRead(spark, root, 4096, 1024)
+      LmFilter.lm(4096, 1024).read(spark, root)
     }
     assert(e.getMessage.toLowerCase.contains("bucket"))
   }

@@ -14,48 +14,44 @@ class MaintenanceSpec extends SparkSpecBase {
     // line first-occurrence store, two epochs
     val docsA = Seq((1L, "alpha\nshared"), (2L, "shared\nbeta")).toDF("doc_id", "text")
     val docsB = Seq((10L, "shared\nnew")).toDF("doc_id", "text")
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n"),
-      s"$root/indexes/lines", sep = "\n")
-    Dedup.lineFirstOccIndexAppend(spark, s"$root/indexes/lines",
-      Dedup.lineFirstOccIndex(docsB, "doc_id", "text", "\n"), "day-2", "\n")
+    val (lines, caps, profile, grams, lm) = (Dedup.lineFirstOcc("\n"),
+      Curation.capCounts("dom"), SampleSketch.profile(8, "g", "v"),
+      Dedup.gramFreq(2), LmFilter.lm(4096, 32768))
+    lines.write(Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n"),
+      s"$root/indexes/lines")
+    lines.append(spark, s"$root/indexes/lines",
+      Dedup.lineFirstOccIndex(docsB, "doc_id", "text", "\n"), "day-2")
     // domain-cap count store, two epochs
     val capsA = (1L to 20L).map(i => (s"d${i % 3}", i)).toDF("dom", "id")
     val capsB = (21L to 40L).map(i => (s"d${i % 3}", i)).toDF("dom", "id")
-    Curation.capCountIndexWrite(
-      Curation.capCountIndex(capsA, col("dom"), col("id")),
-      s"$root/indexes/caps", "dom")
-    Curation.capCountIndexAppend(spark, s"$root/indexes/caps",
-      Curation.capCountIndex(capsB, col("dom"), col("id")), "day-2", "dom")
+    caps.write(Curation.capCountIndex(capsA, col("dom"), col("id")),
+      s"$root/indexes/caps")
+    caps.append(spark, s"$root/indexes/caps",
+      Curation.capCountIndex(capsB, col("dom"), col("id")), "day-2")
     // sample-sketch store, one epoch (bootstrap only)
     val prof = (1L to 30L).map(i => ("g", i, i.toDouble)).toDF("g", "id", "v")
-    SampleSketch.sampleSketchIndexWrite(
-      SampleSketch.sampleSketch(prof, col("g"), col("id"), col("v"), 8),
-      s"$root/indexes/profile", 8, "g", "v")
+    profile.write(SampleSketch.sampleSketch(prof, col("g"), col("id"),
+      col("v"), 8), s"$root/indexes/profile")
     // gram-frequency count store, two epochs
-    Dedup.gramFreqIndexWrite(
-      Dedup.gramFreqIndex(docsA, "doc_id", "text", n = 2),
-      s"$root/indexes/grams", n = 2)
-    Dedup.gramFreqIndexAppend(spark, s"$root/indexes/grams",
-      Dedup.gramFreqIndex(docsB, "doc_id", "text", n = 2), "day-2", n = 2)
+    grams.write(Dedup.gramFreqIndex(docsA, "doc_id", "text", n = 2),
+      s"$root/indexes/grams")
+    grams.append(spark, s"$root/indexes/grams",
+      Dedup.gramFreqIndex(docsB, "doc_id", "text", n = 2), "day-2")
     // bigram-LM count store, two epochs
-    LmFilter.lmIndexWrite(
-      LmFilter.lmIndex(docsA, "doc_id", "text"),
-      s"$root/indexes/lm", 4096, 32768)
-    LmFilter.lmIndexAppend(spark, s"$root/indexes/lm",
-      LmFilter.lmIndex(docsB, "doc_id", "text"), "day-2", 4096, 32768)
+    lm.write(LmFilter.lmIndex(docsA, "doc_id", "text"), s"$root/indexes/lm")
+    lm.append(spark, s"$root/indexes/lm",
+      LmFilter.lmIndex(docsB, "doc_id", "text"), "day-2")
 
-    val lineBefore = Dedup.lineFirstOccIndexRead(spark, s"$root/indexes/lines")
+    val lineBefore = lines.read(spark, s"$root/indexes/lines")
       .as[(String, Long, Int)].collect().toSet
-    val capsBefore = Curation.capCountIndexRead(spark, s"$root/indexes/caps", "dom")
+    val capsBefore = caps.read(spark, s"$root/indexes/caps")
       .as[(String, Long)].collect().toSet
-    val profBefore = SampleSketch
-      .sampleSketchIndexRead(spark, s"$root/indexes/profile", 8, "g", "v")
+    val profBefore = profile.read(spark, s"$root/indexes/profile")
       .as[(String, Seq[(Long, Long, Double)])].collect().toSet
-    val gramsBefore = Dedup.gramFreqIndexRead(spark, s"$root/indexes/grams",
-      None, n = 2).as[(String, Long)].collect().toSet
-    val lmBefore = LmFilter.lmIndexRead(spark, s"$root/indexes/lm",
-      4096, 32768).as[(Int, Long, Long)].collect().toSet
+    val gramsBefore = grams.read(spark, s"$root/indexes/grams")
+      .as[(String, Long)].collect().toSet
+    val lmBefore = lm.read(spark, s"$root/indexes/lm")
+      .as[(Int, Long, Long)].collect().toSet
 
     val results = Maintenance.compactAll(spark, root)
     assert(results.map(_.root).size === 5)
@@ -65,16 +61,15 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(results.forall(r => !r.failed && r.stats.isDefined), results)
 
     // probe-after ≡ probe-before, per family fold
-    assert(Dedup.lineFirstOccIndexRead(spark, s"$root/indexes/lines")
+    assert(lines.read(spark, s"$root/indexes/lines")
       .as[(String, Long, Int)].collect().toSet === lineBefore)
-    assert(Curation.capCountIndexRead(spark, s"$root/indexes/caps", "dom")
+    assert(caps.read(spark, s"$root/indexes/caps")
       .as[(String, Long)].collect().toSet === capsBefore)
-    assert(SampleSketch
-      .sampleSketchIndexRead(spark, s"$root/indexes/profile", 8, "g", "v")
+    assert(profile.read(spark, s"$root/indexes/profile")
       .as[(String, Seq[(Long, Long, Double)])].collect().toSet === profBefore)
-    assert(Dedup.gramFreqIndexRead(spark, s"$root/indexes/grams", None, n = 2)
+    assert(grams.read(spark, s"$root/indexes/grams")
       .as[(String, Long)].collect().toSet === gramsBefore)
-    assert(LmFilter.lmIndexRead(spark, s"$root/indexes/lm", 4096, 32768)
+    assert(lm.read(spark, s"$root/indexes/lm")
       .as[(Int, Long, Long)].collect().toSet === lmBefore)
   }
 
@@ -82,11 +77,10 @@ class MaintenanceSpec extends SparkSpecBase {
     val root = tree()
     val docsA = Seq((1L, "alpha\nshared"), (2L, "shared\nbeta")).toDF("doc_id", "text")
     val docsB = Seq((10L, "shared\nnew")).toDF("doc_id", "text")
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n"),
-      s"$root/indexes/lines", sep = "\n")
-    Dedup.lineFirstOccIndexAppend(spark, s"$root/indexes/lines",
-      Dedup.lineFirstOccIndex(docsB, "doc_id", "text", "\n"), "day-2", "\n")
+    Dedup.lineFirstOcc("\n").write(Dedup.lineFirstOccIndex(docsA, "doc_id", "text",
+      "\n"), s"$root/indexes/lines")
+    Dedup.lineFirstOcc("\n").append(spark, s"$root/indexes/lines",
+      Dedup.lineFirstOccIndex(docsB, "doc_id", "text", "\n"), "day-2")
     val before = Maintenance.describeStores(spark, root)
     assert(before.size === 1)
     val st0 = before.head.states.head
@@ -119,7 +113,7 @@ class MaintenanceSpec extends SparkSpecBase {
       s"$root/indexes/lines/_epoch=torn-1"), true)
     Maintenance.eraseStore(spark, s"$root/indexes/lines",
       Maintenance.EraseRequest(Seq(99L).toDF("doc_id"))
-        .withInput(s"$root/indexes/lines", Dedup.lineIndexMeta("\n", 1))(
+        .withInput(s"$root/indexes/lines", Dedup.lineFirstOcc("\n").meta)(
           Dedup.lineFirstOccIndex(docsA, "doc_id", "text", "\n")))
     val erased = Maintenance.describeStores(spark, root).head.erasures
     assert(erased.size === 1 && erased.head.startsWith("v"),
@@ -129,9 +123,8 @@ class MaintenanceSpec extends SparkSpecBase {
   test("discovery stops at a manifest: store internals are never separate stores") {
     val root = tree()
     val docs = Seq((1L, "a\nb")).toDF("doc_id", "text")
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(docs, "doc_id", "text", "\n"),
-      s"$root/deep/nest/lines", sep = "\n")
+    Dedup.lineFirstOcc("\n").write(Dedup.lineFirstOccIndex(docs, "doc_id", "text",
+      "\n"), s"$root/deep/nest/lines")
     def found(): Seq[String] =
       Maintenance.discoverStores(spark, root)
         .map(_.stripPrefix("file:")) // local FS echoes the scheme
@@ -145,9 +138,8 @@ class MaintenanceSpec extends SparkSpecBase {
   test("unknown family fails the sweep LOUDLY, after other stores compacted") {
     val root = tree()
     val docs = Seq((1L, "a\nb"), (2L, "b\nc")).toDF("doc_id", "text")
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(docs, "doc_id", "text", "\n"),
-      s"$root/good", sep = "\n")
+    Dedup.lineFirstOcc("\n").write(Dedup.lineFirstOccIndex(docs, "doc_id", "text",
+      "\n"), s"$root/good")
     // hand-plant an alien manifest
     IndexMeta.write(spark, s"$root/alien",
       IndexMeta("martian_index", "x" -> 1))
@@ -161,7 +153,7 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(e.getMessage.contains("martian_index"), e.getMessage)
     assert(e.getMessage.contains("1 of 2"), e.getMessage)
     // the good store DID compact before the sweep raised
-    assert(Dedup.lineFirstOccIndexRead(spark, s"$root/good").count() > 0)
+    assert(Dedup.lineFirstOcc("\n").read(spark, s"$root/good").count() > 0)
     assert(graft.sources.Fs.exists(spark, s"$root/good/_base/_CURRENT"))
   }
 

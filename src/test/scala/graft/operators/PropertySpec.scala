@@ -533,12 +533,12 @@ class PropertySpec extends SparkSpecBase {
           sofar = sofar ++ b
           Dedup.ccLabelsFold(spark, root, b.toDF("id_a", "id_b"),
             s"e$i", "cosine", 0.4)
-          val stored = Dedup.ccLabelsRead(spark, root, "cosine", 0.4)
+          val stored = Dedup.ccLabels("cosine", 0.4).read(spark, root)
             .as[(Long, Long)].collect().toSet
           assert(stored === full(), s"after batch $i: edges=$sofar")
         }
         Maintenance.compactStore(spark, root)
-        assert(Dedup.ccLabelsRead(spark, root, "cosine", 0.4)
+        assert(Dedup.ccLabels("cosine", 0.4).read(spark, root)
           .as[(Long, Long)].collect().toSet === full(),
           s"compaction changed the labeling: edges=$sofar")
       }

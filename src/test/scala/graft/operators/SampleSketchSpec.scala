@@ -100,11 +100,10 @@ class SampleSketchSpec extends SparkSpecBase {
     val k = 12
     val root = java.nio.file.Files
       .createTempDirectory("graft-sksk").toString + "/store"
-    SampleSketch.sampleSketchIndexWrite(sketchOf(a, k), root, k, "g", "v")
-    SampleSketch.sampleSketchIndexAppend(spark, root, sketchOf(b, k),
-      "day-2", k, "g", "v")
+    SampleSketch.profile(k, "g", "v").write(sketchOf(a, k), root)
+    SampleSketch.profile(k, "g", "v").append(spark, root, sketchOf(b, k), "day-2")
     def stored(): Map[String, Seq[(Long, Long, Double)]] =
-      SampleSketch.sampleSketchIndexRead(spark, root, k, "g", "v")
+      SampleSketch.profile(k, "g", "v").read(spark, root)
         .select(col("group"), col("sketch"))
         .as[(String, Seq[(Long, Long, Double)])].collect().toMap
     val direct = sketchOf(a ++ b, k)
@@ -115,7 +114,7 @@ class SampleSketchSpec extends SparkSpecBase {
     assert(stats.folded.toSet === Set("base", "day-2"))
     assert(stored() === direct) // probe-after ≡ probe-before
     val e = intercept[IllegalArgumentException] {
-      SampleSketch.sampleSketchIndexRead(spark, root, k + 1, "g", "v")
+      SampleSketch.profile(k + 1, "g", "v").read(spark, root)
     }
     assert(e.getMessage.contains("k:"), e.getMessage)
   }

@@ -32,12 +32,14 @@ class StoreFamilySpec extends SparkSpecBase {
   /** One registry case: the family name its writer records; the
     * write + one append over the case's rows minus the ids given; the
     * victim ids the erase forgets and, for a Subtract or Rebuild
-    * family, the input built under its manifest parameters; and the
-    * family's checked read. */
+    * family, the input built under its manifest parameters; the
+    * family's checked read; and, for a flat family, the handle the
+    * case writes, appends and reads through. */
   private case class Case(family: String, victims: Seq[Long],
                           build: (String, Set[Long]) => Unit,
                           input: Option[(IndexMeta, () => DataFrame)],
-                          read: String => Set[String])
+                          read: String => Set[String],
+                          store: Option[StoreFamily.Bound] = None)
 
   private def without(df: DataFrame, idCol: String, ids: Set[Long]): DataFrame =
     df.filter(!col(idCol).isin(ids.toSeq.map(Long.box): _*))
@@ -63,6 +65,19 @@ class StoreFamilySpec extends SparkSpecBase {
     write(root, without(docsA, "doc_id", drop))
     append(root, without(docsB, "doc_id", drop))
   }
+  /** A flat family's case, built from its handle alone. */
+  private def flatCase(store: StoreFamily.Bound, victims: Seq[Long])(
+      build: (String, Set[Long]) => Unit,
+      input: Option[() => DataFrame]): Case =
+    Case(store.meta.family, victims, build, input.map(store.meta -> _),
+      root => rows(store.read(spark, root)), Some(store))
+  /** A docs-keyed flat case: `part` builds the partial the handle
+    * writes (over docsA) and appends (over docsB). */
+  private def docsCase(store: StoreFamily.Bound, input: Option[() => DataFrame])(
+      part: DataFrame => DataFrame): Case =
+    flatCase(store, docVictims)(docsBuild(
+      (root, d) => store.write(part(d), root),
+      (root, d) => store.append(spark, root, part(d), "day-2")), input)
   private val smallMinHash = Dedup.MinHash(numHashes = 8, bands = 4,
     shingleK = 1)
   private def tokens(docs: DataFrame): DataFrame =
@@ -98,55 +113,20 @@ class StoreFamilySpec extends SparkSpecBase {
     .toDF("id", "src", "ppl")
 
   private val cases: Seq[Case] = Seq(
-    Case("line_first_occ", docVictims,
-      docsBuild(
-        (root, d) => Dedup.lineFirstOccIndexWrite(
-          Dedup.lineFirstOccIndex(d, "doc_id", "text", "\n"), root, "\n"),
-        (root, d) => Dedup.lineFirstOccIndexAppend(spark, root,
-          Dedup.lineFirstOccIndex(d, "doc_id", "text", "\n"), "day-2", "\n")),
-      Some(Dedup.lineIndexMeta("\n", 1) ->
-        (() => Dedup.lineFirstOccIndex(retainedDocs, "doc_id", "text", "\n"))),
-      root => rows(Dedup.lineFirstOccIndexRead(spark, root, None, "\n", 1))),
-    Case("boilerplate_counts", docVictims,
-      docsBuild(
-        (root, d) => Dedup.boilerplateIndexWrite(
-          Dedup.boilerplateIndex(d, "doc_id", "text", "\n"), root, "\n"),
-        (root, d) => Dedup.boilerplateIndexAppend(spark, root,
-          Dedup.boilerplateIndex(d, "doc_id", "text", "\n"), "day-2", "\n")),
-      Some(Dedup.boilerplateIndexMeta("\n", 1) ->
-        (() => Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n"))),
-      root => rows(Dedup.boilerplateIndexRead(spark, root, None, "\n", 1))),
-    Case("domain_cap_counts", docVictims,
-      docsBuild(
-        (root, d) => Curation.capCountIndexWrite(capPart(d), root, "prefix5"),
-        (root, d) => Curation.capCountIndexAppend(spark, root, capPart(d),
-          "day-2", "prefix5")),
-      Some(Curation.capIndexMeta("prefix5") -> (() => capPart(victimDocs))),
-      root => rows(Curation.capCountIndexRead(spark, root, "prefix5"))),
-    Case("sample_sketch", docVictims,
-      docsBuild(
-        (root, d) => SampleSketch.sampleSketchIndexWrite(samplePart(d), root,
-          4, "doc_id", "len"),
-        (root, d) => SampleSketch.sampleSketchIndexAppend(spark, root,
-          samplePart(d), "day-2", 4, "doc_id", "len")),
-      Some(SampleSketch.indexMeta(4, "doc_id", "len") ->
-        (() => samplePart(retainedDocs))),
-      root => rows(SampleSketch.sampleSketchIndexRead(spark, root, 4,
-        "doc_id", "len"))),
-    Case("hll_registers", docVictims,
-      docsBuild(
-        (root, d) => Cardinality.hllIndexWrite(hllPart(d), root, 6, "token"),
-        (root, d) => Cardinality.hllIndexAppend(spark, root, hllPart(d),
-          "day-2", 6, "token")),
-      Some(Cardinality.hllMeta(6, "token") -> (() => hllPart(retainedDocs))),
-      root => rows(Cardinality.hllIndexRead(spark, root, 6, "token"))),
-    Case("kmv_bottom_k", docVictims,
-      docsBuild(
-        (root, d) => Cardinality.kmvIndexWrite(kmvPart(d), root, 8, "token"),
-        (root, d) => Cardinality.kmvIndexAppend(spark, root, kmvPart(d),
-          "day-2", 8, "token")),
-      Some(Cardinality.kmvMeta(8, "token") -> (() => kmvPart(retainedDocs))),
-      root => rows(Cardinality.kmvIndexRead(spark, root, 8, "token"))),
+    docsCase(Dedup.lineFirstOcc("\n"),
+      Some(() => Dedup.lineFirstOccIndex(retainedDocs, "doc_id", "text", "\n")))(
+      Dedup.lineFirstOccIndex(_, "doc_id", "text", "\n")),
+    docsCase(Dedup.boilerplateCounts("\n"),
+      Some(() => Dedup.boilerplateIndex(victimDocs, "doc_id", "text", "\n")))(
+      Dedup.boilerplateIndex(_, "doc_id", "text", "\n")),
+    docsCase(Curation.capCounts("prefix5"), Some(() => capPart(victimDocs)))(
+      capPart),
+    docsCase(SampleSketch.profile(4, "doc_id", "len"),
+      Some(() => samplePart(retainedDocs)))(samplePart),
+    docsCase(Cardinality.hll(6, "token"), Some(() => hllPart(retainedDocs)))(
+      hllPart),
+    docsCase(Cardinality.kmv(8, "token"), Some(() => kmvPart(retainedDocs)))(
+      kmvPart),
     Case("graph_census", Seq(2L),
       (root, drop) => {
         Centrality.triangleCensusWrite(withoutNodes(edgesA, drop), root)
@@ -155,61 +135,29 @@ class StoreFamilySpec extends SparkSpecBase {
       },
       None,
       root => rows(Centrality.triangleCensusRead(spark, root))),
-    Case("cms_counts", docVictims,
-      docsBuild(
-        (root, d) => HeavyHitters.cmsIndexWrite(cmsPart(d), root, 3, 32, "token"),
-        (root, d) => HeavyHitters.cmsIndexAppend(spark, root, cmsPart(d),
-          "day-2", 3, 32, "token")),
-      Some(HeavyHitters.cmsMeta(3, 32, "token") -> (() => cmsPart(retainedDocs))),
-      root => rows(HeavyHitters.cmsIndexRead(spark, root, 3, 32, "token"))),
-    Case("table_digest", docVictims,
-      docsBuild(
-        (root, d) => Audit.digestIndexWrite(digestPart(d), root,
-          Seq("doc_id", "text"), "parity"),
-        (root, d) => Audit.digestIndexAppend(spark, root, digestPart(d),
-          "day-2", Seq("doc_id", "text"), "parity")),
-      Some(Audit.digestMeta(Seq("doc_id", "text"), "parity") ->
-        (() => digestPart(victimDocs))),
-      root => rows(Audit.digestIndexRead(spark, root, Seq("doc_id", "text"),
-        "parity"))),
-    Case("interval_islands", Seq(2L, 10L),
+    docsCase(HeavyHitters.cms(3, 32, "token"), Some(() => cmsPart(retainedDocs)))(
+      cmsPart),
+    docsCase(Audit.digestLedger(Seq("doc_id", "text"), "parity"),
+      Some(() => digestPart(victimDocs)))(digestPart),
+    flatCase(IntervalExpand.islands("k"), Seq(2L, 10L))(
       (root, drop) => {
-        IntervalExpand.islandsIndexWrite(
-          without(intervalsA, "owner", drop).select("k", "s", "e"), root, "k",
+        def islands(intervals: DataFrame) = IntervalExpand.mergeIntervals(
+          without(intervals, "owner", drop).select("k", "s", "e"), "k",
           col("s"), col("e"))
-        IntervalExpand.islandsIndexAppend(spark, root,
-          without(intervalsB, "owner", drop).select("k", "s", "e"), "k",
-          col("s"), col("e"), "day-2")
+        IntervalExpand.islands("k").write(islands(intervalsA), root)
+        IntervalExpand.islands("k").append(spark, root, islands(intervalsB),
+          "day-2")
       },
-      Some(IntervalExpand.islandsMeta("k") -> (() => IntervalExpand
-        .mergeIntervals(without(intervalsA.union(intervalsB), "owner",
-          Set(2L, 10L)).select("k", "s", "e"), "k", col("s"), col("e")))),
-      root => rows(IntervalExpand.islandsIndexRead(spark, root, "k"))),
-    Case("dsir_buckets", docVictims,
-      docsBuild(
-        (root, d) => Splits.dsirIndexWrite(dsirPart(d), root, 64),
-        (root, d) => Splits.dsirIndexAppend(spark, root, dsirPart(d),
-          "day-2", 64)),
-      Some(Splits.dsirMeta(64) -> (() => dsirPart(victimDocs))),
-      root => rows(Splits.dsirIndexRead(spark, root, 64))),
-    Case("gram_freq", docVictims,
-      docsBuild(
-        (root, d) => Dedup.gramFreqIndexWrite(
-          Dedup.gramFreqIndex(d, "doc_id", "text", n = 2), root, n = 2),
-        (root, d) => Dedup.gramFreqIndexAppend(spark, root,
-          Dedup.gramFreqIndex(d, "doc_id", "text", n = 2), "day-2", n = 2)),
-      Some(Dedup.gramFreqIndexMeta(2) ->
-        (() => Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 2))),
-      root => rows(Dedup.gramFreqIndexRead(spark, root, None, n = 2))),
-    Case("lm_bigram", docVictims,
-      docsBuild(
-        (root, d) => LmFilter.lmIndexWrite(LmFilter.lmIndex(d, "doc_id", "text"),
-          root, 4096, 32768),
-        (root, d) => LmFilter.lmIndexAppend(spark, root,
-          LmFilter.lmIndex(d, "doc_id", "text"), "day-2", 4096, 32768)),
-      Some(LmFilter.lmMeta(4096, 32768) ->
-        (() => LmFilter.lmIndex(victimDocs, "doc_id", "text"))),
-      root => rows(LmFilter.lmIndexRead(spark, root, 4096, 32768))),
+      Some(() => IntervalExpand.mergeIntervals(without(intervalsA
+        .union(intervalsB), "owner", Set(2L, 10L)).select("k", "s", "e"), "k",
+        col("s"), col("e")))),
+    docsCase(Splits.dsir(64), Some(() => dsirPart(victimDocs)))(dsirPart),
+    docsCase(Dedup.gramFreq(2),
+      Some(() => Dedup.gramFreqIndex(victimDocs, "doc_id", "text", n = 2)))(
+      Dedup.gramFreqIndex(_, "doc_id", "text", n = 2)),
+    docsCase(LmFilter.lm(4096, 32768),
+      Some(() => LmFilter.lmIndex(victimDocs, "doc_id", "text")))(
+      LmFilter.lmIndex(_, "doc_id", "text")),
     Case("bm25_postings", docVictims,
       docsBuild(
         (root, d) => Relevance.bm25IndexWrite(d, root, "doc_id", "text"),
@@ -242,17 +190,15 @@ class StoreFamilySpec extends SparkSpecBase {
       },
       None,
       root => rows(Similarity.ivfPqIndexRead(spark, root).codes)),
-    Case("cert_pairs", Seq(4L),
+    flatCase(Dedup.certLedger("jaccard", 0.85), Seq(4L))(
       (root, drop) => {
-        Dedup.certLedgerWrite(without(without(Seq((1L, 2L, 0.9), (3L, 4L, 1.0))
-          .toDF("id_a", "id_b", "jaccard"), "id_a", drop), "id_b", drop),
-          root, "jaccard", 0.85)
-        Dedup.certLedgerAppend(spark, root,
-          Seq((2L, 101L, 0.88)).toDF("id_a", "id_b", "jaccard"), "day-2",
-          "jaccard", 0.85)
+        val ledger = Dedup.certLedger("jaccard", 0.85)
+        ledger.write(without(without(Seq((1L, 2L, 0.9), (3L, 4L, 1.0))
+          .toDF("id_a", "id_b", "jaccard"), "id_a", drop), "id_b", drop), root)
+        ledger.append(spark, root,
+          Seq((2L, 101L, 0.88)).toDF("id_a", "id_b", "jaccard"), "day-2")
       },
-      None,
-      root => rows(Dedup.certLedgerRead(spark, root, "jaccard", 0.85))),
+      None),
     Case("cert_text", docVictims,
       docsBuild(
         (root, d) => Dedup.certIndexWrite(d, "doc_id", "text", root,
@@ -273,16 +219,15 @@ class StoreFamilySpec extends SparkSpecBase {
       None,
       root => rows(Dedup.certIndexProbe(spark, root, probeVecs, "vec_id",
         "embedding", Dedup.Cosine(0.4)))),
-    Case("cc_labels", Seq(3L),
+    flatCase(Dedup.ccLabels("cosine", 0.8), Seq(3L))(
       (root, drop) => {
         Dedup.ccLabelsFold(spark, root, withoutPairs(ccPairsA, drop),
           "base", "cosine", 0.8)
         Dedup.ccLabelsFold(spark, root, withoutPairs(ccPairsB, drop),
           "day-2", "cosine", 0.8)
       },
-      Some(Dedup.ccLabelsMeta("cosine", 0.8) -> (() => Dedup.connectedComponents(
+      Some(() => Dedup.connectedComponents(
         withoutPairs(ccPairsA.union(ccPairsB), Set(3L))))),
-      root => rows(Dedup.ccLabelsRead(spark, root, "cosine", 0.8))),
     Case("quality_cuts", Seq(4L, 7L),
       (root, drop) => {
         // a calibration store is a versioned snapshot: its "append" is
@@ -427,8 +372,8 @@ class StoreFamilySpec extends SparkSpecBase {
   }
 
   test("registry: every family name literal in main sources is registered") {
-    // \b: a helper whose name ends in IndexMeta (`boilerplateIndexMeta`)
-    // takes parameters, not a family name
+    // \b: a helper whose name ends in IndexMeta takes parameters, not a
+    // family name
     val literal = ("""\b(?:IndexMeta|BandsMeta|StoreFamily(?:\.flat|\.snapshot)?)\(\s*"([^"]+)"""" +
       """|\bval\s+\w*Family\s*=\s*"([^"]+)"""").r
     val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
@@ -444,10 +389,70 @@ class StoreFamilySpec extends SparkSpecBase {
     assert(names.filter(registered(_).isEmpty).isEmpty)
   }
 
+  /** Every flat family in the registry: one epoch substore at the
+    * manifest root, folded, with no inner partitions. */
+  private def flatFamilies: Seq[StoreFamily] = Maintenance.Families.filter(f =>
+    f.substores.map(s => (s.subdir, s.fold.isDefined, s.innerPartCols)) ==
+      Seq(("", true, Nil)))
+
+  test("flat stores: a handle under another parameter refuses; read ≡ compact then read") {
+    assert(flatFamilies.size === 14, flatFamilies.map(_.name))
+    flatFamilies.foreach { family =>
+      val c = cases.find(_.store.exists(_.family == family)).getOrElse(
+        fail(s"${family.name}: no registry case builds it from its handle"))
+      val store = c.store.get
+      val root = tmp(s"${family.name}-bound")
+      c.build(root, Set.empty)
+      // one manifest parameter changed: the same family, another build
+      val (key, value) = store.meta.params.toSeq.minBy(_._1)
+      val other = StoreFamily.Bound(family,
+        store.meta.copy(params = store.meta.params.updated(key, value + "0")))
+      val partial = store.read(spark, root)
+      val appendRefusal = intercept[IllegalArgumentException](
+        other.append(spark, root, partial, "other"))
+      assert(appendRefusal.getMessage.contains(key), appendRefusal.getMessage)
+      val readRefusal = intercept[IllegalArgumentException](
+        other.read(spark, root))
+      assert(readRefusal.getMessage.contains(key), readRefusal.getMessage)
+      assert(EpochIndex.committedEpochNames(spark, root).size === 2,
+        s"${family.name}: a refused append landed")
+      // the read folds with the compaction fold: compacting changes nothing
+      val before = rows(store.read(spark, root))
+      val stats = Maintenance.compactStore(spark, root)
+      assert(rows(store.read(spark, root)) === before, family.name)
+      assert(rows(store.readAsOf(spark, root, stats.version)) === before,
+        family.name)
+    }
+  }
+
+  test("flat stores: the write/append/read path is written once") {
+    // a flat-family writer hand-rolling the trio again (check + append,
+    // bootstrap + manifest write at the same root) fails here
+    val checkAppend = ("""IndexMeta\.check\(spark,\s*(\w+),[^\n]*\n\s*""" +
+      """EpochIndex\.append\([^\n]*?,\s*\1,(?![^\n]*innerPartCols\s*=\s*Seq)""").r
+    val bootstrapWrite = ("""EpochIndex\.bootstrap\([^\n]*?,\s*(\w+)(?:,\s*[\w.]+)?\)""" +
+      """\s*\n\s*IndexMeta\.write\([^\n]*?,\s*\1,""").r
+    val flatBootstrapName = ("""bootstrapName\s*=\s*"(?:(?:lineFirstOcc|boilerplate|""" +
+      """gramFreq|hll|kmv|cms|sampleSketch|dsir|capCount|digest|islands|lm)""" +
+      """IndexWrite|certLedgerWrite|ccLabelsWrite)"""").r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files = try {
+      import scala.jdk.CollectionConverters._
+      sources.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString ->
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).toList
+    } finally sources.close()
+    def sites(re: scala.util.matching.Regex): Seq[String] =
+      files.flatMap { case (name, code) => re.findAllMatchIn(code).map(_ => name) }
+    assert(sites(checkAppend) === Seq("StoreFamily.scala"))
+    assert(sites(bootstrapWrite) === Seq("StoreFamily.scala"))
+    assert(sites(flatBootstrapName).isEmpty)
+  }
+
   test("a manifest lacking a fold's build parameter refuses, naming the store and the key") {
     val root = tmp("hll-noparam")
-    Cardinality.hllIndexWrite(Cardinality.hllSketch(tokens(docsA),
-      lit("all"), col("token"), p = 6), root, 6, "token")
+    Cardinality.hll(6, "token").write(Cardinality.hllSketch(tokens(docsA),
+      lit("all"), col("token"), p = 6), root)
     IndexMeta.write(spark, root, IndexMeta("hll_registers", "keyName" -> "token"))
     val e = intercept[RuntimeException](Maintenance.compactStore(spark, root))
     assert(e.getMessage.contains(root) && e.getMessage.contains("'p'"),

@@ -192,15 +192,14 @@ object SinkFixtures {
         val ref = (0 until 10).map(n =>
           (n.toLong, "alpha beta gamma delta alpha beta gamma delta"))
           .toDF("doc_id", "text")
-        LmFilter.lmIndexWrite(LmFilter.lmIndex(ref, "doc_id", "text"), lm,
-          4096, 32768)
+        LmFilter.lm(4096, 32768).write(LmFilter.lmIndex(ref, "doc_id", "text"), lm)
         val calib = (for (src <- Seq("web", "ref"); n <- 0 until 6) yield
           (n.toLong + (if (src == "web") 1000L else 2000L), src,
             if (n < 4) "alpha beta gamma delta alpha beta"
             else s"zeta$n eta$n theta$n iota$n")).toDF("doc_id", "source", "text")
         Quality.qualityCutsWrite(spark, cuts, Quality.qualityCuts(
           calib.join(LmFilter.lmPerplexity(calib, "doc_id", "text",
-            LmFilter.lmIndexRead(spark, lm, 4096, 32768))
+            LmFilter.lm(4096, 32768).read(spark, lm))
             .select("doc_id", "ppl"), Seq("doc_id")), "ppl", Seq("source")),
           "ppl", Seq("source"))
         def gateDocs(rows: (Long, String, String)*) =

@@ -463,9 +463,9 @@ class StreamingSpec extends SparkSpecBase {
     // the cross-epoch bind actually happened: doc 4 lost "beta"
     assert(got.find(_._1 == 4L).get === ((4L, "delta", 1L)))
     // and the stored index aggregates to the batch-side merge
-    val storedIdx = Dedup.boilerplateIndexRead(spark, index)
+    val storedIdx = Dedup.boilerplateCounts("\n").read(spark, index)
       .as[(String, Long)].collect().sortBy(_._1)
-    val mergedIdx = Dedup.boilerplateIndexMerge(idx1,
+    val mergedIdx = Dedup.boilerplateCounts("\n").merge(idx1,
       Dedup.boilerplateIndex(b2.toDF("doc_id", "text"), "doc_id", "text", "\n"))
       .as[(String, Long)].collect().sortBy(_._1)
     assert(storedIdx === mergedIdx)
@@ -478,12 +478,12 @@ class StreamingSpec extends SparkSpecBase {
     val epochs = spark.read.parquet(index).select("_epoch").distinct()
       .as[String].collect().sorted
     assert(epochs.length === 2)
-    val replayView = Dedup.boilerplateIndexRead(spark, index,
+    val replayView = Dedup.boilerplateCounts("\n").read(spark, index,
       excludeEpoch = Some(epochs.last))
       .as[(String, Long)].collect().sortBy(_._1)
     assert(replayView === idx1.as[(String, Long)].collect().sortBy(_._1))
     // and excluding an unknown epoch is the full view, not an error
-    val fullView = Dedup.boilerplateIndexRead(spark, index,
+    val fullView = Dedup.boilerplateCounts("\n").read(spark, index,
       excludeEpoch = Some("no-such-epoch"))
       .as[(String, Long)].collect().sortBy(_._1)
     assert(fullView === storedIdx)
@@ -509,9 +509,8 @@ class StreamingSpec extends SparkSpecBase {
     val ckp = Files.createTempDirectory("graft-bp2-ckp").toString
     // bootstrap the index from a batch-built one (_epoch=base layout)
     val seed = Seq((100L, "seeded\nfooter"), (101L, "other\nfooter"))
-    Dedup.boilerplateIndexWrite(
-      Dedup.boilerplateIndex(seed.toDF("doc_id", "text"), "doc_id", "text", "\n"),
-      index, sep = "\n")
+    Dedup.boilerplateCounts("\n").write(Dedup.boilerplateIndex(seed.toDF("doc_id",
+      "text"), "doc_id", "text", "\n"), index)
     def drain(): Unit = {
       val schema = spark.read.parquet(s"$src/b1").schema
       Streaming.boilerplateIngestSink(
@@ -538,7 +537,7 @@ class StreamingSpec extends SparkSpecBase {
       .select("clean_text", "n_removed").as[(String, Long)].collect()
     assert(doc3 === Array(("fresh", 1L)))
     // the stored index = base seed + epoch partials, readable
-    val idx = Dedup.boilerplateIndexRead(spark, index)
+    val idx = Dedup.boilerplateCounts("\n").read(spark, index)
       .as[(String, Long)].collect()
     assert(idx.nonEmpty)
   }
@@ -591,9 +590,9 @@ class StreamingSpec extends SparkSpecBase {
     val ckp = Files.createTempDirectory("graft-ld2-ckp").toString
     // bootstrap from a batch-built index (_epoch=base layout)
     val seed = Seq((100L, "seeded line\nfooter line"))
-    Dedup.lineFirstOccIndexWrite(
-      Dedup.lineFirstOccIndex(seed.toDF("doc_id", "text"), "doc_id", "text",
-        "\n", minLineLen = 2), index, sep = "\n", minLineLen = 2)
+    Dedup.lineFirstOcc("\n", 2).write(Dedup.lineFirstOccIndex(seed.toDF("doc_id",
+      "text"), "doc_id", "text",
+        "\n", minLineLen = 2), index)
     def drain(): Unit = {
       val schema = spark.read.parquet(s"$src/b1").schema
       Streaming.lineDedupIngestSink(
@@ -618,7 +617,7 @@ class StreamingSpec extends SparkSpecBase {
       .select("clean_text", "n_removed").as[(String, Long)].collect()
     assert(doc301 === Array(("fresh line", 1L)))
     // the stored index reads fine: base seed + epoch partials
-    assert(Dedup.lineFirstOccIndexRead(spark, index).count() >= 2)
+    assert(Dedup.lineFirstOcc("\n", minLineLen = 2).read(spark, index).count() >= 2)
   }
 
   test("streaming domain-cap ingest ≡ full arrival cap over everything delivered") {
@@ -651,7 +650,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(got === want, s"stream $got vs batch $want")
     assert(got === Set(1L, 2L, 3L, 4L, 5L, 10L, 12L, 13L)) // 11 starved: a is full
     // the persisted counts saw EVERY row, kept or dropped
-    assert(Curation.capCountIndexRead(spark, index, "dom")
+    assert(Curation.capCounts("dom").read(spark, index)
       .as[(String, Long)].collect().toMap ===
       Map("a" -> 6L, "b" -> 2L, "c" -> 1L))
     // a reset checkpoint against the kept index is refused loudly
@@ -666,7 +665,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(e.getMessage.contains("fresh checkpoint"), e.getMessage)
     // probing under a different key derivation refuses too
     val e2 = intercept[IllegalArgumentException] {
-      Curation.capCountIndexRead(spark, index, "registered_domain")
+      Curation.capCounts("registered_domain").read(spark, index)
     }
     assert(e2.getMessage.contains("keyName"), e2.getMessage)
   }
@@ -691,7 +690,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = SampleSketch.sampleSketchIndexRead(spark, index, k, "grp", "v")
+    val stored = SampleSketch.profile(k, "grp", "v").read(spark, index)
       .select(col("group"), col("sketch"))
       .as[(String, Seq[(Long, Long, Double)])].collect().toMap
     val direct = SampleSketch.sampleSketch(
@@ -704,7 +703,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(corpus).count() === 60L)
     // wrong-k probe refuses via the manifest
     val e = intercept[IllegalArgumentException] {
-      SampleSketch.sampleSketchIndexRead(spark, index, k + 1, "grp", "v")
+      SampleSketch.profile(k + 1, "grp", "v").read(spark, index)
     }
     assert(e.getMessage.contains("k:"), e.getMessage)
   }
@@ -729,7 +728,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = Cardinality.hllIndexRead(spark, index, p, "v")
+    val stored = Cardinality.hll(p, "v").read(spark, index)
       .as[(String, Seq[Int])].collect().toMap
     val direct = Cardinality.hllSketch(
       (batch1 ++ batch2).toDF("grp", "v"), col("grp"), col("v"), p)
@@ -738,7 +737,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(corpus).count() === (batch1.size + batch2.size))
     // wrong-p probe refuses via the manifest
     val e = intercept[IllegalArgumentException] {
-      Cardinality.hllIndexRead(spark, index, p + 1, "v")
+      Cardinality.hll(p + 1, "v").read(spark, index)
     }
     assert(e.getMessage.contains("p:"), e.getMessage)
   }
@@ -763,7 +762,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = Cardinality.kmvIndexRead(spark, index, k, "v")
+    val stored = Cardinality.kmv(k, "v").read(spark, index)
       .as[(String, Seq[Long])].collect().toMap
     val direct = Cardinality.kmvSketch(
       (batch1 ++ batch2).toDF("grp", "v"), col("grp"), col("v"), k)
@@ -772,7 +771,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(corpus).count() === (batch1.size + batch2.size))
     // wrong-k probe refuses via the manifest
     val e = intercept[IllegalArgumentException] {
-      Cardinality.kmvIndexRead(spark, index, k + 1, "v")
+      Cardinality.kmv(k + 1, "v").read(spark, index)
     }
     assert(e.getMessage.contains("k:"), e.getMessage)
   }
@@ -808,14 +807,14 @@ class StreamingSpec extends SparkSpecBase {
         .awaitTermination()
     }
     def probesExact(): Unit = {
-      val storedKmv = Cardinality.kmvIndexRead(spark, s"$tree/stores/kmv", k, "v")
+      val storedKmv = Cardinality.kmv(k, "v").read(spark, s"$tree/stores/kmv")
         .as[(String, Seq[Long])].collect().toMap
       val directKmv = Cardinality.kmvSketch(
         hllRows.toDF("grp", "v"), col("grp"), col("v"), k)
         .as[(String, Seq[Long])].collect().toMap
       assert(storedKmv === directKmv, "kmv probe diverged from direct")
-      val storedIsl = IntervalExpand
-        .islandsIndexRead(spark, s"$tree/stores/islands", "k")
+      val storedIsl = IntervalExpand.islands("k")
+        .read(spark, s"$tree/stores/islands")
         .as[(String, Long, Long)].collect().toSet
       val directIsl = IntervalExpand.mergeIntervals(
         islRows.toDF("k", "s", "e"), "k", col("s"), col("e"))
@@ -858,7 +857,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = IntervalExpand.islandsIndexRead(spark, index, "k")
+    val stored = IntervalExpand.islands("k").read(spark, index)
       .as[(String, Long, Long)].collect().toSet
     val direct = IntervalExpand.mergeIntervals(
       (batch1 ++ batch2).toDF("k", "s", "e"), "k", col("s"), col("e"))
@@ -888,7 +887,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = Audit.digestIndexRead(spark, index, Seq("k", "v"), "day")
+    val stored = Audit.digestLedger(Seq("k", "v"), "day").read(spark, index)
       .as[(String, Long, Long)].collect().toSet
     val direct = Audit.digestPartial(
       (batch1 ++ batch2).toDF("day", "k", "v"), Seq("k", "v"), col("day"))
@@ -917,7 +916,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = HeavyHitters.cmsIndexRead(spark, index, d, w, "item")
+    val stored = HeavyHitters.cms(d, w, "item").read(spark, index)
       .as[(Int, Long, Long)].collect()
       .map(t => (t._1, t._2) -> t._3).toMap
     val direct = HeavyHitters.countMinSketch(
@@ -955,7 +954,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = Dedup.gramFreqIndexRead(spark, index, None, n = 2)
+    val stored = Dedup.gramFreq(2).read(spark, index)
       .as[(String, Long)].collect().toMap
     val direct = Dedup.gramFreqIndex(
       (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text", n = 2)
@@ -965,7 +964,7 @@ class StreamingSpec extends SparkSpecBase {
     // the stored index answers the novelty probe over everything ingested
     val probe = Dedup.incrementalDupGramFraction(
       Seq((10L, "a b c q")).toDF("doc_id", "text"),
-      Dedup.gramFreqIndexRead(spark, index, None, n = 2),
+      Dedup.gramFreq(2).read(spark, index),
       "doc_id", "text", n = 2)
       .select("doc_id", "n_grams", "n_seen", "seen_frac")
       .as[(Long, Long, Long, Double)].collect()
@@ -998,7 +997,7 @@ class StreamingSpec extends SparkSpecBase {
         spark, corpus, index, "doc_id", "text", ckp, n = 2)
         .awaitTermination()
     }
-    def counts() = Dedup.gramFreqIndexRead(spark, index, None, n = 2)
+    def counts() = Dedup.gramFreq(2).read(spark, index)
       .as[(String, Long)].collect().toMap
     def truth(rows: Seq[(Long, String)]) = Dedup.gramFreqIndex(
       rows.toDF("doc_id", "text"), "doc_id", "text", n = 2)
@@ -1024,7 +1023,7 @@ class StreamingSpec extends SparkSpecBase {
     // the replay-idempotency hook refuses the folded epoch loudly: its
     // partial is merged into the base and can no longer be subtracted
     val e = intercept[IllegalArgumentException] {
-      Dedup.gramFreqIndexRead(spark, index, Some(replayed), n = 2).collect()
+      Dedup.gramFreq(2).read(spark, index, Some(replayed)).collect()
     }
     assert(e.getMessage.contains("already compacted"), e.getMessage)
     // an epoch landing AFTER the compaction snapshot is neither folded
@@ -1059,7 +1058,7 @@ class StreamingSpec extends SparkSpecBase {
     }
     deliver("b1", batch1); drain()
     deliver("b2", batch2); drain()
-    val stored = LmFilter.lmIndexRead(spark, index, 4096, 32768)
+    val stored = LmFilter.lm(4096, 32768).read(spark, index)
       .as[(Int, Long, Long)].collect().toSet
     val direct = LmFilter.lmIndex(
       (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text")
@@ -1069,7 +1068,7 @@ class StreamingSpec extends SparkSpecBase {
     // the stored model scores a candidate identically to inline train
     val cand = Seq((10L, "a b c q")).toDF("doc_id", "text")
     val viaStore = LmFilter.lmPerplexity(cand, "doc_id", "text",
-      LmFilter.lmIndexRead(spark, index, 4096, 32768))
+      LmFilter.lm(4096, 32768).read(spark, index))
       .as[(Long, Long, Double, Double)].collect()
     val inline = LmFilter.lmPerplexity(cand, "doc_id", "text",
       LmFilter.lmIndex((batch1 ++ batch2).toDF("doc_id", "text"),
@@ -1118,10 +1117,10 @@ class StreamingSpec extends SparkSpecBase {
     def rebuiltKeptIds() = Dedup.repairSurvivors(
       spark.read.parquet(corpus).select("doc_id"),
       Dedup.connectedComponents(
-        Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
+        Dedup.certLedger("jaccard", 0.5).read(spark, ledger)
           .select(col("id_a"), col("id_b"))), "doc_id")
       .as[Long].collect().toSet
-    def ledgerPairs() = Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
+    def ledgerPairs() = Dedup.certLedger("jaccard", 0.5).read(spark, ledger)
       .as[(Long, Long, Double)].collect().toSet
     def fullPairs(rows: Seq[(Long, String)]) =
       Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id", "text",
@@ -1527,15 +1526,14 @@ class StreamingSpec extends SparkSpecBase {
     // refusal — the sink then runs and the induction holds
     Dedup.certIndexWrite(rows.toDF("doc_id", "text"), "doc_id", "text", index,
       Dedup.Jaccard(0.5, shingleK = 1))
-    Dedup.certLedgerWrite(Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id",
-      "text", Dedup.Jaccard(0.5, shingleK = 1)), ledger,
-      "jaccard", 0.5)
+    Dedup.certLedger("jaccard", 0.5).write(Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id",
+      "text", Dedup.Jaccard(0.5, shingleK = 1)), ledger)
     Streaming.certIngestSink(
       Streaming.fileStream(spark, schema, s"$src/b*"),
       spark, corpus, ledger, index, "doc_id", "text",
       Files.createTempDirectory("graft-certref-ckp2").toString,
       threshold = 0.5).awaitTermination()
-    val pairs = Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
+    val pairs = Dedup.certLedger("jaccard", 0.5).read(spark, ledger)
       .as[(Long, Long, Double)].collect().toSet
     // bootstrap pair (1,2)@1.0 + stream re-ingestions vs the standing
     // corpus: the ledger equals the full exact join over corpus ∪ batch
@@ -1569,7 +1567,7 @@ class StreamingSpec extends SparkSpecBase {
       threshold = 0.5).awaitTermination()
     // the unindexable standing docs contribute nothing; the ledger is
     // exactly the batch's own exact join
-    assert(Dedup.certLedgerRead(spark, ledger, "jaccard", 0.5)
+    assert(Dedup.certLedger("jaccard", 0.5).read(spark, ledger)
       .as[(Long, Long, Double)].collect().toSet ===
       Dedup.exactJoin(rows.toDF("doc_id", "text"), "doc_id", "text",
         Dedup.Jaccard(0.5, shingleK = 1))
@@ -1590,7 +1588,7 @@ class StreamingSpec extends SparkSpecBase {
       spark, vcorpus, vledger, vindex, "vec_id", "embedding",
       Files.createTempDirectory("graft-certtol-vckp").toString,
       threshold = 0.9).awaitTermination()
-    assert(Dedup.certLedgerRead(spark, vledger, "cosine", 0.9)
+    assert(Dedup.certLedger("cosine", 0.9).read(spark, vledger)
       .as[(Long, Long, Double)].collect().toSet ===
       Dedup.exactJoin(vrows.toDF("vec_id", "embedding"), "vec_id", "embedding",
         Dedup.Cosine(0.9))
@@ -1639,7 +1637,7 @@ class StreamingSpec extends SparkSpecBase {
     val rebuilt = Dedup.repairSurvivors(
       spark.read.parquet(corpus).select("vec_id"),
       Dedup.connectedComponents(
-        Dedup.certLedgerRead(spark, ledger, "cosine", 0.99)
+        Dedup.certLedger("cosine", 0.99).read(spark, ledger)
           .select(col("id_a"), col("id_b"))), "vec_id")
       .as[Long].collect().toSet
     assert(keptIds === rebuilt, s"store $keptIds vs rebuilt $rebuilt")
@@ -1670,9 +1668,34 @@ class StreamingSpec extends SparkSpecBase {
     drain()
     assert(spark.read.parquet(corpus).count() === 5L)
     // the one bandable newcomer still certifies against the corpus
-    assert(Dedup.certLedgerRead(spark, ledger, "cosine", 0.9)
+    assert(Dedup.certLedger("cosine", 0.9).read(spark, ledger)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet ===
       Set((1L, 10L)))
+  }
+
+  test("certVecIngestSink: a foreign flat file under the index root refuses at activation, before any write") {
+    // the cosine index's manifest is frozen from the first batch, but
+    // its store is declared from activation on: a flat parquet table
+    // under one of its substores is caught by the epoch-layout check
+    val src = Files.createTempDirectory("graft-vf-src").toString
+    val corpus = Files.createTempDirectory("graft-vf-c").toString + "/c"
+    val ledger = Files.createTempDirectory("graft-vf-l").toString + "/l"
+    val index = Files.createTempDirectory("graft-vf-i").toString + "/i"
+    val ckp = Files.createTempDirectory("graft-vf-ckp").toString
+    Seq((1L, Array(1.0f, 0.0f, 0.0f)), (2L, Array(0.0f, 1.0f, 0.0f)))
+      .toDF("vec_id", "embedding").write.parquet(s"$src/b1")
+    Seq((9L, 0L, 0L)).toDF("id", "b0", "b1").write.parquet(s"$index/bands")
+    val e = intercept[IllegalArgumentException] {
+      Streaming.certVecIngestSink(
+        Streaming.fileStream(spark, spark.read.parquet(s"$src/b1").schema,
+          s"$src/*"),
+        spark, corpus, ledger, index, "vec_id", "embedding", ckp,
+        threshold = 0.9)
+    }
+    assert(e.getMessage.contains("outside the epoch layout"), e.getMessage)
+    assert(e.getMessage.contains(s"$index/bands"), e.getMessage)
+    assert(!new java.io.File(corpus).exists() && !new java.io.File(ledger).exists(),
+      "the sink wrote before refusing")
   }
 
   test("streaming SEMANTIC certification: cosine ledger ≡ full exact join after every activation, frozen first-batch pivots, compaction-safe") {
@@ -1710,10 +1733,10 @@ class StreamingSpec extends SparkSpecBase {
     def rebuiltKeptIds() = Dedup.repairSurvivors(
       spark.read.parquet(corpus).select("vec_id"),
       Dedup.connectedComponents(
-        Dedup.certLedgerRead(spark, ledger, "cosine", 0.9)
+        Dedup.certLedger("cosine", 0.9).read(spark, ledger)
           .select(col("id_a"), col("id_b"))), "vec_id")
       .as[Long].collect().toSet
-    def ledgerPairs() = Dedup.certLedgerRead(spark, ledger, "cosine", 0.9)
+    def ledgerPairs() = Dedup.certLedger("cosine", 0.9).read(spark, ledger)
       .as[(Long, Long, Double)].collect().toSet
     def fullPairs(rows: Seq[(Long, Array[Float])]) =
       Dedup.exactJoin(rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
@@ -1786,8 +1809,7 @@ class StreamingSpec extends SparkSpecBase {
     val ref = (0 until 20).map(i =>
       (i.toLong, "alpha beta gamma delta alpha beta gamma delta"))
       .toDF("doc_id", "text")
-    LmFilter.lmIndexWrite(
-      LmFilter.lmIndex(ref, "doc_id", "text"), lmStore, 4096, 32768)
+    LmFilter.lm(4096, 32768).write(LmFilter.lmIndex(ref, "doc_id", "text"), lmStore)
     // frozen artifact 2: per-source ppl cuts from a calibration slice
     // (6 fluent + 3 gibberish per source → the tail third is gibberish)
     val calib = (for {
@@ -1801,7 +1823,7 @@ class StreamingSpec extends SparkSpecBase {
     }).toDF("doc_id", "source", "text")
     val calibScored = calib.join(
       LmFilter.lmPerplexity(calib, "doc_id", "text",
-        LmFilter.lmIndexRead(spark, lmStore, 4096, 32768))
+        LmFilter.lm(4096, 32768).read(spark, lmStore))
         .select("doc_id", "ppl"), Seq("doc_id"))
     Quality.qualityCutsWrite(spark,
       cutsStore, Quality.qualityCuts(calibScored, "ppl", Seq("source")),
@@ -1832,7 +1854,7 @@ class StreamingSpec extends SparkSpecBase {
         batch.toDF("doc_id", "source", "text").join(
           LmFilter.lmPerplexity(batch.toDF("doc_id", "source", "text"),
             "doc_id", "text",
-            LmFilter.lmIndexRead(spark, lmStore, 4096, 32768))
+            LmFilter.lm(4096, 32768).read(spark, lmStore))
             .select("doc_id", "ppl"), Seq("doc_id")),
         "ppl", Seq("source"),
         Quality.qualityCutsRead(spark, cutsStore, "ppl", Seq("source")),
