@@ -144,9 +144,9 @@ class StoreFamilySpec extends SparkSpecBase {
         def islands(intervals: DataFrame) = IntervalExpand.mergeIntervals(
           without(intervals, "owner", drop).select("k", "s", "e"), "k",
           col("s"), col("e"))
-        IntervalExpand.islands("k").write(islands(intervalsA), root)
-        IntervalExpand.islands("k").append(spark, root, islands(intervalsB),
-          "day-2")
+        val store = IntervalExpand.islands("k")
+        store.write(islands(intervalsA), root)
+        store.append(spark, root, islands(intervalsB), "day-2")
       },
       Some(() => IntervalExpand.mergeIntervals(without(intervalsA
         .union(intervalsB), "owner", Set(2L, 10L)).select("k", "s", "e"), "k",
