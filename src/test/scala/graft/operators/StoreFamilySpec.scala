@@ -434,7 +434,7 @@ class StoreFamilySpec extends SparkSpecBase {
       """\s*\n\s*IndexMeta\.write\([^\n]*?,\s*\1,""").r
     val flatBootstrapName = ("""bootstrapName\s*=\s*"(?:(?:lineFirstOcc|boilerplate|""" +
       """gramFreq|hll|kmv|cms|sampleSketch|dsir|capCount|digest|islands|lm)""" +
-      """IndexWrite|certLedgerWrite|ccLabelsWrite)"""").r
+      """IndexWrite|(?:certLedger|ccLabels)Write)"""").r
     val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val files = try {
       import scala.jdk.CollectionConverters._
