@@ -17,7 +17,8 @@ import graft.SparkSpecBase
   * spread still fails. The exact-certification queries (q215, q224,
   * q227, q228) and the flat-store queries (q143, q146, q149, q159,
   * q163, q171, q172, q176, q178, q207, q209) carry the larger of two
-  * fresh-JVM counts, no headroom.
+  * fresh-JVM counts, no headroom; so do the band, bm25 and IVF store
+  * queries (q93, q97, q98, q124, q151, q155, q156, q243, q244, q245).
   * Each test reports its count, so a budget can be re-measured from
   * the test output. */
 class EraseJobBudgetSpec extends SparkSpecBase {
@@ -45,6 +46,16 @@ class EraseJobBudgetSpec extends SparkSpecBase {
     "q178_store_time_travel" -> 20,
     "q207_gram_freq_store" -> 16,
     "q209_lm_store" -> 18,
+    "q93_incremental_lsh" -> 31,
+    "q97_incremental_simhash" -> 36,
+    "q98_incremental_srp" -> 36,
+    "q124_incremental_image_neardup" -> 31,
+    "q151_bm25_store" -> 28,
+    "q155_bm25_multi" -> 18,
+    "q156_hybrid_multi" -> 24,
+    "q243_ivf_recluster" -> 31,
+    "q244_ivfpq_recluster" -> 47,
+    "q245_ivf_cell_skew" -> 15,
     "q181_graph_census_store" -> 76,
     "q199_corpus_card" -> 78,
     "q230_cert_ledger" -> 57,
