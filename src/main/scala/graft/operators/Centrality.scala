@@ -327,7 +327,7 @@ object Centrality {
     * batch recomputes the identical partial and the epoch-scoped
     * dynamic overwrite rewrites it in place — at-least-once delivery
     * can never double-count a triangle. */
-  private[graft] def censusMeta: IndexMeta = IndexMeta(censusStore.name)
+  private[graft] def census: StoreFamily.Bound = censusStore.bind()
 
   /** Two substores: `census` partials sum (compacted first, and the
     * stats compaction reports) and `edges` rows are disjoint across
@@ -355,11 +355,8 @@ object Centrality {
     // writes to different substores and overlap (guide §2.6)
     val canon = org.apache.spark.sql.graftbridge.Bridge.freshLeaf(
       canonUndirected(edges).localCheckpoint(true))
-    try Par.concurrently(
-      () => EpochIndex.bootstrap(canon, s"$path/edges"),
-      () => EpochIndex.bootstrap(censusOf(canon), s"$path/census"))
+    try census.write(Map("edges" -> canon, "census" -> censusOf(canon)), path)
     finally org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(canon)
-    IndexMeta.write(edges.sparkSession, path, censusMeta)
   }
 
   /** Append one edge batch: dedup against the store, count only the
@@ -368,9 +365,7 @@ object Centrality {
   def triangleCensusAppend(spark: org.apache.spark.sql.SparkSession,
                            path: String, batch: DataFrame,
                            epoch: String): Unit = {
-    IndexMeta.check(spark, path, censusMeta)
-    val stored = EpochIndex.read(spark, s"$path/edges",
-      excludeEpoch = Some(epoch), bootstrapName = "triangleCensusWrite")
+    val stored = census.read(spark, path, "edges", Some(epoch))
       .select(col("a"), col("b"))
     // checkpoint: the fresh set feeds BOTH the delta count and the
     // edges append — one computation, and the append cannot race the
@@ -384,19 +379,13 @@ object Centrality {
         fresh.select(col("a").as("src"), col("b").as("dst")))
         .select(col("n_new_edges").as("n_edges"),
           col("new_triangles").as("n_triangles"))
-      EpochIndex.append(stats, s"$path/census", epoch)
-      EpochIndex.append(fresh, s"$path/edges", epoch)
+      census.append(spark, path, Map("census" -> stats, "edges" -> fresh), epoch)
     } finally org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(fresh)
   }
 
   /** The census: one row `(n_edges, n_triangles)` over everything
     * ever appended — summed partials, never a recount. */
   def triangleCensusRead(spark: org.apache.spark.sql.SparkSession,
-                         path: String): DataFrame = {
-    IndexMeta.check(spark, path, censusMeta)
-    EpochIndex.read(spark, s"$path/census",
-      bootstrapName = "triangleCensusWrite")
-      .agg(coalesce(sum(col("n_edges")), lit(0L)).as("n_edges"),
-        coalesce(sum(col("n_triangles")), lit(0L)).as("n_triangles"))
-  }
+                         path: String): DataFrame =
+    census.read(spark, path, "census")
 }

@@ -1070,13 +1070,13 @@ object Dedup {
   private[graft] def bandBucket(buckets: Int): Column =
     pmod(xxhash64(col("band"), col("bh")), lit(buckets.toLong)).cast("int")
 
-  /** The stored manifest carries the bucket count alongside the
-    * family's banding geometry — a probe at a different bucketing
-    * refuses instead of silently scanning partitions that cannot
-    * match its filter expression. */
-  private[graft] def bandMetaWithBuckets(meta: IndexMeta,
-                                         buckets: Int): IndexMeta =
-    IndexMeta(meta.family, meta.params + ("bb_buckets" -> buckets.toString))
+  /** The band store of `family` bucketed `buckets` ways: its manifest
+    * carries the bucket count alongside the family's banding geometry
+    * — a probe at a different bucketing refuses instead of silently
+    * scanning partitions that cannot match its filter expression. */
+  private[graft] def bands(family: LshFamily, buckets: Int): StoreFamily.Bound =
+    StoreFamily.Bound(bandStore, family.meta.copy(
+      params = family.meta.params + ("bb_buckets" -> buckets.toString)))
 
   /** Persisted, epoch-structured store of a family's [[bandIndex]]:
     * band-key rows are DISJOINT across append-only batches, so the
@@ -1107,36 +1107,24 @@ object Dedup {
 
   def bandIndexWrite(corpus: DataFrame, idCol: String, valueCol: String,
                      path: String, family: LshFamily,
-                     buckets: Int = 64): Unit = {
-    EpochIndex.bootstrap(
-      bandBucketed(bandIndex(corpus, idCol, valueCol, family), buckets),
-      path, innerPartCols = Seq("bb"))
-    IndexMeta.write(corpus.sparkSession, path,
-      bandMetaWithBuckets(family.meta, buckets))
-  }
+                     buckets: Int = 64): Unit =
+    bands(family, buckets).write(
+      bandBucketed(bandIndex(corpus, idCol, valueCol, family), buckets), path)
 
   /** Append one batch's band rows as a new epoch (idempotent per epoch
     * name; manifest-checked). */
   def bandIndexAppend(spark: org.apache.spark.sql.SparkSession,
                       path: String, batch: DataFrame, idCol: String,
                       valueCol: String, epoch: String, family: LshFamily,
-                      buckets: Int = 64): Unit = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
-    EpochIndex.append(
-      bandBucketed(bandIndex(batch, idCol, valueCol, family), buckets),
-      path, epoch, innerPartCols = Seq("bb"))
-  }
+                      buckets: Int = 64): Unit =
+    bands(family, buckets).append(spark, path,
+      bandBucketed(bandIndex(batch, idCol, valueCol, family), buckets), epoch)
 
   def bandIndexRead(spark: org.apache.spark.sql.SparkSession,
                     path: String, family: LshFamily,
                     excludeEpoch: Option[String] = None,
-                    buckets: Int = 64): DataFrame = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
-    EpochIndex.read(spark, path, excludeEpoch,
-      innerPartCols = Seq("bb"),
-      bootstrapName = "bandIndexWrite")
-      .drop(EpochIndex.EpochCol).drop("bb")
-  }
+                    buckets: Int = 64): DataFrame =
+    bands(family, buckets).read(spark, path, excludeEpoch = excludeEpoch).drop("bb")
 
   /** Partition-pruned probe read: only the buckets the batch's own
     * band keys hash into are scanned — `batchBands` carries (band,
@@ -1151,21 +1139,18 @@ object Dedup {
                                  batchBands: DataFrame,
                                  excludeEpoch: Option[String],
                                  buckets: Int): DataFrame = {
-    IndexMeta.check(spark, path, bandMetaWithBuckets(family.meta, buckets))
+    // observed = false: the probe's whole value is the bucket-pruned
+    // scan, and a CollectMetrics barrier above the store read would
+    // block the bb filter from reaching partition pruning (the
+    // ivfIndexRead precedent — see EpochIndex.read's scaladoc)
+    val stored = bands(family, buckets).read(spark, path,
+      excludeEpoch = excludeEpoch, observed = false)
     val bbs = BoundedRead.boundedDriverRead(
       batchBands.select(bandBucket(buckets).as("bb")).distinct(),
       buckets, "bandIndexProbeRead buckets",
       s"distinct pmod values are bounded by buckets = $buckets")
       .map(_.getInt(0))
-    // observed = false: the probe's whole value is the bucket-pruned
-    // scan, and a CollectMetrics barrier above the store read would
-    // block the bb filter from reaching partition pruning (the
-    // ivfIndexRead precedent — see EpochIndex.read's scaladoc)
-    EpochIndex.read(spark, path, excludeEpoch,
-      innerPartCols = Seq("bb"),
-      bootstrapName = "bandIndexWrite", observed = false)
-      .filter(col("bb").isin(bbs: _*))
-      .drop(EpochIndex.EpochCol).drop("bb")
+    stored.filter(col("bb").isin(bbs: _*)).drop("bb")
   }
 
   /** Every `<kind>_bands` family shares the `bb`-bucketed layout and
@@ -1626,6 +1611,9 @@ object Dedup {
     private[operators] def blocking(corpus: DataFrame, idCol: String,
                                     valueCol: String, who: String): Pivots
     private[graft] def meta(geo: Pivots): IndexMeta
+    /** The store bound to the manifest of geometry `geo`. */
+    private[operators] def bound(geo: Pivots): StoreFamily.Bound =
+      StoreFamily.Bound(store, meta(geo))
     /** The manifest a sink writes at activation; None when the geometry
       * derives from data (cosine pivots freeze from the first batch). */
     private[graft] def fixedMeta: Option[IndexMeta]
@@ -2361,14 +2349,9 @@ object Dedup {
     * [[CertMetric.partCap]] values by construction), so a small batch
     * touches only its own partitions' files. */
   private final class StoreSource(spark: SparkSession, path: String,
-                                  m: CertMetric, excludeEpoch: Option[String])
+                                  m: CertMetric, store: StoreFamily.Bound,
+                                  excludeEpoch: Option[String])
       extends Pins with CertSource {
-    def whole(sub: String): DataFrame = {
-      val s = certSub(m, sub)
-      EpochIndex.read(spark, s.path(path), excludeEpoch,
-        innerPartCols = s.innerPartCols, bootstrapName = "certIndexWrite")
-        .drop(EpochIndex.EpochCol)
-    }
     def read(sub: String, keys: DataFrame): DataFrame = {
       val s = certSub(m, sub)
       // one long per partition: (b0, b1) encodes b0·2²⁰ + b1 (bands ≪
@@ -2382,43 +2365,20 @@ object Dedup {
         .map(r => Long.box(r.getLong(0)))
       // observed = false: a CollectMetrics barrier would block the
       // partition filter (EpochIndex.read's scaladoc)
-      EpochIndex.read(spark, s.path(path), excludeEpoch,
-        innerPartCols = s.innerPartCols, bootstrapName = "certIndexWrite",
-        observed = false)
-        .drop(EpochIndex.EpochCol)
+      store.read(spark, path, sub, excludeEpoch, observed = false)
         .filter(part.isin(values.toIndexedSeq: _*))
     }
   }
 
-  /** Refuse loudly when a certification root's substores disagree on
-    * which epochs they hold — the torn-append shape (a crash between
-    * substore writes) that would otherwise mis-count guards or
-    * silently drop verify rows. Re-running the append for the missing
-    * epoch repairs it (appends are idempotent per epoch name). */
-  private def requireAlignedCertEpochs(spark: SparkSession, root: String,
-                                       store: StoreFamily): Unit = {
-    val sets = store.substores.map(s => s.subdir ->
-      EpochIndex.committedEpochNames(spark, s.path(root), s.innerPartCols).toSet)
-    require(sets.map(_._2).distinct.size == 1,
-      s"certification store at $root has mis-aligned substores: " +
-        sets.map { case (s, e) =>
-          s"$s=${e.toSeq.sorted.mkString("[", ",", "]")}" }
-          .mkString("; ") +
-        " — a torn append left index/stats partials inconsistent; " +
-        "re-run the append for the missing epoch (idempotent) or " +
-        "remove the torn directory")
-  }
-
-  /** One slice's substore frames in the store's declaration order,
-    * their shared checkpoints released once `f` has written them. */
+  /** One slice's substore frames laid out, keyed by subdir, their
+    * shared checkpoints released once `f` has written them. */
   private def withParts(m: CertMetric, df: DataFrame, idCol: String,
                         valueCol: String, geo: Pivots)(
-      f: Seq[(StoreFamily.Substore, DataFrame)] => Unit): Unit = {
+      f: Map[String, DataFrame] => Unit): Unit = {
     val pins = new Pins
-    try {
-      val parts = m.parts(df, idCol, valueCol, geo, pins.pin)
-      f(m.store.substores.map(s => s -> m.laidOut(s.subdir, parts(s.subdir))))
-    } finally pins.release()
+    try f(m.parts(df, idCol, valueCol, geo, pins.pin).map { case (sub, part) =>
+      sub -> m.laidOut(sub, part) })
+    finally pins.release()
   }
 
   /** Bootstrap a persisted certification index — the store that makes
@@ -2437,11 +2397,7 @@ object Dedup {
   def certIndexWrite(corpus: DataFrame, idCol: String, valueCol: String,
                      path: String, metric: CertMetric): Unit = {
     val geo = metric.blocking(corpus, idCol, valueCol, "certIndexWrite")
-    withParts(metric, corpus, idCol, valueCol, geo)(parts =>
-      Par.concurrently(parts.map { case (s, df) => () =>
-        EpochIndex.bootstrap(df, s.path(path), innerPartCols = s.innerPartCols)
-      }: _*))
-    IndexMeta.write(corpus.sparkSession, path, metric.meta(geo))
+    withParts(metric, corpus, idCol, valueCol, geo)(metric.bound(geo).write(_, path))
   }
 
   /** Append one certified batch's index rows as one epoch, under the
@@ -2453,12 +2409,11 @@ object Dedup {
     * append, so the store always mirrors everything certified. */
   def certIndexAppend(spark: SparkSession, path: String, batch: DataFrame,
                       idCol: String, valueCol: String, epoch: String,
-                      metric: CertMetric): Unit =
-    withParts(metric, batch, idCol, valueCol, metric.frozen(spark, path))(
-      _.foreach { case (s, df) =>
-        EpochIndex.append(df, s.path(path), epoch,
-          innerPartCols = s.innerPartCols)
-      })
+                      metric: CertMetric): Unit = {
+    val geo = metric.frozen(spark, path)
+    withParts(metric, batch, idCol, valueCol, geo)(
+      metric.bound(geo).append(spark, path, _, epoch))
+  }
 
   /** Freeze a certification manifest WITHOUT a bootstrap base — the
     * streaming sink's first-batch hook: a cosine store born under
@@ -2515,14 +2470,15 @@ object Dedup {
       valueCol: String, metric: CertMetric,
       excludeEpoch: Option[String] = None): (DataFrame, () => Unit) = {
     val geo = metric.frozen(spark, path)
-    requireAlignedCertEpochs(spark, path, metric.store)
-    val src = new StoreSource(spark, path, metric, excludeEpoch)
-    val k = metric.key.map(col)
+    StoreFamily.requireAlignedCertEpochs(spark, path, metric.store)
+    val store = metric.bound(geo)
+    val src = new StoreSource(spark, path, metric, store, excludeEpoch)
+    // the stats fold sums each key's partials: one row per key
     BoundedRead.boundedDriverRead(
-      src.whole(CertStats).groupBy(k: _*).agg(sum(col("cnt")).as("_n"))
-        .agg(max(struct(col("_n") +: k: _*)).as("_hot"))
+      store.read(spark, path, CertStats, excludeEpoch)
+        .agg(max(struct(col("cnt") +: metric.key.map(col): _*)).as("_hot"))
         .select(guard(metric, "corpus ", metric.key.map(c => col(s"_hot.$c")),
-          col("_hot._n"))),
+          col("_hot.cnt"))),
       1, "certIndexProbe hottest key", "a global aggregate emits exactly one row")
     (metric.cross(batch, idCol, valueCol, geo, src), () => src.release())
   }

@@ -119,11 +119,10 @@ object EpochIndex {
       .map(_.getPath.getName).toSet)
   }
 
-  /** Mark one epoch committed — the LAST write of an append. Also the
-    * operator's repair hook: marking a verified torn epoch makes its
-    * rows visible without rewriting them. */
-  private[graft] def markCommitted(spark: SparkSession, root: String,
-                                   epoch: String): Unit =
+  /** Mark one epoch committed — the LAST write of a bootstrap or an
+    * append. */
+  private def markCommitted(spark: SparkSession, root: String,
+                            epoch: String): Unit =
     writeTextFile(fsOf(spark, new Path(root)),
       new Path(new Path(root, CommitsDir), epoch), "")
 

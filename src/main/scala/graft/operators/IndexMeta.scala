@@ -132,16 +132,6 @@ object IndexMeta {
     }
   }
 
-  /** Family gate for entry points that take no build parameters to
-    * check (the IVF reads and erasers): reading or rewriting another
-    * family's store as this one silently corrupts it. Metaless stores
-    * (written by hand, pre-manifest) pass. */
-  def requireFamily(spark: SparkSession, root: String,
-                    family: String): Unit =
-    read(spark, root).foreach(m => require(m.family == family,
-      s"refusing $root: its manifest says family " +
-        s"'${m.family}', this entry point is for '$family'"))
-
   /** Refuse loudly unless the stored manifest matches what the caller
     * is about to probe with. A MISSING manifest also refuses: every
     * writer in this engine records one, so absence means the path is

@@ -284,7 +284,7 @@ object Maintenance {
     val plan = planErase(spark, root, request)
       .fold(msg => throw new IllegalArgumentException(s"refusing to erase: $msg"),
         identity)
-    plan.family.checkErase(spark, root, plan.input.map(_.build))
+    plan.family.checkErase(spark, root, plan.meta, plan.input.map(_.build))
     plan.run(request.victims)
   }
 
@@ -319,7 +319,7 @@ object Maintenance {
     require(refusals.isEmpty, s"eraseAll at $treeRoot refused before any " +
       s"rewrite — ${refusals.mkString("; ")}")
     val plans = planned.collect { case Right(p) => p }
-    plans.foreach(p => p.family.checkErase(spark, p.root, p.input.map(_.build)))
+    plans.foreach(p => p.family.checkErase(spark, p.root, p.meta, p.input.map(_.build)))
     val victims = ids.toDF("id")
     plans.sortBy(_.family.erasesWithInput.map(_.erase) match {
       case None => 0

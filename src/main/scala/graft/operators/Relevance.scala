@@ -215,9 +215,10 @@ object Relevance {
 
   // --------------- persisted postings store (the retrieval index shape)
 
-  /** Build the BM25 postings partials for one document set: the
-    * inverted index rows `(term, doc_id, tf, dl)` plus a ONE-ROW
-    * corpus-statistics partial `(n_docs, sumdl)`.
+  /** Build the BM25 partials for one document set, keyed by
+    * [[bm25Store]] substore: the inverted index rows
+    * `postings = (term, doc_id, tf, dl)` plus a ONE-ROW
+    * corpus-statistics partial `stats = (n_docs, sumdl)`.
     *
     * The document length rides ON every posting row (denormalized —
     * one extra long per posting) so a probe never joins a doc-length
@@ -234,7 +235,7 @@ object Relevance {
     * reads sum them — #epochs rows, never a corpus-sized scan.
     */
   def bm25Postings(docs: DataFrame, idCol: String,
-                   textCol: String): (DataFrame, DataFrame) = {
+                   textCol: String): Map[String, DataFrame] = {
     // NULL / uncastable doc ids refuse loudly at execution (the Diff
     // NULL-key idiom): a silently-null doc_id would land unanswerable
     // posting rows that still count toward n_docs/sumdl — permanent,
@@ -259,11 +260,17 @@ object Relevance {
       .sortWithinPartitions("term", "doc_id")
     val stats = base.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
-    (postings, stats)
+    Map("postings" -> postings, "stats" -> stats)
   }
 
-  private[graft] def postingsMeta(idCol: String, textCol: String): IndexMeta =
-    IndexMeta(bm25Store.name, "cols" -> s"$idCol,$textCol")
+  /** The bm25 store over documents keyed `idCol` with text `textCol`. */
+  def bm25(idCol: String, textCol: String): StoreFamily.Bound =
+    bm25Store.bind("cols" -> s"$idCol,$textCol")
+
+  /** The folded `stats` row as the probes' double N and Σdl. */
+  private def bm25CorpusStats(stats: DataFrame): DataFrame =
+    stats.select(col("n_docs").cast("double").as("n"),
+      col("sumdl").cast("double").as("sumdl"))
 
   /** Two substores: `stats` partials sum into one row (compacted
     * first, and the stats compaction reports); `postings` rows are
@@ -300,15 +307,15 @@ object Relevance {
     * Zero-token victims have no postings by construction and stay the
     * caller's ingest-contract responsibility. */
   private def bm25Posted(spark: org.apache.spark.sql.SparkSession,
-                         path: String, partial: DataFrame): Unit = {
+                         store: StoreFamily.Bound, path: String,
+                         partial: DataFrame): Unit = {
     require(partial.columns.contains("doc_id"), s"bm25 erase at $path: " +
       "the statistics partial must be per document (Relevance.bm25DocStats)")
     val tokenized = partial.filter(col("sumdl") > 0L).select("doc_id").distinct()
     // semi-join BEFORE distinct: the scan over postings is unavoidable
     // (ids are not the sort key), but only victim-matching rows should
     // reach a shuffle
-    val present = EpochIndex.read(spark, s"$path/postings",
-        bootstrapName = "bm25IndexWrite", observed = false)
+    val present = store.read(spark, path, "postings", observed = false)
       .select("doc_id")
       .join(broadcast(tokenized), Seq("doc_id"), "left_semi")
       .distinct()
@@ -330,24 +337,17 @@ object Relevance {
     * line dedup, IVF): a document id lands in EXACTLY ONE epoch;
     * re-ingesting a doc double-counts it in the statistics. */
   def bm25IndexWrite(docs: DataFrame, path: String, idCol: String,
-                     textCol: String): Unit = {
-    val (postings, stats) = bm25Postings(docs, idCol, textCol)
-    EpochIndex.bootstrap(postings, s"$path/postings")
-    EpochIndex.bootstrap(stats, s"$path/stats")
-    IndexMeta.write(docs.sparkSession, path, postingsMeta(idCol, textCol))
-  }
+                     textCol: String): Unit =
+    bm25(idCol, textCol).write(bm25Postings(docs, idCol, textCol), path)
 
   /** Append one batch's postings + statistics partial as a new epoch
     * (idempotent per epoch name; manifest-checked). Only the batch is
     * tokenized. */
   def bm25IndexAppend(spark: org.apache.spark.sql.SparkSession,
                       path: String, batch: DataFrame, idCol: String,
-                      textCol: String, epoch: String): Unit = {
-    IndexMeta.check(spark, path, postingsMeta(idCol, textCol))
-    val (postings, stats) = bm25Postings(batch, idCol, textCol)
-    EpochIndex.append(postings, s"$path/postings", epoch)
-    EpochIndex.append(stats, s"$path/stats", epoch)
-  }
+                      textCol: String, epoch: String): Unit =
+    bm25(idCol, textCol).append(spark, path,
+      bm25Postings(batch, idCol, textCol), epoch)
 
   /** BM25 top-k from the STORED index — bit-identical to
     * [[bm25TopDocs]] over the union of the indexed document sets,
@@ -375,21 +375,15 @@ object Relevance {
                      excludeEpoch: Option[String] = None): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms.distinct.size == queryTerms.size,
       "query terms must be non-empty and distinct")
-    IndexMeta.check(spark, path, postingsMeta(idCol, textCol))
+    val store = bm25(idCol, textCol)
     // observed = false: the term predicate must REACH the postings
     // scan (file/row-group pruning over the term-sorted layout); a
     // CollectMetrics barrier would force a full-store read — see
     // EpochIndex.read's scaladoc. The stats read below stays observed
     // (it aggregates everything by design — that IS its metric).
-    val post = EpochIndex.read(spark, s"$path/postings", excludeEpoch,
-      bootstrapName = "bm25IndexWrite", observed = false)
-      .drop(EpochIndex.EpochCol)
+    val post = store.read(spark, path, "postings", excludeEpoch, observed = false)
       .filter(col("term").isin(queryTerms: _*))
-    val statPartials = EpochIndex.read(spark, s"$path/stats", excludeEpoch,
-      bootstrapName = "bm25IndexWrite")
-    val corpusStats = statPartials
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).cast("double").as("n"),
-        coalesce(sum(col("sumdl")), lit(0L)).cast("double").as("sumdl"))
+    val corpusStats = bm25CorpusStats(store.read(spark, path, "stats", excludeEpoch))
     val dfCols = queryTerms.map(t => coalesce(
       sum(when(col("term") === t, 1L).otherwise(0L)), lit(0L))
       .cast("double").as(s"df_$t"))
@@ -454,19 +448,13 @@ object Relevance {
                           queries: DataFrame, k: Int = 50,
                           k1: Double = 1.2, b: Double = 0.75,
                           roundTo: Int = 6): DataFrame = {
-    IndexMeta.check(spark, path, postingsMeta(idCol, textCol))
+    val store = bm25(idCol, textCol)
     val qterms = queries.select(col("query_id"),
       explode(col("terms")).as("term"))
-    val post = EpochIndex.read(spark, s"$path/postings", None,
-      bootstrapName = "bm25IndexWrite", observed = false)
-      .drop(EpochIndex.EpochCol)
+    val post = store.read(spark, path, "postings", observed = false)
       .join(broadcast(qterms.select("term").distinct()), Seq("term"),
         "left_semi")
-    val statPartials = EpochIndex.read(spark, s"$path/stats", None,
-      bootstrapName = "bm25IndexWrite")
-    val corpusStats = statPartials
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).cast("double").as("n"),
-        coalesce(sum(col("sumdl")), lit(0L)).cast("double").as("sumdl"))
+    val corpusStats = bm25CorpusStats(store.read(spark, path, "stats"))
     val dfT = post.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
     val avgdl = col("sumdl") / col("n")

@@ -702,8 +702,9 @@ object Similarity {
   /** The id column an IVF-family manifest records first in `cols`. */
   private def manifestIdCol(param: String => String): Seq[String] =
     Seq(param("cols").split(",").head)
-  private[graft] def ivfMeta(idCol: String, vecCol: String): IndexMeta =
-    IndexMeta(ivfStore.name, "cols" -> s"$idCol,$vecCol")
+  /** The IVF store over vectors keyed `idCol` in `vecCol`. */
+  private[graft] def ivf(idCol: String, vecCol: String): StoreFamily.Bound =
+    ivfStore.bind("cols" -> s"$idCol,$vecCol")
 
   /** Write the index: `path/centroids` plain parquet, `path/assignments`
     * partitioned by `(cell, _epoch)` — the cell level turns every
@@ -715,11 +716,9 @@ object Similarity {
 
   def ivfIndexWrite(index: IvfIndex, path: String): Unit = {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    EpochIndex.bootstrap(index.assignments, s"$path/assignments",
-      innerPartCols = Seq("cell"))
     val cols = index.assignments.columns.filterNot(_ == "cell")
-    IndexMeta.write(index.assignments.sparkSession, path,
-      IndexMeta(ivfStore.name, "cols" -> cols.mkString(",")))
+    ivfStore.bind("cols" -> cols.mkString(","))
+      .write(Map("assignments" -> index.assignments), path)
   }
 
   def ivfIndexRead(spark: org.apache.spark.sql.SparkSession,
@@ -731,18 +730,15 @@ object Similarity {
     // columns, casts included. `_epoch` is a writer-side bookkeeping
     // column — readers never see it (the epoch-aware read also folds
     // in the compacted base, if the store has been compacted).
-    IndexMeta.requireFamily(spark, path, ivfStore.name)
+    val store = ivfStore.stored(spark, path)
     IvfIndex(spark.read.parquet(s"$path/centroids"),
       // observed = false: the probe's whole value is the cell-pruned
       // scan (dynamic partition pruning from the probe join), and a
       // CollectMetrics barrier would block that pruning — see
       // EpochIndex.read's scaladoc. SimilaritySpec pins ≤ nProbe×|q|
       // partitions read.
-      EpochIndex.read(spark, s"$path/assignments",
-        innerPartCols = Seq("cell"), bootstrapName = "ivfIndexWrite",
-        observed = false)
-        .withColumn("cell", col("cell").cast("long"))
-        .drop(EpochIndex.EpochCol))
+      store.read(spark, path, "assignments", observed = false)
+        .withColumn("cell", col("cell").cast("long")))
   }
 
   /** Cell-occupancy skew of a stored IVF index — the number that says
@@ -759,11 +755,9 @@ object Similarity {
     * map-side-combined aggregate over the assignments (id, cell)
     * columns — never the vectors. */
   def ivfCellSkew(spark: org.apache.spark.sql.SparkSession,
-                  path: String): DataFrame = {
-    IndexMeta.requireFamily(spark, path, ivfStore.name)
+                  path: String): DataFrame =
     Rolling.bucketSkew(ivfIndexRead(spark, path).assignments,
       Nil, col("cell"))
-  }
 
   /** [[ivfCellSkew]]'s IVF+PQ twin — same one-row occupancy summary,
     * read from the codes table's cell column (per-document, so the
@@ -773,12 +767,10 @@ object Similarity {
     * arm here: a maintenance job reads this diagnostic and schedules
     * the recluster with the corpus in hand. */
   def ivfPqCellSkew(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame = {
-    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
+                    path: String): DataFrame =
     Rolling.bucketSkew(
       ivfPqIndexRead(spark, path).codes
         .filter(col("sub") === 0), Nil, col("cell"))
-  }
 
   /** The skew TRIGGER: recluster iff [[ivfCellSkew]] says the store
     * needs it — the call a scheduled maintenance job makes, so the
@@ -852,18 +844,15 @@ object Similarity {
                    steps: Int = 2, k: Int = 0,
                    keepVersions: Int = 2): EpochIndex.CompactionStats = {
     require(steps >= 1, s"steps must be >= 1: $steps")
-    IndexMeta.requireFamily(spark, path, ivfStore.name)
-    val meta = IndexMeta.read(spark, path).getOrElse(sys.error(
-      s"no _GRAFT_META manifest at $path — not an IVF store"))
-    val cols = meta.params.getOrElse("cols", sys.error(
-      s"IVF manifest at $path records no cols")).split(",")
+    val store = ivfStore.stored(spark, path)
+    val cols = store.meta.param("cols", path).split(",")
     require(cols.length == 2,
       s"IVF manifest cols at $path is not 'id,vec': ${cols.mkString(",")}")
     val (idCol, vecCol) = (cols(0), cols(1))
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     val index = ivfIndexRead(spark, path)
     // the centroid table is k rows by construction — counting it is a
-    // bounded driver read, the maxCells contract
+    // bounded driver read, the MaxCells bound
     val kEff = if (k > 0) k else index.centroids.count().toInt
     require(kEff >= 1, s"ivfRecluster at $path: no centroids and no k")
     val vectors = index.assignments.select(col(idCol), col(vecCol))
@@ -871,10 +860,9 @@ object Similarity {
       pickCentroids(vectors, idCol, vecCol, kEff), idCol, vecCol, steps)
     try {
       val cents = refined.select(col("cell").as(idCol), col(vecCol))
-      val stats = EpochIndex.compact(spark, s"$path/assignments",
+      val stats = store.rewrite(spark, path, "assignments",
         p => assignCells(p.drop("cell"), cents, idCol, vecCol)
-          .select(p.columns.map(col).toIndexedSeq: _*),
-        innerPartCols = Seq("cell"), keepVersions = keepVersions)
+          .select(p.columns.map(col).toIndexedSeq: _*), keepVersions)
       refined.select(col("cell"), col(vecCol))
         .write.mode("overwrite").parquet(s"$path/centroids")
       stats
@@ -899,26 +887,22 @@ object Similarity {
   }
 
   /** Incremental append to a STORED index: assign only the new
-    * vectors against the stored centroids and append their rows to
-    * the cell-partitioned assignments table — the daily-batch write
-    * path (`dynamic partition append`: only the touched cell
-    * directories gain files; the corpus's existing files are never
-    * rewritten). Equivalent to [[ivfAppend]] + [[ivfIndexWrite]]
-    * without rewriting the corpus. */
+    * vectors against the stored centroids and land their rows as
+    * epoch `epochLabel` of the cell-partitioned assignments table —
+    * the daily-batch write path (only the touched cell directories
+    * gain files; the corpus's existing files are never rewritten).
+    * Equivalent to [[ivfAppend]] + [[ivfIndexWrite]] without
+    * rewriting the corpus, and idempotent per epoch label: a retry of
+    * the same label replaces its own rows (SimilaritySpec). */
   def ivfAppendWrite(spark: org.apache.spark.sql.SparkSession, path: String,
                      newVecs: DataFrame, idCol: String, vecCol: String,
-                     epochLabel: String = "append"): Unit = {
-    IndexMeta.check(spark, path, ivfMeta(idCol, vecCol))
-    val index = ivfIndexRead(spark, path)
-    val cents = index.centroids.select(col("cell").as(idCol), col(vecCol))
-    assignCells(newVecs, cents, idCol, vecCol)
-      .withColumn("_epoch", lit(epochLabel))
-      .write.mode("append").partitionBy("cell", "_epoch")
-      .parquet(s"$path/assignments")
-    // this is the one epoch writer that bypasses EpochIndex.append
-    // (plain append, not dynamic overwrite) — it still owes the
-    // commit marker, written LAST like every other epoch
-    EpochIndex.markCommitted(spark, s"$path/assignments", epochLabel)
+                     epochLabel: String): Unit = {
+    val store = ivf(idCol, vecCol)
+    IndexMeta.check(spark, path, store.meta)
+    val cents = spark.read.parquet(s"$path/centroids")
+      .select(col("cell").as(idCol), col(vecCol))
+    store.append(spark, path,
+      Map("assignments" -> assignCells(newVecs, cents, idCol, vecCol)), epochLabel)
   }
 
   /** Probe a persisted index: identical semantics to [[ivfTopK]] over
@@ -1160,27 +1144,26 @@ object Similarity {
   def ivfPqIndexWrite(index: IvfPqIndex, path: String): Unit = {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     index.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-    EpochIndex.bootstrap(index.codes, s"$path/codes",
-      innerPartCols = Seq("cell"))
     val cols = index.codes.columns.filterNot(_ == "cell")
-    IndexMeta.write(index.codes.sparkSession, path,
-      IndexMeta(ivfPqStore.name, "cols" -> cols.mkString(",")))
+    ivfPqStore.bind("cols" -> cols.mkString(","))
+      .write(Map("codes" -> index.codes), path)
   }
+
+  /** The IVF+PQ store over vectors keyed `idCol`. */
+  private[graft] def ivfPq(idCol: String): StoreFamily.Bound =
+    ivfPqStore.bind("cols" -> s"$idCol,sub,code")
 
   def ivfPqIndexRead(spark: org.apache.spark.sql.SparkSession,
                      path: String): IvfPqIndex = {
     // same partition-column normalization as ivfIndexRead: `cell`
     // re-widens to long, `_epoch` never reaches readers
-    IndexMeta.requireFamily(spark, path, ivfPqStore.name)
+    val store = ivfPqStore.stored(spark, path)
     IvfPqIndex(spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebooks"),
       // observed = false for the same cell-pruning reason as
       // ivfIndexRead (CollectMetrics blocks DPP)
-      EpochIndex.read(spark, s"$path/codes",
-        innerPartCols = Seq("cell"), bootstrapName = "ivfPqIndexWrite",
-        observed = false)
-        .withColumn("cell", col("cell").cast("long"))
-        .drop(EpochIndex.EpochCol))
+      store.read(spark, path, "codes", observed = false)
+        .withColumn("cell", col("cell").cast("long")))
   }
 
   /** [[ivfRecluster]]'s IVF+PQ twin — the maintenance arm that
@@ -1213,8 +1196,8 @@ object Similarity {
                      nCells: Int = 0,
                      keepVersions: Int = 2): EpochIndex.CompactionStats = {
     require(steps >= 1, s"steps must be >= 1: $steps")
-    IndexMeta.check(spark, path,
-      IndexMeta(ivfPqStore.name, "cols" -> s"$idCol,sub,code"))
+    val store = ivfPq(idCol)
+    IndexMeta.check(spark, path, store.meta)
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     val index = ivfPqIndexRead(spark, path)
     val kCells = if (nCells > 0) nCells else index.centroids.count().toInt
@@ -1242,15 +1225,26 @@ object Similarity {
       val newCodes = pqEncode(corpus, books, idCol, vecCol, m)
         .select(col(idCol), col("sub"), col("code"))
         .join(cells, Seq(idCol))
-      val stats = EpochIndex.compact(spark, s"$path/codes",
-        p => newCodes.select(p.columns.map(col).toIndexedSeq: _*),
-        innerPartCols = Seq("cell"), keepVersions = keepVersions)
+      val stats = store.rewrite(spark, path, "codes",
+        p => newCodes.select(p.columns.map(col).toIndexedSeq: _*), keepVersions)
       refined.select(col("cell"), col(vecCol))
         .write.mode("overwrite").parquet(s"$path/centroids")
       books.write.mode("overwrite").parquet(s"$path/codebooks")
       stats
     } finally bridge.unpersistCheckpoint(refined)
   }
+
+  /** The most cells a stored IVF index may hold — the bound of the
+    * probed-cell driver read. */
+  private val MaxCells = 1 << 20
+
+  /** The distinct cells `probes` touches, collected for a literal
+    * `isin` filter: at most min(|queries|·nProbe, nCells) values,
+    * a bounded driver read ([[BoundedRead.boundedDriverRead]]). */
+  private def probedCells(probes: DataFrame): Seq[java.lang.Long] =
+    BoundedRead.boundedDriverRead(probes.select(col("cell")).distinct(),
+      MaxCells, "IVF probed cells", s"a stored IVF index has at most $MaxCells cells")
+      .map(r => Long.box(r.getLong(0))).toSeq
 
   /** Probe a stored IVF+PQ index: [[ivfPqTopK]] semantics with the
     * probed-cell set collected (bounded — ≤ |queries|·nProbe) into a
@@ -1260,21 +1254,16 @@ object Similarity {
     * floats exist anywhere in the store. */
   def ivfPqProbeStored(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, idCol: String, vecCol: String,
-                       m: Int, k: Int, nProbe: Int = 4, roundTo: Int = 6,
-                       maxCells: Int = 1 << 20): DataFrame = {
-    IndexMeta.check(spark, path,
-      IndexMeta(ivfPqStore.name, "cols" -> s"$idCol,sub,code"))
+                       m: Int, k: Int, nProbe: Int = 4,
+                       roundTo: Int = 6): DataFrame = {
+    IndexMeta.check(spark, path, ivfPq(idCol).meta)
     val index = ivfPqIndexRead(spark, path)
     val probes = probeCells(queries,
       index.centroids.select(col("cell"), col(vecCol).as("cent_vec")),
       idCol, vecCol, nProbe)
       .select(col("query_id"), col("cell"))
-    val probedCells = probes.select(col("cell")).distinct()
-      .limit(maxCells + 1).collect().map(_.getLong(0))
-    require(probedCells.length <= maxCells,
-      s"probed cell set exceeds maxCells=$maxCells — not a bounded driver read")
     val scored = index.codes
-      .filter(col("cell").isin(probedCells.map(Long.box): _*))
+      .filter(col("cell").isin(probedCells(probes): _*))
       .join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col(idCol))
       .join(broadcast(pqLut(queries, index.codebooks, idCol, vecCol, m, roundTo)),
@@ -1292,13 +1281,12 @@ object Similarity {
     * partition pruning is a planner heuristic. */
   def ivfProbeStored(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, idCol: String, vecCol: String,
-                     k: Int, nProbe: Int = 4, roundTo: Int = 6,
-                     maxCells: Int = 1 << 20): DataFrame = {
+                     k: Int, nProbe: Int = 4, roundTo: Int = 6): DataFrame = {
     // manifest-verify the probe's (id, vec) columns against the
     // build's before touching data — probing an index stored under
     // different column names would resolve to the wrong attributes
     // or miss silently, the class _GRAFT_META exists to catch
-    IndexMeta.check(spark, path, ivfMeta(idCol, vecCol))
+    IndexMeta.check(spark, path, ivf(idCol, vecCol).meta)
     val index = ivfIndexRead(spark, path)
     // the probes subtree runs twice (once collected for the pruning
     // literal, once joined below) — the price of GUARANTEED static
@@ -1306,12 +1294,8 @@ object Similarity {
     val probes = probeCells(queries,
       index.centroids.select(col("cell"), col(vecCol).as("cent_vec")),
       idCol, vecCol, nProbe)
-    val probedCells = probes.select(col("cell")).distinct()
-      .limit(maxCells + 1).collect().map(_.getLong(0))
-    require(probedCells.length <= maxCells,
-      s"probed cell set exceeds maxCells=$maxCells — not a bounded driver read")
     val pruned = index.assignments
-      .filter(col("cell").isin(probedCells.map(Long.box): _*))
+      .filter(col("cell").isin(probedCells(probes): _*))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"), col("cell"))
     val scored = pruned.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -29,9 +29,21 @@ final case class StoreFamily(name: String, substores: Seq[StoreFamily.Substore],
   def accepts(family: String): Boolean =
     if (name.startsWith("*")) family.endsWith(name.drop(1)) else family == name
 
-  /** This flat family bound to the manifest `params` (see [[Bound]]). */
+  /** This family bound to the manifest `params` (see [[Bound]]). */
   private[operators] def bind(params: (String, Any)*): Bound =
     Bound(this, IndexMeta(name, params: _*))
+
+  /** This family bound to the manifest recorded at `root` — for the
+    * readers that take every build parameter from the store itself
+    * (the IVF reads, an erase check). No manifest, or another
+    * family's, refuses. */
+  private[operators] def stored(spark: SparkSession, root: String): Bound = {
+    val meta = IndexMeta.read(spark, root)
+    require(meta.exists(m => accepts(m.family)), s"refusing $root: its " +
+      s"manifest names ${meta.fold("no family")(_.family)}, not $name — " +
+      "wrong index path, or a store this family's writer did not build")
+    Bound(this, meta.get)
+  }
 
   /** Fold every substore in declaration order behind its atomic
     * `_CURRENT` flip; returns the `reports` substore's stats. A
@@ -64,9 +76,11 @@ final case class StoreFamily(name: String, substores: Seq[StoreFamily.Substore],
     * family check (bm25's membership check) over the caller's
     * partial. */
   private[operators] def checkErase(spark: SparkSession, root: String,
+                                    meta: IndexMeta,
                                     input: Option[() => DataFrame]): Unit =
     substores.map(_.erase).foreach {
-      case Subtract(_, _, _, Some(check)) => input.foreach(b => check(spark, root, b()))
+      case Subtract(_, _, _, Some(check)) =>
+        input.foreach(b => check(spark, Bound(this, meta), root, b()))
       case _ =>
     }
 
@@ -164,11 +178,12 @@ object StoreFamily {
     *
     * @param absorbed the verb the refusal uses ("ingested", "digested")
     * @param check a family refusal over the partial that must run
-    *              before any rewrite */
+    *              before any rewrite; it reads the store through the
+    *              handle bound to the store's manifest */
   final case class Subtract(countCols: Seq[String],
                             residualCols: Seq[String] = Nil,
                             absorbed: String = "ingested",
-                            check: Option[(SparkSession, String, DataFrame) => Unit] = None)
+                            check: Option[(SparkSession, Bound, String, DataFrame) => Unit] = None)
     extends Erase {
 
     private[operators] def subtract(fold: DataFrame => DataFrame,
@@ -224,60 +239,123 @@ object StoreFamily {
                innerPartCols: Seq[String] = Nil): Substore =
     Substore(subdir, innerPartCols, Some(fold), erase)
 
-  /** A flat family bound to the manifest it is built under — the one
-    * write/append/read path of every flat store (each family's public
+  /** A family bound to the manifest it is built under — the one
+    * write/append/read path of every epoch store: this module alone
+    * decides the epoch layout, each substore's inner partitioning, the
+    * manifest order and the read fold (each family's public
     * constructor returns one, e.g. `Cardinality.hll(p, keyName)`).
+    * Frames are keyed by substore subdir ("" = a flat family's root).
     * Every append and read first checks the stored manifest against
     * `meta` (a driver-side file read, no Spark job): another HLL `p`,
     * CMS width or gram size refuses instead of silently diverging. A
-    * read applies the family's registered [[Fold]] with `meta`'s
+    * read applies the substore's registered [[Fold]] with `meta`'s
     * parameters — the function [[Maintenance.compactStore]] folds the
     * same store with — so a read and a compaction cannot disagree. */
   final case class Bound(family: StoreFamily, meta: IndexMeta) {
-    require(family.accepts(meta.family) && family.substores.size == 1 &&
-      family.substores.head.subdir.isEmpty && family.substores.head.fold.isDefined,
-      s"${family.name} is not a flat family that can be bound to ${meta.family}")
-    private val sub = family.substores.head
+    require(family.accepts(meta.family) && family.substores.forall(_.fold.isDefined),
+      s"${family.name} is not an epoch family that can be bound to ${meta.family}")
 
-    private def fold(root: String): DataFrame => DataFrame =
+    private def substore(sub: String): Substore =
+      family.substores.find(_.subdir == sub).getOrElse(throw new IllegalArgumentException(
+        s"${family.name} has no substore '$sub' (declared: " +
+          family.substores.map(_.subdir).mkString(", ") + ")"))
+
+    private def fold(sub: Substore, root: String): DataFrame => DataFrame =
       sub.fold.get(meta.param(_, root))
 
-    /** Bootstrap the store at `root` from `index` (the `_epoch=base`
-      * layout), then record the manifest. */
-    def write(index: DataFrame, root: String): Unit = {
-      EpochIndex.bootstrap(index, root, sub.innerPartCols)
-      IndexMeta.write(index.sparkSession, root, meta)
+    /** `parts` in declaration order; every declared substore exactly once. */
+    private def laidOut(parts: Map[String, DataFrame]): Seq[(Substore, DataFrame)] = {
+      require(parts.keySet == family.substores.map(_.subdir).toSet,
+        s"${family.name} takes one frame per substore " +
+          s"(${family.substores.map(_.subdir).mkString(", ")}), got " +
+          parts.keys.mkString(", "))
+      family.substores.map(s => s -> parts(s.subdir))
     }
 
-    /** Append one batch's partial as epoch `epoch` (idempotent per
-      * epoch name: a retry replaces its own partition). */
-    def append(spark: SparkSession, root: String, partial: DataFrame,
+    /** Bootstrap every substore at `root` (the `_epoch=base` layout;
+      * disjoint directories, so they write concurrently), then — strictly
+      * last — record the manifest. */
+    def write(parts: Map[String, DataFrame], root: String): Unit = {
+      val laid = laidOut(parts)
+      Par.concurrently(laid.map { case (s, df) => () =>
+        EpochIndex.bootstrap(df, s.path(root), s.innerPartCols) }: _*)
+      IndexMeta.write(laid.head._2.sparkSession, root, meta)
+    }
+
+    /** A flat family's [[write]]. */
+    def write(index: DataFrame, root: String): Unit = write(Map("" -> index), root)
+
+    /** Append one batch's partials as epoch `epoch` in every substore,
+      * in declaration order (idempotent per epoch name: a retry
+      * replaces its own partitions). */
+    def append(spark: SparkSession, root: String, parts: Map[String, DataFrame],
                epoch: String): Unit = {
+      val laid = laidOut(parts)
       IndexMeta.check(spark, root, meta)
-      EpochIndex.append(partial, root, epoch, sub.innerPartCols)
+      laid.foreach { case (s, df) =>
+        EpochIndex.append(df, s.path(root), epoch, s.innerPartCols) }
     }
 
-    /** The folded store: base ∪ live epochs through the family's fold.
+    /** A flat family's [[append]]. */
+    def append(spark: SparkSession, root: String, partial: DataFrame,
+               epoch: String): Unit = append(spark, root, Map("" -> partial), epoch)
+
+    /** Substore `sub` folded: base ∪ live epochs through its fold (inner
+      * partition columns kept — a pruning reader filters on them).
       * `excludeEpoch` drops one live epoch's partial first — the
-      * replay-idempotency hook of the streaming sinks. */
-    def read(spark: SparkSession, root: String,
-             excludeEpoch: Option[String] = None): DataFrame = {
+      * replay-idempotency hook of the streaming sinks. `observed =
+      * false` leaves the scan free of the probe observation, for the
+      * reads whose value is a pruned scan ([[EpochIndex.read]]). */
+    def read(spark: SparkSession, root: String, sub: String = "",
+             excludeEpoch: Option[String] = None,
+             observed: Boolean = true): DataFrame = {
       IndexMeta.check(spark, root, meta)
-      fold(root)(EpochIndex.read(spark, root, excludeEpoch, sub.innerPartCols,
-        bootstrapName = s"the ${family.name} store's write")
-        .drop(EpochIndex.EpochCol))
+      val s = substore(sub)
+      fold(s, root)(EpochIndex.read(spark, s.path(root), excludeEpoch,
+        s.innerPartCols, bootstrapName = s"the ${family.name} store's write",
+        observed).drop(EpochIndex.EpochCol))
     }
 
-    /** The store exactly as retained compaction `version` folded it
+    /** A flat store exactly as retained compaction `version` folded it
       * ([[EpochIndex.readAsOf]]). */
     def readAsOf(spark: SparkSession, root: String, version: String): DataFrame = {
       IndexMeta.check(spark, root, meta)
-      EpochIndex.readAsOf(spark, root, version)
+      EpochIndex.readAsOf(spark, substore("").path(root), version)
     }
 
-    /** Two partials folded into one — the fold over `a ∪ b`. */
+    /** Substore `sub` rewritten as one new base version by `rewrite`
+      * instead of its fold — [[EpochIndex.compact]]'s publish, epoch
+      * GC and retention (an IVF recluster's reassignment). */
+    def rewrite(spark: SparkSession, root: String, sub: String,
+                rewrite: DataFrame => DataFrame,
+                keepVersions: Int): EpochIndex.CompactionStats = {
+      IndexMeta.check(spark, root, meta)
+      val s = substore(sub)
+      EpochIndex.compact(spark, s.path(root), rewrite, s.innerPartCols, keepVersions)
+    }
+
+    /** Two flat partials folded into one — the fold over `a ∪ b`. */
     def merge(a: DataFrame, b: DataFrame): DataFrame =
-      fold("(in-memory merge)")(a.unionByName(b))
+      fold(substore(""), "(in-memory merge)")(a.unionByName(b))
+  }
+
+  /** Refuse loudly when a certification root's substores disagree on
+    * which epochs they hold — the torn-append shape (a crash between
+    * substore writes) that would otherwise mis-count guards or
+    * silently drop verify rows. Re-running the append for the missing
+    * epoch repairs it (appends are idempotent per epoch name). */
+  private[operators] def requireAlignedCertEpochs(spark: SparkSession, root: String,
+                                                  store: StoreFamily): Unit = {
+    val sets = store.substores.map(s => s.subdir ->
+      EpochIndex.committedEpochNames(spark, s.path(root), s.innerPartCols).toSet)
+    require(sets.map(_._2).distinct.size == 1,
+      s"certification store at $root has mis-aligned substores: " +
+        sets.map { case (s, e) =>
+          s"$s=${e.toSeq.sorted.mkString("[", ",", "]")}" }
+          .mkString("; ") +
+        " — a torn append left index/stats partials inconsistent; " +
+        "re-run the append for the missing epoch (idempotent) or " +
+        "remove the torn directory")
   }
 
   /** A family whose epochs live directly at the manifest root. */

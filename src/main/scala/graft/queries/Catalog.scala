@@ -9960,7 +9960,7 @@ object Catalog {
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 16),
       "vec_id", "embedding"), root)
-    Similarity.ivfAppendWrite(s, root, batch, "vec_id", "embedding")
+    Similarity.ivfAppendWrite(s, root, batch, "vec_id", "embedding", "day-2")
     val stats = Similarity.ivfRecluster(s, root, steps = 1)
     require(stats.folded.nonEmpty,
       s"q243: recluster folded nothing at $root — store build failed")
@@ -10098,7 +10098,7 @@ object Catalog {
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 16),
       "vec_id", "embedding"), root)
-    Similarity.ivfAppendWrite(s, root, batch, "vec_id", "embedding")
+    Similarity.ivfAppendWrite(s, root, batch, "vec_id", "embedding", "day-2")
     Similarity.ivfCellSkew(s, root)
   }
 

@@ -56,12 +56,8 @@ object Streaming {
       subroots.exists { case (p, inner) => EpochIndex.nonEmpty(spark, p, inner) }
   }
 
-  private def store(role: String, root: String, family: StoreFamily,
-                    meta: IndexMeta): Store =
-    Store(role, root, Some(family), Some(meta))
-
   private def store(role: String, root: String, bound: StoreFamily.Bound): Store =
-    store(role, root, bound.family, bound.meta)
+    Store(role, root, Some(bound.family), Some(bound.meta))
 
   /** A fresh-checkpoint refusal: the "… partials" noun the standing
     * store holds, and what a re-delivered source would break there.
@@ -82,15 +78,17 @@ object Streaming {
   private final class Epoch(val id: String) {
     private var releases = List.empty[() => Unit]
 
-    /** Epoch-scoped dynamic partition overwrite — THE replay-
+    /** A plain table's (corpus, rejects, zone-map manifest)
+      * epoch-scoped dynamic partition overwrite — THE replay-
       * idempotency contract every sink shares: foreachBatch is
       * at-least-once, and a retry of epoch N rewrites its own
       * `_epoch=<id>` partitions instead of double-appending.
       * `EpochIndex.append` carries the zero-row no-op guard (an empty
       * first write would create a file-less directory whose schema
-      * inference bricks every later read). */
-    def write(df: DataFrame, path: String, partCols: Seq[String] = Nil): Unit =
-      EpochIndex.append(df, path, id, partCols)
+      * inference bricks every later read). A family store appends
+      * through its handle ([[StoreFamily.Bound.append]]). */
+    def write(df: DataFrame, path: String): Unit =
+      EpochIndex.append(df, path, id)
 
     /** Materialize `df` once (eager `localCheckpoint`), released when
       * the epoch ends. A checkpoint, not `persist`: a frame that READS
@@ -451,9 +449,10 @@ object Streaming {
         val (kept, partial) = clean(batch,
           if (!index.nonEmpty(spark)) emptyFrame(spark, emptyIndex)
           else bound.fold(spark.read.parquet(indexPath))(
-            _.read(spark, indexPath, Some(epoch.id))), epoch)
+            _.read(spark, indexPath, excludeEpoch = Some(epoch.id))), epoch)
         epoch.write(kept, corpusPath)
-        epoch.write(partial, indexPath)
+        bound.fold(epoch.write(partial, indexPath))(
+          _.append(spark, indexPath, partial, epoch.id))
     }
   }
 
@@ -601,26 +600,25 @@ object Streaming {
 
   /** THE partial-appending profile/index sinks' epoch (sample sketch,
     * HLL, KMV, CMS, islands, digest, gram counts, LM, BM25): a
-    * non-empty batch lands in the corpus, then each of its partials
-    * (`buildPartials`: store-subdir → partial, "" = the store root)
-    * in the store — all under the epoch overwrite, so an at-least-once
-    * replay rewrites its own partitions; an empty batch writes nothing
-    * anywhere. `refusal` is None for idempotent-fold families
-    * (max-merge HLL, union KMV, re-merge islands), whose stores
-    * self-heal under replay. */
+    * non-empty batch lands in the corpus, then its partials
+    * (`buildPartials`: substore subdir → partial, "" = a flat store)
+    * append through the store's handle — all under the epoch
+    * overwrite, so an at-least-once replay rewrites its own
+    * partitions; an empty batch writes nothing anywhere. `refusal` is
+    * None for idempotent-fold families (max-merge HLL, union KMV,
+    * re-merge islands), whose stores self-heal under replay. */
   private def partialIngestSink(stream: DataFrame, spark: SparkSession,
                                 sink: String, corpusPath: String,
-                                index: Store, checkpoint: String,
-                                refusal: Option[Refusal])(
-      buildPartials: DataFrame => Seq[(String, DataFrame)]): StreamingQuery =
+                                indexPath: String, bound: StoreFamily.Bound,
+                                checkpoint: String, refusal: Option[Refusal])(
+      buildPartials: DataFrame => Map[String, DataFrame]): StreamingQuery =
     ingestSink(stream, spark, sink, checkpoint,
-      Seq(Store("corpus", corpusPath), index), refusal = refusal) { (batch, epoch) =>
+      Seq(Store("corpus", corpusPath), store("store", indexPath, bound)),
+      refusal = refusal) { (batch, epoch) =>
       if (!batch.isEmpty) {
         val partials = buildPartials(batch).map { case (p, df) => p -> epoch.pin(df) }
         epoch.write(batch, corpusPath)
-        partials.foreach { case (p, df) =>
-          epoch.write(df, if (p.isEmpty) index.root else s"${index.root}/$p")
-        }
+        bound.append(spark, indexPath, partials, epoch.id)
       }
     }
 
@@ -641,13 +639,13 @@ object Streaming {
                              allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.SampleSketch
     partialIngestSink(stream, spark, "sampleSketchIngestSink",
-      corpusPath, store("store", indexPath, SampleSketch.profile(k, groupCol,
-        valueCol)), checkpoint,
+      corpusPath, indexPath, SampleSketch.profile(k, groupCol, valueCol),
+      checkpoint,
       refusal(allowForeignEpochs, "sketch",
         "A reset source would re-land its rows in the corpus (the profile " +
           "store itself self-heals — identical resampled triples dedup in " +
           "the fold).")) { batch =>
-      Seq("" -> SampleSketch.sampleSketch(batch, col(groupCol),
+      Map("" -> SampleSketch.sampleSketch(batch, col(groupCol),
         col(idCol), col(valueCol), k))
     }
   }
@@ -664,9 +662,9 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Cardinality
     partialIngestSink(stream, spark, "hllIngestSink",
-      corpusPath, store("store", indexPath, Cardinality.hll(p, valueCol)),
+      corpusPath, indexPath, Cardinality.hll(p, valueCol),
       checkpoint, refusal = None) { batch =>
-      Seq("" -> Cardinality.hllSketch(batch, col(groupCol), col(valueCol), p))
+      Map("" -> Cardinality.hllSketch(batch, col(groupCol), col(valueCol), p))
     }
   }
 
@@ -681,9 +679,9 @@ object Streaming {
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Cardinality
     partialIngestSink(stream, spark, "kmvIngestSink",
-      corpusPath, store("store", indexPath, Cardinality.kmv(k, valueCol)),
+      corpusPath, indexPath, Cardinality.kmv(k, valueCol),
       checkpoint, refusal = None) { batch =>
-      Seq("" -> Cardinality.kmvSketch(batch, col(groupCol), col(valueCol), k))
+      Map("" -> Cardinality.kmvSketch(batch, col(groupCol), col(valueCol), k))
     }
   }
 
@@ -699,12 +697,12 @@ object Streaming {
                     allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.HeavyHitters
     partialIngestSink(stream, spark, "cmsIngestSink",
-      corpusPath, store("store", indexPath,
-        HeavyHitters.cms(depth, width, itemCol)), checkpoint,
+      corpusPath, indexPath, HeavyHitters.cms(depth, width, itemCol),
+      checkpoint,
       refusal(allowForeignEpochs, "count",
         "Counts are additive: a reset source re-landing its rows would " +
           "double every estimate.")) { batch =>
-      Seq("" -> HeavyHitters.countMinSketch(batch, itemCol, depth, width))
+      Map("" -> HeavyHitters.countMinSketch(batch, itemCol, depth, width))
     }
   }
 
@@ -720,9 +718,9 @@ object Streaming {
                         checkpoint: String): StreamingQuery = {
     import graft.operators.IntervalExpand
     partialIngestSink(stream, spark, "islandsIngestSink",
-      corpusPath, store("store", indexPath, IntervalExpand.islands(keyCol)),
+      corpusPath, indexPath, IntervalExpand.islands(keyCol),
       checkpoint, refusal = None) { batch =>
-      Seq("" -> IntervalExpand.mergeIntervals(batch, keyCol,
+      Map("" -> IntervalExpand.mergeIntervals(batch, keyCol,
         col(startCol), col(endCol)))
     }
   }
@@ -740,12 +738,12 @@ object Streaming {
                        allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.Audit
     partialIngestSink(stream, spark, "digestIngestSink",
-      corpusPath, store("store", indexPath, Audit.digestLedger(cols, groupCol)),
+      corpusPath, indexPath, Audit.digestLedger(cols, groupCol),
       checkpoint,
       refusal(allowForeignEpochs, "digest",
         "Digests are additive: a reset source re-landing its rows would " +
           "shift every group's checksum.")) { batch =>
-      Seq("" -> Audit.digestPartial(batch, cols, col(groupCol)))
+      Map("" -> Audit.digestPartial(batch, cols, col(groupCol)))
     }
   }
 
@@ -765,11 +763,11 @@ object Streaming {
                          checkpoint: String, n: Int = 8,
                          allowForeignEpochs: Boolean = false): StreamingQuery =
     partialIngestSink(stream, spark, "gramFreqIngestSink",
-      corpusPath, store("store", indexPath, Dedup.gramFreq(n)), checkpoint,
+      corpusPath, indexPath, Dedup.gramFreq(n), checkpoint,
       refusal(allowForeignEpochs, "gram-count",
         "Counts are additive: a reset source re-ingesting its documents " +
           "would double every gram's count.")) { batch =>
-      Seq("" -> Dedup.gramFreqIndex(batch, idCol, textCol, n))
+      Map("" -> Dedup.gramFreqIndex(batch, idCol, textCol, n))
     }
 
   /** Streaming reference-LM maintenance: each micro-batch of REFERENCE
@@ -787,12 +785,12 @@ object Streaming {
                    allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.LmFilter
     partialIngestSink(stream, spark, "lmIngestSink",
-      corpusPath, store("store", indexPath, LmFilter.lm(ctxBuckets,
-        bigramBuckets)), checkpoint,
+      corpusPath, indexPath, LmFilter.lm(ctxBuckets, bigramBuckets),
+      checkpoint,
       refusal(allowForeignEpochs, "LM count",
         "Counts are additive: a reset source re-ingesting its documents " +
           "would double every count and shift every later perplexity.")) { batch =>
-      Seq("" -> LmFilter.lmIndex(batch, idCol, textCol, ctxBuckets, bigramBuckets))
+      Map("" -> LmFilter.lmIndex(batch, idCol, textCol, ctxBuckets, bigramBuckets))
     }
   }
 
@@ -811,13 +809,11 @@ object Streaming {
                      allowForeignEpochs: Boolean = false): StreamingQuery = {
     import graft.operators.Relevance
     partialIngestSink(stream, spark, "bm25IngestSink",
-      corpusPath, store("store", indexPath, Relevance.bm25Store,
-        Relevance.postingsMeta(idCol, textCol)), checkpoint,
+      corpusPath, indexPath, Relevance.bm25(idCol, textCol), checkpoint,
       refusal(allowForeignEpochs, "postings",
         "A reset source would re-land its documents and double-count the " +
-          "corpus statistics (N, avgdl) every score depends on.")) { batch =>
-      val (postings, stats) = Relevance.bm25Postings(batch, idCol, textCol)
-      Seq("postings" -> postings, "stats" -> stats)
+          "corpus statistics (N, avgdl) every score depends on.")) {
+      Relevance.bm25Postings(_, idCol, textCol)
     }
   }
 
@@ -837,9 +833,9 @@ object Streaming {
                     indexPath: String, idCol: String, vecCol: String,
                     checkpoint: String): StreamingQuery = {
     import graft.operators.Similarity
+    val ivf = Similarity.ivf(idCol, vecCol)
     ingestSink(stream, spark, "ivfIngestSink", checkpoint,
-      Seq(store("assignments", indexPath, Similarity.ivfStore,
-        Similarity.ivfMeta(idCol, vecCol))),
+      Seq(store("assignments", indexPath, ivf)),
       // erasure (the ivf Filter form) and recluster key on integral ids
       integralIdCols = Seq(idCol),
       guard = require(Fs.exists(spark, s"$indexPath/centroids"),
@@ -849,8 +845,9 @@ object Streaming {
       (batch, epoch) =>
         val cents = spark.read.parquet(s"$indexPath/centroids")
           .select(col("cell").as(idCol), col(vecCol))
-        epoch.write(Similarity.assignCells(batch, cents, idCol, vecCol),
-          s"$indexPath/assignments", partCols = Seq("cell"))
+        ivf.append(spark, indexPath,
+          Map("assignments" -> Similarity.assignCells(batch, cents, idCol, vecCol)),
+          epoch.id)
     }
   }
 
@@ -1016,13 +1013,13 @@ object Streaming {
         }
         val pairs = epoch.pin(
           Dedup.certBatchPairs(batch, cross, idCol, valueCol, metric))
-        epoch.write(pairs, ledgerPath)
+        ledger.append(spark, ledgerPath, pairs, epoch.id)
         labelsPath.foreach { lp =>
           val epochPairs = pairs.select("id_a", "id_b")
           val foldPairs =
             if (EpochIndex.nonEmpty(spark, lp) ||
                 !EpochIndex.nonEmpty(spark, ledgerPath)) epochPairs
-            else ledger.read(spark, ledgerPath, Some(epoch.id))
+            else ledger.read(spark, ledgerPath, excludeEpoch = Some(epoch.id))
               .select("id_a", "id_b").unionByName(epochPairs)
           // the fold returns the updated labeling pinned: free it with the epoch
           val labels = Dedup.ccLabelsFold(spark, lp, foldPairs, epoch.id,
@@ -1123,10 +1120,10 @@ object Streaming {
                         family: Dedup.LshFamily = Dedup.SimHash(),
                         buckets: Int = 64): StreamingQuery = {
     family.requireProbeable()
-    def indexed = EpochIndex.nonEmpty(spark, indexPath, innerPartCols = Seq("bb"))
+    val index = store("index", indexPath, Dedup.bands(family, buckets))
+    def indexed = index.nonEmpty(spark)
     ingestSink(stream, spark, "nearDupIngestSink", checkpoint,
-      Seq(Store("corpus", corpusPath), store("index", indexPath, Dedup.bandStore,
-        Dedup.bandMetaWithBuckets(family.meta, buckets))),
+      Seq(Store("corpus", corpusPath), index),
       integralIdCols = Seq(idCol),
       guard = requireIndexedCorpus(spark, "nearDupIngestSink", corpusPath,
         indexPath, indexed, false,

@@ -847,7 +847,7 @@ class DedupSpec extends SparkSpecBase {
     Dedup.gramFreq(2).append(spark, root, Dedup.gramFreqIndex(b, "doc_id", "text", n = 2), "day2")
     // replay-idempotency hook (pre-compaction, while day2 is a live
     // epoch): excluding it leaves exactly shard a's counts
-    val excluded = Dedup.gramFreq(2).read(spark, root, Some("day2"))
+    val excluded = Dedup.gramFreq(2).read(spark, root, excludeEpoch = Some("day2"))
       .as[(String, Long)].collect().toMap
     val aOnly = Dedup.gramFreqIndex(a, "doc_id", "text", n = 2)
       .as[(String, Long)].collect().toMap

@@ -162,12 +162,12 @@ class EpochIndexSpec extends SparkSpecBase {
     val path = tmp("graft-ei-replay")
     buildThreeEpochStore(path)
     // pre-compaction: excluding a live epoch works
-    val without2 = snap(lines.read(spark, path, Some("day-2")))
+    val without2 = snap(lines.read(spark, path, excludeEpoch = Some("day-2")))
     assert(without2 === snap(Dedup.lineFirstOccIndex(
       b1.union(b3), "doc_id", "text", "\n")))
     Maintenance.compactStore(spark, path)
     val e = intercept[IllegalArgumentException] {
-      lines.read(spark, path, Some("day-2")).collect()
+      lines.read(spark, path, excludeEpoch = Some("day-2")).collect()
     }
     assert(e.getMessage.contains("already compacted"), e.getMessage)
   }

@@ -259,7 +259,7 @@ class EraseSpec extends SparkSpecBase {
       "doc_id", "text")
     Relevance.bm25IndexAppend(spark, root,
       docsDF.filter(col("doc_id") > 4), "doc_id", "text", "day-2")
-    eraseWith(root, Relevance.postingsMeta("doc_id", "text"))(
+    eraseWith(root, Relevance.bm25("doc_id", "text").meta)(
       Relevance.bm25DocStats(victimDocs, "doc_id", "text"))
     val terms = Seq("alpha", "shared", "lambda")
     val got = Relevance.bm25IndexProbe(spark, root, "doc_id", "text",
@@ -270,7 +270,7 @@ class EraseSpec extends SparkSpecBase {
     assert(got.nonEmpty, "degenerate erasure test")
     assertNoVictimOnDisk(s"$root/postings", Seq("doc_id"), victimIds)
     val e = intercept[Exception] {
-      eraseWith(root, Relevance.postingsMeta("doc_id", "text"))(
+      eraseWith(root, Relevance.bm25("doc_id", "text").meta)(
         Relevance.bm25DocStats(Seq((99L, "totally novel text"))
           .toDF("doc_id", "text"), "doc_id", "text"))
     }

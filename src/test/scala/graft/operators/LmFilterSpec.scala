@@ -55,7 +55,7 @@ class LmFilterSpec extends SparkSpecBase {
     LmFilter.lm(4096, 32768).write(LmFilter.lmIndex(a, "doc_id", "text"), root)
     LmFilter.lm(4096, 32768).append(spark, root, LmFilter.lmIndex(b, "doc_id", "text"), "day2")
     // replay-idempotency hook: excluding the live epoch leaves shard a
-    val excluded = LmFilter.lm(4096, 32768).read(spark, root, Some("day2"))
+    val excluded = LmFilter.lm(4096, 32768).read(spark, root, excludeEpoch = Some("day2"))
       .as[(Int, Long, Long)].collect().toSet
     val aOnly = LmFilter.lmIndex(a, "doc_id", "text")
       .as[(Int, Long, Long)].collect().toSet

@@ -196,13 +196,35 @@ class SimilaritySpec extends SparkSpecBase {
     val beforeFiles = spark.read.parquet(s"$path/assignments")
       .select(input_file_name()).distinct().as[String].collect().toSet
 
-    Similarity.ivfAppendWrite(spark, path, batch, "vec_id", "embedding")
+    Similarity.ivfAppendWrite(spark, path, batch, "vec_id", "embedding", "day-2")
 
     // append-only: every pre-existing file survives byte-identically
     val afterFiles = spark.read.parquet(s"$path/assignments")
       .select(input_file_name()).distinct().as[String].collect().toSet
     assert(beforeFiles.subsetOf(afterFiles), "append rewrote existing corpus files")
     // and the stored table now equals a from-scratch rebuild
+    val stored = Similarity.ivfIndexRead(spark, path).assignments
+      .select("vec_id", "cell").orderBy("vec_id").as[(Long, Long)].collect()
+    val rebuilt = Similarity.ivfIndex(corpus.unionByName(batch), cents,
+      "vec_id", "embedding").assignments
+      .select("vec_id", "cell").orderBy("vec_id").as[(Long, Long)].collect()
+    assert(stored === rebuilt)
+  }
+
+  test("ivfAppendWrite: re-appending the same batch under one epoch lands it once") {
+    val all = gaussianVecs(60, 12, 57)
+    val (corpusRows, batchRows) = all.partition(_._1 % 4 != 1)
+    val corpus = corpusRows.toDF("vec_id", "embedding")
+    val batch = batchRows.toDF("vec_id", "embedding")
+    val cents = Similarity.pickCentroids(corpus, "vec_id", "embedding", 5)
+    val path = new java.io.File("target/tmp/ivf-reappend-spec").getAbsolutePath
+    graft.sources.Fs.deleteRecursively(spark, path)
+    Similarity.ivfIndexWrite(
+      Similarity.ivfIndex(corpus, cents, "vec_id", "embedding"), path)
+    // an at-least-once retry of one epoch: the second append replaces
+    // the first instead of adding its rows again
+    Seq(1, 2).foreach(_ => Similarity.ivfAppendWrite(spark, path, batch,
+      "vec_id", "embedding", epochLabel = "day-2"))
     val stored = Similarity.ivfIndexRead(spark, path).assignments
       .select("vec_id", "cell").orderBy("vec_id").as[(Long, Long)].collect()
     val rebuilt = Similarity.ivfIndex(corpus.unionByName(batch), cents,
@@ -662,7 +684,7 @@ class SimilaritySpec extends SparkSpecBase {
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 8),
       "vec_id", "embedding"), path)
-    Similarity.ivfAppendWrite(spark, path, drift, "vec_id", "embedding")
+    Similarity.ivfAppendWrite(spark, path, drift, "vec_id", "embedding", "append")
     val queries = drift.filter($"vec_id" < 1010L)
     val exact = Similarity.bruteForceTopK(all, queries,
       "vec_id", "embedding", k = 3)
@@ -751,7 +773,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(Similarity.ivfReclusterIfSkewed(spark, path,
       maxFrac = 3.0).isEmpty, s"healthy store fired at ${skewMultiple()}")
     Similarity.ivfAppendWrite(spark, path,
-      c.toDF("vec_id", "embedding"), "vec_id", "embedding")
+      c.toDF("vec_id", "embedding"), "vec_id", "embedding", "drift")
     assert(skewMultiple() > 3.0, s"drift did not skew: ${skewMultiple()}")
     val stats = Similarity.ivfReclusterIfSkewed(spark, path,
       maxFrac = 3.0)
@@ -805,7 +827,7 @@ class SimilaritySpec extends SparkSpecBase {
     Similarity.ivfIndexWrite(Similarity.ivfIndex(corpus,
       Similarity.pickCentroids(corpus, "vec_id", "embedding", 8),
       "vec_id", "embedding"), path)
-    Similarity.ivfAppendWrite(spark, path, drift, "vec_id", "embedding")
+    Similarity.ivfAppendWrite(spark, path, drift, "vec_id", "embedding", "drift")
     val staleCents = Similarity.ivfIndexRead(spark, path).centroids
       .orderBy("cell").as[(Long, Array[Float])].collect()
     Similarity.ivfRecluster(spark, path, steps = 1)

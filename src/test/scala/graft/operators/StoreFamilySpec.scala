@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * writer records is registered. A coverage test fails when a
   * registry entry has no case here or its case does not carry the
   * input its erase form needs; source scans fail when main code
-  * records a family name literal the registry does not accept, or
-  * rewrites a store for erasure outside the shared erase forms. */
+  * records a family name literal the registry does not accept,
+  * rewrites a store for erasure outside the shared erase forms, or
+  * bootstraps, appends to or records the manifest of a store outside
+  * [[StoreFamily.Bound]]. */
 class StoreFamilySpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -33,8 +35,8 @@ class StoreFamilySpec extends SparkSpecBase {
     * write + one append over the case's rows minus the ids given; the
     * victim ids the erase forgets and, for a Subtract or Rebuild
     * family, the input built under its manifest parameters; the
-    * family's checked read; and, for a flat family, the handle the
-    * case writes, appends and reads through. */
+    * family's checked read; and, for an epoch family, the handle its
+    * writer builds the unfiltered case under. */
   private case class Case(family: String, victims: Seq[Long],
                           build: (String, Set[Long]) => Unit,
                           input: Option[(IndexMeta, () => DataFrame)],
@@ -134,7 +136,8 @@ class StoreFamilySpec extends SparkSpecBase {
           withoutNodes(edgesB, drop), "day-2")
       },
       None,
-      root => rows(Centrality.triangleCensusRead(spark, root))),
+      root => rows(Centrality.triangleCensusRead(spark, root)),
+      Some(Centrality.census)),
     docsCase(HeavyHitters.cms(3, 32, "token"), Some(() => cmsPart(retainedDocs)))(
       cmsPart),
     docsCase(Audit.digestLedger(Seq("doc_id", "text"), "parity"),
@@ -163,10 +166,11 @@ class StoreFamilySpec extends SparkSpecBase {
         (root, d) => Relevance.bm25IndexWrite(d, root, "doc_id", "text"),
         (root, d) => Relevance.bm25IndexAppend(spark, root, d, "doc_id",
           "text", "day-2")),
-      Some(Relevance.postingsMeta("doc_id", "text") ->
+      Some(Relevance.bm25("doc_id", "text").meta ->
         (() => Relevance.bm25DocStats(victimDocs, "doc_id", "text"))),
       root => rows(Relevance.bm25IndexProbe(spark, root, "doc_id", "text",
-        Seq("alpha", "shared", "nu"), k = 10))),
+        Seq("alpha", "shared", "nu"), k = 10)),
+      Some(Relevance.bm25("doc_id", "text"))),
     Case("ivf", vecVictims,
       (root, drop) => {
         Similarity.ivfIndexWrite(Similarity.ivfIndex(
@@ -178,18 +182,20 @@ class StoreFamilySpec extends SparkSpecBase {
       },
       None,
       root => rows(Similarity.ivfProbeStored(spark, root, probeVecs, "vec_id",
-        "embedding", k = 5, nProbe = 2))),
+        "embedding", k = 5, nProbe = 2)),
+      Some(Similarity.ivf("vec_id", "embedding"))),
     Case("ivf_pq", vecVictims,
       (root, drop) => {
         Similarity.ivfPqIndexWrite(pqCorpus.copy(
           codes = without(pqCorpus.codes, "vec_id", drop)), root)
-        // the family has no public append: land one epoch of codes in
-        // the writer's own layout, as the store layer appends any epoch
-        EpochIndex.append(without(pqBatchCodes, "vec_id", drop),
-          s"$root/codes", "day-2", innerPartCols = Seq("cell"))
+        // the family has no public append: land one epoch of codes
+        // through its handle, as the store layer appends any epoch
+        Similarity.ivfPq("vec_id").append(spark, root,
+          Map("codes" -> without(pqBatchCodes, "vec_id", drop)), "day-2")
       },
       None,
-      root => rows(Similarity.ivfPqIndexRead(spark, root).codes)),
+      root => rows(Similarity.ivfPqIndexRead(spark, root).codes),
+      Some(Similarity.ivfPq("vec_id"))),
     flatCase(Dedup.certLedger("jaccard", 0.85), Seq(4L))(
       (root, drop) => {
         val ledger = Dedup.certLedger("jaccard", 0.85)
@@ -208,7 +214,8 @@ class StoreFamilySpec extends SparkSpecBase {
       None,
       root => rows(Dedup.certIndexProbe(spark, root,
         docsA.union(docsB).select((col("doc_id") + 1000L).as("doc_id"),
-          col("text")), "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1)))),
+          col("text")), "doc_id", "text", Dedup.Jaccard(0.5, shingleK = 1))),
+      Some(Dedup.Jaccard(0.5, shingleK = 1).bound(Nil))),
     Case("cert_vec", vecVictims,
       (root, drop) => {
         Dedup.certIndexWrite(without(corpusVecs, "vec_id", drop), "vec_id",
@@ -218,7 +225,10 @@ class StoreFamilySpec extends SparkSpecBase {
       },
       None,
       root => rows(Dedup.certIndexProbe(spark, root, probeVecs, "vec_id",
-        "embedding", Dedup.Cosine(0.4)))),
+        "embedding", Dedup.Cosine(0.4))),
+      // the pivots the unfiltered write freezes from its corpus
+      Some(Dedup.Cosine(0.4).bound(Dedup.Cosine(0.4).blocking(corpusVecs,
+        "vec_id", "embedding", "StoreFamilySpec")))),
     flatCase(Dedup.ccLabels("cosine", 0.8), Seq(3L))(
       (root, drop) => {
         Dedup.ccLabelsFold(spark, root, withoutPairs(ccPairsA, drop),
@@ -247,7 +257,8 @@ class StoreFamilySpec extends SparkSpecBase {
         (root, d) => Dedup.bandIndexAppend(spark, root, d, "doc_id", "text",
           "day-2", smallMinHash)),
       None,
-      root => rows(Dedup.bandIndexRead(spark, root, smallMinHash)))
+      root => rows(Dedup.bandIndexRead(spark, root, smallMinHash)),
+      Some(Dedup.bands(smallMinHash, 64)))
   )
 
   private def capPart(docs: DataFrame) = Curation.capCountIndex(
@@ -389,64 +400,101 @@ class StoreFamilySpec extends SparkSpecBase {
     assert(names.filter(registered(_).isEmpty).isEmpty)
   }
 
-  /** Every flat family in the registry: one epoch substore at the
-    * manifest root, folded, with no inner partitions. */
-  private def flatFamilies: Seq[StoreFamily] = Maintenance.Families.filter(f =>
-    f.substores.map(s => (s.subdir, s.fold.isDefined, s.innerPartCols)) ==
-      Seq(("", true, Nil)))
+  /** Every epoch family in the registry: all but the versioned
+    * snapshots, whose substores have no fold. */
+  private def epochFamilies: Seq[StoreFamily] =
+    Maintenance.Families.filter(_.substores.forall(_.fold.isDefined))
 
-  test("flat stores: a handle under another parameter refuses; read ≡ compact then read") {
-    assert(flatFamilies.size === 14, flatFamilies.map(_.name))
-    flatFamilies.foreach { family =>
+  test("epoch stores: a mismatched handle refuses; compaction keeps reads") {
+    assert(epochFamilies.size === Maintenance.Families.size - 1,
+      epochFamilies.map(_.name))
+    epochFamilies.foreach { family =>
       val c = cases.find(_.store.exists(_.family == family)).getOrElse(
-        fail(s"${family.name}: no registry case builds it from its handle"))
+        fail(s"${family.name}: no registry case carries its handle"))
       val store = c.store.get
       val root = tmp(s"${family.name}-bound")
       c.build(root, Set.empty)
-      // one manifest parameter changed: the same family, another build
-      val (key, value) = store.meta.params.toSeq.minBy(_._1)
+      val subs = family.substores.map(_.subdir)
+      def folded(): Map[String, Set[String]] =
+        subs.map(sub => sub -> rows(store.read(spark, root, sub))).toMap
+      // one manifest parameter changed (or, for a family without
+      // parameters, one added): the same family, another build
+      val (key, value) = store.meta.params.toSeq.sorted.headOption
+        .fold("probe" -> "1") { case (k, v) => k -> (v + "0") }
       val other = StoreFamily.Bound(family,
-        store.meta.copy(params = store.meta.params.updated(key, value + "0")))
-      val partial = store.read(spark, root)
+        store.meta.copy(params = store.meta.params.updated(key, value)))
+      val parts = subs.map(sub => sub -> store.read(spark, root, sub)).toMap
       val appendRefusal = intercept[IllegalArgumentException](
-        other.append(spark, root, partial, "other"))
+        other.append(spark, root, parts, "other"))
       assert(appendRefusal.getMessage.contains(key), appendRefusal.getMessage)
-      val readRefusal = intercept[IllegalArgumentException](
-        other.read(spark, root))
-      assert(readRefusal.getMessage.contains(key), readRefusal.getMessage)
-      assert(EpochIndex.committedEpochNames(spark, root).size === 2,
-        s"${family.name}: a refused append landed")
+      subs.foreach { sub =>
+        val readRefusal = intercept[IllegalArgumentException](
+          other.read(spark, root, sub))
+        assert(readRefusal.getMessage.contains(key), readRefusal.getMessage)
+      }
+      family.substores.foreach(s => assert(EpochIndex.committedEpochNames(
+        spark, s.path(root), s.innerPartCols).size === 2,
+        s"${family.name}/${s.subdir}: a refused append landed"))
       // the read folds with the compaction fold: compacting changes nothing
-      val before = rows(store.read(spark, root))
+      val before = folded()
       val stats = Maintenance.compactStore(spark, root)
-      assert(rows(store.read(spark, root)) === before, family.name)
-      assert(rows(store.readAsOf(spark, root, stats.version)) === before,
-        family.name)
+      assert(folded() === before, family.name)
+      if (subs == Seq(""))
+        assert(rows(store.readAsOf(spark, root, stats.version)) === before(""),
+          family.name)
     }
   }
 
-  test("flat stores: the write/append/read path is written once") {
-    // a flat-family writer hand-rolling the trio again (check + append,
-    // bootstrap + manifest write at the same root) fails here
-    val checkAppend = ("""IndexMeta\.check\(spark,\s*(\w+),[^\n]*\n\s*""" +
-      """EpochIndex\.append\([^\n]*?,\s*\1,(?![^\n]*innerPartCols\s*=\s*Seq)""").r
-    val bootstrapWrite = ("""EpochIndex\.bootstrap\([^\n]*?,\s*(\w+)(?:,\s*[\w.]+)?\)""" +
-      """\s*\n\s*IndexMeta\.write\([^\n]*?,\s*\1,""").r
-    val flatBootstrapName = ("""bootstrapName\s*=\s*"(?:(?:lineFirstOcc|boilerplate|""" +
-      """gramFreq|hll|kmv|cms|sampleSketch|dsir|capCount|digest|islands|lm)""" +
-      """IndexWrite|(?:certLedger|ccLabels)Write)"""").r
-    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val files = try {
-      import scala.jdk.CollectionConverters._
-      sources.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => p.getFileName.toString ->
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).toList
-    } finally sources.close()
+  test("store families: the write/append/read path is written once") {
+    // a family writer hand-rolling the store format again (a bootstrap,
+    // a manifest write, an epoch append, a writer-named read) fails here
+    val files = {
+      val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try {
+        import scala.jdk.CollectionConverters._
+        sources.iterator().asScala.filter(_.toString.endsWith(".scala"))
+          .map(p => p.getFileName.toString ->
+            new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+              .split("\n").filterNot { l =>
+                val t = l.trim
+                t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+              }.mkString("\n")).toList
+      } finally sources.close()
+    }
     def sites(re: scala.util.matching.Regex): Seq[String] =
       files.flatMap { case (name, code) => re.findAllMatchIn(code).map(_ => name) }
-    assert(sites(checkAppend) === Seq("StoreFamily.scala"))
-    assert(sites(bootstrapWrite) === Seq("StoreFamily.scala"))
-    assert(sites(flatBootstrapName).isEmpty)
+    val own = Set("EpochIndex.scala", "IndexMeta.scala")
+    def callers(re: scala.util.matching.Regex) = sites(re).filterNot(own)
+    assert(callers("""\bEpochIndex\.bootstrap\(""".r) === Seq("StoreFamily.scala"))
+    assert(callers("""\bIndexMeta\.write\(""".r) === Seq("StoreFamily.scala"))
+    // the one other append is the sinks' plain-table epoch write, with
+    // no inner partitioning …
+    val append = """\bEpochIndex\.append\(([^)]*)\)""".r
+    assert(callers(append).sorted === Seq("StoreFamily.scala", "Streaming.scala"))
+    val streaming = files.collect { case ("Streaming.scala", code) => code }.head
+    assert(append.findAllMatchIn(streaming).map(_.group(1)).toSeq ===
+      Seq("df, path, id"))
+    // … whose callers name plain tables only: the corpus, the rejects,
+    // the zone-map manifest, and the family-less fingerprint index
+    val writes = """\bepoch\.write\(""".r.findAllMatchIn(streaming).map { m =>
+      var (depth, i) = (1, m.end)
+      while (depth > 0) {
+        streaming(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case _ =>
+        }
+        i += 1
+      }
+      val args = streaming.substring(m.end, i - 1)
+      args.substring(args.lastIndexOf(',') + 1).trim
+    }.toSeq
+    assert(writes.toSet === Set("corpusPath", "rejectsPath", "manifestPath",
+      "indexPath"), writes)
+    assert(writes.count(_ == "indexPath") === 1 &&
+      streaming.contains("bound.fold(epoch.write(partial, indexPath))"), writes)
+    assert(sites("""bootstrapName\s*=\s*"[^"]*Write"""".r).isEmpty)
+    assert(sites("""innerPartCols\s*=\s*Seq\(""".r).isEmpty)
   }
 
   test("a manifest lacking a fold's build parameter refuses, naming the store and the key") {

@@ -1023,7 +1023,7 @@ class StreamingSpec extends SparkSpecBase {
     // the replay-idempotency hook refuses the folded epoch loudly: its
     // partial is merged into the base and can no longer be subtracted
     val e = intercept[IllegalArgumentException] {
-      Dedup.gramFreq(2).read(spark, index, Some(replayed)).collect()
+      Dedup.gramFreq(2).read(spark, index, excludeEpoch = Some(replayed)).collect()
     }
     assert(e.getMessage.contains("already compacted"), e.getMessage)
     // an epoch landing AFTER the compaction snapshot is neither folded
