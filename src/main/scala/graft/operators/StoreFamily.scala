@@ -264,7 +264,7 @@ object StoreFamily {
       sub.fold.get(meta.param(_, root))
 
     /** `parts` in declaration order; every declared substore exactly once. */
-    private def laidOut(parts: Map[String, DataFrame]): Seq[(Substore, DataFrame)] = {
+    private def inOrder(parts: Map[String, DataFrame]): Seq[(Substore, DataFrame)] = {
       require(parts.keySet == family.substores.map(_.subdir).toSet,
         s"${family.name} takes one frame per substore " +
           s"(${family.substores.map(_.subdir).mkString(", ")}), got " +
@@ -276,7 +276,7 @@ object StoreFamily {
       * disjoint directories, so they write concurrently), then — strictly
       * last — record the manifest. */
     def write(parts: Map[String, DataFrame], root: String): Unit = {
-      val laid = laidOut(parts)
+      val laid = inOrder(parts)
       Par.concurrently(laid.map { case (s, df) => () =>
         EpochIndex.bootstrap(df, s.path(root), s.innerPartCols) }: _*)
       IndexMeta.write(laid.head._2.sparkSession, root, meta)
@@ -290,7 +290,7 @@ object StoreFamily {
       * replaces its own partitions). */
     def append(spark: SparkSession, root: String, parts: Map[String, DataFrame],
                epoch: String): Unit = {
-      val laid = laidOut(parts)
+      val laid = inOrder(parts)
       IndexMeta.check(spark, root, meta)
       laid.foreach { case (s, df) =>
         EpochIndex.append(df, s.path(root), epoch, s.innerPartCols) }
